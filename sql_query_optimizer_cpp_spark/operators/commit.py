@@ -1,0 +1,236 @@
+"""One commit loop for every DML verb: stage → lock → validate → publish.
+
+The twelve public DML entry points — {DELETE, UPDATE, MERGE} ×
+{copy-on-write, merge-on-read deletion vectors} × {locked, optimistic} —
+differ only in HOW they stage a change (a file rewrite in
+:mod:`.mutate`, a tombstone batch plus appended copies in :mod:`.mor`)
+and in the commit mode.  The protocol around the staging is this one
+function, :func:`run`:
+
+- **locked**: take the table's writer lock (bounded wait
+  ``lock_wait_seconds``; re-entrant for the thread that owns an open
+  :mod:`.txn` transaction), stage, enforce CHECK constraints, publish.
+  No validation, no retry — nothing can change under the lock.
+- **optimistic** (the Delta/Iceberg commit loop): stage lock-free;
+  enforce constraints lock-free; take the lock with the bounded wait;
+  ``validate()`` the snapshot the stage read; re-check constraints if
+  the registered set changed meanwhile; publish.  A lost validation, a
+  lock still held after the wait, or an input file deleted under the
+  lock-free read (on a table that still exists) discards the staging and
+  retries against the new committed state, up to ``max_attempts``; then
+  :class:`~.occ.ConcurrentWriteConflict`.
+
+Both modes then run one hook sequence inside the lock — the next version
+manifest (:func:`~.versioning._autoversion`), bloom-index refresh, the
+catalog's mutation epochs — and, after it, a path-scoped cache refresh:
+frames persisted over THIS table re-cache lazily, every other cached
+frame in the session stays put.  Hooks run only when the statement
+changed something.
+
+Staging dirs are registered in ``created`` BEFORE they are written, so
+any failure up to the publish reclaims exactly this attempt's debris.  A
+failure DURING the publish leaves the staging in place: some parts may
+already have moved in, and :func:`~.mutate.repair_table` is the tool for
+that window (the same crash contract as before: duplicates, never loss).
+"""
+
+from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable
+
+from pyspark.sql import SparkSession
+
+from . import constraints as _constraints
+from .mutate import (
+    MutationStats,
+    _WriterLockHeld,
+    _default_retain,
+    _fs,
+    _mark_mutated,
+    _reclaim,
+    _refresh_indexes,
+    _refuse_in_txn,
+    _writer_lock,
+)
+from .occ import ConcurrentWriteConflict, _is_missing_file_error
+from .versioning import _autoversion
+
+
+def _no_conflict() -> str | None:
+    return None
+
+
+@dataclass
+class Staged:
+    """One attempt's staged change, ready to commit.
+
+    ``publish(retain)`` moves it in (caller holds the writer lock;
+    ``retain`` is the resolved retire-vs-delete policy when ``rewrites``).
+    ``validate()`` runs in-lock in optimistic mode only and returns a
+    conflict reason, or ``None`` when the stage's snapshot still holds.
+    ``check`` lists the staged dirs CHECK constraints gate (``None``: the
+    verb cannot introduce values, e.g. DELETE)."""
+
+    stats: MutationStats
+    publish: Callable[[bool], None] = lambda retain: None
+    validate: Callable[[], str | None] = _no_conflict
+    check: list[str] | None = None
+    #: publish replaces existing files: resolve ``retain`` in-lock (the
+    #: copy-on-write choke point that also refuses live-DV tables)
+    rewrites: bool = False
+
+    @property
+    def changed(self) -> bool:
+        s = self.stats
+        return bool(s.files_rewritten or s.rows_matched or s.rows_inserted)
+
+
+def _stage(spark, path, stage, created, optimistic) -> tuple[Staged, dict]:
+    """Run ``stage`` and the CHECK-constraint gate over its output;
+    returns the staged change and the constraint set checked.  A failure
+    — or a statement that changed nothing — reclaims the staging."""
+    try:
+        st = stage(created, optimistic)
+        checked = (
+            _constraints._enforce_constraints(spark, path, st.check)
+            if st.changed and st.check is not None
+            else {}
+        )
+    except BaseException:
+        _reclaim(spark, created)
+        raise
+    if not st.changed:
+        _reclaim(spark, created)
+    return st, checked
+
+
+def _validate(spark, path, st: Staged, checked, created) -> str | None:
+    """In-lock (optimistic mode): the stage's snapshot must still hold,
+    and a constraint registered since the lock-free check must still gate
+    the publish (add_constraint serializes on this lock, so inside it the
+    set is stable).  Returns the conflict, if any."""
+    try:
+        conflict = st.validate()
+        if (
+            conflict is None
+            and st.check is not None
+            and _constraints.table_constraints(spark, path) != checked
+        ):
+            _constraints._enforce_constraints(spark, path, st.check)
+    except BaseException:
+        _reclaim(spark, created)
+        raise
+    return conflict
+
+
+def _publish(spark, path, st: Staged, retain, created) -> None:
+    """In-lock: resolve retain, publish (which consumes every staging
+    dir), run the commit hooks.  Anything raised before the publish
+    starts reclaims the staging."""
+    try:
+        ret = _default_retain(spark, path, retain) if st.rewrites else False
+    except BaseException:
+        _reclaim(spark, created)
+        raise
+    st.publish(ret)
+    _autoversion(spark, path)
+    _refresh_indexes(spark, path)
+    _mark_mutated(spark, path)
+
+
+def run(
+    spark: SparkSession,
+    path: str,
+    stage: Callable[[list[str], bool], Staged],
+    *,
+    optimistic: bool = False,
+    max_attempts: int = 5,
+    lock_wait_seconds: float = 0.0,
+    retain: bool | None = None,
+    what: str = "DML",
+    _after_stage=None,
+) -> MutationStats:
+    """Commit one DML statement on ``path``; returns its stats.
+
+    ``stage(created, optimistic)`` reads the table and writes the change
+    to sibling staging dirs, registering each in ``created`` before
+    writing it; ``optimistic`` tells it to also gather what
+    ``validate()`` needs.  ``what`` names the statement in conflict
+    errors.  ``_after_stage(attempt)`` is a test seam between the
+    (lock-free) stage and the commit lock, optimistic mode only."""
+    if not optimistic:
+        created: list[str] = []
+        with _writer_lock(spark, path, lock_wait_seconds):
+            st, _ = _stage(spark, path, stage, created, False)
+            if st.changed:
+                _publish(spark, path, st, retain, created)
+        if st.changed:
+            spark.catalog.refreshByPath(path)
+        return st.stats
+
+    if max_attempts < 1:
+        raise ValueError("max_attempts must be >= 1")
+    # under an open transaction the writer lock is re-entrant for the
+    # owning thread, which would void the validate-and-publish's
+    # exclusivity — and an optimistic verb inside a single-writer batch is
+    # a contradiction anyway
+    _refuse_in_txn(path, "optimistic DML")
+    jvm, fs, jpath = _fs(spark, path)
+    last_conflict = ""
+    last_exc: Exception | None = None
+    for attempt in range(1, max_attempts + 1):
+        created = []
+        try:
+            # a CHECK violation is terminal (the data is wrong, not the
+            # timing), never a conflict to retry
+            st, checked = _stage(spark, path, stage, created, True)
+        except Exception as e:
+            # the lock-free read can lose a file to a concurrent commit:
+            # a conflict — but only if the TABLE still exists (a wrong
+            # path matches the same Java classes and must surface as the
+            # real error)
+            if not _is_missing_file_error(e) or not fs.exists(jpath):
+                raise
+            last_conflict, last_exc = "<file vanished during read/stage>", e
+            spark.catalog.refreshByPath(path)
+            continue
+        if not st.changed:
+            return st.stats
+        try:
+            if _after_stage is not None:
+                _after_stage(attempt)
+            # bounded wait: a long-running LOCKED verb can legitimately
+            # hold the lock past it — a lost attempt, never the 'stale
+            # lock, delete it' error
+            lock = _writer_lock(spark, path, lock_wait_seconds)
+            lock.__enter__()
+        except _WriterLockHeld as e:
+            _reclaim(spark, created)
+            last_conflict = (
+                f"<writer lock held past the {lock_wait_seconds:g}s wait>"
+            )
+            last_exc = e
+            continue
+        except BaseException:
+            _reclaim(spark, created)
+            raise
+        try:
+            conflict = _validate(spark, path, st, checked, created)
+            if conflict is None:
+                _publish(spark, path, st, retain, created)
+        finally:
+            lock.__exit__(None, None, None)
+        if conflict is None:
+            spark.catalog.refreshByPath(path)
+            return st.stats
+        # a concurrent commit changed what this attempt read: its staging
+        # is stale — discard it and re-read
+        last_conflict = conflict
+        _reclaim(spark, created)
+    raise ConcurrentWriteConflict(
+        f"optimistic {what} on {path}: all {max_attempts} optimistic "
+        f"attempt(s) lost validation (latest conflict: {last_conflict}); "
+        "a concurrent writer kept changing what this statement read (or "
+        "held the lock) — raise max_attempts or serialize these writers"
+    ) from last_exc

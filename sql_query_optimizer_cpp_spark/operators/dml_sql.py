@@ -17,6 +17,15 @@ from .mutate import (
 )
 from .occ import occ_delete_where, occ_merge_into, occ_update_where
 from .constraints import add_constraint, drop_constraint
+from .mor import (
+    dv_delete_where,
+    dv_merge_into,
+    dv_update_where,
+    occ_dv_delete_where,
+    occ_dv_merge_into,
+    occ_dv_update_where,
+    read_mor,
+)
 
 # -- textual DML front-end ---------------------------------------------------
 #
@@ -286,6 +295,24 @@ def _parse_merge_on(on_text: str, t_alias: str | None, s_alias: str | None) -> l
     return keys
 
 
+#: (verb, mor, optimistic) -> the executing verb: one commit loop
+#: (operators/commit.py) behind all twelve, so the front-end only picks
+_VERBS = {
+    ("DELETE", False, False): delete_where,
+    ("DELETE", False, True): occ_delete_where,
+    ("DELETE", True, False): dv_delete_where,
+    ("DELETE", True, True): occ_dv_delete_where,
+    ("UPDATE", False, False): update_where,
+    ("UPDATE", False, True): occ_update_where,
+    ("UPDATE", True, False): dv_update_where,
+    ("UPDATE", True, True): occ_dv_update_where,
+    ("MERGE", False, False): merge_into,
+    ("MERGE", False, True): occ_merge_into,
+    ("MERGE", True, False): dv_merge_into,
+    ("MERGE", True, True): occ_dv_merge_into,
+}
+
+
 def execute_dml(
     spark: SparkSession,
     text: str,
@@ -441,44 +468,17 @@ def execute_dml(
         # DV-aware source read: if the USING table is itself merge-on-read
         # (e.g. MERGE INTO t USING t after a dv_update), a base read would
         # feed tombstoned rows and duplicate keys into the merge
-        from .mor import read_mor
-
-        source = read_mor(spark, tables[s_name])
-        if mor:
-            from .mor import dv_merge_into, occ_dv_merge_into
-
-            mor_merge = occ_dv_merge_into if optimistic else dv_merge_into
-            return mor_merge(
-                spark,
-                tables[t_name],
-                source,
-                on=on,
-                matched_set=matched_set,
-                matched_delete=matched_delete,
-                insert_values=insert_values,
-                insert_condition=(
-                    insert_condition if want_insert else "false"
-                ),
-            )
-        merge_verb = occ_merge_into if optimistic else merge_into
-        return merge_verb(
-            spark,
-            tables[t_name],
-            source,
+        verb, name, args = "MERGE", t_name, (read_mor(spark, tables[s_name]),)
+        kwargs = dict(
             on=on,
             matched_set=matched_set,
             matched_delete=matched_delete,
             insert_values=insert_values,
             # without a NOT MATCHED clause, unmatched source rows are no-ops
-            insert_condition=(
-                insert_condition if want_insert else "false"
-            ),
+            insert_condition=insert_condition if want_insert else "false",
         )
-    m = _UPDATE_RE.match(text)
-    if m:
+    elif m := _UPDATE_RE.match(text):
         name, rest = m.group(1), m.group(2)
-        if name not in tables:
-            raise ValueError(f"unknown table {name!r}")
         idx = _find_top_where(rest)
         if idx >= 0:
             set_text, where = rest[:idx], rest[idx + len("WHERE"):]
@@ -486,48 +486,12 @@ def execute_dml(
             set_text, where = rest, "true"
         if not where.strip():
             raise ValueError("UPDATE has WHERE with no condition")
-        if mor:
-            from .mor import dv_update_where, occ_dv_update_where
-
-            mor_update = occ_dv_update_where if optimistic else dv_update_where
-            n = mor_update(
-                spark, tables[name], _split_assignments(set_text), where
-            )
-            return MutationStats(
-                len(list_data_files(spark, tables[name], recursive=True)),
-                0,
-                n,
-            )
-        verb = occ_update_where if optimistic else update_where
-        return verb(
-            spark, tables[name], _split_assignments(set_text), where
-        )
-    m = _DELETE_RE.match(text)
-    if m:
+        verb, args = "UPDATE", (_split_assignments(set_text), where)
+        kwargs = {}
+    elif m := _DELETE_RE.match(text):
         name, where = m.group(1), m.group(2)
-        if name not in tables:
-            raise ValueError(f"unknown table {name!r}")
-        if mor:
-            from .mor import dv_delete_where, occ_dv_delete_where
-
-            # optimistic + mor: the OCC deletion-vector protocol — the
-            # one verb where both compose (append-only tombstone batches
-            # stage outside the lock, file-scoped validate-and-move-in)
-            dv_verb = occ_dv_delete_where if optimistic else dv_delete_where
-            n = dv_verb(
-                spark, tables[name], where if where is not None else "true"
-            )
-            return MutationStats(
-                len(list_data_files(spark, tables[name], recursive=True)),
-                0,
-                n,
-            )
-        verb = occ_delete_where if optimistic else delete_where
-        return verb(
-            spark, tables[name], where if where is not None else "true"
-        )
-    m = _ALTER_RE.match(text)
-    if m:
+        verb, args, kwargs = "DELETE", (where or "true",), {}
+    elif m := _ALTER_RE.match(text):
         name, action, cname, expr = m.groups()
         if name not in tables:
             raise ValueError(f"unknown table {name!r}")
@@ -546,11 +510,21 @@ def execute_dml(
         # constraint DDL moves no rows; the zero stats make the textual
         # front-end's return type uniform
         return MutationStats(0, 0, 0)
-    raise ValueError(
-        "not an executable DML statement (MERGE INTO ... USING ... | "
-        "UPDATE ... SET ... WHERE ... | "
-        "DELETE FROM ... WHERE ... | "
-        "ALTER TABLE ... ADD CONSTRAINT <name> CHECK (<expr>) | "
-        "ALTER TABLE ... DROP CONSTRAINT <name>)"
-    )
-
+    else:
+        raise ValueError(
+            "not an executable DML statement (MERGE INTO ... USING ... | "
+            "UPDATE ... SET ... WHERE ... | "
+            "DELETE FROM ... WHERE ... | "
+            "ALTER TABLE ... ADD CONSTRAINT <name> CHECK (<expr>) | "
+            "ALTER TABLE ... DROP CONSTRAINT <name>)"
+        )
+    if name not in tables:
+        raise ValueError(f"unknown table {name!r}")
+    path = tables[name]
+    out = _VERBS[verb, mor, optimistic](spark, path, *args, **kwargs)
+    if isinstance(out, int):
+        # the merge-on-read point verbs return the affected-row count
+        out = MutationStats(
+            len(list_data_files(spark, path, recursive=True)), 0, out
+        )
+    return out

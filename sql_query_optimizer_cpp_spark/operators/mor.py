@@ -16,8 +16,9 @@ Design (all distributed, nothing per-row on the driver):
   columns — stable for a given file, free at scan time (no shuffle, no
   surrogate-key materialization).
 - The vector store is plain parquet under ``<table>/_dv/`` with schema
-  ``(src_file string, row_idx long)``; each verb appends one batch.
-  Underscore-prefixed, so base reads and ``list_data_files`` never see it.
+  ``(src_file string, row_idx long)``; each commit stages one batch
+  beside the table and renames it in all-or-nothing.  Underscore-
+  prefixed, so base reads and ``list_data_files`` never see it.
 - :func:`read_mor` = base scan LEFT ANTI JOIN the vector set on that
   identity.  The DV side is tiny relative to the table by design (it only
   grows until the next materialize), so AQE plans it as a broadcast anti
@@ -27,6 +28,9 @@ Design (all distributed, nothing per-row on the driver):
   Matched rows are read from the verb's STARTING file list, never the
   table root, so the freshly appended copies can never be re-matched and
   tombstoned by the same statement.
+- All six DV verbs — {delete, update, merge} × {locked, optimistic} —
+  are one writer (:func:`_dv_stage`) in the one DML commit loop
+  (operators/commit.py).
 - Crash ordering mirrors COW's "duplicates, never loss": new data lands
   before the tombstones that hide the old data.
 - :func:`materialize_deletes` rewrites exactly the files that have
@@ -59,21 +63,23 @@ from pyspark.sql import functions as F
 
 from .mutate import (
     MutationStats,
+    _check_merge_source,
     _cond,
     _delete_files,
-    _enforce_constraints,
     _fs,
     _group_by_dir,
-    _mark_mutated,
     _move_in,
+    _partition_cols,
+    _reclaim,
+    _refresh_indexes,
     _rel_to_table,
     _retire_files,
     _stage,
+    _staged_rows,
     _writer_lock,
     is_partitioned,
     list_data_files,
     list_snapshots,
-    table_constraints,
 )
 
 #: sidecar dir holding the vector parquet; underscore ⇒ invisible to
@@ -193,124 +199,24 @@ def _live(df: DataFrame, dv: DataFrame | None) -> DataFrame:
     )
 
 
-def _append_dv(spark: SparkSession, path: str, entries: DataFrame) -> int:
-    """Append a tombstone batch; returns how many entries landed (counted
-    from footers of the just-written batch, one metadata job, so the
-    entries plan — which reads the base files — runs exactly once)."""
-    dv_root = _dv_path(path)
-    # one listing before, one after — everything else derives from them
-    pre = set(list_dv_files(spark, path))
-    before = (
-        spark.read.parquet(*sorted(pre)).count() if pre else 0
-    )
-    entries.select(
-        F.col("__src_file").cast("string").alias("src_file"),
-        F.col("__row_idx").cast("long").alias("row_idx"),
-    ).write.mode("append").parquet(dv_root)
-    post = set(list_dv_files(spark, path))
-    after = spark.read.parquet(*sorted(post)).count() if post else 0
-    if after == before:
-        # a no-match batch wrote only empty part files; remove JUST the
-        # files this append created (they are uncommitted, so no version
-        # manifest can pin them) so has_deletion_vectors stays accurate
-        # and COW verbs stay usable on a vector-less table
-        jvm, fs, _ = _fs(spark, path)
-        leftover: list[str] = []
-        for f in post - pre:
-            try:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
-            except Exception:
-                leftover.append(f)
-        if not pre and not leftover:
-            with contextlib.suppress(Exception):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(dv_root), True)
-        if leftover:
-            # a stranded empty batch flips has_deletion_vectors true and
-            # locks out every COW verb on a logically vector-less table —
-            # say so (mirrors mutate._refresh_indexes' degrade-with-
-            # warning contract) instead of failing the no-op statement
-            import warnings
-
-            warnings.warn(
-                f"could not clean up {len(leftover)} empty deletion-"
-                f"vector part file(s) under {dv_root} (e.g. "
-                f"{leftover[0]}); the table now *looks* merge-on-read, "
-                "so COW DML verbs will refuse it until the empty files "
-                "are removed or materialize_deletes runs",
-                stacklevel=3,
-            )
-    return after - before
-
-
 def _no_match(spark: SparkSession, path: str, cond: Column) -> bool:
     """No-op short-circuit: one footer-pruned existence probe (pushdown +
-    LIMIT 1) so a statement matching nothing skips the stage/append
-    machinery entirely — the MOR analog of the COW verbs' hit-list check."""
+    LIMIT 1) so a statement matching nothing skips the stage machinery
+    entirely — the MOR analog of the COW verbs' hit-list check."""
     return (
         spark.read.parquet(path).where(cond).limit(1).count() == 0
     )
 
 
-def _commit(spark: SparkSession, path: str) -> None:
-    """Version-log commit hook for the DV verbs (caller holds the writer
-    lock).  Manifests pin data files AND deletion-vector batch files
-    (mutate._manifest_state), so a dv_delete on a versioned table is a
-    first-class commit: time travel reads the DV state as-of, CDC emits
-    the tombstoned rows, RESTORE undoes them — the Delta-3.x shape.
-    Bloom sidecars refresh here too (dv_update/dv_merge append copy
-    files; a pure dv_delete adds none, so its refresh is a no-op
-    listing)."""
-    from .mutate import _autoversion, _refresh_indexes
-
-    _autoversion(spark, path)
-    _refresh_indexes(spark, path)
-
-
-def dv_delete_where(
-    spark: SparkSession,
-    path: str,
-    condition: str | Column,
-    lock_wait_seconds: float = 0.0,
-) -> int:
-    """Merge-on-read ``DELETE``: tombstone the matched row positions
-    instead of rewriting their files — O(deleted rows) written, zero data
-    files touched.  SQL three-valued logic (NULL keeps the row), same as
-    :func:`~.mutate.delete_where`.  Returns rows newly deleted (already
-    tombstoned rows never double-count).  Read back via :func:`read_mor`.
-    ``lock_wait_seconds`` > 0 waits for a busy writer lock instead of
-    refusing (parallel appliers serialize; see also
-    :func:`occ_dv_delete_where` for the stage-outside-the-lock variant)."""
-    cond = _cond(condition)
-    with _writer_lock(spark, path, lock_wait_seconds):
-        files = list_data_files(spark, path, recursive=True)
-        if not files or _no_match(spark, path, cond):
-            return 0
-        base_path = path if is_partitioned(spark, path) else None
-        sub = _with_identity(spark, path, files, base_path)
-        matched = _live(sub.where(cond), _read_dv(spark, path))
-        n = _append_dv(
-            spark, path, matched.select("__src_file", "__row_idx")
-        )
-        if n:
-            _commit(spark, path)
-            _mark_mutated(spark, path)
-            spark.catalog.clearCache()
-        return n
-
-
 def _dv_snapshot_conflict(
-    spark: SparkSession,
-    fs,
-    jvm,
-    path: str,
-    touched: set[str],
-    dv0: set[str],
+    spark: SparkSession, path: str, touched: set[str], dv0: set[str]
 ) -> str | None:
     """Inside the writer lock: validate an optimistic DV writer's
     snapshot.  Conflict (returns the reason string) when a concurrent
     commit retired/rewrote a file this writer's tombstones reference, or
     added/removed a deletion-vector batch touching one of those files.
     ``None`` = the snapshot still holds and the batch may move in."""
+    jvm, fs, _ = _fs(spark, path)
     live_rel = {
         _rel_to_table(path, f)
         for f in list_data_files(spark, path, recursive=True)
@@ -346,12 +252,14 @@ def _dv_snapshot_conflict(
     return None
 
 
-def _move_dv_parts(spark: SparkSession, fs, jvm, dv_root: str, staging: str) -> None:
+def _move_dv_parts(spark: SparkSession, path: str, staging: str) -> None:
     """Move a staged tombstone batch's parts into the live ``_dv/``
-    store.  All-or-nothing: a rename failure mid-loop must not leave a
-    PARTIAL batch visible to read_mor while the verb reports failure —
-    retract the parts already moved in before re-raising (the retry
-    re-derives the whole batch from the table)."""
+    store, then drop the staging dir.  All-or-nothing: a rename failure
+    mid-loop must not leave a PARTIAL batch visible to read_mor while the
+    verb reports failure — retract the parts already moved in before
+    re-raising."""
+    jvm, fs, _ = _fs(spark, path)
+    dv_root = _dv_path(path)
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(dv_root))
     moved: list = []
     for part in list_data_files(spark, staging):
@@ -362,10 +270,150 @@ def _move_dv_parts(spark: SparkSession, fs, jvm, dv_root: str, staging: str) -> 
                 with contextlib.suppress(Exception):
                     fs.delete(d, False)
             raise IOError(
-                f"occ dv commit: rename {part} -> {dest} failed "
+                f"dv commit: rename {part} -> {dest} failed "
                 "(batch retracted, nothing committed)"
             )
         moved.append(dest)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+
+
+def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
+    """The merge-on-read writer, as a :func:`~.commit.run` stage.
+
+    READ: snapshot the data-file and DV-batch lists; ``live`` = the rows
+    not yet tombstoned (under ``cond`` when given), read from the
+    STARTING file list so the statement's own appended copies can never
+    re-match.  ``legs(sub, live, data_cols, part_cols)`` returns
+    ``(tombstones, copies, inserts)`` (``None`` for an absent leg).
+    STAGE: the tombstone batch goes to a ``<table>__cow_dv_*`` sibling —
+    never into ``_dv/``, which is live to readers — and copies/inserts to
+    ``__cow_*`` siblings (``key=value`` dirs on a partitioned table).
+    PUBLISH: copies and inserts move in FIRST, tombstones second — the
+    COW-wide crash ordering: duplicates, never loss.
+
+    The conflict unit (optimistic mode) is the FILE a tombstone
+    references: writers touching disjoint files commit first-attempt; a
+    concurrent commit that tombstoned, un-tombstoned, or retired one of
+    THIS writer's files re-derives (:func:`_dv_snapshot_conflict`)."""
+
+    def stage(created: list[str], optimistic: bool):
+        from .commit import Staged
+
+        files0 = list_data_files(spark, path, recursive=True)
+        if not files0 and cond is None:
+            raise ValueError(f"no parquet files under {path}")
+        if not files0 or (cond is not None and _no_match(spark, path, cond)):
+            return Staged(MutationStats(len(files0), 0, 0))
+        partitioned = is_partitioned(spark, path)
+        part_cols = (
+            _partition_cols(spark, path, files0[0]) if partitioned else []
+        )
+        sub = _with_identity(
+            spark, path, files0, path if partitioned else None
+        )
+        data_cols = [
+            c for c in sub.columns if c not in ("__src_file", "__row_idx")
+        ]
+        dv0 = list_dv_files(spark, path)
+        dv = (
+            spark.read.parquet(*dv0).select("src_file", "row_idx")
+            if dv0
+            else None
+        )
+        live = _live(sub if cond is None else sub.where(cond), dv)
+        tombstones, copies, inserts = legs(sub, live, data_cols, part_cols)
+        dv_staging = f"{path.rstrip('/')}__cow_dv_{uuid.uuid4().hex}"
+        created.append(dv_staging)
+        tombstones.select(
+            F.col("__src_file").cast("string").alias("src_file"),
+            F.col("__row_idx").cast("long").alias("row_idx"),
+        ).write.parquet(dv_staging)
+        n_dead = spark.read.parquet(dv_staging).count()  # footers only
+        if not n_dead and inserts is None:
+            return Staged(MutationStats(len(files0), 0, 0))
+        # the batch's file set, which only validation reads — bounded by
+        # the table's file count (metadata scale, like manifest lists)
+        touched = (
+            {
+                r["src_file"]
+                for r in spark.read.parquet(dv_staging)
+                .select("src_file")
+                .distinct()
+                .collect()
+            }
+            if optimistic and n_dead
+            else set()
+        )
+
+        def stage_rows(df: DataFrame | None) -> tuple[str | None, int]:
+            if df is None:
+                return None, 0
+            staging = _stage(spark, path, df, created, part_cols)
+            n = _staged_rows(spark, staging)
+            if not n:  # nothing to move in: an empty file is junk
+                _reclaim(spark, [staging])
+            return (staging if n else None), n
+
+        copy_dir, _ = stage_rows(copies)
+        ins_dir, n_ins = stage_rows(inserts)
+        if not n_dead:
+            _reclaim(spark, [dv_staging])
+
+        def publish(retain: bool) -> None:
+            for d in (copy_dir, ins_dir):
+                if d:
+                    _move_in(spark, path, d)
+            if n_dead:
+                _move_dv_parts(spark, path, dv_staging)
+
+        return Staged(
+            MutationStats(len(files0), 0, n_dead, n_ins),
+            publish=publish,
+            validate=lambda: _dv_snapshot_conflict(
+                spark, path, touched, set(dv0)
+            ),
+            check=(
+                None
+                if copies is None and inserts is None
+                else [d for d in (copy_dir, ins_dir) if d]
+            ),
+        )
+
+    return stage
+
+
+def _dv_delete(spark, path, condition, **mode) -> MutationStats:
+    from .commit import run
+
+    def legs(sub, live, data_cols, part_cols):
+        return live, None, None
+
+    cond = _cond(condition)
+    return run(
+        spark, path, _dv_stage(spark, path, legs, cond),
+        what="DV DELETE", **mode,
+    )
+
+
+def dv_delete_where(
+    spark: SparkSession,
+    path: str,
+    condition: str | Column,
+    lock_wait_seconds: float = 0.0,
+) -> int:
+    """Merge-on-read ``DELETE``: tombstone the matched row positions
+    instead of rewriting their files — O(deleted rows) written, zero data
+    files touched.  SQL three-valued logic (NULL keeps the row), same as
+    :func:`~.mutate.delete_where`.  Returns rows newly deleted (already
+    tombstoned rows never double-count).  Read back via :func:`read_mor`.
+    ``lock_wait_seconds`` > 0 waits for a busy writer lock instead of
+    refusing (parallel appliers serialize; see also
+    :func:`occ_dv_delete_where` for the stage-outside-the-lock variant).
+    The tombstone batch stages beside the table and renames into
+    ``_dv/`` all-or-nothing."""
+    return _dv_delete(
+        spark, path, condition, lock_wait_seconds=lock_wait_seconds
+    ).rows_matched
 
 
 def occ_dv_delete_where(
@@ -386,130 +434,47 @@ def occ_dv_delete_where(
     exists only when a concurrent commit tombstoned, un-tombstoned, or
     retired one of THIS writer's files — then the matched set (and the
     already-tombstoned exclusion that keeps the returned count exact) is
-    re-derived against the new state and the stage retries.
-
-    Protocol (the DV analog of :func:`~.mutate.occ_update_where`):
-
-    1. READ (lock-free): snapshot the data-file list and DV-batch list;
-       ``matched`` = live rows under the predicate at that snapshot.
-    2. STAGE (lock-free): write the tombstone batch to a SIBLING staging
-       dir — never into ``_dv/``, which is live to readers.
-    3. VALIDATE + COMMIT (short lock): every file the batch references
-       must still be live, and no DV batch added or removed since the
-       snapshot may touch those files; then the staged parts RENAME into
-       ``_dv/`` (O(parts) metadata) and the version commits.
+    re-derived against the new state and the stage retries.  Attempts
+    exhausted raise :class:`~.occ.ConcurrentWriteConflict`.
 
     ``_after_stage(attempt)`` is the test seam between stage and commit.
     """
-    from .mutate import (
-        _WriterLockHeld,
-        _is_missing_file_error,
-        _refuse_in_txn,
-    )
+    return _dv_delete(
+        spark, path, condition, optimistic=True, max_attempts=max_attempts,
+        lock_wait_seconds=lock_wait_seconds, _after_stage=_after_stage,
+    ).rows_matched
+
+
+def _dv_update(spark, path, set_map, condition, **mode) -> MutationStats:
+    from .commit import run
+
+    def legs(sub, live, data_cols, part_cols):
+        unknown = set(set_map) - set(data_cols)
+        if unknown:
+            raise ValueError(
+                f"UPDATE SET on unknown columns: {sorted(unknown)}"
+            )
+        part_here = [c for c in set_map if c in part_cols]
+        if part_here:
+            raise ValueError(
+                f"UPDATE SET on partition columns: {sorted(part_here)}; "
+                "changing a row's partition is a delete + insert"
+            )
+        updated = live.select(
+            *[
+                _cond(set_map[c]).cast(sub.schema[c].dataType).alias(c)
+                if c in set_map
+                else F.col(c)
+                for c in data_cols
+            ]
+        )
+        return live, updated, None
 
     cond = _cond(condition)
-    if max_attempts < 1:
-        raise ValueError("max_attempts must be >= 1")
-    _refuse_in_txn(path, "optimistic DML")
-    jvm, fs, jpath = _fs(spark, path)
-    root = path.rstrip("/")
-    dv_root = _dv_path(path)
-    last_conflict = ""
-
-    def _cleanup(staging: str) -> None:
-        with contextlib.suppress(Exception):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-
-    for attempt in range(1, max_attempts + 1):
-        files0 = sorted(list_data_files(spark, path, recursive=True))
-        if not files0 or _no_match(spark, path, cond):
-            return 0
-        dv0 = set(list_dv_files(spark, path))
-        sub = _with_identity(
-            spark, path, files0, path if is_partitioned(spark, path) else None
-        )
-        dv0_entries = (
-            spark.read.parquet(*sorted(dv0)).select("src_file", "row_idx")
-            if dv0
-            else None
-        )
-        matched = _live(sub.where(cond), dv0_entries)
-        # __cow_ prefix: repair_table's crash-debris sweep inventories
-        # (and with REMOVE, cleans) any <base>__cow_* sibling — a SIGKILL
-        # between stage and commit must not strand an invisible dir
-        staging = f"{root}__cow_dv_{uuid.uuid4().hex}"
-        try:
-            # READ + STAGE run lock-free: a concurrent commit can retire
-            # a files0 member mid-job — Spark surfaces that as a
-            # missing-file error, which is a CONFLICT (retry against the
-            # new state), not an error (mutate._occ_mutate's contract)
-            try:
-                matched.select(
-                    F.col("__src_file").cast("string").alias("src_file"),
-                    F.col("__row_idx").cast("long").alias("row_idx"),
-                ).write.parquet(staging)
-                n = spark.read.parquet(staging).count()  # footers only
-                if n == 0:
-                    _cleanup(staging)
-                    return 0
-                # the batch's file set — bounded by the table's file
-                # count (metadata scale, same class as manifest lists)
-                touched = {
-                    r["src_file"]
-                    for r in spark.read.parquet(staging)
-                    .select("src_file")
-                    .distinct()
-                    .collect()
-                }
-            except Exception as e:
-                if not _is_missing_file_error(e) or not fs.exists(jpath):
-                    raise
-                last_conflict = "input file vanished during stage"
-                spark.catalog.clearCache()
-                raise _Conflict() from None
-            if _after_stage is not None:
-                _after_stage(attempt)
-            # COMMIT phase: bounded wait — a busy lock past the wait is a
-            # lost attempt, never the 'stale lock, delete it' error
-            try:
-                lock = _writer_lock(spark, path, lock_wait_seconds)
-                lock.__enter__()
-            except _WriterLockHeld:
-                last_conflict = (
-                    f"<writer lock held past the {lock_wait_seconds:g}s "
-                    "wait>"
-                )
-                raise _Conflict() from None
-            try:
-                conflict = _dv_snapshot_conflict(
-                    spark, fs, jvm, path, touched, dv0
-                )
-                if conflict:
-                    last_conflict = conflict
-                    raise _Conflict()
-                _move_dv_parts(spark, fs, jvm, dv_root, staging)
-                _cleanup(staging)
-                _commit(spark, path)
-                _mark_mutated(spark, path)
-                spark.catalog.clearCache()
-                return n
-            finally:
-                lock.__exit__(None, None, None)
-        except _Conflict:
-            _cleanup(staging)
-            continue
-        except BaseException:
-            _cleanup(staging)
-            raise
-    raise RuntimeError(
-        f"occ_dv_delete_where on {path} lost the commit race "
-        f"{max_attempts} times (last conflict: {last_conflict}); raise "
-        "max_attempts or reduce writer contention"
+    return run(
+        spark, path, _dv_stage(spark, path, legs, cond),
+        what="DV UPDATE", **mode,
     )
-
-
-class _Conflict(Exception):
-    """Internal: validation failed, retry against the new state."""
 
 
 def dv_update_where(
@@ -529,86 +494,9 @@ def dv_update_where(
     COW rule.  Assignments cast back to the column's existing type
     (schema stability).  CHECK constraints are enforced over the staged
     copies BEFORE anything becomes visible."""
-    cond = _cond(condition)
-    with _writer_lock(spark, path, lock_wait_seconds):
-        partitioned = is_partitioned(spark, path)
-        files = list_data_files(spark, path, recursive=True)
-        if not files or _no_match(spark, path, cond):
-            return 0
-        sub = _with_identity(
-            spark, path, files, path if partitioned else None
-        )
-        data_cols = [
-            c for c in sub.columns if c not in ("__src_file", "__row_idx")
-        ]
-        unknown = set(set_map) - set(data_cols)
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET on unknown columns: {sorted(unknown)}"
-            )
-        part_cols: list[str] = []
-        if partitioned:
-            from .mutate import _partition_cols
-
-            part_cols = _partition_cols(spark, path, files[0])
-            part_here = [c for c in set_map if c in part_cols]
-            if part_here:
-                raise ValueError(
-                    f"UPDATE SET on partition columns: {sorted(part_here)}; "
-                    "changing a row's partition is a delete + insert"
-                )
-        matched = _live(sub.where(cond), _read_dv(spark, path))
-        updated = matched.select(
-            *[
-                _cond(set_map[c]).cast(sub.schema[c].dataType).alias(c)
-                if c in set_map
-                else F.col(c)
-                for c in data_cols
-            ]
-        )
-        # stage the copies while the base files are untouched; constraints
-        # verified on staged output (same gate as the COW verbs)
-        created: list[str] = []
-        try:
-            if partitioned:
-                staging = path.rstrip("/") + f"__cow_{uuid.uuid4().hex}"
-                created.append(staging)
-                updated.write.partitionBy(*part_cols).mode(
-                    "overwrite"
-                ).parquet(staging)
-            else:
-                staging = _stage(spark, path, updated, created)
-            if table_constraints(spark, path):
-                _enforce_constraints(spark, path, [staging])
-            # a predicate whose only base matches are already-tombstoned
-            # rows stages ZERO copies — moving the empty staging in would
-            # add a junk empty file AND commit a no-op version
-            if _staged_rows(spark, staging) == 0:
-                jvm0, fs0, _ = _fs(spark, path)
-                fs0.delete(jvm0.org.apache.hadoop.fs.Path(staging), True)
-                return 0
-            if partitioned:
-                from .mutate import _move_in_partitioned
-
-                n_new = _move_in_partitioned(spark, path, staging, part_cols)
-            else:
-                n_new = _move_in(spark, path, staging)
-        except BaseException:
-            jvm, fs, _ = _fs(spark, path)
-            for s in created:
-                with contextlib.suppress(Exception):
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(s), True)
-            raise
-        # copies are live; now hide the originals.  matched reads the
-        # STARTING file list, so the copies cannot re-match here.
-        n = _append_dv(
-            spark, path, matched.select("__src_file", "__row_idx")
-        )
-        if n or n_new:
-            _commit(spark, path)
-            _mark_mutated(spark, path)
-            spark.catalog.clearCache()
-        return n
+    return _dv_update(
+        spark, path, set_map, condition, lock_wait_seconds=lock_wait_seconds
+    ).rows_matched
 
 
 def occ_dv_update_where(
@@ -628,164 +516,17 @@ def occ_dv_update_where(
     FILE a tombstone references (:func:`occ_dv_delete_where`'s rule):
     writers updating disjoint files commit on their first attempt; a
     concurrent commit that tombstoned, un-tombstoned, or retired one of
-    THIS writer's files re-derives and retries.
-
-    Protocol: READ (snapshot file+batch lists, matched = live rows under
-    the predicate) → STAGE (tombstone batch AND updated copies to
-    sibling staging dirs; CHECK constraints enforced on the staged
-    copies) → VALIDATE + COMMIT (short lock: :func:`_dv_snapshot_conflict`,
-    then copies move in FIRST, tombstones second — the COW-wide crash
-    ordering: duplicates, never loss — and the version commits).
+    THIS writer's files re-derives and retries.  CHECK constraints are
+    enforced on the staged copies lock-free and re-checked inside the
+    commit lock if the registered set changed meanwhile.
 
     ``_after_stage(attempt)`` is the test seam between stage and commit.
     """
-    from .mutate import (
-        _WriterLockHeld,
-        _is_missing_file_error,
-        _move_in_partitioned,
-        _partition_cols,
-        _refuse_in_txn,
-    )
-
-    cond = _cond(condition)
-    if max_attempts < 1:
-        raise ValueError("max_attempts must be >= 1")
-    _refuse_in_txn(path, "optimistic DML")
-    jvm, fs, jpath = _fs(spark, path)
-    root = path.rstrip("/")
-    dv_root = _dv_path(path)
-    last_conflict = ""
-
-    def _cleanup(*dirs: str | None) -> None:
-        for d in dirs:
-            if d:
-                with contextlib.suppress(Exception):
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-
-    for attempt in range(1, max_attempts + 1):
-        partitioned = is_partitioned(spark, path)
-        files0 = sorted(list_data_files(spark, path, recursive=True))
-        if not files0 or _no_match(spark, path, cond):
-            return 0
-        dv0 = set(list_dv_files(spark, path))
-        sub = _with_identity(
-            spark, path, files0, path if partitioned else None
-        )
-        data_cols = [
-            c for c in sub.columns if c not in ("__src_file", "__row_idx")
-        ]
-        unknown = set(set_map) - set(data_cols)
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET on unknown columns: {sorted(unknown)}"
-            )
-        part_cols: list[str] = []
-        if partitioned:
-            part_cols = _partition_cols(spark, path, files0[0])
-            part_here = [c for c in set_map if c in part_cols]
-            if part_here:
-                raise ValueError(
-                    f"UPDATE SET on partition columns: {sorted(part_here)}; "
-                    "changing a row's partition is a delete + insert"
-                )
-        dv0_entries = (
-            spark.read.parquet(*sorted(dv0)).select("src_file", "row_idx")
-            if dv0
-            else None
-        )
-        matched = _live(sub.where(cond), dv0_entries)
-        updated = matched.select(
-            *[
-                _cond(set_map[c]).cast(sub.schema[c].dataType).alias(c)
-                if c in set_map
-                else F.col(c)
-                for c in data_cols
-            ]
-        )
-        dv_staging = f"{root}__cow_dv_{uuid.uuid4().hex}"
-        copy_staging: str | None = None
-        created: list[str] = []
-        try:
-            # READ + STAGE run lock-free: a concurrent commit can retire
-            # a files0 member mid-job — a missing-file error is a
-            # CONFLICT (retry against the new state), not an error
-            try:
-                matched.select(
-                    F.col("__src_file").cast("string").alias("src_file"),
-                    F.col("__row_idx").cast("long").alias("row_idx"),
-                ).write.parquet(dv_staging)
-                n = spark.read.parquet(dv_staging).count()  # footers only
-                if n == 0:
-                    _cleanup(dv_staging)
-                    return 0
-                touched = {
-                    r["src_file"]
-                    for r in spark.read.parquet(dv_staging)
-                    .select("src_file")
-                    .distinct()
-                    .collect()
-                }
-                if partitioned:
-                    copy_staging = f"{root}__cow_{uuid.uuid4().hex}"
-                    created.append(copy_staging)
-                    updated.write.partitionBy(*part_cols).mode(
-                        "overwrite"
-                    ).parquet(copy_staging)
-                else:
-                    copy_staging = _stage(spark, path, updated, created)
-                if table_constraints(spark, path):
-                    _enforce_constraints(spark, path, [copy_staging])
-            except Exception as e:
-                if not _is_missing_file_error(e) or not fs.exists(jpath):
-                    raise
-                last_conflict = "input file vanished during stage"
-                spark.catalog.clearCache()
-                raise _Conflict() from None
-            if _after_stage is not None:
-                _after_stage(attempt)
-            try:
-                lock = _writer_lock(spark, path, lock_wait_seconds)
-                lock.__enter__()
-            except _WriterLockHeld:
-                last_conflict = (
-                    f"<writer lock held past the {lock_wait_seconds:g}s "
-                    "wait>"
-                )
-                raise _Conflict() from None
-            try:
-                conflict = _dv_snapshot_conflict(
-                    spark, fs, jvm, path, touched, dv0
-                )
-                if conflict:
-                    last_conflict = conflict
-                    raise _Conflict()
-                # copies land before the tombstones that hide the old
-                # (a crash between the two duplicates, never loses)
-                if partitioned:
-                    _move_in_partitioned(spark, path, copy_staging, part_cols)
-                else:
-                    _move_in(spark, path, copy_staging)
-                _move_dv_parts(spark, fs, jvm, dv_root, dv_staging)
-                _cleanup(dv_staging)
-                _commit(spark, path)
-                _mark_mutated(spark, path)
-                spark.catalog.clearCache()
-                return n
-            finally:
-                lock.__exit__(None, None, None)
-        except _Conflict:
-            # created covers a staging dir whose write failed before
-            # copy_staging was assigned (review r11)
-            _cleanup(dv_staging, copy_staging, *created)
-            continue
-        except BaseException:
-            _cleanup(dv_staging, copy_staging, *created)
-            raise
-    raise RuntimeError(
-        f"occ_dv_update_where on {path} lost the commit race "
-        f"{max_attempts} times (last conflict: {last_conflict}); raise "
-        "max_attempts or reduce writer contention"
-    )
+    return _dv_update(
+        spark, path, set_map, condition, optimistic=True,
+        max_attempts=max_attempts, lock_wait_seconds=lock_wait_seconds,
+        _after_stage=_after_stage,
+    ).rows_matched
 
 
 def _merge_col_checks(
@@ -906,22 +647,40 @@ def _merge_src(source: DataFrame, on: list[str]) -> DataFrame:
     )
 
 
-def _merge_check_source(
-    source: DataFrame, on: list[str], check_unique: bool
-) -> None:
-    for k in on:
-        if k not in source.columns:
-            raise ValueError(f"merge key {k!r} missing from source")
-    if not check_unique:
-        return
-    dup = source.groupBy(*on).count().where(F.col("count") > 1).limit(1)
-    if dup.count():
-        raise ValueError(
-            "MERGE source has duplicate join keys; each target row "
-            "must match at most one source row (pass "
-            "check_unique=False only if uniqueness is guaranteed "
-            "upstream)"
+def _dv_merge(
+    spark,
+    path,
+    source,
+    on,
+    matched_set,
+    insert_values,
+    check_unique,
+    matched_delete,
+    insert_condition,
+    skip_unchanged,
+    **mode,
+) -> MutationStats:
+    from .commit import run
+
+    _check_merge_source(source, on, check_unique)
+
+    def legs(sub, live, data_cols, part_cols):
+        # source-only columns are expression scope (src_<name> in the
+        # clause conditions/assignments, e.g. a CDC op column), same as
+        # the COW merge; they are never WRITTEN — schema evolution stays
+        # a COW-path feature (merge_into(..., evolve_schema=True))
+        _merge_col_checks(data_cols, part_cols, matched_set, insert_values)
+        updated, tombstones, ins_df = _merge_frames(
+            sub, live, _merge_src(source, on), on, data_cols, matched_set,
+            matched_delete, insert_values, insert_condition, skip_unchanged,
         )
+        return tombstones, updated, ins_df
+
+    # files_rewritten = 0 is the point: matched rows tombstone + re-append
+    return run(
+        spark, path, _dv_stage(spark, path, legs, None),
+        what="DV MERGE", **mode,
+    )
 
 
 def dv_merge_into(
@@ -962,95 +721,11 @@ def dv_merge_into(
     commits no version — no write amplification from at-least-once
     delivery.  Off by default because a no-op update IS a row rewrite
     under plain MERGE semantics (the copy gets a fresh row identity)."""
-    _merge_check_source(source, on, check_unique)
-    with _writer_lock(spark, path, lock_wait_seconds):
-        partitioned = is_partitioned(spark, path)
-        files = list_data_files(spark, path, recursive=True)
-        if not files:
-            raise ValueError(f"no parquet files under {path}")
-        sub = _with_identity(
-            spark, path, files, path if partitioned else None
-        )
-        data_cols = [
-            c for c in sub.columns if c not in ("__src_file", "__row_idx")
-        ]
-        # source-only columns are expression scope (src_<name> in the
-        # clause conditions/assignments, e.g. a CDC op column), same as
-        # the COW merge; they are never WRITTEN — schema evolution stays
-        # a COW-path feature (merge_into(..., evolve_schema=True))
-        part_cols: list[str] = []
-        if partitioned:
-            from .mutate import _partition_cols
-
-            part_cols = _partition_cols(spark, path, files[0])
-        _merge_col_checks(data_cols, part_cols, matched_set, insert_values)
-        live = _live(sub, _read_dv(spark, path))
-        src = _merge_src(source, on)
-        updated, tombstones, ins_df = _merge_frames(
-            sub,
-            live,
-            src,
-            on,
-            data_cols,
-            matched_set,
-            matched_delete,
-            insert_values,
-            insert_condition,
-            skip_unchanged,
-        )
-
-        def _stage_rows(df: DataFrame, created: list[str]) -> str:
-            if partitioned:
-                staging = path.rstrip("/") + f"__cow_{uuid.uuid4().hex}"
-                created.append(staging)
-                df.write.partitionBy(*part_cols).mode("overwrite").parquet(
-                    staging
-                )
-                return staging
-            return _stage(spark, path, df, created)
-
-        created: list[str] = []
-        jvm, fs, _ = _fs(spark, path)
-        try:
-            upd_staging = _stage_rows(updated, created)
-            ins_staging = _stage_rows(ins_df, created)
-            if table_constraints(spark, path):
-                _enforce_constraints(
-                    spark, path, [upd_staging, ins_staging]
-                )
-            # footer-count the legs BEFORE move-in (one metadata job per
-            # staging dir, no plan re-execution)
-            n_upd = _staged_rows(spark, upd_staging)
-            n_ins = _staged_rows(spark, ins_staging)
-            mover = _move_in
-            if partitioned:
-                from .mutate import _move_in_partitioned
-
-                mover = lambda s, p, st: _move_in_partitioned(  # noqa: E731
-                    s, p, st, part_cols
-                )
-            if n_upd:
-                mover(spark, path, upd_staging)
-            else:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(upd_staging), True)
-            if n_ins:
-                mover(spark, path, ins_staging)
-            else:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(ins_staging), True)
-        except BaseException:
-            for s in created:
-                with contextlib.suppress(Exception):
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(s), True)
-            raise
-        # copies + inserts are live; now hide the matched originals
-        n_dead = _append_dv(spark, path, tombstones)
-        if n_dead or n_ins:
-            _commit(spark, path)
-            _mark_mutated(spark, path)
-            spark.catalog.clearCache()
-        # files_rewritten = 0 is the point: matched rows tombstone +
-        # re-append, nothing rewrites
-        return MutationStats(len(files), 0, n_dead, n_ins)
+    return _dv_merge(
+        spark, path, source, on, matched_set, insert_values, check_unique,
+        matched_delete, insert_condition, skip_unchanged,
+        lock_wait_seconds=lock_wait_seconds,
+    )
 
 
 def occ_dv_merge_into(
@@ -1088,179 +763,12 @@ def occ_dv_merge_into(
 
     ``_after_stage(attempt)`` is the test seam between stage and commit.
     """
-    from .mutate import (
-        _WriterLockHeld,
-        _is_missing_file_error,
-        _move_in_partitioned,
-        _partition_cols,
-        _refuse_in_txn,
+    return _dv_merge(
+        spark, path, source, on, matched_set, insert_values, check_unique,
+        matched_delete, insert_condition, skip_unchanged, optimistic=True,
+        max_attempts=max_attempts, lock_wait_seconds=lock_wait_seconds,
+        _after_stage=_after_stage,
     )
-
-    if max_attempts < 1:
-        raise ValueError("max_attempts must be >= 1")
-    _refuse_in_txn(path, "optimistic DML")
-    _merge_check_source(source, on, check_unique)
-    jvm, fs, jpath = _fs(spark, path)
-    root = path.rstrip("/")
-    dv_root = _dv_path(path)
-    last_conflict = ""
-
-    def _cleanup(*dirs: str | None) -> None:
-        for d in dirs:
-            if d:
-                with contextlib.suppress(Exception):
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-
-    for attempt in range(1, max_attempts + 1):
-        partitioned = is_partitioned(spark, path)
-        files0 = sorted(list_data_files(spark, path, recursive=True))
-        if not files0:
-            raise ValueError(f"no parquet files under {path}")
-        dv0 = set(list_dv_files(spark, path))
-        sub = _with_identity(
-            spark, path, files0, path if partitioned else None
-        )
-        data_cols = [
-            c for c in sub.columns if c not in ("__src_file", "__row_idx")
-        ]
-        part_cols: list[str] = []
-        if partitioned:
-            part_cols = _partition_cols(spark, path, files0[0])
-        _merge_col_checks(data_cols, part_cols, matched_set, insert_values)
-        dv0_entries = (
-            spark.read.parquet(*sorted(dv0)).select("src_file", "row_idx")
-            if dv0
-            else None
-        )
-        live = _live(sub, dv0_entries)
-        src = _merge_src(source, on)
-        updated, tombstones, ins_df = _merge_frames(
-            sub,
-            live,
-            src,
-            on,
-            data_cols,
-            matched_set,
-            matched_delete,
-            insert_values,
-            insert_condition,
-            skip_unchanged,
-        )
-
-        def _stage_rows_df(df: DataFrame, created: list[str]) -> str:
-            if partitioned:
-                staging = f"{root}__cow_{uuid.uuid4().hex}"
-                created.append(staging)
-                df.write.partitionBy(*part_cols).mode("overwrite").parquet(
-                    staging
-                )
-                return staging
-            return _stage(spark, path, df, created)
-
-        dv_staging = f"{root}__cow_dv_{uuid.uuid4().hex}"
-        created: list[str] = []
-        try:
-            # READ + STAGE run lock-free: a concurrent commit can retire
-            # a files0 member mid-job — a missing-file error is a
-            # CONFLICT (retry against the new state), not an error
-            try:
-                tombstones.select(
-                    F.col("__src_file").cast("string").alias("src_file"),
-                    F.col("__row_idx").cast("long").alias("row_idx"),
-                ).write.parquet(dv_staging)
-                n_dead = spark.read.parquet(dv_staging).count()  # footers
-                touched = (
-                    {
-                        r["src_file"]
-                        for r in spark.read.parquet(dv_staging)
-                        .select("src_file")
-                        .distinct()
-                        .collect()
-                    }
-                    if n_dead
-                    else set()
-                )
-                upd_staging = _stage_rows_df(updated, created)
-                ins_staging = _stage_rows_df(ins_df, created)
-                if table_constraints(spark, path):
-                    _enforce_constraints(
-                        spark, path, [upd_staging, ins_staging]
-                    )
-                n_upd = _staged_rows(spark, upd_staging)
-                n_ins = _staged_rows(spark, ins_staging)
-            except Exception as e:
-                if not _is_missing_file_error(e) or not fs.exists(jpath):
-                    raise
-                last_conflict = "input file vanished during stage"
-                spark.catalog.clearCache()
-                raise _Conflict() from None
-            if n_dead == 0 and n_ins == 0:
-                # nothing matched, nothing inserts: no-op statement —
-                # commit no version, leave no debris
-                _cleanup(dv_staging, *created)
-                return MutationStats(len(files0), 0, 0, 0)
-            if _after_stage is not None:
-                _after_stage(attempt)
-            try:
-                lock = _writer_lock(spark, path, lock_wait_seconds)
-                lock.__enter__()
-            except _WriterLockHeld:
-                last_conflict = (
-                    f"<writer lock held past the {lock_wait_seconds:g}s "
-                    "wait>"
-                )
-                raise _Conflict() from None
-            try:
-                conflict = _dv_snapshot_conflict(
-                    spark, fs, jvm, path, touched, dv0
-                )
-                if conflict:
-                    last_conflict = conflict
-                    raise _Conflict()
-                # copies + inserts land before the tombstones that hide
-                # the old (a crash between duplicates, never loses)
-                mover = _move_in
-                if partitioned:
-                    mover = lambda s, p, st: _move_in_partitioned(  # noqa: E731
-                        s, p, st, part_cols
-                    )
-                if n_upd:
-                    mover(spark, path, upd_staging)
-                else:
-                    _cleanup(upd_staging)
-                if n_ins:
-                    mover(spark, path, ins_staging)
-                else:
-                    _cleanup(ins_staging)
-                if n_dead:
-                    _move_dv_parts(spark, fs, jvm, dv_root, dv_staging)
-                _cleanup(dv_staging)
-                _commit(spark, path)
-                _mark_mutated(spark, path)
-                spark.catalog.clearCache()
-                return MutationStats(len(files0), 0, n_dead, n_ins)
-            finally:
-                lock.__exit__(None, None, None)
-        except _Conflict:
-            _cleanup(dv_staging, *created)
-            continue
-        except BaseException:
-            _cleanup(dv_staging, *created)
-            raise
-    raise RuntimeError(
-        f"occ_dv_merge_into on {path} lost the commit race "
-        f"{max_attempts} times (last conflict: {last_conflict}); raise "
-        "max_attempts or reduce writer contention"
-    )
-
-
-def _staged_rows(spark: SparkSession, staging: str) -> int:
-    """Row count of a staged write from parquet footers (no data I/O);
-    0 for an empty partitioned staging (which writes no part files)."""
-    files = list_data_files(spark, staging, recursive=True)
-    if not files:
-        return 0
-    return spark.read.parquet(*files).count()
 
 
 def read_mor(spark: SparkSession, path: str) -> DataFrame:
@@ -1421,10 +929,9 @@ def materialize_deletes(
         else:
             fs.delete(dv_root, True)
         if retain:
-            _commit(spark, path)
-        else:
-            from .mutate import _refresh_indexes
+            from .versioning import _autoversion
 
-            _refresh_indexes(spark, path)
+            _autoversion(spark, path)
+        _refresh_indexes(spark, path)
         spark.catalog.clearCache()
         return MutationStats(len(files), removed, 0)

@@ -9,7 +9,7 @@ transaction log — copy-on-write at FILE granularity.
 How it scales (the design constraint):
 
 1. **Prune** — find the files containing at least one affected row with a
-   predicate-pushed scan grouped by ``input_file_name()``.  Parquet footer
+   predicate-pushed scan grouped by ``_metadata.file_path``.  Parquet footer
    min/max statistics let that scan skip non-matching row groups, so on a
    range-clustered table (``sources.write(sort_for_skipping=...)``) the
    prune is metadata-dominated.  The resulting file LIST is table metadata
@@ -38,17 +38,20 @@ every mutating verb auto-commits the next numbered manifest inside the
 writer lock, giving readers snapshot isolation (``read_version`` pins a
 version's exact bytes across later DML).
 
-Concurrency: the classic verbs are SINGLE-WRITER (the advisory lock
-detects a second writer and refuses).  ``occ_update_where`` /
-``occ_delete_where`` add OPTIMISTIC multi-writer commits on flat tables —
-stage without the lock, then validate-and-swap under a short bounded-wait
-lock, retrying against the newly committed state on conflict (the
-Delta/Iceberg commit-loop shape; see the protocol comment above
-``_occ_mutate_flat``).  Two writers on disjoint keys both commit; writers
-on overlapping files serialize via retry with no lost update.  Isolation
-is snapshot-level (Delta's WriteSerializable analog): a retry re-reads
-everything, but a FIRST-attempt commit does not re-evaluate its predicate
-over rows a concurrent writer inserted after its read.
+Concurrency: every verb commits through ONE loop (operators/commit.py,
+stage → lock → validate → publish).  The classic verbs are LOCKED: they
+take the advisory single-writer lock first (a second writer is detected
+and refused).  ``occ_update_where`` / ``occ_delete_where`` /
+``occ_merge_into`` are the same writers in the loop's OPTIMISTIC mode,
+on flat and hive-partitioned tables alike — stage without the lock,
+then validate-and-swap under a short bounded-wait lock, retrying against
+the newly committed state on conflict (the Delta/Iceberg commit-loop
+shape; see the protocol comment in occ.py).  Two writers on disjoint
+files both commit; writers on overlapping files serialize via retry
+with no lost update.  Isolation is snapshot-level (Delta's
+WriteSerializable analog): a retry re-reads everything, but a
+FIRST-attempt commit does not re-evaluate its predicate over rows a
+concurrent writer inserted after its read.
 """
 
 from __future__ import annotations
@@ -85,19 +88,6 @@ class MutationStats:
 
 def _cond(condition: str | Column) -> Column:
     return F.expr(condition) if isinstance(condition, str) else condition
-
-
-def __enforce_constraints(spark, path, staged_dirs):
-    """Lazy indirection to :mod:`.constraints` (keeps the import graph
-    acyclic: constraints.py imports this module's helpers eagerly).
-
-    Patch point (changed by the r12 facade split): the attribute is
-    resolved on :mod:`.constraints` at CALL time, so monkeypatch
-    ``constraints._enforce_constraints`` — patching the facade re-export
-    ``mutate._enforce_constraints`` no longer affects the DML verbs."""
-    from . import constraints
-
-    return constraints._enforce_constraints(spark, path, staged_dirs)
 
 
 def _fs(spark: SparkSession, path: str):
@@ -155,12 +145,15 @@ def affected_files(
 
     The scan pushes ``condition`` into the parquet reader, so row groups
     whose footer min/max exclude it are skipped without decoding — on a
-    range-clustered table this reads footers, not data.
+    range-clustered table this reads footers, not data.  The file name
+    comes from the ``_metadata`` column, never ``input_file_name()``:
+    a frame persisted over the table would serve this scan from the
+    cache, where every file name reads empty.
     """
     df = spark.read.parquet(path)
     rows = (
         df.where(_cond(condition))
-        .select(F.input_file_name().alias("f"))
+        .select(F.col("_metadata.file_path").alias("f"))
         .distinct()
         .collect()
     )
@@ -172,21 +165,48 @@ def _stage(
     path: str,
     df: DataFrame,
     created: list[str] | None = None,
+    partition_by: list[str] | None = None,
 ) -> str:
     """Materialize ``df`` to a sibling staging dir NOW (while every file its
     plan reads still exists) and return the staging path.  ``created``
     (when given) records the path BEFORE the write starts, so a failure
-    mid-write still leaves the caller knowing exactly what to reclaim."""
+    mid-write still leaves the caller knowing exactly what to reclaim.
+    ``partition_by`` writes hive ``key=value`` subdirectories (a NULL
+    partition value routes to Hive's default partition dir)."""
     staging = path.rstrip("/") + f"__cow_{uuid.uuid4().hex}"
     if created is not None:
         created.append(staging)
-    df.write.mode("overwrite").parquet(staging)
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(staging)
     return staging
+
+
+def _staged_rows(spark: SparkSession, staging: str) -> int:
+    """Row count of a staged write from parquet footers (no data I/O);
+    0 for an empty partitioned staging (which writes no part files)."""
+    files = list_data_files(spark, staging, recursive=True)
+    if not files:
+        return 0
+    return spark.read.parquet(*files).count()
+
+
+def _reclaim(spark: SparkSession, dirs) -> None:
+    """Best-effort recursive delete of staging dirs (pure debris: nothing
+    in them was ever moved into a table)."""
+    dirs = [d for d in dirs if d]
+    if not dirs:
+        return
+    jvm, fs, _ = _fs(spark, dirs[0])
+    for d in dirs:
+        with contextlib.suppress(Exception):
+            fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
 
 
 def _rename_part(jvm, fs, src, dest_dir, tag: str, i: int) -> None:
     """Rename one staged part file into ``dest_dir`` under a fresh unique
-    COW name — the single swap primitive both movers share."""
+    COW name — the single swap primitive every mover shares."""
     dest = jvm.org.apache.hadoop.fs.Path(
         dest_dir, f"part-cow-{tag}-{i:05d}.snappy.parquet"
     )
@@ -195,52 +215,31 @@ def _rename_part(jvm, fs, src, dest_dir, tag: str, i: int) -> None:
 
 
 def _move_in(spark: SparkSession, path: str, staging: str) -> int:
-    """Move staged part files into the table dir under fresh unique names;
-    returns how many files moved."""
-    jvm, fs, table_path = _fs(spark, path)
-    tag = uuid.uuid4().hex[:12]
-    i = 0
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(staging)):
-        name = st.getPath().getName()
-        if not st.isFile() or name.startswith(("_", ".")):
-            continue
-        _rename_part(jvm, fs, st.getPath(), table_path, tag, i)
-        i += 1
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-    return i
-
-
-def _move_in_partitioned(
-    spark: SparkSession, path: str, staging: str, part_cols: list[str]
-) -> int:
-    """Move a hive-partitioned staging dir's part files into the matching
-    ``key=value`` directories under the table (created as needed); returns
-    how many files moved.  The partition value lives in the directory
-    name, so preserving each staged file's partition-relative path IS the
-    data move."""
+    """Move staged part files into the table dir under fresh unique names,
+    then drop the staging dir; returns how many files moved.  A
+    hive-partitioned staging's ``key=value`` subdirectories land in the
+    matching table directories (created as needed): the partition value
+    lives in the directory name, so preserving each staged file's
+    relative path IS the data move."""
     jvm, fs, table_path = _fs(spark, path)
     tag = uuid.uuid4().hex[:12]
     moved = 0
 
-    def walk(d, rel: str) -> None:
+    def walk(d, dest_dir) -> None:
         nonlocal moved
         for st in fs.listStatus(d):
             name = st.getPath().getName()
             if name.startswith(("_", ".")):
                 continue
             if st.isDirectory():
-                walk(st.getPath(), f"{rel}/{name}" if rel else name)
+                sub = jvm.org.apache.hadoop.fs.Path(dest_dir, name)
+                fs.mkdirs(sub)
+                walk(st.getPath(), sub)
             elif st.isFile():
-                dest_dir = (
-                    jvm.org.apache.hadoop.fs.Path(table_path, rel)
-                    if rel
-                    else table_path
-                )
-                fs.mkdirs(dest_dir)
                 _rename_part(jvm, fs, st.getPath(), dest_dir, tag, moved)
                 moved += 1
 
-    walk(jvm.org.apache.hadoop.fs.Path(staging), "")
+    walk(jvm.org.apache.hadoop.fs.Path(staging), table_path)
     fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
     return moved
 
@@ -431,42 +430,24 @@ def _writer_lock(
 
 
 def _with_writer_lock(fn):
-    """Decorator: run a mutating verb under the table's writer lock; on a
-    version-enabled table (see :func:`enable_versioning`) every mutation
-    that changed anything commits the next numbered version manifest
-    before the lock releases — the single choke point that makes the
-    version log linear."""
+    """Decorator for the maintenance verbs outside the DML commit loop
+    (``compact``): run under the table's writer lock; when the verb
+    changed anything, commit the next version manifest and refresh the
+    bloom sidecars before the lock releases — the choke point that keeps
+    the version log linear."""
 
     @functools.wraps(fn)
     def wrapper(spark, path, *args, **kwargs):
         with _writer_lock(spark, path):
             out = fn(spark, path, *args, **kwargs)
-            if isinstance(out, MutationStats) and (
-                out.files_rewritten or out.rows_inserted
-            ):
+            if out.files_rewritten or out.rows_inserted:
                 from .versioning import _autoversion
 
                 _autoversion(spark, path)
-                # bloom sidecars: index the files this verb just created
-                # (compact included — it replaces indexed files wholesale)
                 _refresh_indexes(spark, path)
-                # layout-only verbs (compact/recluster) move bytes but
-                # change no row — ANALYZE row/NDV stats stay exact, so
-                # they must not trip the staleness warning + re-harvest.
-                # They DO rewrite files, so the catalog's file-listing
-                # epoch (which the load_tables definition memo keys on)
-                # must advance either way; _mark_mutated bumps both.
-                if fn.__name__ not in _LAYOUT_ONLY_VERBS:
-                    _mark_mutated(spark, path)
-                else:
-                    _mark_files_changed(spark, path)
             return out
 
     return wrapper
-
-
-#: verbs whose rewrites preserve every row value (pure file layout)
-_LAYOUT_ONLY_VERBS = frozenset({"compact"})
 
 
 def _mark_mutated(spark: SparkSession, path: str) -> None:
@@ -579,37 +560,6 @@ def _retire_files(spark: SparkSession, path: str, files: list[str]) -> None:
             raise IOError(f"retire: rename {f} -> {dest} failed")
 
 
-def _swap_in(
-    spark: SparkSession,
-    path: str,
-    old_files: list[str],
-    rewritten: DataFrame,
-    retain: bool = False,
-    enforce: bool = False,
-) -> None:
-    """Materialize ``rewritten`` to a sibling staging dir, move its parts
-    into the table, delete (or retire) ``old_files``.  Stage completes
-    before any original is touched (crash ⇒ duplicates, never data loss).
-    ``enforce``: verify table constraints over the staged output before
-    the swap (value-changing verbs set it; DELETE cannot violate)."""
-    staging = _stage(spark, path, rewritten)
-    if enforce:
-        try:
-            __enforce_constraints(spark, path, [staging])
-        except BaseException:
-            jvm, fs, _ = _fs(spark, path)
-            with contextlib.suppress(Exception):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-            raise
-    _move_in(spark, path, staging)
-    if retain:
-        _retire_files(spark, path, old_files)
-    else:
-        _delete_files(spark, old_files)
-    # rewritten files changed on disk under this session's feet
-    spark.catalog.clearCache()
-
-
 #: Driver-side fs metadata concurrency for the per-partition swap phase.
 #: Renames/deletes are independent per partition dir; a serial loop is
 #: O(partitions) round-trips of driver latency — minutes at 10⁴ partitions.
@@ -664,13 +614,16 @@ def _swap_staged(
 STAGE_JOBS = 8
 
 
-def _run_partition_stages(spark: SparkSession, path: str, items, stage_one):
+def _run_partition_stages(
+    spark: SparkSession, path: str, items, stage_one, created=None
+):
     """Phase 1 of every partitioned COW verb: run ``stage_one(item,
     created)`` for every partition, a few CONCURRENT Spark jobs at a time
     (partition rewrites are independent; Spark schedules concurrent jobs
     from threads fairly).  ``created`` is a list the callee must hand to
     :func:`_stage`, which registers each staging path BEFORE writing to
-    it.  Returns results in the input order.
+    it (pass the caller's own registry as ``created`` to share it).
+    Returns results in the input order.
 
     On any failure: pending stages are CANCELLED (a failed mutation must
     not burn the cluster finishing rewrites whose output is about to be
@@ -683,7 +636,8 @@ def _run_partition_stages(spark: SparkSession, path: str, items, stage_one):
     from concurrent.futures import ThreadPoolExecutor
 
     items = list(items)
-    created: list[str] = []  # list.append is atomic under the GIL
+    if created is None:
+        created = []  # list.append is atomic under the GIL
     try:
         if len(items) == 1:
             return [stage_one(items[0], created)]
@@ -699,76 +653,176 @@ def _run_partition_stages(spark: SparkSession, path: str, items, stage_one):
                 raise
     except Exception:
         # phase-1 failure: executor shutdown awaited the in-flight tasks,
-        # so `created` is final — reclaim exactly what this call made
-        jvm, fs, _ = _fs(spark, path)
-        for staging in created:
-            with contextlib.suppress(Exception):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+        # so `created` is final — reclaim exactly what was registered
+        _reclaim(spark, created)
         raise
 
 
-def _mutate_partitioned(
+def _stage_rewrites(
     spark: SparkSession,
     path: str,
-    cond: Column,
-    build,
-    retain: bool,
-    enforce: bool = False,
-) -> MutationStats:
-    """Per-partition copy-on-write: group affected files by their hive
-    partition directory, stage EVERY partition's rewrite first, then swap
-    them all in (thread-pooled fs metadata phase).
+    hit: list[str],
+    part_cols: list[str],
+    rewrite,
+    created: list[str],
+    reader=None,
+) -> tuple[list[tuple[str, list[str], str]], int]:
+    """Stage the rewrite of every touched directory's ``hit`` files (one
+    group when the table has no ``part_cols``) with
+    :func:`_run_partition_stages`; returns the
+    ``(dir, old_files, staging)`` entries :func:`_swap_staged` publishes
+    and the matched-row total.  ``rewrite(sub) -> (rewritten, matched)``
+    maps one group's files — read with ``basePath`` so partition columns
+    are in scope; they drop before writing, the directory name carries
+    them — to its rewrite and a zero-arg matched-count callable resolved
+    after the staging write (an observed metric: one job per group, not
+    a count plus a write)."""
 
-    - The prune scan runs over the PARTITIONED read, so predicates on
-      partition columns prune whole directories before any footer is
-      touched (the cheapest skip there is).
-    - Each partition's rewrite reads with ``basePath`` so partition
-      columns are in scope for the predicate, and drops them before
-      writing (they live in the directory name, not the file).
-    - Stage-all-THEN-swap (same discipline as the flat-table verbs):
-      every original file still exists while any rewrite plan is being
-      evaluated, so a predicate or source reading the table itself can
-      never hit a mid-swap hole; a crash before phase 2 leaves the table
-      untouched.
-    """
-    files_all = list_data_files(spark, path, recursive=True)
-    hit = affected_files(spark, path, cond)
-    if not hit:
-        return MutationStats(len(files_all), 0, 0)
-    part_cols = _partition_cols(spark, path, hit[0])
-    groups = _group_by_dir(hit)
-
-    def stage_one(item: tuple[str, list[str]], created: list[str]):
+    def stage_one(item: tuple[str, list[str]], cr: list[str]):
         part_dir, pfiles = item
-        sub = spark.read.option("basePath", path).parquet(*pfiles)
-        rewritten, matched = build(sub, part_cols)
-        return (
-            part_dir,
-            pfiles,
-            _stage(spark, path, rewritten.drop(*part_cols), created),
-            matched,
+        reader_ = reader or spark.read
+        rewritten, matched = rewrite(
+            reader_.option("basePath", path).parquet(*pfiles)
+        )
+        staging = _stage(spark, path, rewritten.drop(*part_cols), cr)
+        return part_dir, pfiles, staging, matched
+
+    groups = sorted(_group_by_dir(hit).items()) if part_cols else [(path, hit)]
+    results = _run_partition_stages(spark, path, groups, stage_one, created)
+    matched = sum(m() for *_, m in results)
+    return [(d, p, s) for d, p, s, _ in results], matched
+
+
+def _rewrite_stage(
+    spark: SparkSession, path: str, cond: Column, build, enforce: bool
+):
+    """The copy-on-write writer of the point verbs, as a
+    :func:`~.commit.run` stage: prune the files holding ≥1 matched row,
+    stage every touched directory's rewrite (:func:`_stage_rewrites`;
+    ``build(sub, part_cols) -> (rewritten, matched)``), publish by
+    :func:`_swap_staged`.  On a hive-partitioned table the prune runs
+    over the partitioned read, so partition-column predicates skip whole
+    directories.
+
+    Validation is by exact file-name set (COW part names are
+    uuid-unique, so name identity == content identity), scoped to the
+    directories this attempt read: writers on disjoint files — and so on
+    disjoint partitions — both commit, and the in-lock re-list costs
+    O(files in touched partitions), never O(table)."""
+
+    def stage(created: list[str], optimistic: bool):
+        from .commit import Staged
+
+        partitioned = is_partitioned(spark, path)
+        files = list_data_files(spark, path, recursive=partitioned)
+        hit = affected_files(spark, path, cond)
+        if not hit:
+            return Staged(MutationStats(len(files), 0, 0))
+        part_cols = _partition_cols(spark, path, hit[0]) if partitioned else []
+        staged, matched = _stage_rewrites(
+            spark, path, hit, part_cols, lambda sub: build(sub, part_cols),
+            created,
         )
 
-    results = _run_partition_stages(
-        spark, path, sorted(groups.items()), stage_one
-    )
-    staged = [(d, p, s) for d, p, s, _ in results]
-    matched_total = sum(m for _, _, _, m in results)
-    if enforce:
-        try:
-            __enforce_constraints(spark, path, [s for _, _, s in staged])
-        except BaseException:
+        def validate() -> str | None:
+            # compare DECODED PATH COMPONENTS, not raw URIs: the scan's
+            # file names (hit) percent-encode, Hadoop's Path.toString
+            # (the re-list) does not
+            from .occ import _uri_path
+
             jvm, fs, _ = _fs(spark, path)
-            for _, _, s in staged:
-                with contextlib.suppress(Exception):
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(s), True)
-            raise
-    _swap_staged(spark, path, staged, retain)
-    spark.catalog.clearCache()
-    return MutationStats(len(files_all), len(hit), matched_total)
+            current: set[str] = set()
+            for part_dir, _, _ in staged:
+                if not fs.exists(jvm.org.apache.hadoop.fs.Path(part_dir)):
+                    return "<partition dir removed>"
+                current |= {
+                    _uri_path(f) for f in list_data_files(spark, part_dir)
+                }
+            gone = sorted(f for f in hit if _uri_path(f) not in current)
+            return f"files replaced: {gone[:3]}" if gone else None
+
+        return Staged(
+            MutationStats(len(files), len(hit), matched),
+            publish=lambda retain: _swap_staged(spark, path, staged, retain),
+            validate=validate,
+            check=[s for _, _, s in staged] if enforce else None,
+            rewrites=True,
+        )
+
+    return stage
 
 
-@_with_writer_lock
+def _delete(spark, path, condition, retain, **mode) -> MutationStats:
+    from .commit import run
+
+    cond = _cond(condition)
+
+    def build(sub: DataFrame, part_cols: list[str]):
+        # observe BEFORE the keep-filter so the metric sees every row;
+        # count(when(cond, 1)) matches where(cond).count() under
+        # three-valued logic (NULL and FALSE both go uncounted)
+        obs = Observation()
+        observed = sub.observe(
+            obs, F.count(F.when(cond, F.lit(1))).alias("matched")
+        )
+
+        def matched() -> int:
+            from py4j.protocol import Py4JJavaError
+
+            try:
+                return obs.get["matched"]
+            except Py4JJavaError:
+                # no metric row: a predicate constant-TRUE over these rows
+                # folds the keep-filter to FALSE and the optimizer prunes
+                # the observed subtree with it — count directly
+                return sub.where(cond).count()
+
+        return observed.where(~F.coalesce(cond, F.lit(False))), matched
+
+    return run(
+        spark, path, _rewrite_stage(spark, path, cond, build, enforce=False),
+        retain=retain, what="DELETE", **mode,
+    )
+
+
+def _update(spark, path, set_map, condition, retain, **mode) -> MutationStats:
+    from .commit import run
+
+    cond = _cond(condition)
+
+    def build(sub: DataFrame, part_cols: list[str]):
+        part_here = [c for c in set_map if c in part_cols]
+        if part_here:
+            raise ValueError(
+                f"UPDATE SET on partition columns: {sorted(part_here)}; "
+                "changing a row's partition is a delete + insert"
+            )
+        unknown = set(set_map) - set(sub.columns)
+        if unknown:
+            raise ValueError(
+                f"UPDATE SET on unknown columns: {sorted(unknown)}"
+            )
+        obs = Observation()  # see _delete
+        observed = sub.observe(
+            obs, F.count(F.when(cond, F.lit(1))).alias("matched")
+        )
+        projected = [
+            F.when(F.coalesce(cond, F.lit(False)), _cond(set_map[c]))
+            .otherwise(F.col(c))
+            .cast(sub.schema[c].dataType)
+            .alias(c)
+            if c in set_map
+            else F.col(c)
+            for c in sub.columns
+        ]
+        return observed.select(*projected), lambda: obs.get["matched"]
+
+    return run(
+        spark, path, _rewrite_stage(spark, path, cond, build, enforce=True),
+        retain=retain, what="UPDATE", **mode,
+    )
+
+
 def delete_where(
     spark: SparkSession,
     path: str,
@@ -780,28 +834,9 @@ def delete_where(
     (exactly what ``DELETE`` does in every SQL engine).  Works on flat and
     hive-partitioned tables (per-partition swap; partition-column
     predicates prune whole directories)."""
-    retain = _default_retain(spark, path, retain)
-    cond = _cond(condition)
-    if is_partitioned(spark, path):
-        def build(sub: DataFrame, part_cols: list[str]):
-            return (
-                sub.where(~F.coalesce(cond, F.lit(False))),
-                sub.where(cond).count(),
-            )
-
-        return _mutate_partitioned(spark, path, cond, build, retain)
-    files = list_data_files(spark, path)
-    hit = affected_files(spark, path, cond)
-    if not hit:
-        return MutationStats(len(files), 0, 0)
-    sub = spark.read.parquet(*hit)
-    deleted = sub.where(cond).count()
-    kept = sub.where(~F.coalesce(cond, F.lit(False)))
-    _swap_in(spark, path, hit, kept, retain=retain)
-    return MutationStats(len(files), len(hit), deleted)
+    return _delete(spark, path, condition, retain)
 
 
-@_with_writer_lock
 def update_where(
     spark: SparkSession,
     path: str,
@@ -819,81 +854,7 @@ def update_where(
     column is refused — changing a row's partition value means moving it
     between directories, which is a delete+insert, not an update.
     """
-    retain = _default_retain(spark, path, retain)
-    cond = _cond(condition)
-    if is_partitioned(spark, path):
-        full_cols = spark.read.parquet(path).columns
-        unknown = set(set_map) - set(full_cols)
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET on unknown columns: {sorted(unknown)}"
-            )
-
-        def build(sub: DataFrame, part_cols: list[str]):
-            part_here = [c for c in set_map if c in part_cols]
-            if part_here:
-                raise ValueError(
-                    f"UPDATE SET on partition columns: {sorted(part_here)}; "
-                    "changing a row's partition is a delete + insert"
-                )
-            projected = [
-                F.when(F.coalesce(cond, F.lit(False)), _cond(set_map[c]))
-                .otherwise(F.col(c))
-                .cast(sub.schema[c].dataType)
-                .alias(c)
-                if c in set_map
-                else F.col(c)
-                for c in sub.columns
-            ]
-            return sub.select(*projected), sub.where(cond).count()
-
-        return _mutate_partitioned(
-            spark, path, cond, build, retain, enforce=True
-        )
-    files = list_data_files(spark, path)
-    hit = affected_files(spark, path, cond)
-    if not hit:
-        return MutationStats(len(files), 0, 0)
-    sub = spark.read.parquet(*hit)
-    unknown = set(set_map) - set(sub.columns)
-    if unknown:
-        raise ValueError(f"UPDATE SET on unknown columns: {sorted(unknown)}")
-    matched = sub.where(cond).count()
-    projected = [
-        F.when(F.coalesce(cond, F.lit(False)), _cond(set_map[c]))
-        .otherwise(F.col(c))
-        .cast(sub.schema[c].dataType)
-        .alias(c)
-        if c in set_map
-        else F.col(c)
-        for c in sub.columns
-    ]
-    _swap_in(
-        spark, path, hit, sub.select(*projected), retain=retain, enforce=True
-    )
-    return MutationStats(len(files), len(hit), matched)
-
-
-@dataclass
-class _StagedMerge:
-    """Everything a MERGE's lock-free phase produced, ready to commit:
-    the file list it read (the OCC validation read-set), the matched-file
-    prune, each staged rewrite, and the staged insert directory."""
-
-    files: list[str]
-    hit: list[str]
-    staged: list[tuple[str, list[str], str]]
-    rows_matched: int
-    ins_staging: str
-    rows_inserted: int
-    part_cols: list[str]
-    partitioned: bool
-    #: the constraint set the lock-free enforcement pass verified — the
-    #: optimistic commit re-checks under its lock if the set has changed
-    checked_constraints: dict = None  # type: ignore[assignment]
-
-    def staging_dirs(self) -> list[str]:
-        return [s for _, _, s in self.staged] + [self.ins_staging]
+    return _update(spark, path, set_map, condition, retain)
 
 
 #: Widening chains evolve_schema accepts: any hop rightward is safe (no
@@ -917,25 +878,53 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
-def _merge_prepare(
+def _check_merge_source(
+    source: DataFrame, on: list[str], check_unique: bool
+) -> None:
+    """MERGE source guards shared by every merge verb: the join keys
+    exist, and (``check_unique``) no key repeats — a duplicated source
+    key would multiply matched target rows (Delta raises the same).  One
+    aggregation over the (small) source, run once per statement, never
+    per retry: it reads only the source."""
+    for k in on:
+        if k not in source.columns:
+            raise ValueError(f"merge key {k!r} missing from source")
+    if not check_unique:
+        return
+    dup = source.groupBy(*on).count().where(F.col("count") > 1).limit(1)
+    if dup.count():
+        raise ValueError(
+            "MERGE source has duplicate join keys; each target row "
+            "must match at most one source row (pass "
+            "check_unique=False only if uniqueness is guaranteed "
+            "upstream)"
+        )
+
+
+def _merge_stage(
     spark: SparkSession,
     path: str,
+    created: list[str],
     source: DataFrame,
     on: list[str],
     matched_set: dict[str, str | Column] | None,
     insert_values: dict[str, str | Column] | None,
-    check_unique: bool,
     matched_delete: str | Column | None,
     insert_condition: str | Column | None,
     max_pruned_files: int | None,
-    evolve_schema: bool = False,
-) -> _StagedMerge:
-    """Phase 1 of MERGE: validate, prune, and STAGE everything — matched
-    rewrites and insert files — without touching a single original file.
-    The serialized verb runs this under the writer lock; the optimistic
-    verb runs it lock-free and validates before commit.  On any failure
-    every staging dir this call made is reclaimed before the exception
-    propagates.
+    evolve_schema: bool,
+    isolation: str,
+):
+    """The copy-on-write MERGE writer, as a :func:`~.commit.run` stage:
+    prune, and STAGE everything — matched rewrites and insert files —
+    without touching a single original file.  Publish swaps the
+    rewrites in (thread-pooled) and moves the inserts in.
+
+    Validation (optimistic mode) follows ``isolation``: ``serializable``
+    requires the table's file list to be exactly what the read saw (a
+    MERGE's insert decision reads every file's keys);
+    ``write_serializable`` only requires the files this merge rewrites
+    to still exist (see :func:`~.occ.occ_merge_into`).
 
     ``evolve_schema``: source columns absent from the target JOIN the
     table schema — written into insert files and rewritten matched files
@@ -948,18 +937,8 @@ def _merge_prepare(
     metadata-only widening would poison reads).  Any other type mismatch
     is refused loudly rather than silently cast.
     """
-    for k in on:
-        if k not in source.columns:
-            raise ValueError(f"merge key {k!r} missing from source")
-    if check_unique:
-        dup = source.groupBy(*on).count().where(F.col("count") > 1).limit(1)
-        if dup.count():
-            raise ValueError(
-                "MERGE source has duplicate join keys; each target row "
-                "must match at most one source row (pass "
-                "check_unique=False only if uniqueness is guaranteed "
-                "upstream)"
-            )
+    from .commit import Staged
+
     if evolve_schema:
         # mergeSchema: a previously-evolved table's newest columns live
         # only in its newest files
@@ -1038,7 +1017,7 @@ def _merge_prepare(
     hit: list[str] = []
     if has_matched_action:
         hit_df = (
-            target.select(*on, F.input_file_name().alias("f"))
+            target.select(*on, F.col("_metadata.file_path").alias("f"))
             .join(src.select(*on).distinct(), on=on, how="leftsemi")
             .select("f")
             .distinct()
@@ -1078,189 +1057,159 @@ def _merge_prepare(
             e = F.lit(None)
         ins_cols.append(e.cast(dt).alias(c))
     ins_df = unmatched.select(*ins_cols)
-    ins_staging = path.rstrip("/") + f"__cow_{uuid.uuid4().hex}"
-    jvm, fs, _ = _fs(spark, path)
-    try:
-        if partitioned:
-            # inserted rows must land in their key=value directories; a
-            # NULL partition value routes to Hive's default partition dir
-            ins_df.write.mode("overwrite").partitionBy(*part_cols).parquet(
-                ins_staging
+    # inserted rows land in their key=value directories; an all-matched
+    # merge stages nothing worth moving
+    ins_staging = _stage(spark, path, ins_df, created, part_cols)
+    rows_inserted = _staged_rows(spark, ins_staging)
+    if not rows_inserted:
+        _reclaim(spark, [ins_staging])
+    rows_matched = 0
+    staged: list[tuple[str, list[str], str]] = []
+    if hit:
+        def rewrite(sub: DataFrame):
+            marked = src.withColumn("__matched", F.lit(True))
+            joined = sub.join(marked, on=on, how="left")
+            is_match = F.coalesce(F.col("__matched"), F.lit(False))
+            # matched-count rides the staging write as an observed
+            # metric (one job per file group, not count + write)
+            obs = Observation()
+            joined = joined.observe(
+                obs, F.count(F.when(is_match, F.lit(1))).alias("m")
             )
-        else:
-            ins_df.write.mode("overwrite").parquet(ins_staging)
-        # an all-matched partitioned merge stages ZERO part files
-        # (partitionBy writes nothing for an empty frame), which a bare
-        # read cannot infer a schema from — count through the file list
-        staged_files = list_data_files(spark, ins_staging, recursive=True)
-        rows_inserted = (
-            spark.read.parquet(ins_staging).count() if staged_files else 0
-        )
-
-        rows_matched = 0
-        staged: list[tuple[str, list[str], str]] = []
-        if hit:
-            def stage_rewrite(item: tuple[str, list[str]], created: list[str]):
-                dest_dir, pfiles = item
-                reader = spark.read
-                if evolve_schema:
-                    # a previously-evolved file group may itself be
-                    # schema-heterogeneous
-                    reader = reader.option("mergeSchema", "true")
-                if partitioned:
-                    # basePath keeps partition columns in scope (a merge
-                    # key may BE one); they drop before writing — the
-                    # directory name carries them
-                    sub = reader.option("basePath", path).parquet(*pfiles)
-                else:
-                    sub = reader.parquet(*pfiles)
-                marked = src.withColumn("__matched", F.lit(True))
-                joined = sub.join(marked, on=on, how="left")
-                is_match = F.coalesce(F.col("__matched"), F.lit(False))
-                # matched-count rides the staging write as an observed
-                # metric (one job per file group, not count + write)
-                obs = Observation()
-                joined = joined.observe(
-                    obs, F.count(F.when(is_match, F.lit(1))).alias("m")
-                )
-                if matched_delete is not None:
-                    joined = joined.where(
-                        ~(
-                            is_match
-                            & F.coalesce(_cond(matched_delete), F.lit(False))
-                        )
+            if matched_delete is not None:
+                joined = joined.where(
+                    ~(
+                        is_match
+                        & F.coalesce(_cond(matched_delete), F.lit(False))
                     )
-                ms = matched_set or {}
-                projected = [
-                    F.when(is_match, _cond(ms[c]))
-                    .otherwise(F.col(c))
-                    .cast(widen.get(c, sub.schema[c].dataType))
-                    .alias(c)
-                    if c in ms
-                    else F.col(c).cast(
-                        widen.get(c, sub.schema[c].dataType)
-                    ).alias(c)
-                    for c in sub.columns
-                ]
-                # evolution: columns this FILE GROUP lacks join its
-                # rewritten files — both brand-new source columns AND
-                # columns an EARLIER evolution added to other files only
-                # (review finding: projecting just sub.columns silently
-                # dropped a matched_set update on a column every hit file
-                # in this group predates — a lost update).  Matched rows
-                # take the matched_set expression or the source value;
-                # everything else NULL-backfills.
-                sub_cols = set(sub.columns)
-                gap_fields = list(new_fields) + [
-                    (n, dt)
-                    for n, dt in evolved
-                    if n not in sub_cols
-                    and all(n != m for m, _ in new_fields)
-                ]
-                for name, dt in gap_fields:
-                    if name in ms:
-                        e = F.when(is_match, _cond(ms[name])).otherwise(
-                            F.lit(None)
-                        )
-                    elif f"src_{name}" in joined.columns:
-                        e = F.when(is_match, F.col(f"src_{name}")).otherwise(
-                            F.lit(None)
-                        )
-                    else:
-                        e = F.lit(None)
-                    projected.append(e.cast(dt).alias(name))
-                rewritten = joined.select(*projected)
-                if part_cols:
-                    rewritten = rewritten.drop(*part_cols)
-                return (
-                    dest_dir,
-                    pfiles,
-                    _stage(spark, path, rewritten, created),
-                    lambda: obs.get["m"],
                 )
+            ms = matched_set or {}
+            projected = [
+                F.when(is_match, _cond(ms[c]))
+                .otherwise(F.col(c))
+                .cast(widen.get(c, sub.schema[c].dataType))
+                .alias(c)
+                if c in ms
+                else F.col(c).cast(
+                    widen.get(c, sub.schema[c].dataType)
+                ).alias(c)
+                for c in sub.columns
+            ]
+            # evolution: columns this FILE GROUP lacks join its
+            # rewritten files — both brand-new source columns AND
+            # columns an EARLIER evolution added to other files only
+            # (review finding: projecting just sub.columns silently
+            # dropped a matched_set update on a column every hit file
+            # in this group predates — a lost update).  Matched rows
+            # take the matched_set expression or the source value;
+            # everything else NULL-backfills.
+            sub_cols = set(sub.columns)
+            gap_fields = list(new_fields) + [
+                (n, dt)
+                for n, dt in evolved
+                if n not in sub_cols
+                and all(n != m for m, _ in new_fields)
+            ]
+            for name, dt in gap_fields:
+                if name in ms:
+                    e = F.when(is_match, _cond(ms[name])).otherwise(
+                        F.lit(None)
+                    )
+                elif f"src_{name}" in joined.columns:
+                    e = F.when(is_match, F.col(f"src_{name}")).otherwise(
+                        F.lit(None)
+                    )
+                else:
+                    e = F.lit(None)
+                projected.append(e.cast(dt).alias(name))
+            return joined.select(*projected), lambda: obs.get["m"]
 
-            # STAGE every partition's rewrite before touching any
-            # original: ``src`` is caller-supplied and may read from this
-            # very table (self-referential merge), and Spark re-evaluates
-            # its plan per staging job — deleting partition A's files
-            # before staging partition B would hand that plan a mid-swap
-            # hole (FileNotFoundException at best, silent reads of
-            # swapped-in data at worst).
-            items = (
-                sorted(_group_by_dir(hit).items())
-                if partitioned
-                else [(path, hit)]
-            )
-            results = _run_partition_stages(spark, path, items, stage_rewrite)
-            # a widening-only rewrite (no matched clause) touches every
-            # file but ACTS on no row — report 0 matched, not key hits
-            rows_matched = (
-                sum(m() for _, _, _, m in results)
-                if has_matched_action
-                else 0
-            )
-            staged = [(d, p, s) for d, p, s, _ in results]
-    except Exception:
-        # don't orphan the staged inserts (or, if the failure was in the
-        # rewrite staging, anything the stage helper didn't already
-        # reclaim) — no original has been touched, so it is all debris
-        with contextlib.suppress(Exception):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(ins_staging), True)
-        raise
-    try:
-        # everything is staged and nothing original has moved: verify the
-        # table's CHECK constraints over exactly what this merge wrote
-        # (rewrites + inserts) in one job; a violation reclaims it all
-        checked_cons = __enforce_constraints(
-            spark, path, [s for _, _, s in staged] + [ins_staging]
+        # STAGE every partition's rewrite before touching any
+        # original: ``src`` is caller-supplied and may read from this
+        # very table (self-referential merge), and Spark re-evaluates
+        # its plan per staging job — deleting partition A's files
+        # before staging partition B would hand that plan a mid-swap
+        # hole (FileNotFoundException at best, silent reads of
+        # swapped-in data at worst).
+        staged, matched = _stage_rewrites(
+            spark, path, hit, part_cols, rewrite, created,
+            # a previously-evolved file group may itself be
+            # schema-heterogeneous
+            spark.read.option("mergeSchema", "true") if evolve_schema
+            else None,
         )
-    except BaseException:
-        for d in [s for _, _, s in staged] + [ins_staging]:
-            with contextlib.suppress(Exception):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-        raise
-    return _StagedMerge(
-        files=files,
-        hit=hit,
-        staged=staged,
-        rows_matched=rows_matched,
-        ins_staging=ins_staging,
-        rows_inserted=rows_inserted,
-        part_cols=part_cols,
-        partitioned=partitioned,
-        checked_constraints=checked_cons,
+        # a widening-only rewrite (no matched clause) touches every
+        # file but ACTS on no row — report 0 matched, not key hits
+        rows_matched = matched if has_matched_action else 0
+
+    def validate() -> str | None:
+        from .occ import _uri_path
+
+        current = {
+            _uri_path(f)
+            for f in list_data_files(spark, path, recursive=partitioned)
+        }
+        before = {_uri_path(f) for f in files}
+        if isolation == "serializable":
+            diff = sorted(current ^ before)
+            return f"table file list changed: {diff[:3]}" if diff else None
+        # write_serializable: only the files THIS merge rewrites are
+        # commit-blocking — a concurrent commit that removed one means
+        # the staged rewrite would clobber/resurrect its rows; anything
+        # else is the documented anomaly
+        clash = sorted((before - current) & {_uri_path(f) for f in hit})
+        return f"rewritten files replaced: {clash[:3]}" if clash else None
+
+    def publish(retain: bool) -> None:
+        _swap_staged(spark, path, staged, retain)
+        if rows_inserted:
+            _move_in(spark, path, ins_staging)
+
+    return Staged(
+        MutationStats(len(files), len(hit), rows_matched, rows_inserted),
+        publish=publish,
+        validate=validate,
+        check=[s for _, _, s in staged]
+        + ([ins_staging] if rows_inserted else []),
+        rewrites=True,
     )
 
 
-def _merge_commit(
-    spark: SparkSession, path: str, st: _StagedMerge, retain: bool
-) -> None:
-    """Phase 2 of MERGE: swap the staged rewrites in (thread-pooled) and
-    move the staged inserts into the table.  Caller holds the writer lock.
-    A swap failure leaves the rewrite staging dirs for ``repair_table``
-    but reclaims the never-moved insert staging (pure debris)."""
-    jvm, fs, _ = _fs(spark, path)
-    if st.staged:
-        try:
-            _swap_staged(spark, path, st.staged, retain)
-        except Exception:
-            with contextlib.suppress(Exception):
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(st.ins_staging), True
-                )
-            raise
-        spark.catalog.clearCache()
-    if st.rows_inserted:
-        if st.partitioned:
-            _move_in_partitioned(spark, path, st.ins_staging, st.part_cols)
-        else:
-            _move_in(spark, path, st.ins_staging)
-        spark.catalog.clearCache()
-    else:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(st.ins_staging), True)
+def _merge(
+    spark,
+    path,
+    source,
+    on,
+    matched_set=None,
+    insert_values=None,
+    check_unique=True,
+    matched_delete=None,
+    insert_condition=None,
+    retain=None,
+    max_pruned_files=100_000,
+    evolve_schema=False,
+    isolation="serializable",
+    **mode,
+) -> MutationStats:
+    from .commit import run
+
+    if isolation not in ("serializable", "write_serializable"):
+        raise ValueError(
+            f"isolation must be 'serializable' or 'write_serializable', "
+            f"got {isolation!r}"
+        )
+    _check_merge_source(source, on, check_unique)
+
+    def stage(created: list[str], optimistic: bool):
+        return _merge_stage(
+            spark, path, created, source, on, matched_set, insert_values,
+            matched_delete, insert_condition, max_pruned_files,
+            evolve_schema, isolation,
+        )
+
+    return run(spark, path, stage, retain=retain, what="MERGE", **mode)
 
 
-@_with_writer_lock
 def merge_into(
     spark: SparkSession,
     path: str,
@@ -1311,16 +1260,12 @@ def merge_into(
     ``evolve_schema=True`` lets the source evolve the table: new nullable
     columns land in insert/rewritten files (older files NULL-backfill —
     read via :func:`read_table`), safe type widenings rewrite the table,
-    anything else is refused loudly.  See :func:`_merge_prepare`.
+    anything else is refused loudly.  See :func:`_merge_stage`.
     """
-    retain = _default_retain(spark, path, retain)
-    st = _merge_prepare(
+    return _merge(
         spark, path, source, on, matched_set, insert_values, check_unique,
-        matched_delete, insert_condition, max_pruned_files, evolve_schema,
-    )
-    _merge_commit(spark, path, st, retain)
-    return MutationStats(
-        len(st.files), len(st.hit), st.rows_matched, st.rows_inserted
+        matched_delete, insert_condition, retain, max_pruned_files,
+        evolve_schema,
     )
 
 
@@ -1409,72 +1354,53 @@ def compact(
         return df.repartitionByRange(
             n_out, *recluster
         ).sortWithinPartitions(*recluster)
-    if is_partitioned(spark, path):
-        # per-partition bin-pack: compaction is file-local, so each
-        # key=value directory compacts independently (the partition value
-        # lives in the directory name and never moves); at scale these are
-        # parallel jobs per partition
-        all_files = list_data_files(spark, path, recursive=True)
-        # size filter first (pure metadata): only partitions with >= 2
-        # small files reach the staging pool
-        todo: list[tuple[str, tuple[list[str], int]]] = []
-        for part_dir, pfiles in sorted(_group_by_dir(all_files).items()):
-            small_p: list[str] = []
-            small_p_bytes = 0
-            for f in pfiles:
-                sz = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(f)).getLen()
-                if recluster or sz < target_bytes * small_ratio:
-                    small_p.append(f)
-                    small_p_bytes += sz
-            if len(small_p) >= (1 if recluster else 2):
-                todo.append((part_dir, (small_p, small_p_bytes)))
-        if not todo:
-            return MutationStats(len(all_files), 0, 0)
+    # per-partition bin-pack: compaction is file-local, so each key=value
+    # directory compacts independently (the partition value lives in the
+    # directory name and never moves); a flat table is one group
+    partitioned = is_partitioned(spark, path)
+    all_files = list_data_files(spark, path, recursive=partitioned)
+    groups = (
+        sorted(_group_by_dir(all_files).items())
+        if partitioned
+        else [(path, all_files)]
+    )
+    # size filter first (pure metadata): only groups with >= 2 small
+    # files reach the staging pool
+    todo: list[tuple[str, tuple[list[str], int]]] = []
+    for part_dir, pfiles in groups:
+        small_p: list[str] = []
+        small_p_bytes = 0
+        for f in pfiles:
+            sz = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(f)).getLen()
+            if recluster or sz < target_bytes * small_ratio:
+                small_p.append(f)
+                small_p_bytes += sz
+        if len(small_p) >= (1 if recluster else 2):
+            todo.append((part_dir, (small_p, small_p_bytes)))
+    if not todo:
+        return MutationStats(len(all_files), 0, 0)
 
-        def stage_one(item, created: list[str]):
-            part_dir, (small_p, small_p_bytes) = item
-            n_out = int(max(1, -(-small_p_bytes // target_bytes)))
-            df = spark.read.parquet(*small_p)
-            moved = df.count()
-            out = (
-                _recluster_df(df, n_out) if recluster else df.coalesce(n_out)
-            )
-            return (
-                part_dir,
-                small_p,
-                _stage(spark, path, out, created),
-                moved,
-            )
+    def stage_one(item, created: list[str]):
+        part_dir, (small_p, small_p_bytes) = item
+        n_out = int(max(1, -(-small_p_bytes // target_bytes)))
+        df = spark.read.parquet(*small_p)
+        moved = df.count()
+        out = _recluster_df(df, n_out) if recluster else df.coalesce(n_out)
+        return part_dir, small_p, _stage(spark, path, out, created), moved
 
-        # same stage-all-then-swap discipline as the DML verbs (and the
-        # same pooled staging-jobs + fs-metadata phases)
-        results = _run_partition_stages(spark, path, todo, stage_one)
-        _swap_staged(
-            spark, path, [(d, p, s) for d, p, s, _ in results], retain
-        )
-        spark.catalog.clearCache()
-        return MutationStats(
-            len(all_files),
-            sum(len(p) for _, p, _, _ in results),
-            sum(m for _, _, _, m in results),
-        )
-    all_files = list_data_files(spark, path)
-    small: list[str] = []
-    small_bytes = 0
-    for f in all_files:
-        sz = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(f)).getLen()
-        if recluster or sz < target_bytes * small_ratio:
-            small.append(f)
-            small_bytes += sz
-    files_total = len(all_files)
-    if len(small) < (1 if recluster else 2):
-        return MutationStats(files_total, 0, 0)
-    n_out = int(max(1, -(-small_bytes // target_bytes)))
-    df = spark.read.parquet(*small)
-    moved = df.count()
-    out = _recluster_df(df, n_out) if recluster else df.coalesce(n_out)
-    _swap_in(spark, path, small, out, retain=retain)
-    return MutationStats(files_total, len(small), moved)
+    # same stage-all-then-swap discipline as the DML verbs (and the same
+    # pooled staging-jobs + fs-metadata phases)
+    results = _run_partition_stages(spark, path, todo, stage_one)
+    _swap_staged(spark, path, [(d, p, s) for d, p, s, _ in results], retain)
+    spark.catalog.clearCache()
+    # layout-only: bytes move, no row value changes — ANALYZE stats stay
+    # exact, but the catalog's file-listing epoch must advance
+    _mark_files_changed(spark, path)
+    return MutationStats(
+        len(all_files),
+        sum(len(p) for _, p, _, _ in results),
+        sum(m for _, _, _, m in results),
+    )
 
 
 def _read_small_file(spark: SparkSession, path: str) -> bytes:
@@ -1564,7 +1490,7 @@ def repair_table(
     cannot tell: a death before the swap began leaves a staging dir whose
     data was never moved (the table is consistent; removing the dir just
     reclaims space), but a death MID-swap — after some renames of
-    ``_move_in``/``_move_in_partitioned``, before the originals were
+    ``_move_in``, before the originals were
     deleted — can leave duplicate rows (old + new files coexisting) or a
     partially-applied insert, and removing the staging remnant then
     makes the partial state permanent.  Before ``remove=True``, verify
@@ -1578,7 +1504,7 @@ def repair_table(
     legitimately owns a staging dir and the lock; this tool cannot tell a
     crash from a slow writer, which is exactly why removal is not
     automatic.  "No writer is alive" is NOT implied by the lock being
-    absent: OPTIMISTIC writers (``occ_update_where`` / ``occ_delete_where``)
+    absent: OPTIMISTIC writers (the ``occ_*`` verbs, COW and DV alike)
     stage their ``__cow_*`` dirs while holding NO lock by design, so an
     unlocked table can still have a live writer mid-stage.  Pass
     ``min_age_seconds`` (e.g. a few hours) to treat only staging dirs whose
@@ -1610,7 +1536,7 @@ def repair_table(
 
 # -- submodule re-exports (r12 split) -----------------------------------------
 #
-# The OCC commit loop, the textual DML front-end, snapshots/versioning,
+# The optimistic verbs, the textual DML front-end, snapshots/versioning,
 # and CHECK constraints moved to sibling modules (occ.py, dml_sql.py,
 # versioning.py, constraints.py) purely for module size.  Every name they
 # define stays importable from THIS module (the historical surface) via
@@ -1644,8 +1570,6 @@ _SUBMODULE_EXPORTS = {
     '_manifest': 'versioning',
     '_manifest_rel_files': 'versioning',
     '_manifest_state': 'versioning',
-    '_occ_mutate': 'occ',
-    '_occ_mutate_flat': 'occ',
     '_parse_commit_ts': 'versioning',
     '_parse_merge_on': 'dml_sql',
     '_read_pinned_files': 'versioning',

@@ -1,53 +1,30 @@
 """Optimistic-concurrency DML: stage without the lock, commit under it.
 
-Split out of ``mutate.py`` (r12) purely for module size; the commit
-protocol, names, and retry semantics are unchanged and every public name
-is still importable from ``operators.mutate``.
+The copy-on-write verbs in the optimistic mode of the one DML commit
+loop (:mod:`.commit`); every public name is still importable from
+``operators.mutate``.
 
 No reference analog: the reference PARSES UPDATE/DELETE and stops
 (``engine/src/parser.cpp:232-296``) and has no concurrency surface at
 all — its executor delegates to a single MySQL connection
 (``engine/src/plan_executor.cpp:53-63``).  This module is the
 lakehouse-standard optimistic commit loop (the Delta/Iceberg shape)
-built on the COW machinery in :mod:`.mutate`.
+over the COW writers in :mod:`.mutate`.
 """
 
 from __future__ import annotations
 
-import contextlib
+from pyspark.sql import Column, DataFrame, SparkSession
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
-
-from .mutate import (
-    MutationStats,
-    _WriterLockHeld,
-    _cond,
-    _default_retain,
-    _fs,
-    _group_by_dir,
-    _mark_mutated,
-    _merge_commit,
-    _merge_prepare,
-    _partition_cols,
-    _refresh_indexes,
-    _refuse_in_txn,
-    _run_partition_stages,
-    _stage,
-    _swap_staged,
-    _writer_lock,
-    affected_files,
-    is_partitioned,
-    list_data_files,
-)
-from .versioning import _autoversion
-from .constraints import _enforce_constraints, table_constraints
+from .mutate import MutationStats, _delete, _merge, _update
 
 # -- optimistic concurrency: stage without the lock, commit under it ----------
 #
-# The single-writer lock DETECTS a second writer and refuses.  These verbs
-# replace refuse with commit-or-retry, the lakehouse-standard optimistic
-# protocol (the Delta/Iceberg commit-loop shape):
+# The locked verbs DETECT a second writer and refuse.  These verbs replace
+# refuse with commit-or-retry, the lakehouse-standard optimistic protocol
+# (the Delta/Iceberg commit-loop shape) — the optimistic mode of the one
+# DML commit loop, :func:`.commit.run`, over the same writers the locked
+# verbs use:
 #
 #   1. READ   the table state and prune affected files    (no lock)
 #   2. STAGE  the COW rewrite — the expensive Spark jobs  (no lock)
@@ -57,21 +34,22 @@ from .constraints import _enforce_constraints, table_constraints
 #      any, discard the staging and RETRY from step 1 against the new
 #      committed state.
 #
-# Two writers on DISJOINT keys therefore both commit (their hit sets are
-# different files, so the second writer's validation passes even though
-# the table changed around it), and the expensive work overlaps — only the
-# metadata swap serializes.  Writers on OVERLAPPING files serialize by
-# retry: the loser discards its staging and re-evaluates its predicate
-# over the winner's committed rows — the serial-equivalent outcome, never
-# a lost update.  ``max_attempts`` exhausted raises
+# Two writers on DISJOINT files therefore both commit (their hit sets
+# differ, so the second writer's validation passes even though the table
+# changed around it), and the expensive work overlaps — only the metadata
+# swap serializes.  Writers on OVERLAPPING files serialize by retry: the
+# loser discards its staging and re-evaluates its predicate over the
+# winner's committed rows — the serial-equivalent outcome, never a lost
+# update.  ``max_attempts`` exhausted raises
 # :class:`ConcurrentWriteConflict`; the table is then unchanged by this
 # caller.
 #
 # Validation is by exact file-name set: COW part names are uuid-unique, so
-# name identity == content identity.  Scope: FLAT tables — the partitioned
-# verbs keep the serialized lock (their multi-directory swap would need a
-# manifest-level atomic commit to be safely optimistic, which the version
-# log's single manifest file doesn't give per-directory).
+# name identity == content identity.  Scope: flat AND hive-partitioned
+# tables — the validation unit is the file, so writers on disjoint
+# partitions never conflict, and the in-lock re-list covers only the
+# partition directories the attempt touched.  The merge-on-read verbs
+# (``mor.occ_dv_*``) run the same loop with a tombstone-batch writer.
 
 
 class ConcurrentWriteConflict(RuntimeError):
@@ -81,8 +59,8 @@ class ConcurrentWriteConflict(RuntimeError):
 
 def _uri_path(uri: str) -> str:
     """Decoded path component of a file URI — the normalization both
-    sides of the OCC validation pass through.  ``input_file_name()``
-    percent-encodes (``file:///a/my%20dir/f``) while Hadoop's
+    sides of the OCC validation pass through.  A scan's file names
+    percent-encode (``file:/a/my%20dir/f``) while Hadoop's
     ``Path.toString`` does not (``file:/a/my dir/f``); comparing raw
     strings would see every file as 'gone'."""
     from urllib.parse import unquote, urlparse
@@ -105,217 +83,6 @@ def _is_missing_file_error(e: Exception) -> bool:
     )
 
 
-def _occ_mutate(
-    spark: SparkSession,
-    path: str,
-    condition: str | Column,
-    build,
-    retain: bool | None,
-    max_attempts: int,
-    lock_wait_seconds: float = 30.0,
-    _after_stage=None,
-    enforce: bool = False,
-) -> MutationStats:
-    """Shared optimistic loop for the point verbs, flat AND
-    hive-partitioned.
-
-    ``build(sub, part_cols) -> (rewritten_df, rows_matched)`` over the
-    pruned files — ``rows_matched`` may be an int or a zero-arg callable
-    resolved AFTER the staging write (the verbs fold their matched-count
-    into the staged write via ``DataFrame.observe``, so each attempt costs
-    ONE Spark job, not a count plus a write); ``_after_stage(attempt)`` is
-    a test seam invoked between stage and commit (deterministic
-    interleaving of a concurrent writer).
-
-    Partitioned tables get PER-PARTITION conflict scope for free: the
-    validation unit is the file, and writers on disjoint partitions touch
-    disjoint files — both commit on their first attempt.  The in-lock
-    re-list is scoped to the TOUCHED partition directories only, so
-    validation costs O(files in touched partitions), never O(table) — on
-    a 10⁴-partition table a 2-partition update validates 2 dirs.
-    """
-    if max_attempts < 1:
-        raise ValueError("max_attempts must be >= 1")
-    # under an open transaction the writer lock is re-entrant for the
-    # owning thread, which would void the OCC validate-and-swap's
-    # exclusivity — and an optimistic verb inside a single-writer batch
-    # is a contradiction anyway
-    _refuse_in_txn(path, "optimistic DML")
-    cond = _cond(condition)
-    jvm, fs, jpath = _fs(spark, path)
-    partitioned = is_partitioned(spark, path)
-    last_conflict: list[str] = []
-    last_exc: Exception | None = None
-
-    def _reclaim(dirs):
-        for s in dirs:
-            with contextlib.suppress(Exception):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(s), True)
-
-    for attempt in range(1, max_attempts + 1):
-        # READ + STAGE run lock-free, so a concurrent commit can delete a
-        # file out from under the prune scan or the staging job — Spark
-        # surfaces that as FileNotFound/path-missing, which is a CONFLICT
-        # (retry against the new state), not an error
-        created: list[str] = []
-        try:
-            files = list_data_files(spark, path, recursive=partitioned)
-            hit = affected_files(spark, path, cond)
-            if not hit:
-                return MutationStats(len(files), 0, 0)
-            if partitioned:
-                part_cols = _partition_cols(spark, path, hit[0])
-
-                def stage_one(item: tuple[str, list[str]], cr: list[str]):
-                    part_dir, pfiles = item
-                    sub = spark.read.option("basePath", path).parquet(
-                        *pfiles
-                    )
-                    rewritten, m = build(sub, part_cols)
-                    return (
-                        part_dir,
-                        pfiles,
-                        _stage(spark, path, rewritten.drop(*part_cols), cr),
-                        m() if callable(m) else m,
-                    )
-
-                results = _run_partition_stages(
-                    spark, path, sorted(_group_by_dir(hit).items()),
-                    stage_one,
-                )
-                # _run_partition_stages reclaimed `created` itself on
-                # failure; on success adopt its staging dirs for the
-                # cleanup paths below
-                staged = [(d, p, s) for d, p, s, _ in results]
-                matched = sum(m for *_, m in results)
-            else:
-                sub = spark.read.parquet(*hit)
-                rewritten, matched = build(sub, [])
-                staged = [(path, hit, _stage(spark, path, rewritten, created))]
-                if callable(matched):
-                    matched = matched()
-        except Exception as e:
-            # a missing-file error is only a conflict if the TABLE still
-            # exists — a wrong/deleted table path matches the same Java
-            # classes and must surface as the real error, not as a
-            # misleading ConcurrentWriteConflict after max_attempts
-            # pointless retries
-            if not _is_missing_file_error(e) or not fs.exists(jpath):
-                raise
-            _reclaim(created)
-            last_conflict = ["<file vanished during read/stage>"]
-            last_exc = e
-            spark.catalog.clearCache()
-            continue
-        staging_dirs = [s for _, _, s in staged]
-        checked: dict[str, str] = {}
-        if enforce:
-            # CHECK constraints verify lock-free over this attempt's own
-            # staged output; a violation is terminal (the data is wrong,
-            # not the timing), never a conflict to retry
-            try:
-                checked = _enforce_constraints(spark, path, staging_dirs)
-            except BaseException:
-                _reclaim(staging_dirs)
-                raise
-        if _after_stage is not None:
-            try:
-                _after_stage(attempt)
-            except BaseException:
-                # the seam is a public kwarg: a raising callback must not
-                # leak the just-written staging dirs
-                _reclaim(staging_dirs)
-                raise
-        # COMMIT phase: bounded wait (optimistic competitors hold the
-        # lock only for their metadata swap; a long-running SERIALIZED
-        # verb can legitimately hold it far longer — that counts as a
-        # lost attempt, never as the 'stale lock, delete it' error),
-        # validate, swap
-        try:
-            lock = _writer_lock(
-                spark, path, wait_seconds=lock_wait_seconds
-            )
-            lock.__enter__()
-        except _WriterLockHeld as e:
-            _reclaim(staging_dirs)
-            last_conflict = [
-                f"<writer lock held past the {lock_wait_seconds:g}s wait>"
-            ]
-            last_exc = e
-            continue
-        except Exception:
-            # never acquired: staging is pure debris, reclaim it
-            _reclaim(staging_dirs)
-            raise
-        conflict: list[str] | None = None
-        try:
-            # compare DECODED PATH COMPONENTS, not raw URIs:
-            # input_file_name() (hit) emits percent-encoded file:///x
-            # while Hadoop Path.toString (the re-list) emits unencoded
-            # file:/x — raw-set difference would report a permanent
-            # phantom conflict.  Scope: only the directories this attempt
-            # read (the touched partitions; the table root when flat) — a
-            # concurrent writer elsewhere in the table is irrelevant.
-            current: set[str] = set()
-            dirs_gone = False
-            for part_dir in {d for d, _, _ in staged}:
-                if not fs.exists(jvm.org.apache.hadoop.fs.Path(part_dir)):
-                    # a concurrent DELETE emptied the whole partition dir
-                    dirs_gone = True
-                    continue
-                current |= {
-                    _uri_path(f)
-                    for f in list_data_files(spark, part_dir)
-                }
-            gone = sorted(f for f in hit if _uri_path(f) not in current)
-            if gone or dirs_gone:
-                conflict = gone or ["<partition dir removed>"]
-            else:
-                # a constraint registered BETWEEN this attempt's lock-free
-                # enforcement and the commit lock must still gate the
-                # swap (add_constraint serializes on this same lock, so
-                # inside it the set is stable) — rare, so the re-check
-                # job runs only when the set actually changed
-                if enforce and table_constraints(spark, path) != checked:
-                    try:
-                        _enforce_constraints(spark, path, staging_dirs)
-                    except BaseException:
-                        _reclaim(staging_dirs)
-                        raise
-                # retain decided INSIDE the lock: a snapshot/version
-                # created while this attempt staged (create_snapshot is
-                # serialized on this same lock) must flip the commit to
-                # retire, or the new manifest would pin deleted files
-                ret = _default_retain(spark, path, retain)
-                # a swap failure propagates and LEAVES the staging dirs
-                # (same repair_table story as the serialized verbs — some
-                # parts may already have moved in)
-                _swap_staged(spark, path, staged, ret)
-                _autoversion(spark, path)
-                _refresh_indexes(spark, path)
-                _mark_mutated(spark, path)
-        finally:
-            lock.__exit__(None, None, None)
-        spark.catalog.clearCache()
-        if conflict is None:
-            return MutationStats(len(files), len(hit), matched)
-        # validation lost: a concurrent commit replaced files this attempt
-        # read — its staged rewrite is stale.  Discard and re-read.
-        last_conflict = conflict
-        _reclaim(staging_dirs)
-    raise ConcurrentWriteConflict(
-        f"{max_attempts} optimistic attempt(s) on {path} each lost "
-        f"validation (latest conflict: {last_conflict[:3]}"
-        f"{'...' if len(last_conflict) > 3 else ''}); a concurrent writer "
-        "kept replacing files this mutation read (or held the lock) — "
-        "raise max_attempts or serialize these writers"
-    ) from last_exc
-
-
-#: Backwards-compatible alias (pre-r8 name, flat-only then).
-_occ_mutate_flat = _occ_mutate
-
-
 def occ_update_where(
     spark: SparkSession,
     path: str,
@@ -331,42 +98,10 @@ def occ_update_where(
     validate-and-swap; see the protocol comment above).  On a
     hive-partitioned table the conflict scope is the touched partitions —
     writers on disjoint partitions never conflict."""
-    cond = _cond(condition)
-
-    def build(sub: DataFrame, part_cols: list[str]):
-        part_here = [c for c in set_map if c in part_cols]
-        if part_here:
-            raise ValueError(
-                f"UPDATE SET on partition columns: {sorted(part_here)}; "
-                "changing a row's partition is a delete + insert"
-            )
-        unknown = set(set_map) - set(sub.columns)
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET on unknown columns: {sorted(unknown)}"
-            )
-        # matched-count rides the staging write as an observed metric —
-        # one job per attempt instead of count + write.  count(when(cond,
-        # 1)) matches where(cond).count() under three-valued logic: NULL
-        # and FALSE both fall to the (absent) otherwise → not counted.
-        obs = Observation()
-        observed = sub.observe(
-            obs, F.count(F.when(cond, F.lit(1))).alias("matched")
-        )
-        projected = [
-            F.when(F.coalesce(cond, F.lit(False)), _cond(set_map[c]))
-            .otherwise(F.col(c))
-            .cast(sub.schema[c].dataType)
-            .alias(c)
-            if c in set_map
-            else F.col(c)
-            for c in sub.columns
-        ]
-        return observed.select(*projected), lambda: obs.get["matched"]
-
-    return _occ_mutate(
-        spark, path, condition, build, retain, max_attempts,
-        lock_wait_seconds, _after_stage, enforce=True,
+    return _update(
+        spark, path, set_map, condition, retain, optimistic=True,
+        max_attempts=max_attempts, lock_wait_seconds=lock_wait_seconds,
+        _after_stage=_after_stage,
     )
 
 
@@ -382,23 +117,10 @@ def occ_delete_where(
     """Optimistic ``DELETE``: same three-valued-WHERE semantics as
     :func:`delete_where`, with the commit-or-retry protocol of
     :func:`occ_update_where`."""
-    cond = _cond(condition)
-
-    def build(sub: DataFrame, part_cols: list[str]):
-        # observe BEFORE the keep-filter so the metric sees every row;
-        # one job per attempt (see occ_update_where)
-        obs = Observation()
-        observed = sub.observe(
-            obs, F.count(F.when(cond, F.lit(1))).alias("matched")
-        )
-        return (
-            observed.where(~F.coalesce(cond, F.lit(False))),
-            lambda: obs.get["matched"],
-        )
-
-    return _occ_mutate(
-        spark, path, condition, build, retain, max_attempts,
-        lock_wait_seconds, _after_stage,
+    return _delete(
+        spark, path, condition, retain, optimistic=True,
+        max_attempts=max_attempts, lock_wait_seconds=lock_wait_seconds,
+        _after_stage=_after_stage,
     )
 
 
@@ -452,126 +174,10 @@ def occ_merge_into(
     Per-attempt cost is the same stage-everything-then-swap as
     :func:`merge_into`; only the metadata validate-and-swap serializes.
     """
-    if max_attempts < 1:
-        raise ValueError("max_attempts must be >= 1")
-    if isolation not in ("serializable", "write_serializable"):
-        raise ValueError(
-            f"isolation must be 'serializable' or 'write_serializable', "
-            f"got {isolation!r}"
-        )
-    _refuse_in_txn(path, "optimistic DML")  # see _occ_mutate
-    jvm, fs, jpath = _fs(spark, path)
-    # the duplicate-source-key guard is attempt-invariant (it reads only
-    # the source): run it once, not once per retry
-    if check_unique:
-        for k in on:
-            if k not in source.columns:
-                raise ValueError(f"merge key {k!r} missing from source")
-        dup = source.groupBy(*on).count().where(F.col("count") > 1).limit(1)
-        if dup.count():
-            raise ValueError(
-                "MERGE source has duplicate join keys; each target row "
-                "must match at most one source row (pass "
-                "check_unique=False only if uniqueness is guaranteed "
-                "upstream)"
-            )
-    last_conflict: list[str] = []
-    last_exc: Exception | None = None
-
-    def _reclaim(dirs):
-        for s in dirs:
-            with contextlib.suppress(Exception):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(s), True)
-
-    for attempt in range(1, max_attempts + 1):
-        try:
-            st = _merge_prepare(
-                spark, path, source, on, matched_set, insert_values,
-                False, matched_delete, insert_condition, max_pruned_files,
-                evolve_schema,
-            )
-        except Exception as e:
-            # same conflict-vs-error split as _occ_mutate: vanished files
-            # under a still-existing table are a concurrent commit
-            if not _is_missing_file_error(e) or not fs.exists(jpath):
-                raise
-            last_conflict = ["<file vanished during read/stage>"]
-            last_exc = e
-            spark.catalog.clearCache()
-            continue
-        if _after_stage is not None:
-            try:
-                _after_stage(attempt)
-            except BaseException:
-                _reclaim(st.staging_dirs())
-                raise
-        try:
-            lock = _writer_lock(spark, path, wait_seconds=lock_wait_seconds)
-            lock.__enter__()
-        except _WriterLockHeld as e:
-            _reclaim(st.staging_dirs())
-            last_conflict = [
-                f"<writer lock held past the {lock_wait_seconds:g}s wait>"
-            ]
-            last_exc = e
-            continue
-        except Exception:
-            _reclaim(st.staging_dirs())
-            raise
-        conflict: list[str] | None = None
-        try:
-            current = {
-                _uri_path(f)
-                for f in list_data_files(
-                    spark, path, recursive=st.partitioned
-                )
-            }
-            before = {_uri_path(f) for f in st.files}
-            if isolation == "serializable":
-                if current != before:
-                    conflict = sorted(
-                        current.symmetric_difference(before)
-                    )[:10]
-            else:
-                # write_serializable: only the files THIS merge rewrites
-                # are commit-blocking — a concurrent commit that removed
-                # one means our staged rewrite would clobber/resurrect
-                # its rows; anything else is the documented anomaly
-                clash = (before - current) & {
-                    _uri_path(f) for f in st.hit
-                }
-                if clash:
-                    conflict = sorted(clash)[:10]
-            if conflict is None:
-                # same in-lock constraint re-check as _occ_mutate: a set
-                # registered after _merge_prepare's lock-free enforcement
-                # must still gate this commit
-                if table_constraints(spark, path) != st.checked_constraints:
-                    try:
-                        _enforce_constraints(spark, path, st.staging_dirs())
-                    except BaseException:
-                        _reclaim(st.staging_dirs())
-                        raise
-                ret = _default_retain(spark, path, retain)
-                _merge_commit(spark, path, st, ret)
-                _autoversion(spark, path)
-                _refresh_indexes(spark, path)
-                _mark_mutated(spark, path)
-        finally:
-            lock.__exit__(None, None, None)
-        spark.catalog.clearCache()
-        if conflict is None:
-            return MutationStats(
-                len(st.files), len(st.hit), st.rows_matched,
-                st.rows_inserted,
-            )
-        last_conflict = conflict
-        _reclaim(st.staging_dirs())
-    raise ConcurrentWriteConflict(
-        f"{max_attempts} optimistic MERGE attempt(s) on {path} each lost "
-        f"validation (latest conflict: {last_conflict[:3]}"
-        f"{'...' if len(last_conflict) > 3 else ''}); a concurrent writer "
-        "kept changing the table's file list (or held the lock) — raise "
-        "max_attempts or serialize these writers"
-    ) from last_exc
-
+    return _merge(
+        spark, path, source, on, matched_set, insert_values, check_unique,
+        matched_delete, insert_condition, retain, max_pruned_files,
+        evolve_schema, isolation, optimistic=True,
+        max_attempts=max_attempts, lock_wait_seconds=lock_wait_seconds,
+        _after_stage=_after_stage,
+    )

@@ -67,10 +67,11 @@ def _create_snapshot_unlocked(
     spark: SparkSession, path: str, name: str, overwrite: bool = True
 ) -> int:
     """Manifest write for callers that already hold the writer lock
-    (``_autoversion`` runs inside ``_with_writer_lock``; the lock is not
-    reentrant).  ``overwrite=False`` is the version-commit tripwire: an
-    auto-version checkpoint must never silently replace a manifest that
-    a concurrent writer already committed under the same number."""
+    (``_autoversion`` runs inside the DML commit loop's writer lock; the
+    lock is not reentrant).  ``overwrite=False`` is the version-commit
+    tripwire: an auto-version checkpoint must never silently replace a
+    manifest that a concurrent writer already committed under the same
+    number."""
     if not re.fullmatch(r"[A-Za-z0-9._-]+", name):
         raise ValueError(f"snapshot name {name!r} must be filesystem-safe")
     data, n_files = _full_manifest_bytes(spark, path)
@@ -538,7 +539,7 @@ def _compose_next_manifest(
 
 
 def _autoversion(spark: SparkSession, path: str) -> None:
-    # caller (_with_writer_lock / an OCC commit) already holds the lock
+    # caller (the DML commit loop / compact) already holds the lock
     st = _txn_state(path)
     if st is not None:
         # verb ran inside a multi-statement transaction: defer — the

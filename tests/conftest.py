@@ -29,11 +29,13 @@ RUN_SLOW = bool(os.environ.get("RUN_SLOW"))
 
 #: The slow tier, pinned by MEASURED call duration (>= 4 s on an idle
 #: host, RUN_SLOW=1 --durations=0 full run logged in OPTIMIZATION_r15.md;
-#: 93 of 1064 tests, ~695 s of a 1416 s suite).  An explicit node-id
-#: list rather than scattered decorators: parametrized cases (the
+#: 93 of 1064 tests, ~695 s of a 1416 s suite; the two DML algebraic
+#: folds have since split into locked/optimistic cases).  An explicit
+#: node-id list rather than scattered decorators: parametrized cases (the
 #: inventory parity sweeps' heavy lifecycle queries) can be tiered
-#: individually, and the list is reviewable in one place.  A renamed or
-#: new test fails OPEN (runs by default).  test_fallback_ivfpq_probe_
+#: individually, and the list is reviewable in one place.  A new test
+#: fails OPEN (runs by default); a renamed or deleted listed test fails
+#: tests/test_slow_tier.py.  test_fallback_ivfpq_probe_
 #: equals_literal (12 s) deliberately stays in the default tier — it
 #: pins this round's assignment-fallback contract (VERDICT r14 #2).
 _SLOW_NODEIDS = frozenset({
@@ -118,8 +120,10 @@ _SLOW_NODEIDS = frozenset({
     "tests/test_plans.py::test_no_accidental_cartesian[sim_ivf_maintain_cycle]",
     "tests/test_plans.py::test_no_accidental_cartesian[sim_ivfpq_maintain_cycle]",
     "tests/test_plans.py::test_no_accidental_cartesian[sim_ivfpq_probe_indexed]",
-    "tests/test_properties.py::test_cow_dml_equals_algebraic_fold",
-    "tests/test_properties.py::test_mor_dml_equals_algebraic_fold",
+    "tests/test_properties.py::test_cow_dml_equals_algebraic_fold[locked]",
+    "tests/test_properties.py::test_cow_dml_equals_algebraic_fold[optimistic]",
+    "tests/test_properties.py::test_mor_dml_equals_algebraic_fold[locked]",
+    "tests/test_properties.py::test_mor_dml_equals_algebraic_fold[optimistic]",
     "tests/test_properties.py::test_mor_versioned_history_matches_model",
     "tests/test_properties.py::test_partitioned_merge_equals_flat_merge",
     "tests/test_properties.py::test_retention_vacuum_preserves_kept_versions",
@@ -133,15 +137,25 @@ _SLOW_NODEIDS = frozenset({
 })
 
 
+#: node ids this session collected (before any -k/-m deselection) —
+#: tests/test_slow_tier.py checks every _SLOW_NODEIDS entry against it
+COLLECTED_NODEIDS = pytest.StashKey[frozenset]()
+
+
+def _nodeid(item) -> str:
+    return item.nodeid.replace("::()::", "::")
+
+
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
+    config.stash[COLLECTED_NODEIDS] = frozenset(_nodeid(i) for i in items)
     if RUN_SLOW:
         return
     skip = pytest.mark.skip(
         reason="slow tier (driver-budget): set RUN_SLOW=1 to run"
     )
     for item in items:
-        nodeid = item.nodeid.replace("::()::", "::")
-        if "slow" in item.keywords or nodeid in _SLOW_NODEIDS:
+        if "slow" in item.keywords or _nodeid(item) in _SLOW_NODEIDS:
             item.add_marker(skip)
 
 

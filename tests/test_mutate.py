@@ -1997,28 +1997,126 @@ def test_constraint_on_evolved_column_backfills(spark, cow_table):
         )
 
 
-def test_occ_recheck_constraint_added_mid_flight(spark, cow_table):
+@pytest.mark.parametrize(
+    "verb",
+    [
+        "occ_update_where",
+        "occ_merge_into",
+        "occ_dv_update_where",
+        "occ_dv_merge_into",
+    ],
+)
+def test_occ_recheck_constraint_added_mid_flight(spark, cow_table, verb):
     """Review regression (r8): a constraint registered between an OCC
     writer's lock-free enforcement and its commit lock must still gate
-    the swap (the in-lock re-check)."""
+    the publish (the in-lock re-check) — for every value-changing
+    optimistic verb, copy-on-write and merge-on-read alike."""
+    from sql_query_optimizer_cpp_spark.operators import mor, occ
     from sql_query_optimizer_cpp_spark.operators.mutate import (
         ConstraintViolation,
         add_constraint,
-        occ_update_where,
     )
 
     def add_mid_flight(attempt):
-        # current table satisfies this; the staged rewrite does not
+        # current table satisfies this; the staged change does not
         add_constraint(spark, cow_table, "v_cap", "v < 1000")
 
+    fn = getattr(mor if "_dv_" in verb else occ, verb)
+    if verb.endswith("merge_into"):
+        src = spark.createDataFrame(
+            [(k, 100000.0) for k in range(10)], "k long, v double"
+        )
+        args = (src, ["k"])
+        kwargs = {"matched_set": {"v": "v + src_v"}}
+    else:
+        args, kwargs = ({"v": "v + 100000"}, "k < 10"), {}
     with pytest.raises(ConstraintViolation, match="v_cap"):
-        occ_update_where(
-            spark, cow_table, {"v": "v + 100000"}, "k < 10",
-            _after_stage=add_mid_flight,
+        fn(spark, cow_table, *args, _after_stage=add_mid_flight, **kwargs)
+    assert _cow_siblings(cow_table) == []
+    back = mor.read_mor(spark, cow_table)
+    assert back.where("v >= 1000").count() == 0
+    assert back.count() == 400
+
+
+def test_occ_dv_conflict_exhaustion_is_concurrent_write_conflict(
+    spark, cow_table
+):
+    """Optimistic DV verbs that run out of attempts raise the same
+    ConcurrentWriteConflict as the COW ones (a RuntimeError subclass, so
+    existing handlers keep working) and leave no staging behind."""
+    from sql_query_optimizer_cpp_spark.operators.mor import (
+        dv_delete_where,
+        occ_dv_delete_where,
+        read_mor,
+    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import (
+        ConcurrentWriteConflict,
+    )
+
+    def interleave(attempt):
+        # tombstone another row of the same file the loser is deleting from
+        dv_delete_where(spark, cow_table, "k = 50")
+
+    with pytest.raises(ConcurrentWriteConflict, match="optimistic DV DELETE"):
+        occ_dv_delete_where(
+            spark, cow_table, "k < 10", max_attempts=1,
+            _after_stage=interleave,
         )
     assert _cow_siblings(cow_table) == []
-    back = spark.read.parquet(cow_table)
-    assert back.where("v >= 1000").count() == 0
+    back = read_mor(spark, cow_table)
+    assert back.count() == 399  # only the winner's tombstone landed
+    assert back.where("k < 10").count() == 10
+
+
+@pytest.mark.parametrize(
+    "verb",
+    [
+        "update_where",
+        "occ_update_where",
+        "dv_update_where",
+        "occ_dv_update_where",
+    ],
+)
+def test_commit_keeps_unrelated_cached_frames(
+    spark, tmp_path, cow_table, verb
+):
+    """A commit refreshes cached frames over ITS table only: a frame
+    persisted over another table stays cached across locked and
+    optimistic, copy-on-write and merge-on-read commits."""
+    from sql_query_optimizer_cpp_spark.operators import mor, occ
+    from sql_query_optimizer_cpp_spark.operators import mutate as m
+
+    other = str(tmp_path / "other")
+    spark.range(50).write.parquet(other)
+    hot = spark.read.parquet(other).where("id % 2 = 0").persist()
+    try:
+        assert hot.count() == 25
+        module = mor if "dv_" in verb else occ if "occ_" in verb else m
+        st = getattr(module, verb)(spark, cow_table, {"v": "v + 1"}, "k < 10")
+        assert st == 10 or st.rows_matched == 10
+        level = hot.storageLevel
+        assert level.useMemory or level.useDisk
+        assert hot.count() == 25
+    finally:
+        hot.unpersist()
+
+
+def test_commit_refreshes_frames_over_the_mutated_table(spark, cow_table):
+    """A frame persisted over the mutated table counts the committed
+    rows after a COW delete (the path-scoped refresh re-caches it)."""
+    from sql_query_optimizer_cpp_spark.operators.mutate import (
+        occ_delete_where,
+    )
+
+    cached = spark.read.parquet(cow_table).persist()
+    try:
+        assert cached.count() == 400
+        delete_where(spark, cow_table, "k < 10")
+        assert cached.count() == 390
+        occ_delete_where(spark, cow_table, "k >= 390")
+        assert cached.count() == 380
+    finally:
+        cached.unpersist()
 
 
 def test_compact_zorder_refuses_strings_and_keeps_stats_fresh(

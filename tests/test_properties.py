@@ -227,16 +227,21 @@ def test_pround_tie_parity_vs_duckdb(spark, tmp_path):
     upd=st.integers(min_value=-10, max_value=60),
 )
 @settings(**_SETTINGS)
-def test_cow_dml_equals_algebraic_fold(spark, rows, lo, span, upd):
+@pytest.mark.parametrize("mode", ["locked", "optimistic"])
+def test_cow_dml_equals_algebraic_fold(spark, mode, rows, lo, span, upd):
     """Randomized COW DELETE+UPDATE vs the same mutation folded
     algebraically over the in-memory frame: NULL predicates must keep
     rows on DELETE and skip them on UPDATE, across arbitrary key ranges
-    (including empty matches, full-table matches, and all-NULL values)."""
+    (including empty matches, full-table matches, and all-NULL values)
+    — in both modes of the one commit loop."""
     import tempfile
 
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        delete_where,
-        update_where,
+    from sql_query_optimizer_cpp_spark.operators import mutate as m
+
+    delete_where, update_where = (
+        (m.delete_where, m.update_where)
+        if mode == "locked"
+        else (m.occ_delete_where, m.occ_update_where)
     )
 
     df = spark.createDataFrame(
@@ -407,20 +412,29 @@ def test_partitioned_merge_equals_flat_merge(spark, tmp_path_factory, rows, src)
     ratio=st.sampled_from([0.0, 0.5]),
 )
 @settings(**_SETTINGS)
-def test_mor_dml_equals_algebraic_fold(spark, rows, lo, span, upd, ratio):
+@pytest.mark.parametrize("mode", ["locked", "optimistic"])
+def test_mor_dml_equals_algebraic_fold(
+    spark, mode, rows, lo, span, upd, ratio
+):
     """Randomized merge-on-read DELETE+UPDATE (+ a materialize, full or
     ratio-gated) vs the same mutations folded algebraically: the MOR
     verbs must agree with COW semantics exactly — three-valued DELETE,
     NULL-skipping UPDATE, copies never re-tombstoned — across empty
     matches, full-table matches, all-NULL values, and overlapping
-    predicates, regardless of how much the materialize folded."""
+    predicates, regardless of how much the materialize folded — in both
+    modes of the one commit loop."""
     import tempfile
 
+    from sql_query_optimizer_cpp_spark.operators import mor
     from sql_query_optimizer_cpp_spark.operators.mor import (
-        dv_delete_where,
-        dv_update_where,
         materialize_deletes,
         read_mor,
+    )
+
+    dv_delete_where, dv_update_where = (
+        (mor.dv_delete_where, mor.dv_update_where)
+        if mode == "locked"
+        else (mor.occ_dv_delete_where, mor.occ_dv_update_where)
     )
 
     df = spark.createDataFrame(
