@@ -53,6 +53,7 @@ from .mutate import (
     _refuse_in_txn,
     _writer_lock,
 )
+from .mor import refresh_cached
 from .occ import ConcurrentWriteConflict, _is_missing_file_error
 from .versioning import _autoversion
 
@@ -166,7 +167,7 @@ def run(
             if st.changed:
                 _publish(spark, path, st, retain, created)
         if st.changed:
-            spark.catalog.refreshByPath(path)
+            refresh_cached(spark, path)
         return st.stats
 
     if max_attempts < 1:
@@ -193,7 +194,7 @@ def run(
             if not _is_missing_file_error(e) or not fs.exists(jpath):
                 raise
             last_conflict, last_exc = "<file vanished during read/stage>", e
-            spark.catalog.refreshByPath(path)
+            refresh_cached(spark, path)
             continue
         if not st.changed:
             return st.stats
@@ -222,7 +223,7 @@ def run(
         finally:
             lock.__exit__(None, None, None)
         if conflict is None:
-            spark.catalog.refreshByPath(path)
+            refresh_cached(spark, path)
             return st.stats
         # a concurrent commit changed what this attempt read: its staging
         # is stale — discard it and re-read

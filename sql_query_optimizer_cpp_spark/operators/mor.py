@@ -22,7 +22,8 @@ Design (all distributed, nothing per-row on the driver):
 - :func:`read_mor` = base scan LEFT ANTI JOIN the vector set on that
   identity.  The DV side is tiny relative to the table by design (it only
   grows until the next materialize), so AQE plans it as a broadcast anti
-  join — the base scan stays shuffle-free.
+  join — the base scan stays shuffle-free.  Every read of vector batches
+  passes :data:`DV_SCHEMA` instead of inferring it (a footer job).
 - ``dv_update_where`` = append the updated copies as new files, then
   deletion-vector the old positions (delete + insert, the MOR UPDATE).
   Matched rows are read from the verb's STARTING file list, never the
@@ -40,12 +41,19 @@ Design (all distributed, nothing per-row on the driver):
 
 Version-log unification (Delta-3.x shape): manifests pin the
 deletion-vector batch files alongside the data files
-(``mutate._manifest_state``), so on a versioned table every DV verb
+(``versioning.fold_manifests``), so on a versioned table every DV verb
 commits a first-class version — ``read_version`` applies the DV state
 as-of, ``read_changes`` emits tombstoned rows as deletes (and RESTORE's
 un-tombstones as inserts), ``restore_version`` renames DV batches through
 the same metadata-only plan, and ``vacuum`` honors manifest references to
-retired batches.  The one remaining guard is COW-side: the file-REWRITING
+retired batches.  Those reads build without per-file work that grows
+with history: one version-log listing and fold per call, one ``exists``
+(or one ``_retired/*`` glob) per pinned file, one data-schema job per
+call, and, for ``read_changes`` over differing DV batches, one bounded
+collect of the files they reference.  Commits and materialize refresh
+cached frames by path (:func:`refresh_cached`), never session-wide.
+
+The one remaining guard is COW-side: the file-REWRITING
 verbs still refuse a table with live vectors (``mutate._default_retain``)
 — a base-scan rewrite would resurrect MOR-deleted rows — so the path from
 MOR back to COW is :func:`materialize_deletes` (itself a commit).  Same
@@ -68,6 +76,7 @@ from .mutate import (
     _delete_files,
     _fs,
     _group_by_dir,
+    _hpath,
     _move_in,
     _partition_cols,
     _reclaim,
@@ -79,23 +88,36 @@ from .mutate import (
     _writer_lock,
     is_partitioned,
     list_data_files,
-    list_snapshots,
 )
 
 #: sidecar dir holding the vector parquet; underscore ⇒ invisible to
 #: base parquet scans and to list_data_files
 DV_DIR = "_dv"
+#: every deletion-vector batch file's schema; reads pass it instead of
+#: inferring it (inference is a footer job per read)
+DV_SCHEMA = "src_file string, row_idx long"
 
 
 def _dv_path(path: str) -> str:
     return f"{path.rstrip('/')}/{DV_DIR}"
 
 
+def refresh_cached(spark: SparkSession, path: str) -> None:
+    """Path-scoped cache refresh after a commit on ``path``: frames
+    persisted over the table re-list their files, every other cached
+    frame stays cached.  ``refreshByPath`` refreshes, in each cached
+    plan, only the first relation under the path it meets, so the
+    ``_dv/`` scan of a :func:`read_mor` frame is refreshed by its own
+    path."""
+    spark.catalog.refreshByPath(path)
+    spark.catalog.refreshByPath(_dv_path(path))
+
+
 def has_deletion_vectors(spark: SparkSession, path: str) -> bool:
     """True when the table carries live (un-materialized) deletion
     vectors — i.e. base reads overcount and :func:`read_mor` is required."""
-    jvm, fs, _ = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(_dv_path(path))
+    _, fs, _ = _fs(spark, path)
+    p = _hpath(spark, _dv_path(path))
     if not fs.exists(p):
         return False
     return any(
@@ -109,8 +131,8 @@ def list_dv_files(spark: SparkSession, path: str) -> list[str]:
     the unit the version manifests pin (batches are immutable once
     written: appends create new files, a prune writes a new batch and
     retires the old ones)."""
-    jvm, fs, _ = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(_dv_path(path))
+    _, fs, _ = _fs(spark, path)
+    p = _hpath(spark, _dv_path(path))
     if not fs.exists(p):
         return []
     return sorted(
@@ -122,15 +144,19 @@ def list_dv_files(spark: SparkSession, path: str) -> list[str]:
 
 def dv_count(spark: SparkSession, path: str) -> int:
     """Live tombstone count (parquet-footer metadata job, no data I/O)."""
-    if not has_deletion_vectors(spark, path):
-        return 0
-    return spark.read.parquet(_dv_path(path)).count()
+    dv = _read_dv(spark, path)
+    return 0 if dv is None else dv.count()
+
+
+def _read_dv_files(spark: SparkSession, files) -> DataFrame:
+    """Deletion-vector batch files (or the ``_dv/`` dir) as one frame."""
+    return spark.read.schema(DV_SCHEMA).parquet(*files)
 
 
 def _read_dv(spark: SparkSession, path: str) -> DataFrame | None:
     if not has_deletion_vectors(spark, path):
         return None
-    return spark.read.parquet(_dv_path(path)).select("src_file", "row_idx")
+    return _read_dv_files(spark, [_dv_path(path)])
 
 
 def _qualified_root(spark: SparkSession, path: str) -> str:
@@ -158,17 +184,11 @@ def attach_identity(df: DataFrame, qualified_base: str) -> DataFrame:
             "working columns; rename them before using the MOR verbs or "
             "time-traveling a deletion-vector table"
         )
-    return (
-        df.select(
-            "*",
-            F.col("_metadata.file_path").alias("__fp"),
-            F.col("_metadata.row_index").alias("__row_idx"),
-        )
-        .withColumn(
-            "__src_file",
-            F.expr(f"substring(__fp, {len(qualified_base) + 2})"),
-        )
-        .drop("__fp")
+    return df.selectExpr(
+        "*",
+        "_metadata.row_index AS __row_idx",
+        f"substring(_metadata.file_path, {len(qualified_base) + 2}) "
+        "AS __src_file",
     )
 
 
@@ -216,7 +236,7 @@ def _dv_snapshot_conflict(
     commit retired/rewrote a file this writer's tombstones reference, or
     added/removed a deletion-vector batch touching one of those files.
     ``None`` = the snapshot still holds and the batch may move in."""
-    jvm, fs, _ = _fs(spark, path)
+    _, fs, _ = _fs(spark, path)
     live_rel = {
         _rel_to_table(path, f)
         for f in list_data_files(spark, path, recursive=True)
@@ -233,13 +253,13 @@ def _dv_snapshot_conflict(
     missing_b = [
         b
         for b in changed_batches
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(b))
+        if not fs.exists(_hpath(spark, b))
     ]
     if missing_b:
         return "a concurrent commit replaced deletion-vector batches"
     if changed_batches and touched:
         overlap = (
-            spark.read.parquet(*changed_batches)
+            _read_dv_files(spark, changed_batches)
             .where(F.col("src_file").isin(list(touched)))
             .limit(1)
             .count()
@@ -258,13 +278,13 @@ def _move_dv_parts(spark: SparkSession, path: str, staging: str) -> None:
     mid-loop must not leave a PARTIAL batch visible to read_mor while the
     verb reports failure — retract the parts already moved in before
     re-raising."""
-    jvm, fs, _ = _fs(spark, path)
+    _, fs, _ = _fs(spark, path)
     dv_root = _dv_path(path)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(dv_root))
+    fs.mkdirs(_hpath(spark, dv_root))
     moved: list = []
     for part in list_data_files(spark, staging):
-        src_p = jvm.org.apache.hadoop.fs.Path(part)
-        dest = jvm.org.apache.hadoop.fs.Path(dv_root, src_p.getName())
+        src_p = _hpath(spark, part)
+        dest = _hpath(spark, dv_root, src_p.getName())
         if not fs.rename(src_p, dest):
             for d in moved:
                 with contextlib.suppress(Exception):
@@ -274,7 +294,7 @@ def _move_dv_parts(spark: SparkSession, path: str, staging: str) -> None:
                 "(batch retracted, nothing committed)"
             )
         moved.append(dest)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    fs.delete(_hpath(spark, staging), True)
 
 
 def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
@@ -315,11 +335,7 @@ def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
             c for c in sub.columns if c not in ("__src_file", "__row_idx")
         ]
         dv0 = list_dv_files(spark, path)
-        dv = (
-            spark.read.parquet(*dv0).select("src_file", "row_idx")
-            if dv0
-            else None
-        )
+        dv = _read_dv_files(spark, dv0) if dv0 else None
         live = _live(sub if cond is None else sub.where(cond), dv)
         tombstones, copies, inserts = legs(sub, live, data_cols, part_cols)
         dv_staging = f"{path.rstrip('/')}__cow_dv_{uuid.uuid4().hex}"
@@ -328,7 +344,8 @@ def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
             F.col("__src_file").cast("string").alias("src_file"),
             F.col("__row_idx").cast("long").alias("row_idx"),
         ).write.parquet(dv_staging)
-        n_dead = spark.read.parquet(dv_staging).count()  # footers only
+        staged_dv = _read_dv_files(spark, [dv_staging])
+        n_dead = staged_dv.count()  # footers only
         if not n_dead and inserts is None:
             return Staged(MutationStats(len(files0), 0, 0))
         # the batch's file set, which only validation reads — bounded by
@@ -336,10 +353,7 @@ def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
         touched = (
             {
                 r["src_file"]
-                for r in spark.read.parquet(dv_staging)
-                .select("src_file")
-                .distinct()
-                .collect()
+                for r in staged_dv.select("src_file").distinct().collect()
             }
             if optimistic and n_dead
             else set()
@@ -776,13 +790,15 @@ def read_mor(spark: SparkSession, path: str) -> DataFrame:
     a table where :func:`has_deletion_vectors` is true.  One broadcast
     anti join over the base scan (AQE sizes the DV side; it is small by
     design until :func:`materialize_deletes` resets it); no shuffle of
-    the base data."""
+    the base data.  Both sides read their DIRECTORIES (the table root,
+    whose underscore dirs discovery skips, and ``_dv/``), so a frame
+    persisted over this read re-lists both when a commit refreshes the
+    table's path."""
     dv = _read_dv(spark, path)
+    df = spark.read.option("mergeSchema", "true").parquet(path)
     if dv is None:
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    files = list_data_files(spark, path, recursive=True)
-    base_path = path if is_partitioned(spark, path) else None
-    df = _with_identity(spark, path, files, base_path)
+        return df
+    df = attach_identity(df, _qualified_root(spark, path))
     return _live(df, dv).drop("__src_file", "__row_idx")
 
 
@@ -826,7 +842,7 @@ def materialize_deletes(
     doesn't care about)."""
     with _writer_lock(spark, path):
         dv = _read_dv(spark, path)
-        jvm, fs, _ = _fs(spark, path)
+        _, fs, _ = _fs(spark, path)
         if dv is None:
             return MutationStats(
                 len(list_data_files(spark, path, recursive=True)), 0, 0
@@ -834,6 +850,8 @@ def materialize_deletes(
         # versioned / snapshotted tables retire superseded files (data
         # AND deletion-vector batches) instead of deleting — older
         # manifests pin them, the same auto-retain rule as the COW verbs
+        from .versioning import _autoversion, list_snapshots
+
         retain = bool(list_snapshots(spark, path))
         dead_rel = {
             r["src_file"]
@@ -883,7 +901,7 @@ def materialize_deletes(
         except BaseException:
             for s in created:
                 with contextlib.suppress(Exception):
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(s), True)
+                    fs.delete(_hpath(spark, s), True)
             raise
         removed = 0
         for dir_, fl, staging in staged:
@@ -897,7 +915,7 @@ def materialize_deletes(
         # already replaced (stale store from a crashed run): fall through
         # to the delete branch and converge
         survivors = dv.where(~F.col("src_file").isin(list(dead_rel)))
-        dv_root = jvm.org.apache.hadoop.fs.Path(_dv_path(path))
+        dv_root = _hpath(spark, _dv_path(path))
         old_dv_files = [
             st.getPath().toString()
             for st in fs.listStatus(dv_root)
@@ -929,9 +947,7 @@ def materialize_deletes(
         else:
             fs.delete(dv_root, True)
         if retain:
-            from .versioning import _autoversion
-
             _autoversion(spark, path)
         _refresh_indexes(spark, path)
-        spark.catalog.clearCache()
+        refresh_cached(spark, path)
         return MutationStats(len(files), removed, 0)

@@ -64,6 +64,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -90,13 +91,24 @@ def _cond(condition: str | Column) -> Column:
     return F.expr(condition) if isinstance(condition, str) else condition
 
 
+def _jclass(spark: SparkSession, name: str):
+    """The JVM class ``name`` (fully qualified).  Resolving it through
+    ``spark._jvm.a.b.C`` costs one py4j round trip per name segment;
+    this handle costs none until it is called."""
+    return JavaClass(name, spark._jvm._gateway_client)  # noqa: SLF001
+
+
+def _hpath(spark: SparkSession, *args):
+    """A Hadoop ``Path`` — one py4j round trip (the constructor)."""
+    return _jclass(spark, "org.apache.hadoop.fs.Path")(*args)
+
+
 def _fs(spark: SparkSession, path: str):
     """Hadoop FileSystem + Path for ``path`` — the cluster-portable file
     API (local fs here; HDFS/S3A on a real cluster with zero code change)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    jpath = _hpath(spark, path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    return jvm, fs, jpath
+    return spark._jvm, fs, jpath
 
 
 def list_data_files(
@@ -112,19 +124,20 @@ def list_data_files(
     jvm, fs, jpath = _fs(spark, path)
     out = []
     for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and "=" in name:
+        p = st.getPath()
+        name = p.getName()
+        if st.isDirectory():
+            if "=" not in name:
+                continue
             if not recursive:
                 raise NotImplementedError(
                     "copy-on-write over a hive-partitioned directory needs "
                     f"the per-partition path (found partition dir {name!r}); "
                     "this verb does not implement it"
                 )
-            out.extend(
-                list_data_files(spark, st.getPath().toString(), recursive=True)
-            )
-        if st.isFile() and not name.startswith(("_", ".")):
-            out.append(st.getPath().toString())
+            out.extend(list_data_files(spark, p.toString(), recursive=True))
+        elif not name.startswith(("_", ".")):
+            out.append(p.toString())
     return sorted(out)
 
 
@@ -1404,10 +1417,12 @@ def compact(
 
 
 def _read_small_file(spark: SparkSession, path: str) -> bytes:
-    jvm, fs, jpath = _fs(spark, path)
+    _, fs, jpath = _fs(spark, path)
     stream = fs.open(jpath)
     try:
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        return bytes(
+            _jclass(spark, "org.apache.commons.io.IOUtils").toByteArray(stream)
+        )
     finally:
         stream.close()
 
@@ -1567,7 +1582,6 @@ _SUBMODULE_EXPORTS = {
     '_find_top_where': 'dml_sql',
     '_full_manifest_bytes': 'versioning',
     '_is_missing_file_error': 'occ',
-    '_manifest': 'versioning',
     '_manifest_rel_files': 'versioning',
     '_manifest_state': 'versioning',
     '_parse_commit_ts': 'versioning',

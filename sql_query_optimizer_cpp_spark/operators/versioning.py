@@ -7,17 +7,29 @@ still importable from ``operators.mutate``.
 
 from __future__ import annotations
 
+import functools
 import json
 import re
+from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from .mor import (
+    _live,
+    _qualified_root,
+    _read_dv_files,
+    attach_identity,
+    list_dv_files,
+    refresh_cached,
+)
 from .mutate import (
     MutationStats,
     RETIRED_DIR,
     SNAPSHOT_DIR,
     _fs,
+    _hpath,
     _mark_mutated,
     _read_small_file,
     _refresh_indexes,
@@ -89,8 +101,6 @@ def _full_manifest_bytes(spark: SparkSession, path: str) -> tuple[bytes, int]:
     state — the compose half of :func:`_create_snapshot_unlocked`, shared
     with the multi-table two-phase commit (which writes the bytes to a
     PREPARE name first)."""
-    import json
-
     files = [
         _rel_to_table(path, f)
         for f in list_data_files(spark, path, recursive=True)
@@ -99,8 +109,6 @@ def _full_manifest_bytes(spark: SparkSession, path: str) -> tuple[bytes, int]:
     # state alongside the data files (batch files under _dv/ are
     # immutable once written, so the name list IS the state) — time
     # travel / CDC / RESTORE over merge-on-read tables read both lists
-    from .mor import list_dv_files
-
     dv_files = [
         _rel_to_table(path, f) for f in list_dv_files(spark, path)
     ]
@@ -120,76 +128,159 @@ def _full_manifest_bytes(spark: SparkSession, path: str) -> tuple[bytes, int]:
 
 
 def list_snapshots(spark: SparkSession, path: str) -> list[str]:
-    jvm, fs, _ = _fs(spark, path)
-    snap_dir = jvm.org.apache.hadoop.fs.Path(
-        f"{path.rstrip('/')}/{SNAPSHOT_DIR}"
-    )
+    _, fs, _ = _fs(spark, path)
+    snap_dir = _hpath(spark, f"{path.rstrip('/')}/{SNAPSHOT_DIR}")
     if not fs.exists(snap_dir):
         return []
-    return sorted(
-        st.getPath().getName()[: -len(".json")]
-        for st in fs.listStatus(snap_dir)
-        if st.getPath().getName().endswith(".json")
-    )
+    names = (st.getPath().getName() for st in fs.listStatus(snap_dir))
+    return sorted(n[: -len(".json")] for n in names if n.endswith(".json"))
 
 
-def _manifest(spark: SparkSession, path: str, name: str) -> dict:
-    import json
+def fold_manifests(
+    manifests: Iterable[dict],
+) -> Iterator[tuple[frozenset[str], frozenset[str]]]:
+    """Fold version manifests forward, oldest first, yielding the
+    ``(data files, deletion-vector files)`` state — table-relative — after
+    each one.  A full manifest (``files`` / ``dv_files``) resets the
+    state; a DELTA manifest (``add``/``remove`` + ``dv_add``/
+    ``dv_remove``, written by :func:`_autoversion` between checkpoints)
+    applies its removes, then its adds.  The ONE fold of the version log:
+    time travel, CDC, RESTORE, vacuum, the commit path and the
+    ``cow_changes`` source all reconstruct versions through it."""
+    files: frozenset[str] | None = None
+    dv: frozenset[str] = frozenset()
+    for d in manifests:
+        if "files" in d:
+            files, dv = frozenset(d["files"]), frozenset(d.get("dv_files", []))
+        elif files is None:
+            raise FileNotFoundError(
+                "a version's delta chain has no base checkpoint — its "
+                "predecessors were removed without compaction (use "
+                "drop_versions_before, which checkpoints the oldest "
+                "survivor, never raw drop_snapshot on version manifests)"
+            )
+        else:
+            files = (files - set(d.get("remove", []))) | set(d.get("add", []))
+            dv = (dv - set(d.get("dv_remove", []))) | set(d.get("dv_add", []))
+        yield files, dv
 
-    manifest = f"{path.rstrip('/')}/{SNAPSHOT_DIR}/{name}.json"
-    jvm, fs, _ = _fs(spark, path)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(manifest)):
-        raise FileNotFoundError(
-            f"no snapshot named {name!r} (have: {list_snapshots(spark, path)})"
+
+def version_chain(
+    versions: list[int], v: int, read: Callable[[int], dict]
+) -> list[tuple[int, dict]]:
+    """``(version, manifest)`` from the nearest full checkpoint at or
+    before ``v`` up to ``v``, ascending — at most ``CHECKPOINT_INTERVAL``
+    manifests on a log :func:`_autoversion` wrote.  With no checkpoint
+    below ``v`` the chain starts at the oldest version, a delta, which
+    :func:`fold_manifests` refuses."""
+    chain = []
+    for pv in reversed([x for x in versions if x <= v]):
+        d = read(pv)
+        chain.append((pv, d))
+        if "files" in d:
+            break
+    chain.reverse()
+    return chain
+
+
+def fold_states(
+    versions: list[int], wanted: Iterable[int], read: Callable[[int], dict]
+) -> dict[int, tuple[frozenset[str], frozenset[str]]]:
+    """Every ``wanted`` version's ``(data files, deletion-vector files)``,
+    reading each manifest at most once: versions sharing a checkpoint
+    chain come out of one fold (a range's low end is usually a stop on
+    its high end's chain)."""
+    want = set(wanted)
+    out: dict[int, tuple[frozenset[str], frozenset[str]]] = {}
+    for v in sorted(want, reverse=True):
+        if v in out:
+            continue
+        chain = version_chain(versions, v, read)
+        for (cv, _), state in zip(chain, fold_manifests(d for _, d in chain)):
+            if cv in want:
+                out[cv] = state
+    return out
+
+
+def _vname(v: int) -> str:
+    return f"v{v:08d}"
+
+
+class _VersionLog:
+    """A table's ``_snapshots/`` as one call sees it: listed once, each
+    manifest read at most once."""
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.spark, self.path = spark, path
+        self.names = list_snapshots(spark, path)
+        self.versions = sorted(
+            int(m.group(1)) for m in map(_VERSION_RE.match, self.names) if m
         )
-    return json.loads(_read_small_file(spark, manifest))
+        self._docs: dict[str, dict] = {}
+
+    def manifest(self, name: str) -> dict:
+        if name not in self._docs:
+            if name not in self.names:
+                raise FileNotFoundError(
+                    f"no snapshot named {name!r} (have: {self.names})"
+                )
+            self._docs[name] = json.loads(
+                _read_small_file(
+                    self.spark,
+                    f"{self.path.rstrip('/')}/{SNAPSHOT_DIR}/{name}.json",
+                )
+            )
+        return self._docs[name]
+
+    def version_manifest(self, v: int) -> dict:
+        return self.manifest(_vname(v))
+
+    def require(self, *versions: int) -> None:
+        """Refuse a table without a version log, or a version not in it."""
+        vs = self.versions
+        if not vs:
+            raise ValueError(
+                f"versioning not enabled on {self.path}; call "
+                "enable_versioning first"
+            )
+        for v in versions:
+            if v not in vs:
+                raise FileNotFoundError(
+                    f"no version {v} for {self.path} (have {vs[0]}..{vs[-1]}, "
+                    f"{len(vs)} committed)"
+                )
+
+    def states(self, *versions: int) -> dict[int, tuple[list[str], list[str]]]:
+        """Sorted ``(data files, deletion-vector files)`` per version."""
+        return {
+            v: (sorted(f), sorted(dv))
+            for v, (f, dv) in fold_states(
+                self.versions, versions, self.version_manifest
+            ).items()
+        }
+
+    def state(self, name: str) -> tuple[list[str], list[str]]:
+        """A snapshot's ``(data files, deletion-vector files)``: a named
+        snapshot is always a full manifest; a numbered version folds its
+        delta chain (see :func:`fold_manifests`)."""
+        m = _VERSION_RE.match(name)
+        if m and name in self.names:
+            return self.states(int(m.group(1)))[int(m.group(1))]
+        d = self.manifest(name)
+        if "files" not in d:
+            raise ValueError(
+                f"manifest {name!r} has no file list and is not a numbered "
+                "version — corrupt snapshot"
+            )
+        return sorted(d["files"]), sorted(d.get("dv_files", []))
 
 
 def _manifest_state(
     spark: SparkSession, path: str, name: str
 ) -> tuple[list[str], list[str]]:
     """``(data files, deletion-vector files)`` a manifest pins, both
-    table-relative.  A full manifest carries them outright (``files`` /
-    ``dv_files``); a DELTA version manifest (``add``/``remove`` +
-    ``dv_add``/``dv_remove``, written by :func:`_autoversion` between
-    checkpoints) reconstructs by walking back to the nearest full
-    checkpoint and folding the deltas forward — commit cost stays
-    O(touched files), read cost is bounded by ``CHECKPOINT_INTERVAL``
-    small-file reads.  One walk reconstructs both lists."""
-    d = _manifest(spark, path, name)
-    if "files" in d:
-        return sorted(d["files"]), sorted(d.get("dv_files", []))
-    m = _VERSION_RE.match(name)
-    if not m:
-        raise ValueError(
-            f"manifest {name!r} has no file list and is not a numbered "
-            "version — corrupt snapshot"
-        )
-    v = int(m.group(1))
-    vs = table_versions(spark, path)
-    chain = [d]
-    base: set[str] | None = None
-    base_dv: set[str] = set()
-    for pv in reversed([x for x in vs if x < v]):
-        pd = _manifest(spark, path, f"v{pv:08d}")
-        if "files" in pd:
-            base = set(pd["files"])
-            base_dv = set(pd.get("dv_files", []))
-            break
-        chain.append(pd)
-    if base is None:
-        raise FileNotFoundError(
-            f"version {v}'s delta chain has no base checkpoint — its "
-            "predecessors were removed without compaction (use "
-            "drop_versions_before, which checkpoints the oldest survivor, "
-            "never raw drop_snapshot on version manifests)"
-        )
-    for dd in reversed(chain):
-        base -= set(dd.get("remove", []))
-        base |= set(dd.get("add", []))
-        base_dv -= set(dd.get("dv_remove", []))
-        base_dv |= set(dd.get("dv_add", []))
-    return sorted(base), sorted(base_dv)
+    table-relative and sorted (see :meth:`_VersionLog.state`)."""
+    return _VersionLog(spark, path).state(name)
 
 
 def _manifest_rel_files(spark: SparkSession, path: str, name: str) -> list[str]:
@@ -198,37 +289,33 @@ def _manifest_rel_files(spark: SparkSession, path: str, name: str) -> list[str]:
     return _manifest_state(spark, path, name)[0]
 
 
+def _glob_escape(s: str) -> str:
+    """``s`` with Hadoop glob metacharacters escaped to match literally."""
+    return re.sub(r"([\\*?\[\]{}])", r"\\\1", s)
+
+
 def _resolve_pinned_files(
     spark: SparkSession, path: str, files: list[str], what: str
 ) -> list[str]:
     """Resolve a manifest's absolute file list against where each file
     lives NOW — the table root, or (if a later DML retired it) some
     ``_retired/<batch>/`` dir, which preserves the table-relative path.
-    Raises a clear error naming ``what`` if any file was vacuumed."""
-    jvm, fs, _ = _fs(spark, path)
+    A live file costs one ``exists``; a retired one one
+    ``globStatus(<root>/_retired/*/<rel>)``, whatever the number of
+    retire batches.  Raises a clear error naming ``what`` if any file
+    was vacuumed."""
+    _, fs, _ = _fs(spark, path)
     root = path.rstrip("/")
     missing = []
     resolved = []
     for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        if fs.exists(p):
+        if fs.exists(_hpath(spark, f)):
             resolved.append(f)
             continue
-        # the file may have been retired since the manifest was written;
-        # retirement preserves the table-relative path under each batch
-        rel = _rel_to_table(path, f)
-        retired_root = jvm.org.apache.hadoop.fs.Path(f"{root}/{RETIRED_DIR}")
-        found = None
-        if fs.exists(retired_root):
-            for batch in fs.listStatus(retired_root):
-                cand = jvm.org.apache.hadoop.fs.Path(
-                    batch.getPath(), rel
-                )
-                if fs.exists(cand):
-                    found = cand.toString()
-                    break
-        if found:
-            resolved.append(found)
+        rel = _glob_escape(_rel_to_table(path, f))
+        hits = fs.globStatus(_hpath(spark, f"{root}/{RETIRED_DIR}/*/{rel}"))
+        if hits is not None and len(hits):
+            resolved.append(hits[0].getPath().toString())
         else:
             missing.append(f)
     if missing:
@@ -242,56 +329,101 @@ def _resolve_pinned_files(
     return resolved
 
 
+def _data_schema(spark: SparkSession, files: list[str]) -> StructType:
+    """The merged footer schema of ``files`` — one job, whatever the
+    number of base dirs they sit under.  Data columns only:
+    ``recursiveFileLookup`` turns partition discovery off, and each
+    base's read in :func:`_read_pinned_files` adds the partition columns
+    back from its own ``key=value`` segments."""
+    return (
+        spark.read.option("mergeSchema", "true")
+        .option("recursiveFileLookup", "true")
+        .parquet(*files)
+        .schema
+    )
+
+
 def _read_pinned_files(
     spark: SparkSession,
     path: str,
     resolved: list[str],
     with_identity: bool = False,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Read an explicit (already-resolved) file list as one DataFrame,
     grouping by base dir (table root vs each ``_retired`` batch) so
     hive-style partition columns reconstruct from the key=value path
     segments under EACH base — one basePath cannot span both locations.
-    ``mergeSchema`` + allow-missing union keep evolved tables readable:
-    files written before an ``evolve_schema`` MERGE NULL-backfill the
-    newer columns.  ``with_identity`` attaches the MOR row identity
-    (``__src_file`` original-table-relative, ``__row_idx``) so callers
-    can apply a version's pinned deletion vectors."""
+    ``schema`` (from :func:`_data_schema`; inferred here when omitted
+    and there are several bases) is the data schema every base reads
+    with, so no base runs its own footer job; files written before an
+    ``evolve_schema`` MERGE NULL-backfill the newer columns.
+    ``with_identity`` attaches the MOR row identity (``__src_file``
+    original-table-relative, ``__row_idx``) so callers can apply a
+    version's pinned deletion vectors."""
+    root = path.rstrip("/")
     by_base: dict[str, list[str]] = {}
     for f in resolved:
-        rel = _rel_to_table(path, f)
-        base = f[: len(f) - len(rel) - 1]
-        if RETIRED_DIR in rel.split("/"):
-            # retired file: base = .../_retired/<batch>
-            parts = rel.split("/")
-            i = parts.index(RETIRED_DIR)
-            base = f"{base}/{'/'.join(parts[: i + 2])}"
-        by_base.setdefault(base, []).append(f)
-    jvm, fs, _ = _fs(spark, path)
+        parts = _rel_to_table(path, f).split("/")
+        # a retired file's base is .../_retired/<batch>, not the root
+        base_rel = "/".join(parts[:2]) if parts[0] == RETIRED_DIR else ""
+        by_base.setdefault(base_rel, []).append(f)
+    if schema is None and len(by_base) > 1:
+        schema = _data_schema(spark, resolved)
+    qroot = _qualified_root(spark, path) if with_identity else ""
     frames = []
-    for base, fl in sorted(by_base.items()):
-        df = (
-            spark.read.option("basePath", base)
-            .option("mergeSchema", "true")
-            .parquet(*fl)
-        )
+    for base_rel, fl in sorted(by_base.items()):
+        suffix = f"/{base_rel}" if base_rel else ""
+        reader = spark.read.option("basePath", root + suffix)
+        if schema is None:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            reader = reader.schema(schema)
+        df = reader.parquet(*fl)
         if with_identity:
             # the MOR row identity, spelled in ORIGINAL table-relative
             # terms: retirement preserves the relative path under each
             # batch dir, so "path under this group's base" IS the rel
-            # path the deletion vectors were keyed on (shared recipe:
-            # operators.mor.attach_identity)
-            from .mor import attach_identity
-
-            qbase = fs.makeQualified(
-                jvm.org.apache.hadoop.fs.Path(base)
-            ).toString()
-            df = attach_identity(df, qbase)
+            # path the deletion vectors were keyed on
+            df = attach_identity(df, qroot + suffix)
         frames.append(df)
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr, allowMissingColumns=True)
-    return out
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
+
+
+def _read_state(
+    spark: SparkSession,
+    path: str,
+    rel_files: list[str],
+    dv_rel: list[str],
+    what: str,
+) -> DataFrame:
+    """The rows of one pinned state: its data files minus its deletion
+    vectors."""
+    root = path.rstrip("/")
+    resolved = _resolve_pinned_files(
+        spark, path, [f"{root}/{r}" for r in rel_files], what
+    )
+    if not resolved:
+        raise ValueError(f"{what} is empty")
+    if not dv_rel:
+        return _read_pinned_files(spark, path, resolved)
+    # merge-on-read version: the manifest pins the deletion-vector state
+    # too — apply it exactly as read_mor does on the live table (one
+    # broadcast-sized anti join on the row identity; tombstones keyed to
+    # files outside this version match nothing)
+    dv = _read_dv_files(
+        spark,
+        _resolve_pinned_files(
+            spark,
+            path,
+            [f"{root}/{r}" for r in dv_rel],
+            f"{what} deletion vectors",
+        ),
+    )
+    df = _read_pinned_files(spark, path, resolved, with_identity=True)
+    return _live(df, dv).drop("__src_file", "__row_idx")
 
 
 def read_snapshot(spark: SparkSession, path: str, name: str) -> DataFrame:
@@ -302,36 +434,8 @@ def read_snapshot(spark: SparkSession, path: str, name: str) -> DataFrame:
     filtering — only the manifest decides what this version contains);
     fails with a clear error if a referenced file was vacuumed.
     """
-    root0 = path.rstrip("/")
-    # ONE delta-chain walk yields both lists (a second _manifest_dv_files
-    # call would re-read up to CHECKPOINT_INTERVAL manifest JSONs)
-    rel_files, dv_rel = _manifest_state(spark, path, name)
-    files = [f"{root0}/{r}" for r in rel_files]
-    resolved = _resolve_pinned_files(
-        spark, path, files, f"snapshot {name!r}"
-    )
-    if not resolved:
-        raise ValueError(f"snapshot {name!r} is empty")
-    if not dv_rel:
-        return _read_pinned_files(spark, path, resolved)
-    # merge-on-read version: the manifest pins the deletion-vector state
-    # too — apply it exactly as read_mor does on the live table (one
-    # broadcast-sized anti join on the row identity; tombstones keyed to
-    # files outside this version match nothing)
-    dv_resolved = _resolve_pinned_files(
-        spark,
-        path,
-        [f"{root0}/{r}" for r in dv_rel],
-        f"snapshot {name!r} deletion vectors",
-    )
-    dv = spark.read.parquet(*dv_resolved).select("src_file", "row_idx")
-    df = _read_pinned_files(spark, path, resolved, with_identity=True)
-    return df.join(
-        dv,
-        (df["__src_file"] == dv["src_file"])
-        & (df["__row_idx"] == dv["row_idx"]),
-        "left_anti",
-    ).drop("__src_file", "__row_idx")
+    rel_files, dv_rel = _VersionLog(spark, path).state(name)
+    return _read_state(spark, path, rel_files, dv_rel, f"snapshot {name!r}")
 
 
 def vacuum(spark: SparkSession, path: str) -> int:
@@ -352,46 +456,18 @@ def vacuum(spark: SparkSession, path: str) -> int:
     # a transaction's in-flight files have no manifest yet — vacuum
     # would reclaim the batch's own uncommitted work
     _refuse_in_txn(path, "vacuum")
-    jvm, fs, _ = _fs(spark, path)
+    _, fs, _ = _fs(spark, path)
+    log = _VersionLog(spark, path)
     referenced: set[str] = set()
-    names = list_snapshots(spark, path)
-    versioned = sorted(
-        (int(_VERSION_RE.match(n).group(1)), n)
-        for n in names
-        if _VERSION_RE.match(n)
-    )
-    if versioned:
-        first = _manifest(spark, path, versioned[0][1])
-        if "files" not in first:
-            raise FileNotFoundError(
-                f"oldest version manifest {versioned[0][1]!r} of {path} is "
-                "a delta with no base checkpoint — predecessors were "
-                "removed without compaction (use drop_versions_before)"
-            )
-    running: set[str] = set()
-    running_dv: set[str] = set()
-    for _, n in versioned:
-        d = _manifest(spark, path, n)
-        if "files" in d:
-            running = set(d["files"])
-            running_dv = set(d.get("dv_files", []))
-        else:
-            running = (running - set(d.get("remove", []))) | set(
-                d.get("add", [])
-            )
-            running_dv = (
-                running_dv - set(d.get("dv_remove", []))
-            ) | set(d.get("dv_add", []))
-        referenced |= running
-        referenced |= running_dv
-    for n in names:
+    for files, dv in fold_manifests(map(log.version_manifest, log.versions)):
+        referenced |= files
+        referenced |= dv
+    for n in log.names:
         if not _VERSION_RE.match(n):
-            fl, dvl = _manifest_state(spark, path, n)
+            fl, dvl = log.state(n)
             referenced.update(fl)
             referenced.update(dvl)
-    retired_root = jvm.org.apache.hadoop.fs.Path(
-        f"{path.rstrip('/')}/{RETIRED_DIR}"
-    )
+    retired_root = _hpath(spark, f"{path.rstrip('/')}/{RETIRED_DIR}")
     if not fs.exists(retired_root):
         return 0
 
@@ -421,11 +497,9 @@ def vacuum(spark: SparkSession, path: str) -> int:
 
 
 def drop_snapshot(spark: SparkSession, path: str, name: str) -> None:
-    jvm, fs, _ = _fs(spark, path)
+    _, fs, _ = _fs(spark, path)
     fs.delete(
-        jvm.org.apache.hadoop.fs.Path(
-            f"{path.rstrip('/')}/{SNAPSHOT_DIR}/{name}.json"
-        ),
+        _hpath(spark, f"{path.rstrip('/')}/{SNAPSHOT_DIR}/{name}.json"),
         False,
     )
 
@@ -450,12 +524,7 @@ _VERSION_RE = re.compile(r"^v(\d{8})$")
 
 def table_versions(spark: SparkSession, path: str) -> list[int]:
     """Committed version numbers, ascending (empty = versioning off)."""
-    out = []
-    for n in list_snapshots(spark, path):
-        m = _VERSION_RE.match(n)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return _VersionLog(spark, path).versions
 
 
 def enable_versioning(spark: SparkSession, path: str) -> int:
@@ -496,26 +565,20 @@ def _compose_next_manifest(
     delta otherwise), WITHOUT writing.  ``None`` when versioning is off.
     The multi-table two-phase commit prepares these bytes under a
     ``.prep`` name for every table before any final manifest lands."""
-    import json
     from datetime import datetime, timezone
 
-    vs = table_versions(spark, path)
-    if not vs:
+    log = _VersionLog(spark, path)
+    if not log.versions:
         return None
-    prev = vs[-1]
+    prev = log.versions[-1]
     nxt = prev + 1
-    # how deep is the open delta chain?  Bounded by CHECKPOINT_INTERVAL,
-    # so this back-walk reads at most that many small manifests.
-    deltas_since = 0
-    for pv in reversed(vs):
-        if "files" in _manifest(spark, path, f"v{pv:08d}"):
-            break
-        deltas_since += 1
-    if deltas_since + 1 >= CHECKPOINT_INTERVAL:
+    # the open delta chain (bounded by CHECKPOINT_INTERVAL) is read once:
+    # its length decides checkpoint-or-delta, its fold is prev's state
+    chain = version_chain(log.versions, prev, log.version_manifest)
+    if len(chain) >= CHECKPOINT_INTERVAL:
         data, _ = _full_manifest_bytes(spark, path)
         return nxt, data
-    from .mor import list_dv_files
-
+    *_, (prev_set, prev_dv_set) = fold_manifests(d for _, d in chain)
     current = sorted(
         _rel_to_table(path, f)
         for f in list_data_files(spark, path, recursive=True)
@@ -523,8 +586,6 @@ def _compose_next_manifest(
     current_dv = sorted(
         _rel_to_table(path, f) for f in list_dv_files(spark, path)
     )
-    prev_files, prev_dv = _manifest_state(spark, path, f"v{prev:08d}")
-    prev_set, prev_dv_set = set(prev_files), set(prev_dv)
     delta = json.dumps(
         {
             "add": sorted(set(current) - prev_set),
@@ -569,6 +630,15 @@ def current_version(spark: SparkSession, path: str) -> int | None:
     return vs[-1] if vs else None
 
 
+def _read_log_version(log: _VersionLog, version: int | None) -> DataFrame:
+    log.require()
+    v = log.versions[-1] if version is None else version
+    log.require(v)
+    return _read_state(
+        log.spark, log.path, *log.states(v)[v], f"snapshot {_vname(v)!r}"
+    )
+
+
 def read_version(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
@@ -578,18 +648,7 @@ def read_version(
     auto-engages on versioned tables; they stop being readable only after
     an explicit :func:`drop_versions_before` + :func:`vacuum`.
     """
-    vs = table_versions(spark, path)
-    if not vs:
-        raise ValueError(
-            f"versioning not enabled on {path}; call enable_versioning first"
-        )
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise FileNotFoundError(
-            f"no version {v} for {path} (have {vs[0]}..{vs[-1]}, "
-            f"{len(vs)} committed)"
-        )
-    return read_snapshot(spark, path, f"v{v:08d}")
+    return _read_log_version(_VersionLog(spark, path), version)
 
 
 def version_history(
@@ -600,13 +659,11 @@ def version_history(
     carry one).  Metadata-only: reads the small JSONs, no data I/O.
     ``last`` bounds the crawl to the newest N manifests — displays over a
     long-lived table must not pay O(total versions) of store latency."""
-    vs = table_versions(spark, path)
+    log = _VersionLog(spark, path)
+    vs = log.versions
     if last is not None:
         vs = vs[-last:]
-    return [
-        (v, _manifest(spark, path, f"v{v:08d}").get("committed_at") or "")
-        for v in vs
-    ]
+    return [(v, log.version_manifest(v).get("committed_at") or "") for v in vs]
 
 
 def _parse_commit_ts(s: str):
@@ -673,23 +730,12 @@ def restore_version(
     # anchor — moving it mid-batch would corrupt the rollback plan
     _refuse_in_txn(path, "restore_version")
     with _writer_lock(spark, path):
-        vs = table_versions(spark, path)
-        if not vs:
-            raise ValueError(
-                f"versioning not enabled on {path}; call "
-                "enable_versioning first"
-            )
-        if version not in vs:
-            raise FileNotFoundError(
-                f"no version {version} for {path} "
-                f"(have {vs[0]}..{vs[-1]}, {len(vs)} committed)"
-            )
+        log = _VersionLog(spark, path)
+        log.require(version)
+        latest = log.versions[-1]
+        states = log.states(version, latest)
         root_ = path.rstrip("/")
-        target_files, target_dv = _manifest_state(
-            spark, path, f"v{version:08d}"
-        )
-        from .mor import list_dv_files
-
+        target_files, target_dv = states[version]
         # data files and deletion-vector batch files restore uniformly:
         # both are immutable named blobs whose rel path the manifests and
         # _retired/ batches preserve — one rename plan covers the pair
@@ -714,26 +760,23 @@ def restore_version(
             # the live table equals the target while the log still says
             # otherwise; the documented recovery is "rerun the restore",
             # so the rerun must finish the job by committing the version.
-            lf, ldv = _manifest_state(spark, path, f"v{vs[-1]:08d}")
+            lf, ldv = states[latest]
             latest_rel = set(lf) | set(ldv)
             if latest_rel != current_rel:
                 _autoversion(spark, path)
                 _mark_mutated(spark, path)
-                spark.catalog.clearCache()
+                refresh_cached(spark, path)
             return MutationStats(len(current), 0, 0)
         # 1) bring back retired files FIRST (crash ⇒ superset, never loss)
         resolved = _resolve_pinned_files(
             spark, path, missing_abs, f"restore to version {version}"
         )
-        jvm, fs, _ = _fs(spark, path)
-        root = path.rstrip("/")
+        _, fs, _ = _fs(spark, path)
         for orig, now_at in zip(missing_abs, resolved):
             rel = _rel_to_table(path, orig)
-            dest = jvm.org.apache.hadoop.fs.Path(f"{root}/{rel}")
+            dest = _hpath(spark, f"{root_}/{rel}")
             fs.mkdirs(dest.getParent())
-            if not fs.rename(
-                jvm.org.apache.hadoop.fs.Path(now_at), dest
-            ):
+            if not fs.rename(_hpath(spark, now_at), dest):
                 raise IOError(f"restore: rename {now_at} -> {dest} failed")
         # 2) retire the post-``version`` files (older manifests may still
         #    pin some of them — retire, never delete)
@@ -741,7 +784,7 @@ def restore_version(
         _autoversion(spark, path)
         _refresh_indexes(spark, path)
         _mark_mutated(spark, path)
-        spark.catalog.clearCache()
+        refresh_cached(spark, path)
         return MutationStats(
             len(target_abs), len(missing_abs) + len(extras), 0
         )
@@ -773,34 +816,33 @@ def signed_net_expand(both: DataFrame, cols: list[str]) -> DataFrame:
             f"column name {bad} collides with the CDC diff's working "
             "columns — rename it"
         )
-    net = (
-        both.groupBy(*cols)
-        .agg(F.sum(_SIGN_COL).alias(_NET_COL))
-        .where(F.col(_NET_COL) != 0)
-    )
-    n_abs = F.abs(F.col(_NET_COL))
-    chunk = F.lit(_EXPAND_CHUNK).cast("long")
-    outer = F.explode(
-        F.sequence(F.lit(0).cast("long"), F.floor((n_abs - 1) / chunk))
-    )
-    expanded = net.withColumn("__sqlopt_cdc_chunk", outer)
-    inner = F.explode(
-        F.sequence(
-            F.lit(1).cast("long"),
-            F.least(
-                chunk, n_abs - F.col("__sqlopt_cdc_chunk") * chunk
-            ),
-        )
-    )
+    n_abs = f"abs({_NET_COL})"
+    chunk = f"CAST({_EXPAND_CHUNK} AS BIGINT)"
     return (
-        expanded.withColumn("__sqlopt_cdc_i", inner)
-        .select(
-            F.when(F.col(_NET_COL) > 0, F.lit("insert"))
-            .otherwise(F.lit("delete"))
-            .alias("_change_type"),
-            *cols,
+        both.groupBy(*cols)
+        .agg(F.expr(f"sum({_SIGN_COL}) AS {_NET_COL}"))
+        .where(f"{_NET_COL} != 0")
+        .selectExpr(
+            "*",
+            f"explode(sequence(CAST(0 AS BIGINT), floor(({n_abs} - 1) / "
+            f"{chunk}))) AS __sqlopt_cdc_chunk",
+        )
+        .selectExpr(
+            "*",
+            f"explode(sequence(CAST(1 AS BIGINT), least({chunk}, {n_abs} - "
+            f"__sqlopt_cdc_chunk * {chunk}))) AS __sqlopt_cdc_i",
+        )
+        .selectExpr(
+            f"CASE WHEN {_NET_COL} > 0 THEN 'insert' ELSE 'delete' END "
+            "AS _change_type",
+            *map(_quote, cols),
         )
     )
+
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def read_changes(
@@ -845,84 +887,56 @@ def read_changes(
     the O(touched) contract: a commit whose files all predate a schema
     evolution emits pre-evolution images (the evolved column was NULL
     there anyway).  ``align_schema=True`` instead aligns the output to
-    the ``to`` version's full schema (NULL-backfilling missing columns)
-    at the cost of one footer-union job over that version's pinned
-    files — opt in when a downstream applier needs a stable shape.
+    the ``to`` version's full schema (NULL-backfilling missing columns):
+    the schema inference then also covers that version's pinned files —
+    opt in when a downstream applier needs a stable shape.
+
+    Building the frame reads the version log once (one listing, one fold
+    from the low end's checkpoint), resolves each pinned file with one
+    filesystem call, and runs one footer-merge job for the whole call
+    (two when the endpoints share no file) plus, on a range whose
+    deletion-vector batches differ, the one bounded collect below.
 
     Limitations: columns must be exceptAll-comparable (no map type);
     versions must still be reconstructable (not dropped + vacuumed).
 
     ``max_touched_files`` bounds the one driver-side metadata transfer of
-    the DV entry-diff path (which common files do the changed tombstones
-    reference?) the same way ``merge_into``'s ``max_pruned_files`` bounds
-    its prune list: at most ``max_touched_files + 1`` file names are ever
+    the DV entry-diff path — the distinct files the DIFFERING batches
+    reference, a superset of those the changed tombstones touch — the
+    same way ``merge_into``'s ``max_pruned_files`` bounds its prune
+    list: at most ``max_touched_files + 1`` file names are ever
     collected, and past the bound the plan falls back to scanning every
     common file and letting the distributed semi-join do the filtering —
     same result, no unbounded driver list.
     """
-    vs = table_versions(spark, path)
-    if not vs:
-        raise ValueError(
-            f"versioning not enabled on {path}; call enable_versioning first"
-        )
-    to_v = vs[-1] if to_version is None else to_version
-    for v in (from_version, to_v):
-        if v not in vs:
-            raise FileNotFoundError(
-                f"no version {v} for {path} (have {vs[0]}..{vs[-1]}, "
-                f"{len(vs)} committed)"
-            )
+    log = _VersionLog(spark, path)
+    log.require(from_version)
+    to_v = log.versions[-1] if to_version is None else to_version
+    log.require(to_v)
     if from_version > to_v:
         raise ValueError(
             f"from_version {from_version} is newer than to_version {to_v}"
         )
-    files_from, dv_from_rel = _manifest_state(
-        spark, path, f"v{from_version:08d}"
-    )
-    files_to, dv_to_rel = _manifest_state(spark, path, f"v{to_v:08d}")
-    rel_from, rel_to = set(files_from), set(files_to)
+    # both endpoint states from one fold of the log
+    states = log.states(from_version, to_v)
+    rel_from, dv_from_rel = map(set, states[from_version])
+    rel_to, dv_to_rel = map(set, states[to_v])
+    common = rel_from & rel_to
     root = path.rstrip("/")
     what = f"version range {from_version}..{to_v} of {path}"
 
-    def _resolve_rels(rels) -> list[str]:
+    def _resolve(rels) -> list[str]:
         return _resolve_pinned_files(
             spark, path, [f"{root}/{r}" for r in sorted(rels)], what
         )
 
     def _dv_entries(rels: set[str]) -> DataFrame | None:
-        if not rels:
-            return None
-        return spark.read.parquet(*_resolve_rels(rels)).select(
-            "src_file", "row_idx"
-        )
+        return _read_dv_files(spark, _resolve(rels)) if rels else None
 
     # the endpoint versions' deletion-vector STATES (None = no DVs) —
     # a version's live rows are its data files minus these tombstones
-    dv_from = _dv_entries(set(dv_from_rel))
-    dv_to = _dv_entries(set(dv_to_rel))
-
-    def _masked(rels: set[str], dv: DataFrame | None) -> DataFrame | None:
-        """The LIVE rows of these data files under the given DV state."""
-        if not rels:
-            return None
-        resolved = _resolve_rels(rels)
-        if dv is None:
-            return _read_pinned_files(spark, path, resolved)
-        df = _read_pinned_files(spark, path, resolved, with_identity=True)
-        return df.join(
-            dv,
-            (df["__src_file"] == dv["src_file"])
-            & (df["__row_idx"] == dv["row_idx"]),
-            "left_anti",
-        ).drop("__src_file", "__row_idx")
-
-    parts: list[tuple[DataFrame, int]] = []
-    added = _masked(rel_to - rel_from, dv_to)
-    removed = _masked(rel_from - rel_to, dv_from)
-    if added is not None:
-        parts.append((added, 1))
-    if removed is not None:
-        parts.append((removed, -1))
+    dv_from = _dv_entries(dv_from_rel)
+    dv_to = _dv_entries(dv_to_rel)
 
     # deletion-vector diff over files live in BOTH versions: rows newly
     # tombstoned in the range emit deletes; rows un-tombstoned (RESTORE
@@ -930,96 +944,124 @@ def read_changes(
     # only the DIFFERING batch files are read as candidates; membership
     # is set-level (a materialize prune copies surviving entries into a
     # new batch — at-least-once tombstones must not read as new deletes).
-    if set(dv_from_rel) != set(dv_to_rel):
-        common = rel_from & rel_to
-        new_batches = _dv_entries(set(dv_to_rel) - set(dv_from_rel))
-        gone_batches = _dv_entries(set(dv_from_rel) - set(dv_to_rel))
+    entry_diffs: list[tuple[DataFrame, int]] = []
+    touched: set[str] = set()
+    if dv_from_rel != dv_to_rel and common:
+        new_b, gone_b = dv_to_rel - dv_from_rel, dv_from_rel - dv_to_rel
+        # ONE bounded metadata collect (O(touched files), the same class
+        # as the manifest lists): which common files do the differing
+        # batches reference?  A superset of what the exact entry diffs
+        # touch — the semi-joins below filter.  Entries on files
+        # added/removed in the range are covered by the masked parts.
+        # The limit+fallback mirrors merge_into's max_pruned_files: a
+        # pathological range (tombstones spanning millions of files)
+        # scans every common file instead of materializing an unbounded
+        # name list on the driver.  Batches are metadata-scale, so one
+        # task dedupes them: no shuffle, one job.
+        names = (
+            _dv_entries(new_b | gone_b)
+            .select("src_file")
+            .coalesce(1)
+            .distinct()
+        )
+        if max_touched_files is not None:
+            names = names.limit(max_touched_files + 1)
+        rows = names.collect()
+        if max_touched_files is not None and len(rows) > max_touched_files:
+            touched = set(common)
+        else:
+            touched = {r["src_file"] for r in rows} & common
+        for cand, other, sign in ((new_b, dv_from, -1), (gone_b, dv_to, 1)):
+            if cand and touched:
+                # duplicates are harmless: both joins only test existence
+                ent = _dv_entries(cand)
+                if other is not None:
+                    ent = ent.join(
+                        other, ["src_file", "row_idx"], "left_anti"
+                    )
+                entry_diffs.append((ent, sign))
 
-        def _entry_diff(cand, other):
-            if cand is None:
-                return None
-            d = cand.distinct()
-            if other is not None:
-                d = d.join(other, ["src_file", "row_idx"], "left_anti")
-            return d
+    added = _resolve(rel_to - rel_from)
+    removed = _resolve(rel_from - rel_to)
+    touched_res = _resolve(touched)
+    # one footer-merge job for every file read.  Endpoints that share a
+    # file share column types (an evolve_schema widening rewrites every
+    # file), so one schema fits both sides; endpoints sharing none may
+    # straddle a widening that no single footer merge accepts — then
+    # each side gets its own, and _aligned casts the old side up.
+    to_side = _resolve(rel_to) if align_schema else added + touched_res
 
-        for ent, sign in (
-            (_entry_diff(new_batches, dv_from), -1),
-            (_entry_diff(gone_batches, dv_to), 1),
-        ):
-            if ent is None:
-                continue
-            # bounded metadata collect (O(touched files), the same class
-            # as the manifest lists): which common files do the changed
-            # tombstones reference?  Entries on files added/removed in
-            # the range are already covered by the masked parts above.
-            # The limit+fallback mirrors merge_into's max_pruned_files:
-            # a pathological range (tombstones spanning millions of
-            # files) scans every common file instead of materializing an
-            # unbounded name list on the driver — the semi-join below
-            # filters either way.
-            touched_df = ent.select("src_file").distinct()
-            if max_touched_files is not None:
-                touched_df = touched_df.limit(max_touched_files + 1)
-            touched_rows = touched_df.collect()
-            if (
-                max_touched_files is not None
-                and len(touched_rows) > max_touched_files
-            ):
-                touched = set(common)
-            else:
-                touched = {r["src_file"] for r in touched_rows} & common
-            if not touched:
-                continue
-            df = _read_pinned_files(
-                spark, path, _resolve_rels(touched), with_identity=True
-            )
-            rows = df.join(
+    def _schema(files: list[str]) -> StructType | None:
+        return _data_schema(spark, files) if files else None
+
+    if common:
+        schema_to = schema_from = _schema(to_side + removed)
+    else:
+        schema_to, schema_from = _schema(to_side), _schema(removed)
+
+    def _masked(res, dv, schema) -> DataFrame | None:
+        """The LIVE rows of these data files under the given DV state."""
+        if not res:
+            return None
+        if dv is None:
+            return _read_pinned_files(spark, path, res, schema=schema)
+        df = _read_pinned_files(
+            spark, path, res, with_identity=True, schema=schema
+        )
+        return _live(df, dv).drop("__src_file", "__row_idx")
+
+    parts = [
+        (df, sign)
+        for df, sign in (
+            (_masked(added, dv_to, schema_to), 1),
+            (_masked(removed, dv_from, schema_from), -1),
+        )
+        if df is not None
+    ]
+    if touched_res:
+        df = _read_pinned_files(
+            spark, path, touched_res, with_identity=True, schema=schema_to
+        )
+        for ent, sign in entry_diffs:
+            hit = df.join(
                 ent,
                 (df["__src_file"] == ent["src_file"])
                 & (df["__row_idx"] == ent["row_idx"]),
                 "left_semi",
             ).drop("__src_file", "__row_idx")
-            parts.append((rows, sign))
+            parts.append((hit, sign))
 
     if not parts:
-        base = read_version(spark, path, to_v).limit(0)
-        return base.select(
-            F.lit("insert").alias("_change_type"), "*"
-        ).limit(0)
+        base = _read_log_version(log, to_v).limit(0)
+        return base.selectExpr("'insert' AS _change_type", "*").limit(0)
     # align every part to one column list (first-seen order, that side's
     # types win — a widening evolution casts the old images up, an added
-    # column NULL-backfills) so the signed aggregate compares row images;
-    # align_schema seeds the list with the to-version's full schema
-    ordered: list[tuple[str, object]] = []
-    seen: set[str] = set()
-    if align_schema:
-        for fld in read_version(spark, path, to_v).schema.fields:
-            seen.add(fld.name)
-            ordered.append((fld.name, fld.dataType))
+    # column NULL-backfills) so the signed aggregate compares row images
+    # (with align_schema the to side already carries every column of the
+    # to-version)
+    ordered: dict[str, object] = {}
     for side, _ in parts:
         for fld in side.schema.fields:
-            if fld.name not in seen:
-                seen.add(fld.name)
-                ordered.append((fld.name, fld.dataType))
-
-    cols = [n for n, _ in ordered]
+            ordered.setdefault(fld.name, fld.dataType)
 
     def _aligned(df: DataFrame, sign: int) -> DataFrame:
-        return df.select(
+        have = {f.name: f.dataType for f in df.schema.fields}
+        return df.selectExpr(
             *[
-                (F.col(n) if n in df.columns else F.lit(None))
-                .cast(t)
-                .alias(n)
-                for n, t in ordered
+                _quote(n)
+                if have.get(n) == t
+                else f"CAST({_quote(n) if n in have else 'NULL'} AS "
+                f"{t.simpleString()}) AS {_quote(n)}"
+                for n, t in ordered.items()
             ],
-            F.lit(sign).alias(_SIGN_COL),
+            f"{sign} AS {_SIGN_COL}",
         )
 
-    both = _aligned(parts[0][0], parts[0][1])
-    for df, sign in parts[1:]:
-        both = both.unionByName(_aligned(df, sign))
-    return signed_net_expand(both, cols)
+    both = functools.reduce(
+        lambda a, b: a.unionByName(b),
+        (_aligned(df, sign) for df, sign in parts),
+    )
+    return signed_net_expand(both, list(ordered))
 
 
 def drop_versions_before(
@@ -1034,21 +1076,20 @@ def drop_versions_before(
     are gone — so it is first materialized as a full checkpoint (fold the
     chain once, write ``files`` outright).  Runs under the writer lock:
     manifest rewrites must not race a committing writer."""
-    import json
-
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the latest version stays)")
     _refuse_in_txn(path, "drop_versions_before")
     with _writer_lock(spark, path):
-        vs = table_versions(spark, path)
+        log = _VersionLog(spark, path)
+        vs = log.versions
         doomed = vs[:-keep_last] if keep_last < len(vs) else []
         if not doomed:
             return 0
         oldest_kept = vs[len(doomed)]
-        name = f"v{oldest_kept:08d}"
-        d = _manifest(spark, path, name)
+        name = _vname(oldest_kept)
+        d = log.manifest(name)
         if "files" not in d:
-            fl, dvl = _manifest_state(spark, path, name)
+            fl, dvl = log.state(name)
             full = json.dumps(
                 {
                     "files": fl,

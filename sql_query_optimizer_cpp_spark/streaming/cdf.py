@@ -43,6 +43,7 @@ here and clearly refused at plan time.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -93,42 +94,15 @@ def _manifest(root: str, v: int) -> dict:
         return json.load(f)
 
 
-def _state(
-    root: str, v: int, versions: list[int]
-) -> tuple[set[str], set[str]]:
-    """Python twin of operators/mutate._manifest_state: ``(data files,
-    deletion-vector batch files)`` a version pins, table-relative.  A
-    full manifest carries both outright; a delta manifest folds back to
-    the nearest checkpoint (bounded by CHECKPOINT_INTERVAL small reads),
-    applying add/remove and dv_add/dv_remove in one walk."""
-    d = _manifest(root, v)
-    if "files" in d:
-        return set(d["files"]), set(d.get("dv_files", []))
-    chain = [d]
-    base: set[str] | None = None
-    base_dv: set[str] = set()
-    for pv in reversed([x for x in versions if x < v]):
-        pd = _manifest(root, pv)
-        if "files" in pd:
-            base = set(pd["files"])
-            base_dv = set(pd.get("dv_files", []))
-            break
-        chain.append(pd)
-    if base is None:
-        raise FileNotFoundError(
-            f"version {v}'s delta chain has no base checkpoint under "
-            f"{root} — predecessors were dropped without compaction"
-        )
-    for dd in reversed(chain):
-        base -= set(dd.get("remove", []))
-        base |= set(dd.get("add", []))
-        base_dv -= set(dd.get("dv_remove", []))
-        base_dv |= set(dd.get("dv_add", []))
-    return base, base_dv
+def _states(
+    root: str, versions: list[int], *wanted: int
+) -> dict[int, tuple[frozenset[str], frozenset[str]]]:
+    """``(data files, deletion-vector batch files)`` each wanted version
+    pins, table-relative — the engine's own version-log fold
+    (operators/versioning.fold_states) over manifests read from disk."""
+    from ..operators.versioning import fold_states
 
-
-def _rel_files(root: str, v: int, versions: list[int]) -> set[str]:
-    return _state(root, v, versions)[0]
+    return fold_states(versions, wanted, lambda v: _manifest(root, v))
 
 
 def _resolve(root: str, rel: str) -> str:
@@ -137,12 +111,9 @@ def _resolve(root: str, rel: str) -> str:
     live = os.path.join(root, rel)
     if os.path.exists(live):
         return live
-    retired = os.path.join(root, RETIRED_DIR)
-    if os.path.isdir(retired):
-        for batch in os.listdir(retired):
-            cand = os.path.join(retired, batch, rel)
-            if os.path.exists(cand):
-                return cand
+    hits = glob.glob(os.path.join(root, RETIRED_DIR, "*", glob.escape(rel)))
+    if hits:
+        return hits[0]
     raise FileNotFoundError(
         f"{rel} (pinned by a manifest under {root}) no longer exists — "
         "vacuumed after its versions were dropped?"
@@ -327,12 +298,10 @@ def _plan_version(
     plus (for merge-on-read commits) a column-pruned read of only the
     DIFFERING deletion-vector batches to learn which still-live data
     files they reference.  No data-file I/O here."""
-    cur, dv_cur = _state(root, v, versions)
-    prev, dv_prev = (
-        _state(root, v - 1, versions)
-        if (v - 1) in versions
-        else (set(), set())
-    )
+    wanted = [v - 1, v] if (v - 1) in versions else [v]
+    states = _states(root, versions, *wanted)
+    cur, dv_cur = states[v]
+    prev, dv_prev = states.get(v - 1, (frozenset(), frozenset()))
 
     def _abs(rels) -> tuple:
         return tuple(_resolve(root, r) for r in sorted(rels))
@@ -572,7 +541,7 @@ class CowChangesDataSource(DataSource):
                 f"no version log under {root} — call enable_versioning "
                 "first (schema inference reads a pinned file's footer)"
             )
-        rels = sorted(_rel_files(root, vs[-1], vs))
+        rels = sorted(_states(root, vs, vs[-1])[vs[-1]][0])
         if not rels:
             raise ValueError(f"version {vs[-1]} of {root} pins no files")
         import pyarrow.parquet as pq

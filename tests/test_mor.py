@@ -738,22 +738,33 @@ def test_streaming_mor_applier_replay_commits_nothing(spark, tmp_path):
     assert read_mor(spark, path).where("k = 1").first()["v"] == 12.0
 
 
-def test_read_changes_max_touched_files_fallback(spark, tmp_path):
+@pytest.mark.parametrize("batches", ["new", "new_and_gone"])
+def test_read_changes_max_touched_files_fallback(spark, tmp_path, batches):
     """The DV entry-diff's driver-side file-name collect is bounded:
     past max_touched_files the plan falls back to scanning every common
-    file (semi-join filters distributively) — identical result."""
+    file (semi-join filters distributively) — identical result.  The
+    ``new_and_gone`` range has a tombstone batch appear (deletes) AND
+    one disappear through a RESTORE (un-tombstoned rows: inserts), so
+    the one collect covers both diff directions."""
     path = _flat(spark, tmp_path)
     m.enable_versioning(spark, path)                             # v1
     dv_delete_where(spark, path, "k IN (5, 15, 25)")             # v2
-    default = m.read_changes(spark, path, 1, 2).orderBy("k")
+    lo, hi, expect = 1, 2, {("delete", 5), ("delete", 15), ("delete", 25)}
+    if batches == "new_and_gone":
+        m.restore_version(spark, path, 1)                        # v3
+        dv_delete_where(spark, path, "k IN (40, 70)")            # v4
+        lo, hi = 2, 4
+        expect = {("insert", 5), ("insert", 15), ("insert", 25),
+                  ("delete", 40), ("delete", 70)}
+    default = m.read_changes(spark, path, lo, hi).orderBy("k")
     fallback = m.read_changes(
-        spark, path, 1, 2, max_touched_files=0
+        spark, path, lo, hi, max_touched_files=0
     ).orderBy("k")
     assert [r.asDict() for r in default.collect()] == [
         r.asDict() for r in fallback.collect()
     ]
-    assert default.count() == 3
-    assert {r["_change_type"] for r in default.collect()} == {"delete"}
+    assert {(r["_change_type"], r["k"]) for r in default.collect()} == expect
+    assert default.count() == len(expect)
 
 
 def test_occ_dv_delete_disjoint_files_first_attempt(spark, tmp_path):
