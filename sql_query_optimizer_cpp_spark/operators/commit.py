@@ -1,11 +1,12 @@
-"""One commit loop for every DML verb: stage → lock → validate → publish.
+"""One commit loop and one post-commit sequence for every writer.
 
 The twelve public DML entry points — {DELETE, UPDATE, MERGE} ×
 {copy-on-write, merge-on-read deletion vectors} × {locked, optimistic} —
 differ only in HOW they stage a change (a file rewrite in
 :mod:`.mutate`, a tombstone batch plus appended copies in :mod:`.mor`)
-and in the commit mode.  The protocol around the staging is this one
-function, :func:`run`:
+and in the commit mode.  ``compact`` and ``materialize_deletes`` are two
+more stages of the same kind.  The protocol around the staging is this
+one function, :func:`run`:
 
 - **locked**: take the table's writer lock (bounded wait
   ``lock_wait_seconds``; re-entrant for the thread that owns an open
@@ -20,12 +21,16 @@ function, :func:`run`:
   retries against the new committed state, up to ``max_attempts``; then
   :class:`~.occ.ConcurrentWriteConflict`.
 
-Both modes then run one hook sequence inside the lock — the next version
-manifest (:func:`~.versioning._autoversion`), bloom-index refresh, the
-catalog's mutation epochs — and, after it, a path-scoped cache refresh:
-frames persisted over THIS table re-cache lazily, every other cached
-frame in the session stays put.  Hooks run only when the statement
-changed something.
+Every writer — both modes of :func:`run`, ``restore_version``, and
+transaction commit, rollback and recovery (:mod:`.txn`) — then runs the
+one hook sequence :func:`committed` inside the lock it holds: the next
+version manifest (:func:`~.versioning._autoversion`), bloom-index
+refresh, the catalog's mutation and file-listing epochs, and a
+path-scoped cache refresh — frames persisted over THIS table re-cache
+lazily, every other cached frame in the session stays put.  Inside an
+open transaction the manifest and the index refresh are deferred to the
+transaction's commit; that deferral is checked there, once.  Hooks run
+only when the statement changed something.
 
 Staging dirs are registered in ``created`` BEFORE they are written, so
 any failure up to the publish reclaims exactly this attempt's debris.  A
@@ -42,20 +47,22 @@ from typing import Callable
 from pyspark.sql import SparkSession
 
 from . import constraints as _constraints
+from . import versioning as _versioning
 from .mutate import (
     MutationStats,
     _WriterLockHeld,
     _default_retain,
     _fs,
+    _mark_files_changed,
     _mark_mutated,
     _reclaim,
     _refresh_indexes,
     _refuse_in_txn,
+    _txn_state,
     _writer_lock,
 )
 from .mor import refresh_cached
 from .occ import ConcurrentWriteConflict, _is_missing_file_error
-from .versioning import _autoversion
 
 
 def _no_conflict() -> str | None:
@@ -80,6 +87,9 @@ class Staged:
     #: publish replaces existing files: resolve ``retain`` in-lock (the
     #: copy-on-write choke point that also refuses live-DV tables)
     rewrites: bool = False
+    #: publish moves bytes without changing a row value (compact): the
+    #: commit bumps the file-listing epoch only, ANALYZE stats stay exact
+    layout_only: bool = False
 
     @property
     def changed(self) -> bool:
@@ -125,19 +135,41 @@ def _validate(spark, path, st: Staged, checked, created) -> str | None:
     return conflict
 
 
+def committed(
+    spark: SparkSession, path: str, *, version: bool = True,
+    rows: bool = True,
+) -> None:
+    """The post-commit sequence every writer runs in the writer lock once
+    its change is live on ``path``: the next version manifest, the bloom
+    refresh, the catalog epochs, the path-scoped cache refresh.
+
+    ``version=False``: the caller already wrote the manifest, or none is
+    due (a rollback returns to the last one).  ``rows=False``: bytes moved
+    but no row value changed, so only the file-listing epoch advances.
+    Inside an open transaction the manifest and the index refresh wait
+    for its commit, which writes one version for the whole batch."""
+    st = _txn_state(path)
+    if st is not None:
+        st.dirty = True
+    else:
+        if version:
+            _versioning._autoversion(spark, path)
+        _refresh_indexes(spark, path)
+    (_mark_mutated if rows else _mark_files_changed)(spark, path)
+    refresh_cached(spark, path)
+
+
 def _publish(spark, path, st: Staged, retain, created) -> None:
     """In-lock: resolve retain, publish (which consumes every staging
-    dir), run the commit hooks.  Anything raised before the publish
-    starts reclaims the staging."""
+    dir), run the post-commit sequence.  Anything raised before the
+    publish starts reclaims the staging."""
     try:
         ret = _default_retain(spark, path, retain) if st.rewrites else False
     except BaseException:
         _reclaim(spark, created)
         raise
     st.publish(ret)
-    _autoversion(spark, path)
-    _refresh_indexes(spark, path)
-    _mark_mutated(spark, path)
+    committed(spark, path, rows=not st.layout_only)
 
 
 def run(
@@ -166,8 +198,6 @@ def run(
             st, _ = _stage(spark, path, stage, created, False)
             if st.changed:
                 _publish(spark, path, st, retain, created)
-        if st.changed:
-            refresh_cached(spark, path)
         return st.stats
 
     if max_attempts < 1:
@@ -223,7 +253,6 @@ def run(
         finally:
             lock.__exit__(None, None, None)
         if conflict is None:
-            refresh_cached(spark, path)
             return st.stats
         # a concurrent commit changed what this attempt read: its staging
         # is stale — discard it and re-read

@@ -35,9 +35,11 @@ Design (all distributed, nothing per-row on the driver):
 - Crash ordering mirrors COW's "duplicates, never loss": new data lands
   before the tombstones that hide the old data.
 - :func:`materialize_deletes` rewrites exactly the files that have
-  vectors (anti-join applied), then drops the vector store.  Stale
-  vectors keyed to replaced file names match nothing, so a crash mid-way
-  leaves a readable table and a rerun converges.
+  vectors (anti-join applied), then drops the vector store.  It is one
+  more stage of the same commit loop, so it commits a version and bumps
+  both catalog epochs (the base scan's rows change).  Stale vectors
+  keyed to replaced file names match nothing, so a crash mid-way leaves
+  a readable table and a rerun converges.
 
 Version-log unification (Delta-3.x shape): manifests pin the
 deletion-vector batch files alongside the data files
@@ -50,8 +52,9 @@ retired batches.  Those reads build without per-file work that grows
 with history: one version-log listing and fold per call, one ``exists``
 (or one ``_retired/*`` glob) per pinned file, one data-schema job per
 call, and, for ``read_changes`` over differing DV batches, one bounded
-collect of the files they reference.  Commits and materialize refresh
-cached frames by path (:func:`refresh_cached`), never session-wide.
+collect of the files they reference.  Every commit refreshes cached
+frames by path (:func:`refresh_cached`, from the one post-commit
+sequence ``commit.committed``), never session-wide.
 
 The one remaining guard is COW-side: the file-REWRITING
 verbs still refuse a table with live vectors (``mutate._default_retain``)
@@ -80,12 +83,10 @@ from .mutate import (
     _move_in,
     _partition_cols,
     _reclaim,
-    _refresh_indexes,
     _rel_to_table,
     _retire_files,
     _stage,
     _staged_rows,
-    _writer_lock,
     is_partitioned,
     list_data_files,
 )
@@ -175,7 +176,7 @@ def attach_identity(df: DataFrame, qualified_base: str) -> DataFrame:
     stop matching and deleted rows resurrect) and ``__row_idx`` =
     ``_metadata.row_index``.  The ONE place this recipe lives; both the
     live MOR verbs and the time-travel pinned reads
-    (mutate._read_pinned_files) go through it."""
+    (versioning._read_pinned_files) go through it."""
     clash = {"__fp", "__row_idx", "__src_file"} & set(df.columns)
     if clash:
         # same guarded-working-column discipline as the CDC signed diff
@@ -839,25 +840,24 @@ def materialize_deletes(
     partial materialize moves the pruned store in beside the old batch
     files before deleting them, so tombstones for still-live files exist
     on disk at every instant (worst case duplicated, which the anti join
-    doesn't care about)."""
-    with _writer_lock(spark, path):
-        dv = _read_dv(spark, path)
-        _, fs, _ = _fs(spark, path)
-        if dv is None:
-            return MutationStats(
-                len(list_data_files(spark, path, recursive=True)), 0, 0
-            )
-        # versioned / snapshotted tables retire superseded files (data
-        # AND deletion-vector batches) instead of deleting — older
-        # manifests pin them, the same auto-retain rule as the COW verbs
-        from .versioning import _autoversion, list_snapshots
+    doesn't care about).
 
-        retain = bool(list_snapshots(spark, path))
+    ``files_rewritten`` counts the tombstoned files whose vectors the call
+    folds; a rerun after a crash mid-swap also counts the files the
+    crashed run already rewrote, whose stale vectors it drops.  The call
+    commits through the locked DML commit loop (:func:`~.commit.run`)."""
+    from .commit import Staged, run
+    from .versioning import list_snapshots
+
+    def stage(created: list[str], optimistic: bool) -> Staged:
+        dv = _read_dv(spark, path)
+        files = list_data_files(spark, path, recursive=True)
+        if dv is None:
+            return Staged(MutationStats(len(files), 0, 0))
         dead_rel = {
             r["src_file"]
             for r in dv.select("src_file").distinct().collect()
         }
-        files = list_data_files(spark, path, recursive=True)
         hit = [f for f in files if _rel_to_table(path, f) in dead_rel]
         if min_dead_ratio > 0 and hit:
             # dead fraction per file: row totals come from a scan of the
@@ -884,70 +884,71 @@ def materialize_deletes(
             dead_rel = due
             if not hit:
                 # nothing reached the threshold: keep every vector
-                return MutationStats(len(files), 0, 0)
+                return Staged(MutationStats(len(files), 0, 0))
         # stage EVERY directory's rewrite before any original file moves
         # (the COW stage-all-then-swap discipline: a crash in the staging
         # phase leaves the table byte-identical).  Groups: flat tables
         # have one, partitioned tables one per touched partition dir — no
         # partition-column reconstruction needed, the identity join keys
         # on file name + position.
-        staged: list[tuple[str, list[str], str]] = []
-        created: list[str] = []
-        try:
-            for dir_, fl in sorted(_group_by_dir(hit).items()):
-                sub = _with_identity(spark, path, fl, None)
-                kept = _live(sub, dv).drop("__src_file", "__row_idx")
-                staged.append((dir_, fl, _stage(spark, path, kept, created)))
-        except BaseException:
-            for s in created:
-                with contextlib.suppress(Exception):
-                    fs.delete(_hpath(spark, s), True)
-            raise
-        removed = 0
-        for dir_, fl, staging in staged:
-            _move_in(spark, dir_, staging)
-            if retain:
-                _retire_files(spark, path, fl)
-            else:
-                _delete_files(spark, fl)
-            removed += len(fl)
-        # reached with removed==0 only when every tombstoned file was
-        # already replaced (stale store from a crashed run): fall through
-        # to the delete branch and converge
+        staged = []
+        for dir_, fl in sorted(_group_by_dir(hit).items()):
+            sub = _with_identity(spark, path, fl, None)
+            kept = _live(sub, dv).drop("__src_file", "__row_idx")
+            staged.append((dir_, fl, _stage(spark, path, kept, created)))
+        # partial materialize: the store shrinks by the graduated files'
+        # vectors.  The pruned copy stages now, while the old batch files
+        # it reads are all still live
         survivors = dv.where(~F.col("src_file").isin(list(dead_rel)))
-        dv_root = _hpath(spark, _dv_path(path))
-        old_dv_files = [
-            st.getPath().toString()
-            for st in fs.listStatus(dv_root)
-            if st.isFile()
-        ]
-        old_dv_parquet = list_dv_files(spark, path)
-        if removed and survivors.limit(1).count():
-            # partial materialize: shrink the store by the graduated
-            # files' vectors WITHOUT ever leaving it empty or missing —
-            # stage the pruned copy (reads the old batch files), move it
-            # in beside them, only then retire/delete the old batches.
-            # Any crash point leaves at-least-once tombstones, which the
-            # anti join reads identically.
-            pruned = _stage(spark, path, survivors)
-            _move_in(spark, _dv_path(path), pruned)
-            if retain:
-                _retire_files(spark, path, old_dv_parquet)
-                _delete_files(
-                    spark,
-                    [f for f in old_dv_files if f not in old_dv_parquet],
-                )
+        pruned = (
+            _stage(spark, path, survivors, created)
+            if hit and survivors.limit(1).count()
+            else None
+        )
+        # versioned / snapshotted tables retire superseded files (data
+        # AND deletion-vector batches) instead of deleting — older
+        # manifests pin them, the same auto-retain rule as the COW verbs
+        retain = bool(list_snapshots(spark, path))
+
+        def publish(_) -> None:
+            for dir_, fl, staging in staged:
+                _move_in(spark, dir_, staging)
+                if retain:
+                    _retire_files(spark, path, fl)
+                else:
+                    _delete_files(spark, fl)
+            _, fs, _ = _fs(spark, path)
+            dv_root = _hpath(spark, _dv_path(path))
+            old_dv_files = [
+                st.getPath().toString()
+                for st in fs.listStatus(dv_root)
+                if st.isFile()
+            ]
+            old_dv_parquet = list_dv_files(spark, path)
+            if pruned:
+                # never leave the store empty or missing: the pruned copy
+                # moves in beside the old batches, only then do they
+                # retire/delete.  Any crash point leaves at-least-once
+                # tombstones, which the anti join reads identically.
+                _move_in(spark, _dv_path(path), pruned)
+                if retain:
+                    _retire_files(spark, path, old_dv_parquet)
+                    _delete_files(
+                        spark,
+                        [f for f in old_dv_files if f not in old_dv_parquet],
+                    )
+                else:
+                    _delete_files(spark, old_dv_files)
             else:
-                _delete_files(spark, old_dv_files)
-        elif retain:
-            # full materialize on a versioned table: the old batches stay
-            # reachable for time travel; only marker files die with the dir
-            _retire_files(spark, path, old_dv_parquet)
-            fs.delete(dv_root, True)
-        else:
-            fs.delete(dv_root, True)
-        if retain:
-            _autoversion(spark, path)
-        _refresh_indexes(spark, path)
-        refresh_cached(spark, path)
-        return MutationStats(len(files), removed, 0)
+                # full materialize on a versioned table: the old batches
+                # stay reachable for time travel; only marker files die
+                # with the dir
+                if retain:
+                    _retire_files(spark, path, old_dv_parquet)
+                fs.delete(dv_root, True)
+
+        return Staged(
+            MutationStats(len(files), len(dead_rel), 0), publish=publish
+        )
+
+    return run(spark, path, stage, what="materialize_deletes")

@@ -57,8 +57,6 @@ concurrent writer inserted after its read.
 from __future__ import annotations
 
 import contextlib
-import functools
-import re
 import threading
 import time
 import uuid
@@ -211,18 +209,16 @@ def _reclaim(spark: SparkSession, dirs) -> None:
     dirs = [d for d in dirs if d]
     if not dirs:
         return
-    jvm, fs, _ = _fs(spark, dirs[0])
+    _, fs, _ = _fs(spark, dirs[0])
     for d in dirs:
         with contextlib.suppress(Exception):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
+            fs.delete(_hpath(spark, d), True)
 
 
-def _rename_part(jvm, fs, src, dest_dir, tag: str, i: int) -> None:
+def _rename_part(spark, fs, src, dest_dir, tag: str, i: int) -> None:
     """Rename one staged part file into ``dest_dir`` under a fresh unique
     COW name — the single swap primitive every mover shares."""
-    dest = jvm.org.apache.hadoop.fs.Path(
-        dest_dir, f"part-cow-{tag}-{i:05d}.snappy.parquet"
-    )
+    dest = _hpath(spark, dest_dir, f"part-cow-{tag}-{i:05d}.snappy.parquet")
     if not fs.rename(src, dest):
         raise IOError(f"COW swap: rename {src} -> {dest} failed")
 
@@ -234,7 +230,7 @@ def _move_in(spark: SparkSession, path: str, staging: str) -> int:
     matching table directories (created as needed): the partition value
     lives in the directory name, so preserving each staged file's
     relative path IS the data move."""
-    jvm, fs, table_path = _fs(spark, path)
+    _, fs, table_path = _fs(spark, path)
     tag = uuid.uuid4().hex[:12]
     moved = 0
 
@@ -245,15 +241,16 @@ def _move_in(spark: SparkSession, path: str, staging: str) -> int:
             if name.startswith(("_", ".")):
                 continue
             if st.isDirectory():
-                sub = jvm.org.apache.hadoop.fs.Path(dest_dir, name)
+                sub = _hpath(spark, dest_dir, name)
                 fs.mkdirs(sub)
                 walk(st.getPath(), sub)
             elif st.isFile():
-                _rename_part(jvm, fs, st.getPath(), dest_dir, tag, moved)
+                _rename_part(spark, fs, st.getPath(), dest_dir, tag, moved)
                 moved += 1
 
-    walk(jvm.org.apache.hadoop.fs.Path(staging), table_path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    staged = _hpath(spark, staging)
+    walk(staged, table_path)
+    fs.delete(staged, True)
     return moved
 
 
@@ -276,9 +273,11 @@ def _partition_cols(spark: SparkSession, path: str, sample_file: str) -> list[st
 
 
 def _delete_files(spark: SparkSession, files: list[str]) -> None:
-    jvm, fs, _ = _fs(spark, files[0]) if files else (None, None, None)
+    if not files:
+        return
+    _, fs, _ = _fs(spark, files[0])
     for f in files:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
+        fs.delete(_hpath(spark, f), False)
 
 
 #: Underscore prefix ⇒ invisible to Spark's file discovery (same convention
@@ -334,8 +333,8 @@ def _acquire_writer_lock(
 ) -> None:
     """Atomically create ``_cow.lock`` (fails if present); see
     :func:`_writer_lock` for the semantics."""
-    jvm, fs, table_path = _fs(spark, path)
-    lock = jvm.org.apache.hadoop.fs.Path(table_path, LOCK_FILE)
+    _, fs, table_path = _fs(spark, path)
+    lock = _hpath(spark, table_path, LOCK_FILE)
     mutex = _lock_attempt_mutex(path)
     deadline = time.monotonic() + wait_seconds
     while True:
@@ -366,16 +365,16 @@ def _acquire_writer_lock(
 
 
 def _release_writer_lock(spark: SparkSession, path: str) -> None:
-    jvm, fs, table_path = _fs(spark, path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(table_path, LOCK_FILE), False)
+    _, fs, table_path = _fs(spark, path)
+    fs.delete(_hpath(spark, table_path, LOCK_FILE), False)
 
 
-#: Active multi-statement transactions (operators/txn.py): normalized
-#: table path -> state.  Consulted by _writer_lock (the owning thread
-#: re-enters: the transaction already holds the physical lock for its
-#: whole span) and _autoversion/_refresh_indexes (defer the version
-#: commit + index maintenance to Transaction.commit, which writes ONE
-#: manifest for the whole batch).
+#: Active transactions (operators/txn.py): normalized table path ->
+#: state.  Consulted by _writer_lock (the owning thread re-enters: the
+#: transaction already holds the physical lock for its whole span) and
+#: by the one post-commit sequence, commit.committed, which defers the
+#: version manifest and the index refresh to the transaction's commit
+#: (one manifest for the whole batch).
 _ACTIVE_TXNS: dict[str, "_TxnState"] = {}
 
 
@@ -442,27 +441,6 @@ def _writer_lock(
         _release_writer_lock(spark, path)
 
 
-def _with_writer_lock(fn):
-    """Decorator for the maintenance verbs outside the DML commit loop
-    (``compact``): run under the table's writer lock; when the verb
-    changed anything, commit the next version manifest and refresh the
-    bloom sidecars before the lock releases — the choke point that keeps
-    the version log linear."""
-
-    @functools.wraps(fn)
-    def wrapper(spark, path, *args, **kwargs):
-        with _writer_lock(spark, path):
-            out = fn(spark, path, *args, **kwargs)
-            if out.files_rewritten or out.rows_inserted:
-                from .versioning import _autoversion
-
-                _autoversion(spark, path)
-                _refresh_indexes(spark, path)
-            return out
-
-    return wrapper
-
-
 def _mark_mutated(spark: SparkSession, path: str) -> None:
     """Bump the catalog's per-path mutation epoch so registered ANALYZE
     stats for this table are surfaced as stale instead of silently served
@@ -500,10 +478,6 @@ def _refresh_indexes(spark: SparkSession, path: str) -> None:
     so it warns instead of failing the already-committed mutation."""
     import warnings
 
-    if _txn_state(path) is not None:
-        # deferred: Transaction.commit() runs ONE refresh for the batch
-        # (it pops the registry entry before calling back in here)
-        return
     if str(
         spark.conf.get(AUTO_REFRESH_INDEX_CONF, "true")
     ).lower() != "true":
@@ -562,12 +536,12 @@ def _retire_files(spark: SparkSession, path: str, files: list[str]) -> None:
     """
     if not files:
         return
-    jvm, fs, table_path = _fs(spark, path)
+    _, fs, table_path = _fs(spark, path)
     batch = f"{RETIRED_DIR}/{uuid.uuid4().hex[:12]}"
     for f in files:
-        src = jvm.org.apache.hadoop.fs.Path(f)
+        src = _hpath(spark, f)
         rel = _rel_to_table(path, f)
-        dest = jvm.org.apache.hadoop.fs.Path(table_path, f"{batch}/{rel}")
+        dest = _hpath(spark, table_path, f"{batch}/{rel}")
         fs.mkdirs(dest.getParent())
         if not fs.rename(src, dest):
             raise IOError(f"retire: rename {f} -> {dest} failed")
@@ -743,10 +717,10 @@ def _rewrite_stage(
             # (the re-list) does not
             from .occ import _uri_path
 
-            jvm, fs, _ = _fs(spark, path)
+            _, fs, _ = _fs(spark, path)
             current: set[str] = set()
             for part_dir, _, _ in staged:
-                if not fs.exists(jvm.org.apache.hadoop.fs.Path(part_dir)):
+                if not fs.exists(_hpath(spark, part_dir)):
                     return "<partition dir removed>"
                 current |= {
                     _uri_path(f) for f in list_data_files(spark, part_dir)
@@ -1282,7 +1256,6 @@ def merge_into(
     )
 
 
-@_with_writer_lock
 def compact(
     spark: SparkSession,
     path: str,
@@ -1319,14 +1292,17 @@ def compact(
     clusters them perfectly).
 
     ``rows_matched`` in the returned stats is the row count that moved.
+    It commits through the locked DML commit loop (:func:`~.commit.run`)
+    as a layout-only change: the file-listing epoch advances, the
+    ANALYZE-stats epoch does not.
     """
-    retain = _default_retain(spark, path, retain)
+    from .commit import Staged, run
+
     if target_bytes <= 0 or not (0 < small_ratio <= 1):
         raise ValueError("target_bytes must be > 0 and 0 < small_ratio <= 1")
     if zorder and sort_by:
         raise ValueError("zorder and sort_by are mutually exclusive")
     recluster = list(zorder or sort_by or [])
-    jvm, fs, jpath = _fs(spark, path)
 
     def _recluster_df(df: DataFrame, n_out: int) -> DataFrame:
         from ..sources.writers import zorder_key
@@ -1367,31 +1343,6 @@ def compact(
         return df.repartitionByRange(
             n_out, *recluster
         ).sortWithinPartitions(*recluster)
-    # per-partition bin-pack: compaction is file-local, so each key=value
-    # directory compacts independently (the partition value lives in the
-    # directory name and never moves); a flat table is one group
-    partitioned = is_partitioned(spark, path)
-    all_files = list_data_files(spark, path, recursive=partitioned)
-    groups = (
-        sorted(_group_by_dir(all_files).items())
-        if partitioned
-        else [(path, all_files)]
-    )
-    # size filter first (pure metadata): only groups with >= 2 small
-    # files reach the staging pool
-    todo: list[tuple[str, tuple[list[str], int]]] = []
-    for part_dir, pfiles in groups:
-        small_p: list[str] = []
-        small_p_bytes = 0
-        for f in pfiles:
-            sz = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(f)).getLen()
-            if recluster or sz < target_bytes * small_ratio:
-                small_p.append(f)
-                small_p_bytes += sz
-        if len(small_p) >= (1 if recluster else 2):
-            todo.append((part_dir, (small_p, small_p_bytes)))
-    if not todo:
-        return MutationStats(len(all_files), 0, 0)
 
     def stage_one(item, created: list[str]):
         part_dir, (small_p, small_p_bytes) = item
@@ -1401,19 +1352,51 @@ def compact(
         out = _recluster_df(df, n_out) if recluster else df.coalesce(n_out)
         return part_dir, small_p, _stage(spark, path, out, created), moved
 
-    # same stage-all-then-swap discipline as the DML verbs (and the same
-    # pooled staging-jobs + fs-metadata phases)
-    results = _run_partition_stages(spark, path, todo, stage_one)
-    _swap_staged(spark, path, [(d, p, s) for d, p, s, _ in results], retain)
-    spark.catalog.clearCache()
-    # layout-only: bytes move, no row value changes — ANALYZE stats stay
-    # exact, but the catalog's file-listing epoch must advance
-    _mark_files_changed(spark, path)
-    return MutationStats(
-        len(all_files),
-        sum(len(p) for _, p, _, _ in results),
-        sum(m for _, _, _, m in results),
-    )
+    def stage(created: list[str], optimistic: bool) -> Staged:
+        # resolved first, in-lock: refuses a live-DV table before any work
+        keep = _default_retain(spark, path, retain)
+        _, fs, _ = _fs(spark, path)
+        # per-partition bin-pack: compaction is file-local, so each
+        # key=value directory compacts independently (the partition value
+        # lives in the directory name and never moves); a flat table is
+        # one group
+        partitioned = is_partitioned(spark, path)
+        all_files = list_data_files(spark, path, recursive=partitioned)
+        groups = (
+            sorted(_group_by_dir(all_files).items())
+            if partitioned
+            else [(path, all_files)]
+        )
+        # size filter first (pure metadata): only groups with >= 2 small
+        # files reach the staging pool
+        todo: list[tuple[str, tuple[list[str], int]]] = []
+        for part_dir, pfiles in groups:
+            small_p: list[str] = []
+            small_p_bytes = 0
+            for f in pfiles:
+                sz = fs.getFileStatus(_hpath(spark, f)).getLen()
+                if recluster or sz < target_bytes * small_ratio:
+                    small_p.append(f)
+                    small_p_bytes += sz
+            if len(small_p) >= (1 if recluster else 2):
+                todo.append((part_dir, (small_p, small_p_bytes)))
+        if not todo:
+            return Staged(MutationStats(len(all_files), 0, 0))
+        # same stage-all-then-swap discipline as the DML verbs (and the
+        # same pooled staging-jobs + fs-metadata phases)
+        results = _run_partition_stages(spark, path, todo, stage_one, created)
+        staged = [(d, p, s) for d, p, s, _ in results]
+        return Staged(
+            MutationStats(
+                len(all_files),
+                sum(len(p) for _, p, _ in staged),
+                sum(m for *_, m in results),
+            ),
+            publish=lambda _: _swap_staged(spark, path, staged, keep),
+            layout_only=True,
+        )
+
+    return run(spark, path, stage, what="compact")
 
 
 def _read_small_file(spark: SparkSession, path: str) -> bytes:
@@ -1526,7 +1509,7 @@ def repair_table(
     modification time is older than the threshold as crash debris — a live
     optimistic writer's staging is always younger than its attempt.
     """
-    jvm, fs, jpath = _fs(spark, path)
+    _, fs, jpath = _fs(spark, path)
     parent = jpath.getParent()
     base = jpath.getName()
     cutoff_ms = (time.time() - min_age_seconds) * 1000.0
@@ -1539,11 +1522,11 @@ def repair_table(
             and st.getModificationTime() <= cutoff_ms
         ):
             staging.append(st.getPath().toString())
-    lock = jvm.org.apache.hadoop.fs.Path(jpath, LOCK_FILE)
+    lock = _hpath(spark, jpath, LOCK_FILE)
     stale = lock.toString() if fs.exists(lock) else None
     if remove:
         for s in staging:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(s), True)
+            fs.delete(_hpath(spark, s), True)
         if stale:
             fs.delete(lock, False)
     return RepairReport(tuple(sorted(staging)), stale, remove)
@@ -1560,42 +1543,19 @@ def repair_table(
 # imports a submodule at module scope.
 _SUBMODULE_EXPORTS = {
     'CHECKPOINT_INTERVAL': 'versioning',
-    'CONSTRAINTS_FILE': 'constraints',
     'ConcurrentWriteConflict': 'occ',
     'ConstraintViolation': 'constraints',
-    '_ALTER_RE': 'dml_sql',
-    '_DELETE_RE': 'dml_sql',
-    '_EXPAND_CHUNK': 'versioning',
-    '_MERGE_RE': 'dml_sql',
-    '_NET_COL': 'versioning',
     '_SIGN_COL': 'versioning',
-    '_UPDATE_RE': 'dml_sql',
-    '_VERSION_RE': 'versioning',
-    '_WHEN_HEAD_RE': 'dml_sql',
     '_alias_rewrite': 'dml_sql',
     '_autoversion': 'versioning',
     '_compose_next_manifest': 'versioning',
-    '_constraints_doc': 'constraints',
-    '_create_snapshot_unlocked': 'versioning',
-    '_enforce_constraints': 'constraints',
-    '_find_top_keyword': 'dml_sql',
     '_find_top_where': 'dml_sql',
-    '_full_manifest_bytes': 'versioning',
     '_is_missing_file_error': 'occ',
     '_manifest_rel_files': 'versioning',
     '_manifest_state': 'versioning',
-    '_parse_commit_ts': 'versioning',
-    '_parse_merge_on': 'dml_sql',
-    '_read_pinned_files': 'versioning',
     '_resolve_pinned_files': 'versioning',
     '_segments': 'dml_sql',
-    '_split_assignments': 'dml_sql',
     '_split_depth0': 'dml_sql',
-    '_split_values': 'dml_sql',
-    '_split_when_clauses': 'dml_sql',
-    '_uri_path': 'occ',
-    '_violation': 'constraints',
-    '_write_constraints': 'constraints',
     'add_constraint': 'constraints',
     'create_snapshot': 'versioning',
     'current_version': 'versioning',

@@ -7,56 +7,58 @@ every mutating verb in :mod:`.mutate` / :mod:`.mor` already stages its
 change and then commits ONE manifest inside the writer lock, so a
 transaction is exactly that choke point held open across verbs.
 
-How it works (all metadata, no new data paths):
+One implementation, :class:`MultiTableTransaction`; a single-table
+:class:`Transaction` is that class over one path.  How it works (all
+metadata, no new data paths):
 
-1. ``begin(spark, path)`` takes the table's physical writer lock and
-   registers the transaction (``mutate._ACTIVE_TXNS``).  From here the
+1. ``begin(spark, path)`` / ``begin_multi(spark, paths)`` take every
+   member table's physical writer lock (canonical path order) and
+   register the transaction (``mutate._ACTIVE_TXNS``).  From here each
    lock is RE-ENTRANT for this thread only: every existing verb —
-   ``update_where``, ``delete_where``, ``merge_into``, ``compact``, the
-   ``dv_*`` merge-on-read verbs, ``execute_dml`` text statements — runs
-   unmodified inside the transaction, while any other thread or process
-   still hits the lock file and refuses (single-writer, as ever).
-2. Each verb stages + swaps as normal but its version commit and bloom
-   refresh are DEFERRED (``mutate._autoversion`` / ``_refresh_indexes``
-   consult the registry).  Intermediate states are visible to bare-path
-   readers — the same contract those readers always had on an
-   in-progress verb — while version readers (``read_version`` /
-   ``sql_at`` / CDC) see only committed manifests: the MVCC story is
-   unchanged, the transaction just makes several verbs one commit.
-3. ``commit()`` pops the registry entry and writes ONE version manifest
-   for the whole batch (the live-state delta against the previous
-   version IS the composed diff), runs one bloom refresh and one stats
-   staleness bump, then releases the lock.  CDC over that version emits
-   the NET change of the batch.
-4. ``rollback()`` restores the live file set to the last committed
-   manifest: files the batch retired move back from ``_retired/``
-   (rename, the :func:`~.mutate.restore_version` plan), files the batch
-   created are deleted — they are provably unpinned, since no manifest
-   was written after their (globally unique) names came into existence.
+   ``update_where``, ``delete_where``, ``merge_into``, ``compact``,
+   ``materialize_deletes``, the ``dv_*`` merge-on-read verbs,
+   ``execute_dml`` text statements — runs unmodified inside the
+   transaction, while any other thread or process still hits the lock
+   file and refuses (single-writer, as ever).
+2. Each verb stages + swaps as normal, and its post-commit sequence
+   (:func:`~.commit.committed`) marks the table dirty instead of writing
+   a version manifest and refreshing the bloom index.  Intermediate
+   states are visible to bare-path readers — the same contract those
+   readers always had on an in-progress verb — while version readers
+   (``read_version`` / ``sql_at`` / CDC) see only committed manifests.
+3. ``commit()`` writes ONE version manifest per dirty table (the
+   live-state delta against the previous version IS the composed diff,
+   so CDC over it emits the NET change of the batch), then runs the
+   post-commit sequence once per table and releases the locks.  With
+   exactly one dirty table the manifest's exclusive create is the atomic
+   commit point and no marker is written; with several, see below.
+4. ``rollback()`` restores each dirty table's live file set to its last
+   committed manifest: files the batch retired move back from
+   ``_retired/`` (the rename plan ``restore_version`` uses), files the
+   batch created are deleted — they are provably unpinned, since no
+   manifest was written after their (globally unique) names came into
+   existence.
+
+Several dirty tables commit TWO-PHASE: prepare every table's next
+manifest under a ``.prep`` name, decide with one exclusive-create marker
+file, then rename all.  The atomicity is DURABILITY-level: a crash after
+the marker rolls forward, before it rolls back (:func:`recover_tables`),
+so recovery always converges to all-tables-committed or none.  A
+concurrent version reader CAN catch the brief FINISH window where some
+members already show the new version and others do not (filesystem
+renames are per-table; closing that window needs a shared catalog).
 
 Crash contract: a transaction that dies before commit/rollback leaves
-the lock file and an uncommitted live state.  Nothing is lost (retire
+the lock files and an uncommitted live state.  Nothing is lost (retire
 moves, never deletes) and no version was committed, so version readers
-never saw the partial batch; :func:`recover_table` re-runs the rollback
-plan and removes the stale lock once the operator confirms the writer
-is dead (``force=True``).
+never saw the partial batch; :func:`recover_table` /
+:func:`recover_tables` re-run the rollback plan and remove the stale
+locks once the operator confirms the writer is dead (``force=True``).
 
 At 100 TB this is the same cost model as the verbs themselves: the
-transaction adds zero data I/O — one deferred manifest write, one
-rename/delete plan O(files the batch touched).
-
-Round 11 adds :class:`MultiTableTransaction` / :func:`begin_multi`:
-ONE atomic commit spanning several tables (atomic fact+dim upsert),
-via writer locks acquired in canonical order plus a TWO-PHASE manifest
-commit — prepare every table's next manifest under a ``.prep`` name,
-decide with one exclusive-create marker file, then rename all.  The
-atomicity is DURABILITY-level: a crash after the marker rolls forward,
-before it rolls back (:func:`recover_tables`), so recovery always
-converges to all-tables-committed or none.  A concurrent version
-reader CAN catch the brief FINISH window where some members already
-show the new version and others do not (filesystem renames are
-per-table; closing that window needs a shared catalog).  Still
-metadata-only: N small-file writes + N renames.
+transaction adds zero data I/O — one deferred manifest write per table
+(plus one marker when several commit), and a rename/delete plan
+O(files the batch touched) on rollback.
 """
 
 from __future__ import annotations
@@ -66,26 +68,26 @@ import threading
 
 from pyspark.sql import SparkSession
 
+from .commit import committed
 from .mutate import (
     LOCK_FILE,
     SNAPSHOT_DIR,
     _ACTIVE_TXNS,
     _TxnState,
     _acquire_writer_lock,
-    _autoversion,
-    _compose_next_manifest,
     _delete_files,
     _fs,
-    _manifest_state,
-    _mark_mutated,
+    _hpath,
     _read_small_file,
-    _refresh_indexes,
-    _rel_to_table,
     _release_writer_lock,
-    _resolve_pinned_files,
     _txn_key,
     _write_small_file,
-    list_data_files,
+)
+from .versioning import (
+    _VersionLog,
+    _autoversion,
+    _compose_next_manifest,
+    _restore_files,
     table_versions,
 )
 
@@ -121,190 +123,17 @@ def _rollback_to_committed(spark: SparkSession, path: str) -> int:
     """Make the live file set (data + deletion-vector batches) equal the
     last committed manifest again; returns files that changed liveness.
     Restores retired files FIRST (crash mid-rollback ⇒ superset, never
-    loss), then DELETES the uncommitted extras."""
-    from .mor import list_dv_files
-
-    vs = table_versions(spark, path)
-    root = path.rstrip("/")
-    target_files, target_dv = _manifest_state(spark, path, f"v{vs[-1]:08d}")
-    target_rel = set(target_files) | set(target_dv)
-    target_abs = [f"{root}/{r}" for r in target_files + target_dv]
-    current = list_data_files(spark, path, recursive=True) + list(
-        list_dv_files(spark, path)
+    loss), then DELETES the uncommitted extras: created after the last
+    commit, so no manifest pins them (COW staging never reuses names)."""
+    log = _VersionLog(spark, path)
+    last = log.versions[-1]
+    restored, extras, _ = _restore_files(
+        spark, path, log.states(last)[last], "transaction rollback"
     )
-    current_rel = {_rel_to_table(path, f) for f in current}
-    missing_abs = [
-        f for f in target_abs if _rel_to_table(path, f) not in current_rel
-    ]
-    extras = [
-        f for f in current if _rel_to_table(path, f) not in target_rel
-    ]
-    if missing_abs:
-        resolved = _resolve_pinned_files(
-            spark, path, missing_abs, "transaction rollback"
-        )
-        jvm, fs, _ = _fs(spark, path)
-        for orig, now_at in zip(missing_abs, resolved):
-            rel = _rel_to_table(path, orig)
-            dest = jvm.org.apache.hadoop.fs.Path(f"{root}/{rel}")
-            fs.mkdirs(dest.getParent())
-            if not fs.rename(jvm.org.apache.hadoop.fs.Path(now_at), dest):
-                raise IOError(
-                    f"rollback: rename {now_at} -> {dest} failed"
-                )
-    if extras:
-        # created after the last commit, so no manifest pins them (COW
-        # staging never reuses names): plain reclaim, not retire
-        _delete_files(spark, extras)
-    if missing_abs or extras:
-        spark.catalog.clearCache()
-    return len(missing_abs) + len(extras)
-
-
-class Transaction:
-    """A batch of DML verbs committing as ONE version (use via
-    :func:`begin`, usually as a context manager)::
-
-        with begin(spark, path) as txn:
-            update_where(spark, path, {"v": "v + 1"}, "k < 10")
-            delete_where(spark, path, "k = 99")
-            merge_into(spark, path, src, on=["k"], ...)
-        # clean exit -> txn.commit(): one manifest, CDC = the net diff
-        # exception  -> txn.rollback(): table byte-identical to before
-
-    Requires versioning (:func:`~.mutate.enable_versioning`): the last
-    committed manifest is both the commit baseline and the rollback
-    anchor.  Single-writer: the transaction holds the table's writer
-    lock for its whole span, so it should stay short-lived — it is a
-    batching construct, not a long-lived session.  Optimistic (``occ_*``)
-    verbs and maintenance verbs (vacuum / restore / drop_versions) are
-    refused inside a transaction.
-    """
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self._key = _txn_key(path)
-        self._state: _TxnState | None = None
-        self._rollback_only = False
-        if not table_versions(spark, path):
-            raise ValueError(
-                f"transactions require versioning on {path}; call "
-                "enable_versioning first (the committed manifest is the "
-                "rollback anchor)"
-            )
-        if self._key in _ACTIVE_TXNS:
-            raise RuntimeError(
-                f"a transaction is already open on {path} in this process"
-            )
-        _acquire_writer_lock(spark, path)
-        self._state = _TxnState(
-            path=path, owner=threading.get_ident()
-        )
-        _ACTIVE_TXNS[self._key] = self._state
-
-    # -- introspection ----------------------------------------------------
-    @property
-    def active(self) -> bool:
-        return self._state is not None
-
-    @property
-    def verbs_executed(self) -> int:
-        return self._state.verbs if self._state else 0
-
-    def _close(self) -> "_TxnState":
-        st = self._state
-        if st is None:
-            raise RuntimeError(
-                "transaction already committed or rolled back"
-            )
-        # pop BEFORE the commit/rollback work: _autoversion and
-        # _refresh_indexes must see no active txn when called back
-        _ACTIVE_TXNS.pop(self._key, None)
-        self._state = None
-        return st
-
-    def _reopen(self, st: "_TxnState") -> None:
-        """Commit/rollback work failed BEFORE reaching a resolved state:
-        restore the handle (registry entry + state) and keep the writer
-        lock, so the batch is still protected and the caller — or the
-        context manager's exception path — can rollback() or retry.
-        Discarding the handle here would leave the half-applied batch
-        unlocked, and the next writer's commit would silently fold it
-        into its own version."""
-        _ACTIVE_TXNS[self._key] = st
-        self._state = st
-
-    def commit(self) -> int | None:
-        """Write ONE version manifest for the whole batch (plus one bloom
-        refresh and one stats-staleness bump) and release the lock.
-        Returns the committed version number, or None if no verb changed
-        anything (a no-op batch commits no version — idempotent).  If the
-        manifest write itself fails, the transaction STAYS OPEN (lock
-        held, handle valid) — rollback() or retry."""
-        # closed-handle first: commit() after a SUCCESSFUL rollback must
-        # say "already resolved", not "retry rollback()"
-        if self._state is not None and self._rollback_only:
-            raise RuntimeError(
-                "a failed rollback() leaves the transaction "
-                "rollback-only (part of the batch may already be "
-                "undone) — retry rollback(), do not commit"
-            )
-        st = self._close()
-        if st.dirty:
-            try:
-                _autoversion(self.spark, self.path)
-            except BaseException:
-                self._reopen(st)
-                raise
-        # the version (if any) is committed from here on: maintenance
-        # hooks degrade-with-warning by design, and the lock must release
-        try:
-            if st.dirty:
-                _refresh_indexes(self.spark, self.path)
-                _mark_mutated(self.spark, self.path)
-                self.spark.catalog.clearCache()
-                return table_versions(self.spark, self.path)[-1]
-            return None
-        finally:
-            _release_writer_lock(self.spark, self.path)
-
-    def rollback(self) -> int:
-        """Undo every verb of the batch: live state returns to the last
-        committed manifest, uncommitted files are reclaimed.  Returns how
-        many files changed liveness.  If the restore plan fails midway,
-        the transaction STAYS OPEN (lock held, handle valid) — the plan
-        is rerunnable (restore-first ordering), so retry rollback()."""
-        st = self._close()
-        # once a rollback starts, commit() is forbidden: a partial undo
-        # folded into a later commit would publish a half-rolled state
-        self._rollback_only = True
-        changed = 0
-        if st.dirty:
-            try:
-                changed = _rollback_to_committed(self.spark, self.path)
-            except BaseException:
-                self._reopen(st)
-                raise
-        _release_writer_lock(self.spark, self.path)
-        return changed
-
-    # -- context manager: commit on clean exit, rollback on exception -----
-    def __enter__(self) -> "Transaction":
-        return self
-
-    def __exit__(self, exc_type, exc, tb) -> None:
-        if self._state is None:
-            return  # already resolved explicitly
-        if exc_type is None:
-            self.commit()
-        else:
-            self.rollback()
-
-
-def begin(spark: SparkSession, path: str) -> Transaction:
-    """Open a multi-statement transaction on a versioned table."""
-    return Transaction(spark, path)
+    _delete_files(spark, extras)
+    if restored or extras:
+        committed(spark, path, version=False)
+    return restored + len(extras)
 
 
 MULTI_COMMIT_MARKER = ".multi_commit.marker"  # not *.json: invisible to
@@ -326,10 +155,8 @@ def _final_path(path: str, version: int) -> str:
 
 
 def _list_prep_debris(spark: SparkSession, path: str) -> list[str]:
-    jvm, fs, _ = _fs(spark, path)
-    snap = jvm.org.apache.hadoop.fs.Path(
-        f"{path.rstrip('/')}/{SNAPSHOT_DIR}"
-    )
+    _, fs, _ = _fs(spark, path)
+    snap = _hpath(spark, f"{path.rstrip('/')}/{SNAPSHOT_DIR}")
     if not fs.exists(snap):
         return []
     return [
@@ -351,9 +178,9 @@ def _finish_multi_commit(spark: SparkSession, marker_abs: str) -> int:
     for entry in info["tables"]:
         t_path, version = entry["path"], entry["version"]
         # per-table fs handle: members may live on different stores
-        jvm, fs, _ = _fs(spark, t_path)
-        prep = jvm.org.apache.hadoop.fs.Path(_prep_path(t_path, version))
-        final = jvm.org.apache.hadoop.fs.Path(_final_path(t_path, version))
+        _, fs, _ = _fs(spark, t_path)
+        prep = _hpath(spark, _prep_path(t_path, version))
+        final = _hpath(spark, _final_path(t_path, version))
         if fs.exists(final):
             # this member already committed; stale prep (rename raced a
             # crash) is debris
@@ -371,10 +198,21 @@ def _finish_multi_commit(spark: SparkSession, marker_abs: str) -> int:
                 f"multi-table commit: rename {prep} -> {final} failed"
             )
         done += 1
-    m_jvm, m_fs, m_jpath = _fs(spark, marker_abs)
+    _, m_fs, m_jpath = _fs(spark, marker_abs)
     with contextlib.suppress(Exception):
         m_fs.delete(m_jpath, False)
     return done
+
+
+def _canonical(paths: list[str]) -> tuple[list[str], list[str]]:
+    """``(lock keys, paths)``, deduplicated on the key and sorted by it:
+    the global lock-acquisition order (no deadlocks between overlapping
+    sets)."""
+    by_key: dict[str, str] = {}
+    for p in paths:
+        by_key.setdefault(_txn_key(p), p)
+    keys = sorted(by_key)
+    return keys, [by_key[k] for k in keys]
 
 
 class MultiTableTransaction:
@@ -387,11 +225,10 @@ class MultiTableTransaction:
         # clean exit -> ONE new version on every changed table, decided
         #               atomically; exception -> every table rolls back
 
-    Built on the single-table machinery: every member table's writer
-    lock is held for the span (acquired in canonical path order — two
-    processes opening overlapping sets cannot deadlock, the later one
-    refuses), every verb defers its version commit exactly as inside
-    :class:`Transaction`, and COMMIT is TWO-PHASE:
+    Every member table's writer lock is held for the span (acquired in
+    canonical path order — two processes opening overlapping sets cannot
+    deadlock, the later one refuses) and every verb defers its version
+    commit.  With several dirty tables COMMIT is TWO-PHASE:
 
     1. PREPARE: each dirty table's next manifest is composed and written
        to a ``v<N>.json.prep`` sibling — invisible to version readers.
@@ -403,32 +240,34 @@ class MultiTableTransaction:
        (:func:`recover_tables` finishes the renames); a crash before it
        rolls BACK — recovery always converges to all-or-nothing.
 
+    With one dirty table the manifest is written directly: its exclusive
+    create is already atomic.
+
     Version readers (``read_version`` / CDC / time travel) see each
     table gain exactly one version.  The atomicity guarantee is
     durability-level: recovery can never leave table A committed and
     table B rolled back.  A concurrent reader racing the FINISH renames
     can briefly observe some members already at the new version
     (per-table filesystem renames; a shared catalog would close that
-    window).  Bare-path readers see intermediate states, the same
-    contract single-table transactions already document.
+    window).  Bare-path readers see intermediate states, as they do
+    during any in-progress verb.
+
+    Optimistic (``occ_*``) verbs and maintenance verbs (vacuum / restore
+    / drop_versions) are refused inside a transaction.  It should stay
+    short-lived: it is a batching construct, not a long-lived session.
     """
 
     def __init__(self, spark: SparkSession, paths: list[str]):
         self.spark = spark
         if not paths:
             raise ValueError("begin_multi needs at least one table path")
-        # canonical order: dedupe on the lock key, sort for a global
-        # acquisition order (no deadlocks between overlapping sets)
-        by_key: dict[str, str] = {}
-        for p in paths:
-            by_key.setdefault(_txn_key(p), p)
-        self._keys = sorted(by_key)
-        self.paths = [by_key[k] for k in self._keys]
+        self._keys, self.paths = _canonical(paths)
         for p in self.paths:
             if not table_versions(spark, p):
                 raise ValueError(
                     f"transactions require versioning on {p}; call "
-                    "enable_versioning first"
+                    "enable_versioning first (the committed manifest is "
+                    "the rollback anchor)"
                 )
         clash = [k for k in self._keys if k in _ACTIVE_TXNS]
         if clash:
@@ -466,6 +305,8 @@ class MultiTableTransaction:
         return sum(st.verbs for st in self._states.values())
 
     def _close_all(self) -> dict[str, _TxnState]:
+        """Pop the registry entries BEFORE the commit/rollback work: the
+        post-commit sequence must see no open transaction."""
         sts = self._states
         if sts is None:
             raise RuntimeError(
@@ -477,6 +318,13 @@ class MultiTableTransaction:
         return sts
 
     def _reopen_all(self, sts: dict[str, _TxnState]) -> None:
+        """Commit/rollback work failed BEFORE reaching a resolved state:
+        restore the handle (registry entries + states) and keep the
+        writer locks, so the batch is still protected and the caller — or
+        the context manager's exception path — can rollback() or retry.
+        Discarding the handle here would leave the half-applied batch
+        unlocked, and the next writer's commit would silently fold it
+        into its own version."""
         for k, st in sts.items():
             _ACTIVE_TXNS[k] = st
         self._states = sts
@@ -486,66 +334,27 @@ class MultiTableTransaction:
             with contextlib.suppress(Exception):
                 _release_writer_lock(self.spark, p)
 
-    def commit(self) -> dict[str, int]:
-        """Two-phase commit; returns ``{table path: new version}`` for
-        every table a verb changed (empty dict = no-op batch, nothing
-        committed).  Failures BEFORE the marker reopen the transaction
-        (preps reclaimed — rollback() or retry); a failure AFTER the
-        marker is a decided commit — finish it with
-        ``recover_tables(spark, paths, force=True)`` (in-process safe:
-        the handles are closed by then)."""
+    def _commit_two_phase(self, dirty: list[str], sts) -> dict[str, int]:
+        """PREPARE + DECIDE + FINISH over ``dirty`` (two or more tables);
+        returns ``{path: version}``.  A failure before the marker
+        reclaims the preps and reopens the transaction; a failure after
+        it is a decided commit."""
         import json
         from datetime import datetime, timezone
 
-        # closed-handle first: commit() after a SUCCESSFUL rollback must
-        # say "already resolved", not "retry rollback()"
-        if self._states is not None and self._rollback_only:
-            raise RuntimeError(
-                "a failed rollback() leaves the transaction "
-                "rollback-only (some tables may already be undone — "
-                "committing the rest would publish a half-rolled "
-                "batch) — retry rollback(), do not commit"
-            )
-        sts = self._close_all()
-        dirty = [
-            p
-            for k, p in zip(self._keys, self.paths)
-            if sts[k].dirty
-        ]
-        if not dirty:
-            self._release_all()
-            return {}
         prepared: list[tuple[str, int]] = []
-
-        def _reclaim_preps() -> None:
-            for p, v in prepared:
-                jvm, fs, _ = _fs(self.spark, p)  # per-table store
-                with contextlib.suppress(Exception):
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(_prep_path(p, v)),
-                        False,
-                    )
-
-        # phase 1 — PREPARE every dirty table (exclusive creates: a
-        # prep name collision means commit state debris; fail loudly)
         try:
+            # phase 1 — PREPARE every dirty table (exclusive creates: a
+            # prep name collision means commit state debris; fail loudly)
             for p in dirty:
-                composed = _compose_next_manifest(self.spark, p)
-                if composed is None:  # pragma: no cover - checked in init
-                    continue
-                nxt, data = composed
+                nxt, data = _compose_next_manifest(self.spark, p)
                 _write_small_file(
                     self.spark, _prep_path(p, nxt), data, overwrite=False
                 )
                 prepared.append((p, nxt))
-        except BaseException:
-            _reclaim_preps()
-            self._reopen_all(sts)
-            raise
-        # phase 2 — DECIDE: the marker's exclusive create is the atomic
-        # commit point for the whole set
-        marker = _marker_path(self.paths[0])
-        try:
+            # phase 2 — DECIDE: the marker's exclusive create is the
+            # atomic commit point for the whole set
+            marker = _marker_path(self.paths[0])
             _write_small_file(
                 self.spark,
                 marker,
@@ -563,28 +372,63 @@ class MultiTableTransaction:
                 overwrite=False,
             )
         except BaseException:
-            _reclaim_preps()
+            for p, v in prepared:
+                _, fs, _ = _fs(self.spark, p)  # per-table store
+                with contextlib.suppress(Exception):
+                    fs.delete(_hpath(self.spark, _prep_path(p, v)), False)
             self._reopen_all(sts)
             raise
         # phase 3 — FINISH: renames + marker delete; from here the
         # commit is decided and failures roll FORWARD, never back
         _finish_multi_commit(self.spark, marker)
+        return dict(prepared)
+
+    def commit(self) -> dict[str, int]:
+        """Commit the batch; returns ``{table path: new version}`` for
+        every table a verb changed (empty dict = no-op batch, nothing
+        committed).  A failure before the commit point reopens the
+        transaction (lock held, handle valid — rollback() or retry); a
+        failure AFTER a multi-table marker is a decided commit — finish
+        it with ``recover_tables(spark, paths, force=True)`` (in-process
+        safe: the handles are closed by then)."""
+        # closed-handle first: commit() after a SUCCESSFUL rollback must
+        # say "already resolved", not "retry rollback()"
+        if self._states is not None and self._rollback_only:
+            raise RuntimeError(
+                "a failed rollback() leaves the transaction "
+                "rollback-only (part of the batch may already be undone "
+                "— committing the rest would publish a half-rolled "
+                "batch) — retry rollback(), do not commit"
+            )
+        sts = self._close_all()
+        dirty = [p for k, p in zip(self._keys, self.paths) if sts[k].dirty]
+        if len(dirty) > 1:
+            out = self._commit_two_phase(dirty, sts)
+        else:
+            # one table (or none): the manifest's exclusive create is
+            # the atomic commit point, no marker needed
+            try:
+                for p in dirty:
+                    _autoversion(self.spark, p)
+            except BaseException:
+                self._reopen_all(sts)
+                raise
+            out = {p: table_versions(self.spark, p)[-1] for p in dirty}
+        # the versions are committed from here on: maintenance hooks
+        # degrade-with-warning by design, and the locks must release
         try:
-            for p, _v in prepared:
-                _refresh_indexes(self.spark, p)
-                _mark_mutated(self.spark, p)
-            self.spark.catalog.clearCache()
+            for p in out:
+                committed(self.spark, p, version=False)
         finally:
             self._release_all()
-        return dict(prepared)
+        return out
 
     def rollback(self) -> int:
         """Undo every verb on every member table; returns files that
         changed liveness across the set.  Rerunnable on failure (the
-        transaction stays open, same as the single-table contract) —
-        and from the first attempt on, the transaction is
-        ROLLBACK-ONLY: committing after a partial undo would publish a
-        half-rolled, half-committed batch."""
+        transaction stays open, lock held) — and from the first attempt
+        on, the transaction is ROLLBACK-ONLY: committing after a partial
+        undo would publish a half-rolled, half-committed batch."""
         sts = self._close_all()
         self._rollback_only = True
         changed = 0
@@ -599,12 +443,13 @@ class MultiTableTransaction:
         self._release_all()
         return changed
 
-    def __enter__(self) -> "MultiTableTransaction":
+    # -- context manager: commit on clean exit, rollback on exception -----
+    def __enter__(self):
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
         if self._states is None:
-            return
+            return  # already resolved explicitly
         if exc_type is None:
             self.commit()
         else:
@@ -616,6 +461,42 @@ def begin_multi(
 ) -> MultiTableTransaction:
     """Open one transaction spanning several versioned tables."""
     return MultiTableTransaction(spark, paths)
+
+
+class Transaction(MultiTableTransaction):
+    """A batch of DML verbs on one table committing as ONE version (use
+    via :func:`begin`, usually as a context manager)::
+
+        with begin(spark, path) as txn:
+            update_where(spark, path, {"v": "v + 1"}, "k < 10")
+            delete_where(spark, path, "k = 99")
+            merge_into(spark, path, src, on=["k"], ...)
+        # clean exit -> txn.commit(): one manifest, CDC = the net diff
+        # exception  -> txn.rollback(): table byte-identical to before
+
+    A :class:`MultiTableTransaction` over one path: it requires
+    versioning (:func:`~.mutate.enable_versioning` — the last committed
+    manifest is both the commit baseline and the rollback anchor) and
+    holds the table's writer lock for its whole span.
+    """
+
+    def __init__(self, spark: SparkSession, path: str):
+        super().__init__(spark, [path])
+        self.path = path
+
+    def commit(self) -> int | None:
+        """Write ONE version manifest for the whole batch (plus one bloom
+        refresh and one stats-staleness bump) and release the lock.
+        Returns the committed version number, or None if no verb changed
+        anything (a no-op batch commits no version — idempotent).  If the
+        manifest write itself fails, the transaction STAYS OPEN (lock
+        held, handle valid) — rollback() or retry."""
+        return next(iter(super().commit().values()), None)
+
+
+def begin(spark: SparkSession, path: str) -> Transaction:
+    """Open a multi-statement transaction on a versioned table."""
+    return Transaction(spark, path)
 
 
 def recover_tables(
@@ -645,11 +526,7 @@ def recover_tables(
     changed."""
     import json
 
-    by_key: dict[str, str] = {}
-    for p in paths:
-        by_key.setdefault(_txn_key(p), p)
-    keys = sorted(by_key)
-    plist = [by_key[k] for k in keys]
+    keys, plist = _canonical(paths)
     open_here = [k for k in keys if k in _ACTIVE_TXNS]
     if open_here:
         raise RuntimeError(
@@ -657,15 +534,14 @@ def recover_tables(
             "process — commit() or rollback() it instead"
         )
 
-    def _tfs(p: str):
-        return _fs(spark, p)  # per-table store
+    def _lock(p: str):
+        _, fs, jpath = _fs(spark, p)  # per-table store
+        return fs, _hpath(spark, jpath, LOCK_FILE)
 
     locks_held = []
     for p in plist:
-        jvm, fs, _ = _tfs(p)
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(p.rstrip("/"), LOCK_FILE)
-        ):
+        fs, lock = _lock(p)
+        if fs.exists(lock):
             locks_held.append(p)
     if locks_held and not force:
         raise RecoveryNeedsForce(
@@ -678,19 +554,18 @@ def recover_tables(
     # commit; tables a finished marker covers must not then roll back
     handled: set[str] = set()
     for p in plist:
-        jvm, fs, _ = _tfs(p)
+        _, fs, _ = _fs(spark, p)
         marker = _marker_path(p)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(marker)):
+        if fs.exists(_hpath(spark, marker)):
             info = json.loads(_read_small_file(spark, marker))
             changed += _finish_multi_commit(spark, marker)
             for entry in info["tables"]:
-                _mark_mutated(spark, entry["path"])
+                committed(spark, entry["path"], version=False)
                 handled.add(_txn_key(entry["path"]))
                 # marker-listed members the caller forgot to pass still
                 # hold the dead writer's lock; force covers them too
-                if force and _txn_key(entry["path"]) not in by_key:
+                if force and _txn_key(entry["path"]) not in keys:
                     locks_held.append(entry["path"])
-            spark.catalog.clearCache()
     for k, p in zip(keys, plist):
         if k in handled:
             continue
@@ -708,18 +583,15 @@ def recover_tables(
             )
         if table_versions(spark, p):
             changed += _rollback_to_committed(spark, p)
-        jvm, fs, _ = _tfs(p)
+        _, fs, _ = _fs(spark, p)
         for prep in debris:
             with contextlib.suppress(Exception):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(prep), False)
+                fs.delete(_hpath(spark, prep), False)
                 changed += 1
     for p in locks_held:
-        jvm, fs, _ = _tfs(p)
+        fs, lock = _lock(p)
         with contextlib.suppress(Exception):
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(p.rstrip("/"), LOCK_FILE),
-                False,
-            )
+            fs.delete(lock, False)
     return changed
 
 
@@ -736,8 +608,8 @@ def recover_table(
             f"a transaction on {path} is still open in THIS process — "
             "commit() or rollback() it instead"
         )
-    jvm, fs, table_path = _fs(spark, path)
-    lock = jvm.org.apache.hadoop.fs.Path(table_path, LOCK_FILE)
+    _, fs, table_path = _fs(spark, path)
+    lock = _hpath(spark, table_path, LOCK_FILE)
     lock_held = fs.exists(lock)
     if lock_held and not force:
         raise RecoveryNeedsForce(
@@ -754,7 +626,7 @@ def recover_table(
     # this table was mid-multi-commit and the decision lives on another
     # table.  A single-table rollback would break cross-table atomicity
     # — route to recover_tables with the full set.
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(_marker_path(path))):
+    if fs.exists(_hpath(spark, _marker_path(path))):
         raise RuntimeError(
             f"{path} holds a multi-table commit marker — that commit "
             "was decided and must roll FORWARD: run recover_tables "

@@ -22,7 +22,6 @@ from .mor import (
     _read_dv_files,
     attach_identity,
     list_dv_files,
-    refresh_cached,
 )
 from .mutate import (
     MutationStats,
@@ -30,13 +29,10 @@ from .mutate import (
     SNAPSHOT_DIR,
     _fs,
     _hpath,
-    _mark_mutated,
     _read_small_file,
-    _refresh_indexes,
     _refuse_in_txn,
     _rel_to_table,
     _retire_files,
-    _txn_state,
     _write_small_file,
     _writer_lock,
     list_data_files,
@@ -329,6 +325,46 @@ def _resolve_pinned_files(
     return resolved
 
 
+def _restore_files(
+    spark: SparkSession,
+    path: str,
+    target: tuple[list[str], list[str]],
+    what: str,
+) -> tuple[int, list[str], set[str]]:
+    """The rename plan RESTORE and transaction rollback share: make the
+    live file set (data files and deletion-vector batches alike — both
+    are immutable named blobs whose relative path the manifests and the
+    ``_retired/`` batches preserve) a superset of ``target``, the
+    ``(data, dv)`` relative lists a manifest pins, by moving each pinned
+    file missing from it back to its original slot.
+
+    Returns the number of files brought back, the live files ``target``
+    does not pin, and the live relative paths before the plan ran.  The
+    caller removes the extras AFTER this returns (RESTORE retires them,
+    rollback deletes them), so a crash in between leaves a superset of
+    the target, never a loss, and rerunning converges."""
+    root = path.rstrip("/")
+    target_files, target_dv = target
+    current = list_data_files(spark, path, recursive=True) + list_dv_files(
+        spark, path
+    )
+    live_rel = {_rel_to_table(path, f) for f in current}
+    pinned = set(target_files) | set(target_dv)
+    missing = [
+        f"{root}/{r}" for r in target_files + target_dv if r not in live_rel
+    ]
+    extras = [f for f in current if _rel_to_table(path, f) not in pinned]
+    if missing:
+        resolved = _resolve_pinned_files(spark, path, missing, what)
+        _, fs, _ = _fs(spark, path)
+        for orig, now_at in zip(missing, resolved):
+            dest = _hpath(spark, orig)
+            fs.mkdirs(dest.getParent())
+            if not fs.rename(_hpath(spark, now_at), dest):
+                raise IOError(f"{what}: rename {now_at} -> {dest} failed")
+    return len(missing), extras, live_rel
+
+
 def _data_schema(spark: SparkSession, files: list[str]) -> StructType:
     """The merged footer schema of ``files`` — one job, whatever the
     number of base dirs they sit under.  Data columns only:
@@ -600,15 +636,8 @@ def _compose_next_manifest(
 
 
 def _autoversion(spark: SparkSession, path: str) -> None:
-    # caller (the DML commit loop / compact) already holds the lock
-    st = _txn_state(path)
-    if st is not None:
-        # verb ran inside a multi-statement transaction: defer — the
-        # Transaction.commit() pops the registry entry first, so ITS
-        # _autoversion call lands here with st None and writes the ONE
-        # manifest for the whole batch
-        st.dirty = True
-        return
+    # the caller holds the writer lock; inside an open transaction
+    # commit.committed defers to the transaction's commit instead
     composed = _compose_next_manifest(spark, path)
     if composed is None:
         return
@@ -726,6 +755,8 @@ def restore_version(
     ``files_rewritten`` in the returned stats counts files that changed
     liveness (restored + retired); ``rows_matched`` is 0 (no row work).
     """
+    from .commit import committed
+
     # the last committed manifest is an open transaction's rollback
     # anchor — moving it mid-batch would corrupt the rollback plan
     _refuse_in_txn(path, "restore_version")
@@ -734,26 +765,10 @@ def restore_version(
         log.require(version)
         latest = log.versions[-1]
         states = log.states(version, latest)
-        root_ = path.rstrip("/")
-        target_files, target_dv = states[version]
-        # data files and deletion-vector batch files restore uniformly:
-        # both are immutable named blobs whose rel path the manifests and
-        # _retired/ batches preserve — one rename plan covers the pair
-        target_abs = [f"{root_}/{r}" for r in target_files + target_dv]
-        target_rel = set(target_files) | set(target_dv)
-        current = list_data_files(spark, path, recursive=True) + list(
-            list_dv_files(spark, path)
+        restored, extras, live_rel = _restore_files(
+            spark, path, states[version], f"restore to version {version}"
         )
-        current_rel = {_rel_to_table(path, f) for f in current}
-        missing_abs = [
-            f
-            for f in target_abs
-            if _rel_to_table(path, f) not in current_rel
-        ]
-        extras = [
-            f for f in current if _rel_to_table(path, f) not in target_rel
-        ]
-        if not missing_abs and not extras:
+        if not restored and not extras:
             # already at the target BYTES — but only a true no-op if the
             # latest committed manifest agrees with the live set.  After a
             # crash between a previous restore's renames and its commit,
@@ -761,32 +776,16 @@ def restore_version(
             # otherwise; the documented recovery is "rerun the restore",
             # so the rerun must finish the job by committing the version.
             lf, ldv = states[latest]
-            latest_rel = set(lf) | set(ldv)
-            if latest_rel != current_rel:
-                _autoversion(spark, path)
-                _mark_mutated(spark, path)
-                refresh_cached(spark, path)
-            return MutationStats(len(current), 0, 0)
-        # 1) bring back retired files FIRST (crash ⇒ superset, never loss)
-        resolved = _resolve_pinned_files(
-            spark, path, missing_abs, f"restore to version {version}"
-        )
-        _, fs, _ = _fs(spark, path)
-        for orig, now_at in zip(missing_abs, resolved):
-            rel = _rel_to_table(path, orig)
-            dest = _hpath(spark, f"{root_}/{rel}")
-            fs.mkdirs(dest.getParent())
-            if not fs.rename(_hpath(spark, now_at), dest):
-                raise IOError(f"restore: rename {now_at} -> {dest} failed")
-        # 2) retire the post-``version`` files (older manifests may still
-        #    pin some of them — retire, never delete)
+            if set(lf) | set(ldv) != live_rel:
+                committed(spark, path)
+            return MutationStats(len(live_rel), 0, 0)
+        # the post-``version`` files retire AFTER the restore renames
+        # (older manifests may still pin some of them — retire, never
+        # delete)
         _retire_files(spark, path, extras)
-        _autoversion(spark, path)
-        _refresh_indexes(spark, path)
-        _mark_mutated(spark, path)
-        refresh_cached(spark, path)
+        committed(spark, path)
         return MutationStats(
-            len(target_abs), len(missing_abs) + len(extras), 0
+            sum(map(len, states[version])), restored + len(extras), 0
         )
 
 

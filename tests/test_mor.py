@@ -1272,3 +1272,38 @@ def test_execute_dml_mor_optimistic_verbs(spark, tmp_path):
     assert out.count() == 92
     assert out.where("v = -7.0").count() == 6
     assert out.where("v = -1.0").count() == 1  # k=95 kept the UPDATE
+
+
+def test_materialize_rerun_drops_stale_vectors_and_commits(spark, tmp_path):
+    """A materialize that crashed after swapping a file in leaves vectors
+    keyed to the replaced name.  The rerun rewrites nothing, yet it must
+    drop that store (the COW verbs refuse a table with vectors) and
+    commit the change as a version."""
+    import os
+    import shutil
+
+    path = _flat(spark, tmp_path)
+    m.enable_versioning(spark, path)                            # v1
+    assert dv_delete_where(spark, path, "k < 5") == 5           # v2
+    # the crashed run's swap: the tombstoned file's rewrite moved in,
+    # the original retired
+    (old,) = {
+        r["src_file"] for r in spark.read.parquet(f"{path}/_dv").collect()
+    }
+    spark.read.parquet(f"{path}/{old}").where("k >= 5").write.parquet(
+        f"{path}__crashed"
+    )
+    for f in m.list_data_files(spark, f"{path}__crashed"):
+        shutil.move(f.removeprefix("file:"), f"{path}/part-rewritten.parquet")
+    shutil.rmtree(f"{path}__crashed")
+    retired = f"{path}/_retired/crashed"
+    os.makedirs(retired)
+    shutil.move(f"{path}/{old}", f"{retired}/{old}")
+    assert has_deletion_vectors(spark, path)
+    st = materialize_deletes(spark, path)                       # v3
+    assert st.files_rewritten == 1
+    assert not has_deletion_vectors(spark, path)
+    assert m.table_versions(spark, path) == [1, 2, 3]
+    assert spark.read.parquet(path).count() == 95
+    assert m.read_version(spark, path, 2).count() == 95
+    assert m.delete_where(spark, path, "k = 50").rows_matched == 1

@@ -785,7 +785,7 @@ def test_repl_recover_verb(engine, tmp_path):
 
     delete_where(engine.spark, path, "k >= 0")
     _ACTIVE_TXNS.clear()  # the process died; lock + live state remain
-    txn._state = None
+    txn._states = None
     # plain RECOVER refuses while the lock file exists: deleting a
     # possibly-live writer's lock needs the explicit FORCE confirmation
     out = handle(engine, "RECOVER rc", tables, settings=settings)

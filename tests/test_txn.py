@@ -203,7 +203,7 @@ def test_recover_table_after_crash(spark, tmp_path):
     from sql_query_optimizer_cpp_spark.operators.mutate import _ACTIVE_TXNS
 
     _ACTIVE_TXNS.clear()
-    txn._state = None  # the handle is gone with the process
+    txn._states = None  # the handle is gone with the process
     # in-process refuse without force (the lock exists)
     with pytest.raises(RuntimeError, match="force=True"):
         recover_table(spark, path)

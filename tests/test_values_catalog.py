@@ -145,3 +145,63 @@ def test_load_tables_memo_survives_compact(spark, tmp_path):
     second = load_tables(spark, sf_dir, ("nation",))["nation"]
     assert second is not first, "compact must invalidate the listing memo"
     assert sorted(map(tuple, second.collect()), key=repr) == rows_before
+
+
+def _memo_fixture(spark, tmp_path):
+    """A 4-file nation table under a scratch sf_dir: ``(sf_dir, path)``."""
+    from sql_query_optimizer_cpp_spark.catalog import load_tables, table_path
+
+    sf_dir = str(tmp_path / "sf")
+    (tmp_path / "sf").mkdir()
+    path = table_path(sf_dir, "nation")
+    src = load_tables(spark, SF_DIR, ("nation",))["nation"]
+    src.repartition(4).write.mode("overwrite").parquet(path)
+    return sf_dir, path
+
+
+def _nation(spark, sf_dir):
+    from sql_query_optimizer_cpp_spark.catalog import load_tables
+
+    return load_tables(spark, sf_dir, ("nation",))["nation"]
+
+
+def test_load_tables_relists_after_materialize_deletes(spark, tmp_path):
+    """materialize_deletes rewrites the tombstoned files and deletes the
+    originals: a memoized definition pinned to them must not be served
+    afterwards (it would FileNotFound), and the base scan now drops the
+    tombstoned rows."""
+    from sql_query_optimizer_cpp_spark.operators.mor import (
+        dv_delete_where,
+        materialize_deletes,
+    )
+
+    sf_dir, path = _memo_fixture(spark, tmp_path)
+    assert dv_delete_where(spark, path, "n_nationkey < 5") == 5
+    pinned = _nation(spark, sf_dir)
+    assert pinned.count() == 25  # base scan: tombstones not applied
+    st = materialize_deletes(spark, path)
+    assert st.files_rewritten > 0, "fixture must actually rewrite"
+    after = _nation(spark, sf_dir)
+    assert after.count() == 20
+    assert after.where("n_nationkey < 5").count() == 0
+    assert after is not pinned, "materialize must invalidate the memo"
+
+
+def test_load_tables_relists_after_transaction_rollback(spark, tmp_path):
+    """A rollback deletes the files the batch created and brings the
+    retired ones back: a definition memoized mid-transaction is pinned to
+    the deleted files and must not be served afterwards."""
+    from sql_query_optimizer_cpp_spark.operators import mutate as m
+    from sql_query_optimizer_cpp_spark.operators.txn import begin
+
+    sf_dir, path = _memo_fixture(spark, tmp_path)
+    rows_before = sorted(map(tuple, _nation(spark, sf_dir).collect()))
+    m.enable_versioning(spark, path)
+    txn = begin(spark, path)
+    m.delete_where(spark, path, "n_nationkey < 5")
+    pinned = _nation(spark, sf_dir)
+    assert pinned.count() == 20
+    assert txn.rollback() > 0
+    after = _nation(spark, sf_dir)
+    assert sorted(map(tuple, after.collect())) == rows_before
+    assert after is not pinned, "rollback must invalidate the memo"

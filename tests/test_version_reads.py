@@ -1,7 +1,8 @@
 """Version-log reads (operators/versioning.py, operators/mor.py): how much
 work BUILDING a time-travel / change-feed frame may do before its action
-runs, and the path-scoped cache refresh of the metadata-only commits
-(materialize_deletes, restore_version)."""
+runs, and the path-scoped cache refresh of the commits outside the DML
+verbs (materialize_deletes, restore_version, compact, and transaction
+commit, rollback and recovery)."""
 
 from __future__ import annotations
 
@@ -207,3 +208,73 @@ def test_materialize_and_restore_refresh_frames_over_the_table(
     finally:
         base.unpersist()
         live.unpersist()
+
+
+def _crash_in_txn(spark, path, verb):
+    """Run ``verb`` inside a transaction whose process then dies: the
+    registry entry is gone, the lock and the uncommitted state remain."""
+    from sql_query_optimizer_cpp_spark.operators.mutate import _ACTIVE_TXNS
+    from sql_query_optimizer_cpp_spark.operators.txn import begin
+
+    txn = begin(spark, path)
+    verb()
+    _ACTIVE_TXNS.clear()
+    txn._states = None
+
+
+def _compact_and_txn_calls(spark, path):
+    """``(name, call, rows the table holds after it)`` for compact and
+    transaction commit, rollback and crash recovery on a 100-row table."""
+    from sql_query_optimizer_cpp_spark.operators.txn import begin, recover_table
+
+    def commit():
+        with begin(spark, path):
+            m.delete_where(spark, path, "k < 10")
+
+    def rollback():
+        txn = begin(spark, path)
+        m.delete_where(spark, path, "k < 20")
+        assert txn.rollback() > 0
+
+    def recover():
+        _crash_in_txn(
+            spark, path, lambda: m.update_where(spark, path, {"k": "-k"}, "k < 50")
+        )
+        assert recover_table(spark, path, force=True) > 0
+
+    return [
+        ("compact", lambda: m.compact(spark, path), 100),
+        ("commit", commit, 90),
+        ("rollback", rollback, 90),
+        ("recover_table", recover, 90),
+    ]
+
+
+def test_compact_and_transactions_keep_unrelated_cached_frames(
+    spark, tmp_path, unrelated
+):
+    path = _table(spark, tmp_path)
+    m.enable_versioning(spark, path)
+    for name, call, _ in _compact_and_txn_calls(spark, path):
+        call()
+        level = unrelated.storageLevel
+        assert level.useMemory or level.useDisk, name
+        assert unrelated.count() == 25, name
+
+
+def test_compact_and_transactions_refresh_frames_over_the_table(
+    spark, tmp_path
+):
+    """A frame persisted over the table counts the rows each call
+    leaves, and reads no file the call removed."""
+    path = _table(spark, tmp_path)
+    m.enable_versioning(spark, path)
+    base = spark.read.parquet(path).persist()
+    try:
+        assert base.count() == 100
+        for name, call, rows in _compact_and_txn_calls(spark, path):
+            call()
+            assert base.count() == rows, name
+            assert base.where("k < 0").count() == 0, name
+    finally:
+        base.unpersist()
