@@ -8,6 +8,14 @@ use MEMORY_AND_DISK explicitly: un-released caches are LRU-evicted by the
 block manager (spilling to disk first), so accumulation degrades
 gracefully rather than failing — but callers that materialize a result
 should still call release_cached() when done.
+
+A plan that is already cached (by an earlier call over the same plan, e.g.
+a repeated rollup) is returned as is and not tracked again, so repeated
+calls add no handle here.  In an engine session (``session._DEFAULTS``)
+AQE coalesces each cached plan's final shuffle, so a cache over a shuffle
+is stored and re-read at its data's size rather than as
+``spark.sql.shuffle.partitions`` blocks; an explicit ``repartition(n)``
+keeps its ``n`` partitions.
 """
 
 from __future__ import annotations
@@ -19,6 +27,9 @@ _PERSISTED: list[DataFrame] = []
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
+    level = df.storageLevel
+    if level.useMemory or level.useDisk:
+        return df
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _PERSISTED.append(df)
     return df

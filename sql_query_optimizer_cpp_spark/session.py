@@ -20,9 +20,7 @@ import os
 from pyspark.sql import SparkSession
 
 # Defaults chosen for local[$SPARK_GRAFT_CPUS] testing; on a real cluster the
-# same knobs apply, only master/memory change.  Shuffle partitions track core
-# count locally; at 100 TB you would size this to ~2-3x total executor cores
-# (AQE coalesces down, so err high).
+# same knobs apply, only master/memory change.
 _DEFAULTS: dict[str, str] = {
     # Spark's 1g driver default is sized for a thin cluster client, not a
     # local[32] engine: one long-lived session that plans/caches hundreds
@@ -31,10 +29,28 @@ _DEFAULTS: dict[str, str] = {
     # ConnectionRefused cascade.  Builder-time only; ignored by already-
     # running embedder JVMs.
     "spark.driver.memory": "8g",
+    # A fixed 32, not the core count: AQE coalesces every reduce side
+    # (caches included, below), so the count bounds the task count rather
+    # than setting it.  Interleaved A/Bs of 32 against 2 over the 19
+    # perfbench olap_interactive ops (4-vCPU host, 2 Spark cores, caches
+    # coalesced on both sides) moved their pass CPU by at most 3% (32 -> 2:
+    # 7.00 s -> 6.79 s in one A/B, 7.03 s -> 7.00 s in another), no single
+    # op beyond noise.  At 100 TB size it to ~2-3x total executor cores (AQE
+    # coalesces down, so err high).
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce a persisted plan's final shuffle like any other
+    # query output.  Spark's default (false) stores every persist() over a
+    # shuffle as exactly spark.sql.shuffle.partitions blocks, so each later
+    # read schedules 32 tasks in 2 jobs whatever the frame's size; coalesced,
+    # a small cache is one block read by one task.  An explicit
+    # repartition(n, ...) count is kept (AQE does not coalesce a shuffle
+    # whose partition count the query fixed), so the co-partitioned
+    # layouts operators/dedup.py persists still join without a second
+    # exchange (tests/test_session.py).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.cbo.enabled": "true",
     "spark.sql.cbo.joinReorder.enabled": "true",
     "spark.sql.statistics.histogram.enabled": "true",

@@ -294,6 +294,29 @@ def test_rollup_reaggregation_randomized(spark):
     release_cached()
 
 
+def test_repeated_rollup_tracks_one_cache(spark):
+    """Rolling up the same events again reuses the cached hour partials:
+    no second persist and no second tracked handle, and release_cached()
+    still frees the cache."""
+    from sql_query_optimizer_cpp_spark.operators import cache
+    from sql_query_optimizer_cpp_spark.operators.rollup import (
+        grain_partials,
+        hierarchical_rollup,
+    )
+
+    cache.release_cached()
+    ev = load_tables(spark, SF_DIR, ("events",))["events"]
+    counts = []
+    for _ in range(3):
+        hierarchical_rollup(ev, "ts", "event_type", "value").count()
+        counts.append(len(cache._PERSISTED))
+    assert counts == [1, 1, 1]
+    hour = grain_partials(ev, "ts", "event_type", "value", "hour")
+    assert hour.storageLevel.useMemory
+    assert cache.release_cached() == 1
+    assert not hour.storageLevel.useMemory and not hour.storageLevel.useDisk
+
+
 def test_lsh_multiprobe_recall_on_planted_twins(spark):
     """LSH recall measured the honest way: random fixture vectors have no
     true near neighbors (bucket probing can't 'find' structure that isn't
