@@ -224,8 +224,12 @@ def train_pq(
     would otherwise overwrite ``(sub, code, pos)`` entries in collect
     order and break bit-exact determinism.  Without identity columns,
     training assumes unique ids (assignment never does — see
-    ``_rowkey`` in the index builders)."""
-    from .similarity import training_sample
+    ``_rowkey`` in the index builders).
+
+    ``sample``: a caller-owned, persisted :func:`.similarity.training_sample`
+    frame (see :func:`.similarity.kmeans_centroids`); raises ``ValueError``
+    unless it was drawn with this call's ``sample_mod``."""
+    from .similarity import _caller_sample, training_sample
 
     spark = df.sparkSession
     dsub = dim // n_subs
@@ -236,7 +240,7 @@ def train_pq(
     # its two trainers (same sample predicate by construction).
     caller_owned = sample is not None
     sdf = (
-        sample
+        _caller_sample(sample, sample_mod)
         if caller_owned
         else training_sample(df, sample_mod, id_col, emb_col).persist()
     )

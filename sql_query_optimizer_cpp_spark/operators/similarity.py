@@ -739,7 +739,9 @@ def training_sample(
     :func:`kmeans_centroids` and :func:`..pq.train_pq` derived inline
     before r15.  Factored out so a composite build (IVFPQ: coarse k-means
     AND PQ sub-quantizers over the SAME sample predicate) derives and
-    persists the sample ONCE instead of once per trainer."""
+    persists the sample ONCE instead of once per trainer.  The frame
+    records the ``sample_mod`` it was drawn with, which each trainer
+    checks against its own (:func:`_caller_sample`)."""
     sdf = df.where((F.col(id_col) % sample_mod) == 0).select(id_col, emb_col)
     if {"src_file", "row_idx"} <= set(df.columns):
         one = W.partitionBy(id_col).orderBy("src_file", "row_idx")
@@ -750,7 +752,23 @@ def training_sample(
             .select(id_col, emb_col)
         )
     # _spread parallelizes the per-row assignment arithmetic locally
-    return _spread(sdf)
+    out = _spread(sdf)
+    out._training_sample_mod = sample_mod
+    return out
+
+
+def _caller_sample(sample: DataFrame, sample_mod: int) -> DataFrame:
+    """``sample`` if :func:`training_sample` drew it with ``sample_mod``;
+    a trainer handed any other frame would silently train on a sample
+    its ``sample_mod`` argument does not describe."""
+    drawn = getattr(sample, "_training_sample_mod", None)
+    if drawn != sample_mod:
+        raise ValueError(
+            f"sample was drawn with sample_mod={drawn} (None: not a "
+            f"training_sample frame), not the sample_mod={sample_mod} "
+            "this trainer was asked for"
+        )
+    return sample
 
 
 def kmeans_centroids(
@@ -795,14 +813,15 @@ def kmeans_centroids(
     :func:`training_sample` frame, already persisted by the caller, who
     keeps lifecycle responsibility.  Lets :func:`..pq.build_ivfpq_index`
     share ONE cached sample between its two trainers instead of
-    materializing the identical frame twice."""
+    materializing the identical frame twice.  Raises ``ValueError``
+    unless it was drawn with this call's ``sample_mod``."""
     spark = df.sparkSession
     # the sample feeds the seed collect plus one scan per iteration; at
     # 100 TB re-deriving it from the corpus each pass would multiply the
     # training read by iters+1 (guide §5: reuse justifies the cache)
     caller_owned = sample is not None
     sdf = (
-        sample
+        _caller_sample(sample, sample_mod)
         if caller_owned
         else training_sample(df, sample_mod, id_col, emb_col).persist()
     )

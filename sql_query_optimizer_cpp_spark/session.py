@@ -24,11 +24,24 @@ from pyspark.sql import SparkSession
 _DEFAULTS: dict[str, str] = {
     # Spark's 1g driver default is sized for a thin cluster client, not a
     # local[32] engine: one long-lived session that plans/caches hundreds
-    # of distinct queries (codegen classes, broadcasts, AQE stats) will
+    # of distinct queries (broadcasts, cached frames, AQE stats) will
     # eventually OOM the 1g JVM — observed as a mid-suite py4j
-    # ConnectionRefused cascade.  Builder-time only; ignored by already-
-    # running embedder JVMs.
+    # ConnectionRefused cascade.  Compiled codegen classes load into
+    # Metaspace, outside this heap; their cache is bounded below.
+    # Builder-time only; ignored by already-running embedder JVMs.
     "spark.driver.memory": "8g",
+    # Spark keeps compiled whole-stage and expression classes in one
+    # JVM-wide LRU cache of this many entries; its default is 100.  One
+    # perfbench olap_interactive pass needs about 186 distinct classes
+    # (2 for scalar_subquery_agg, 21 for tpch_q5), so at 100 a session
+    # cycling through the queries evicts most classes before they are
+    # reused and recompiles 138-184 of them through Janino on each warm
+    # pass (4-vCPU host, sf0.01); at 1000 a warm pass compiles none.  A
+    # lakehouse_rw pass still compiles 20-40 one-off classes (17 per
+    # copy-on-write MERGE) that no cache size reuses: per-statement
+    # literals inlined into generated code.  Builder-time only (a static
+    # conf); an embedder's already-running JVM keeps its own value.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # A fixed 32, not the core count: AQE coalesces every reduce side
     # (caches included, below), so the count bounds the task count rather
     # than setting it.  Interleaved A/Bs of 32 against 2 over the 19

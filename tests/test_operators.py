@@ -3,6 +3,7 @@ skew-salted aggregation equivalence and as-of join edge cases."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sql_query_optimizer_cpp_spark.catalog import load_tables
@@ -1513,6 +1514,26 @@ def test_pq_encode_shapes_and_adc_recall(spark):
     plan = approx._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("trainer", ["kmeans_centroids", "train_pq"])
+def test_trainer_rejects_sample_of_another_mod(spark, trainer):
+    """A caller-owned ``sample=`` must have been drawn with the trainer's
+    own ``sample_mod``: a sample of another mod, or a frame that is not a
+    ``training_sample`` at all, raises instead of training silently on a
+    sample the arguments do not describe."""
+    from sql_query_optimizer_cpp_spark.operators import pq as PQ
+    from sql_query_optimizer_cpp_spark.operators import similarity as S
+
+    train = {"kmeans_centroids": S.kmeans_centroids, "train_pq": PQ.train_pq}[
+        trainer
+    ]
+    emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
+    sample = S.training_sample(emb, 3)
+    with pytest.raises(ValueError, match="sample_mod=3"):
+        train(emb, sample_mod=5, sample=sample)
+    with pytest.raises(ValueError, match="not a training_sample"):
+        train(emb, sample_mod=3, sample=emb)
 
 
 def test_ivfpq_prunes_and_scores_like_adc(spark):

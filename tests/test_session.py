@@ -1,9 +1,11 @@
-"""Cache layout under the engine session's defaults (``session._DEFAULTS``):
-AQE coalesces a persisted plan's final shuffle to its data's size, and an
-explicit ``repartition(n, col)`` layout survives the persist."""
+"""Caches under the engine session's defaults (``session._DEFAULTS``): AQE
+coalesces a persisted plan's final shuffle to its data's size, an explicit
+``repartition(n, col)`` layout survives the persist, and the generated-code
+cache holds a working set larger than Spark's default of 100 classes."""
 
 from __future__ import annotations
 
+import functools
 import uuid
 
 from pyspark.sql import functions as F
@@ -101,3 +103,31 @@ def test_persisted_repartition_keeps_its_layout(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         edges.unpersist()
+
+
+def test_codegen_cache_holds_a_warm_pass(spark):
+    """A session that cycles through more distinct generated classes than
+    Spark's default cache size (100) compiles nothing on its second pass.
+    Each query unions six one-partition ranges whose generated classes
+    differ by the literal inlined into each branch, and reads them in one
+    task: 20 cheap jobs and 240 classes per pass, no shuffle."""
+    metric = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def one_pass() -> int:
+        before = metric.getCount()
+        for q in range(20):
+            branches = [
+                spark.range(0, 4, 1, 1).select(
+                    (F.col("id") * (1000 + 6 * q + i)).alias("v")
+                )
+                for i in range(6)
+            ]
+            df = functools.reduce(lambda a, b: a.union(b), branches)
+            assert len(df.coalesce(1).collect()) == 24
+        return metric.getCount() - before
+
+    assert one_pass() > 100  # the first pass compiles the working set
+    assert one_pass() == 0
