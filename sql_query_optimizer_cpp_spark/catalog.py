@@ -167,6 +167,8 @@ def load_tables(
             spark.conf.get("spark.sql.session.timeZone", None),
         )
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+    from .operators import reader
+
     try:
         memo = _TABLE_MEMO.setdefault(spark, {})
     except TypeError:  # session object not weakref-able (mocks in tests)
@@ -183,7 +185,7 @@ def load_tables(
         if hit is not None and hit[0] == epoch:
             out[name] = hit[1]
             continue
-        df = spark.read.parquet(path)
+        df = reader.read(spark, path)
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         memo[path] = (epoch, df)

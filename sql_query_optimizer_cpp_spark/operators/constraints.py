@@ -8,6 +8,7 @@ import re
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from . import reader
 from .mutate import (
     _fs,
     _partition_cols,
@@ -116,7 +117,7 @@ def add_constraint(
         full = read_table(spark, path)
         if is_partitioned(spark, path):
             files = list_data_files(spark, path, recursive=True)
-            probe = full.drop(*_partition_cols(spark, path, files[0]))
+            probe = full.drop(*_partition_cols(path, files[0]))
         else:
             probe = full
         try:
@@ -176,16 +177,11 @@ def _enforce_constraints(
         return cons
     frames = []
     for d in staging_dirs:
-        try:
-            frames.append(
-                spark.read.option("mergeSchema", "true").parquet(d)
-            )
-        except Exception as e:
-            # an all-delete/no-insert stage writes zero rows (just
-            # _SUCCESS) — nothing to check in that dir
-            if "UNABLE_TO_INFER_SCHEMA" in str(e):
-                continue
-            raise
+        files = reader.list_files(spark, d, recursive=True)
+        # an all-delete/no-insert stage writes zero rows (just _SUCCESS)
+        # — nothing to check in that dir
+        if files:
+            frames.append(reader.read(spark, d, files))
     if not frames:
         return cons
     df = frames[0]

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from . import reader
 from .mutate import (
     _fs,
     _read_small_file,
@@ -51,6 +52,7 @@ from .mutate import (
     _write_small_file,
     list_data_files,
 )
+from .reader import Listed
 
 INDEX_DIR = "_index"
 
@@ -90,10 +92,10 @@ def build_bloom_index(
     file so skipping quality holds across skew.  NULLs are not indexed —
     SQL equality never matches NULL, and the probe path keeps that
     contract by refusing null probe values."""
-    files = list_data_files(spark, path, recursive=True)
+    files = reader.list_files(spark, path, recursive=True)
     if not files:
         return 0
-    df = spark.read.option("mergeSchema", "true").parquet(*files)
+    df = reader.read_files(spark, files)
     if col not in df.columns:
         raise ValueError(f"no column {col!r} in {path}")
     if num_bits is None:
@@ -131,7 +133,7 @@ def build_bloom_index(
 def _index_rows(
     spark: SparkSession,
     path: str,
-    files: list[str],
+    files: list[Listed],
     col: str,
     num_bits: int,
     num_hashes: int,
@@ -139,7 +141,7 @@ def _index_rows(
     """One (src_file, bloom) row per file in ``files`` — the shared build
     pipeline: JVM-side position hashing, collect_set bounded by
     ``num_bits``, Arrow-batched bitset packing."""
-    df = spark.read.option("mergeSchema", "true").parquet(*files)
+    df = reader.read_files(spark, files)
     root_len = len(
         _fs(spark, path)[1]
         .makeQualified(_fs(spark, path)[2])
@@ -183,7 +185,9 @@ def _index_rows(
     from ..functions import values_df
 
     all_rels = values_df(
-        spark, "src_file string", [(_rel_to_table(path, f),) for f in files]
+        spark,
+        "src_file string",
+        [(_rel_to_table(path, f.path),) for f in files],
     )
     return all_rels.join(packed, "src_file", "left").select(
         "src_file",
@@ -201,14 +205,14 @@ def refresh_bloom_index(spark: SparkSession, path: str, col: str) -> int:
     many files were newly indexed — O(new files) data read, never
     O(table)."""
     meta = _index_meta(spark, path, col)
-    files = list_data_files(spark, path, recursive=True)
+    files = reader.list_files(spark, path, recursive=True)
     idx_root = _index_root(path, col)
     indexed = {
         r["src_file"]
         for r in spark.read.parquet(idx_root).select("src_file").collect()
     }
     missing = [
-        f for f in files if _rel_to_table(path, f) not in indexed
+        f for f in files if _rel_to_table(path, f.path) not in indexed
     ]
     if not missing:
         return 0
@@ -220,12 +224,7 @@ def refresh_bloom_index(spark: SparkSession, path: str, col: str) -> int:
     # contract.  A widening rewrites the files it touches, so the
     # mismatch surfaces exactly here; recover with a full rebuild under
     # the merged (widened) type, which also refreshes the stored meta.
-    new_type = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*missing)
-        .schema[col]
-        .dataType.simpleString()
-    )
+    new_type = reader.schema(spark, missing)[col].dataType.simpleString()
     if new_type != meta["col_type"]:
         return build_bloom_index(
             spark,
@@ -375,17 +374,16 @@ def _read_candidates(
     from .mor import _live, _read_dv, _with_identity
     from .mutate import is_partitioned
 
+    listing = reader.list_files(spark, path, recursive=True)
     if not candidates:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-        return df.where(F.lit(False))
+        return reader.read(spark, path, listing).where(F.lit(False))
     base_path = path if is_partitioned(spark, path) else None
+    listed = {f.path: f for f in listing}
+    files = [listed.get(c) or Listed(c, -1, -1) for c in candidates]
     dv = _read_dv(spark, path)
     if dv is None:
-        reader = spark.read.option("mergeSchema", "true")
-        if base_path is not None:
-            reader = reader.option("basePath", base_path)
-        return reader.parquet(*candidates).where(residual)
-    df = _with_identity(spark, path, candidates, base_path)
+        return reader.read_files(spark, files, base_path).where(residual)
+    df = _with_identity(spark, path, files, base_path)
     return (
         _live(df.where(residual), dv).drop("__src_file", "__row_idx")
     )

@@ -49,10 +49,11 @@ as-of, ``read_changes`` emits tombstoned rows as deletes (and RESTORE's
 un-tombstones as inserts), ``restore_version`` renames DV batches through
 the same metadata-only plan, and ``vacuum`` honors manifest references to
 retired batches.  Those reads build without per-file work that grows
-with history: one version-log listing and fold per call, one ``exists``
-(or one ``_retired/*`` glob) per pinned file, one data-schema job per
-call, and, for ``read_changes`` over differing DV batches, one bounded
-collect of the files they reference.  Every commit refreshes cached
+with history: one version-log listing and fold per call, one glob for
+the pinned files (one more for any under ``_retired/``), schemas from
+the reader's footer memo (operators/reader.py, no job), and, for
+``read_changes`` over differing DV batches, one bounded collect of the
+files they reference.  Every commit refreshes cached
 frames by path (:func:`refresh_cached`, from the one post-commit
 sequence ``commit.committed``), never session-wide.
 
@@ -72,6 +73,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import reader
 from .mutate import (
     MutationStats,
     _check_merge_source,
@@ -114,17 +116,18 @@ def refresh_cached(spark: SparkSession, path: str) -> None:
     spark.catalog.refreshByPath(_dv_path(path))
 
 
+def _dv_listing(spark: SparkSession, path: str) -> list[reader.Listed]:
+    """The live deletion-vector batch files, as the reader lists them."""
+    _, fs, _ = _fs(spark, path)
+    if not fs.exists(_hpath(spark, _dv_path(path))):
+        return []
+    return reader.list_files(spark, _dv_path(path))
+
+
 def has_deletion_vectors(spark: SparkSession, path: str) -> bool:
     """True when the table carries live (un-materialized) deletion
     vectors — i.e. base reads overcount and :func:`read_mor` is required."""
-    _, fs, _ = _fs(spark, path)
-    p = _hpath(spark, _dv_path(path))
-    if not fs.exists(p):
-        return False
-    return any(
-        st.isFile() and not st.getPath().getName().startswith(("_", "."))
-        for st in fs.listStatus(p)
-    )
+    return bool(_dv_listing(spark, path))
 
 
 def list_dv_files(spark: SparkSession, path: str) -> list[str]:
@@ -132,21 +135,12 @@ def list_dv_files(spark: SparkSession, path: str) -> list[str]:
     the unit the version manifests pin (batches are immutable once
     written: appends create new files, a prune writes a new batch and
     retires the old ones)."""
-    _, fs, _ = _fs(spark, path)
-    p = _hpath(spark, _dv_path(path))
-    if not fs.exists(p):
-        return []
-    return sorted(
-        st.getPath().toString()
-        for st in fs.listStatus(p)
-        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
-    )
+    return [f.path for f in _dv_listing(spark, path)]
 
 
 def dv_count(spark: SparkSession, path: str) -> int:
-    """Live tombstone count (parquet-footer metadata job, no data I/O)."""
-    dv = _read_dv(spark, path)
-    return 0 if dv is None else dv.count()
+    """Live tombstone count, from the batch files' footers (no job)."""
+    return reader.row_count(spark, _dv_listing(spark, path))
 
 
 def _read_dv_files(spark: SparkSession, files) -> DataFrame:
@@ -194,18 +188,20 @@ def attach_identity(df: DataFrame, qualified_base: str) -> DataFrame:
 
 
 def _with_identity(
-    spark: SparkSession, path: str, files: list[str], base_path: str | None
+    spark: SparkSession,
+    path: str,
+    files: list[reader.Listed],
+    base_path: str | None,
 ) -> DataFrame:
     """Read an explicit file list with the MOR row identity attached as
     ``__src_file`` (table-relative) and ``__row_idx``.  Reading the LIST —
     not the root — pins the verb to its starting state: files appended
     later (e.g. this statement's own update copies) are invisible even
     under lazy re-evaluation."""
-    root = _qualified_root(spark, path)
-    reader = spark.read.option("mergeSchema", "true")
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    return attach_identity(reader.parquet(*files), root)
+    return attach_identity(
+        reader.read_files(spark, files, base_path),
+        _qualified_root(spark, path),
+    )
 
 
 def _live(df: DataFrame, dv: DataFrame | None) -> DataFrame:
@@ -220,13 +216,14 @@ def _live(df: DataFrame, dv: DataFrame | None) -> DataFrame:
     )
 
 
-def _no_match(spark: SparkSession, path: str, cond: Column) -> bool:
+def _no_match(
+    spark: SparkSession, path: str, cond: Column, files: list[reader.Listed]
+) -> bool:
     """No-op short-circuit: one footer-pruned existence probe (pushdown +
     LIMIT 1) so a statement matching nothing skips the stage machinery
-    entirely — the MOR analog of the COW verbs' hit-list check."""
-    return (
-        spark.read.parquet(path).where(cond).limit(1).count() == 0
-    )
+    entirely — the MOR analog of the COW verbs' hit-list check.
+    ``files`` is the table's recursive listing."""
+    return reader.read(spark, path, files).where(cond).limit(1).count() == 0
 
 
 def _dv_snapshot_conflict(
@@ -320,17 +317,20 @@ def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
     def stage(created: list[str], optimistic: bool):
         from .commit import Staged
 
-        files0 = list_data_files(spark, path, recursive=True)
+        listing = reader.list_files(spark, path, recursive=True)
+        files0 = [f.path for f in listing]
         if not files0 and cond is None:
             raise ValueError(f"no parquet files under {path}")
-        if not files0 or (cond is not None and _no_match(spark, path, cond)):
+        if not files0 or (
+            cond is not None and _no_match(spark, path, cond, listing)
+        ):
             return Staged(MutationStats(len(files0), 0, 0))
         partitioned = is_partitioned(spark, path)
         part_cols = (
-            _partition_cols(spark, path, files0[0]) if partitioned else []
+            _partition_cols(path, files0[0]) if partitioned else []
         )
         sub = _with_identity(
-            spark, path, files0, path if partitioned else None
+            spark, path, listing, path if partitioned else None
         )
         data_cols = [
             c for c in sub.columns if c not in ("__src_file", "__row_idx")
@@ -346,7 +346,7 @@ def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
             F.col("__row_idx").cast("long").alias("row_idx"),
         ).write.parquet(dv_staging)
         staged_dv = _read_dv_files(spark, [dv_staging])
-        n_dead = staged_dv.count()  # footers only
+        n_dead = reader.row_count(spark, reader.list_files(spark, dv_staging))
         if not n_dead and inserts is None:
             return Staged(MutationStats(len(files0), 0, 0))
         # the batch's file set, which only validation reads — bounded by
@@ -794,9 +794,10 @@ def read_mor(spark: SparkSession, path: str) -> DataFrame:
     the base data.  Both sides read their DIRECTORIES (the table root,
     whose underscore dirs discovery skips, and ``_dv/``), so a frame
     persisted over this read re-lists both when a commit refreshes the
-    table's path."""
+    table's path; the base schema comes from the reader's footer memo
+    and the DV side's is fixed, so building the frame runs no job."""
     dv = _read_dv(spark, path)
-    df = spark.read.option("mergeSchema", "true").parquet(path)
+    df = reader.read(spark, path)
     if dv is None:
         return df
     df = attach_identity(df, _qualified_root(spark, path))
@@ -851,14 +852,14 @@ def materialize_deletes(
 
     def stage(created: list[str], optimistic: bool) -> Staged:
         dv = _read_dv(spark, path)
-        files = list_data_files(spark, path, recursive=True)
+        files = reader.list_files(spark, path, recursive=True)
         if dv is None:
             return Staged(MutationStats(len(files), 0, 0))
         dead_rel = {
             r["src_file"]
             for r in dv.select("src_file").distinct().collect()
         }
-        hit = [f for f in files if _rel_to_table(path, f) in dead_rel]
+        hit = [f for f in files if _rel_to_table(path, f.path) in dead_rel]
         if min_dead_ratio > 0 and hit:
             # dead fraction per file: row totals come from a scan of the
             # row_index column only (no data columns decoded) over just
@@ -880,7 +881,7 @@ def materialize_deletes(
                 .select("src_file")
                 .collect()
             }
-            hit = [f for f in hit if _rel_to_table(path, f) in due]
+            hit = [f for f in hit if _rel_to_table(path, f.path) in due]
             dead_rel = due
             if not hit:
                 # nothing reached the threshold: keep every vector
@@ -895,7 +896,9 @@ def materialize_deletes(
         for dir_, fl in sorted(_group_by_dir(hit).items()):
             sub = _with_identity(spark, path, fl, None)
             kept = _live(sub, dv).drop("__src_file", "__row_idx")
-            staged.append((dir_, fl, _stage(spark, path, kept, created)))
+            staged.append(
+                (dir_, [f.path for f in fl], _stage(spark, path, kept, created))
+            )
         # partial materialize: the store shrinks by the graduated files'
         # vectors.  The pruned copy stages now, while the old batch files
         # it reads are all still live

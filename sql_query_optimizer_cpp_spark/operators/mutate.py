@@ -62,9 +62,11 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from py4j.java_gateway import JavaClass
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from . import reader
+from .reader import Listed, _fs, _hpath, _jclass
 
 
 @dataclass(frozen=True)
@@ -89,68 +91,30 @@ def _cond(condition: str | Column) -> Column:
     return F.expr(condition) if isinstance(condition, str) else condition
 
 
-def _jclass(spark: SparkSession, name: str):
-    """The JVM class ``name`` (fully qualified).  Resolving it through
-    ``spark._jvm.a.b.C`` costs one py4j round trip per name segment;
-    this handle costs none until it is called."""
-    return JavaClass(name, spark._jvm._gateway_client)  # noqa: SLF001
-
-
-def _hpath(spark: SparkSession, *args):
-    """A Hadoop ``Path`` — one py4j round trip (the constructor)."""
-    return _jclass(spark, "org.apache.hadoop.fs.Path")(*args)
-
-
-def _fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem + Path for ``path`` — the cluster-portable file
-    API (local fs here; HDFS/S3A on a real cluster with zero code change)."""
-    jpath = _hpath(spark, path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    return spark._jvm, fs, jpath
-
-
 def list_data_files(
     spark: SparkSession, path: str, recursive: bool = False
 ) -> list[str]:
-    """Parquet data files currently making up the table (full URIs).
-
-    ``recursive=False`` refuses hive-partitioned layouts: the partition
-    column lives in the DIRECTORY NAME, not the files, so a flat
-    file-level rewrite would silently drop it.  Verbs that implement the
-    per-partition swap pass ``recursive=True`` to walk ``key=value`` dirs.
-    """
-    jvm, fs, jpath = _fs(spark, path)
-    out = []
-    for st in fs.listStatus(jpath):
-        p = st.getPath()
-        name = p.getName()
-        if st.isDirectory():
-            if "=" not in name:
-                continue
-            if not recursive:
-                raise NotImplementedError(
-                    "copy-on-write over a hive-partitioned directory needs "
-                    f"the per-partition path (found partition dir {name!r}); "
-                    "this verb does not implement it"
-                )
-            out.extend(list_data_files(spark, p.toString(), recursive=True))
-        elif not name.startswith(("_", ".")):
-            out.append(p.toString())
-    return sorted(out)
+    """Parquet data files currently making up the table (full URIs); the
+    paths of :func:`.reader.list_files`, which says when ``recursive``
+    is needed."""
+    return [f.path for f in reader.list_files(spark, path, recursive)]
 
 
 def is_partitioned(spark: SparkSession, path: str) -> bool:
     """True when the table dir uses hive-style ``key=value`` partition
     subdirectories."""
-    jvm, fs, jpath = _fs(spark, path)
+    _, fs, jpath = _fs(spark, path)
     return any(
-        st.isDirectory() and "=" in st.getPath().getName()
-        for st in fs.listStatus(jpath)
+        is_dir and "=" in f.path.rsplit("/", 1)[-1]
+        for f, is_dir in reader.statuses(spark, fs.listStatus(jpath))
     )
 
 
 def affected_files(
-    spark: SparkSession, path: str, condition: str | Column
+    spark: SparkSession,
+    path: str,
+    condition: str | Column,
+    files: list[Listed] | None = None,
 ) -> list[str]:
     """Files containing ≥1 row where ``condition`` is TRUE (the prune step).
 
@@ -159,9 +123,10 @@ def affected_files(
     range-clustered table this reads footers, not data.  The file name
     comes from the ``_metadata`` column, never ``input_file_name()``:
     a frame persisted over the table would serve this scan from the
-    cache, where every file name reads empty.
+    cache, where every file name reads empty.  ``files`` is the caller's
+    recursive listing of the table, when it has one.
     """
-    df = spark.read.parquet(path)
+    df = reader.read(spark, path, files)
     rows = (
         df.where(_cond(condition))
         .select(F.col("_metadata.file_path").alias("f"))
@@ -195,12 +160,12 @@ def _stage(
 
 
 def _staged_rows(spark: SparkSession, staging: str) -> int:
-    """Row count of a staged write from parquet footers (no data I/O);
-    0 for an empty partitioned staging (which writes no part files)."""
-    files = list_data_files(spark, staging, recursive=True)
-    if not files:
-        return 0
-    return spark.read.parquet(*files).count()
+    """Row count of a staged write from parquet footers (no data I/O, no
+    job); 0 for an empty partitioned staging (which writes no part
+    files)."""
+    return reader.row_count(
+        spark, reader.list_files(spark, staging, recursive=True)
+    )
 
 
 def _reclaim(spark: SparkSession, dirs) -> None:
@@ -215,61 +180,59 @@ def _reclaim(spark: SparkSession, dirs) -> None:
             fs.delete(_hpath(spark, d), True)
 
 
-def _rename_part(spark, fs, src, dest_dir, tag: str, i: int) -> None:
-    """Rename one staged part file into ``dest_dir`` under a fresh unique
-    COW name — the single swap primitive every mover shares."""
-    dest = _hpath(spark, dest_dir, f"part-cow-{tag}-{i:05d}.snappy.parquet")
-    if not fs.rename(src, dest):
-        raise IOError(f"COW swap: rename {src} -> {dest} failed")
-
-
 def _move_in(spark: SparkSession, path: str, staging: str) -> int:
-    """Move staged part files into the table dir under fresh unique names,
-    then drop the staging dir; returns how many files moved.  A
+    """Move staged part files into the table dir under fresh unique COW
+    names, then drop the staging dir; returns how many files moved.  A
     hive-partitioned staging's ``key=value`` subdirectories land in the
     matching table directories (created as needed): the partition value
     lives in the directory name, so preserving each staged file's
-    relative path IS the data move."""
+    relative path IS the data move.  A rename keeps a file's bytes, so
+    the reader's footer memo follows each file to its new name."""
     _, fs, table_path = _fs(spark, path)
     tag = uuid.uuid4().hex[:12]
-    moved = 0
+    moved: list[tuple[Listed, str]] = []
 
-    def walk(d, dest_dir) -> None:
-        nonlocal moved
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
+    def walk(src_dir: str, dest_dir: str) -> None:
+        for f, is_dir in reader.statuses(
+            spark, fs.listStatus(_hpath(spark, src_dir))
+        ):
+            name = f.path.rsplit("/", 1)[-1]
             if name.startswith(("_", ".")):
                 continue
-            if st.isDirectory():
-                sub = _hpath(spark, dest_dir, name)
-                fs.mkdirs(sub)
-                walk(st.getPath(), sub)
-            elif st.isFile():
-                _rename_part(spark, fs, st.getPath(), dest_dir, tag, moved)
-                moved += 1
+            if is_dir:
+                sub = f"{dest_dir}/{name}"
+                fs.mkdirs(_hpath(spark, sub))
+                walk(f.path, sub)
+                continue
+            dest = f"{dest_dir}/part-cow-{tag}-{len(moved):05d}.snappy.parquet"
+            if not fs.rename(_hpath(spark, f.path), _hpath(spark, dest)):
+                raise IOError(f"COW swap: rename {f.path} -> {dest} failed")
+            moved.append((f, dest))
 
-    staged = _hpath(spark, staging)
-    walk(staged, table_path)
-    fs.delete(staged, True)
-    return moved
+    walk(staging, fs.makeQualified(table_path).toString())
+    fs.delete(_hpath(spark, staging), True)
+    reader.renamed(spark, moved)
+    return len(moved)
 
 
-def _group_by_dir(files: list[str]) -> dict[str, list[str]]:
-    """Group file URIs by their containing directory — the per-partition
-    unit every partitioned verb swaps on.  One shared implementation so a
-    future normalization fix (e.g. URI scheme forms) reaches all of them."""
-    groups: dict[str, list[str]] = {}
+def _group_by_dir(files: list) -> dict[str, list]:
+    """Group file URIs (or :class:`~.reader.Listed` entries) by their
+    containing directory — the per-partition unit every partitioned verb
+    swaps on.  One shared implementation so a future normalization fix
+    (e.g. URI scheme forms) reaches all of them."""
+    groups: dict[str, list] = {}
     for f in files:
-        groups.setdefault(f.rsplit("/", 1)[0], []).append(f)
+        groups.setdefault(
+            getattr(f, "path", f).rsplit("/", 1)[0], []
+        ).append(f)
     return groups
 
 
-def _partition_cols(spark: SparkSession, path: str, sample_file: str) -> list[str]:
-    """Partition columns of a hive-layout table = columns present in the
-    partitioned read but absent from the physical files."""
-    full_cols = spark.read.parquet(path).columns
-    physical = spark.read.parquet(sample_file).columns
-    return [c for c in full_cols if c not in physical]
+def _partition_cols(path: str, sample_file: str) -> list[str]:
+    """Partition columns of a hive-layout table: the ``key=value``
+    directory names between the table root and one of its data files
+    (written by ``partitionBy``, the files never carry them)."""
+    return reader.partition_keys(path, sample_file)
 
 
 def _delete_files(spark: SparkSession, files: list[str]) -> None:
@@ -652,7 +615,7 @@ def _stage_rewrites(
     part_cols: list[str],
     rewrite,
     created: list[str],
-    reader=None,
+    listing: list[Listed],
 ) -> tuple[list[tuple[str, list[str], str]], int]:
     """Stage the rewrite of every touched directory's ``hit`` files (one
     group when the table has no ``part_cols``) with
@@ -663,14 +626,21 @@ def _stage_rewrites(
     are in scope; they drop before writing, the directory name carries
     them — to its rewrite and a zero-arg matched-count callable resolved
     after the staging write (an observed metric: one job per group, not
-    a count plus a write)."""
+    a count plus a write).  ``listing`` is the table's listing the hits
+    were found in; it carries the memo keys the group reads look up."""
+    from .occ import _uri_path
+
+    listed = {_uri_path(f.path): f for f in listing}
 
     def stage_one(item: tuple[str, list[str]], cr: list[str]):
         part_dir, pfiles = item
-        reader_ = reader or spark.read
-        rewritten, matched = rewrite(
-            reader_.option("basePath", path).parquet(*pfiles)
-        )
+        # a hit missing from the listing (replaced since) reads under
+        # its own name and fails as a missing file, as a scan would
+        sub = [
+            listed.get(_uri_path(f)) or Listed(_uri_path(f), -1, -1)
+            for f in pfiles
+        ]
+        rewritten, matched = rewrite(reader.read_files(spark, sub, path))
         staging = _stage(spark, path, rewritten.drop(*part_cols), cr)
         return part_dir, pfiles, staging, matched
 
@@ -701,14 +671,15 @@ def _rewrite_stage(
         from .commit import Staged
 
         partitioned = is_partitioned(spark, path)
-        files = list_data_files(spark, path, recursive=partitioned)
-        hit = affected_files(spark, path, cond)
+        listing = reader.list_files(spark, path, recursive=partitioned)
+        files = [f.path for f in listing]
+        hit = affected_files(spark, path, cond, listing)
         if not hit:
             return Staged(MutationStats(len(files), 0, 0))
-        part_cols = _partition_cols(spark, path, hit[0]) if partitioned else []
+        part_cols = _partition_cols(path, files[0]) if partitioned else []
         staged, matched = _stage_rewrites(
             spark, path, hit, part_cols, lambda sub: build(sub, part_cols),
-            created,
+            created, listing,
         )
 
         def validate() -> str | None:
@@ -861,8 +832,9 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     ``evolve_schema`` MERGE added columns: older untouched files lack the
     new columns and backfill NULL at read time (the parquet-native
     evolution story — the schema lives in the union of file footers, and
-    new-nullable-column evolution never rewrites old files)."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
+    new-nullable-column evolution never rewrites old files).  The
+    schema comes from the footer memo (:mod:`.reader`), not a job."""
+    return reader.read(spark, path)
 
 
 def _check_merge_source(
@@ -926,17 +898,15 @@ def _merge_stage(
     """
     from .commit import Staged
 
-    if evolve_schema:
-        # mergeSchema: a previously-evolved table's newest columns live
-        # only in its newest files
-        target = spark.read.option("mergeSchema", "true").parquet(path)
-    else:
-        target = spark.read.parquet(path)
+    # the merged footer schema: a previously-evolved table's newest
+    # columns live only in its newest files
     partitioned = is_partitioned(spark, path)
-    files = list_data_files(spark, path, recursive=partitioned)
+    listing = reader.list_files(spark, path, recursive=partitioned)
+    files = [f.path for f in listing]
+    target = reader.read(spark, path, listing)
     part_cols: list[str] = []
     if partitioned:
-        part_cols = _partition_cols(spark, path, files[0])
+        part_cols = _partition_cols(path, files[0])
     # schema-evolution plan: columns the source ADDS, columns it WIDENS
     new_fields: list[tuple[str, object]] = []
     widen: dict[str, object] = {}
@@ -1119,11 +1089,7 @@ def _merge_stage(
         # hole (FileNotFoundException at best, silent reads of
         # swapped-in data at worst).
         staged, matched = _stage_rewrites(
-            spark, path, hit, part_cols, rewrite, created,
-            # a previously-evolved file group may itself be
-            # schema-heterogeneous
-            spark.read.option("mergeSchema", "true") if evolve_schema
-            else None,
+            spark, path, hit, part_cols, rewrite, created, listing
         )
         # a widening-only rewrite (no matched clause) touches every
         # file but ACTS on no row — report 0 matched, not key hits
@@ -1345,41 +1311,42 @@ def compact(
         ).sortWithinPartitions(*recluster)
 
     def stage_one(item, created: list[str]):
-        part_dir, (small_p, small_p_bytes) = item
-        n_out = int(max(1, -(-small_p_bytes // target_bytes)))
-        df = spark.read.parquet(*small_p)
-        moved = df.count()
+        part_dir, small_p = item
+        small_bytes = sum(f.length for f in small_p)
+        n_out = int(max(1, -(-small_bytes // target_bytes)))
+        # one merged schema for the group: files from before and after an
+        # evolve_schema MERGE compact together without losing a column
+        df = reader.read_files(spark, small_p)
+        moved = reader.row_count(spark, small_p)
         out = _recluster_df(df, n_out) if recluster else df.coalesce(n_out)
-        return part_dir, small_p, _stage(spark, path, out, created), moved
+        staging = _stage(spark, path, out, created)
+        return part_dir, [f.path for f in small_p], staging, moved
 
     def stage(created: list[str], optimistic: bool) -> Staged:
         # resolved first, in-lock: refuses a live-DV table before any work
         keep = _default_retain(spark, path, retain)
-        _, fs, _ = _fs(spark, path)
         # per-partition bin-pack: compaction is file-local, so each
         # key=value directory compacts independently (the partition value
         # lives in the directory name and never moves); a flat table is
         # one group
         partitioned = is_partitioned(spark, path)
-        all_files = list_data_files(spark, path, recursive=partitioned)
+        all_files = reader.list_files(spark, path, recursive=partitioned)
         groups = (
             sorted(_group_by_dir(all_files).items())
             if partitioned
             else [(path, all_files)]
         )
-        # size filter first (pure metadata): only groups with >= 2 small
-        # files reach the staging pool
-        todo: list[tuple[str, tuple[list[str], int]]] = []
+        # size filter first (pure metadata: the listing's lengths): only
+        # groups with >= 2 small files reach the staging pool
+        todo: list[tuple[str, list[Listed]]] = []
         for part_dir, pfiles in groups:
-            small_p: list[str] = []
-            small_p_bytes = 0
-            for f in pfiles:
-                sz = fs.getFileStatus(_hpath(spark, f)).getLen()
-                if recluster or sz < target_bytes * small_ratio:
-                    small_p.append(f)
-                    small_p_bytes += sz
+            small_p = [
+                f
+                for f in pfiles
+                if recluster or f.length < target_bytes * small_ratio
+            ]
             if len(small_p) >= (1 if recluster else 2):
-                todo.append((part_dir, (small_p, small_p_bytes)))
+                todo.append((part_dir, small_p))
         if not todo:
             return Staged(MutationStats(len(all_files), 0, 0))
         # same stage-all-then-swap discipline as the DML verbs (and the

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from . import reader
 from .dedup import _spread
 from .similarity import DIM, normsq_expr
 
@@ -688,7 +689,6 @@ def build_ivfpq_index(
         _write_small_file,
         _writer_lock,
         is_partitioned,
-        list_data_files,
     )
     from .similarity import (
         IVF_CELLS,
@@ -699,7 +699,8 @@ def build_ivfpq_index(
     )
 
     num_cells = num_cells or IVF_CELLS
-    data_files = list_data_files(spark, table_path, recursive=True)
+    listing = reader.list_files(spark, table_path, recursive=True)
+    data_files = [f.path for f in listing]
     dv_files = list_dv_files(spark, table_path)
     built_from = sorted(
         _rel_to_table(table_path, f) for f in data_files + dv_files
@@ -707,7 +708,7 @@ def build_ivfpq_index(
     base_path = table_path if is_partitioned(spark, table_path) else None
     df = _rename_identity(
         _live(
-            _with_identity(spark, table_path, data_files, base_path),
+            _with_identity(spark, table_path, listing, base_path),
             _read_dv(spark, table_path),
         )
     )
@@ -1113,7 +1114,7 @@ def _append_files_to_codes(
             _with_identity(
                 spark,
                 table_path,
-                [f"{table_path.rstrip('/')}/{f}" for f in added_data],
+                reader.stat_files(spark, table_path, list(added_data)),
                 base_path,
             ),
             _read_dv(spark, table_path),

@@ -36,6 +36,7 @@ import hashlib
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from . import reader
 from .dedup import _spread
 
 DIM = 64
@@ -1131,7 +1132,6 @@ def build_ivf_index(
         _fs,
         _rel_to_table,
         is_partitioned,
-        list_data_files,
     )
 
     # read through the deletion vectors: indexing tombstoned rows would
@@ -1139,7 +1139,8 @@ def build_ivf_index(
     # SNAPSHOT's file list (data + DV batches, pinned HERE, before the
     # training scans) — re-listing after the build scans would fold in
     # files a concurrent commit added that the index never saw.
-    data_files = list_data_files(spark, table_path, recursive=True)
+    listing = reader.list_files(spark, table_path, recursive=True)
+    data_files = [f.path for f in listing]
     dv_files = list_dv_files(spark, table_path)
     built_from = sorted(
         _rel_to_table(table_path, f) for f in data_files + dv_files
@@ -1147,7 +1148,7 @@ def build_ivf_index(
     base_path = table_path if is_partitioned(spark, table_path) else None
     df = _rename_identity(
         _live(
-            _with_identity(spark, table_path, data_files, base_path),
+            _with_identity(spark, table_path, listing, base_path),
             _read_dv(spark, table_path),
         )
     )
@@ -1364,7 +1365,7 @@ def _append_files_to_postings(
             _with_identity(
                 spark,
                 table_path,
-                [f"{table_path.rstrip('/')}/{f}" for f in added_data],
+                reader.stat_files(spark, table_path, list(added_data)),
                 base_path,
             ),
             _read_dv(spark, table_path),

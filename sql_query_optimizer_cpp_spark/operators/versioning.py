@@ -10,12 +10,14 @@ from __future__ import annotations
 import functools
 import json
 import re
+import weakref
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from . import reader
 from .mor import (
     _live,
     _qualified_root,
@@ -37,6 +39,7 @@ from .mutate import (
     _writer_lock,
     list_data_files,
 )
+from .reader import Listed
 
 # -- snapshots, time travel, vacuum ------------------------------------------
 #
@@ -124,12 +127,39 @@ def _full_manifest_bytes(spark: SparkSession, path: str) -> tuple[bytes, int]:
 
 
 def list_snapshots(spark: SparkSession, path: str) -> list[str]:
+    return sorted(_snapshot_listing(spark, path))
+
+
+def _snapshot_listing(spark: SparkSession, path: str) -> dict[str, Listed]:
+    """``{snapshot name: listing}`` of the table's ``_snapshots/`` (one
+    listing round trip, whatever the number of manifests)."""
     _, fs, _ = _fs(spark, path)
     snap_dir = _hpath(spark, f"{path.rstrip('/')}/{SNAPSHOT_DIR}")
     if not fs.exists(snap_dir):
-        return []
-    names = (st.getPath().getName() for st in fs.listStatus(snap_dir))
-    return sorted(n[: -len(".json")] for n in names if n.endswith(".json"))
+        return {}
+    return {
+        f.path.rsplit("/", 1)[-1][: -len(".json")]: f
+        for f, _ in reader.statuses(spark, fs.listStatus(snap_dir))
+        if f.path.endswith(".json")
+    }
+
+
+#: Per-session manifest texts keyed by their listing (path, length,
+#: modification time): a committed manifest is never rewritten in place
+#: except by ``drop_versions_before``'s checkpoint, whose new bytes get a
+#: new length or time — a new key.
+_MANIFESTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _manifest_text(spark: SparkSession, f: Listed) -> str:
+    try:
+        memo = _MANIFESTS.setdefault(spark, {})
+    except TypeError:  # session object not weakref-able
+        memo = {}
+    text = memo.get(f)
+    if text is None:
+        text = memo[f] = _read_small_file(spark, f.path).decode()
+    return text
 
 
 def fold_manifests(
@@ -204,11 +234,13 @@ def _vname(v: int) -> str:
 
 class _VersionLog:
     """A table's ``_snapshots/`` as one call sees it: listed once, each
-    manifest read at most once."""
+    manifest read at most once — and once per session while its listing
+    (length, modification time) stays the same."""
 
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark, self.path = spark, path
-        self.names = list_snapshots(spark, path)
+        self.listing = _snapshot_listing(spark, path)
+        self.names = sorted(self.listing)
         self.versions = sorted(
             int(m.group(1)) for m in map(_VERSION_RE.match, self.names) if m
         )
@@ -221,10 +253,7 @@ class _VersionLog:
                     f"no snapshot named {name!r} (have: {self.names})"
                 )
             self._docs[name] = json.loads(
-                _read_small_file(
-                    self.spark,
-                    f"{self.path.rstrip('/')}/{SNAPSHOT_DIR}/{name}.json",
-                )
+                _manifest_text(self.spark, self.listing[name])
             )
         return self._docs[name]
 
@@ -285,35 +314,25 @@ def _manifest_rel_files(spark: SparkSession, path: str, name: str) -> list[str]:
     return _manifest_state(spark, path, name)[0]
 
 
-def _glob_escape(s: str) -> str:
-    """``s`` with Hadoop glob metacharacters escaped to match literally."""
-    return re.sub(r"([\\*?\[\]{}])", r"\\\1", s)
-
-
 def _resolve_pinned_files(
-    spark: SparkSession, path: str, files: list[str], what: str
-) -> list[str]:
-    """Resolve a manifest's absolute file list against where each file
-    lives NOW — the table root, or (if a later DML retired it) some
+    spark: SparkSession, path: str, rels: list[str], what: str
+) -> list[Listed]:
+    """Resolve a manifest's table-relative file list against where each
+    file lives NOW — the table root, or (if a later DML retired it) some
     ``_retired/<batch>/`` dir, which preserves the table-relative path.
-    A live file costs one ``exists``; a retired one one
-    ``globStatus(<root>/_retired/*/<rel>)``, whatever the number of
-    retire batches.  Raises a clear error naming ``what`` if any file
-    was vacuumed."""
-    _, fs, _ = _fs(spark, path)
+    One glob finds every live file and one ``_retired/*`` glob every
+    retired one (per 256 names), whatever the number of files or retire
+    batches; each comes back listed (length and modification time), as
+    the reader keys its footer memo.  Raises a clear error naming
+    ``what`` if any file was vacuumed."""
     root = path.rstrip("/")
-    missing = []
-    resolved = []
-    for f in files:
-        if fs.exists(_hpath(spark, f)):
-            resolved.append(f)
-            continue
-        rel = _glob_escape(_rel_to_table(path, f))
-        hits = fs.globStatus(_hpath(spark, f"{root}/{RETIRED_DIR}/*/{rel}"))
-        if hits is not None and len(hits):
-            resolved.append(hits[0].getPath().toString())
-        else:
-            missing.append(f)
+    found = dict(reader.glob_files(spark, root, rels))
+    gone = [r for r in rels if r not in found]
+    # a file retired more than once resolves to its first copy by name
+    retired = reader.glob_files(spark, root, gone, f"{RETIRED_DIR}/*")
+    for rel, f in sorted(retired):
+        found.setdefault(rel, f)
+    missing = [f"{root}/{r}" for r in rels if r not in found]
     if missing:
         raise FileNotFoundError(
             f"{what} references files that no longer exist: "
@@ -322,7 +341,7 @@ def _resolve_pinned_files(
             "this snapshot existed, or by vacuum() before the manifest "
             "covered them (DML defaults to retain when snapshots exist)"
         )
-    return resolved
+    return [found[r] for r in rels]
 
 
 def _restore_files(
@@ -350,39 +369,23 @@ def _restore_files(
     )
     live_rel = {_rel_to_table(path, f) for f in current}
     pinned = set(target_files) | set(target_dv)
-    missing = [
-        f"{root}/{r}" for r in target_files + target_dv if r not in live_rel
-    ]
+    missing = [r for r in target_files + target_dv if r not in live_rel]
     extras = [f for f in current if _rel_to_table(path, f) not in pinned]
     if missing:
         resolved = _resolve_pinned_files(spark, path, missing, what)
         _, fs, _ = _fs(spark, path)
-        for orig, now_at in zip(missing, resolved):
-            dest = _hpath(spark, orig)
+        for rel, now_at in zip(missing, resolved):
+            dest = _hpath(spark, f"{root}/{rel}")
             fs.mkdirs(dest.getParent())
-            if not fs.rename(_hpath(spark, now_at), dest):
-                raise IOError(f"{what}: rename {now_at} -> {dest} failed")
+            if not fs.rename(_hpath(spark, now_at.path), dest):
+                raise IOError(f"{what}: rename {now_at.path} -> {dest} failed")
     return len(missing), extras, live_rel
-
-
-def _data_schema(spark: SparkSession, files: list[str]) -> StructType:
-    """The merged footer schema of ``files`` — one job, whatever the
-    number of base dirs they sit under.  Data columns only:
-    ``recursiveFileLookup`` turns partition discovery off, and each
-    base's read in :func:`_read_pinned_files` adds the partition columns
-    back from its own ``key=value`` segments."""
-    return (
-        spark.read.option("mergeSchema", "true")
-        .option("recursiveFileLookup", "true")
-        .parquet(*files)
-        .schema
-    )
 
 
 def _read_pinned_files(
     spark: SparkSession,
     path: str,
-    resolved: list[str],
+    resolved: list[Listed],
     with_identity: bool = False,
     schema: StructType | None = None,
 ) -> DataFrame:
@@ -390,32 +393,27 @@ def _read_pinned_files(
     grouping by base dir (table root vs each ``_retired`` batch) so
     hive-style partition columns reconstruct from the key=value path
     segments under EACH base — one basePath cannot span both locations.
-    ``schema`` (from :func:`_data_schema`; inferred here when omitted
-    and there are several bases) is the data schema every base reads
-    with, so no base runs its own footer job; files written before an
-    ``evolve_schema`` MERGE NULL-backfill the newer columns.
+    Every base reads with one data schema: ``schema`` when given, else
+    the merged footer schema of all of ``resolved`` (from the reader's
+    memo — no job), so files written before an ``evolve_schema`` MERGE
+    NULL-backfill the newer columns whichever base they sit under.
     ``with_identity`` attaches the MOR row identity (``__src_file``
     original-table-relative, ``__row_idx``) so callers can apply a
     version's pinned deletion vectors."""
     root = path.rstrip("/")
-    by_base: dict[str, list[str]] = {}
+    by_base: dict[str, list[Listed]] = {}
     for f in resolved:
-        parts = _rel_to_table(path, f).split("/")
+        parts = _rel_to_table(path, f.path).split("/")
         # a retired file's base is .../_retired/<batch>, not the root
         base_rel = "/".join(parts[:2]) if parts[0] == RETIRED_DIR else ""
         by_base.setdefault(base_rel, []).append(f)
     if schema is None and len(by_base) > 1:
-        schema = _data_schema(spark, resolved)
+        schema = reader.schema(spark, resolved)
     qroot = _qualified_root(spark, path) if with_identity else ""
     frames = []
     for base_rel, fl in sorted(by_base.items()):
         suffix = f"/{base_rel}" if base_rel else ""
-        reader = spark.read.option("basePath", root + suffix)
-        if schema is None:
-            reader = reader.option("mergeSchema", "true")
-        else:
-            reader = reader.schema(schema)
-        df = reader.parquet(*fl)
+        df = reader.read_files(spark, fl, root + suffix, schema)
         if with_identity:
             # the MOR row identity, spelled in ORIGINAL table-relative
             # terms: retirement preserves the relative path under each
@@ -437,10 +435,7 @@ def _read_state(
 ) -> DataFrame:
     """The rows of one pinned state: its data files minus its deletion
     vectors."""
-    root = path.rstrip("/")
-    resolved = _resolve_pinned_files(
-        spark, path, [f"{root}/{r}" for r in rel_files], what
-    )
+    resolved = _resolve_pinned_files(spark, path, rel_files, what)
     if not resolved:
         raise ValueError(f"{what} is empty")
     if not dv_rel:
@@ -451,12 +446,12 @@ def _read_state(
     # files outside this version match nothing)
     dv = _read_dv_files(
         spark,
-        _resolve_pinned_files(
-            spark,
-            path,
-            [f"{root}/{r}" for r in dv_rel],
-            f"{what} deletion vectors",
-        ),
+        [
+            f.path
+            for f in _resolve_pinned_files(
+                spark, path, dv_rel, f"{what} deletion vectors"
+            )
+        ],
     )
     df = _read_pinned_files(spark, path, resolved, with_identity=True)
     return _live(df, dv).drop("__src_file", "__row_idx")
@@ -799,16 +794,22 @@ _NET_COL = "__sqlopt_cdc_net"
 _EXPAND_CHUNK = 1 << 16
 
 
-def signed_net_expand(both: DataFrame, cols: list[str]) -> DataFrame:
+def signed_net_expand(
+    both: DataFrame, cols: list[str], single_task: bool = False
+) -> DataFrame:
     """The shared multiset-diff collapse: ``both`` carries the data
     ``cols`` plus a ±1 ``_SIGN_COL``; group on the columns, keep net ≠ 0,
     re-expand |net| copies tagged insert/delete.  This is ``exceptAll``'s
     own sum-of-signs lowering run once for BOTH directions (one scan, one
-    shuffle).  Re-expansion explodes two NESTED bounded sequences instead
-    of one ``array_repeat(|net|)`` — a degenerate table where one commit
-    nets 10⁸ identical images must not materialize a 10⁸-element array on
-    one executor (the scale regression a single-level explode has vs
-    exceptAll's streaming ReplicateRows)."""
+    shuffle).  ``single_task`` (the caller knows its input fits one scan
+    split) runs it in one task with no exchange instead: AQE would
+    coalesce that shuffle to one partition anyway, after paying for a
+    map stage and 32 shuffle blocks.  Re-expansion explodes two NESTED
+    bounded sequences instead of one ``array_repeat(|net|)`` — a
+    degenerate table where one commit nets 10⁸ identical images must not
+    materialize a 10⁸-element array on one executor (the scale
+    regression a single-level explode has vs exceptAll's streaming
+    ReplicateRows)."""
     bad = [c for c in cols if c in (_SIGN_COL, _NET_COL)]
     if bad:
         raise ValueError(
@@ -817,6 +818,8 @@ def signed_net_expand(both: DataFrame, cols: list[str]) -> DataFrame:
         )
     n_abs = f"abs({_NET_COL})"
     chunk = f"CAST({_EXPAND_CHUNK} AS BIGINT)"
+    if single_task:
+        both = both.coalesce(1)
     return (
         both.groupBy(*cols)
         .agg(F.expr(f"sum({_SIGN_COL}) AS {_NET_COL}"))
@@ -871,8 +874,8 @@ def read_changes(
     net ≠ 0, re-expand multiplicity) rather than two ``exceptAll`` calls
     — identical multiset semantics (exceptAll itself plans this same
     sum-of-signs aggregate, NULL- and NaN-safe grouping included) but a
-    single scan of the touched files and a single shuffle instead of two
-    of each.  At 100 TB a single-partition commit diffs two manifest
+    single scan of the touched files and at most one shuffle instead of
+    two of each.  At 100 TB a single-partition commit diffs two manifest
     file lists and scans one partition's worth of parquet once.
 
     Merge-on-read commits diff too (r9): a version's live rows are its
@@ -891,10 +894,13 @@ def read_changes(
     opt in when a downstream applier needs a stable shape.
 
     Building the frame reads the version log once (one listing, one fold
-    from the low end's checkpoint), resolves each pinned file with one
-    filesystem call, and runs one footer-merge job for the whole call
-    (two when the endpoints share no file) plus, on a range whose
-    deletion-vector batches differ, the one bounded collect below.
+    from the low end's checkpoint), resolves the pinned files with one
+    glob (one more for retired ones), and takes every schema from the
+    reader's footer memo — no job, except, on a range whose
+    deletion-vector batches differ, the one bounded collect below.  When
+    the data files the diff reads fit in one scan split (their listed
+    bytes ≤ ``spark.sql.files.maxPartitionBytes``), the diff runs in one
+    task with no exchange; above that it keeps its one shuffle.
 
     Limitations: columns must be exceptAll-comparable (no map type);
     versions must still be reconstructable (not dropped + vacuumed).
@@ -924,13 +930,13 @@ def read_changes(
     root = path.rstrip("/")
     what = f"version range {from_version}..{to_v} of {path}"
 
-    def _resolve(rels) -> list[str]:
-        return _resolve_pinned_files(
-            spark, path, [f"{root}/{r}" for r in sorted(rels)], what
-        )
+    def _resolve(rels) -> list[Listed]:
+        return _resolve_pinned_files(spark, path, sorted(rels), what)
 
     def _dv_entries(rels: set[str]) -> DataFrame | None:
-        return _read_dv_files(spark, _resolve(rels)) if rels else None
+        if not rels:
+            return None
+        return _read_dv_files(spark, [f.path for f in _resolve(rels)])
 
     # the endpoint versions' deletion-vector STATES (None = no DVs) —
     # a version's live rows are its data files minus these tombstones
@@ -983,15 +989,16 @@ def read_changes(
     added = _resolve(rel_to - rel_from)
     removed = _resolve(rel_from - rel_to)
     touched_res = _resolve(touched)
-    # one footer-merge job for every file read.  Endpoints that share a
-    # file share column types (an evolve_schema widening rewrites every
-    # file), so one schema fits both sides; endpoints sharing none may
-    # straddle a widening that no single footer merge accepts — then
-    # each side gets its own, and _aligned casts the old side up.
+    # one footer merge (from the reader's memo) for every file read.
+    # Endpoints that share a file share column types (an evolve_schema
+    # widening rewrites every file), so one schema fits both sides;
+    # endpoints sharing none may straddle a widening that no single
+    # footer merge accepts — then each side gets its own, and _aligned
+    # casts the old side up.
     to_side = _resolve(rel_to) if align_schema else added + touched_res
 
-    def _schema(files: list[str]) -> StructType | None:
-        return _data_schema(spark, files) if files else None
+    def _schema(files: list[Listed]) -> StructType | None:
+        return reader.schema(spark, files) if files else None
 
     if common:
         schema_to = schema_from = _schema(to_side + removed)
@@ -1060,7 +1067,18 @@ def read_changes(
         lambda a, b: a.unionByName(b),
         (_aligned(df, sign) for df, sign in parts),
     )
-    return signed_net_expand(both, list(ordered))
+    return signed_net_expand(
+        both,
+        list(ordered),
+        single_task=_fits_one_split(spark, added + removed + touched_res),
+    )
+
+
+def _fits_one_split(spark: SparkSession, files: list[Listed]) -> bool:
+    """Do these files' listed bytes fit in one scan split
+    (``spark.sql.files.maxPartitionBytes``)?"""
+    conf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+    return sum(f.length for f in set(files)) <= conf.filesMaxPartitionBytes()
 
 
 def drop_versions_before(

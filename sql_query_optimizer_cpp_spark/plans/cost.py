@@ -216,15 +216,13 @@ def table_storage_report(spark, path: str, top_n: int = 5) -> TableStorageReport
     listing); never scans data values."""
     from pyspark.sql import functions as F
 
-    from ..operators.mor import list_dv_files
-    from ..operators.mutate import _rel_to_table, list_data_files, table_versions
+    from ..operators import reader
+    from ..operators.mor import _read_dv_files, list_dv_files
+    from ..operators.mutate import _rel_to_table, table_versions
 
-    files = list_data_files(spark, path, recursive=True)
-    base_rows = (
-        spark.read.option("mergeSchema", "true").parquet(path).count()
-        if files
-        else 0
-    )
+    listing = reader.list_files(spark, path, recursive=True)
+    files = [f.path for f in listing]
+    base_rows = reader.row_count(spark, listing)
     dv_files = list_dv_files(spark, path)
     dead = 0
     top = []
@@ -242,7 +240,7 @@ def table_storage_report(spark, path: str, top_n: int = 5) -> TableStorageReport
             [(_rel_to_table(path, f),) for f in files],
         )
         entries = (
-            spark.read.parquet(*sorted(dv_files))
+            _read_dv_files(spark, sorted(dv_files))
             .select("src_file", "row_idx")
             .distinct()
             .join(F.broadcast(live), "src_file", "left_semi")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table_path
+from ..operators import reader
 from ..operators.text import content_fingerprint
 
 
@@ -28,7 +29,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open the documents fixture as a file stream (schema from a batch
     peek; streaming sources need the schema up front)."""
     path = table_path(sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
+    schema = reader.read(spark, path).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

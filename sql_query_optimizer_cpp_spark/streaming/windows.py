@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table_path
 from ..functions import dsum
+from ..operators import reader
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,7 +48,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = reader.read(spark, path).schema
     # streaming file sources take a directory; select just the events file
     raw = (
         spark.readStream.schema(schema)

@@ -18,6 +18,8 @@ from sql_query_optimizer_cpp_spark.operators.mor import (
     read_mor,
 )
 
+from .conftest import SF_DIR
+
 
 def _table(spark, tmp_path, name="t", n=100, files=4):
     path = str(tmp_path / name)
@@ -278,3 +280,335 @@ def test_compact_and_transactions_refresh_frames_over_the_table(
             assert base.where("k < 0").count() == 0, name
     finally:
         base.unpersist()
+
+
+# -- the footer memo: warm reads and commits fire no inference job ------------
+
+
+@pytest.fixture
+def parquet_read_jobs(spark, monkeypatch):
+    """Jobs fired INSIDE each ``DataFrameReader.parquet`` call — Spark's
+    schema inference (and listing) runs there, before any action."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    sc = spark.sparkContext
+    orig = DataFrameReader.parquet
+    counts: list[int] = []
+
+    def counted(self, *paths, **options):
+        old = sc.getLocalProperty("spark.jobGroup.id")
+        group = f"pq-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "parquet read")
+        try:
+            return orig(self, *paths, **options)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", old)
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    return counts
+
+
+def _verb(verb, mode):
+    """One statement of ``verb`` in ``mode``, as ``fn(spark, path, i)``
+    (``i`` varies the keys so repeated calls all match rows)."""
+    from sql_query_optimizer_cpp_spark.operators import mor, occ
+
+    def source(spark, i):
+        return spark.createDataFrame(
+            [(10 * i + 1, 0.5), (1000 + i, 1.5)], "k long, v double"
+        )
+
+    table = {
+        ("update", "cow"): lambda s, p, i: m.update_where(
+            s, p, {"v": "v + 1"}, f"k = {10 * i}"),
+        ("update", "occ"): lambda s, p, i: occ.occ_update_where(
+            s, p, {"v": "v + 1"}, f"k = {10 * i}"),
+        ("update", "mor"): lambda s, p, i: mor.dv_update_where(
+            s, p, {"v": "v + 1"}, f"k = {10 * i}"),
+        ("delete", "cow"): lambda s, p, i: m.delete_where(
+            s, p, f"k = {10 * i + 2}"),
+        ("delete", "occ"): lambda s, p, i: occ.occ_delete_where(
+            s, p, f"k = {10 * i + 2}"),
+        ("delete", "mor"): lambda s, p, i: mor.dv_delete_where(
+            s, p, f"k = {10 * i + 2}"),
+        ("merge", "cow"): lambda s, p, i: m.merge_into(
+            s, p, source(s, i), ["k"], matched_set={"v": "src_v"}),
+        ("merge", "occ"): lambda s, p, i: occ.occ_merge_into(
+            s, p, source(s, i), ["k"], matched_set={"v": "src_v"}),
+        ("merge", "mor"): lambda s, p, i: mor.dv_merge_into(
+            s, p, source(s, i), ["k"], matched_set={"v": "src_v"}),
+    }
+    return table[(verb, mode)]
+
+
+@pytest.mark.parametrize("mode", ["cow", "occ", "mor"])
+@pytest.mark.parametrize("verb", ["update", "delete", "merge"])
+def test_warm_commit_fires_no_inference_job(
+    spark, tmp_path, parquet_read_jobs, verb, mode
+):
+    """Every verb in every mode, on a versioned table: once its files'
+    footers are in the session memo, a commit reads every schema from
+    it — no job fires inside a parquet read."""
+    path = _table(spark, tmp_path)
+    m.enable_versioning(spark, path)
+    run = _verb(verb, mode)
+    run(spark, path, 1)  # warm: this commit's own files are new to it
+    parquet_read_jobs.clear()
+    run(spark, path, 2)
+    assert parquet_read_jobs and sum(parquet_read_jobs) == 0
+
+
+def test_warm_table_read_builds_without_a_job(spark, tmp_path):
+    from sql_query_optimizer_cpp_spark.engine import Engine
+
+    path = _table(spark, tmp_path)
+    dv_delete_where(spark, path, "k < 3")
+    eng = Engine(spark)
+    assert eng.table(path).count() == 97  # warms the memo
+    df, jobs = _build_jobs(spark, lambda: eng.table(path))
+    assert jobs == 0
+    assert df.count() == 97
+
+
+def test_warm_version_and_change_reads_build_without_a_job(spark, tmp_path):
+    """Version 1 spread over the root and two ``_retired/`` batches, and
+    a change feed over a merge-on-read range: after one read each, the
+    frames build with no job (the DV range keeps its one bounded
+    collect, which is not a parquet read)."""
+    path = _table(spark, tmp_path)
+    m.enable_versioning(spark, path)                                 # v1
+    v1 = _rows(spark.read.parquet(path))
+    m.update_where(spark, path, {"v": "-1.0"}, "k < 3")              # v2
+    m.update_where(spark, path, {"v": "-2.0"}, "k BETWEEN 30 AND 31")  # v3
+    assert len(list((tmp_path / "t" / m.RETIRED_DIR).iterdir())) == 2
+    v3 = _rows(spark.read.parquet(path))
+    _rows(m.read_version(spark, path, 1))
+    _rows(m.read_changes(spark, path, 1, 3))
+    df, jobs = _build_jobs(spark, lambda: m.read_version(spark, path, 1))
+    assert jobs == 0
+    assert _rows(df) == v1
+    df, jobs = _build_jobs(spark, lambda: m.read_changes(spark, path, 1, 3))
+    assert jobs == 0
+    assert _changes(df) == _net(v1, v3)
+
+
+def test_warm_dv_change_feed_fires_no_inference_job(
+    spark, tmp_path, parquet_read_jobs
+):
+    path = _table(spark, tmp_path)
+    m.enable_versioning(spark, path)                                 # v1
+    v1 = _rows(read_mor(spark, path))
+    dv_delete_where(spark, path, "k < 5")                            # v2
+    v2 = _rows(read_mor(spark, path))
+    _rows(m.read_changes(spark, path, 1, 2))
+    parquet_read_jobs.clear()
+    df = m.read_changes(spark, path, 1, 2)
+    assert parquet_read_jobs and sum(parquet_read_jobs) == 0
+    assert _changes(df) == _net(v1, v2)
+
+
+def test_staged_rows_come_from_footers(spark, tmp_path):
+    """MERGE's insert staging counts its rows without a job."""
+    staging = str(tmp_path / "staged")
+    spark.range(37).repartition(3).write.parquet(staging)
+    n, jobs = _build_jobs(spark, lambda: m._staged_rows(spark, staging))
+    assert (n, jobs) == (37, 0)
+    empty = str(tmp_path / "empty")
+    spark.range(0).selectExpr("id AS k", "id AS p").write.partitionBy(
+        "p").parquet(empty)
+    assert m._staged_rows(spark, empty) == 0
+
+
+def _exchanges(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+
+
+def _change_ranges(spark, tmp_path):
+    """A copy-on-write and a merge-on-read table, each with a committed
+    range to diff."""
+    cow = _table(spark, tmp_path, "cow")
+    m.enable_versioning(spark, cow)
+    m.update_where(spark, cow, {"v": "v + 100"}, "k >= 90")
+    m.delete_where(spark, cow, "k BETWEEN 10 AND 12")
+    mor_ = _table(spark, tmp_path, "mor")
+    m.enable_versioning(spark, mor_)
+    dv_delete_where(spark, mor_, "k < 5")
+    materialize_deletes(spark, mor_)
+    dv_delete_where(spark, mor_, "k BETWEEN 50 AND 52")
+    return [(cow, 1, 3), (mor_, 1, 4)]
+
+
+def test_small_change_feed_diffs_in_one_task(spark, tmp_path):
+    """Touched files within one scan split: no shuffle below the diff
+    aggregate, and the whole diff is one task."""
+    for path, lo, hi in _change_ranges(spark, tmp_path):
+        df = m.read_changes(spark, path, lo, hi)
+        assert _exchanges(df) == []
+        assert df.rdd.getNumPartitions() == 1
+
+
+def test_change_feed_above_one_split_keeps_its_shuffle(spark, tmp_path):
+    """Shrinking the split below the touched bytes restores the shuffle
+    plan; both plans return the same rows."""
+    for path, lo, hi in _change_ranges(spark, tmp_path):
+        small = m.read_changes(spark, path, lo, hi)
+        assert _exchanges(small) == []
+        want = _changes(small)
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "1")
+        try:
+            big = m.read_changes(spark, path, lo, hi)
+            assert _exchanges(big)
+            got = _changes(big)
+        finally:
+            spark.conf.set(key, old)
+        assert got == want
+
+
+# -- schema identity: the reader's schema is Spark's inferred schema ----------
+
+
+def _inferred(spark, *paths):
+    return spark.read.option("mergeSchema", "true").parquet(*paths).schema
+
+
+def _inferred_files(spark, files):
+    return (
+        spark.read.option("mergeSchema", "true")
+        .option("recursiveFileLookup", "true")
+        .parquet(*files)
+        .schema
+    )
+
+
+def test_reader_schema_matches_inference_after_evolution(spark, tmp_path):
+    """An evolve_schema MERGE that adds a column (old files lack it),
+    then one that widens a column (every file rewritten): the live
+    table, its file sets and an old version's files (now under
+    ``_retired/``) read with exactly the schema inference gives."""
+    from sql_query_optimizer_cpp_spark.operators import reader, versioning
+
+    path = str(tmp_path / "evolved")
+    spark.range(40).selectExpr(
+        "CAST(id AS int) AS k", "CAST(id AS int) AS v"
+    ).repartition(4).write.parquet(path)
+    m.enable_versioning(spark, path)                                 # v1
+    add = spark.createDataFrame([(3, 30, "x"), (99, 1, "y")],
+                                "k int, v int, tag string")
+    m.merge_into(spark, path, add, ["k"], matched_set={"tag": "src_tag"},
+                 evolve_schema=True)                                 # v2
+    widen = spark.createDataFrame([(5, 5_000_000_000)], "k int, v long")
+    for step in ("added", "widened"):
+        files = reader.list_files(spark, path)
+        if step == "added":
+            shapes = {len(_inferred(spark, f.path)) for f in files}
+            assert shapes == {2, 3}
+        assert reader.schema(spark, files).json() == \
+            _inferred_files(spark, [f.path for f in files]).json()
+        assert reader.read(spark, path).schema.json() == \
+            _inferred(spark, path).json()
+        m.merge_into(spark, path, widen, ["k"], matched_set={"v": "src_v"},
+                     evolve_schema=True)                             # v3
+    assert dict(reader.read(spark, path).dtypes)["v"] == "bigint"
+    rels = versioning._VersionLog(spark, path).states(2)[2][0]
+    pinned = versioning._resolve_pinned_files(spark, path, rels, "v2")
+    assert any(versioning.RETIRED_DIR in f.path for f in pinned)
+    assert m.read_version(spark, path, 2).schema.json() == \
+        _inferred_files(spark, [f.path for f in pinned]).json()
+
+
+def test_reader_schema_matches_inference_hive_partitioned(spark, tmp_path):
+    from sql_query_optimizer_cpp_spark.operators import reader
+
+    path = str(tmp_path / "hive")
+    spark.range(30).selectExpr(
+        "id AS k", "CAST(id AS DOUBLE) AS v", "CAST(id % 3 AS int) AS p",
+        "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS q",
+    ).write.partitionBy("p", "q").parquet(path)
+    files = reader.list_files(spark, path, recursive=True)
+    assert m._partition_cols(path, files[0].path) == ["p", "q"]
+    assert reader.read(spark, path).schema.json() == \
+        _inferred(spark, path).json()
+    assert reader.read_files(spark, files[:2], path).schema.json() == \
+        spark.read.option("basePath", path).option("mergeSchema", "true") \
+        .parquet(*[f.path for f in files[:2]]).schema.json()
+
+
+def test_reader_schema_matches_inference_with_live_dvs(spark, tmp_path):
+    from sql_query_optimizer_cpp_spark.operators import reader
+
+    path = _table(spark, tmp_path)
+    dv_delete_where(spark, path, "k < 7")
+    assert read_mor(spark, path).schema.json() == \
+        _inferred(spark, path).json()
+    dv = f"{path}/_dv"
+    assert reader.read(spark, dv).schema.json() == _inferred(spark, dv).json()
+    assert reader.row_count(spark, reader.list_files(spark, dv)) == 7
+
+
+def test_reader_schema_matches_inference_on_events(spark):
+    """The nanosecond-timestamp fixture converts under the session's
+    ``nanosAsLong`` conf; the memo never serves a schema converted
+    under another value of it."""
+    from sql_query_optimizer_cpp_spark.catalog import table_path
+    from sql_query_optimizer_cpp_spark.operators import reader
+
+    path = table_path(SF_DIR, "events")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key)
+    try:
+        for flag in ("true", "false", "true"):
+            spark.conf.set(key, flag)
+            try:
+                want = spark.read.parquet(path).schema.json()
+            except Exception:
+                with pytest.raises(Exception):
+                    reader.read(spark, path)
+                continue
+            assert reader.read(spark, path).schema.json() == want
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_reader_falls_back_to_one_inference_above_the_threshold(
+    spark, tmp_path, parquet_read_jobs
+):
+    """More new files than Spark's parallel-discovery threshold: one
+    inference over just those files, with the same schema and counts."""
+    from sql_query_optimizer_cpp_spark.operators import reader
+
+    path = _table(spark, tmp_path, files=6)
+    files = reader.list_files(spark, path)
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        parquet_read_jobs.clear()
+        got = reader.schema(spark, files)
+        assert sum(parquet_read_jobs) >= 1
+        assert reader.row_count(spark, files) == 100
+    finally:
+        spark.conf.set(key, old)
+    assert got.json() == _inferred(spark, path).json()
+    assert reader.row_count(spark, files) == 100  # now from footers
+
+
+def test_compact_keeps_columns_an_evolution_added(spark, tmp_path):
+    """A compaction group mixing files from before and after an
+    ``evolve_schema`` MERGE rewrites with the group's merged schema: the
+    added column's values survive, whichever file lists first."""
+    path = str(tmp_path / "evolved")
+    spark.range(20).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v") \
+        .repartition(4).write.parquet(path)
+    src = spark.createDataFrame([(3, 9.0, "x"), (17, 9.0, "y")],
+                                "k long, v double, tag string")
+    m.merge_into(spark, path, src, ["k"], matched_set={"tag": "src_tag"},
+                 evolve_schema=True)
+    want = _rows(m.read_table(spark, path), ("k", "v", "tag"))
+    assert ("x" in {r[2] for r in want}) and ("y" in {r[2] for r in want})
+    st = m.compact(spark, path)
+    assert st.files_rewritten > 1
+    assert _rows(m.read_table(spark, path), ("k", "v", "tag")) == want

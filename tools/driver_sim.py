@@ -1,14 +1,15 @@
 """Simulate the driver's t1 smoke + t2 correctness pass at sf0.01."""
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# grade the checkout this script sits in, whichever directory that is
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import __spark_entry__ as e
 from pyspark.sql import SparkSession
 
-import os
 SF = os.environ.get("SIM_SF_DIR", "/root/testdata/sf0.01")
 
 # VANILLA session on purpose: the driver builds its own SparkSession with
