@@ -441,22 +441,28 @@ def _change_ranges(spark, tmp_path):
 
 
 def test_small_change_feed_diffs_in_one_task(spark, tmp_path):
-    """Touched files within one scan split: no shuffle below the diff
-    aggregate, and the whole diff is one task."""
+    """Touched files within the one-task bound (1 MB listed): no shuffle
+    below the diff aggregate, and the whole diff is one task."""
     for path, lo, hi in _change_ranges(spark, tmp_path):
         df = m.read_changes(spark, path, lo, hi)
         assert _exchanges(df) == []
         assert df.rdd.getNumPartitions() == 1
 
 
-def test_change_feed_above_one_split_keeps_its_shuffle(spark, tmp_path):
-    """Shrinking the split below the touched bytes restores the shuffle
-    plan; both plans return the same rows."""
+@pytest.mark.parametrize(
+    "key",
+    [
+        "spark.sql.files.maxPartitionBytes",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+    ],
+)
+def test_change_feed_above_one_split_keeps_its_shuffle(spark, tmp_path, key):
+    """Shrinking either conf the one-task bound takes below the touched
+    bytes restores the shuffle plan; both plans return the same rows."""
     for path, lo, hi in _change_ranges(spark, tmp_path):
         small = m.read_changes(spark, path, lo, hi)
         assert _exchanges(small) == []
         want = _changes(small)
-        key = "spark.sql.files.maxPartitionBytes"
         old = spark.conf.get(key)
         spark.conf.set(key, "1")
         try:
@@ -594,6 +600,53 @@ def test_reader_falls_back_to_one_inference_above_the_threshold(
         spark.conf.set(key, old)
     assert got.json() == _inferred(spark, path).json()
     assert reader.row_count(spark, files) == 100  # now from footers
+
+
+def test_footer_memo_stays_under_its_bound_across_commits(spark, tmp_path):
+    """Every commit writes new files and retires old ones.  With the
+    memo's bound (Spark's file-listing cache size) set to a few entries,
+    the memo stays under it however many commits run, and the table
+    still reads right."""
+    from sql_query_optimizer_cpp_spark.operators import reader
+
+    path = _table(spark, tmp_path)
+    m.enable_versioning(spark, path)
+    key = "spark.sql.hive.filesourcePartitionFileCacheSize"
+    old = spark.conf.get(key)
+    cap = 8000
+    spark.conf.set(key, str(cap))
+    try:
+        for i in range(8):
+            m.update_where(spark, path, {"v": "v + 1"}, f"k = {10 * i}")
+            memo = reader._state(spark).footers
+            assert 0 < memo.bytes <= cap
+        assert m.read_table(spark, path).count() == 100
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_merged_schema_follows_case_sensitivity(spark):
+    """Merging ``a`` and ``A`` gives one column case-insensitively and
+    two case-sensitively, whichever setting merged them first."""
+    import json
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from sql_query_optimizer_cpp_spark.operators import reader
+
+    a = StructType([StructField("a", LongType())]).json()
+    b = StructType([StructField("A", LongType())]).json()
+    key = "spark.sql.caseSensitive"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        insensitive = reader._merge(spark, [a, b])
+        spark.conf.set(key, "true")
+        sensitive = reader._merge(spark, [a, b])
+    finally:
+        spark.conf.set(key, old)
+    assert len(json.loads(insensitive)["fields"]) == 1
+    assert len(json.loads(sensitive)["fields"]) == 2
 
 
 def test_compact_keeps_columns_an_evolution_added(spark, tmp_path):
