@@ -30,12 +30,14 @@ from pyspark.sql import functions as F
 from sql_query_optimizer_cpp_spark.catalog import load_tables
 from sql_query_optimizer_cpp_spark.operators.mutate import (
     compact,
-    create_snapshot,
     delete_where,
-    drop_snapshot,
     merge_into,
-    read_snapshot,
     update_where,
+)
+from sql_query_optimizer_cpp_spark.operators.versioning import (
+    create_snapshot,
+    drop_snapshot,
+    read_snapshot,
     vacuum,
 )
 from sql_query_optimizer_cpp_spark.session import get_session
@@ -99,7 +101,7 @@ def main() -> None:
 
     # 8. version log: every further mutation auto-commits a numbered
     #    version inside the writer lock — MVCC for readers
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         drop_versions_before,
         enable_versioning,
         read_version,
@@ -122,7 +124,7 @@ def main() -> None:
 
     # 9. RESTORE: roll the table back to the pre-mutation version as a
     #    NEW commit — metadata-only renames, history preserved
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         restore_version,
     )
 
@@ -148,7 +150,9 @@ def main() -> None:
     with tempfile.TemporaryDirectory() as d2:
         mor_path = f"{d2}/orders_mor"
         spark.read.parquet(path).repartition(6).write.parquet(mor_path)
-        n = dv_delete_where(spark, mor_path, "o_totalprice < 50000")
+        n = dv_delete_where(
+            spark, mor_path, "o_totalprice < 50000"
+        ).rows_matched
         print(
             f"\nmerge-on-read DELETE: {n} rows tombstoned "
             f"({dv_count(spark, mor_path)} vector entries, 0 files "
@@ -186,13 +190,14 @@ def main() -> None:
     #     versioned table time-travels, CDCs, and restores across them,
     #     and MERGE itself runs merge-on-read (zero file rewrites)
     from sql_query_optimizer_cpp_spark.operators.mor import dv_merge_into
-    from sql_query_optimizer_cpp_spark.operators.mutate import read_changes
+    from sql_query_optimizer_cpp_spark.operators.versioning import read_changes
 
     with tempfile.TemporaryDirectory() as d3:
         uni = f"{d3}/orders_uni"
         spark.read.parquet(path).repartition(4).write.parquet(uni)
         enable_versioning(spark, uni)                               # v1
-        n = dv_delete_where(spark, uni, "o_orderstatus = 'F'")      # v2
+        st = dv_delete_where(spark, uni, "o_orderstatus = 'F'")     # v2
+        n = st.rows_matched
         # derive the source from the LIVE state (read_mor): a base read
         # would still see the rows v2 tombstoned, and the merge's insert
         # leg would resurrect them as NULL-padded junk

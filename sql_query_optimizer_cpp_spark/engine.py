@@ -143,22 +143,19 @@ class Engine:
         run them (engine/src/parser.cpp:232-296); this executes via
         operators.mutate with file-level pruning.  Returns MutationStats.
 
-        ``optimistic=True`` runs UPDATE/DELETE/MERGE through the
-        multi-writer commit-or-retry verbs (flat and hive-partitioned;
-        see operators.mutate's optimistic-concurrency protocol).
-        ``mor=True`` runs UPDATE/DELETE/MERGE merge-on-read (deletion
-        vectors, operators/mor.py) — O(changed rows), no file rewrites;
-        read the table back via read_mor until materialize_deletes.
-        With ``optimistic=True`` too, all three verbs route through the
-        OCC deletion-vector protocol (occ_dv_delete_where /
-        occ_dv_update_where / occ_dv_merge_into: disjoint-file writers
-        commit first-attempt).
+        ``optimistic=True`` commits UPDATE/DELETE/MERGE multi-writer,
+        commit-or-retry (flat and hive-partitioned; the protocol is in
+        operators/commit.py).  ``mor=True`` runs UPDATE/DELETE/MERGE
+        merge-on-read (deletion vectors, operators/mor.py) — O(changed
+        rows), no file rewrites; read the table back via read_mor until
+        materialize_deletes.  Both compose: optimistic merge-on-read
+        writers on disjoint files commit first-attempt.
 
         Deliberately takes explicit paths rather than the engine's
         fixture views: the fixtures are read-only test inputs, and a DML
         surface that could silently point at them would be a footgun.
         """
-        from .operators.mutate import execute_dml
+        from .operators.dml_sql import execute_dml
 
         return execute_dml(
             self.spark, text, tables, optimistic=optimistic, mor=mor
@@ -169,33 +166,33 @@ class Engine:
         """Start the auto-version log on a COW table dir: every later DML
         through :meth:`dml` commits the next numbered version inside the
         writer lock (see operators.mutate)."""
-        from .operators.mutate import enable_versioning
+        from .operators.versioning import enable_versioning
 
         return enable_versioning(self.spark, path)
 
     def table_versions(self, path: str) -> list[int]:
-        from .operators.mutate import table_versions
+        from .operators.versioning import table_versions
 
         return table_versions(self.spark, path)
 
     def read_version(self, path: str, version: int | None = None) -> DataFrame:
         """The table exactly as of ``version`` (default latest) — readers
         pinned here are isolated from concurrent writers."""
-        from .operators.mutate import read_version
+        from .operators.versioning import read_version
 
         return read_version(self.spark, path, version)
 
     def read_as_of(self, path: str, timestamp: str) -> DataFrame:
         """Wall-clock time travel: the newest version committed at or
-        before ``timestamp`` (operators.mutate.read_as_of)."""
-        from .operators.mutate import read_as_of
+        before ``timestamp`` (operators.versioning.read_as_of)."""
+        from .operators.versioning import read_as_of
 
         return read_as_of(self.spark, path, timestamp)
 
     def version_history(
         self, path: str, last: int | None = None
     ) -> list[tuple[int, str]]:
-        from .operators.mutate import version_history
+        from .operators.versioning import version_history
 
         return version_history(self.spark, path, last)
 
@@ -222,8 +219,8 @@ class Engine:
     def restore_version(self, path: str, version: int):
         """``RESTORE TABLE ... TO VERSION AS OF n``: roll the live file
         set back to version ``n`` as a new commit — metadata-only renames,
-        full history preserved (operators.mutate.restore_version)."""
-        from .operators.mutate import restore_version
+        full history preserved (operators.versioning.restore_version)."""
+        from .operators.versioning import restore_version
 
         return restore_version(self.spark, path, version)
 
@@ -292,11 +289,11 @@ class Engine:
     ) -> DataFrame:
         """CDC: net row changes between two committed versions, tagged
         ``_change_type`` ('insert'/'delete'); reads only the files the
-        range touched (operators.mutate.read_changes).  ``align_schema``
+        range touched (operators.versioning.read_changes).  ``align_schema``
         pins the output to the ``to`` version's full schema;
         ``max_touched_files`` bounds the DV entry-diff's driver-side file
         list (past it, the plan scans every common file instead)."""
-        from .operators.mutate import read_changes
+        from .operators.versioning import read_changes
 
         return read_changes(
             self.spark, path, from_version, to_version,
@@ -308,17 +305,17 @@ class Engine:
     def add_constraint(
         self, path: str, name: str, expr: str, validate: bool = True
     ) -> None:
-        from .operators.mutate import add_constraint
+        from .operators.constraints import add_constraint
 
         add_constraint(self.spark, path, name, expr, validate)
 
     def drop_constraint(self, path: str, name: str) -> None:
-        from .operators.mutate import drop_constraint
+        from .operators.constraints import drop_constraint
 
         drop_constraint(self.spark, path, name)
 
     def table_constraints(self, path: str) -> dict[str, str]:
-        from .operators.mutate import table_constraints
+        from .operators.constraints import table_constraints
 
         return table_constraints(self.spark, path)
 
@@ -338,7 +335,8 @@ class Engine:
         """
         import re
 
-        from .operators.mutate import _segments, read_as_of, read_version
+        from .operators.dml_sql import _segments
+        from .operators.versioning import read_as_of, read_version
 
         pat = re.compile(
             r"\b(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)", re.IGNORECASE

@@ -31,13 +31,8 @@ from pyspark.sql import functions as F
 from . import register
 from ..catalog import load_tables
 from ..functions import dsum, dsum_sql, values_df
-from ..operators.mutate import (
-    compact,
-    delete_where,
-    execute_dml,
-    merge_into,
-    update_where,
-)
+from ..operators.mutate import compact, delete_where, merge_into, update_where
+from ..operators.dml_sql import execute_dml
 
 
 def _mut_dir(sf_dir: str, leaf: str) -> str:
@@ -308,7 +303,7 @@ def mutate_partitioned_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("mutate", "sources"),
 )
 def mutate_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import create_snapshot, read_snapshot
+    from ..operators.versioning import create_snapshot, read_snapshot
 
     t = load_tables(spark, sf_dir, ("documents",))
     path = _mut_dir(sf_dir, "documents_ttravel")
@@ -524,7 +519,7 @@ def mutate_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("mutate",),
 )
 def mutate_versioned_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import enable_versioning, read_version
+    from ..operators.versioning import enable_versioning, read_version
 
     t = load_tables(spark, sf_dir, ("customer",))
     path = _mut_dir(sf_dir, "cust_ver")
@@ -586,7 +581,7 @@ _OCC_ORACLE = (
     oracle=_OCC_ORACLE,
     doc="Optimistic multi-writer commits graded end-to-end (r7; no "
     "reference analog — parser.cpp never executes DML at all): four "
-    "interleaved occ_update_where writers mutate a version-enabled "
+    "interleaved optimistic update_where writers mutate a version-enabled "
     "customer copy.  Writers 1+2 hit DISJOINT files (lowest vs highest "
     "c_custkey range in the range-clustered layout) — the interleaved "
     "writer commits between the outer writer's stage and commit, and the "
@@ -602,11 +597,8 @@ _OCC_ORACLE = (
     tags=("mutate",),
 )
 def mutate_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import (
-        enable_versioning,
-        occ_update_where,
-        read_version,
-    )
+    from ..operators.versioning import enable_versioning, read_version
+    from ..operators.mutate import update_where
 
     t = load_tables(spark, sf_dir, ("customer",))
     path = _mut_dir(sf_dir, "cust_occ")
@@ -630,16 +622,18 @@ def mutate_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     def interleave_b(attempt: int) -> None:
         a_attempts.append(attempt)
         if attempt == 1:
-            occ_update_where(
+            update_where(
                 spark, path,
                 {"c_acctbal": "c_acctbal + 1000"},
                 f"c_custkey > {hi} - 3",
+                optimistic=True,
             )                                                       # v2
-    occ_update_where(
+    update_where(
         spark, path,
         {"c_acctbal": "c_acctbal + 100"},
         f"c_custkey < {lo} + 3",
         _after_stage=interleave_b,
+        optimistic=True,
     )                                                               # v3
 
     # phase 2 — overlapping files: writer D (+7, odd keys — every file)
@@ -650,16 +644,18 @@ def mutate_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     def interleave_d(attempt: int) -> None:
         c_attempts.append(attempt)
         if attempt == 1:
-            occ_update_where(
+            update_where(
                 spark, path,
                 {"c_acctbal": "c_acctbal + 7"},
                 "c_custkey % 2 = 1",
+                optimistic=True,
             )                                                       # v4
-    occ_update_where(
+    update_where(
         spark, path,
         {"c_acctbal": "c_acctbal * 2"},
         "c_custkey % 2 = 0",
         _after_stage=interleave_d,
+        optimistic=True,
     )                                                               # v5
 
     frames = [
@@ -716,7 +712,7 @@ _OCC_MERGE_ORACLE = (
     "mutate_occ_merge",
     oracle=_OCC_MERGE_ORACLE,
     doc="Optimistic MERGE graded end-to-end (r8; no reference analog — "
-    "parser.cpp never executes DML): two interleaved occ_merge_into "
+    "parser.cpp never executes DML): two interleaved optimistic merge_into "
     "upserts on a version-enabled customer copy.  Writer B (low keys, "
     "delta 500 + inserts shifted +2e6) commits v2 between writer A's "
     "stage and commit; A's SERIALIZABLE validation (a merge's read set "
@@ -729,11 +725,8 @@ _OCC_MERGE_ORACLE = (
     tags=("mutate",),
 )
 def mutate_occ_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import (
-        enable_versioning,
-        occ_merge_into,
-        read_version,
-    )
+    from ..operators.versioning import enable_versioning, read_version
+    from ..operators.mutate import merge_into
 
     t = load_tables(spark, sf_dir, ("customer",))
     path = _mut_dir(sf_dir, "cust_occ_merge")
@@ -770,17 +763,19 @@ def mutate_occ_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     def interleave_b(attempt: int) -> None:
         a_attempts.append(attempt)
         if attempt == 1:
-            occ_merge_into(
+            merge_into(
                 spark, path, src_b, on=["c_custkey"],
                 matched_set={"c_acctbal": "c_acctbal + src_delta"},
                 insert_values={"c_acctbal": "src_delta"},
+                optimistic=True,
             )                                                       # v2
 
-    occ_merge_into(
+    merge_into(
         spark, path, src_a, on=["c_custkey"],
         matched_set={"c_acctbal": "c_acctbal + src_delta"},
         insert_values={"c_acctbal": "src_delta"},
         _after_stage=interleave_b,
+        optimistic=True,
     )                                                               # v3
 
     frames = [
@@ -829,7 +824,7 @@ _OCC_PART_ORACLE = (
     tags=("mutate",),
 )
 def mutate_occ_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import occ_update_where
+    from ..operators.mutate import update_where
 
     t = load_tables(spark, sf_dir, ("orders",))
     path = _mut_dir(sf_dir, "orders_occ_part")
@@ -845,17 +840,19 @@ def mutate_occ_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     def interleave_b(attempt: int) -> None:
         a_attempts.append(attempt)
         if attempt == 1:
-            occ_update_where(
+            update_where(
                 spark, path,
                 {"o_totalprice": "o_totalprice + 1000"},
                 "o_orderstatus = 'F'",
+                optimistic=True,
             )
 
-    occ_update_where(
+    update_where(
         spark, path,
         {"o_totalprice": "o_totalprice + 500"},
         "o_orderstatus = 'O'",
         _after_stage=interleave_b,
+        optimistic=True,
     )
     back = spark.read.parquet(path)
     out = (
@@ -991,7 +988,7 @@ _READ_CHANGES_ORACLE = (
     tags=("mutate",),
 )
 def mutate_read_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import enable_versioning, read_changes
+    from ..operators.versioning import enable_versioning, read_changes
 
     t = load_tables(spark, sf_dir, ("customer",))
     path = _mut_dir(sf_dir, "cust_cdc")
@@ -1062,7 +1059,7 @@ _CONSTRAINTS_ORACLE = (
     tags=("mutate",),
 )
 def mutate_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import ConstraintViolation, add_constraint
+    from ..operators.constraints import ConstraintViolation, add_constraint
 
     t = load_tables(spark, sf_dir, ("customer",))
     path = _mut_dir(sf_dir, "cust_cons")
@@ -1169,7 +1166,7 @@ _CDF_REPLAY_ORACLE = (
     tags=("mutate", "streaming"),
 )
 def mutate_cdf_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import enable_versioning
+    from ..operators.versioning import enable_versioning
     from ..streaming.cdf import register as register_cdf
 
     t = load_tables(spark, sf_dir, ("customer",))
@@ -1372,7 +1369,7 @@ def mutate_mor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("mutate", "sources"),
 )
 def mutate_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import (
+    from ..operators.versioning import (
         enable_versioning,
         read_version,
         restore_version,
@@ -1514,7 +1511,7 @@ def mutate_mor_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize_deletes,
         read_mor,
     )
-    from ..operators.mutate import (
+    from ..operators.versioning import (
         enable_versioning,
         read_changes,
         read_version,
@@ -1700,7 +1697,7 @@ _TXN_BATCH_ORACLE = (
     tags=("mutate",),
 )
 def mutate_txn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import (
+    from ..operators.versioning import (
         enable_versioning,
         read_changes,
         table_versions,
@@ -1805,8 +1802,8 @@ _OCC_DV_ORACLE = (
     "mutate_occ_dv_writers",
     oracle=_OCC_DV_ORACLE,
     doc="Optimistic DELETION-VECTOR deletes graded end-to-end (r10; no "
-    "reference analog): four interleaved occ_dv_delete_where writers on "
-    "a version-enabled range-clustered customer copy.  Writers 1+2 "
+    "reference analog): four interleaved optimistic dv_delete_where "
+    "writers on a version-enabled range-clustered customer copy.  Writers 1+2 "
     "tombstone DISJOINT files (highest vs lowest key range) — the "
     "interleaved writer commits v2 between the outer writer's stage and "
     "commit, and the outer writer still commits v3 FIRST-attempt "
@@ -1823,8 +1820,8 @@ _OCC_DV_ORACLE = (
     tags=("mutate",),
 )
 def mutate_occ_dv_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mor import occ_dv_delete_where
-    from ..operators.mutate import enable_versioning, read_version
+    from ..operators.mor import dv_delete_where
+    from ..operators.versioning import enable_versioning, read_version
 
     t = load_tables(spark, sf_dir, ("customer",))
     path = _mut_dir(sf_dir, "cust_occ_dv")
@@ -1851,12 +1848,14 @@ def mutate_occ_dv_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     def interleave_high(attempt: int) -> None:
         a_attempts.append(attempt)
         if attempt == 1:
-            occ_dv_delete_where(
-                spark, path, f"c_custkey > {hi} - 3"
+            dv_delete_where(
+                spark, path, f"c_custkey > {hi} - 3",
+                optimistic=True
             )                                                       # v2
-    occ_dv_delete_where(
+    dv_delete_where(
         spark, path, f"c_custkey < {lo} + 3",
         _after_stage=interleave_high,
+        optimistic=True,
     )                                                               # v3
 
     # phase 2 — same file: the interleaved writer tombstones the ODD
@@ -1868,14 +1867,16 @@ def mutate_occ_dv_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     def interleave_odd(attempt: int) -> None:
         c_attempts.append(attempt)
         if attempt == 1:
-            occ_dv_delete_where(
+            dv_delete_where(
                 spark, path,
                 f"c_custkey < {lo} + 10 AND c_custkey % 2 = 1",
+                optimistic=True,
             )                                                       # v4
-    occ_dv_delete_where(
+    dv_delete_where(
         spark, path,
         f"c_custkey < {lo} + 10 AND c_custkey % 2 = 0",
         _after_stage=interleave_odd,
+        optimistic=True,
     )                                                               # v5
 
     frames = [
@@ -1940,7 +1941,8 @@ ORDER BY version
     "mutate_occ_dv_upsert",
     oracle=_OCC_DV_UPSERT_ORACLE,
     doc="Optimistic deletion-vector UPDATE and MERGE graded end-to-end "
-    "(new r11, operators/mor.py occ_dv_update_where/occ_dv_merge_into — "
+    "(new r11, operators/mor.py dv_update_where/dv_merge_into with "
+    "optimistic=True — "
     "the symmetrization of r10's delete-only OCC-DV protocol; no "
     "reference analog).  On a version-enabled range-clustered customer "
     "copy: an occ UPDATE (+1000 on the lowest keys, file 0) overlaps an "
@@ -1959,12 +1961,8 @@ ORDER BY version
     tags=("mutate",),
 )
 def mutate_occ_dv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mor import (
-        occ_dv_delete_where,
-        occ_dv_merge_into,
-        occ_dv_update_where,
-    )
-    from ..operators.mutate import enable_versioning, read_version
+    from ..operators.mor import dv_delete_where, dv_merge_into, dv_update_where
+    from ..operators.versioning import enable_versioning, read_version
 
     t = load_tables(spark, sf_dir, ("customer",))
     path = _mut_dir(sf_dir, "cust_occ_dv_upsert")
@@ -1991,13 +1989,15 @@ def mutate_occ_dv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def interleave_high(attempt: int) -> None:
         u_attempts.append(attempt)
         if attempt == 1:
-            occ_dv_delete_where(
-                spark, path, f"c_custkey > {hi} - 3"
+            dv_delete_where(
+                spark, path, f"c_custkey > {hi} - 3",
+                optimistic=True
             )                                                       # v2
-    occ_dv_update_where(
+    dv_update_where(
         spark, path, {"c_acctbal": "c_acctbal + 1000"},
         f"c_custkey < {lo} + 3",
         _after_stage=interleave_high,
+        optimistic=True,
     )                                                               # v3
 
     # phase 2 — same file: the interleaved writer tombstones the lowest
@@ -2010,19 +2010,21 @@ def mutate_occ_dv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def interleave_lo(attempt: int) -> None:
         m_attempts.append(attempt)
         if attempt == 1:
-            occ_dv_delete_where(
-                spark, path, f"c_custkey = {lo}"
+            dv_delete_where(
+                spark, path, f"c_custkey = {lo}",
+                optimistic=True
             )                                                       # v4
     src = (
         t["customer"]
         .where(f"c_custkey < {lo} + 10")
         .selectExpr("c_custkey", "c_acctbal * 2 AS nb")
     )
-    occ_dv_merge_into(
+    dv_merge_into(
         spark, path, src, on=["c_custkey"],
         matched_set={"c_acctbal": "src_nb"},
         insert_condition="false",
         _after_stage=interleave_lo,
+        optimistic=True,
     )                                                               # v5
 
     frames = [
@@ -2098,7 +2100,7 @@ _TXN_MULTI_ORACLE = (
     tags=("mutate",),
 )
 def mutate_txn_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import (
+    from ..operators.versioning import (
         enable_versioning,
         read_changes,
         table_versions,
@@ -2221,7 +2223,7 @@ def mutate_txn_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("mutate",),
 )
 def mutate_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.mutate import (
+    from ..operators.versioning import (
         drop_versions_before,
         enable_versioning,
         read_version,

@@ -1,25 +1,47 @@
 """One commit loop and one post-commit sequence for every writer.
 
-The twelve public DML entry points — {DELETE, UPDATE, MERGE} ×
-{copy-on-write, merge-on-read deletion vectors} × {locked, optimistic} —
-differ only in HOW they stage a change (a file rewrite in
-:mod:`.mutate`, a tombstone batch plus appended copies in :mod:`.mor`)
-and in the commit mode.  ``compact`` and ``materialize_deletes`` are two
-more stages of the same kind.  The protocol around the staging is this
-one function, :func:`run`:
+The six DML verbs — {DELETE, UPDATE, MERGE} × {copy-on-write
+(:mod:`.mutate`), merge-on-read deletion vectors (:mod:`.mor`)} — differ
+only in HOW they stage a change (a file rewrite, or a tombstone batch
+plus appended copies); each commits locked by default or optimistically
+with ``optimistic=True``.  ``compact`` and ``materialize_deletes`` are
+two more stages of the same kind.  The protocol around the staging is
+this one function, :func:`run`:
 
 - **locked**: take the table's writer lock (bounded wait
-  ``lock_wait_seconds``; re-entrant for the thread that owns an open
-  :mod:`.txn` transaction), stage, enforce CHECK constraints, publish.
-  No validation, no retry — nothing can change under the lock.
-- **optimistic** (the Delta/Iceberg commit loop): stage lock-free;
-  enforce constraints lock-free; take the lock with the bounded wait;
+  ``lock_wait_seconds``, default 0: a second writer is refused;
+  re-entrant for the thread that owns an open :mod:`.txn` transaction),
+  stage, enforce CHECK constraints, publish.  No validation, no retry —
+  nothing can change under the lock.
+- **optimistic** (the Delta/Iceberg commit loop; no reference analog —
+  the reference parses UPDATE/DELETE and stops,
+  ``engine/src/parser.cpp:232-296``): READ the table state and STAGE the
+  change lock-free — the expensive Spark jobs; enforce constraints
+  lock-free; take the lock with the bounded wait (default 30 s);
   ``validate()`` the snapshot the stage read; re-check constraints if
   the registered set changed meanwhile; publish.  A lost validation, a
   lock still held after the wait, or an input file deleted under the
   lock-free read (on a table that still exists) discards the staging and
   retries against the new committed state, up to ``max_attempts``; then
-  :class:`~.occ.ConcurrentWriteConflict`.
+  :class:`ConcurrentWriteConflict`, and the table is unchanged by that
+  caller.
+
+Validation is by exact file-name set: part names are uuid-unique, so
+name identity is content identity.  A point verb's conflict unit is the
+FILE it read and replaces (a tombstone's file, for merge-on-read), so
+writers on disjoint files — and so on disjoint partitions — both commit
+on their first attempt and only the metadata swap serializes; the
+in-lock re-list covers only the directories the attempt touched.
+Writers on overlapping files serialize by retry: the loser re-evaluates
+its predicate over the winner's committed rows, the serial-equivalent
+outcome, never a lost update.  A copy-on-write MERGE's read set is the
+WHOLE table (its NOT-MATCHED anti-join reads every file's keys to decide
+what to insert), so its default ``isolation='serializable'`` requires
+the table's file list to be exactly what the read saw;
+``'write_serializable'`` validates only the files it rewrites.  Isolation
+is snapshot-level (Delta's WriteSerializable analog): a retry re-reads
+everything, but a first-attempt commit does not re-evaluate its
+predicate over rows a concurrent writer inserted after its read.
 
 Every writer — both modes of :func:`run`, ``restore_version``, and
 transaction commit, rollback and recovery (:mod:`.txn`) — then runs the
@@ -62,7 +84,12 @@ from .mutate import (
     _writer_lock,
 )
 from .mor import refresh_cached
-from .occ import ConcurrentWriteConflict, _is_missing_file_error
+from .reader import _is_missing_file_error
+
+
+class ConcurrentWriteConflict(RuntimeError):
+    """All optimistic attempts lost their validation race; the table is
+    unchanged by this caller."""
 
 
 def _no_conflict() -> str | None:
@@ -179,7 +206,7 @@ def run(
     *,
     optimistic: bool = False,
     max_attempts: int = 5,
-    lock_wait_seconds: float = 0.0,
+    lock_wait_seconds: float | None = None,
     retain: bool | None = None,
     what: str = "DML",
     _after_stage=None,
@@ -190,8 +217,13 @@ def run(
     to sibling staging dirs, registering each in ``created`` before
     writing it; ``optimistic`` tells it to also gather what
     ``validate()`` needs.  ``what`` names the statement in conflict
-    errors.  ``_after_stage(attempt)`` is a test seam between the
-    (lock-free) stage and the commit lock, optimistic mode only."""
+    errors.  ``lock_wait_seconds=None`` waits 0 s for the lock when
+    locked (a busy table refuses) and 30 s when optimistic (the lock
+    guards only the metadata swap).  ``_after_stage(attempt)`` is a test
+    seam between the (lock-free) stage and the commit lock, optimistic
+    mode only."""
+    if lock_wait_seconds is None:
+        lock_wait_seconds = 30.0 if optimistic else 0.0
     if not optimistic:
         created: list[str] = []
         with _writer_lock(spark, path, lock_wait_seconds):

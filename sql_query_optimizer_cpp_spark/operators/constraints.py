@@ -25,8 +25,8 @@ from .mutate import (
 # Delta-style CHECK constraints for the mutate verbs; no reference analog
 # (the reference parses DML and stops, engine/src/parser.cpp:232-296, and
 # has no constraint surface at all).  Registered per table dir in an
-# underscore-invisible JSON; every value-changing verb (UPDATE, MERGE, the
-# occ_* variants) verifies its STAGED output against all constraints in ONE
+# underscore-invisible JSON; every value-changing verb (UPDATE, MERGE, in
+# either commit mode) verifies its STAGED output against all constraints in ONE
 # column-pruned aggregate job BEFORE any original file moves — a violation
 # aborts with the table untouched.  DELETE and compaction skip the check
 # (they cannot introduce values).  Enforcement cost is O(touched files),

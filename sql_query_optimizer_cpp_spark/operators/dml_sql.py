@@ -1,6 +1,5 @@
 """Textual DML front-end: parse UPDATE/DELETE/MERGE/ALTER text, dispatch
-to the executing verbs (split from mutate.py, r12; same grammar, same
-names, still importable from ``operators.mutate``)."""
+to the executing verbs (split from mutate.py, r12; same grammar)."""
 
 from __future__ import annotations
 
@@ -8,24 +7,9 @@ import re
 
 from pyspark.sql import SparkSession
 
-from .mutate import (
-    MutationStats,
-    delete_where,
-    list_data_files,
-    merge_into,
-    update_where,
-)
-from .occ import occ_delete_where, occ_merge_into, occ_update_where
+from .mutate import MutationStats, delete_where, merge_into, update_where
 from .constraints import add_constraint, drop_constraint
-from .mor import (
-    dv_delete_where,
-    dv_merge_into,
-    dv_update_where,
-    occ_dv_delete_where,
-    occ_dv_merge_into,
-    occ_dv_update_where,
-    read_mor,
-)
+from .mor import dv_delete_where, dv_merge_into, dv_update_where, read_mor
 
 # -- textual DML front-end ---------------------------------------------------
 #
@@ -295,21 +279,15 @@ def _parse_merge_on(on_text: str, t_alias: str | None, s_alias: str | None) -> l
     return keys
 
 
-#: (verb, mor, optimistic) -> the executing verb: one commit loop
-#: (operators/commit.py) behind all twelve, so the front-end only picks
+#: (verb, mor) -> the executing verb; each commits locked or optimistic
+#: through the one commit loop (operators/commit.py)
 _VERBS = {
-    ("DELETE", False, False): delete_where,
-    ("DELETE", False, True): occ_delete_where,
-    ("DELETE", True, False): dv_delete_where,
-    ("DELETE", True, True): occ_dv_delete_where,
-    ("UPDATE", False, False): update_where,
-    ("UPDATE", False, True): occ_update_where,
-    ("UPDATE", True, False): dv_update_where,
-    ("UPDATE", True, True): occ_dv_update_where,
-    ("MERGE", False, False): merge_into,
-    ("MERGE", False, True): occ_merge_into,
-    ("MERGE", True, False): dv_merge_into,
-    ("MERGE", True, True): occ_dv_merge_into,
+    ("DELETE", False): delete_where,
+    ("DELETE", True): dv_delete_where,
+    ("UPDATE", False): update_where,
+    ("UPDATE", True): dv_update_where,
+    ("MERGE", False): merge_into,
+    ("MERGE", True): dv_merge_into,
 }
 
 
@@ -323,19 +301,17 @@ def execute_dml(
     """Parse an UPDATE / DELETE / MERGE statement and execute it
     copy-on-write.
 
-    ``optimistic=True`` routes every verb through the multi-writer
-    commit-or-retry protocol (:func:`occ_update_where` /
-    :func:`occ_delete_where` / :func:`occ_merge_into`; flat and
+    ``optimistic=True`` passes to the verb: the multi-writer
+    commit-or-retry protocol (operators/commit.py; flat and
     hive-partitioned tables).
 
     ``mor=True`` routes UPDATE/DELETE/MERGE through the merge-on-read
     deletion-vector verbs (operators/mor.py): O(changed rows) sidecar +
     append writes, zero file rewrites, read back via ``read_mor``.
-    ``mor=True, optimistic=True`` composes for ALL THREE verbs (r11) —
-    the OCC deletion-vector protocol (``occ_dv_delete_where`` /
-    ``occ_dv_update_where`` / ``occ_dv_merge_into``: scans and staging
-    writes outside the lock, file-scoped validate-and-move-in; writers
-    touching disjoint files commit first-attempt).
+    ``mor=True, optimistic=True`` composes for all three verbs: scans
+    and staging writes outside the lock, file-scoped
+    validate-and-move-in; writers touching disjoint files commit
+    first-attempt.
 
     ``tables`` maps table names to parquet directory paths (the catalog
     the reference gets from its live MySQL connection).  The MERGE
@@ -521,10 +497,6 @@ def execute_dml(
     if name not in tables:
         raise ValueError(f"unknown table {name!r}")
     path = tables[name]
-    out = _VERBS[verb, mor, optimistic](spark, path, *args, **kwargs)
-    if isinstance(out, int):
-        # the merge-on-read point verbs return the affected-row count
-        out = MutationStats(
-            len(list_data_files(spark, path, recursive=True)), 0, out
-        )
-    return out
+    return _VERBS[verb, mor](
+        spark, path, *args, optimistic=optimistic, **kwargs
+    )

@@ -29,9 +29,9 @@ Design (all distributed, nothing per-row on the driver):
   Matched rows are read from the verb's STARTING file list, never the
   table root, so the freshly appended copies can never be re-matched and
   tombstoned by the same statement.
-- All six DV verbs — {delete, update, merge} × {locked, optimistic} —
-  are one writer (:func:`_dv_stage`) in the one DML commit loop
-  (operators/commit.py).
+- The three DV verbs — delete, update, merge, each locked or
+  ``optimistic=True`` — are one writer (:func:`_dv_stage`) in the one
+  DML commit loop (operators/commit.py).
 - Crash ordering mirrors COW's "duplicates, never loss": new data lands
   before the tombstones that hide the old data.
 - :func:`materialize_deletes` rewrites exactly the files that have
@@ -397,7 +397,36 @@ def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
     return stage
 
 
-def _dv_delete(spark, path, condition, **mode) -> MutationStats:
+def dv_delete_where(
+    spark: SparkSession,
+    path: str,
+    condition: str | Column,
+    *,
+    optimistic: bool = False,
+    max_attempts: int = 5,
+    lock_wait_seconds: float | None = None,
+    _after_stage=None,
+) -> MutationStats:
+    """Merge-on-read ``DELETE``: tombstone the matched row positions
+    instead of rewriting their files — O(deleted rows) written, zero data
+    files touched.  SQL three-valued logic (NULL keeps the row), same as
+    :func:`~.mutate.delete_where`.  ``rows_matched`` counts rows newly
+    deleted (already tombstoned rows never double-count); ``files_total``
+    is the data-file count the statement started from.  Read back via
+    :func:`read_mor`.  ``lock_wait_seconds`` > 0 waits for a busy writer
+    lock instead of refusing (parallel appliers serialize).  The
+    tombstone batch stages beside the table and renames into ``_dv/``
+    all-or-nothing.
+
+    ``optimistic=True`` runs the matched-row scan and the batch write
+    outside the writer lock; only a metadata validate-and-move-in
+    serializes.  Batches are append-only, so the conflict unit is the
+    FILE a tombstone references: writers deleting from disjoint files
+    both commit on their first attempt; a concurrent commit that
+    tombstoned, un-tombstoned, or retired one of THIS writer's files
+    re-derives the matched set (and the already-tombstoned exclusion that
+    keeps the count exact) and retries.  The commit keywords pass to
+    :func:`~.commit.run`."""
     from .commit import run
 
     def legs(sub, live, data_cols, part_cols):
@@ -406,61 +435,35 @@ def _dv_delete(spark, path, condition, **mode) -> MutationStats:
     cond = _cond(condition)
     return run(
         spark, path, _dv_stage(spark, path, legs, cond),
-        what="DV DELETE", **mode,
+        what="DV DELETE", optimistic=optimistic, max_attempts=max_attempts,
+        lock_wait_seconds=lock_wait_seconds, _after_stage=_after_stage,
     )
 
 
-def dv_delete_where(
+def dv_update_where(
     spark: SparkSession,
     path: str,
+    set_map: dict[str, str | Column],
     condition: str | Column,
-    lock_wait_seconds: float = 0.0,
-) -> int:
-    """Merge-on-read ``DELETE``: tombstone the matched row positions
-    instead of rewriting their files — O(deleted rows) written, zero data
-    files touched.  SQL three-valued logic (NULL keeps the row), same as
-    :func:`~.mutate.delete_where`.  Returns rows newly deleted (already
-    tombstoned rows never double-count).  Read back via :func:`read_mor`.
-    ``lock_wait_seconds`` > 0 waits for a busy writer lock instead of
-    refusing (parallel appliers serialize; see also
-    :func:`occ_dv_delete_where` for the stage-outside-the-lock variant).
-    The tombstone batch stages beside the table and renames into
-    ``_dv/`` all-or-nothing."""
-    return _dv_delete(
-        spark, path, condition, lock_wait_seconds=lock_wait_seconds
-    ).rows_matched
-
-
-def occ_dv_delete_where(
-    spark: SparkSession,
-    path: str,
-    condition: str | Column,
+    *,
+    optimistic: bool = False,
     max_attempts: int = 5,
-    lock_wait_seconds: float = 30.0,
+    lock_wait_seconds: float | None = None,
     _after_stage=None,
-) -> int:
-    """Optimistic merge-on-read ``DELETE``: same semantics as
-    :func:`dv_delete_where`, but the matched-row scan and the tombstone
-    batch WRITE run outside the writer lock — only a metadata
-    validate-and-move-in serializes.  Deletion-vector batches are
-    append-only, so the natural conflict unit is the FILE a tombstone
-    references: two writers deleting from disjoint files both commit on
-    their first attempt (the expensive scan/stage overlaps); a conflict
-    exists only when a concurrent commit tombstoned, un-tombstoned, or
-    retired one of THIS writer's files — then the matched set (and the
-    already-tombstoned exclusion that keeps the returned count exact) is
-    re-derived against the new state and the stage retries.  Attempts
-    exhausted raise :class:`~.occ.ConcurrentWriteConflict`.
+) -> MutationStats:
+    """Merge-on-read ``UPDATE`` = insert the updated copies, tombstone the
+    originals.  Cost is O(matched rows), not O(files containing them).
 
-    ``_after_stage(attempt)`` is the test seam between stage and commit.
-    """
-    return _dv_delete(
-        spark, path, condition, optimistic=True, max_attempts=max_attempts,
-        lock_wait_seconds=lock_wait_seconds, _after_stage=_after_stage,
-    ).rows_matched
-
-
-def _dv_update(spark, path, set_map, condition, **mode) -> MutationStats:
+    Works on flat AND hive-partitioned tables: copies route to their
+    ``key=value`` directories through a partitioned staging write (the
+    same mover the COW verbs use), and — because an updated copy keeps
+    its partition values — assigning a PARTITION column is refused, the
+    COW rule.  Assignments cast back to the column's existing type
+    (schema stability).  CHECK constraints are enforced over the staged
+    copies BEFORE anything becomes visible.  Stats and the commit
+    keywords are :func:`dv_delete_where`'s; ``optimistic=True`` stages
+    both writes lock-free and re-checks constraints inside the commit
+    lock if the registered set changed meanwhile."""
     from .commit import run
 
     def legs(sub, live, data_cols, part_cols):
@@ -488,60 +491,9 @@ def _dv_update(spark, path, set_map, condition, **mode) -> MutationStats:
     cond = _cond(condition)
     return run(
         spark, path, _dv_stage(spark, path, legs, cond),
-        what="DV UPDATE", **mode,
+        what="DV UPDATE", optimistic=optimistic, max_attempts=max_attempts,
+        lock_wait_seconds=lock_wait_seconds, _after_stage=_after_stage,
     )
-
-
-def dv_update_where(
-    spark: SparkSession,
-    path: str,
-    set_map: dict[str, str | Column],
-    condition: str | Column,
-    lock_wait_seconds: float = 0.0,
-) -> int:
-    """Merge-on-read ``UPDATE`` = insert the updated copies, tombstone the
-    originals.  Cost is O(matched rows), not O(files containing them).
-
-    Works on flat AND hive-partitioned tables: copies route to their
-    ``key=value`` directories through a partitioned staging write (the
-    same mover the COW verbs use), and — because an updated copy keeps
-    its partition values — assigning a PARTITION column is refused, the
-    COW rule.  Assignments cast back to the column's existing type
-    (schema stability).  CHECK constraints are enforced over the staged
-    copies BEFORE anything becomes visible."""
-    return _dv_update(
-        spark, path, set_map, condition, lock_wait_seconds=lock_wait_seconds
-    ).rows_matched
-
-
-def occ_dv_update_where(
-    spark: SparkSession,
-    path: str,
-    set_map: dict[str, str | Column],
-    condition: str | Column,
-    max_attempts: int = 5,
-    lock_wait_seconds: float = 30.0,
-    _after_stage=None,
-) -> int:
-    """Optimistic merge-on-read ``UPDATE``: same semantics as
-    :func:`dv_update_where` (tombstone the originals, append the updated
-    copies — O(matched rows), zero file rewrites), but the matched-row
-    scan AND both staging writes run outside the writer lock; only the
-    metadata validate-and-move-in serializes.  The conflict unit is the
-    FILE a tombstone references (:func:`occ_dv_delete_where`'s rule):
-    writers updating disjoint files commit on their first attempt; a
-    concurrent commit that tombstoned, un-tombstoned, or retired one of
-    THIS writer's files re-derives and retries.  CHECK constraints are
-    enforced on the staged copies lock-free and re-checked inside the
-    commit lock if the registered set changed meanwhile.
-
-    ``_after_stage(attempt)`` is the test seam between stage and commit.
-    """
-    return _dv_update(
-        spark, path, set_map, condition, optimistic=True,
-        max_attempts=max_attempts, lock_wait_seconds=lock_wait_seconds,
-        _after_stage=_after_stage,
-    ).rows_matched
 
 
 def _merge_col_checks(
@@ -550,7 +502,7 @@ def _merge_col_checks(
     matched_set: dict | None,
     insert_values: dict | None,
 ) -> None:
-    """Shared clause-column validation for the DV merges."""
+    """Clause-column validation of :func:`dv_merge_into`."""
     if matched_set:
         unknown = set(matched_set) - set(data_cols)
         if unknown:
@@ -585,7 +537,7 @@ def _merge_frames(
     insert_condition,
     skip_unchanged: bool,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared leg derivation for the DV merges: returns
+    """Leg derivation of :func:`dv_merge_into`: returns
     ``(updated_copies, tombstone_entries, insert_rows)`` against the
     caller's ``live`` snapshot.  Clause semantics documented on
     :func:`dv_merge_into` (delete-before-update, three-valued WHERE,
@@ -650,7 +602,7 @@ def _merge_frames(
 
 
 def _merge_src(source: DataFrame, on: list[str]) -> DataFrame:
-    """Source-column scoping shared by the DV merges: join keys keep
+    """Source-column scoping of :func:`dv_merge_into`: join keys keep
     their names, everything else becomes ``src_<name>`` (expression
     scope for clause conditions/assignments — never written; schema
     evolution stays a COW-path feature)."""
@@ -659,42 +611,6 @@ def _merge_src(source: DataFrame, on: list[str]) -> DataFrame:
             F.col(c).alias(c if c in on else f"src_{c}")
             for c in source.columns
         ]
-    )
-
-
-def _dv_merge(
-    spark,
-    path,
-    source,
-    on,
-    matched_set,
-    insert_values,
-    check_unique,
-    matched_delete,
-    insert_condition,
-    skip_unchanged,
-    **mode,
-) -> MutationStats:
-    from .commit import run
-
-    _check_merge_source(source, on, check_unique)
-
-    def legs(sub, live, data_cols, part_cols):
-        # source-only columns are expression scope (src_<name> in the
-        # clause conditions/assignments, e.g. a CDC op column), same as
-        # the COW merge; they are never WRITTEN — schema evolution stays
-        # a COW-path feature (merge_into(..., evolve_schema=True))
-        _merge_col_checks(data_cols, part_cols, matched_set, insert_values)
-        updated, tombstones, ins_df = _merge_frames(
-            sub, live, _merge_src(source, on), on, data_cols, matched_set,
-            matched_delete, insert_values, insert_condition, skip_unchanged,
-        )
-        return tombstones, updated, ins_df
-
-    # files_rewritten = 0 is the point: matched rows tombstone + re-append
-    return run(
-        spark, path, _dv_stage(spark, path, legs, None),
-        what="DV MERGE", **mode,
     )
 
 
@@ -709,7 +625,11 @@ def dv_merge_into(
     matched_delete: str | Column | None = None,
     insert_condition: str | Column | None = None,
     skip_unchanged: bool = False,
-    lock_wait_seconds: float = 0.0,
+    *,
+    optimistic: bool = False,
+    max_attempts: int = 5,
+    lock_wait_seconds: float | None = None,
+    _after_stage=None,
 ) -> MutationStats:
     """Merge-on-read ``MERGE INTO``: the matched legs are exactly
     :func:`dv_update_where`'s machinery — tombstone the old row images,
@@ -735,54 +655,37 @@ def dv_merge_into(
     late/duplicate batch) then tombstones nothing, appends nothing, and
     commits no version — no write amplification from at-least-once
     delivery.  Off by default because a no-op update IS a row rewrite
-    under plain MERGE semantics (the copy gets a fresh row identity)."""
-    return _dv_merge(
-        spark, path, source, on, matched_set, insert_values, check_unique,
-        matched_delete, insert_condition, skip_unchanged,
-        lock_wait_seconds=lock_wait_seconds,
-    )
+    under plain MERGE semantics (the copy gets a fresh row identity).
 
+    ``optimistic=True`` runs the join and every staging write outside
+    the writer lock; the conflict unit is :func:`dv_delete_where`'s, so
+    merges touching disjoint files commit on their first attempt.
+    Isolation is WRITE-SERIALIZABLE: a concurrent INSERT of the same key
+    is not a conflict (this merge serializes before it) — the Delta
+    WriteSerializable anomaly that ``mutate.merge_into`` documents — so
+    a pure-insert merge commits first-attempt under any non-overlapping
+    churn."""
+    from .commit import run
 
-def occ_dv_merge_into(
-    spark: SparkSession,
-    path: str,
-    source: DataFrame,
-    on: list[str],
-    matched_set: dict[str, str | Column] | None = None,
-    insert_values: dict[str, str | Column] | None = None,
-    check_unique: bool = True,
-    matched_delete: str | Column | None = None,
-    insert_condition: str | Column | None = None,
-    skip_unchanged: bool = False,
-    max_attempts: int = 5,
-    lock_wait_seconds: float = 30.0,
-    _after_stage=None,
-) -> MutationStats:
-    """Optimistic merge-on-read ``MERGE INTO``: :func:`dv_merge_into`'s
-    semantics (clause order, ``src_<name>`` scope, insert defaults,
-    ``skip_unchanged``, O(matched + inserted rows), zero file rewrites)
-    with the join, both staging writes, and the insert staging all
-    OUTSIDE the writer lock — only the metadata validate-and-move-in
-    serializes.  The conflict unit is the FILE a tombstone references
-    (:func:`occ_dv_delete_where`'s rule): merges touching disjoint
-    files commit on their first attempt.
+    _check_merge_source(source, on, check_unique)
 
-    Isolation is WRITE-SERIALIZABLE, matching
-    :func:`~.mutate.occ_merge_into`'s production default: a concurrent
-    commit that tombstoned/retired one of THIS writer's matched files
-    re-derives and retries, but a concurrent INSERT of the same key is
-    not a conflict (this merge serializes before it) — the Delta
-    WriteSerializable anomaly, documented there too.  A pure-insert
-    merge (no matched rows) therefore commits first-attempt under any
-    non-overlapping churn.
+    def legs(sub, live, data_cols, part_cols):
+        # source-only columns are expression scope (src_<name> in the
+        # clause conditions/assignments, e.g. a CDC op column), same as
+        # the COW merge; they are never WRITTEN — schema evolution stays
+        # a COW-path feature (merge_into(..., evolve_schema=True))
+        _merge_col_checks(data_cols, part_cols, matched_set, insert_values)
+        updated, tombstones, ins_df = _merge_frames(
+            sub, live, _merge_src(source, on), on, data_cols, matched_set,
+            matched_delete, insert_values, insert_condition, skip_unchanged,
+        )
+        return tombstones, updated, ins_df
 
-    ``_after_stage(attempt)`` is the test seam between stage and commit.
-    """
-    return _dv_merge(
-        spark, path, source, on, matched_set, insert_values, check_unique,
-        matched_delete, insert_condition, skip_unchanged, optimistic=True,
-        max_attempts=max_attempts, lock_wait_seconds=lock_wait_seconds,
-        _after_stage=_after_stage,
+    # files_rewritten = 0 is the point: matched rows tombstone + re-append
+    return run(
+        spark, path, _dv_stage(spark, path, legs, None),
+        what="DV MERGE", optimistic=optimistic, max_attempts=max_attempts,
+        lock_wait_seconds=lock_wait_seconds, _after_stage=_after_stage,
     )
 
 

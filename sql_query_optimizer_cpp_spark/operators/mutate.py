@@ -39,19 +39,16 @@ writer lock, giving readers snapshot isolation (``read_version`` pins a
 version's exact bytes across later DML).
 
 Concurrency: every verb commits through ONE loop (operators/commit.py,
-stage → lock → validate → publish).  The classic verbs are LOCKED: they
-take the advisory single-writer lock first (a second writer is detected
-and refused).  ``occ_update_where`` / ``occ_delete_where`` /
-``occ_merge_into`` are the same writers in the loop's OPTIMISTIC mode,
-on flat and hive-partitioned tables alike — stage without the lock,
-then validate-and-swap under a short bounded-wait lock, retrying against
-the newly committed state on conflict (the Delta/Iceberg commit-loop
-shape; see the protocol comment in occ.py).  Two writers on disjoint
-files both commit; writers on overlapping files serialize via retry
-with no lost update.  Isolation is snapshot-level (Delta's
-WriteSerializable analog): a retry re-reads everything, but a
-FIRST-attempt commit does not re-evaluate its predicate over rows a
-concurrent writer inserted after its read.
+stage → lock → validate → publish).  By default a verb is LOCKED: it
+takes the advisory single-writer lock first (a second writer is detected
+and refused).  ``optimistic=True`` runs the same writer in the loop's
+OPTIMISTIC mode, on flat and hive-partitioned tables alike — stage
+without the lock, then validate-and-swap under a short bounded-wait
+lock, retrying against the newly committed state on conflict (the
+Delta/Iceberg commit-loop shape; the protocol and its isolation level
+are described in operators/commit.py).  Two writers on disjoint files
+both commit; writers on overlapping files serialize via retry with no
+lost update.
 """
 
 from __future__ import annotations
@@ -66,7 +63,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import reader
-from .reader import Listed, _fs, _hpath, _jclass
+from .reader import Listed, _fs, _hpath, _jclass, _uri_path
 
 
 @dataclass(frozen=True)
@@ -628,8 +625,6 @@ def _stage_rewrites(
     after the staging write (an observed metric: one job per group, not
     a count plus a write).  ``listing`` is the table's listing the hits
     were found in; it carries the memo keys the group reads look up."""
-    from .occ import _uri_path
-
     listed = {_uri_path(f.path): f for f in listing}
 
     def stage_one(item: tuple[str, list[str]], cr: list[str]):
@@ -686,8 +681,6 @@ def _rewrite_stage(
             # compare DECODED PATH COMPONENTS, not raw URIs: the scan's
             # file names (hit) percent-encode, Hadoop's Path.toString
             # (the re-list) does not
-            from .occ import _uri_path
-
             _, fs, _ = _fs(spark, path)
             current: set[str] = set()
             for part_dir, _, _ in staged:
@@ -710,7 +703,28 @@ def _rewrite_stage(
     return stage
 
 
-def _delete(spark, path, condition, retain, **mode) -> MutationStats:
+def delete_where(
+    spark: SparkSession,
+    path: str,
+    condition: str | Column,
+    retain: bool | None = None,
+    *,
+    optimistic: bool = False,
+    max_attempts: int = 5,
+    lock_wait_seconds: float | None = None,
+    _after_stage=None,
+) -> MutationStats:
+    """``DELETE FROM <path> WHERE condition`` — SQL three-valued logic:
+    only rows where the predicate is TRUE are deleted; NULL keeps the row
+    (exactly what ``DELETE`` does in every SQL engine).  Works on flat and
+    hive-partitioned tables (per-partition swap; partition-column
+    predicates prune whole directories).
+
+    ``optimistic=True`` stages outside the writer lock and commits or
+    retries (up to ``max_attempts``) under it: concurrent writers on
+    disjoint files — on a partitioned table, disjoint partitions — both
+    commit.  ``lock_wait_seconds`` and ``_after_stage`` pass to
+    :func:`~.commit.run`, which documents the protocol."""
     from .commit import run
 
     cond = _cond(condition)
@@ -739,11 +753,35 @@ def _delete(spark, path, condition, retain, **mode) -> MutationStats:
 
     return run(
         spark, path, _rewrite_stage(spark, path, cond, build, enforce=False),
-        retain=retain, what="DELETE", **mode,
+        retain=retain, what="DELETE", optimistic=optimistic,
+        max_attempts=max_attempts, lock_wait_seconds=lock_wait_seconds,
+        _after_stage=_after_stage,
     )
 
 
-def _update(spark, path, set_map, condition, retain, **mode) -> MutationStats:
+def update_where(
+    spark: SparkSession,
+    path: str,
+    set_map: dict[str, str | Column],
+    condition: str | Column,
+    retain: bool | None = None,
+    *,
+    optimistic: bool = False,
+    max_attempts: int = 5,
+    lock_wait_seconds: float | None = None,
+    _after_stage=None,
+) -> MutationStats:
+    """``UPDATE <path> SET col = expr, ... WHERE condition``.
+
+    Each assignment is cast back to the column's EXISTING type: a COW
+    rewrite must never drift the schema of rewritten files away from the
+    untouched ones (a widened column would poison every later scan).
+
+    Works on flat and hive-partitioned tables; assigning a PARTITION
+    column is refused — changing a row's partition value means moving it
+    between directories, which is a delete+insert, not an update.
+    ``optimistic`` and the commit keywords are :func:`delete_where`'s.
+    """
     from .commit import run
 
     cond = _cond(condition)
@@ -760,7 +798,7 @@ def _update(spark, path, set_map, condition, retain, **mode) -> MutationStats:
             raise ValueError(
                 f"UPDATE SET on unknown columns: {sorted(unknown)}"
             )
-        obs = Observation()  # see _delete
+        obs = Observation()  # see delete_where
         observed = sub.observe(
             obs, F.count(F.when(cond, F.lit(1))).alias("matched")
         )
@@ -777,42 +815,10 @@ def _update(spark, path, set_map, condition, retain, **mode) -> MutationStats:
 
     return run(
         spark, path, _rewrite_stage(spark, path, cond, build, enforce=True),
-        retain=retain, what="UPDATE", **mode,
+        retain=retain, what="UPDATE", optimistic=optimistic,
+        max_attempts=max_attempts, lock_wait_seconds=lock_wait_seconds,
+        _after_stage=_after_stage,
     )
-
-
-def delete_where(
-    spark: SparkSession,
-    path: str,
-    condition: str | Column,
-    retain: bool | None = None,
-) -> MutationStats:
-    """``DELETE FROM <path> WHERE condition`` — SQL three-valued logic:
-    only rows where the predicate is TRUE are deleted; NULL keeps the row
-    (exactly what ``DELETE`` does in every SQL engine).  Works on flat and
-    hive-partitioned tables (per-partition swap; partition-column
-    predicates prune whole directories)."""
-    return _delete(spark, path, condition, retain)
-
-
-def update_where(
-    spark: SparkSession,
-    path: str,
-    set_map: dict[str, str | Column],
-    condition: str | Column,
-    retain: bool | None = None,
-) -> MutationStats:
-    """``UPDATE <path> SET col = expr, ... WHERE condition``.
-
-    Each assignment is cast back to the column's EXISTING type: a COW
-    rewrite must never drift the schema of rewritten files away from the
-    untouched ones (a widened column would poison every later scan).
-
-    Works on flat and hive-partitioned tables; assigning a PARTITION
-    column is refused — changing a row's partition value means moving it
-    between directories, which is a delete+insert, not an update.
-    """
-    return _update(spark, path, set_map, condition, retain)
 
 
 #: Widening chains evolve_schema accepts: any hop rightward is safe (no
@@ -883,7 +889,7 @@ def _merge_stage(
     requires the table's file list to be exactly what the read saw (a
     MERGE's insert decision reads every file's keys);
     ``write_serializable`` only requires the files this merge rewrites
-    to still exist (see :func:`~.occ.occ_merge_into`).
+    to still exist (see :func:`merge_into`).
 
     ``evolve_schema``: source columns absent from the target JOIN the
     table schema — written into insert files and rewritten matched files
@@ -1096,8 +1102,6 @@ def _merge_stage(
         rows_matched = matched if has_matched_action else 0
 
     def validate() -> str | None:
-        from .occ import _uri_path
-
         current = {
             _uri_path(f)
             for f in list_data_files(spark, path, recursive=partitioned)
@@ -1128,41 +1132,6 @@ def _merge_stage(
     )
 
 
-def _merge(
-    spark,
-    path,
-    source,
-    on,
-    matched_set=None,
-    insert_values=None,
-    check_unique=True,
-    matched_delete=None,
-    insert_condition=None,
-    retain=None,
-    max_pruned_files=100_000,
-    evolve_schema=False,
-    isolation="serializable",
-    **mode,
-) -> MutationStats:
-    from .commit import run
-
-    if isolation not in ("serializable", "write_serializable"):
-        raise ValueError(
-            f"isolation must be 'serializable' or 'write_serializable', "
-            f"got {isolation!r}"
-        )
-    _check_merge_source(source, on, check_unique)
-
-    def stage(created: list[str], optimistic: bool):
-        return _merge_stage(
-            spark, path, created, source, on, matched_set, insert_values,
-            matched_delete, insert_condition, max_pruned_files,
-            evolve_schema, isolation,
-        )
-
-    return run(spark, path, stage, retain=retain, what="MERGE", **mode)
-
-
 def merge_into(
     spark: SparkSession,
     path: str,
@@ -1176,6 +1145,12 @@ def merge_into(
     retain: bool | None = None,
     max_pruned_files: int | None = 100_000,
     evolve_schema: bool = False,
+    isolation: str = "serializable",
+    *,
+    optimistic: bool = False,
+    max_attempts: int = 5,
+    lock_wait_seconds: float | None = None,
+    _after_stage=None,
 ) -> MutationStats:
     """``MERGE INTO <path> USING source ON keys`` — upsert, copy-on-write.
 
@@ -1214,11 +1189,53 @@ def merge_into(
     columns land in insert/rewritten files (older files NULL-backfill —
     read via :func:`read_table`), safe type widenings rewrite the table,
     anything else is refused loudly.  See :func:`_merge_stage`.
+
+    ``optimistic=True`` stages outside the writer lock with
+    validate-and-swap inside it (the commit keywords are
+    :func:`delete_where`'s) — the workload the CDC upsert writer
+    (streaming/upsert.py) generates when several micro-batch writers
+    land on one table.  ``isolation='serializable'`` (default) is
+    stricter than the point verbs': a MERGE's read set is the WHOLE
+    table (the NOT-MATCHED anti-join reads every file's keys to decide
+    what to insert), so the commit requires the table's file list to be
+    exactly what the read saw; ANY concurrent commit — even on disjoint
+    keys — loses the race and re-derives the matched/unmatched split.
+    ``isolation='write_serializable'`` (Delta's default level) validates
+    only the files this merge rewrites, so disjoint-key concurrent
+    merges commit without restaging.  Its documented anomaly is Delta's:
+    a concurrent commit that inserted one of this merge's unmatched
+    source keys yields a duplicate insert, and rows a concurrent commit
+    rewrote keep this merge's view for the matched leg — use the default
+    when key ranges can overlap.  A locked merge is single-writer, so
+    any other level than the default is refused there.
     """
-    return _merge(
-        spark, path, source, on, matched_set, insert_values, check_unique,
-        matched_delete, insert_condition, retain, max_pruned_files,
-        evolve_schema,
+    from .commit import run
+
+    if isolation not in ("serializable", "write_serializable"):
+        raise ValueError(
+            f"isolation must be 'serializable' or 'write_serializable', "
+            f"got {isolation!r}"
+        )
+    if isolation != "serializable" and not optimistic:
+        # silently ignoring a requested isolation level would let a
+        # caller believe they relaxed validation they never opted into
+        raise ValueError(
+            f"isolation={isolation!r} only applies to optimistic=True; "
+            "a locked merge is single-writer"
+        )
+    _check_merge_source(source, on, check_unique)
+
+    def stage(created: list[str], _: bool):
+        return _merge_stage(
+            spark, path, created, source, on, matched_set, insert_values,
+            matched_delete, insert_condition, max_pruned_files,
+            evolve_schema, isolation,
+        )
+
+    return run(
+        spark, path, stage, retain=retain, what="MERGE",
+        optimistic=optimistic, max_attempts=max_attempts,
+        lock_wait_seconds=lock_wait_seconds, _after_stage=_after_stage,
     )
 
 
@@ -1469,7 +1486,7 @@ def repair_table(
     legitimately owns a staging dir and the lock; this tool cannot tell a
     crash from a slow writer, which is exactly why removal is not
     automatic.  "No writer is alive" is NOT implied by the lock being
-    absent: OPTIMISTIC writers (the ``occ_*`` verbs, COW and DV alike)
+    absent: OPTIMISTIC writers (``optimistic=True``, COW and DV alike)
     stage their ``__cow_*`` dirs while holding NO lock by design, so an
     unlocked table can still have a live writer mid-stage.  Pass
     ``min_age_seconds`` (e.g. a few hours) to treat only staging dirs whose
@@ -1497,65 +1514,3 @@ def repair_table(
         if stale:
             fs.delete(lock, False)
     return RepairReport(tuple(sorted(staging)), stale, remove)
-
-
-# -- submodule re-exports (r12 split) -----------------------------------------
-#
-# The optimistic verbs, the textual DML front-end, snapshots/versioning,
-# and CHECK constraints moved to sibling modules (occ.py, dml_sql.py,
-# versioning.py, constraints.py) purely for module size.  Every name they
-# define stays importable from THIS module (the historical surface) via
-# PEP 562 lazy attribute access, which also keeps the import graph
-# acyclic: the submodules import mutate's helpers eagerly, mutate never
-# imports a submodule at module scope.
-_SUBMODULE_EXPORTS = {
-    'CHECKPOINT_INTERVAL': 'versioning',
-    'ConcurrentWriteConflict': 'occ',
-    'ConstraintViolation': 'constraints',
-    '_SIGN_COL': 'versioning',
-    '_alias_rewrite': 'dml_sql',
-    '_autoversion': 'versioning',
-    '_compose_next_manifest': 'versioning',
-    '_find_top_where': 'dml_sql',
-    '_is_missing_file_error': 'occ',
-    '_manifest_rel_files': 'versioning',
-    '_manifest_state': 'versioning',
-    '_resolve_pinned_files': 'versioning',
-    '_segments': 'dml_sql',
-    '_split_depth0': 'dml_sql',
-    'add_constraint': 'constraints',
-    'create_snapshot': 'versioning',
-    'current_version': 'versioning',
-    'drop_constraint': 'constraints',
-    'drop_snapshot': 'versioning',
-    'drop_versions_before': 'versioning',
-    'enable_versioning': 'versioning',
-    'execute_dml': 'dml_sql',
-    'list_snapshots': 'versioning',
-    'occ_delete_where': 'occ',
-    'occ_merge_into': 'occ',
-    'occ_update_where': 'occ',
-    'read_as_of': 'versioning',
-    'read_changes': 'versioning',
-    'read_snapshot': 'versioning',
-    'read_version': 'versioning',
-    'restore_version': 'versioning',
-    'signed_net_expand': 'versioning',
-    'table_constraints': 'constraints',
-    'table_versions': 'versioning',
-    'vacuum': 'versioning',
-    'version_history': 'versioning',
-}
-
-
-def __getattr__(name):
-    mod = _SUBMODULE_EXPORTS.get(name)
-    if mod is None:
-        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
-    import importlib
-
-    return getattr(importlib.import_module(f'.{mod}', __package__), name)
-
-
-def __dir__():
-    return sorted(set(globals()) | set(_SUBMODULE_EXPORTS))

@@ -555,7 +555,8 @@ def _ivfpq_meta(spark, table_path: str, emb_col: str) -> dict:
     one is crash debris, so raise and demand a rebuild."""
     import json
 
-    from .mutate import _is_missing_file_error, _read_small_file
+    from .reader import _is_missing_file_error
+    from .mutate import _read_small_file
 
     root = _ivfpq_root(table_path, emb_col)
     try:
@@ -851,7 +852,7 @@ def ivfpq_search_indexed(
     append/DV-shaped drift; ``allow_stale=True`` opts into the indexed
     subset).  Output: ``(query_id, neighbor_id, cos_sim, rn)``."""
     from .mor import read_mor
-    from .mutate import _is_missing_file_error
+    from .reader import _is_missing_file_error
     from .similarity import _table_file_set, assign_cells_fast
 
     if n_probes < 1:
@@ -1075,7 +1076,7 @@ def _read_ivfpq_postings(spark, root: str):
     its real cause instead of masquerading as "no index"), ``cell``
     read back as INT so probe filters prune partitions — the IVFPQ twin
     of :func:`.similarity.read_ivf_postings`."""
-    from .mutate import _is_missing_file_error
+    from .reader import _is_missing_file_error
 
     try:
         df = spark.read.parquet(f"{root}/postings")

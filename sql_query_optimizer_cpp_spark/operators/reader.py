@@ -41,7 +41,7 @@ import threading
 import weakref
 from collections import OrderedDict
 from typing import NamedTuple
-from urllib.parse import unquote, urlsplit
+from urllib.parse import unquote, urlparse, urlsplit
 
 from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
@@ -224,6 +224,30 @@ def _path_string(uri: str) -> str:
         out += f"//{u.netloc}"
     out += unquote(u.path)
     return out + (f"#{u.fragment}" if u.fragment else "")
+
+
+def _uri_path(uri: str) -> str:
+    """Decoded path component of a file URI — the normalization both
+    sides of an optimistic commit's validation pass through.  A scan's
+    file names percent-encode (``file:/a/my%20dir/f``) while Hadoop's
+    ``Path.toString`` does not (``file:/a/my dir/f``); comparing raw
+    strings would see every file as 'gone'."""
+    return unquote(urlparse(uri).path)
+
+
+def _is_missing_file_error(e: Exception) -> bool:
+    """Did a Spark read/collect fail because an input file vanished?
+    Under the optimistic protocol a concurrent commit deleting files
+    during the lock-free read/stage phase is a CONFLICT (retry), not an
+    error.  Matched on the Java cause chain's class names as rendered
+    into the message — FileNotFoundException (task-time),
+    PATH_NOT_FOUND / 'Path does not exist' (planning-time)."""
+    s = str(e)
+    return (
+        "FileNotFoundException" in s
+        or "PATH_NOT_FOUND" in s
+        or "Path does not exist" in s
+    )
 
 
 def statuses(spark: SparkSession, jstatuses) -> list[tuple[Listed, bool]]:

@@ -1030,7 +1030,8 @@ def _ivf_meta(spark, table_path: str, emb_col: str) -> dict:
     transient read faults are loud for the same reason."""
     import json
 
-    from .mutate import _is_missing_file_error, _read_small_file
+    from .reader import _is_missing_file_error
+    from .mutate import _read_small_file
 
     root = _ivf_root(table_path, emb_col)
     try:

@@ -252,8 +252,8 @@ class MultiTableTransaction:
     window).  Bare-path readers see intermediate states, as they do
     during any in-progress verb.
 
-    Optimistic (``occ_*``) verbs and maintenance verbs (vacuum / restore
-    / drop_versions) are refused inside a transaction.  It should stay
+    Optimistic (``optimistic=True``) verbs and maintenance verbs
+    (vacuum / restore / drop_versions) are refused inside a transaction.  It should stay
     short-lived: it is a batching construct, not a long-lived session.
     """
 

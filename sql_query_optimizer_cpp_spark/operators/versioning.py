@@ -1,8 +1,7 @@
 """Snapshots, time travel, vacuum, and the numbered version log.
 
 Split out of ``mutate.py`` (r12) purely for module size; the behavior,
-names, and locking discipline are unchanged and every public name is
-still importable from ``operators.mutate``.
+names, and locking discipline are unchanged.
 """
 
 from __future__ import annotations

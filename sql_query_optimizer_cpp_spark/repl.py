@@ -277,7 +277,7 @@ def handle(
                 f"({st.files_rewritten} files changed liveness)"
             )
         if verb == "VACUUM":
-            from .operators.mutate import drop_versions_before, vacuum
+            from .operators.versioning import drop_versions_before, vacuum
 
             parts = rest.split()
             usage = "usage: VACUUM <attached table> [KEEP <n versions>]"

@@ -27,7 +27,7 @@ pairs are no-op upserts, real updates land as their new image), and any
 SIGNED aggregate (inserts minus deletes) cancels the copies — the graded
 query proves that identity against an algebraic oracle.  For the NET
 row diff of a version range in one batch frame, use
-``operators/mutate.read_changes`` (exceptAll does the cancellation).
+``operators/versioning.read_changes`` (exceptAll does the cancellation).
 
 Scale posture: offsets and partition planning touch only the manifest
 JSONs (small driver-side reads); each micro-batch plans ONE InputPartition
@@ -608,13 +608,13 @@ def net_changes(changes):
     NET row diff: +1 per insert image, −1 per delete image, group on the
     data columns, keep net ≠ 0, re-expand multiplicity — the copied-row
     delete+insert pairs a COW rewrite emits cancel, leaving exactly what
-    ``operators.mutate.read_changes`` returns for the same range (the
+    ``operators.versioning.read_changes`` returns for the same range (the
     SAME shared collapse, so the plans cannot drift: one shuffle over
     the feed, bounded nested-sequence re-expansion).  Drops
     ``_commit_version`` (a net diff spans commits)."""
     from pyspark.sql import functions as F
 
-    from ..operators.mutate import _SIGN_COL, signed_net_expand
+    from ..operators.versioning import _SIGN_COL, signed_net_expand
 
     cols = [
         c

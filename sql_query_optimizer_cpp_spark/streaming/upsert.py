@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from ..operators.mor import dv_merge_into
 from ..operators.mutate import merge_into
 
 
@@ -82,8 +83,8 @@ def apply_changes_batch(
     must share the key + payload schema (``ts_col`` included — it is the
     version column the last-writer-wins guard compares).
 
-    ``optimistic=True`` routes through ``occ_merge_into`` — the
-    multi-writer commit-or-retry protocol — so SEVERAL CDC appliers (one
+    ``optimistic=True`` runs ``merge_into`` in the multi-writer
+    commit-or-retry mode, so SEVERAL CDC appliers (one
     per upstream shard/topic) can maintain one table concurrently: the
     expensive merge staging overlaps across writers and only the
     metadata validate-and-swap serializes; a loser re-derives its
@@ -107,21 +108,13 @@ def apply_changes_batch(
         for c in payload
         if c not in on
     }
-    if mor and optimistic:
+    if mor and (optimistic or isolation != "serializable"):
         raise ValueError(
-            "mor and optimistic are mutually exclusive: the merge-on-read "
-            "verbs commit under the plain writer lock"
+            "mor and optimistic (or a non-default isolation) are mutually "
+            "exclusive: the merge-on-read merge validates "
+            "write-serializable only, so two optimistic appliers could "
+            "both insert one key"
         )
-    if isolation != "serializable" and not optimistic:
-        # silently ignoring a requested isolation level would let a
-        # caller believe they relaxed validation they never opted into
-        raise ValueError(
-            f"isolation={isolation!r} only applies to optimistic=True "
-            "(occ_merge_into); the plain and merge-on-read verbs are "
-            "single-writer"
-        )
-    verb = merge_into
-    kw = {}
     if mor:
         # merge-on-read applier: a k-key micro-batch writes O(k) rows
         # (tombstones + copies + inserts) instead of rewriting every file
@@ -131,28 +124,12 @@ def apply_changes_batch(
         # whose ts guard resolves to `ELSE col` assigns every column its
         # current value, and rewriting (tombstone + copy + version) those
         # rows on every redelivery is pure write amplification
-        from ..operators.mor import dv_merge_into
-
-        verb = dv_merge_into
-        # lock_wait_seconds: two parallel MOR appliers (one per upstream
-        # shard) serialize on the writer lock instead of killing the
-        # second streaming query with a refuse
-        kw = {
-            "skip_unchanged": True,
-            "lock_wait_seconds": lock_wait_seconds,
-        }
-    elif optimistic:
-        from ..operators.mutate import occ_merge_into
-
-        verb = occ_merge_into
-        kw = {
-            "max_attempts": max_attempts,
-            "lock_wait_seconds": lock_wait_seconds,
-            # appliers sharded on disjoint key ranges (the Kafka/Debezium
-            # layout) commit first-attempt under write_serializable; keep
-            # the serializable default when key ranges can overlap
-            "isolation": isolation,
-        }
+        verb, kw = dv_merge_into, {"skip_unchanged": True}
+    else:
+        # appliers sharded on disjoint key ranges (the Kafka/Debezium
+        # layout) commit first-attempt under write_serializable; keep
+        # the serializable default when key ranges can overlap
+        verb, kw = merge_into, {"isolation": isolation}
     verb(
         spark,
         table_path,
@@ -163,6 +140,12 @@ def apply_changes_batch(
         insert_condition=f"src_{op_col} <> 'D'",
         # one winner per key by construction; skip the extra source agg
         check_unique=False,
+        optimistic=optimistic,
+        max_attempts=max_attempts,
+        # two parallel locked appliers (one per upstream shard) serialize
+        # on the writer lock instead of killing the second streaming
+        # query with a refuse
+        lock_wait_seconds=lock_wait_seconds,
         **kw,
     )
 

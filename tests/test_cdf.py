@@ -13,9 +13,11 @@ from pyspark.sql import functions as F
 
 from sql_query_optimizer_cpp_spark.operators.mutate import (
     delete_where,
-    enable_versioning,
     merge_into,
     update_where,
+)
+from sql_query_optimizer_cpp_spark.operators.versioning import (
+    enable_versioning,
 )
 from sql_query_optimizer_cpp_spark.streaming.cdf import register
 
@@ -255,7 +257,7 @@ def test_cdf_stream_replicates_table(spark, versioned_table, tmp_path):
 def test_cdf_net_changes_matches_read_changes(spark, versioned_table):
     """net_changes over the raw feed == read_changes over the same range
     (the copied-row pairs cancel identically)."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import read_changes
+    from sql_query_optimizer_cpp_spark.operators.versioning import read_changes
     from sql_query_optimizer_cpp_spark.streaming.cdf import net_changes
 
     raw = _load(spark, versioned_table, fromVersion="2")  # v2..v3
@@ -351,7 +353,7 @@ def test_cdf_merge_on_read_commits(spark, tmp_path):
         dv_update_where,
         materialize_deletes,
     )
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         read_changes,
         restore_version,
     )

@@ -7,6 +7,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sql_query_optimizer_cpp_spark.operators import (
+    constraints,
+    dml_sql,
+    versioning,
+)
 from sql_query_optimizer_cpp_spark.operators import mutate as m
 from sql_query_optimizer_cpp_spark.operators.mor import (
     dv_count,
@@ -37,7 +42,7 @@ def _flat(spark, tmp_path, n=100, files=4):
 
 def test_dv_delete_and_read_mor(spark, tmp_path):
     path = _flat(spark, tmp_path)
-    n = dv_delete_where(spark, path, "k >= 80")
+    n = dv_delete_where(spark, path, "k >= 80").rows_matched
     assert n == 20
     assert has_deletion_vectors(spark, path)
     assert dv_count(spark, path) == 20
@@ -47,7 +52,7 @@ def test_dv_delete_and_read_mor(spark, tmp_path):
     # no data file was rewritten: the tombstones are the whole mutation
     assert len(m.list_data_files(spark, path)) == 4
     # overlapping re-delete never double-counts
-    assert dv_delete_where(spark, path, "k >= 70") == 10
+    assert dv_delete_where(spark, path, "k >= 70").rows_matched == 10
     assert dv_count(spark, path) == 30
     assert read_mor(spark, path).count() == 70
 
@@ -55,7 +60,7 @@ def test_dv_delete_and_read_mor(spark, tmp_path):
 def test_dv_delete_three_valued_null(spark, tmp_path):
     path = _flat(spark, tmp_path)
     # grp is NULL on k % 10 == 0: NULL predicate keeps the row (SQL DELETE)
-    n = dv_delete_where(spark, path, "grp = 0")
+    n = dv_delete_where(spark, path, "grp = 0").rows_matched
     kept = read_mor(spark, path)
     assert kept.where("grp IS NULL").count() == 10
     assert kept.where("grp = 0").count() == 0
@@ -75,7 +80,7 @@ def test_dv_src_file_is_table_relative(spark, tmp_path):
 
 def test_dv_update_then_read(spark, tmp_path):
     path = _flat(spark, tmp_path)
-    n = dv_update_where(spark, path, {"v": "v + 100"}, "k < 10")
+    n = dv_update_where(spark, path, {"v": "v + 100"}, "k < 10").rows_matched
     assert n == 10
     out = read_mor(spark, path)
     assert out.count() == 100  # update preserves cardinality
@@ -92,7 +97,7 @@ def test_dv_update_skips_deleted_rows(spark, tmp_path):
     path = _flat(spark, tmp_path)
     dv_delete_where(spark, path, "k < 20")
     # an update whose predicate covers deleted rows must not resurrect them
-    n = dv_update_where(spark, path, {"v": "0.0"}, "k < 40")
+    n = dv_update_where(spark, path, {"v": "0.0"}, "k < 40").rows_matched
     assert n == 20
     out = read_mor(spark, path)
     assert out.count() == 80
@@ -114,7 +119,9 @@ def test_dv_update_unknown_column_and_partitioned(spark, tmp_path):
     )
     # partitioned MOR update: copies route to their key=value dirs; a
     # predicate may reference the partition column
-    n = dv_update_where(spark, ppath, {"v": "v + 100"}, "side = 1 AND k < 9")
+    n = dv_update_where(
+        spark, ppath, {"v": "v + 100"}, "side = 1 AND k < 9"
+    ).rows_matched
     assert n == 4  # k in {1,3,5,7}
     out = read_mor(spark, ppath)
     assert out.count() == 40
@@ -139,7 +146,7 @@ def test_dv_partitioned_delete_and_materialize(spark, tmp_path):
         .parquet(path)
     )
     # predicate touches the partition column AND a data column
-    n = dv_delete_where(spark, path, "side = 1 OR k < 6")
+    n = dv_delete_where(spark, path, "side = 1 OR k < 6").rows_matched
     assert n == 60 // 3 + 4  # side==1 (20) plus k in {0,2,3,5} not side 1
     assert read_mor(spark, path).count() == 60 - n
     stats = materialize_deletes(spark, path)
@@ -184,13 +191,13 @@ def test_cow_rewrites_refuse_live_dv_tables(spark, tmp_path):
     with pytest.raises(ValueError, match="deletion vectors"):
         m.compact(spark, path)
     with pytest.raises(ValueError, match="deletion vectors"):
-        m.occ_delete_where(spark, path, "k = 2")
+        m.delete_where(spark, path, "k = 2", optimistic=True)
     # snapshotting a live-DV table is now first-class: the manifest pins
     # the DV batch files and read_snapshot applies them
-    m.create_snapshot(spark, path, "s1")
-    assert m.read_snapshot(spark, path, "s1").count() == 99
-    assert m.enable_versioning(spark, path) == 1
-    assert m.read_version(spark, path, 1).count() == 99
+    versioning.create_snapshot(spark, path, "s1")
+    assert versioning.read_snapshot(spark, path, "s1").count() == 99
+    assert versioning.enable_versioning(spark, path) == 1
+    assert versioning.read_version(spark, path, 1).count() == 99
 
 
 def test_dv_commits_versions_and_time_travel(spark, tmp_path):
@@ -199,18 +206,24 @@ def test_dv_commits_versions_and_time_travel(spark, tmp_path):
     the tombstoned rows; materialize is a net-zero commit that keeps old
     versions readable."""
     path = _flat(spark, tmp_path)
-    assert m.enable_versioning(spark, path) == 1
-    assert dv_delete_where(spark, path, "k < 10") == 10        # v2
-    assert dv_update_where(spark, path, {"v": "99.0"}, "k = 50") == 1  # v3
-    assert m.table_versions(spark, path) == [1, 2, 3]
-    assert m.read_version(spark, path, 1).count() == 100
-    assert m.read_version(spark, path, 2).count() == 90
-    assert m.read_version(spark, path, 2).where("k = 50").first()["v"] != 99.0
-    assert m.read_version(spark, path, 3).where("k = 50").first()["v"] == 99.0
-    ch = m.read_changes(spark, path, 1, 2)
+    assert versioning.enable_versioning(spark, path) == 1
+    assert dv_delete_where(spark, path, "k < 10").rows_matched == 10  # v2
+    assert dv_update_where(
+        spark, path, {"v": "99.0"}, "k = 50"
+    ).rows_matched == 1  # v3
+    assert versioning.table_versions(spark, path) == [1, 2, 3]
+    assert versioning.read_version(spark, path, 1).count() == 100
+    assert versioning.read_version(spark, path, 2).count() == 90
+    assert versioning.read_version(
+        spark, path, 2
+    ).where("k = 50").first()["v"] != 99.0
+    assert versioning.read_version(
+        spark, path, 3
+    ).where("k = 50").first()["v"] == 99.0
+    ch = versioning.read_changes(spark, path, 1, 2)
     assert ch.where("_change_type = 'delete'").count() == 10
     assert ch.count() == 10
-    pair = m.read_changes(spark, path, 2, 3)
+    pair = versioning.read_changes(spark, path, 2, 3)
     assert {
         (r["_change_type"], r["v"]) for r in pair.where("k = 50").collect()
     } == {("delete", 50 % 7 * 1.0), ("insert", 99.0)}
@@ -218,13 +231,13 @@ def test_dv_commits_versions_and_time_travel(spark, tmp_path):
     # net-zero; v2 stays readable afterwards (batches retire, not die)
     st = materialize_deletes(spark, path)
     assert st.files_rewritten > 0
-    assert m.table_versions(spark, path) == [1, 2, 3, 4]
-    assert m.read_changes(spark, path, 3, 4).count() == 0
+    assert versioning.table_versions(spark, path) == [1, 2, 3, 4]
+    assert versioning.read_changes(spark, path, 3, 4).count() == 0
     assert not has_deletion_vectors(spark, path)
-    assert m.read_version(spark, path, 2).count() == 90
+    assert versioning.read_version(spark, path, 2).count() == 90
     # COW verbs work again after the materialize, on the same version log
     assert m.delete_where(spark, path, "k = 60").rows_matched == 1  # v5
-    assert m.table_versions(spark, path)[-1] == 5
+    assert versioning.table_versions(spark, path)[-1] == 5
 
 
 def test_dv_restore_version_round_trip(spark, tmp_path):
@@ -232,38 +245,40 @@ def test_dv_restore_version_round_trip(spark, tmp_path):
     resurrects rows via the SAME metadata-only rename plan (DV batches
     restore/retire like data files), and CDC shows the undo."""
     path = _flat(spark, tmp_path)
-    m.enable_versioning(spark, path)                            # v1
+    versioning.enable_versioning(spark, path)                   # v1
     dv_delete_where(spark, path, "k < 10")                      # v2
     materialize_deletes(spark, path)                            # v3
     # restore to v1: the 10 rows come back as CDC inserts
-    m.restore_version(spark, path, 1)                           # v4
+    versioning.restore_version(spark, path, 1)                  # v4
     assert read_mor(spark, path).count() == 100
-    ch = m.read_changes(spark, path, 3, 4)
+    ch = versioning.read_changes(spark, path, 3, 4)
     assert ch.where("_change_type = 'insert'").count() == 10
     assert ch.where("_change_type = 'delete'").count() == 0
     # restore to v2: a LIVE-DV state — the batches rename back in
-    m.restore_version(spark, path, 2)                           # v5
+    versioning.restore_version(spark, path, 2)                  # v5
     assert has_deletion_vectors(spark, path)
     assert read_mor(spark, path).count() == 90
-    assert m.read_changes(spark, path, 4, 5).where(
+    assert versioning.read_changes(spark, path, 4, 5).where(
         "_change_type = 'delete'"
     ).count() == 10
     # vacuum honors DV references: v2's batches survive retention
-    assert m.read_version(spark, path, 2).count() == 90
+    assert versioning.read_version(spark, path, 2).count() == 90
 
 
 def test_dv_update_constraint_rollback(spark, tmp_path):
     path = _flat(spark, tmp_path)
-    m.add_constraint(spark, path, "v_nonneg", "v >= 0")
+    constraints.add_constraint(spark, path, "v_nonneg", "v >= 0")
     files_before = m.list_data_files(spark, path)
-    with pytest.raises(m.ConstraintViolation, match="v_nonneg"):
+    with pytest.raises(constraints.ConstraintViolation, match="v_nonneg"):
         dv_update_where(spark, path, {"v": "-1.0"}, "k < 5")
     # nothing became visible: no new files, no tombstones, data unchanged
     assert m.list_data_files(spark, path) == files_before
     assert not has_deletion_vectors(spark, path)
     assert read_mor(spark, path).where("v < 0").count() == 0
     # a passing update still works under the constraint
-    assert dv_update_where(spark, path, {"v": "v + 1"}, "k < 5") == 5
+    assert dv_update_where(
+        spark, path, {"v": "v + 1"}, "k < 5"
+    ).rows_matched == 5
 
 
 def test_dv_file_stats(spark, tmp_path):
@@ -303,7 +318,7 @@ def test_read_mor_plan_pushdown_and_broadcast(spark, tmp_path):
 def test_execute_dml_mor_routing(spark, tmp_path):
     """The textual front-end reaches the MOR verbs via mor=True, with the
     same statement text the COW path takes."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import execute_dml
+    from sql_query_optimizer_cpp_spark.operators.dml_sql import execute_dml
 
     path = _flat(spark, tmp_path)
     tables = {"t": path}
@@ -378,9 +393,11 @@ def test_dv_working_column_collision_guard(spark, tmp_path):
 
 def test_dv_no_match_is_a_cheap_noop(spark, tmp_path):
     path = _flat(spark, tmp_path)
-    assert dv_delete_where(spark, path, "k < 0") == 0
+    assert dv_delete_where(spark, path, "k < 0").rows_matched == 0
     assert not has_deletion_vectors(spark, path)
-    assert dv_update_where(spark, path, {"v": "0.0"}, "k < 0") == 0
+    assert dv_update_where(
+        spark, path, {"v": "0.0"}, "k < 0"
+    ).rows_matched == 0
     assert not has_deletion_vectors(spark, path)
     # no-op left no appended files either
     assert len(m.list_data_files(spark, path)) == 4
@@ -405,17 +422,19 @@ def test_dv_vacuum_honors_manifest_references(spark, tmp_path):
     """Retired DV batches survive vacuum while a manifest pins them and
     die once retention drops those versions — same rule as data files."""
     path = _flat(spark, tmp_path)
-    m.enable_versioning(spark, path)                    # v1
+    versioning.enable_versioning(spark, path)           # v1
     dv_delete_where(spark, path, "k < 10")              # v2
     materialize_deletes(spark, path)                    # v3 (batches retire)
-    assert m.vacuum(spark, path) == 0                   # v2 pins them
-    assert m.read_version(spark, path, 2).count() == 90
+    assert versioning.vacuum(spark, path) == 0          # v2 pins them
+    assert versioning.read_version(spark, path, 2).count() == 90
     # drop v1..v2, checkpoint v3, then vacuum reclaims the orphans
-    assert m.drop_versions_before(spark, path, keep_last=1) == 2
-    assert m.vacuum(spark, path) > 0
-    assert m.read_version(spark, path).count() == 90    # latest unaffected
+    assert versioning.drop_versions_before(spark, path, keep_last=1) == 2
+    assert versioning.vacuum(spark, path) > 0
+    assert versioning.read_version(
+        spark, path
+    ).count() == 90  # latest unaffected
     with pytest.raises(FileNotFoundError):
-        m.read_version(spark, path, 2)
+        versioning.read_version(spark, path, 2)
 
 
 def test_dv_merge_into_full_matrix(spark, tmp_path):
@@ -463,10 +482,10 @@ def test_dv_merge_into_guards(spark, tmp_path):
             spark, path, bad, on=["k"], matched_set={"nope": "1"}
         )
     # constraints gate the staged output before visibility
-    m.add_constraint(spark, path, "v_nonneg", "v >= 0")
+    constraints.add_constraint(spark, path, "v_nonneg", "v >= 0")
     neg = spark.createDataFrame([(1, -5.0)], "k long, v double")
     files0 = set(m.list_data_files(spark, path))
-    with pytest.raises(m.ConstraintViolation, match="v_nonneg"):
+    with pytest.raises(constraints.ConstraintViolation, match="v_nonneg"):
         dv_merge_into(
             spark, path, neg, on=["k"], matched_set={"v": "src_v"}
         )
@@ -527,7 +546,7 @@ def test_dv_merge_execute_dml_and_streaming_upsert(spark, tmp_path):
     spark.createDataFrame(
         [(5, 555.0), (300, 3.0)], "k long, v double"
     ).write.parquet(src_path)
-    st = m.execute_dml(
+    st = dml_sql.execute_dml(
         spark,
         "MERGE INTO t USING s ON t.k = s.k "
         "WHEN MATCHED THEN UPDATE SET v = s.v "
@@ -540,7 +559,7 @@ def test_dv_merge_execute_dml_and_streaming_upsert(spark, tmp_path):
     out = read_mor(spark, path)
     assert out.where("k = 5").first()["v"] == 555.0
     assert out.where("k = 300").count() == 1
-    st = m.execute_dml(
+    st = dml_sql.execute_dml(
         spark, "DELETE FROM t WHERE k = 1", {"t": path},
         mor=True, optimistic=True,
     )  # r10: the OCC deletion-vector route
@@ -575,14 +594,16 @@ def test_dv_update_only_tombstoned_matches_is_noop(spark, tmp_path):
     versioned table NO version committed (found by the r9 randomized
     sweep: the empty staging used to move in and commit a junk version)."""
     path = _flat(spark, tmp_path)
-    m.enable_versioning(spark, path)                    # v1
-    assert dv_delete_where(spark, path, "k >= 90") == 10  # v2
+    versioning.enable_versioning(spark, path)           # v1
+    assert dv_delete_where(spark, path, "k >= 90").rows_matched == 10  # v2
     files = set(m.list_data_files(spark, path))
     # k >= 95 rows exist in the base files but are all tombstoned
-    assert dv_update_where(spark, path, {"v": "0.0"}, "k >= 95") == 0
+    assert dv_update_where(
+        spark, path, {"v": "0.0"}, "k >= 95"
+    ).rows_matched == 0
     assert set(m.list_data_files(spark, path)) == files  # no empty file
     assert dv_count(spark, path) == 10                   # no new tombstones
-    assert m.table_versions(spark, path) == [1, 2]       # no junk commit
+    assert versioning.table_versions(spark, path) == [1, 2]  # no junk commit
 
 
 def test_dv_commits_across_schema_evolution(spark, tmp_path):
@@ -594,22 +615,22 @@ def test_dv_commits_across_schema_evolution(spark, tmp_path):
     spark.range(30).selectExpr(
         "id AS k", "CAST(id AS DOUBLE) AS v"
     ).repartitionByRange(2, "k").write.parquet(path)
-    m.enable_versioning(spark, path)                             # v1
+    versioning.enable_versioning(spark, path)                    # v1
     src = spark.createDataFrame([(3, "hot")], "k long, tag string")
     m.merge_into(
         spark, path, src, on=["k"], matched_set={"tag": "src_tag"},
         evolve_schema=True,
     )                                                            # v2
-    assert dv_delete_where(spark, path, "k >= 20") == 10         # v3
+    assert dv_delete_where(spark, path, "k >= 20").rows_matched == 10  # v3
     assert dv_update_where(
         spark, path, {"tag": "'cold'"}, "k = 4"
-    ) == 1                                                       # v4
-    assert m.table_versions(spark, path) == [1, 2, 3, 4]
-    assert "tag" not in m.read_version(spark, path, 1).columns
-    v2 = m.read_version(spark, path, 2)
+    ).rows_matched == 1                                          # v4
+    assert versioning.table_versions(spark, path) == [1, 2, 3, 4]
+    assert "tag" not in versioning.read_version(spark, path, 1).columns
+    v2 = versioning.read_version(spark, path, 2)
     assert v2.where("tag = 'hot'").count() == 1
     assert v2.where("tag IS NULL").count() == 29                 # backfilled
-    v4 = m.read_version(spark, path, 4)
+    v4 = versioning.read_version(spark, path, 4)
     assert v4.count() == 20
     assert v4.where("k = 4").first()["tag"] == "cold"
     # CDC across the dv-delete commit: the tombstoned rows live only in
@@ -617,12 +638,12 @@ def test_dv_commits_across_schema_evolution(spark, tmp_path):
     # O(touched) contract derives its output schema from the touched
     # files (never an all-footer crawl) — so the delete images carry the
     # pre-evolution columns; their tag was NULL-backfilled anyway
-    ch = m.read_changes(spark, path, 2, 3)
+    ch = versioning.read_changes(spark, path, 2, 3)
     assert set(ch.columns) == {"_change_type", "k", "v"}
     assert ch.count() == 10
     assert ch.where("_change_type = 'delete'").count() == 10
     # a range whose touched files span the evolution DOES align + backfill
-    wide = m.read_changes(spark, path, 1, 4)
+    wide = versioning.read_changes(spark, path, 1, 4)
     assert set(wide.columns) == {"_change_type", "k", "v", "tag"}
     # and read_mor time-handles the mixed files (evolved + original)
     assert read_mor(spark, path).count() == 20
@@ -637,19 +658,19 @@ def test_read_changes_align_schema_opt_in(spark, tmp_path):
     spark.range(30).selectExpr(
         "id AS k", "CAST(id AS DOUBLE) AS v"
     ).repartitionByRange(2, "k").write.parquet(path)
-    m.enable_versioning(spark, path)                             # v1
+    versioning.enable_versioning(spark, path)                    # v1
     src = spark.createDataFrame([(3, "hot")], "k long, tag string")
     m.merge_into(
         spark, path, src, on=["k"], matched_set={"tag": "src_tag"},
         evolve_schema=True,
     )                                                            # v2
     dv_delete_where(spark, path, "k >= 20")                      # v3
-    ch = m.read_changes(spark, path, 2, 3, align_schema=True)
+    ch = versioning.read_changes(spark, path, 2, 3, align_schema=True)
     assert set(ch.columns) == {"_change_type", "k", "v", "tag"}
     assert ch.count() == 10
     assert ch.where("tag IS NOT NULL").count() == 0  # backfilled NULLs
     # values identical to the default-shape read on the shared columns
-    narrow = m.read_changes(spark, path, 2, 3)
+    narrow = versioning.read_changes(spark, path, 2, 3)
     assert ch.select(*narrow.columns).exceptAll(narrow).count() == 0
 
 
@@ -661,7 +682,7 @@ def test_dv_merge_skip_unchanged_idempotent_replay(spark, tmp_path):
     from sql_query_optimizer_cpp_spark.operators.mor import dv_merge_into
 
     path = _flat(spark, tmp_path)
-    m.enable_versioning(spark, path)                             # v1
+    versioning.enable_versioning(spark, path)                    # v1
     src = spark.createDataFrame(
         [(1, 500.0), (2, 2 % 7 * 1.0)], "k long, v double"
     )  # k=1 really changes, k=2 assigns its current value
@@ -671,7 +692,7 @@ def test_dv_merge_skip_unchanged_idempotent_replay(spark, tmp_path):
     )                                                            # v2
     assert st.rows_matched == 1                    # k=2 skipped
     assert dv_count(spark, path) == 1
-    assert m.table_versions(spark, path) == [1, 2]
+    assert versioning.table_versions(spark, path) == [1, 2]
     out = read_mor(spark, path)
     assert out.where("k = 1").first()["v"] == 500.0
     assert out.where("k = 2").first()["v"] == 2 % 7 * 1.0
@@ -687,7 +708,7 @@ def test_dv_merge_skip_unchanged_idempotent_replay(spark, tmp_path):
     )
     assert st2.rows_matched == 0 and st2.rows_inserted == 0
     assert dv_count(spark, path) == 1              # unchanged
-    assert m.table_versions(spark, path) == [1, 2]  # no no-op commit
+    assert versioning.table_versions(spark, path) == [1, 2]  # no no-op commit
     assert set(m.list_data_files(spark, path)) == files0
     # NULL-safety: an assignment flipping NULL<->value counts as a change
     src3 = spark.createDataFrame([(10, 1)], "k long, grp long")
@@ -711,20 +732,20 @@ def test_streaming_mor_applier_replay_commits_nothing(spark, tmp_path):
     spark.createDataFrame(
         [(1, 10.0, 100), (2, 20.0, 100)], "k long, v double, ts long"
     ).coalesce(1).write.parquet(path)
-    m.enable_versioning(spark, path)                             # v1
+    versioning.enable_versioning(spark, path)                    # v1
     batch = spark.createDataFrame(
         [(1, 11.0, 200, "U"), (3, 30.0, 200, "I")],
         "k long, v double, ts long, op string",
     )
     apply_changes_batch(spark, batch, path, on=["k"], mor=True)  # v2
-    assert m.table_versions(spark, path) == [1, 2]
+    assert versioning.table_versions(spark, path) == [1, 2]
     assert read_mor(spark, path).count() == 3
     dv0 = dv_count(spark, path)
     # at-least-once redelivery of the SAME batch: the update leg assigns
     # every column its current value (newer-ts guard passes but values
     # equal), the insert leg matches now -> update leg again no-op
     apply_changes_batch(spark, batch, path, on=["k"], mor=True)
-    assert m.table_versions(spark, path) == [1, 2]   # no new version
+    assert versioning.table_versions(spark, path) == [1, 2]  # no new version
     assert dv_count(spark, path) == dv0              # no new tombstones
     out = read_mor(spark, path)
     assert out.count() == 3
@@ -734,7 +755,7 @@ def test_streaming_mor_applier_replay_commits_nothing(spark, tmp_path):
         [(1, 12.0, 300, "U")], "k long, v double, ts long, op string"
     )
     apply_changes_batch(spark, newer, path, on=["k"], mor=True)
-    assert m.table_versions(spark, path) == [1, 2, 3]
+    assert versioning.table_versions(spark, path) == [1, 2, 3]
     assert read_mor(spark, path).where("k = 1").first()["v"] == 12.0
 
 
@@ -747,17 +768,17 @@ def test_read_changes_max_touched_files_fallback(spark, tmp_path, batches):
     one disappear through a RESTORE (un-tombstoned rows: inserts), so
     the one collect covers both diff directions."""
     path = _flat(spark, tmp_path)
-    m.enable_versioning(spark, path)                             # v1
+    versioning.enable_versioning(spark, path)                    # v1
     dv_delete_where(spark, path, "k IN (5, 15, 25)")             # v2
     lo, hi, expect = 1, 2, {("delete", 5), ("delete", 15), ("delete", 25)}
     if batches == "new_and_gone":
-        m.restore_version(spark, path, 1)                        # v3
+        versioning.restore_version(spark, path, 1)               # v3
         dv_delete_where(spark, path, "k IN (40, 70)")            # v4
         lo, hi = 2, 4
         expect = {("insert", 5), ("insert", 15), ("insert", 25),
                   ("delete", 40), ("delete", 70)}
-    default = m.read_changes(spark, path, lo, hi).orderBy("k")
-    fallback = m.read_changes(
+    default = versioning.read_changes(spark, path, lo, hi).orderBy("k")
+    fallback = versioning.read_changes(
         spark, path, lo, hi, max_touched_files=0
     ).orderBy("k")
     assert [r.asDict() for r in default.collect()] == [
@@ -771,12 +792,10 @@ def test_occ_dv_delete_disjoint_files_first_attempt(spark, tmp_path):
     """Two concurrent OCC deletion-vector deletes on DISJOINT files both
     commit without a retry: DV batches are append-only, so the conflict
     unit is the referenced file, not the table."""
-    from sql_query_optimizer_cpp_spark.operators.mor import (
-        occ_dv_delete_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mor import dv_delete_where
 
     path = _flat(spark, tmp_path)  # 4 files range-clustered on k
-    m.enable_versioning(spark, path)                              # v1
+    versioning.enable_versioning(spark, path)                     # v1
     attempts: dict[str, list[int]] = {"a": [], "b": []}
     results: dict[str, int] = {}
     errs: list[Exception] = []
@@ -791,9 +810,10 @@ def test_occ_dv_delete_disjoint_files_first_attempt(spark, tmp_path):
                 barrier.wait()  # both staged before either commits
 
         try:
-            results[name] = occ_dv_delete_where(
-                spark, path, cond, _after_stage=after_stage
-            )
+            results[name] = dv_delete_where(
+                spark, path, cond, _after_stage=after_stage,
+                optimistic=True
+            ).rows_matched
         except Exception as e:  # noqa: BLE001
             errs.append(e)
 
@@ -807,16 +827,14 @@ def test_occ_dv_delete_disjoint_files_first_attempt(spark, tmp_path):
     assert dv_count(spark, path) == 20
     assert read_mor(spark, path).count() == 80
     # both commits are first-class versions
-    assert m.table_versions(spark, path) == [1, 2, 3]
+    assert versioning.table_versions(spark, path) == [1, 2, 3]
 
 
 def test_occ_dv_delete_same_file_conflict_retries_exact(spark, tmp_path):
     """Overlapping writers: the loser re-derives against the winner's
     tombstones, so the returned counts stay exact (no double-count) and
     the final state equals the serial execution."""
-    from sql_query_optimizer_cpp_spark.operators.mor import (
-        occ_dv_delete_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mor import dv_delete_where
 
     path = _flat(spark, tmp_path)
     import threading
@@ -827,7 +845,9 @@ def test_occ_dv_delete_same_file_conflict_retries_exact(spark, tmp_path):
     attempts_b: list[int] = []
 
     def winner():
-        results["a"] = occ_dv_delete_where(spark, path, "k < 10")
+        results["a"] = dv_delete_where(
+            spark, path, "k < 10", optimistic=True
+        ).rows_matched
         done.set()
 
     def after_stage_b(attempt):
@@ -837,9 +857,10 @@ def test_occ_dv_delete_same_file_conflict_retries_exact(spark, tmp_path):
             assert done.wait(60)  # winner commits k<10 first
 
     def loser():
-        results["b"] = occ_dv_delete_where(
-            spark, path, "k < 15", _after_stage=after_stage_b
-        )
+        results["b"] = dv_delete_where(
+            spark, path, "k < 15", _after_stage=after_stage_b,
+            optimistic=True
+        ).rows_matched
 
     tb = threading.Thread(target=loser)
     tb.start()
@@ -899,7 +920,7 @@ def test_occ_dv_delete_replaced_batches_conflict_and_repair_prefix(
     crash-debris sweep inventories it."""
     from sql_query_optimizer_cpp_spark.operators.mor import (
         materialize_deletes,
-        occ_dv_delete_where,
+        dv_delete_where,
     )
 
     path = _flat(spark, tmp_path)
@@ -914,7 +935,9 @@ def test_occ_dv_delete_replaced_batches_conflict_and_repair_prefix(
             # replaces/retires every DV batch + rewrites tombstoned file
             materialize_deletes(spark, path)
 
-    n = occ_dv_delete_where(spark, path, "k < 10", _after_stage=after_stage)
+    n = dv_delete_where(
+        spark, path, "k < 10", _after_stage=after_stage, optimistic=True
+    ).rows_matched
     assert n == 10
     assert attempts == [1, 2]  # one conflict, then clean commit
     assert read_mor(spark, path).count() == 80
@@ -935,30 +958,35 @@ def test_occ_dv_delete_replaced_batches_conflict_and_repair_prefix(
 
 
 def test_occ_dv_update_semantics_match_plain(spark, tmp_path):
-    """occ_dv_update_where is dv_update_where with a different commit
-    protocol: identical final state, count, and version commit on an
+    """dv_update_where(optimistic=True) is the locked verb with a different
+    commit protocol: identical final state, count, and version commit on an
     uncontended table (flat AND hive-partitioned)."""
-    from sql_query_optimizer_cpp_spark.operators.mor import (
-        dv_update_where,
-        occ_dv_update_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mor import dv_update_where
 
     path_a = _flat(spark, tmp_path / "a")
     path_b = _flat(spark, tmp_path / "b")
-    m.enable_versioning(spark, path_b)
-    n_plain = dv_update_where(spark, path_a, {"v": "v * 10"}, "k < 7")
-    n_occ = occ_dv_update_where(spark, path_b, {"v": "v * 10"}, "k < 7")
+    versioning.enable_versioning(spark, path_b)
+    n_plain = dv_update_where(
+        spark, path_a, {"v": "v * 10"}, "k < 7"
+    ).rows_matched
+    n_occ = dv_update_where(
+        spark, path_b, {"v": "v * 10"}, "k < 7", optimistic=True
+    ).rows_matched
     assert n_plain == n_occ == 7
     rows_a = sorted(map(tuple, read_mor(spark, path_a).collect()))
     rows_b = sorted(map(tuple, read_mor(spark, path_b).collect()))
     assert rows_a == rows_b
-    assert m.table_versions(spark, path_b) == [1, 2]  # one commit
+    assert versioning.table_versions(spark, path_b) == [1, 2]  # one commit
     # no-match: nothing staged, nothing committed, zero returned
-    assert occ_dv_update_where(spark, path_b, {"v": "0.0"}, "k < 0") == 0
-    assert m.table_versions(spark, path_b) == [1, 2]
+    assert dv_update_where(
+        spark, path_b, {"v": "0.0"}, "k < 0", optimistic=True
+    ).rows_matched == 0
+    assert versioning.table_versions(spark, path_b) == [1, 2]
     # already-tombstoned rows never re-match (count exactness)
     dv_delete_where(spark, path_b, "k = 8")
-    assert occ_dv_update_where(spark, path_b, {"v": "0.0"}, "k = 8") == 0
+    assert dv_update_where(
+        spark, path_b, {"v": "0.0"}, "k = 8", optimistic=True
+    ).rows_matched == 0
     # partitioned: copies route to their key=value dirs; partition
     # assignment refused (the COW rule)
     ppath = str(tmp_path / "p")
@@ -969,20 +997,20 @@ def test_occ_dv_update_semantics_match_plain(spark, tmp_path):
         .write.partitionBy("part")
         .parquet(ppath)
     )
-    assert occ_dv_update_where(spark, ppath, {"v": "v + 0.5"}, "k < 8") == 8
+    assert dv_update_where(
+        spark, ppath, {"v": "v + 0.5"}, "k < 8", optimistic=True
+    ).rows_matched == 8
     out = read_mor(spark, ppath)
     assert out.count() == 40 and out.where("v = 3.5").count() == 1
     with pytest.raises(ValueError, match="partition columns"):
-        occ_dv_update_where(spark, ppath, {"part": "0"}, "k = 1")
+        dv_update_where(spark, ppath, {"part": "0"}, "k = 1", optimistic=True)
 
 
 def test_occ_dv_update_disjoint_files_first_attempt(spark, tmp_path):
     """Two concurrent OCC DV updates on DISJOINT files both commit
     without a retry — the file-granular conflict rule carries over from
     the delete verb."""
-    from sql_query_optimizer_cpp_spark.operators.mor import (
-        occ_dv_update_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mor import dv_update_where
 
     path = _flat(spark, tmp_path)  # 4 files range-clustered on k
     attempts: dict[str, list[int]] = {"a": [], "b": []}
@@ -999,9 +1027,10 @@ def test_occ_dv_update_disjoint_files_first_attempt(spark, tmp_path):
                 barrier.wait()  # both staged before either commits
 
         try:
-            results[name] = occ_dv_update_where(
-                spark, path, {"v": val}, cond, _after_stage=after_stage
-            )
+            results[name] = dv_update_where(
+                spark, path, {"v": val}, cond, _after_stage=after_stage,
+                optimistic=True
+            ).rows_matched
         except Exception as e:  # noqa: BLE001
             errs.append(e)
 
@@ -1022,8 +1051,8 @@ def test_occ_dv_update_same_file_conflict_rederives(spark, tmp_path):
     the winner's tombstones, so only still-live rows update and the
     count stays exact."""
     from sql_query_optimizer_cpp_spark.operators.mor import (
-        occ_dv_delete_where,
-        occ_dv_update_where,
+        dv_delete_where,
+        dv_update_where,
     )
 
     path = _flat(spark, tmp_path)
@@ -1035,7 +1064,9 @@ def test_occ_dv_update_same_file_conflict_rederives(spark, tmp_path):
     attempts_b: list[int] = []
 
     def winner():
-        results["a"] = occ_dv_delete_where(spark, path, "k < 10")
+        results["a"] = dv_delete_where(
+            spark, path, "k < 10", optimistic=True
+        ).rows_matched
         done.set()
 
     def after_stage_b(attempt):
@@ -1045,10 +1076,11 @@ def test_occ_dv_update_same_file_conflict_rederives(spark, tmp_path):
             assert done.wait(60)  # winner's delete commits first
 
     def loser():
-        results["b"] = occ_dv_update_where(
+        results["b"] = dv_update_where(
             spark, path, {"v": "-9.0"}, "k < 15",
             _after_stage=after_stage_b,
-        )
+            optimistic=True,
+        ).rows_matched
 
     tb = threading.Thread(target=loser)
     tb.start()
@@ -1064,12 +1096,9 @@ def test_occ_dv_update_same_file_conflict_rederives(spark, tmp_path):
 
 
 def test_occ_dv_merge_matches_plain(spark, tmp_path):
-    """occ_dv_merge_into is dv_merge_into with a different commit
-    protocol: identical state, stats, and zero file rewrites."""
-    from sql_query_optimizer_cpp_spark.operators.mor import (
-        dv_merge_into,
-        occ_dv_merge_into,
-    )
+    """dv_merge_into(optimistic=True) is the locked verb with a different
+    commit protocol: identical state, stats, and zero file rewrites."""
+    from sql_query_optimizer_cpp_spark.operators.mor import dv_merge_into
 
     src = spark.range(95, 105).selectExpr(
         "id AS k", "CAST(-3.0 AS DOUBLE) AS v",
@@ -1080,8 +1109,9 @@ def test_occ_dv_merge_matches_plain(spark, tmp_path):
     st_a = dv_merge_into(
         spark, path_a, src, on=["k"], matched_set={"v": "src_v"}
     )
-    st_b = occ_dv_merge_into(
-        spark, path_b, src, on=["k"], matched_set={"v": "src_v"}
+    st_b = dv_merge_into(
+        spark, path_b, src, on=["k"], matched_set={"v": "src_v"},
+        optimistic=True
     )
     assert (st_a.rows_matched, st_a.rows_inserted) == (5, 5)
     assert (st_b.rows_matched, st_b.rows_inserted) == (5, 5)
@@ -1092,17 +1122,14 @@ def test_occ_dv_merge_matches_plain(spark, tmp_path):
     # duplicate-key source still refused up front
     dup = src.union(src)
     with pytest.raises(ValueError, match="duplicate join keys"):
-        occ_dv_merge_into(spark, path_b, dup, on=["k"])
+        dv_merge_into(spark, path_b, dup, on=["k"], optimistic=True)
 
 
 def test_occ_dv_merge_partitioned_matches_plain(spark, tmp_path):
-    """occ_dv_merge_into on a HIVE-PARTITIONED table: copies and inserts
-    route to their key=value dirs, results equal dv_merge_into, and
-    partition-column assignment is refused (the COW rule)."""
-    from sql_query_optimizer_cpp_spark.operators.mor import (
-        dv_merge_into,
-        occ_dv_merge_into,
-    )
+    """Optimistic dv_merge_into on a HIVE-PARTITIONED table: copies and
+    inserts route to their key=value dirs, results equal the locked
+    merge, and partition-column assignment is refused (the COW rule)."""
+    from sql_query_optimizer_cpp_spark.operators.mor import dv_merge_into
 
     def mk(leaf):
         p = str(tmp_path / leaf)
@@ -1120,8 +1147,9 @@ def test_occ_dv_merge_partitioned_matches_plain(spark, tmp_path):
         "id AS k", "CAST(-3.0 AS DOUBLE) AS v", "CAST(id % 4 AS INT) AS part"
     )
     st_a = dv_merge_into(spark, pa, src, on=["k"], matched_set={"v": "src_v"})
-    st_b = occ_dv_merge_into(
-        spark, pb, src, on=["k"], matched_set={"v": "src_v"}
+    st_b = dv_merge_into(
+        spark, pb, src, on=["k"], matched_set={"v": "src_v"},
+        optimistic=True
     )
     assert (st_a.rows_matched, st_a.rows_inserted) == (5, 5)
     assert (st_b.rows_matched, st_b.rows_inserted) == (5, 5)
@@ -1132,8 +1160,9 @@ def test_occ_dv_merge_partitioned_matches_plain(spark, tmp_path):
     # inserted copies landed in their hive dirs, not a flat dump
     assert read_mor(spark, pb).where("k = 44 AND part = 0").count() == 1
     with pytest.raises(ValueError, match="partition columns"):
-        occ_dv_merge_into(
-            spark, pb, src, on=["k"], matched_set={"part": "0"}
+        dv_merge_into(
+            spark, pb, src, on=["k"], matched_set={"part": "0"},
+            optimistic=True
         )
 
 
@@ -1141,9 +1170,7 @@ def test_occ_dv_merge_insert_only_ignores_foreign_churn(spark, tmp_path):
     """A pure-insert merge references no target file, so ANY concurrent
     DV churn is non-conflicting: first-attempt commit (the
     write-serializable contract)."""
-    from sql_query_optimizer_cpp_spark.operators.mor import (
-        occ_dv_merge_into,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mor import dv_merge_into
 
     path = _flat(spark, tmp_path)
     attempts: list[int] = []
@@ -1158,9 +1185,10 @@ def test_occ_dv_merge_insert_only_ignores_foreign_churn(spark, tmp_path):
         "id AS k", "CAST(1.5 AS DOUBLE) AS v",
         "CAST(id % 3 AS BIGINT) AS grp",
     )
-    st = occ_dv_merge_into(
+    st = dv_merge_into(
         spark, path, src, on=["k"], matched_set={"v": "src_v"},
         _after_stage=after_stage,
+        optimistic=True,
     )
     assert attempts == [1]  # no retry: tombstone set is empty
     assert st.rows_matched == 0 and st.rows_inserted == 5
@@ -1173,9 +1201,7 @@ def test_occ_dv_merge_same_file_conflict_rederives(spark, tmp_path):
     """A merge whose matched files are tombstoned concurrently re-derives:
     the vanished row flows to the (disabled) insert leg, not to a
     double-update."""
-    from sql_query_optimizer_cpp_spark.operators.mor import (
-        occ_dv_merge_into,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mor import dv_merge_into
 
     path = _flat(spark, tmp_path)
     attempts: list[int] = []
@@ -1189,9 +1215,10 @@ def test_occ_dv_merge_same_file_conflict_rederives(spark, tmp_path):
         "id AS k", "CAST(-5.0 AS DOUBLE) AS v",
         "CAST(id % 3 AS BIGINT) AS grp",
     )
-    st = occ_dv_merge_into(
+    st = dv_merge_into(
         spark, path, src, on=["k"], matched_set={"v": "src_v"},
         insert_condition="false", _after_stage=after_stage,
+        optimistic=True,
     )
     assert attempts == [1, 2]         # one conflict, then clean commit
     assert st.rows_matched == 14      # k=3 no longer live
@@ -1233,9 +1260,9 @@ def test_storage_report_ignores_duplicate_and_stale_tombstones(
 
 def test_execute_dml_mor_optimistic_verbs(spark, tmp_path):
     """mor+optimistic composes for all three verbs (r11): DELETE, UPDATE
-    and MERGE route through the occ_dv_* stage-outside-the-lock
+    and MERGE route through the optimistic stage-outside-the-lock
     protocol, zero file rewrites throughout."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import execute_dml
+    from sql_query_optimizer_cpp_spark.operators.dml_sql import execute_dml
 
     path = _flat(spark, tmp_path)
     st = execute_dml(
@@ -1283,8 +1310,8 @@ def test_materialize_rerun_drops_stale_vectors_and_commits(spark, tmp_path):
     import shutil
 
     path = _flat(spark, tmp_path)
-    m.enable_versioning(spark, path)                            # v1
-    assert dv_delete_where(spark, path, "k < 5") == 5           # v2
+    versioning.enable_versioning(spark, path)                   # v1
+    assert dv_delete_where(spark, path, "k < 5").rows_matched == 5  # v2
     # the crashed run's swap: the tombstoned file's rewrite moved in,
     # the original retired
     (old,) = {
@@ -1303,7 +1330,7 @@ def test_materialize_rerun_drops_stale_vectors_and_commits(spark, tmp_path):
     st = materialize_deletes(spark, path)                       # v3
     assert st.files_rewritten == 1
     assert not has_deletion_vectors(spark, path)
-    assert m.table_versions(spark, path) == [1, 2, 3]
+    assert versioning.table_versions(spark, path) == [1, 2, 3]
     assert spark.read.parquet(path).count() == 95
-    assert m.read_version(spark, path, 2).count() == 95
+    assert versioning.read_version(spark, path, 2).count() == 95
     assert m.delete_where(spark, path, "k = 50").rows_matched == 1

@@ -19,11 +19,11 @@ from pyspark.sql import functions as F
 from sql_query_optimizer_cpp_spark.operators.mutate import (
     MutationStats,
     delete_where,
-    execute_dml,
     list_data_files,
     merge_into,
     update_where,
 )
+from sql_query_optimizer_cpp_spark.operators.dml_sql import execute_dml
 
 
 def _names(spark, path):
@@ -226,7 +226,7 @@ def test_partitioned_update_and_partition_col_refused(spark, part_table):
 
 
 def test_partitioned_snapshot_time_travel(spark, part_table):
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         create_snapshot,
         drop_snapshot,
         read_snapshot,
@@ -333,7 +333,7 @@ def test_merge_matched_delete_and_insert_condition(spark, cow_table):
 
 
 def test_snapshot_time_travel_and_vacuum(spark, cow_table):
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         create_snapshot,
         drop_snapshot,
         list_snapshots,
@@ -369,7 +369,9 @@ def test_snapshot_time_travel_and_vacuum(spark, cow_table):
 
 
 def test_retired_files_invisible_to_normal_reads(spark, cow_table):
-    from sql_query_optimizer_cpp_spark.operators.mutate import create_snapshot
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
+        create_snapshot,
+    )
 
     create_snapshot(spark, cow_table, "base")
     delete_where(spark, cow_table, "k < 200", retain=True)
@@ -599,7 +601,7 @@ def test_retain_defaults_on_when_snapshots_exist(spark, cow_table):
     """DML with the default retain must not delete files a snapshot
     manifest still pins — time travel keeps working without the caller
     remembering retain=True."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         create_snapshot,
         read_snapshot,
     )
@@ -636,7 +638,7 @@ def test_version_log_mvcc_for_readers(spark, cow_table):
     """enable_versioning → every mutation commits the next version inside
     the writer lock; readers pinned to any version see its exact bytes
     across later DML (snapshot isolation for readers)."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         current_version,
         drop_versions_before,
         enable_versioning,
@@ -675,7 +677,7 @@ def test_version_log_mvcc_for_readers(spark, cow_table):
 
 
 def test_version_log_merge_and_partitioned(spark, part_table):
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         read_version,
         table_versions,
@@ -832,7 +834,7 @@ def test_segments_backslash_escaped_literals(spark, cow_table):
     """Spark's default lexer treats backslash as an escape inside string
     literals; the DML text scanner must lex the same boundary or splitting
     operates on literal content."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import _segments
+    from sql_query_optimizer_cpp_spark.operators.dml_sql import _segments
 
     pieces = list(_segments(r"s = 'it\'s, x' , v = 1"))
     assert (r"'it\'s, x'", True) in pieces
@@ -859,7 +861,7 @@ def test_snapshot_and_versioning_take_writer_lock(spark, cow_table):
     mid-swap file list pinned as a permanent version is corruption)."""
     import os as _os
 
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         create_snapshot,
         enable_versioning,
         list_snapshots,
@@ -885,12 +887,12 @@ def test_occ_disjoint_writers_both_commit(spark, cow_table):
     range-clustered layout): the interleaved writer commits mid-flight and
     the outer writer's validation still passes — BOTH commit, no retry, no
     lost update."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
-        occ_update_where,
         read_version,
         table_versions,
     )
+    from sql_query_optimizer_cpp_spark.operators.mutate import update_where
 
     enable_versioning(spark, cow_table)
     attempts = []
@@ -900,11 +902,15 @@ def test_occ_disjoint_writers_both_commit(spark, cow_table):
         if attempt == 1:
             # writer B commits while A sits between stage and commit;
             # k>=300 lives in file 3, A's k<100 in file 0 — disjoint
-            occ_update_where(spark, cow_table, {"v": "v + 2000"}, "k >= 300")
+            update_where(
+                spark, cow_table, {"v": "v + 2000"}, "k >= 300",
+                optimistic=True,
+            )
 
-    st = occ_update_where(
+    st = update_where(
         spark, cow_table, {"v": "v + 1000"}, "k < 100",
         _after_stage=interleave,
+        optimistic=True,
     )
     assert attempts == [1]          # A committed on its FIRST attempt
     assert st.rows_matched == 100
@@ -922,9 +928,7 @@ def test_occ_conflicting_writers_retry_then_commit(spark, cow_table):
     """Overlapping-file writers: the outer writer loses validation, retries
     against the winner's committed state, and the final state is the
     serial A-after-B outcome — never a lost update."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_update_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import update_where
 
     attempts = []
 
@@ -932,11 +936,14 @@ def test_occ_conflicting_writers_retry_then_commit(spark, cow_table):
         attempts.append(attempt)
         if attempt == 1:
             # same file (k<100 is file 0): forces a validation conflict
-            occ_update_where(spark, cow_table, {"v": "v + 50"}, "k < 50")
+            update_where(
+                spark, cow_table, {"v": "v + 50"}, "k < 50", optimistic=True
+            )
 
-    st = occ_update_where(
+    st = update_where(
         spark, cow_table, {"v": "v * 10"}, "k < 100",
         _after_stage=interleave,
+        optimistic=True,
     )
     assert attempts == [1, 2]       # lost once, committed on retry
     assert st.rows_matched == 100
@@ -949,20 +956,25 @@ def test_occ_conflicting_writers_retry_then_commit(spark, cow_table):
 def test_occ_conflict_exhausts_attempts(spark, cow_table):
     """max_attempts=1 turns the retry into an abort: the caller's mutation
     is NOT applied, the winner's is, and the staging is cleaned up."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.commit import (
         ConcurrentWriteConflict,
-        occ_delete_where,
-        occ_update_where,
+    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import (
+        delete_where,
+        update_where,
         repair_table,
     )
 
     def interleave(attempt):
-        occ_update_where(spark, cow_table, {"v": "v + 50"}, "k < 50")
+        update_where(
+            spark, cow_table, {"v": "v + 50"}, "k < 50", optimistic=True
+        )
 
     with pytest.raises(ConcurrentWriteConflict, match="optimistic attempt"):
-        occ_delete_where(
+        delete_where(
             spark, cow_table, "k < 100", max_attempts=1,
             _after_stage=interleave,
+            optimistic=True,
         )
     back = spark.read.parquet(cow_table)
     assert back.count() == 400                      # delete never applied
@@ -977,17 +989,14 @@ def test_occ_two_threads_disjoint_keys(spark, cow_table):
     verbs would refuse one)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_update_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import update_where
+
+    def occ_update(set_map, cond):
+        return update_where(spark, cow_table, set_map, cond, optimistic=True)
 
     with ThreadPoolExecutor(max_workers=2) as ex:
-        f1 = ex.submit(
-            occ_update_where, spark, cow_table, {"v": "v + 1000"}, "k < 100"
-        )
-        f2 = ex.submit(
-            occ_update_where, spark, cow_table, {"v": "v + 2000"}, "k >= 300"
-        )
+        f1 = ex.submit(occ_update, {"v": "v + 1000"}, "k < 100")
+        f2 = ex.submit(occ_update, {"v": "v + 2000"}, "k >= 300")
         s1, s2 = f1.result(timeout=120), f2.result(timeout=120)
     assert s1.rows_matched == 100 and s2.rows_matched == 100
     back = spark.read.parquet(cow_table)
@@ -1000,20 +1009,21 @@ def test_occ_partitioned_disjoint_partitions_first_attempt(spark, part_table):
     conflict — the interleaved writer commits p=1 while the outer writer
     sits between stage and commit on p=0, and the outer validation (scoped
     to p=0's directory) still passes first-attempt."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_update_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import update_where
 
     attempts = []
 
     def interleave(attempt):
         attempts.append(attempt)
         if attempt == 1:
-            occ_update_where(spark, part_table, {"v": "v + 2000"}, "p = 1")
+            update_where(
+                spark, part_table, {"v": "v + 2000"}, "p = 1", optimistic=True
+            )
 
-    st = occ_update_where(
+    st = update_where(
         spark, part_table, {"v": "v + 1000"}, "p = 0",
         _after_stage=interleave,
+        optimistic=True,
     )
     assert attempts == [1]          # first-attempt commit, no retry
     assert st.rows_matched == 100
@@ -1028,20 +1038,22 @@ def test_occ_partitioned_same_partition_retries(spark, part_table):
     """Same-partition writers serialize by retry: the outer writer loses
     validation on p=0 once, re-reads, and the final state is the serial
     B-then-A outcome."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_update_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import update_where
 
     attempts = []
 
     def interleave(attempt):
         attempts.append(attempt)
         if attempt == 1:
-            occ_update_where(spark, part_table, {"v": "v + 50"}, "p = 0 AND k < 30")
+            update_where(
+                spark, part_table, {"v": "v + 50"}, "p = 0 AND k < 30",
+                optimistic=True,
+            )
 
-    st = occ_update_where(
+    st = update_where(
         spark, part_table, {"v": "v * 10"}, "p = 0",
         _after_stage=interleave,
+        optimistic=True,
     )
     assert attempts == [1, 2]
     assert st.rows_matched == 100
@@ -1052,15 +1064,16 @@ def test_occ_partitioned_same_partition_retries(spark, part_table):
 
 
 def test_occ_partitioned_delete_and_guards(spark, part_table):
-    """Partitioned occ_delete_where removes rows in place; partition-column
-    assignment is refused exactly like the serialized verb."""
+    """Partitioned optimistic delete_where removes rows in place;
+    partition-column assignment is refused exactly like the serialized
+    verb."""
     from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_delete_where,
-        occ_update_where,
+        delete_where,
+        update_where,
         repair_table,
     )
 
-    st = occ_delete_where(spark, part_table, "p = 2 AND k < 60")
+    st = delete_where(spark, part_table, "p = 2 AND k < 60", optimistic=True)
     assert st.rows_matched == len(
         [k for k in range(300) if k % 3 == 2 and k < 60]
     )
@@ -1068,7 +1081,7 @@ def test_occ_partitioned_delete_and_guards(spark, part_table):
     assert back.where("p = 2 AND k < 60").count() == 0
     assert back.where("p <> 2").count() == 200
     with pytest.raises(ValueError, match="partition columns"):
-        occ_update_where(spark, part_table, {"p": "1"}, "k < 10")
+        update_where(spark, part_table, {"p": "1"}, "k < 10", optimistic=True)
     assert repair_table(spark, part_table).staging_dirs == ()
 
 
@@ -1114,9 +1127,11 @@ def test_occ_lock_held_counts_as_conflict_not_stale_lock(spark, cow_table):
     that message invites deleting a live writer's lock."""
     import os as _os
 
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.commit import (
         ConcurrentWriteConflict,
-        occ_update_where,
+    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import (
+        update_where,
         repair_table,
     )
 
@@ -1124,9 +1139,10 @@ def test_occ_lock_held_counts_as_conflict_not_stale_lock(spark, cow_table):
     open(lock, "w").write("long-running-serialized-writer")
     try:
         with pytest.raises(ConcurrentWriteConflict, match="lock"):
-            occ_update_where(
+            update_where(
                 spark, cow_table, {"v": "v + 1"}, "k < 10",
                 max_attempts=2, lock_wait_seconds=0.2,
+                optimistic=True,
             )
         # table untouched, staging reclaimed
         assert spark.read.parquet(cow_table).where("v >= 100").count() == 0
@@ -1136,7 +1152,7 @@ def test_occ_lock_held_counts_as_conflict_not_stale_lock(spark, cow_table):
 
 
 def test_occ_missing_file_error_classifier():
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.reader import (
         _is_missing_file_error,
     )
 
@@ -1156,14 +1172,14 @@ def test_occ_no_separate_count_job_per_attempt(spark, cow_table):
     fold directly: no job in the attempt's group may contain a 'count at'
     stage (the remaining jobs are the prune-scan collect, parquet schema
     inference, and the staged write carrying the observation)."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_update_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import update_where
 
     sc = spark.sparkContext
     sc.setJobGroup("occ-attempt", "count jobs for one occ attempt")
     try:
-        st = occ_update_where(spark, cow_table, {"v": "v + 1"}, "k < 100")
+        st = update_where(
+            spark, cow_table, {"v": "v + 1"}, "k < 100", optimistic=True
+        )
     finally:
         sc.setJobGroup(None, None)
     assert st.rows_matched == 100
@@ -1184,16 +1200,17 @@ def test_occ_after_stage_raise_reclaims_staging(spark, cow_table):
     """_after_stage is a public kwarg: if the callback raises, the staged
     dir must be deleted before the exception propagates (ADVICE r7)."""
     from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_update_where,
+        update_where,
         repair_table,
     )
 
     with pytest.raises(RuntimeError, match="seam boom"):
-        occ_update_where(
+        update_where(
             spark, cow_table, {"v": "v + 1"}, "k < 10",
             _after_stage=lambda a: (_ for _ in ()).throw(
                 RuntimeError("seam boom")
             ),
+            optimistic=True,
         )
     assert repair_table(spark, cow_table).staging_dirs == ()
     # table untouched
@@ -1205,14 +1222,14 @@ def test_occ_missing_table_is_error_not_conflict(spark, tmp_path):
     conflict classifier looks for — it must surface as the real error, not
     be retried max_attempts times and re-branded ConcurrentWriteConflict
     (ADVICE r7)."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.commit import (
         ConcurrentWriteConflict,
-        occ_delete_where,
     )
+    from sql_query_optimizer_cpp_spark.operators.mutate import delete_where
 
     missing = str(tmp_path / "never_created")
     with pytest.raises(Exception) as ei:
-        occ_delete_where(spark, missing, "k < 10", max_attempts=3)
+        delete_where(spark, missing, "k < 10", max_attempts=3, optimistic=True)
     assert not isinstance(ei.value, ConcurrentWriteConflict)
 
 
@@ -1221,18 +1238,19 @@ def test_occ_lock_wait_message_uses_actual_wait(spark, cow_table):
     configured, not a hardcoded 30s (ADVICE r7)."""
     import os as _os
 
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.commit import (
         ConcurrentWriteConflict,
-        occ_update_where,
     )
+    from sql_query_optimizer_cpp_spark.operators.mutate import update_where
 
     lock = _os.path.join(cow_table, "_cow.lock")
     open(lock, "w").write("held")
     try:
         with pytest.raises(ConcurrentWriteConflict, match=r"0\.2s wait"):
-            occ_update_where(
+            update_where(
                 spark, cow_table, {"v": "v + 1"}, "k < 10",
                 max_attempts=1, lock_wait_seconds=0.2,
+                optimistic=True,
             )
     finally:
         _os.remove(lock)
@@ -1267,9 +1285,7 @@ def test_occ_merge_disjoint_key_upserts_both_commit(spark, cow_table):
     """Two concurrent upserts on disjoint keys: the interleaved one
     commits mid-flight; the outer one loses SERIALIZABLE validation (a
     merge's read set is the whole table), retries, and both land."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_merge_into,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import merge_into
 
     src_a = spark.range(5).selectExpr(
         "id AS k", "CAST(500 AS double) AS v", "'a' AS s"
@@ -1282,15 +1298,17 @@ def test_occ_merge_disjoint_key_upserts_both_commit(spark, cow_table):
     def interleave(attempt):
         attempts.append(attempt)
         if attempt == 1:
-            occ_merge_into(
+            merge_into(
                 spark, cow_table, src_b, on=["k"],
                 matched_set={"v": "src_v"},
+                optimistic=True,
             )
 
-    st = occ_merge_into(
+    st = merge_into(
         spark, cow_table, src_a, on=["k"],
         matched_set={"v": "src_v"},
         _after_stage=interleave,
+        optimistic=True,
     )
     # writer B's commit changed the file list → A retried exactly once
     assert attempts == [1, 2]
@@ -1306,9 +1324,7 @@ def test_occ_merge_insert_race_stays_serializable(spark, cow_table):
     try to insert the SAME new key.  Serializable validation forces the
     loser to re-derive its unmatched set against the winner's commit, so
     the second merge becomes an UPDATE, never a duplicate insert."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_merge_into,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import merge_into
 
     src = spark.createDataFrame(
         [(999, 1.0, "first")], "k long, v double, s string"
@@ -1319,14 +1335,16 @@ def test_occ_merge_insert_race_stays_serializable(spark, cow_table):
 
     def interleave(attempt):
         if attempt == 1:
-            occ_merge_into(
-                spark, cow_table, src, on=["k"], matched_set={"v": "src_v"}
+            merge_into(
+                spark, cow_table, src, on=["k"], matched_set={"v": "src_v"},
+                optimistic=True
             )
 
-    st = occ_merge_into(
+    st = merge_into(
         spark, cow_table, src2, on=["k"],
         matched_set={"v": "src_v"},
         _after_stage=interleave,
+        optimistic=True,
     )
     # loser re-derived: its insert became a matched update
     assert st.rows_matched == 1 and st.rows_inserted == 0
@@ -1338,10 +1356,12 @@ def test_occ_merge_insert_race_stays_serializable(spark, cow_table):
 def test_occ_merge_guards_and_conflict_exhaustion(spark, cow_table):
     """Duplicate-source guard fires once (before the retry loop); at
     max_attempts=1 a concurrent commit aborts the merge cleanly."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.commit import (
         ConcurrentWriteConflict,
-        occ_merge_into,
-        occ_update_where,
+    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import (
+        merge_into,
+        update_where,
         repair_table,
     )
 
@@ -1349,17 +1369,23 @@ def test_occ_merge_guards_and_conflict_exhaustion(spark, cow_table):
         [(1, 1.0, "x"), (1, 2.0, "y")], "k long, v double, s string"
     )
     with pytest.raises(ValueError, match="duplicate join keys"):
-        occ_merge_into(spark, cow_table, dup, on=["k"], matched_set={"v": "src_v"})
+        merge_into(
+            spark, cow_table, dup, on=["k"], matched_set={"v": "src_v"},
+            optimistic=True,
+        )
 
     src = spark.createDataFrame([(1, 9.0, "z")], "k long, v double, s string")
 
     def interleave(attempt):
-        occ_update_where(spark, cow_table, {"v": "v + 50"}, "k >= 390")
+        update_where(
+            spark, cow_table, {"v": "v + 50"}, "k >= 390", optimistic=True
+        )
 
     with pytest.raises(ConcurrentWriteConflict, match="optimistic MERGE"):
-        occ_merge_into(
+        merge_into(
             spark, cow_table, src, on=["k"], matched_set={"v": "src_v"},
             max_attempts=1, _after_stage=interleave,
+            optimistic=True,
         )
     back = spark.read.parquet(cow_table)
     assert back.where("k = 1 AND v = 9.0").count() == 0   # merge not applied
@@ -1371,16 +1397,15 @@ def test_occ_merge_partitioned(spark, part_table):
     """Optimistic MERGE on a hive-partitioned table: matched rewrite per
     partition dir, inserts land partitionBy'd, validation covers the
     recursive file list."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_merge_into,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import merge_into
 
     src = spark.createDataFrame(
         [(0, 100.0, 0), (1, 200.0, 1), (900, 9.0, 2)],
         "k long, v double, p long",
     )
-    st = occ_merge_into(
+    st = merge_into(
         spark, part_table, src, on=["k"], matched_set={"v": "src_v"},
+        optimistic=True,
     )
     assert st.rows_matched == 2 and st.rows_inserted == 1
     back = spark.read.parquet(part_table)
@@ -1400,17 +1425,19 @@ def test_version_log_delta_manifests_o_touched(spark, tmp_path):
     import json
     import shutil
 
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         CHECKPOINT_INTERVAL,
         _autoversion,
         _manifest_rel_files,
-        _writer_lock,
         enable_versioning,
-        list_data_files,
         read_version,
         table_versions,
         vacuum,
         drop_versions_before,
+    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import (
+        _writer_lock,
+        list_data_files,
     )
 
     path = str(tmp_path / "wide")
@@ -1580,8 +1607,8 @@ def test_merge_evolve_widening_rewrites_table(spark, tmp_path):
 def test_occ_merge_evolve_schema(spark, cow_table):
     """The optimistic verb carries evolution through its retry loop."""
     from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_merge_into,
-        occ_update_where,
+        merge_into,
+        update_where,
         read_table,
     )
 
@@ -1589,11 +1616,14 @@ def test_occ_merge_evolve_schema(spark, cow_table):
 
     def interleave(attempt):
         if attempt == 1:
-            occ_update_where(spark, cow_table, {"v": "v + 1"}, "k >= 390")
+            update_where(
+                spark, cow_table, {"v": "v + 1"}, "k >= 390", optimistic=True
+            )
 
-    st = occ_merge_into(
+    st = merge_into(
         spark, cow_table, src, on=["k"], matched_set={"note": "src_note"},
         evolve_schema=True, _after_stage=interleave,
+        optimistic=True,
     )
     assert st.rows_matched == 1
     back = read_table(spark, cow_table)
@@ -1606,7 +1636,7 @@ def test_read_changes_net_row_diff(spark, cow_table):
     rows a COW rewrite merely COPIED into a new file cancel out of the
     diff; an UPDATE surfaces as its delete + insert image pair; version
     pairs with no file diff return an empty frame with the same schema."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         read_changes,
     )
@@ -1660,7 +1690,7 @@ def test_read_changes_merge_partitioned_and_evolved(spark, part_table):
     value) and across an evolve_schema commit: only touched partitions'
     files enter the diff; pre-evolution old images NULL-backfill the new
     column and still cancel when otherwise identical."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         read_changes,
     )
@@ -1700,7 +1730,7 @@ def _cow_siblings(path):
 
 
 def test_add_constraint_validates_and_refuses(spark, cow_table):
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.constraints import (
         ConstraintViolation,
         add_constraint,
         drop_constraint,
@@ -1730,10 +1760,12 @@ def test_update_violating_constraint_aborts_unchanged(spark, cow_table):
     """A violating UPDATE aborts BEFORE any swap: same bytes, same file
     names, no staging debris, no version committed; NULL passes CHECK
     (SQL semantics); after drop_constraint the update lands."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.constraints import (
         ConstraintViolation,
         add_constraint,
         drop_constraint,
+    )
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         table_versions,
     )
@@ -1761,7 +1793,7 @@ def test_update_violating_constraint_aborts_unchanged(spark, cow_table):
 
 
 def test_partitioned_update_constraint_aborts(spark, part_table):
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.constraints import (
         ConstraintViolation,
         add_constraint,
     )
@@ -1780,7 +1812,7 @@ def test_partitioned_update_constraint_aborts(spark, part_table):
 def test_merge_violating_constraint_reclaims_all_staging(spark, cow_table):
     """Both a violating INSERT row and a violating matched SET abort the
     merge with every staging dir (rewrites + inserts) reclaimed."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.constraints import (
         ConstraintViolation,
         add_constraint,
     )
@@ -1812,31 +1844,34 @@ def test_occ_update_constraint_terminal_not_conflict(spark, cow_table):
     """Under the optimistic verb a violation is TERMINAL on attempt 1 —
     wrong data never burns max_attempts retries or surfaces as a
     misleading ConcurrentWriteConflict — and staging is reclaimed."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.constraints import (
         ConstraintViolation,
         add_constraint,
-        occ_delete_where,
-        occ_update_where,
+    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import (
+        delete_where,
+        update_where,
     )
 
     add_constraint(spark, cow_table, "v_nonneg", "v >= 0")
     attempts = []
     with pytest.raises(ConstraintViolation, match="v_nonneg"):
-        occ_update_where(
+        update_where(
             spark, cow_table, {"v": "v - 100"}, "k < 10",
             _after_stage=attempts.append,
+            optimistic=True,
         )
     assert attempts == []  # aborted before the commit phase, first attempt
     assert _cow_siblings(cow_table) == []
     # deletes cannot violate and skip the check entirely
-    st = occ_delete_where(spark, cow_table, "k >= 395")
+    st = delete_where(spark, cow_table, "k >= 395", optimistic=True)
     assert st.rows_matched == 5
 
 
 def test_read_as_of_wall_clock(spark, cow_table):
     """read_as_of picks the newest version committed ≤ the stamp; naive
     stamps are UTC; stamps before v1 refuse with the earliest commit."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         read_as_of,
         version_history,
@@ -1972,7 +2007,7 @@ def test_constraint_on_evolved_column_backfills(spark, cow_table):
     """Review regression (r8): a CHECK on an evolved column must not
     abort a mutation whose staged files legally lack that column (NULL
     passes CHECK); violations on the column still catch."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.constraints import (
         ConstraintViolation,
         add_constraint,
     )
@@ -2011,8 +2046,9 @@ def test_occ_recheck_constraint_added_mid_flight(spark, cow_table, verb):
     writer's lock-free enforcement and its commit lock must still gate
     the publish (the in-lock re-check) — for every value-changing
     optimistic verb, copy-on-write and merge-on-read alike."""
-    from sql_query_optimizer_cpp_spark.operators import mor, occ
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators import mor
+    from sql_query_optimizer_cpp_spark.operators import mutate as m
+    from sql_query_optimizer_cpp_spark.operators.constraints import (
         ConstraintViolation,
         add_constraint,
     )
@@ -2021,7 +2057,7 @@ def test_occ_recheck_constraint_added_mid_flight(spark, cow_table, verb):
         # current table satisfies this; the staged change does not
         add_constraint(spark, cow_table, "v_cap", "v < 1000")
 
-    fn = getattr(mor if "_dv_" in verb else occ, verb)
+    fn = getattr(mor if "_dv_" in verb else m, verb.removeprefix("occ_"))
     if verb.endswith("merge_into"):
         src = spark.createDataFrame(
             [(k, 100000.0) for k in range(10)], "k long, v double"
@@ -2031,7 +2067,10 @@ def test_occ_recheck_constraint_added_mid_flight(spark, cow_table, verb):
     else:
         args, kwargs = ({"v": "v + 100000"}, "k < 10"), {}
     with pytest.raises(ConstraintViolation, match="v_cap"):
-        fn(spark, cow_table, *args, _after_stage=add_mid_flight, **kwargs)
+        fn(
+            spark, cow_table, *args, optimistic=True,
+            _after_stage=add_mid_flight, **kwargs,
+        )
     assert _cow_siblings(cow_table) == []
     back = mor.read_mor(spark, cow_table)
     assert back.where("v >= 1000").count() == 0
@@ -2046,10 +2085,9 @@ def test_occ_dv_conflict_exhaustion_is_concurrent_write_conflict(
     existing handlers keep working) and leave no staging behind."""
     from sql_query_optimizer_cpp_spark.operators.mor import (
         dv_delete_where,
-        occ_dv_delete_where,
         read_mor,
     )
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.commit import (
         ConcurrentWriteConflict,
     )
 
@@ -2058,8 +2096,8 @@ def test_occ_dv_conflict_exhaustion_is_concurrent_write_conflict(
         dv_delete_where(spark, cow_table, "k = 50")
 
     with pytest.raises(ConcurrentWriteConflict, match="optimistic DV DELETE"):
-        occ_dv_delete_where(
-            spark, cow_table, "k < 10", max_attempts=1,
+        dv_delete_where(
+            spark, cow_table, "k < 10", optimistic=True, max_attempts=1,
             _after_stage=interleave,
         )
     assert _cow_siblings(cow_table) == []
@@ -2083,7 +2121,7 @@ def test_commit_keeps_unrelated_cached_frames(
     """A commit refreshes cached frames over ITS table only: a frame
     persisted over another table stays cached across locked and
     optimistic, copy-on-write and merge-on-read commits."""
-    from sql_query_optimizer_cpp_spark.operators import mor, occ
+    from sql_query_optimizer_cpp_spark.operators import mor
     from sql_query_optimizer_cpp_spark.operators import mutate as m
 
     other = str(tmp_path / "other")
@@ -2091,9 +2129,12 @@ def test_commit_keeps_unrelated_cached_frames(
     hot = spark.read.parquet(other).where("id % 2 = 0").persist()
     try:
         assert hot.count() == 25
-        module = mor if "dv_" in verb else occ if "occ_" in verb else m
-        st = getattr(module, verb)(spark, cow_table, {"v": "v + 1"}, "k < 10")
-        assert st == 10 or st.rows_matched == 10
+        fn = getattr(mor if "dv_" in verb else m, verb.removeprefix("occ_"))
+        st = fn(
+            spark, cow_table, {"v": "v + 1"}, "k < 10",
+            optimistic=verb.startswith("occ_"),
+        )
+        assert st.rows_matched == 10
         level = hot.storageLevel
         assert level.useMemory or level.useDisk
         assert hot.count() == 25
@@ -2104,16 +2145,14 @@ def test_commit_keeps_unrelated_cached_frames(
 def test_commit_refreshes_frames_over_the_mutated_table(spark, cow_table):
     """A frame persisted over the mutated table counts the committed
     rows after a COW delete (the path-scoped refresh re-caches it)."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_delete_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import delete_where
 
     cached = spark.read.parquet(cow_table).persist()
     try:
         assert cached.count() == 400
         delete_where(spark, cow_table, "k < 10")
         assert cached.count() == 390
-        occ_delete_where(spark, cow_table, "k >= 390")
+        delete_where(spark, cow_table, "k >= 390", optimistic=True)
         assert cached.count() == 380
     finally:
         cached.unpersist()
@@ -2142,7 +2181,7 @@ def test_read_changes_scan_scope_and_multiplicity(spark, tmp_path):
     plan reads ONLY the files the range touched (1 rewritten + its
     retired original out of 8), each exactly once; (b) duplicate rows
     carry exact multiset multiplicity through the diff."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         read_changes,
     )
@@ -2171,7 +2210,7 @@ def test_execute_dml_alter_constraint(spark, cow_table):
     """Textual constraint DDL: ALTER TABLE ADD CONSTRAINT ... CHECK (...)
     gates later textual DML; DROP CONSTRAINT lifts it; malformed forms
     and unknown tables are refused with the dialect in the message."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.constraints import (
         ConstraintViolation,
         table_constraints,
     )
@@ -2215,7 +2254,7 @@ def test_read_changes_extreme_multiplicity_streams(spark, tmp_path):
     """Review regression (r8): one distinct image with net multiplicity
     far above the 64k expansion chunk must re-expand through the nested
     bounded sequences (never one giant array) with an exact count."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         read_changes,
         signed_net_expand,
@@ -2247,7 +2286,7 @@ def test_restore_version_rolls_forward(spark, cow_table):
     """RESTORE makes the live file set equal an old version's manifest as a
     NEW commit: metadata-only renames, full history preserved, CDC across
     the restore shows the net undo."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         read_changes,
         read_version,
@@ -2276,7 +2315,7 @@ def test_restore_version_rolls_forward(spark, cow_table):
 
 
 def test_restore_version_noop_and_errors(spark, cow_table):
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         restore_version,
         table_versions,
@@ -2296,7 +2335,7 @@ def test_restore_version_noop_and_errors(spark, cow_table):
 def test_restore_version_partitioned_and_restore_again(spark, part_table):
     """Partitioned restore moves files back into their partition dirs; a
     restored state can itself be restored away from and back to."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         read_version,
         restore_version,
@@ -2319,10 +2358,9 @@ def test_restore_version_partitioned_and_restore_again(spark, part_table):
 def test_restore_version_rerun_commits_after_crash(spark, cow_table, monkeypatch):
     """Crash between restore's renames and its commit: the rerun must not
     no-op — it detects live-set/manifest divergence and commits."""
-    from sql_query_optimizer_cpp_spark.operators import mutate as mm
     from sql_query_optimizer_cpp_spark.operators import versioning as vv
 
-    mm.enable_versioning(spark, cow_table)                 # v1
+    vv.enable_versioning(spark, cow_table)                 # v1
     delete_where(spark, cow_table, "k >= 300")             # v2
     update_where(spark, cow_table, {"v": "v + 1"}, "k < 100")  # v3
 
@@ -2333,19 +2371,19 @@ def test_restore_version_rerun_commits_after_crash(spark, cow_table, monkeypatch
         calls["n"] += 1
         raise RuntimeError("injected crash before commit")
 
-    # patch the DEFINING module (restore_version lives in versioning.py
-    # since the r12 split; the mutate facade re-export is a lazy alias)
     monkeypatch.setattr(vv, "_autoversion", dying)
     with pytest.raises(RuntimeError, match="injected crash"):
-        mm.restore_version(spark, cow_table, 2)
+        vv.restore_version(spark, cow_table, 2)
     # bytes restored, commit missing: live == v2 but log still ends at v3
     assert spark.read.parquet(cow_table).where("k = 0").first()["v"] == 0.0
-    assert mm.table_versions(spark, cow_table) == [1, 2, 3]
+    assert vv.table_versions(spark, cow_table) == [1, 2, 3]
     monkeypatch.setattr(vv, "_autoversion", real)
-    st = mm.restore_version(spark, cow_table, 2)           # the rerun
+    st = vv.restore_version(spark, cow_table, 2)           # the rerun
     assert st.files_rewritten == 0  # nothing to move — but it commits
-    assert mm.table_versions(spark, cow_table) == [1, 2, 3, 4]
-    assert mm.read_version(spark, cow_table, 4).where("k = 0").first()["v"] == 0.0
+    assert vv.table_versions(spark, cow_table) == [1, 2, 3, 4]
+    assert vv.read_version(
+        spark, cow_table, 4
+    ).where("k = 0").first()["v"] == 0.0
 
 
 def test_occ_merge_write_serializable_disjoint_no_retry(spark, cow_table):
@@ -2354,9 +2392,7 @@ def test_occ_merge_write_serializable_disjoint_no_retry(spark, cow_table):
     FIRST attempt without re-staging (the serializable level retries,
     test_occ_merge_disjoint_key_upserts_both_commit).  A concurrent
     commit that removes one of THIS merge's hit files still conflicts."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        occ_merge_into,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import merge_into
 
     # cow_table is range-clustered on k: keys <5 and >=350 live in
     # disjoint files, so the interleaved writer touches none of ours
@@ -2371,16 +2407,18 @@ def test_occ_merge_write_serializable_disjoint_no_retry(spark, cow_table):
     def interleave(attempt):
         attempts.append(attempt)
         if attempt == 1:
-            occ_merge_into(
+            merge_into(
                 spark, cow_table, src_b, on=["k"],
                 matched_set={"v": "src_v"},
+                optimistic=True,
             )
 
-    st = occ_merge_into(
+    st = merge_into(
         spark, cow_table, src_a, on=["k"],
         matched_set={"v": "src_v"},
         isolation="write_serializable",
         _after_stage=interleave,
+        optimistic=True,
     )
     assert attempts == [1]  # no retry: the concurrent commit was disjoint
     assert st.rows_matched == 5
@@ -2394,15 +2432,16 @@ def test_occ_merge_write_serializable_disjoint_no_retry(spark, cow_table):
     def interleave_overlap(attempt):
         attempts.append(attempt)
         if attempt == 1:
-            occ_merge_into(
+            merge_into(
                 spark, cow_table,
                 spark.createDataFrame(
                     [(1, -1.0, "b2")], "k long, v double, s string"
                 ),
                 on=["k"], matched_set={"v": "src_v"},
+                optimistic=True,
             )
 
-    st2 = occ_merge_into(
+    st2 = merge_into(
         spark, cow_table,
         spark.createDataFrame(
             [(2, 777.0, "a2")], "k long, v double, s string"
@@ -2410,12 +2449,80 @@ def test_occ_merge_write_serializable_disjoint_no_retry(spark, cow_table):
         on=["k"], matched_set={"v": "src_v"},
         isolation="write_serializable",
         _after_stage=interleave_overlap,
+        optimistic=True,
     )
     assert attempts == [1, 2]
     back = spark.read.parquet(cow_table)
     assert back.where("k = 2").first()["v"] == 777.0
     assert back.where("k = 1").first()["v"] == -1.0
     with pytest.raises(ValueError, match="isolation"):
-        occ_merge_into(
-            spark, cow_table, src_a, on=["k"], isolation="nope"
+        merge_into(
+            spark, cow_table, src_a, on=["k"], isolation="nope",
+            optimistic=True
         )
+
+
+_FOLD_TEXT = {
+    "DELETE": "DELETE FROM t WHERE k < 5",
+    "UPDATE": "UPDATE t SET v = v + 1 WHERE k >= 15",
+    "MERGE": "MERGE INTO t USING s ON t.k = s.k "
+    "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT",
+}
+
+
+@pytest.mark.parametrize("optimistic", [False, True], ids=["locked", "occ"])
+@pytest.mark.parametrize("mor", [False, True], ids=["cow", "mor"])
+@pytest.mark.parametrize("verb", ["DELETE", "UPDATE", "MERGE"])
+def test_dml_text_equals_direct_verb_call(
+    spark, tmp_path, verb, mor, optimistic
+):
+    """Every (verb, storage, commit mode) cell: ``Engine.dml`` on one
+    table and the direct verb call on its twin return equal
+    MutationStats — one return type, ``files_total`` the pre-statement
+    count — and leave equal rows."""
+    from sql_query_optimizer_cpp_spark.engine import Engine
+    from sql_query_optimizer_cpp_spark.operators import mor as mor_mod
+    from sql_query_optimizer_cpp_spark.operators import mutate as m
+
+    df = spark.range(20).selectExpr("id AS k", "CAST(id AS double) AS v")
+    text_t, call_t, src = (str(tmp_path / n) for n in ("a", "b", "src"))
+    for p in (text_t, call_t):
+        df.repartitionByRange(2, "k").write.parquet(p)
+    spark.createDataFrame(
+        [(3, 30.0), (100, 1.0)], "k long, v double"
+    ).write.parquet(src)
+
+    got = Engine(spark).dml(
+        _FOLD_TEXT[verb], {"t": text_t, "s": src},
+        optimistic=optimistic, mor=mor,
+    )
+    name = {"DELETE": "delete_where", "UPDATE": "update_where"}.get(
+        verb, "merge_into"
+    )
+    fn = getattr(mor_mod, f"dv_{name}") if mor else getattr(m, name)
+    args = {
+        "DELETE": ("k < 5",),
+        "UPDATE": ({"v": "v + 1"}, "k >= 15"),
+        "MERGE": (spark.read.parquet(src), ["k"], {"v": "src_v"}),
+    }[verb]
+    want = fn(spark, call_t, *args, optimistic=optimistic)
+
+    assert isinstance(got, MutationStats) and got == want
+    assert got.files_total == 2 and got.rows_matched > 0
+
+    def rows(p):
+        return sorted(map(tuple, mor_mod.read_mor(spark, p).collect()))
+
+    assert rows(text_t) == rows(call_t)
+
+
+def test_locked_merge_refuses_a_relaxed_isolation(spark, cow_table):
+    """A locked merge is single-writer: a relaxed isolation level would
+    be silently meaningless, so the verb refuses it for every caller."""
+    src = spark.createDataFrame([(1, 5.0)], "k long, v double")
+    with pytest.raises(ValueError, match="only applies to optimistic=True"):
+        merge_into(
+            spark, cow_table, src, on=["k"], matched_set={"v": "src_v"},
+            isolation="write_serializable",
+        )
+    assert spark.read.parquet(cow_table).where("k = 1").first()["v"] == 1.0

@@ -1041,7 +1041,7 @@ def test_ivf_staleness_gate_sees_deletion_vectors(spark, tmp_path):
     hit = S.ivf_search_indexed(
         spark, tdir, n_queries=5, k=3, n_probes=S.IVF_CELLS
     ).first()["neighbor_id"]
-    assert dv_delete_where(spark, tdir, f"vec_id = {hit}") == 1
+    assert dv_delete_where(spark, tdir, f"vec_id = {hit}").rows_matched == 1
     with _pytest.raises(ValueError, match="STALE"):
         S.ivf_search_indexed(spark, tdir, n_queries=5, k=3)
     # rebuild reads through the tombstones: the deleted vector is
@@ -1151,7 +1151,7 @@ def test_maintain_ivf_index_folds_deletes_and_appends(spark, tmp_path):
         )
         assert got == want and got
 
-    n_del = dv_delete_where(spark, tdir, "vec_id % 7 = 3")
+    n_del = dv_delete_where(spark, tdir, "vec_id % 7 = 3").rows_matched
     assert n_del > 0
     with _pytest.raises(ValueError, match="STALE"):
         S.ivf_search_indexed(spark, tdir, n_queries=6, k=4)
@@ -1175,7 +1175,7 @@ def test_maintain_ivf_index_folds_deletes_and_appends(spark, tmp_path):
     emb.where("vec_id < 5").selectExpr(
         "vec_id + 1000000 AS vec_id", "embedding", "label"
     ).write.mode("append").parquet(tdir)
-    n_del2 = dv_delete_where(spark, tdir, "vec_id % 7 = 5")
+    n_del2 = dv_delete_where(spark, tdir, "vec_id % 7 = 5").rows_matched
     doomed_new = 1  # of the 5 new ids 1000000..1000004, only 1000004
     st = S.maintain_ivf_index(spark, tdir, id_col="vec_id")
     assert st["appended"] == 5 - doomed_new
@@ -1206,7 +1206,7 @@ def test_maintain_ivf_index_update_same_id(spark, tmp_path):
     base_n = S.read_ivf_postings(spark, tdir).count()
     n_upd = dv_update_where(
         spark, tdir, {"embedding": "reverse(embedding)"}, "vec_id < 4"
-    )
+    ).rows_matched
     assert n_upd == 4
     st = S.maintain_ivf_index(spark, tdir, id_col="vec_id")
     # one tombstone batch + one copy file: 4 rows out, 4 rows in
@@ -1314,7 +1314,7 @@ def test_maintain_ivf_index_empties_whole_cell(spark, tmp_path):
     ids = [r[0] for r in postings.where(f"cell = {cell}").select("vec_id").collect()]
     n = dv_delete_where(
         spark, tdir, "vec_id IN (" + ",".join(map(str, ids)) + ")"
-    )
+    ).rows_matched
     assert n == len(ids)
     st = S.maintain_ivf_index(spark, tdir, id_col="vec_id")
     assert st["removed"] == n
@@ -1346,7 +1346,7 @@ def test_maintain_ivf_index_concurrent_maintainers(spark, tmp_path):
     tdir = str(tmp_path / "emb_ivf_race")
     emb.write.parquet(tdir)
     S.build_ivf_index(spark, tdir, id_col="vec_id")
-    n_del = dv_delete_where(spark, tdir, "vec_id % 11 = 4")
+    n_del = dv_delete_where(spark, tdir, "vec_id % 11 = 4").rows_matched
     assert n_del > 0
     with ThreadPoolExecutor(max_workers=2) as ex:
         futs = [
@@ -1418,7 +1418,7 @@ def test_maintain_ivf_index_size_gates_tombstone_broadcast(
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        n_del = dv_delete_where(spark, tdir, "vec_id % 2 = 0")
+        n_del = dv_delete_where(spark, tdir, "vec_id % 2 = 0").rows_matched
         assert n_del > 0
         st = S.maintain_ivf_index(spark, tdir, id_col="vec_id")
         assert st["removed"] == n_del
@@ -1430,7 +1430,7 @@ def test_maintain_ivf_index_size_gates_tombstone_broadcast(
     assert postings.where("vec_id % 2 = 0").count() == 0
 
     # trickle delete at the default threshold: the hint stays on
-    n_del2 = dv_delete_where(spark, tdir, "vec_id = 1")
+    n_del2 = dv_delete_where(spark, tdir, "vec_id = 1").rows_matched
     assert n_del2 == 1
     st = S.maintain_ivf_index(spark, tdir, id_col="vec_id")
     assert st["removed"] == 1
@@ -1746,7 +1746,7 @@ def test_maintain_ivfpq_index_folds_appends_and_deletes(spark, tmp_path):
         )
         assert got == want and got
 
-    n_del = dv_delete_where(spark, tdir, "vec_id % 7 = 3")
+    n_del = dv_delete_where(spark, tdir, "vec_id % 7 = 3").rows_matched
     assert n_del > 0
     with _pytest.raises(ValueError, match="STALE"):
         PQ.ivfpq_search_indexed(spark, tdir, n_queries=6, k=4)
@@ -1770,7 +1770,7 @@ def test_maintain_ivfpq_index_folds_appends_and_deletes(spark, tmp_path):
     emb.where("vec_id < 5").selectExpr(
         "vec_id + 1000000 AS vec_id", "embedding", "label"
     ).write.mode("append").parquet(tdir)
-    n_del2 = dv_delete_where(spark, tdir, "vec_id % 7 = 5")
+    n_del2 = dv_delete_where(spark, tdir, "vec_id % 7 = 5").rows_matched
     st = PQ.maintain_ivfpq_index(spark, tdir, id_col="vec_id")
     assert st["appended"] == 4 and st["removed"] == n_del2 - 1
     postings = spark.read.parquet(f"{root}/postings")
@@ -1809,7 +1809,7 @@ def test_maintain_ivfpq_index_concurrent_maintainers(spark, tmp_path):
     tdir = str(tmp_path / "emb_ivfpq_race")
     emb.write.parquet(tdir)
     PQ.build_ivfpq_index(spark, tdir, id_col="vec_id")
-    n_del = dv_delete_where(spark, tdir, "vec_id % 11 = 4")
+    n_del = dv_delete_where(spark, tdir, "vec_id % 11 = 4").rows_matched
     assert n_del > 0
     with ThreadPoolExecutor(max_workers=2) as ex:
         futs = [

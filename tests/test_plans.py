@@ -363,7 +363,7 @@ def test_table_storage_report_dv_dead_fraction(spark, tmp_path):
     tombstoned rows, DV batches, versions, and the materialize hint once
     the dead fraction crosses 10% — metadata-only (footer counts)."""
     from sql_query_optimizer_cpp_spark.operators.mor import dv_delete_where
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
     )
     from sql_query_optimizer_cpp_spark.plans.cost import (

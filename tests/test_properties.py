@@ -236,13 +236,12 @@ def test_cow_dml_equals_algebraic_fold(spark, mode, rows, lo, span, upd):
     — in both modes of the one commit loop."""
     import tempfile
 
-    from sql_query_optimizer_cpp_spark.operators import mutate as m
-
-    delete_where, update_where = (
-        (m.delete_where, m.update_where)
-        if mode == "locked"
-        else (m.occ_delete_where, m.occ_update_where)
+    from sql_query_optimizer_cpp_spark.operators.mutate import (
+        delete_where,
+        update_where,
     )
+
+    occ = mode == "optimistic"
 
     df = spark.createDataFrame(
         [(i, k, v) for i, (k, v) in enumerate(rows)], "id long, k long, v long"
@@ -252,8 +251,11 @@ def test_cow_dml_equals_algebraic_fold(spark, mode, rows, lo, span, upd):
         df.repartitionByRange(3, "k").write.parquet(path)
         del_pred = f"v >= {lo} AND v < {lo + span}"
         upd_pred = f"k >= {upd}"
-        delete_where(spark, path, del_pred)
-        update_where(spark, path, {"v": "coalesce(v, 0) + 1000"}, upd_pred)
+        delete_where(spark, path, del_pred, optimistic=occ)
+        update_where(
+            spark, path, {"v": "coalesce(v, 0) + 1000"}, upd_pred,
+            optimistic=occ,
+        )
         got = {
             (r.id, r.k, r.v) for r in spark.read.parquet(path).collect()
         }
@@ -296,7 +298,7 @@ _FRAG = st.lists(st.one_of(_LITERAL, _CODE), min_size=1, max_size=4).map(
 @given(frags=st.lists(_FRAG, min_size=1, max_size=5))
 @settings(max_examples=100, deadline=None)
 def test_split_depth0_recovers_fragments(frags):
-    from sql_query_optimizer_cpp_spark.operators.mutate import _split_depth0
+    from sql_query_optimizer_cpp_spark.operators.dml_sql import _split_depth0
 
     text = ",".join(frags)
     assert _split_depth0(text) == frags
@@ -305,7 +307,7 @@ def test_split_depth0_recovers_fragments(frags):
 @given(expr=_FRAG)
 @settings(max_examples=100, deadline=None)
 def test_segments_roundtrip_and_literal_opacity(expr):
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.dml_sql import (
         _alias_rewrite,
         _segments,
     )
@@ -326,9 +328,7 @@ def test_segments_roundtrip_and_literal_opacity(expr):
 @given(frags=st.lists(_FRAG, min_size=1, max_size=3), where=_FRAG)
 @settings(max_examples=100, deadline=None)
 def test_find_top_where_ignores_literal_where(frags, where):
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        _find_top_where,
-    )
+    from sql_query_optimizer_cpp_spark.operators.dml_sql import _find_top_where
 
     body = ",".join(frags)
     with_where = f"{body} WHERE {where}"
@@ -425,17 +425,14 @@ def test_mor_dml_equals_algebraic_fold(
     modes of the one commit loop."""
     import tempfile
 
-    from sql_query_optimizer_cpp_spark.operators import mor
     from sql_query_optimizer_cpp_spark.operators.mor import (
+        dv_delete_where,
+        dv_update_where,
         materialize_deletes,
         read_mor,
     )
 
-    dv_delete_where, dv_update_where = (
-        (mor.dv_delete_where, mor.dv_update_where)
-        if mode == "locked"
-        else (mor.occ_dv_delete_where, mor.occ_dv_update_where)
-    )
+    occ = mode == "optimistic"
 
     df = spark.createDataFrame(
         [(i, k, v) for i, (k, v) in enumerate(rows)], "id long, k long, v long"
@@ -445,8 +442,11 @@ def test_mor_dml_equals_algebraic_fold(
         df.repartitionByRange(3, "k").write.parquet(path)
         del_pred = f"v >= {lo} AND v < {lo + span}"
         upd_pred = f"k >= {upd}"
-        dv_delete_where(spark, path, del_pred)
-        dv_update_where(spark, path, {"v": "coalesce(v, 0) + 1000"}, upd_pred)
+        dv_delete_where(spark, path, del_pred, optimistic=occ)
+        dv_update_where(
+            spark, path, {"v": "coalesce(v, 0) + 1000"}, upd_pred,
+            optimistic=occ,
+        )
         materialize_deletes(spark, path, min_dead_ratio=ratio)
         got = {(r.id, r.k, r.v) for r in read_mor(spark, path).collect()}
     folded = df.where(
@@ -546,7 +546,7 @@ def test_mor_versioned_history_matches_model(spark, rows, ops):
         dv_update_where,
         materialize_deletes,
     )
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
         read_changes,
         read_version,
@@ -581,7 +581,7 @@ def test_mor_versioned_history_matches_model(spark, rows, ops):
         for op, arg in ops:
             cur = states[-1]
             if op == "delete":
-                n = dv_delete_where(spark, path, f"v >= {arg}")
+                n = dv_delete_where(spark, path, f"v >= {arg}").rows_matched
                 nxt = model_delete(cur, arg)
                 assert n == len(cur) - len(nxt)
                 if n:
@@ -590,7 +590,7 @@ def test_mor_versioned_history_matches_model(spark, rows, ops):
                 n = dv_update_where(
                     spark, path, {"v": "coalesce(v, 0) + 1000"},
                     f"k >= {arg}",
-                )
+                ).rows_matched
                 if n:
                     states.append(model_update(cur, arg))
             elif op == "merge":
@@ -682,11 +682,13 @@ def test_retention_vacuum_preserves_kept_versions(spark, rows, muts, keep_last):
 
     from sql_query_optimizer_cpp_spark.operators.mutate import (
         delete_where,
+        update_where,
+    )
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         drop_versions_before,
         enable_versioning,
         read_version,
         table_versions,
-        update_where,
         vacuum,
     )
 

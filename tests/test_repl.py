@@ -518,7 +518,7 @@ def test_engine_sql_at_reads_deletion_vector_versions(engine, spark, tmp_path):
     unification): a version committed by dv_delete time-travels with the
     tombstones applied — no resurrection through the textual path."""
     from sql_query_optimizer_cpp_spark.operators.mor import dv_delete_where
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         enable_versioning,
     )
 
@@ -714,7 +714,7 @@ def test_repl_ivf_verbs(engine, tmp_path):
     # folds the tombstones in by row identity
     from sql_query_optimizer_cpp_spark.operators.mor import dv_delete_where
 
-    n_del = dv_delete_where(engine.spark, path, "vec_id % 9 = 2")
+    n_del = dv_delete_where(engine.spark, path, "vec_id % 9 = 2").rows_matched
     assert n_del > 0
     assert "error:" in handle(engine, "IVF e REFRESH", tables)
     out = handle(engine, "IVF e MAINTAIN", tables)
@@ -762,8 +762,8 @@ def test_repl_commit_failure_keeps_handle(engine, tmp_path):
 def test_repl_recover_verb(engine, tmp_path):
     """RECOVER rolls a crashed transaction (stale lock + uncommitted live
     state, no in-process handle) back to the last committed manifest."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        _ACTIVE_TXNS,
+    from sql_query_optimizer_cpp_spark.operators.mutate import _ACTIVE_TXNS
+    from sql_query_optimizer_cpp_spark.operators.versioning import (
         table_versions,
     )
     from sql_query_optimizer_cpp_spark.operators.txn import begin

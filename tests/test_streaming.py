@@ -377,7 +377,7 @@ def test_apply_changes_null_ts_seed_rows_updatable(tmp_path, spark):
 def test_apply_changes_optimistic_concurrent_appliers(tmp_path, spark):
     """Two CDC appliers (one per upstream shard) maintain ONE table
     CONCURRENTLY via apply_changes_batch(optimistic=True): disjoint-key
-    batches racing through occ_merge_into must both commit — the loser
+    batches racing through optimistic merge_into must both commit — the loser
     retries against the winner's committed state — and the final table
     equals applying both batches in any order."""
     from concurrent.futures import ThreadPoolExecutor
@@ -521,7 +521,7 @@ def test_stream_ann_ingest_maintains_ivf_index(tmp_path, spark):
         .where("vec_id >= 5")
         .first()["vec_id"]
     )
-    assert dv_delete_where(spark, tdir, f"vec_id = {victim}") == 1
+    assert dv_delete_where(spark, tdir, f"vec_id = {victim}").rows_matched == 1
     emb.where(F.col("vec_id") < 3).selectExpr(
         "vec_id + 7000000 AS vec_id", "embedding"
     ).repartition(1).write.mode("append").parquet(src)

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from sql_query_optimizer_cpp_spark.operators import mutate as m
+from sql_query_optimizer_cpp_spark.operators import mutate as m, versioning
 from sql_query_optimizer_cpp_spark.operators.mor import (
     dv_count,
     dv_delete_where,
@@ -27,7 +27,7 @@ def _table(spark, tmp_path, name="txn_t", n=60):
         .repartitionByRange(3, "k")
         .write.parquet(path)
     )
-    m.enable_versioning(spark, path)  # v1
+    versioning.enable_versioning(spark, path)  # v1
     return path
 
 
@@ -47,19 +47,19 @@ def test_txn_batch_commits_one_version_with_composed_cdc(spark, tmp_path):
         m.merge_into(spark, path, src, on=["k"], matched_set={"v": "src_v"},
                      insert_values={"v": "src_v"})
         # mid-batch: bare reads see progress, version readers do not
-        assert m.table_versions(spark, path) == [1]
+        assert versioning.table_versions(spark, path) == [1]
         assert txn.verbs_executed == 3
     # ONE commit for the whole batch
-    assert m.table_versions(spark, path) == [1, 2]
+    assert versioning.table_versions(spark, path) == [1, 2]
     after = spark.read.parquet(path)
     assert after.where("k = 0").first()["v"] == 100.0
     assert after.where("k = 59").count() == 0
     assert after.where("k = 10").first()["v"] == 10.5
     assert after.where("k = 1000").first()["v"] == -1.0
     # time travel still sees the pre-batch table
-    assert _rows(m.read_version(spark, path, 1)) == before
+    assert _rows(versioning.read_version(spark, path, 1)) == before
     # CDC over the single version IS the composed diff
-    ch = m.read_changes(spark, path, 1, 2)
+    ch = versioning.read_changes(spark, path, 1, 2)
     ins = {tuple(r) for r in
            ch.where("_change_type = 'insert'").select("k", "v").collect()}
     dele = {tuple(r) for r in
@@ -79,7 +79,7 @@ def test_txn_net_update_then_delete_is_one_delete(spark, tmp_path):
     with begin(spark, path):
         m.update_where(spark, path, {"v": "999.0"}, "k = 7")
         m.delete_where(spark, path, "k = 7")
-    ch = m.read_changes(spark, path, 1, 2)
+    ch = versioning.read_changes(spark, path, 1, 2)
     rows = [(r["_change_type"], r["k"], r["v"]) for r in ch.collect()]
     assert ("delete", 7, 7 % 5 * 1.0) in rows
     assert not any(r[2] == 999.0 for r in rows)
@@ -97,10 +97,10 @@ def test_txn_rollback_byte_identical(spark, tmp_path):
     assert changed > 0
     assert sorted(m.list_data_files(spark, path, recursive=True)) == files0
     assert _rows(spark.read.parquet(path)) == before
-    assert m.table_versions(spark, path) == [1]  # nothing committed
+    assert versioning.table_versions(spark, path) == [1]  # nothing committed
     # lock released: normal DML works again (and commits v2)
     m.delete_where(spark, path, "k = 0")
-    assert m.table_versions(spark, path) == [1, 2]
+    assert versioning.table_versions(spark, path) == [1, 2]
 
 
 def test_txn_context_manager_rolls_back_on_exception(spark, tmp_path):
@@ -111,7 +111,7 @@ def test_txn_context_manager_rolls_back_on_exception(spark, tmp_path):
             m.update_where(spark, path, {"v": "1.0"}, "k = 1")
             raise RuntimeError("boom")
     assert _rows(spark.read.parquet(path)) == before
-    assert m.table_versions(spark, path) == [1]
+    assert versioning.table_versions(spark, path) == [1]
 
 
 def test_txn_noop_batch_commits_nothing(spark, tmp_path):
@@ -119,7 +119,7 @@ def test_txn_noop_batch_commits_nothing(spark, tmp_path):
     txn = begin(spark, path)
     m.update_where(spark, path, {"v": "9.9"}, "k = -1")  # matches nothing
     assert txn.commit() is None
-    assert m.table_versions(spark, path) == [1]
+    assert versioning.table_versions(spark, path) == [1]
     with pytest.raises(RuntimeError, match="already committed"):
         txn.commit()
 
@@ -138,18 +138,18 @@ def test_txn_guards(spark, tmp_path):
             begin(spark, path)
         # optimistic verbs refused (their exclusivity assumption is void)
         with pytest.raises(RuntimeError, match="optimistic DML"):
-            m.occ_update_where(spark, path, {"v": "1.0"}, "k = 1")
+            m.update_where(spark, path, {"v": "1.0"}, "k = 1", optimistic=True)
         src = spark.createDataFrame([(1, 2.0)], "k long, v double")
         with pytest.raises(RuntimeError, match="optimistic DML"):
-            m.occ_merge_into(spark, path, src, on=["k"],
-                             matched_set={"v": "src_v"})
+            m.merge_into(spark, path, src, on=["k"],
+                             matched_set={"v": "src_v"}, optimistic=True)
         # maintenance verbs refused
         with pytest.raises(RuntimeError, match="vacuum refused"):
-            m.vacuum(spark, path)
+            versioning.vacuum(spark, path)
         with pytest.raises(RuntimeError, match="restore_version refused"):
-            m.restore_version(spark, path, 1)
+            versioning.restore_version(spark, path, 1)
         with pytest.raises(RuntimeError, match="drop_versions_before"):
-            m.drop_versions_before(spark, path)
+            versioning.drop_versions_before(spark, path)
         # a DIFFERENT thread is still locked out (reentrancy is per-owner)
         import threading
 
@@ -175,13 +175,13 @@ def test_txn_mor_verbs_and_rollback(spark, tmp_path):
     with begin(spark, path):
         m.update_where(spark, path, {"v": "v + 1"}, "k = 0")
         dv_delete_where(spark, path, "k = 5")
-    assert m.table_versions(spark, path) == [1, 2]
+    assert versioning.table_versions(spark, path) == [1, 2]
     assert has_deletion_vectors(spark, path)
     out = read_mor(spark, path)
     assert out.where("k = 5").count() == 0
     assert out.where("k = 0").first()["v"] == 1.0
     # the committed manifest pins the DV batch: CDC shows both changes
-    ch = m.read_changes(spark, path, 1, 2)
+    ch = versioning.read_changes(spark, path, 1, 2)
     assert ch.where("_change_type = 'delete' AND k = 5").count() == 1
     # now a second txn rolled back: DVs return to the committed state
     txn = begin(spark, path)
@@ -211,10 +211,10 @@ def test_recover_table_after_crash(spark, tmp_path):
     assert changed > 0
     assert _rows(spark.read.parquet(path)) == before
     assert sorted(m.list_data_files(spark, path, recursive=True)) == files0
-    assert m.table_versions(spark, path) == [1]
+    assert versioning.table_versions(spark, path) == [1]
     # lock removed: normal DML works
     m.delete_where(spark, path, "k = 0")
-    assert m.table_versions(spark, path) == [1, 2]
+    assert versioning.table_versions(spark, path) == [1, 2]
 
 
 def test_recover_refuses_open_txn(spark, tmp_path):
@@ -237,7 +237,7 @@ def test_txn_refuses_create_snapshot_and_commit_failure_keeps_handle(
     with begin(spark, path) as txn:
         m.update_where(spark, path, {"v": "1.0"}, "k = 1")
         with pytest.raises(RuntimeError, match="create_snapshot refused"):
-            m.create_snapshot(spark, path, "mid")
+            versioning.create_snapshot(spark, path, "mid")
         # manifest write blows up -> commit fails but the txn stays open
         import sql_query_optimizer_cpp_spark.operators.txn as txn_mod
 
@@ -265,7 +265,7 @@ def test_txn_refuses_create_snapshot_and_commit_failure_keeps_handle(
         monkeypatch.undo()
         txn.rollback()  # still possible: full undo
     assert _rows(spark.read.parquet(path)) == before
-    assert m.table_versions(spark, path) == [1]
+    assert versioning.table_versions(spark, path) == [1]
 
 
 # -- multi-table transactions (r11) ------------------------------------------
@@ -284,23 +284,23 @@ def test_multi_txn_one_version_per_table_atomic(spark, tmp_path):
         m.delete_where(spark, facts, "k = 59")
         m.update_where(spark, dims, {"v": "-1.0"}, "k = 7")
         # mid-batch: no version committed anywhere
-        assert m.table_versions(spark, facts) == [1]
-        assert m.table_versions(spark, dims) == [1]
+        assert versioning.table_versions(spark, facts) == [1]
+        assert versioning.table_versions(spark, dims) == [1]
         assert txn.verbs_executed == 3
-    assert m.table_versions(spark, facts) == [1, 2]
-    assert m.table_versions(spark, dims) == [1, 2]
+    assert versioning.table_versions(spark, facts) == [1, 2]
+    assert versioning.table_versions(spark, dims) == [1, 2]
     assert spark.read.parquet(facts).where("k = 0").first()["v"] == 100.0
     assert spark.read.parquet(dims).where("k = 7").first()["v"] == -1.0
     # time travel: both tables' v1 is the pre-batch state
-    assert _rows(m.read_version(spark, facts, 1)) == before_f
-    ch = m.read_changes(spark, facts, 1, 2)
+    assert _rows(versioning.read_version(spark, facts, 1)) == before_f
+    ch = versioning.read_changes(spark, facts, 1, 2)
     assert ch.where("_change_type = 'delete' AND k = 59").count() == 1
     # explicit commit returns the version map
     t2 = begin_multi(spark, [facts, dims])
     m.delete_where(spark, facts, "k = 58")
     got = t2.commit()
     assert got == {facts: 3}  # dims untouched: no version, no entry
-    assert m.table_versions(spark, dims) == [1, 2]
+    assert versioning.table_versions(spark, dims) == [1, 2]
 
 
 def test_multi_txn_rollback_restores_every_table(spark, tmp_path):
@@ -319,8 +319,8 @@ def test_multi_txn_rollback_restores_every_table(spark, tmp_path):
             raise RuntimeError("boom")
     assert _rows(spark.read.parquet(a)) == rows_a
     assert _rows(spark.read.parquet(b)) == rows_b
-    assert m.table_versions(spark, a) == [1]
-    assert m.table_versions(spark, b) == [1]
+    assert versioning.table_versions(spark, a) == [1]
+    assert versioning.table_versions(spark, b) == [1]
     # locks released: a fresh transaction opens fine
     with begin_multi(spark, [a, b]) as t:
         assert t.active
@@ -350,10 +350,10 @@ def test_multi_txn_guards(spark, tmp_path):
             begin_multi(spark, [b])
         # OCC verbs refuse inside, same as single-table
         with pytest.raises(RuntimeError, match="transaction"):
-            m.occ_delete_where(spark, a, "k = 1")
+            m.delete_where(spark, a, "k = 1", optimistic=True)
         # no-op commit: nothing committed anywhere
-    assert m.table_versions(spark, a) == [1]
-    assert m.table_versions(spark, b) == [1]
+    assert versioning.table_versions(spark, a) == [1]
+    assert versioning.table_versions(spark, b) == [1]
 
 
 def test_multi_txn_crash_before_marker_rolls_back(spark, tmp_path):
@@ -380,8 +380,8 @@ def test_multi_txn_crash_before_marker_rolls_back(spark, tmp_path):
     recover_tables(spark, [a, b], force=True)
     assert _rows(spark.read.parquet(a)) == rows_a
     assert _rows(spark.read.parquet(b)) == rows_b
-    assert m.table_versions(spark, a) == [1]
-    assert m.table_versions(spark, b) == [1]
+    assert versioning.table_versions(spark, a) == [1]
+    assert versioning.table_versions(spark, b) == [1]
     # locks cleared: fresh txn opens
     with begin_multi(spark, [a, b]):
         pass
@@ -417,13 +417,13 @@ def test_multi_txn_crash_after_marker_rolls_forward(
         txn_mod.recover_table(spark, other, force=True)
     txn_mod.recover_tables(spark, [a, b], force=True)
     # rolled FORWARD: both versions committed, batch state live
-    assert m.table_versions(spark, a) == [1, 2]
-    assert m.table_versions(spark, b) == [1, 2]
+    assert versioning.table_versions(spark, a) == [1, 2]
+    assert versioning.table_versions(spark, b) == [1, 2]
     assert spark.read.parquet(a).where("k < 10").count() == 0
     assert spark.read.parquet(b).where("v = 9.9").count() == 5
     # marker + preps gone; recovery is idempotent
     txn_mod.recover_tables(spark, [a, b], force=True)
-    assert m.table_versions(spark, a) == [1, 2]
+    assert versioning.table_versions(spark, a) == [1, 2]
 
 
 def test_recover_tables_partial_set_refuses_prep_debris(
@@ -454,8 +454,8 @@ def test_recover_tables_partial_set_refuses_prep_debris(
         txn_mod.recover_tables(spark, [member], force=True)
     # the decided commit is intact: full-set recovery rolls forward
     txn_mod.recover_tables(spark, [a, b], force=True)
-    assert m.table_versions(spark, a) == [1, 2]
-    assert m.table_versions(spark, b) == [1, 2]
+    assert versioning.table_versions(spark, a) == [1, 2]
+    assert versioning.table_versions(spark, b) == [1, 2]
 
 
 def test_recover_tables_two_independent_crashes(spark, tmp_path, monkeypatch):
@@ -484,7 +484,7 @@ def test_recover_tables_two_independent_crashes(spark, tmp_path, monkeypatch):
     crash_commit([c, d])
     txn_mod.recover_tables(spark, [a, b, c, d], force=True)
     for p in (a, b, c, d):
-        assert m.table_versions(spark, p) == [1, 2], p
+        assert versioning.table_versions(spark, p) == [1, 2], p
         assert spark.read.parquet(p).where("k < 5").count() == 0
 
 
@@ -508,7 +508,7 @@ def test_recover_tables_pre_decision_preps_need_assume_undecided(
         txn_mod.recover_tables(spark, [a])
     txn_mod.recover_tables(spark, [a], assume_undecided=True)
     assert not txn_mod._list_prep_debris(spark, a)
-    assert m.table_versions(spark, a) == [1]
+    assert versioning.table_versions(spark, a) == [1]
 
 
 def test_rollback_only_latch(spark, tmp_path, monkeypatch):
@@ -540,7 +540,7 @@ def test_rollback_only_latch(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     txn.rollback()
     for p in (a, b):
-        assert m.table_versions(spark, p) == [1]
+        assert versioning.table_versions(spark, p) == [1]
         assert spark.read.parquet(p).count() == 60
     # single-table latch too
     t1 = txn_mod.begin(spark, a)

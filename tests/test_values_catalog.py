@@ -176,7 +176,7 @@ def test_load_tables_relists_after_materialize_deletes(spark, tmp_path):
     )
 
     sf_dir, path = _memo_fixture(spark, tmp_path)
-    assert dv_delete_where(spark, path, "n_nationkey < 5") == 5
+    assert dv_delete_where(spark, path, "n_nationkey < 5").rows_matched == 5
     pinned = _nation(spark, sf_dir)
     assert pinned.count() == 25  # base scan: tombstones not applied
     st = materialize_deletes(spark, path)
@@ -191,12 +191,12 @@ def test_load_tables_relists_after_transaction_rollback(spark, tmp_path):
     """A rollback deletes the files the batch created and brings the
     retired ones back: a definition memoized mid-transaction is pinned to
     the deleted files and must not be served afterwards."""
-    from sql_query_optimizer_cpp_spark.operators import mutate as m
+    from sql_query_optimizer_cpp_spark.operators import mutate as m, versioning
     from sql_query_optimizer_cpp_spark.operators.txn import begin
 
     sf_dir, path = _memo_fixture(spark, tmp_path)
     rows_before = sorted(map(tuple, _nation(spark, sf_dir).collect()))
-    m.enable_versioning(spark, path)
+    versioning.enable_versioning(spark, path)
     txn = begin(spark, path)
     m.delete_where(spark, path, "n_nationkey < 5")
     pinned = _nation(spark, sf_dir)

@@ -11,7 +11,7 @@ from collections import Counter
 
 import pytest
 
-from sql_query_optimizer_cpp_spark.operators import mutate as m
+from sql_query_optimizer_cpp_spark.operators import mutate as m, versioning
 from sql_query_optimizer_cpp_spark.operators.mor import (
     dv_delete_where,
     materialize_deletes,
@@ -68,16 +68,20 @@ def test_read_changes_dv_range_builds_in_three_jobs(spark, tmp_path):
     and pruned deletion-vector batches, rewritten and kept files): the
     frame builds with one schema job and one bounded collect."""
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     v1 = _rows(read_mor(spark, path))
-    assert dv_delete_where(spark, path, "k < 5") == 5                # v2
-    assert dv_delete_where(spark, path, "k IN (60, 61)") == 2        # v3
+    assert dv_delete_where(spark, path, "k < 5").rows_matched == 5   # v2
+    assert dv_delete_where(
+        spark, path, "k IN (60, 61)"
+    ).rows_matched == 2  # v3
     # the k < 5 file is 20% dead and graduates; the k = 60 file (8%)
     # keeps its vectors in a pruned batch
     st = materialize_deletes(spark, path, min_dead_ratio=0.1)        # v4
     assert st.files_rewritten == 1
     v4 = _rows(read_mor(spark, path))
-    df, jobs = _build_jobs(spark, lambda: m.read_changes(spark, path, 1, 4))
+    df, jobs = _build_jobs(
+        spark, lambda: versioning.read_changes(spark, path, 1, 4)
+    )
     assert jobs <= 3
     got = _changes(df)
     assert got == _net(v1, v4)
@@ -86,12 +90,14 @@ def test_read_changes_dv_range_builds_in_three_jobs(spark, tmp_path):
 
 def test_read_changes_cow_range_builds_in_one_job(spark, tmp_path):
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     v1 = _rows(spark.read.parquet(path))
     m.delete_where(spark, path, "k BETWEEN 10 AND 12")               # v2
     m.update_where(spark, path, {"v": "v + 100"}, "k >= 90")         # v3
     v3 = _rows(spark.read.parquet(path))
-    df, jobs = _build_jobs(spark, lambda: m.read_changes(spark, path, 1, 3))
+    df, jobs = _build_jobs(
+        spark, lambda: versioning.read_changes(spark, path, 1, 3)
+    )
     assert jobs <= 1
     assert _changes(df) == _net(v1, v3)
     assert df.count() == 3 + 2 * 10
@@ -103,13 +109,15 @@ def test_read_version_across_retired_batches_builds_in_one_job(
     """Version 1's files end up in the root and in two different
     ``_retired/<batch>/`` dirs; its frame still builds with one job."""
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     v1 = _rows(spark.read.parquet(path))
     m.update_where(spark, path, {"v": "-1.0"}, "k < 3")              # v2
     m.update_where(spark, path, {"v": "-2.0"}, "k BETWEEN 30 AND 31")  # v3
     retired = tmp_path / "t" / m.RETIRED_DIR
     assert len(list(retired.iterdir())) == 2
-    df, jobs = _build_jobs(spark, lambda: m.read_version(spark, path, 1))
+    df, jobs = _build_jobs(
+        spark, lambda: versioning.read_version(spark, path, 1)
+    )
     assert jobs <= 1
     assert _rows(df) == v1
 
@@ -126,16 +134,16 @@ def test_partitioned_dv_reads_keep_partition_columns(spark, tmp_path):
         .parquet(path)
     )
     cols = ("k", "v", "p")
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     v1 = _rows(spark.read.parquet(path), cols)
     m.update_where(spark, path, {"v": "v + 1"}, "p = 0 AND k < 9")   # v2
     dv_delete_where(spark, path, "k IN (1, 2, 4)")                   # v3
     v3 = _rows(read_mor(spark, path), cols)
     assert (tmp_path / "part" / m.RETIRED_DIR).exists()
-    old = m.read_version(spark, path, 1)
+    old = versioning.read_version(spark, path, 1)
     assert "p" in old.columns
     assert _rows(old, cols) == v1
-    ch = m.read_changes(spark, path, 1, 3)
+    ch = versioning.read_changes(spark, path, 1, 3)
     assert set(ch.columns) == {"_change_type", *cols}
     assert _changes(ch, cols) == _net(v1, v3)
     deleted = {
@@ -153,13 +161,13 @@ def test_read_changes_across_a_widening_evolution(spark, tmp_path):
     spark.range(20).selectExpr(
         "CAST(id AS int) AS k", "CAST(id AS int) AS v"
     ).repartition(2).write.parquet(path)
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     src = spark.createDataFrame([(5, 5_000_000_000)], "k int, v long")
     m.merge_into(
         spark, path, src, on=["k"], matched_set={"v": "src_v"},
         evolve_schema=True,
     )                                                                # v2
-    ch = m.read_changes(spark, path, 1, 2)
+    ch = versioning.read_changes(spark, path, 1, 2)
     assert dict(ch.dtypes)["v"] == "bigint"
     assert _changes(ch) == [("delete", 5, 5), ("insert", 5, 5_000_000_000)]
 
@@ -178,11 +186,11 @@ def test_materialize_and_restore_keep_unrelated_cached_frames(
     spark, tmp_path, unrelated
 ):
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     dv_delete_where(spark, path, "k < 10")                           # v2
     for call in (
         lambda: materialize_deletes(spark, path),                    # v3
-        lambda: m.restore_version(spark, path, 1),                   # v4
+        lambda: versioning.restore_version(spark, path, 1),          # v4
     ):
         call()
         level = unrelated.storageLevel
@@ -197,7 +205,7 @@ def test_materialize_and_restore_refresh_frames_over_the_table(
     """Frames persisted over the table count the rows each call leaves:
     the base scan and :func:`read_mor` re-list their directories."""
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     dv_delete_where(spark, path, "k < 10")                           # v2
     base = spark.read.parquet(path).persist()
     live = read_mor(spark, path).persist()
@@ -205,7 +213,7 @@ def test_materialize_and_restore_refresh_frames_over_the_table(
         assert (base.count(), live.count()) == (100, 90)
         materialize_deletes(spark, path)                             # v3
         assert (base.count(), live.count()) == (90, 90)
-        m.restore_version(spark, path, 1)                            # v4
+        versioning.restore_version(spark, path, 1)                   # v4
         assert (base.count(), live.count()) == (100, 100)
     finally:
         base.unpersist()
@@ -256,7 +264,7 @@ def test_compact_and_transactions_keep_unrelated_cached_frames(
     spark, tmp_path, unrelated
 ):
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)
+    versioning.enable_versioning(spark, path)
     for name, call, _ in _compact_and_txn_calls(spark, path):
         call()
         level = unrelated.storageLevel
@@ -270,7 +278,7 @@ def test_compact_and_transactions_refresh_frames_over_the_table(
     """A frame persisted over the table counts the rows each call
     leaves, and reads no file the call removed."""
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)
+    versioning.enable_versioning(spark, path)
     base = spark.read.parquet(path).persist()
     try:
         assert base.count() == 100
@@ -310,36 +318,28 @@ def parquet_read_jobs(spark, monkeypatch):
 
 
 def _verb(verb, mode):
-    """One statement of ``verb`` in ``mode``, as ``fn(spark, path, i)``
-    (``i`` varies the keys so repeated calls all match rows)."""
-    from sql_query_optimizer_cpp_spark.operators import mor, occ
+    """One statement of ``verb`` in ``mode`` (``occ``: copy-on-write with
+    ``optimistic=True``), as ``fn(spark, path, i)`` (``i`` varies the
+    keys so repeated calls all match rows)."""
+    from sql_query_optimizer_cpp_spark.operators import mor
 
-    def source(spark, i):
-        return spark.createDataFrame(
+    name = {"update": "update_where", "delete": "delete_where"}.get(
+        verb, "merge_into"
+    )
+    fn = getattr(mor, f"dv_{name}") if mode == "mor" else getattr(m, name)
+    kw = {"optimistic": mode == "occ"}
+
+    def run(s, p, i):
+        if verb == "update":
+            return fn(s, p, {"v": "v + 1"}, f"k = {10 * i}", **kw)
+        if verb == "delete":
+            return fn(s, p, f"k = {10 * i + 2}", **kw)
+        src = s.createDataFrame(
             [(10 * i + 1, 0.5), (1000 + i, 1.5)], "k long, v double"
         )
+        return fn(s, p, src, ["k"], matched_set={"v": "src_v"}, **kw)
 
-    table = {
-        ("update", "cow"): lambda s, p, i: m.update_where(
-            s, p, {"v": "v + 1"}, f"k = {10 * i}"),
-        ("update", "occ"): lambda s, p, i: occ.occ_update_where(
-            s, p, {"v": "v + 1"}, f"k = {10 * i}"),
-        ("update", "mor"): lambda s, p, i: mor.dv_update_where(
-            s, p, {"v": "v + 1"}, f"k = {10 * i}"),
-        ("delete", "cow"): lambda s, p, i: m.delete_where(
-            s, p, f"k = {10 * i + 2}"),
-        ("delete", "occ"): lambda s, p, i: occ.occ_delete_where(
-            s, p, f"k = {10 * i + 2}"),
-        ("delete", "mor"): lambda s, p, i: mor.dv_delete_where(
-            s, p, f"k = {10 * i + 2}"),
-        ("merge", "cow"): lambda s, p, i: m.merge_into(
-            s, p, source(s, i), ["k"], matched_set={"v": "src_v"}),
-        ("merge", "occ"): lambda s, p, i: occ.occ_merge_into(
-            s, p, source(s, i), ["k"], matched_set={"v": "src_v"}),
-        ("merge", "mor"): lambda s, p, i: mor.dv_merge_into(
-            s, p, source(s, i), ["k"], matched_set={"v": "src_v"}),
-    }
-    return table[(verb, mode)]
+    return run
 
 
 @pytest.mark.parametrize("mode", ["cow", "occ", "mor"])
@@ -351,7 +351,7 @@ def test_warm_commit_fires_no_inference_job(
     footers are in the session memo, a commit reads every schema from
     it — no job fires inside a parquet read."""
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)
+    versioning.enable_versioning(spark, path)
     run = _verb(verb, mode)
     run(spark, path, 1)  # warm: this commit's own files are new to it
     parquet_read_jobs.clear()
@@ -377,18 +377,22 @@ def test_warm_version_and_change_reads_build_without_a_job(spark, tmp_path):
     frames build with no job (the DV range keeps its one bounded
     collect, which is not a parquet read)."""
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     v1 = _rows(spark.read.parquet(path))
     m.update_where(spark, path, {"v": "-1.0"}, "k < 3")              # v2
     m.update_where(spark, path, {"v": "-2.0"}, "k BETWEEN 30 AND 31")  # v3
     assert len(list((tmp_path / "t" / m.RETIRED_DIR).iterdir())) == 2
     v3 = _rows(spark.read.parquet(path))
-    _rows(m.read_version(spark, path, 1))
-    _rows(m.read_changes(spark, path, 1, 3))
-    df, jobs = _build_jobs(spark, lambda: m.read_version(spark, path, 1))
+    _rows(versioning.read_version(spark, path, 1))
+    _rows(versioning.read_changes(spark, path, 1, 3))
+    df, jobs = _build_jobs(
+        spark, lambda: versioning.read_version(spark, path, 1)
+    )
     assert jobs == 0
     assert _rows(df) == v1
-    df, jobs = _build_jobs(spark, lambda: m.read_changes(spark, path, 1, 3))
+    df, jobs = _build_jobs(
+        spark, lambda: versioning.read_changes(spark, path, 1, 3)
+    )
     assert jobs == 0
     assert _changes(df) == _net(v1, v3)
 
@@ -397,13 +401,13 @@ def test_warm_dv_change_feed_fires_no_inference_job(
     spark, tmp_path, parquet_read_jobs
 ):
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     v1 = _rows(read_mor(spark, path))
     dv_delete_where(spark, path, "k < 5")                            # v2
     v2 = _rows(read_mor(spark, path))
-    _rows(m.read_changes(spark, path, 1, 2))
+    _rows(versioning.read_changes(spark, path, 1, 2))
     parquet_read_jobs.clear()
-    df = m.read_changes(spark, path, 1, 2)
+    df = versioning.read_changes(spark, path, 1, 2)
     assert parquet_read_jobs and sum(parquet_read_jobs) == 0
     assert _changes(df) == _net(v1, v2)
 
@@ -429,11 +433,11 @@ def _change_ranges(spark, tmp_path):
     """A copy-on-write and a merge-on-read table, each with a committed
     range to diff."""
     cow = _table(spark, tmp_path, "cow")
-    m.enable_versioning(spark, cow)
+    versioning.enable_versioning(spark, cow)
     m.update_where(spark, cow, {"v": "v + 100"}, "k >= 90")
     m.delete_where(spark, cow, "k BETWEEN 10 AND 12")
     mor_ = _table(spark, tmp_path, "mor")
-    m.enable_versioning(spark, mor_)
+    versioning.enable_versioning(spark, mor_)
     dv_delete_where(spark, mor_, "k < 5")
     materialize_deletes(spark, mor_)
     dv_delete_where(spark, mor_, "k BETWEEN 50 AND 52")
@@ -444,7 +448,7 @@ def test_small_change_feed_diffs_in_one_task(spark, tmp_path):
     """Touched files within the one-task bound (1 MB listed): no shuffle
     below the diff aggregate, and the whole diff is one task."""
     for path, lo, hi in _change_ranges(spark, tmp_path):
-        df = m.read_changes(spark, path, lo, hi)
+        df = versioning.read_changes(spark, path, lo, hi)
         assert _exchanges(df) == []
         assert df.rdd.getNumPartitions() == 1
 
@@ -460,13 +464,13 @@ def test_change_feed_above_one_split_keeps_its_shuffle(spark, tmp_path, key):
     """Shrinking either conf the one-task bound takes below the touched
     bytes restores the shuffle plan; both plans return the same rows."""
     for path, lo, hi in _change_ranges(spark, tmp_path):
-        small = m.read_changes(spark, path, lo, hi)
+        small = versioning.read_changes(spark, path, lo, hi)
         assert _exchanges(small) == []
         want = _changes(small)
         old = spark.conf.get(key)
         spark.conf.set(key, "1")
         try:
-            big = m.read_changes(spark, path, lo, hi)
+            big = versioning.read_changes(spark, path, lo, hi)
             assert _exchanges(big)
             got = _changes(big)
         finally:
@@ -495,13 +499,13 @@ def test_reader_schema_matches_inference_after_evolution(spark, tmp_path):
     then one that widens a column (every file rewritten): the live
     table, its file sets and an old version's files (now under
     ``_retired/``) read with exactly the schema inference gives."""
-    from sql_query_optimizer_cpp_spark.operators import reader, versioning
+    from sql_query_optimizer_cpp_spark.operators import reader
 
     path = str(tmp_path / "evolved")
     spark.range(40).selectExpr(
         "CAST(id AS int) AS k", "CAST(id AS int) AS v"
     ).repartition(4).write.parquet(path)
-    m.enable_versioning(spark, path)                                 # v1
+    versioning.enable_versioning(spark, path)                        # v1
     add = spark.createDataFrame([(3, 30, "x"), (99, 1, "y")],
                                 "k int, v int, tag string")
     m.merge_into(spark, path, add, ["k"], matched_set={"tag": "src_tag"},
@@ -522,7 +526,7 @@ def test_reader_schema_matches_inference_after_evolution(spark, tmp_path):
     rels = versioning._VersionLog(spark, path).states(2)[2][0]
     pinned = versioning._resolve_pinned_files(spark, path, rels, "v2")
     assert any(versioning.RETIRED_DIR in f.path for f in pinned)
-    assert m.read_version(spark, path, 2).schema.json() == \
+    assert versioning.read_version(spark, path, 2).schema.json() == \
         _inferred_files(spark, [f.path for f in pinned]).json()
 
 
@@ -610,7 +614,7 @@ def test_footer_memo_stays_under_its_bound_across_commits(spark, tmp_path):
     from sql_query_optimizer_cpp_spark.operators import reader
 
     path = _table(spark, tmp_path)
-    m.enable_versioning(spark, path)
+    versioning.enable_versioning(spark, path)
     key = "spark.sql.hive.filesourcePartitionFileCacheSize"
     old = spark.conf.get(key)
     cap = 8000

@@ -137,7 +137,7 @@ def main(n_seeds: int = 10) -> None:
                     mod, rem = rng.randint(5, 23), rng.randint(0, 4)
                     n_del = dv_delete_where(
                         spark, tdir, f"vec_id % {mod} = {rem}"
-                    )
+                    ).rows_matched
                     st = maintain()
                     assert st["removed"] == n_del, (
                         f"seed {seed} step {step}: removed "
@@ -152,7 +152,7 @@ def main(n_seeds: int = 10) -> None:
                         tdir,
                         {"embedding": "reverse(embedding)"},
                         f"vec_id % {mod} = {rem}",
-                    )
+                    ).rows_matched
                     st = maintain()
                     assert st["removed"] == n_upd == st["appended"], (
                         f"seed {seed} step {step}: update maintained "
