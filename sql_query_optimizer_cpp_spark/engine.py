@@ -10,15 +10,18 @@ verbs with Catalyst doing the work:
     eng.dml(text, tables)               # UPDATE/DELETE/MERGE, executed
                                         #   copy-on-write (ref: parse-only)
     eng.explain(text)                   # reference-style plan tree + stats
-    eng.optimize(text)                  # rewrite report WITHOUT executing
+    eng.optimize(text)                  # trace + plan tree WITHOUT executing
                                         #   (= the standalone sqlopt.cpp path)
-    eng.transform_log(text)             # named-rewrite trace (R9)
+    eng.transform_log(text)             # optimizer rules that fired, timed by
+                                        #   Catalyst's planning tracker (R9)
     eng.cost(text)                      # 4-component cost report (§4.2)
     eng.join_order_advice(text)         # genetic join-order recommendation
     eng.analyze(); eng.table_stats(t)   # stats harvest + readback (S4)
 
-Errors surface as Spark AnalysisException with Catalyst's own suggestions
-(the reference's semantic validator warns and suggests via Levenshtein,
+Every verb plans the text through :meth:`Engine.sql`, so what explain,
+trace, cost and advice describe is the query ``sql()`` runs.  Errors surface
+as Spark AnalysisException with Catalyst's own suggestions (the reference's
+semantic validator warns and suggests via Levenshtein,
 ``engine/include/utils.h:23-45``; Spark's analyzer does the same with
 "Did you mean ...?").
 """
@@ -33,7 +36,6 @@ from . import catalog
 from .plans.cost import CostReport, cost_report
 from .plans.explain import explain_full, explain_tree
 from .plans.trace import TransformLog, build_transform_log
-from .rules import rewrite as pre_rewrite
 
 
 @dataclass
@@ -42,22 +44,11 @@ class OptimizeReport:
     the standalone optimizer's output (``sqlopt.cpp:727-798``)."""
 
     original_sql: str
-    rewritten_sql: str
-    pre_rewrites: list[str]
     transform_log: TransformLog
     plan_tree: str
 
     def render(self) -> str:
-        parts = ["=== Optimizer Trace ==="]
-        for name in self.pre_rewrites:
-            parts.append(f"[PreRewrite] {name}")
-        parts.append(str(self.transform_log))
-        parts.append("")
-        parts.append(self.plan_tree)
-        if self.rewritten_sql != self.original_sql:
-            parts.append("")
-            parts.append(f"Rewritten SQL: {self.rewritten_sql}")
-        return "\n".join(parts)
+        return f"{self.transform_log.render()}\n\n{self.plan_tree}"
 
 
 @dataclass
@@ -80,28 +71,17 @@ class JoinOrderAdvice:
 
 
 class Engine:
-    def __init__(
-        self,
-        spark: SparkSession,
-        sf_dir: str | None = None,
-        enable_pre_rewrites: bool = False,
-    ):
+    def __init__(self, spark: SparkSession, sf_dir: str | None = None):
         self.spark = spark
         self.sf_dir = sf_dir
-        self.enable_pre_rewrites = enable_pre_rewrites
         if sf_dir:
             catalog.register_views(spark, sf_dir)
 
     # -- execute ---------------------------------------------------------
     def sql(self, text: str) -> DataFrame:
-        """Parse/optimize/execute via Catalyst (entry point A, SURVEY §3.1).
-
-        Delegates to the single pre-rewrite gate (:meth:`_plan`) so the
-        executed query can never drift from what explain/trace/cost/
-        advice describe — keeping two copies of the gate is how that bug
-        happens.
-        """
-        return self._plan(text)
+        """Parse/optimize/execute via Catalyst (entry point A, SURVEY §3.1);
+        every other planning verb goes through here too."""
+        return self.spark.sql(text)
 
     def frame(self, name: str) -> DataFrame:
         """DataFrame-builder entry: a registered table by name (S1 scan)."""
@@ -109,25 +89,12 @@ class Engine:
 
     # -- optimize without executing (entry point C, SURVEY §3.3) ----------
     def optimize(self, text: str) -> OptimizeReport:
-        rr = pre_rewrite(text)
-        df = self.spark.sql(rr.sql)  # plans lazily; nothing executes
+        df = self.sql(text)  # plans lazily; nothing executes
         return OptimizeReport(
             original_sql=text,
-            rewritten_sql=rr.sql,
-            pre_rewrites=rr.applied,
             transform_log=build_transform_log(df),
             plan_tree=explain_tree(df),
         )
-
-    def _plan(self, text: str):
-        """Plan ``text`` through the SAME pre-rewrite gate sql() uses —
-        explain/trace/cost must describe the query the engine would
-        actually run, not the raw text (review finding: with
-        enable_pre_rewrites=True they previously planned a different
-        query than sql() executed)."""
-        if self.enable_pre_rewrites:
-            text = pre_rewrite(text).sql
-        return self.spark.sql(text)
 
     # -- DML (S7/S8 executed; the reference parses and stops) --------------
     def dml(
@@ -411,13 +378,13 @@ class Engine:
 
     # -- explain (entry point B, SURVEY §3.2 — ours doesn't also execute) --
     def explain(self, text: str) -> str:
-        return explain_full(self._plan(text))
+        return explain_full(self.sql(text))
 
     def transform_log(self, text: str) -> TransformLog:
-        return build_transform_log(self._plan(text))
+        return build_transform_log(self.sql(text))
 
     def cost(self, text: str) -> CostReport:
-        return cost_report(self._plan(text))
+        return cost_report(self.sql(text))
 
     def join_order_advice(self, text: str, seed: int = 42) -> "JoinOrderAdvice":
         """Genetic join-order recommendation for a SELECT — the working
@@ -436,9 +403,7 @@ class Engine:
             graph_from_plan,
         )
 
-        # through the pre-rewrite gate: the advice must describe the query
-        # sql() would actually execute, not the raw text
-        df = self._plan(text)
+        df = self.sql(text)
         graph, as_written = graph_from_plan(df)
         # seeding the population with the as-written order guarantees the
         # advised order never loses under the GA's OWN fitness (fewest

@@ -1,1 +1,2 @@
-"""Plans: explain/trace/cost (filled in a later milestone)."""
+"""Plans: explain, transform log, cost and join-order advice over Catalyst's
+plans."""

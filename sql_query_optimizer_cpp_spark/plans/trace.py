@@ -1,62 +1,71 @@
-"""Transform log: which named rewrites Catalyst applied to a query.
+"""Transform log: the Catalyst optimizer rules that rewrote a query.
 
-The reference prints an ordered list of ``{stage, detail, millis}`` records
-describing its rewrites (``engine/include/utils.h:47-65``, emission at
-``engine/src/optimizer.cpp:287-318``).  Catalyst applies hundreds of rules;
-this module diffs the analyzed vs. optimized logical plan (plus the physical
-plan) and reports the reference's five headline transforms — honestly, by
-plan-pattern evidence rather than by claiming rule executions:
+The reference prints an ordered list of ``{stage, detail, millis}`` records,
+one per rewrite it applied (``engine/include/utils.h:47-65``, emission at
+``engine/src/optimizer.cpp:287-318``).  Catalyst keeps the same record
+itself: every rule run is counted in the query's ``QueryPlanningTracker``
+with its time and the number of runs that changed the plan.  This module
+reads that record — one optimizer rule that changed the plan, one entry,
+timed by the tracker — instead of inferring rewrites from plan text.
 
-- R1 comma-join conversion: a condition-less inner/cross join in the
-  analyzed plan acquires a join condition (or disappears into an equi-join)
-  after optimization;
-- R2 scalar-subquery -> LEFT JOIN: ``scalar-subquery`` expressions in the
-  analyzed plan are gone from the optimized plan;
-- R3 predicate pushdown: Filter nodes sink below joins / into the scan
-  (``PushedFilters`` in the physical parquet scan);
-- R4 projection pushdown: the parquet ``ReadSchema`` is narrower than the
-  table schema;
-- R5 constant folding: trivially-true conjuncts present in the analyzed
-  plan vanish.
+The reference's five headline transforms keep their stage names (see
+``_STAGES``); every other rule appears under its Catalyst name.  Scan
+pushdown of a filter or projection already sitting on the scan is a
+planner strategy, not a rule, so it shows in the physical plan
+(``Engine.explain``), not here.  The tracker times a rule that optimizes
+subqueries (``Optimizer$OptimizeSubqueries``) including the rules it ran,
+so entry times can overlap.
 """
 
 from __future__ import annotations
 
 import re
-import time
 from dataclasses import dataclass, field
+
+_OPTIMIZER = "org.apache.spark.sql.catalyst.optimizer."
+
+#: Catalyst rule -> the reference's stage name for the same rewrite
+_STAGES = {
+    "ReorderJoin": "JoinConversion",
+    "RewriteCorrelatedScalarSubquery": "SubqueryRewrite",
+    "PushDownPredicates": "PredicatePushdown",
+    "ColumnPruning": "ProjectionPushdown",
+    "ConstantFolding": "ConstantFolding",
+    "BooleanSimplification": "ConstantFolding",
+    "PruneFilters": "ConstantFolding",
+}
+
+#: one ``name -> RuleSummary(totalTimeNs, runs, effectiveRuns)`` pair of
+#: the tracker's rule map, as Scala prints it
+_RULE = re.compile(r"([\w.$]+) -> RuleSummary\((\d+), (\d+), (\d+)\)")
 
 
 @dataclass
 class TransformEntry:
     stage: str
     detail: str
-    millis: float = 0.0
+    millis: float
 
     def __str__(self) -> str:  # reference CLI shows "[stage] detail"
-        return f"[{self.stage}] {self.detail}"
+        return f"[{self.stage}] {self.detail} ({self.millis:.2f} ms)"
 
 
 @dataclass
 class TransformLog:
     entries: list[TransformEntry] = field(default_factory=list)
 
-    def add(self, stage: str, detail: str, millis: float = 0.0) -> None:
-        self.entries.append(TransformEntry(stage, detail, millis))
-
     def stages(self) -> list[str]:
         return [e.stage for e in self.entries]
 
-    def __str__(self) -> str:
-        return "\n".join(str(e) for e in self.entries)
-
-
-def _qe(df):
-    return df._jdf.queryExecution()
+    def render(self) -> str:
+        lines = [str(e) for e in self.entries] or [
+            "(no optimizer rule changed the plan)"
+        ]
+        return "\n".join(["=== Optimizer Trace ===", *lines])
 
 
 def plan_strings(df) -> dict[str, str]:
-    qe = _qe(df)
+    qe = df._jdf.queryExecution()
     return {
         "analyzed": qe.analyzed().toString(),
         "optimized": qe.optimizedPlan().toString(),
@@ -64,76 +73,29 @@ def plan_strings(df) -> dict[str, str]:
     }
 
 
-_SCALAR_SUBQ = "scalar-subquery"
-_TRIVIAL = re.compile(r"\(1 = 1\)|\btrue = true\b", re.IGNORECASE)
+def rule_summaries(df) -> list[tuple[str, int, int, int]]:
+    """``(rule, total ns, runs, effective runs)`` for every rule the
+    DataFrame's planning tracker recorded, read in one py4j call after
+    forcing the optimized plan (no physical planning)."""
+    qe = df._jdf.queryExecution()
+    qe.optimizedPlan()
+    return [
+        (name, int(ns), int(runs), int(eff))
+        for name, ns, runs, eff in _RULE.findall(qe.tracker().rules().toString())
+    ]
 
 
 def build_transform_log(df) -> TransformLog:
-    """Inspect a DataFrame's query execution and emit the reference-style
-    transform log."""
-    t0 = time.perf_counter()
-    plans = plan_strings(df)
-    analyzed, optimized, physical = (
-        plans["analyzed"],
-        plans["optimized"],
-        plans["physical"],
-    )
-    elapsed = (time.perf_counter() - t0) * 1000
-
-    log = TransformLog()
-
-    # R1: condition-less joins acquiring conditions (comma-join conversion)
-    def _bare_joins(p: str) -> int:
-        return len(re.findall(r"Join (Inner|Cross)\s*$", p, re.MULTILINE))
-
-    if _bare_joins(analyzed) > _bare_joins(optimized):
-        log.add(
-            "JoinConversion",
-            f"comma/cross joins with WHERE-derived conditions: "
-            f"{_bare_joins(analyzed)} bare join(s) in analyzed plan -> "
-            f"{_bare_joins(optimized)} after optimization (Catalyst "
-            f"PushDownPredicates + join-condition extraction)",
-            elapsed,
-        )
-
-    # R2: scalar subqueries decorrelated
-    n_subq = analyzed.count(_SCALAR_SUBQ)
-    if n_subq and optimized.count(_SCALAR_SUBQ) == 0:
-        log.add(
-            "SubqueryRewrite",
-            f"{n_subq} correlated scalar subquery(ies) decorrelated to "
-            "LEFT OUTER joins (RewriteCorrelatedScalarSubquery)",
-            elapsed,
-        )
-
-    # R3: predicate pushdown — filters reach the parquet scan
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", physical)
-    nonempty = [p for p in pushed if p.strip()]
-    if nonempty:
-        log.add(
-            "PredicatePushdown",
-            f"{len(nonempty)} scan(s) with pushed filters: "
-            + "; ".join(sorted(set(nonempty)))[:200],
-            elapsed,
-        )
-
-    # R4: projection pushdown — pruned read schemas
-    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", physical)
-    if schemas:
-        widths = [len(s.split(",")) if s.strip() else 0 for s in schemas]
-        log.add(
-            "ProjectionPushdown",
-            f"column-pruned scans, read widths: {widths}",
-            elapsed,
-        )
-
-    # R5: constant folding — trivially-true conjuncts eliminated
-    if _TRIVIAL.search(analyzed) and not _TRIVIAL.search(optimized):
-        log.add(
-            "ConstantFolding",
-            "trivially-true conjunct(s) removed (ConstantFolding/"
-            "BooleanSimplification/PruneFilters)",
-            elapsed,
-        )
-
-    return log
+    """One entry per Catalyst optimizer rule that changed ``df``'s plan,
+    ordered by rule name, each timed by the tracker."""
+    entries = []
+    for name, ns, runs, eff in sorted(rule_summaries(df)):
+        if not eff or not name.startswith(_OPTIMIZER):
+            continue
+        rule = name[len(_OPTIMIZER):]
+        entries.append(TransformEntry(
+            _STAGES.get(rule, rule),
+            f"{rule}: changed the plan on {eff} of {runs} runs",
+            ns / 1e6,
+        ))
+    return TransformLog(entries)

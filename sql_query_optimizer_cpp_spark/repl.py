@@ -5,8 +5,8 @@ CLI (``engine/src/cli.cpp:63-201``: read line → lex/parse → semantic check
 → optimize → print plan summary + optimized SQL → execute via MySQL) and
 the standalone optimizer REPL (``sqlopt.cpp:727``: same front half, prints
 the plan, never executes).  This REPL covers both through the
-:class:`~.engine.Engine` facade, so every verb goes through the SAME
-pre-rewrite gate the programmatic API uses:
+:class:`~.engine.Engine` facade, so every verb plans the text through the
+SAME ``Engine.sql`` path the programmatic API uses:
 
 =================  ==========================================================
 input              behavior
@@ -15,9 +15,10 @@ input              behavior
 ``EXPLAIN q``      print the plan tree (deliberate difference from the
                    reference, which strips the prefix and STILL executes —
                    cli.cpp:196-201; SURVEY §3.2 calls this out)
-``OPTIMIZE q``     entry point C analog: rewrites + transform log + plan
-                   tree, nothing executes (``sqlopt.cpp`` behavior)
-``TRACE q``        rule-by-rule transform log
+``OPTIMIZE q``     entry point C analog: transform log + plan tree,
+                   nothing executes (``sqlopt.cpp`` behavior)
+``TRACE q``        the optimizer rules that changed the plan, with their
+                   Catalyst tracker times
 ``COST q``         cost report over the optimized plan
 ``ADVISE q``       genetic join-order recommendation (R6 / GA)
 ``ANALYZE``        harvest table statistics (S4)

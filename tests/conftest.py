@@ -46,10 +46,6 @@ _SLOW_NODEIDS = frozenset({
     "tests/test_cdf.py::test_cdf_stream_replicates_table",
     "tests/test_cdf.py::test_cdf_streaming_across_dv_commits",
     "tests/test_cdf.py::test_cdf_streaming_with_restart",
-    "tests/test_extensions.py::test_jvm_coalesce_rule_rewrites_guards_and_pushes",
-    "tests/test_extensions.py::test_jvm_empty_length_rule_rewrites_guards_and_pushes",
-    "tests/test_extensions.py::test_jvm_prefix_rule_rewrites_and_pushes",
-    "tests/test_extensions.py::test_jvm_rule_injected_and_fires",
     "tests/test_fileindex.py::test_bloom_exactness_over_many_keys",
     "tests/test_fileindex.py::test_bloom_lookup_applies_deletion_vectors",
     "tests/test_inventory.py::test_oracle_parity[curation_pipeline_neardup]",
