@@ -707,17 +707,6 @@ def read_mor(spark: SparkSession, path: str) -> DataFrame:
     return _live(df, dv).drop("__src_file", "__row_idx")
 
 
-def dv_file_stats(spark: SparkSession, path: str) -> DataFrame:
-    """Tombstones per file — the input to a ratio-driven materialize
-    policy (rewrite only files whose dead fraction crosses a threshold)."""
-    dv = _read_dv(spark, path)
-    if dv is None:
-        return spark.createDataFrame([], "src_file string, dead_rows long")
-    return dv.groupBy("src_file").agg(
-        F.count("*").cast("long").alias("dead_rows")
-    )
-
-
 def materialize_deletes(
     spark: SparkSession, path: str, min_dead_ratio: float = 0.0
 ) -> MutationStats:

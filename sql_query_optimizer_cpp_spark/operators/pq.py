@@ -49,9 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from . import reader
 from .dedup import _spread
-from .similarity import DIM, normsq_expr
+from .similarity import DIM, _Sidecar, normsq_expr
 
 PQ_SUBS = 16
 PQ_CODES = 16
@@ -545,32 +544,6 @@ def ivf_pq_topk(
 # -- persisted IVFPQ index (the serving sidecar) ------------------------------
 
 
-def _ivfpq_root(table_path: str, emb_col: str) -> str:
-    return f"{table_path.rstrip('/')}/_index/ivfpq/{emb_col}"
-
-
-def _ivfpq_meta(spark, table_path: str, emb_col: str) -> dict:
-    """Staleness anchor for the IVFPQ sidecar — same contract as the
-    IVF anchor (:func:`.similarity._ivf_meta`): a usable index without
-    one is crash debris, so raise and demand a rebuild."""
-    import json
-
-    from .reader import _is_missing_file_error
-    from .mutate import _read_small_file
-
-    root = _ivfpq_root(table_path, emb_col)
-    try:
-        return json.loads(_read_small_file(spark, f"{root}/meta.json"))
-    except Exception as e:  # noqa: BLE001 — classify below
-        if _is_missing_file_error(e):
-            raise ValueError(
-                f"IVFPQ index under {root} has no staleness anchor "
-                "(meta.json) — crash debris; rebuild with "
-                "build_ivfpq_index"
-            ) from e
-        raise
-
-
 def _encode_postings(
     df: DataFrame,
     coarse: DataFrame,
@@ -648,6 +621,15 @@ def _index_geometry(meta: dict, book: DataFrame) -> tuple[int, int]:
     return int(geo["ns"]), int(geo["d"])
 
 
+_IVFPQ = _Sidecar(
+    "ivfpq",
+    ("coarse", "codebook"),
+    lambda df, books, meta, id_col, emb_col: _encode_postings(
+        df, *books, id_col, emb_col, *_index_geometry(meta, books[1])
+    ),
+)
+
+
 def build_ivfpq_index(
     spark,
     table_path: str,
@@ -659,163 +641,77 @@ def build_ivfpq_index(
     dim: int = DIM,
 ) -> int:
     """Persist a trained IVFPQ index as a table sidecar —
-    ``<table>/_index/ivfpq/<emb_col>/{coarse,codebook,postings}`` — the
-    FAISS ``IndexIVFPQ`` serving layout on the lakehouse sidecar
-    conventions of :func:`.similarity.build_ivf_index` (underscore dir,
-    invisible to base scans, advisory-locked writes, staleness anchor):
+    ``<table>/_index/ivfpq/<emb_col>/{coarse,codebook,postings,meta.json}``,
+    the FAISS ``IndexIVFPQ`` serving layout on the sidecar format of
+    :func:`.similarity.build_ivf_index`:
 
     - ``coarse/`` — the k-means cell codebook (cells x dim);
     - ``codebook/`` — the PQ sub-quantizers (n_subs x n_codes x dsub);
-    - ``postings/cell=<c>/`` — hive partitions holding ``(id, codes
-      array<int>, src_file, row_idx)``: the COMPRESSED representation
-      only.  This is the 100 TB difference from the IVF sidecar, whose
-      postings carry full embeddings: a probed cell's read here is
-      ~16x smaller (16 small ints vs 64 floats per vector), and the
-      raw corpus is never touched at search time.
+    - ``postings/cell=<c>/`` — ``(id, codes array<int>, src_file,
+      row_idx)``: the COMPRESSED representation only, so a probed
+      cell's read is ~16x smaller than the IVF sidecar's embedding
+      postings and the raw corpus is never touched at search time;
+    - ``meta.json`` — the staleness anchor plus the PQ geometry
+      (``n_subs``, ``n_codes``, ``dim``), from which the search derives
+      its LUT shape.
 
-    Both quantizers train on the deletion-vector-aware live rows; cell
-    assignment and code assignment are keyed on the MOR row identity
-    (same duplicate-id discipline as the IVF build).  Maintenance:
+    Both quantizers train on the deletion-vector-aware live rows.
     :func:`maintain_ivfpq_index` folds appends and deletion-vector
-    batches in incrementally (codebooks stay immutable — the FAISS
-    posture); retired/rewritten files still demand a rebuild, and so
-    does quantizer DRIFT (a distribution shift is a retrain decision,
-    never an automatic fold).
+    batches in with the codebooks left immutable (the FAISS posture);
+    retired files and quantizer drift are rebuild decisions.
 
-    Returns the number of live cells."""
-    from .mor import _live, _read_dv, _with_identity, list_dv_files
-    from .mutate import (
-        _fs,
-        _rel_to_table,
-        _write_small_file,
-        _writer_lock,
-        is_partitioned,
-    )
-    from .similarity import (
-        IVF_CELLS,
-        IVF_SAMPLE_MOD,
-        _rename_identity,
-        kmeans_centroids,
-        training_sample,
-    )
-
-    num_cells = num_cells or IVF_CELLS
-    listing = reader.list_files(spark, table_path, recursive=True)
-    data_files = [f.path for f in listing]
-    dv_files = list_dv_files(spark, table_path)
-    built_from = sorted(
-        _rel_to_table(table_path, f) for f in data_files + dv_files
-    )
-    base_path = table_path if is_partitioned(spark, table_path) else None
-    df = _rename_identity(
-        _live(
-            _with_identity(spark, table_path, listing, base_path),
-            _read_dv(spark, table_path),
-        )
-    )
-    # The two quantizer trainings are INDEPENDENT (coarse cells partition
-    # the corpus; sub-quantizers compress within it) and — with today's
-    # module constants — draw the SAME hash sample (id % 3 == 0), so:
-    # one shared persisted sample (guide §5: don't materialize the
-    # identical frame twice) and the trainings overlap from a 2-thread
-    # pool (guide §2.6: independent jobs back-fill each other's per-job
-    # scheduling floor — each training is a short chain of sample-sized
-    # jobs whose wall here is job count, not compute).  Results are
-    # bit-identical to the sequential form: each training is a
-    # deterministic function of the sample, and nothing below reads
-    # shared mutable state.
+    Returns the number of trained cells."""
     from concurrent.futures import ThreadPoolExecutor
 
-    shared = IVF_SAMPLE_MOD == PQ_SAMPLE_MOD
-    sample = (
-        training_sample(df, IVF_SAMPLE_MOD, id_col, emb_col).persist()
-        if shared
-        else None
-    )
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_coarse = pool.submit(
-                kmeans_centroids,
-                df,
-                num_cells,
-                id_col=id_col,
-                emb_col=emb_col,
-                sample=sample,
-            )
-            f_book = pool.submit(
-                train_pq,
-                df,
-                n_subs,
-                n_codes,
-                PQ_ITERS,
-                PQ_SAMPLE_MOD,
-                id_col,
-                emb_col,
-                dim,
-                sample=sample,
-            )
-            coarse = f_coarse.result()
-            book = f_book.result()
-    finally:
-        if sample is not None:
-            sample.unpersist()
-    root = _ivfpq_root(table_path, emb_col)
-    jvm, fs, root_p = _fs(spark, root)
-    if not fs.exists(root_p):
-        fs.mkdirs(root_p)
-    with _writer_lock(spark, root, 30.0):
-        # the two codebook writes are independent single-file jobs —
-        # overlap them too (same §2.6 floor argument)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            w1 = pool.submit(
-                lambda: coarse.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{root}/coarse")
-            )
-            w2 = pool.submit(
-                lambda: book.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{root}/codebook")
-            )
-            w1.result()
-            w2.result()
-        coarse_rt = spark.read.parquet(f"{root}/coarse")
-        book_rt = spark.read.parquet(f"{root}/codebook")
-        # a crashed maintain_ivfpq_index leaves _maintain_* stage/trash
-        # dirs as its loud tripwire; a rebuild supersedes them — sweep
-        # so the debris check doesn't refuse forever after the rebuild
-        for st in fs.listStatus(root_p):
-            if st.getPath().getName().startswith("_maintain_"):
-                fs.delete(st.getPath(), True)
-        postings = _encode_postings(
-            df, coarse_rt, book_rt, id_col, emb_col, n_subs, dim
-        )
-        postings.write.partitionBy("cell").mode("overwrite").parquet(
-            f"{root}/postings"
-        )
-        import json
+    from .similarity import IVF_CELLS, IVF_SAMPLE_MOD, kmeans_centroids, training_sample
 
-        n_vectors = spark.read.parquet(f"{root}/postings").count()
-        _write_small_file(
-            spark,
-            f"{root}/meta.json",
-            json.dumps(
-                {
-                    "files": built_from,
-                    "n_vectors": n_vectors,
-                    # PQ geometry: the search path derives its LUT/unpack
-                    # shape from the INDEX, never from caller defaults — a
-                    # build with non-default n_subs would otherwise be
-                    # silently mis-searched (wrong sub tags drop every LUT
-                    # join row, empty results, no error)
-                    "n_subs": int(n_subs),
-                    "n_codes": int(n_codes),
-                    "dim": int(dim),
-                },
-                indent=0,
-            ).encode(),
+    def train(df: DataFrame) -> list[DataFrame]:
+        # The two trainings are INDEPENDENT (coarse cells partition the
+        # corpus; sub-quantizers compress within it) and — with today's
+        # module constants — draw the SAME hash sample, so: one shared
+        # persisted sample, and the trainings overlap from a 2-thread
+        # pool (each is a short chain of sample-sized jobs whose wall is
+        # job count, not compute).  Results are bit-identical to the
+        # sequential form: each training is a deterministic function of
+        # the sample.
+        shared = IVF_SAMPLE_MOD == PQ_SAMPLE_MOD
+        sample = (
+            training_sample(df, IVF_SAMPLE_MOD, id_col, emb_col).persist()
+            if shared
+            else None
         )
-    return coarse_rt.select("cell").distinct().count()
+        try:
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                coarse = pool.submit(
+                    kmeans_centroids,
+                    df,
+                    num_cells or IVF_CELLS,
+                    id_col=id_col,
+                    emb_col=emb_col,
+                    sample=sample,
+                )
+                book = pool.submit(
+                    train_pq,
+                    df,
+                    n_subs,
+                    n_codes,
+                    PQ_ITERS,
+                    PQ_SAMPLE_MOD,
+                    id_col,
+                    emb_col,
+                    dim,
+                    sample=sample,
+                )
+                return [coarse.result(), book.result()]
+        finally:
+            if sample is not None:
+                sample.unpersist()
+
+    # PQ geometry in the anchor: the search derives its LUT/unpack shape
+    # from the INDEX, never from caller defaults — a build with
+    # non-default n_subs would otherwise be silently mis-searched
+    geometry = {"n_subs": int(n_subs), "n_codes": int(n_codes), "dim": int(dim)}
+    return _IVFPQ.build(spark, table_path, emb_col, id_col, train, geometry)
 
 
 def ivfpq_search_indexed(
@@ -830,13 +726,11 @@ def ivfpq_search_indexed(
     n_subs: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """ADC probe over a PERSISTED IVFPQ index: queries (read through the
-    deletion vectors) rank their ``n_probes`` nearest cells with the
-    persisted coarse codebook, the candidate read lists ONLY those
-    cells' directories (the partition-pruned serving read of
-    :func:`.similarity.ivf_search_indexed`), and candidates are scored
-    from their stored CODES via the broadcast per-query LUT — raw
-    embeddings are read for the ``n_queries`` query vectors only.
+    """ADC probe over a PERSISTED IVFPQ index: the shared sidecar query
+    side (:func:`.similarity.ivf_search_indexed`'s) ranks each query's
+    ``n_probes`` nearest cells and reads only those cells' codes, and
+    candidates are scored from their stored CODES via the broadcast
+    per-query LUT — raw embeddings are read for the query vectors only.
 
     The PQ geometry (``n_subs``/``dim``) comes from the INDEX — the
     anchor's recorded build geometry, or derived from the persisted
@@ -847,162 +741,61 @@ def ivfpq_search_indexed(
     check only (mismatch with the index raises).
 
     Results are identical to :func:`ivf_pq_topk` with the same
-    quantizers and ``n_probes``.  Staleness gate: any table drift since
-    build refuses (rebuild, or :func:`maintain_ivfpq_index` for
-    append/DV-shaped drift; ``allow_stale=True`` opts into the indexed
-    subset).  Output: ``(query_id, neighbor_id, cos_sim, rn)``."""
-    from .mor import read_mor
-    from .reader import _is_missing_file_error
-    from .similarity import _table_file_set, assign_cells_fast
-
-    if n_probes < 1:
-        raise ValueError("n_probes must be >= 1")
-    root = _ivfpq_root(table_path, emb_col)
-    try:
-        coarse = spark.read.parquet(f"{root}/coarse")
-        book = spark.read.parquet(f"{root}/codebook")
-    except Exception as e:  # noqa: BLE001 — classify below
-        # only an ABSENT index is a "build it first" user error; a
-        # permission fault or corrupt file must keep its real cause
-        if _is_missing_file_error(e):
+    quantizers and ``n_probes``.  Refuses a stale index unless
+    ``allow_stale``.  Output: ``(query_id, neighbor_id, cos_sim, rn)``."""
+    books = _IVFPQ.codebooks(spark, table_path, emb_col)
+    meta = _IVFPQ.meta(spark, table_path, emb_col)
+    idx_subs, idx_dim = _index_geometry(meta, books[1])
+    for name, asked, built in (("n_subs", n_subs, idx_subs), ("dim", dim, idx_dim)):
+        if asked is not None and asked != built:
             raise ValueError(
-                f"no IVFPQ index under {root} — run build_ivfpq_index "
-                "first"
-            ) from e
-        raise
-    meta = _ivfpq_meta(spark, table_path, emb_col)
-    idx_subs, idx_dim = _index_geometry(meta, book)
-    if n_subs is not None and n_subs != idx_subs:
-        raise ValueError(
-            f"IVFPQ index under {root} was built with n_subs={idx_subs}, "
-            f"caller asked for {n_subs} — the index decides; rebuild to "
-            "change geometry"
-        )
-    if dim is not None and dim != idx_dim:
-        raise ValueError(
-            f"IVFPQ index under {root} was built with dim={idx_dim}, "
-            f"caller asked for {dim} — the index decides; rebuild to "
-            "change geometry"
-        )
-    n_subs, dim = idx_subs, idx_dim
-    if not allow_stale:
-        now = _table_file_set(spark, table_path)
-        if now != set(meta["files"]):
-            raise ValueError(
-                f"IVFPQ index under {root} is STALE: the table's file "
-                "set (data + deletion-vector batches) changed since "
-                "build_ivfpq_index — maintain_ivfpq_index folds "
-                "appended files AND deletion-vector batches in "
-                "incrementally (rebuild only for retired files), or "
-                "pass allow_stale=True to search the indexed subset "
-                "anyway"
+                f"IVFPQ index under {_IVFPQ.root(table_path, emb_col)} was "
+                f"built with {name}={built}, caller asked for {asked} — the "
+                "index decides; rebuild to change geometry"
             )
-    qbase = (
-        read_mor(spark, table_path)
-        .select(id_col, emb_col)
-        .where(F.col(id_col) < n_queries)
-    )
-    # Collect the query-side metadata ONCE (n_queries rows — the same
-    # driver round-trip the probed-cell pruning below always paid) and
-    # re-inject it as VALUES LocalRelations: one job computes each
-    # query's n_probes nearest cells AND its exact norm, so the final
-    # candidate job's broadcast sides carry literal rows instead of
-    # re-running the assignment/norm subtrees (query scan + literal
-    # scoring) inside their BroadcastExchanges.  All values are
-    # Spark-evaluated (the literal-codebook exact arithmetic), so the
-    # VALUES round-trip is bit-identical by the repr discipline.
-    from .similarity import _best_cells_col, _centroid_consts
 
-    cc = _centroid_consts(spark, coarse)
-    qn_rows: list[tuple[int, float]] | None = None
-    if cc is not None:
-        qrows = qbase.select(
-            F.col(id_col).alias("query_id"),
-            _best_cells_col(emb_col, cc, n_probes).alias("cells"),
-            F.expr(normsq_expr(emb_col, duck=False, exact=True)).alias(
-                "q_nsq"
-            ),
-        ).collect()
-        q_rows = [
-            (int(r["query_id"]), int(c)) for r in qrows for c in r["cells"]
-        ]
-        qn_rows = [
-            (
-                int(r["query_id"]),
-                None if r["q_nsq"] is None else float(r["q_nsq"]),
-            )
-            for r in qrows
-        ]
-    else:
-        # over-budget codebook: the distributed assignment pipeline (the
-        # fallback the literal path is pinned equal to); norms stay a
-        # lazy broadcast subtree inside the final job
-        q_rows = [
-            (int(r["query_id"]), int(r["cell"]))
-            for r in assign_cells_fast(
-                qbase, coarse, id_col, top_p=n_probes, emb_col=emb_col
-            )
-            .withColumnRenamed(id_col, "query_id")
-            .collect()
-        ]
-    probed = sorted({c for _, c in q_rows})
-    post_root = f"{root}/postings"
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(post_root)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    existing = {
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(jpath)
-        if st.isDirectory() and st.getPath().getName().startswith("cell=")
-    }
-    probed = [c for c in probed if c in existing]
-    if not probed:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rn long"
+    def score(p) -> DataFrame:
+        lut, cnorm, _ = _adc_tables(
+            p.queries, books[1], n_queries, id_col, emb_col, idx_subs, idx_dim
         )
-    from ..functions import values_df
+        # NOT _spread over the candidates (an A/B measured 1.94 s vs 2.50 s
+        # median at sf0.1): ADC scoring is LUT lookups — broadcast joins +
+        # posexplode, none of the decimal-dot arithmetic _spread exists
+        # to parallelize — and the decimal sums run after the (query,
+        # candidate) groupBy shuffle, which redistributes regardless
+        pairs = (
+            p.cand.join(F.broadcast(p.cells.select("query_id", "cell")), "cell")
+            .where(F.col(id_col) != F.col("query_id"))
+            # unpack the stored code array: position IS the sub-block id
+            # (codes were collected ordered by sub at build time)
+            .select(
+                "query_id", id_col, F.posexplode("codes").alias("sub", "code")
+            )
+        )
+        cand = (
+            pairs.join(F.broadcast(lut), ["query_id", "sub", "code"])
+            .join(F.broadcast(cnorm), ["sub", "code"])
+            .groupBy("query_id", id_col)
+            .agg(
+                _dsum("qdot").alias("dotq"),
+                _dsum("c_nsq").alias("xh_nsq"),
+            )
+        )
+        return _adc_score_topk(cand, p.norms, id_col, k)
 
-    q_cells = values_df(spark, "query_id bigint, cell int", q_rows)
-    lut, cnorm, qn = _adc_tables(
-        qbase, book, n_queries, id_col, emb_col, n_subs, dim
+    return _IVFPQ.search(
+        spark,
+        table_path,
+        score,
+        n_queries=n_queries,
+        n_probes=n_probes,
+        id_col=id_col,
+        emb_col=emb_col,
+        allow_stale=allow_stale,
+        cols=("codes",),
+        books=books,
+        meta=meta,
     )
-    if qn_rows is not None:
-        qn = values_df(spark, "query_id bigint, q_nsq double", qn_rows)
-    # NOT _spread here (r15 A/B: 1.94 s vs 2.50 s median at sf0.1): ADC
-    # candidate scoring is LUT lookups — broadcast joins + posexplode,
-    # none of the heavy decimal-dot arithmetic _spread exists to
-    # parallelize (contrast ivf_search_indexed, whose candidates each
-    # pay an exact 64-dim decimal dot and keep the spread) — and the
-    # decimal sums run after the (query, candidate) groupBy shuffle,
-    # which redistributes regardless.  At scale the probed cells' files
-    # split naturally; locally the gate would fire and add a pure-waste
-    # shuffle of the codes.
-    cand_rows = (
-        spark.read.option("basePath", post_root)
-        .parquet(*[f"{post_root}/cell={c}" for c in probed])
-        .withColumn("cell", F.col("cell").cast("int"))
-        # prune the identity columns out of the scan: the probe needs
-        # only (id, codes, cell)
-        .select(id_col, "codes", "cell")
-    )
-    pairs = (
-        cand_rows.join(F.broadcast(q_cells), "cell")
-        .where(F.col(id_col) != F.col("query_id"))
-        # unpack the stored code array: position IS the sub-block id
-        # (codes were collected ordered by sub at build time)
-        .select(
-            "query_id", id_col, F.posexplode("codes").alias("sub", "code")
-        )
-    )
-    cand = (
-        pairs.join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .join(F.broadcast(cnorm), ["sub", "code"])
-        .groupBy("query_id", id_col)
-        .agg(
-            _dsum("qdot").alias("dotq"),
-            _dsum("c_nsq").alias("xh_nsq"),
-        )
-    )
-    return _adc_score_topk(cand, qn, id_col, k)
 
 
 def ivf_pq_refine_topk(
@@ -1070,65 +863,6 @@ def ivf_pq_refine_topk(
     )
 
 
-def _read_ivfpq_postings(spark, root: str):
-    """Load the codes postings persisted by :func:`build_ivfpq_index`
-    (None only when ABSENT — a permission fault or corrupt file keeps
-    its real cause instead of masquerading as "no index"), ``cell``
-    read back as INT so probe filters prune partitions — the IVFPQ twin
-    of :func:`.similarity.read_ivf_postings`."""
-    from .reader import _is_missing_file_error
-
-    try:
-        df = spark.read.parquet(f"{root}/postings")
-        return df.withColumn("cell", F.col("cell").cast("int"))
-    except Exception as e:  # noqa: BLE001 — classify below
-        if _is_missing_file_error(e):
-            return None
-        raise
-
-
-def _append_files_to_codes(
-    spark, table_path: str, root: str, added_data: list[str], id_col: str,
-    emb_col: str,
-) -> None:
-    """Encode the added files' LIVE rows with the PERSISTED quantizers
-    and append them — with their MOR row identity — to the codes
-    postings.  Codebooks are read INSIDE the maintain lock (the caller
-    holds it) and never retrained: appends cost O(new-file bytes), and
-    whether accumulated drift warrants a retrain is an explicit
-    :func:`build_ivfpq_index` decision, not something a maintenance
-    fold should silently make.  The read goes through the deletion
-    vectors so a file whose rows were tombstoned in the same commit
-    that added it (the dv_update shape) never indexes dead rows."""
-    from .mor import _live, _read_dv, _with_identity
-    from .mutate import is_partitioned
-    from .similarity import _rename_identity
-
-    coarse = spark.read.parquet(f"{root}/coarse")
-    book = spark.read.parquet(f"{root}/codebook")
-    n_subs, dim = _index_geometry(
-        _ivfpq_meta(spark, table_path, emb_col), book
-    )
-    base_path = table_path if is_partitioned(spark, table_path) else None
-    new_df = _rename_identity(
-        _live(
-            _with_identity(
-                spark,
-                table_path,
-                reader.stat_files(spark, table_path, list(added_data)),
-                base_path,
-            ),
-            _read_dv(spark, table_path),
-        )
-    )
-    postings_new = _encode_postings(
-        new_df, coarse, book, id_col, emb_col, n_subs, dim
-    )
-    postings_new.write.partitionBy("cell").mode("append").parquet(
-        f"{root}/postings"
-    )
-
-
 def maintain_ivfpq_index(
     spark,
     table_path: str,
@@ -1137,57 +871,21 @@ def maintain_ivfpq_index(
     lock_wait_seconds: float = 30.0,
 ) -> dict:
     """Fold table drift into the persisted IVFPQ index without
-    retraining either quantizer — the quantized twin of
-    :func:`.similarity.maintain_ivf_index`, running the SAME maintenance
-    fold (:func:`.similarity._maintain_locked` — one implementation of
-    the stage-then-swap/crash/lock discipline, two sidecars):
+    retraining either quantizer — the same maintenance fold as
+    :func:`.similarity.maintain_ivf_index` (one stage-then-swap, crash
+    and lock discipline for both sidecars):
 
     - **added data files** append their live rows to the codes postings,
       encoded with the PERSISTED coarse + PQ codebooks (codebook
       immutability is the FAISS serving contract: recall drifts with the
-      distribution, the index never silently retrains — rebuild when YOU
-      decide the drift warrants it);
+      distribution, the index never silently retrains);
     - **added deletion-vector batches** REMOVE their tombstoned rows via
-      the precise ``(src_file, row_idx)`` anti-join — broadcast only
-      when the batches' on-disk bytes fit the session's
-      autoBroadcastJoinThreshold (a bulk delete's tombstone set
-      shuffle-joins) — rewriting ONLY the affected cells' hive
-      partitions via stage-then-swap;
+      the precise ``(src_file, row_idx)`` anti-join, rewriting ONLY the
+      affected cells' partitions — and the code bytes are ~16x smaller
+      than the IVF sidecar's embedding postings;
     - **retired/rewritten files** (compaction, materialize) still demand
       a rebuild, as do crashed-maintain debris and a postings/anchor
       count mismatch.
 
-    At 100 TB this is the steady-state story for the QUANTIZED serving
-    index: a delete trickle costs O(tombstones + affected-cell CODE
-    bytes) — and the code bytes are ~16x smaller than the IVF sidecar's
-    embedding postings, so the same fold rewrites ~16x fewer bytes.
-
-    Crash discipline: the staleness anchor advances LAST; old cell
-    partitions are trashed, never deleted, until it commits.  The whole
-    pass runs under the INDEX-scoped advisory lock (never contends with
-    table writers, only other maintains/rebuilds of THIS sidecar).
-
     Returns ``{"appended": n, "removed": n, "cells_rewritten": n}``."""
-    from .mutate import _writer_lock
-    from .similarity import _maintain_locked
-
-    root = _ivfpq_root(table_path, emb_col)
-    if _read_ivfpq_postings(spark, root) is None:
-        raise ValueError(
-            f"no IVFPQ index under {root} — run build_ivfpq_index first"
-        )
-    with _writer_lock(spark, root, lock_wait_seconds):
-        return _maintain_locked(
-            spark,
-            table_path,
-            emb_col,
-            id_col,
-            root,
-            kind="IVFPQ",
-            rebuild_with="build_ivfpq_index",
-            read_postings=lambda: _read_ivfpq_postings(spark, root),
-            meta_reader=lambda: _ivfpq_meta(spark, table_path, emb_col),
-            append_files=lambda added: _append_files_to_codes(
-                spark, table_path, root, added, id_col, emb_col
-            ),
-        )
+    return _IVFPQ.maintain(spark, table_path, emb_col, id_col, lock_wait_seconds)

@@ -32,6 +32,9 @@ joins beyond the query set) is the part that carries to 100 TB.
 from __future__ import annotations
 
 import hashlib
+import json
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -1001,18 +1004,74 @@ def ivf_topk_trained(
     )
 
 
-def _ivf_root(table_path: str, emb_col: str) -> str:
-    return f"{table_path.rstrip('/')}/_index/ivf/{emb_col}"
+# -- the persisted ANN sidecar (IVF and IVFPQ) --------------------------------
+#
+# One inverted-file structure with pluggable codes (the FAISS IndexIVF
+# family).  Both indexes persist under ``<table>/_index/<kind>/<emb_col>/``
+# with the bloom-sidecar conventions (underscore dir, invisible to base
+# scans, index-scoped advisory lock): their codebooks, ``postings/cell=<c>/``
+# hive partitions of the corpus reclustered by coarse cell — each row
+# carrying its MOR identity ``(src_file, row_idx)``, the key the
+# deletion-vector store uses — and the ``meta.json`` staleness anchor (the
+# snapshot's data + deletion-vector file list and the postings' row count).
+# :class:`_Sidecar` owns that format: the build skeleton, the staleness
+# gate, the query side, the append step and the maintenance fold.  A kind
+# brings only its training, its postings encoding, its scoring and any
+# extra anchor keys.
+
+#: Query-side rows (``n_queries x n_probes``) a probe collects to the driver
+#: and re-injects as VALUES relations; above it the probed cells stay a
+#: distributed :func:`assign_cells_fast` frame and only the distinct cell
+#: ids (at most the codebook's cell count) reach the driver.  The VALUES
+#: text is parsed and planned on the driver: 1024 rows of (query_id, cell,
+#: q_nsq) add about 0.4 s to a query, 4096 rows about 1 s (Spark 4.1,
+#: local[1] on a 4-vCPU host).
+PROBE_COLLECT_MAX_ROWS = 1024
 
 
-def _rename_identity(df: DataFrame) -> DataFrame:
-    """``__src_file``/``__row_idx`` (the MOR working columns) become the
-    posting store's ``src_file``/``row_idx``.  A table whose OWN schema
-    uses those names would silently duplicate columns — refuse."""
+def _read_or_none(spark, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None only when the path is ABSENT:
+    a permission fault or a corrupt file keeps its real cause instead of
+    masquerading as "no index"."""
+    try:
+        return spark.read.parquet(path)
+    except Exception as e:  # noqa: BLE001 — classified below
+        if reader._is_missing_file_error(e):
+            return None
+        raise
+
+
+def _cells(spark, path: str) -> set[int] | None:
+    """The ``cell=<c>`` partition ids under ``path`` (one listing; None
+    when ``path`` does not exist)."""
+    _, fs, p = reader._fs(spark, path)
+    if not fs.exists(p):
+        return None
+    return {
+        int(st.getPath().getName().split("=", 1)[1])
+        for st in fs.listStatus(p)
+        if st.isDirectory() and st.getPath().getName().startswith("cell=")
+    }
+
+
+def _identity_frame(spark, table_path: str, listing) -> DataFrame:
+    """The listed files' LIVE rows — read through the deletion vectors, so
+    no sidecar indexes a tombstoned row (a file added together with a
+    tombstone batch, the dv_update shape, included) — with their MOR
+    identity as ``src_file``/``row_idx``.  A table whose OWN schema uses
+    those names would silently duplicate columns — refuse."""
+    from .mor import _live, _read_dv, _with_identity
+    from .mutate import is_partitioned
+
+    base_path = table_path if is_partitioned(spark, table_path) else None
+    df = _live(
+        _with_identity(spark, table_path, listing, base_path),
+        _read_dv(spark, table_path),
+    )
     clash = {"src_file", "row_idx"} & set(df.columns)
     if clash:
         raise ValueError(
-            f"table column(s) {sorted(clash)} collide with the IVF "
+            f"table column(s) {sorted(clash)} collide with the index "
             "posting lists' row-identity columns — rename them before "
             "indexing"
         )
@@ -1021,66 +1080,21 @@ def _rename_identity(df: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_meta(spark, table_path: str, emb_col: str) -> dict:
-    """The index's staleness anchor (``meta.json``: the build/refresh
-    snapshot's file list + vector count).  Every postings-writing build
-    also writes the anchor, so a usable index without one is CRASH
-    DEBRIS (e.g. a failed anchor overwrite) — raise and demand a
-    rebuild rather than silently searching ungated; corrupt JSON and
-    transient read faults are loud for the same reason."""
-    import json
-
-    from .reader import _is_missing_file_error
-    from .mutate import _read_small_file
-
-    root = _ivf_root(table_path, emb_col)
-    try:
-        return json.loads(_read_small_file(spark, f"{root}/meta.json"))
-    except Exception as e:
-        if _is_missing_file_error(e):
-            raise ValueError(
-                f"IVF index under {root} has no staleness anchor "
-                "(crashed build/refresh left partial state?) — rebuild "
-                "with build_ivf_index"
-            ) from e
-        raise
-
-
 def _broadcast_threshold_bytes(spark) -> int:
-    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes —
-    the gate :func:`maintain_ivf_index` applies before force-broadcasting
-    a tombstone set.  Spark stores the conf as a byte-string (``10MB``,
-    ``10485760b``, ``-1`` = broadcast disabled); parse the same suffixes
-    Spark's ``byteStringAsBytes`` accepts for the SQL conf.  Returns -1
-    when broadcasting is disabled (any gate comparison then fails and the
-    hint is never applied)."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    units = {
-        "b": 1,
-        "k": 1 << 10, "kb": 1 << 10,
-        "m": 1 << 20, "mb": 1 << 20,
-        "g": 1 << 30, "gb": 1 << 30,
-        "t": 1 << 40, "tb": 1 << 40,
-    }
-    num = raw
-    mult = 1
-    for suffix in sorted(units, key=len, reverse=True):
-        if raw.endswith(suffix):
-            num, mult = raw[: -len(suffix)], units[suffix]
-            break
-    try:
-        return int(num.strip()) * mult
-    except ValueError:
-        return -1
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes as
+    Spark itself parses the byte string (-1: broadcasting disabled, so
+    every gate comparison fails) — the gate the maintenance fold applies
+    before force-broadcasting a tombstone set."""
+    return int(
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
 
 
 def _table_file_set(spark, table_path: str) -> set[str]:
-    """The table's current state for IVF-staleness purposes: data files
-    AND deletion-vector batch files (table-relative).  A dv_delete adds
-    a batch without touching any data file — excluding DV files would
-    let a desynced index pass the gate and resurrect deleted rows."""
+    """The table's current state for staleness purposes: data files AND
+    deletion-vector batch files (table-relative).  A dv_delete adds a
+    batch without touching any data file — excluding DV files would let
+    a desynced index pass the gate and resurrect deleted rows."""
     from .mor import list_dv_files
     from .mutate import _rel_to_table, list_data_files
 
@@ -1093,6 +1107,480 @@ def _table_file_set(spark, table_path: str) -> set[str]:
     }
 
 
+@dataclass(frozen=True)
+class _Probe:
+    """What the query side hands a kind's scoring: the query rows ``(id,
+    emb)`` read through the deletion vectors, each query's probed cells
+    ``(query_id, cell, q_nsq)`` and norm ``(query_id, q_nsq)``, and the
+    candidate postings read pruned to the probed cells ``(id, <cols>,
+    cell)``."""
+
+    queries: DataFrame
+    cells: DataFrame
+    norms: DataFrame
+    cand: DataFrame
+
+
+@dataclass(frozen=True)
+class _Sidecar:
+    """One persisted inverted-file index kind.  ``books`` names the
+    codebook directories (the coarse quantizer first); ``encode(df, books,
+    meta, id_col, emb_col)`` turns identity-bearing live rows into
+    postings rows carrying ``cell``, repartitioned by it."""
+
+    kind: str
+    books: tuple[str, ...]
+    encode: Callable[..., DataFrame]
+
+    @property
+    def label(self) -> str:
+        return self.kind.upper()
+
+    @property
+    def builder(self) -> str:
+        return f"build_{self.kind}_index"
+
+    def root(self, table_path: str, emb_col: str) -> str:
+        return f"{table_path.rstrip('/')}/_index/{self.kind}/{emb_col}"
+
+    def _absent(self, root: str) -> ValueError:
+        return ValueError(
+            f"no {self.label} index under {root} — run {self.builder} first"
+        )
+
+    def meta(self, spark, table_path: str, emb_col: str) -> dict:
+        """The staleness anchor.  Every postings-writing pass also writes
+        it, so a usable index without one is CRASH DEBRIS (e.g. a failed
+        anchor overwrite) — raise and demand a rebuild rather than
+        searching ungated; corrupt JSON and transient read faults are
+        loud for the same reason."""
+        from .mutate import _read_small_file
+
+        root = self.root(table_path, emb_col)
+        try:
+            return json.loads(_read_small_file(spark, f"{root}/meta.json"))
+        except Exception as e:  # noqa: BLE001 — classified below
+            if reader._is_missing_file_error(e):
+                raise ValueError(
+                    f"{self.label} index under {root} has no staleness "
+                    "anchor (crashed build/maintain left partial state?) "
+                    f"— rebuild with {self.builder}"
+                ) from e
+            raise
+
+    def postings(self, spark, table_path: str, emb_col: str):
+        """The posting lists (None only when absent), ``cell`` read back
+        as INT so probe filters prune partitions."""
+        df = _read_or_none(spark, f"{self.root(table_path, emb_col)}/postings")
+        return None if df is None else df.withColumn(
+            "cell", F.col("cell").cast("int")
+        )
+
+    def codebooks(self, spark, table_path: str, emb_col: str) -> list:
+        """The persisted codebooks in ``books`` order; an absent one
+        means there is no index."""
+        root = self.root(table_path, emb_col)
+        books = [_read_or_none(spark, f"{root}/{b}") for b in self.books]
+        if any(b is None for b in books):
+            raise self._absent(root)
+        return books
+
+    def drift(self, spark, table_path: str, emb_col: str, meta=None):
+        """The staleness gate: ``(anchor, added, removed)`` — table files
+        (data + deletion-vector batches) the anchor does not cover, and
+        anchored files the table no longer has.  One listing, metadata
+        scale."""
+        meta = self.meta(spark, table_path, emb_col) if meta is None else meta
+        built = set(meta["files"])
+        now = _table_file_set(spark, table_path)
+        return meta, sorted(now - built), built - now
+
+    def build(
+        self, spark, table_path, emb_col, id_col, train, anchor=None
+    ) -> int:
+        """Train ``train(df) -> [codebook, ...]`` on the table's live rows,
+        persist the codebooks, the postings and the anchor (plus the
+        kind's ``anchor`` keys).  Returns the number of trained cells."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from .mor import list_dv_files
+        from .mutate import _fs, _rel_to_table, _write_small_file, _writer_lock
+
+        # the anchor is THIS snapshot's file list (data + DV batches),
+        # pinned before the training scans: re-listing afterwards would
+        # fold in files a concurrent commit added that the index never saw
+        listing = reader.list_files(spark, table_path, recursive=True)
+        built_from = sorted(
+            _rel_to_table(table_path, f)
+            for f in [x.path for x in listing] + list_dv_files(spark, table_path)
+        )
+        df = _identity_frame(spark, table_path, listing)
+        books = train(df)
+        root = self.root(table_path, emb_col)
+        _, fs, root_p = _fs(spark, root)
+        if not fs.exists(root_p):
+            fs.mkdirs(root_p)  # the lock file needs the dir on first build
+        # the sidecar writes run under the index lock a maintain holds
+        # (training is read-only and stays outside it)
+        with _writer_lock(spark, root, 30.0):
+            # a crashed maintain leaves _maintain_* stage/trash dirs as
+            # its tripwire; a rebuild supersedes them
+            for st in fs.listStatus(root_p):
+                if st.getPath().getName().startswith("_maintain_"):
+                    fs.delete(st.getPath(), True)
+            # the codebook writes are independent single-file jobs:
+            # overlapped, each back-fills the other's scheduling floor
+            with ThreadPoolExecutor(max_workers=len(books)) as pool:
+                writes = [
+                    pool.submit(
+                        book.coalesce(1).write.mode("overwrite").parquet,
+                        f"{root}/{name}",
+                    )
+                    for name, book in zip(self.books, books)
+                ]
+                for w in writes:
+                    w.result()
+            books = self.codebooks(spark, table_path, emb_col)
+            meta = {"files": built_from, "n_vectors": 0, **(anchor or {})}
+            post = f"{root}/postings"
+            self.encode(df, books, meta, id_col, emb_col).write.partitionBy(
+                "cell"
+            ).mode("overwrite").parquet(post)
+            # n_vectors lets maintain detect a half-applied earlier pass
+            meta["n_vectors"] = spark.read.parquet(post).count()
+            _write_small_file(
+                spark, f"{root}/meta.json", json.dumps(meta, indent=0).encode()
+            )
+        return books[0].select("cell").distinct().count()
+
+    def append(self, spark, table_path, emb_col, id_col, added, meta) -> None:
+        """Encode the added files' live rows with the PERSISTED codebooks
+        (read here, inside the caller's lock; never retrained) and append
+        them — with their row identity — to the posting lists."""
+        df = _identity_frame(
+            spark, table_path, reader.stat_files(spark, table_path, added)
+        )
+        books = self.codebooks(spark, table_path, emb_col)
+        self.encode(df, books, meta, id_col, emb_col).write.partitionBy(
+            "cell"
+        ).mode("append").parquet(f"{self.root(table_path, emb_col)}/postings")
+
+    def maintain(
+        self, spark, table_path, emb_col, id_col, lock_wait_seconds
+    ) -> dict:
+        from .mutate import _writer_lock
+
+        root = self.root(table_path, emb_col)
+        if self.postings(spark, table_path, emb_col) is None:
+            raise self._absent(root)
+        # two maintainers racing would fold the same changes twice: the
+        # whole pass runs under the INDEX-scoped lock, which never
+        # contends with the table's own writer lock
+        with _writer_lock(spark, root, lock_wait_seconds):
+            return self._maintain_locked(spark, table_path, emb_col, id_col)
+
+    def _maintain_locked(self, spark, table_path, emb_col, id_col) -> dict:
+        """The maintenance fold (the caller holds the index lock).  It is
+        postings-schema-agnostic: tombstone removal anti-joins whole rows
+        on the MOR identity and the stage-then-swap moves hive
+        partitions; only the append step encodes."""
+        import uuid
+
+        from .mutate import _fs, _write_small_file
+
+        root = self.root(table_path, emb_col)
+        # re-read the postings INSIDE the lock: a maintainer (or rebuild)
+        # that just committed could have swapped cell partitions
+        postings = self.postings(spark, table_path, emb_col)
+        jvm, fs, root_p = _fs(spark, root)
+        path = jvm.org.apache.hadoop.fs.Path
+        debris = sorted(
+            st.getPath().getName()
+            for st in fs.listStatus(root_p)
+            if st.getPath().getName().startswith("_maintain_")
+        )
+        meta, added, removed_files = self.drift(spark, table_path, emb_col)
+        if not added and not removed_files:
+            # the anchor is the commit point: debris next to a FRESH
+            # anchor is a completed maintain whose final cleanup didn't
+            # run — disposable, not a correctness signal
+            for nm in debris:
+                fs.delete(path(f"{root}/{nm}"), True)
+            return {"appended": 0, "removed": 0, "cells_rewritten": 0}
+        rebuild = f"rebuild with {self.builder}"
+        if debris:
+            # drift + debris = a maintain crashed MID-flight (before its
+            # anchor committed); the postings may be part-swapped
+            raise ValueError(
+                f"{self.label} index under {root} has crashed-maintenance "
+                f"debris ({', '.join(debris)}) — {rebuild}"
+            )
+        if removed_files:
+            raise ValueError(
+                f"{self.label} index under {root} cannot be maintained "
+                f"incrementally: {len(removed_files)} indexed file(s) "
+                f"retired/rewritten (compaction or materialize) — {rebuild}"
+            )
+        post_root = f"{root}/postings"
+        have = spark.read.parquet(post_root).count()  # footers only
+        if "n_vectors" in meta and have != meta["n_vectors"]:
+            raise ValueError(
+                f"postings under {root} hold {have} vectors but the "
+                f"anchor recorded {meta['n_vectors']} — a crashed "
+                f"maintain left partial state; {rebuild} (appending "
+                "again would duplicate candidates)"
+            )
+        if not {"src_file", "row_idx"} <= set(postings.columns):
+            raise ValueError(
+                f"{self.label} postings under {root} predate row-identity "
+                f"postings (no src_file/row_idx columns) — {rebuild}"
+            )
+        added_dv = [f for f in added if f.startswith("_dv/")]
+        added_data = [f for f in added if not f.startswith("_dv/")]
+
+        n_removed = 0
+        cells_rewritten = 0
+        trash = None
+        if added_dv:
+            dv_paths = [f"{table_path.rstrip('/')}/{f}" for f in added_dv]
+            doomed = (
+                spark.read.parquet(*dv_paths)
+                .select("src_file", "row_idx")
+                .distinct()
+            )
+            # dv_delete_where can tombstone any fraction of the table in
+            # one batch, and an unconditional broadcast would force that
+            # set onto the driver and every executor: hint it only when
+            # the batches' on-disk bytes (the statistic Catalyst itself
+            # estimates broadcastability from) fit the session's
+            # threshold, else leave the join to AQE
+            dv_bytes = sum(
+                fs.getContentSummary(path(p)).getLength() for p in dv_paths
+            )
+            if 0 <= dv_bytes <= _broadcast_threshold_bytes(spark):
+                doomed = F.broadcast(doomed)
+            key = ["src_file", "row_idx"]
+            # one column-pruned postings scan against the tombstone set
+            affected = sorted(
+                r["cell"]
+                for r in postings.join(doomed, key, "left_semi")
+                .select("cell")
+                .distinct()
+                .collect()
+            )
+            if affected:
+                token = uuid.uuid4().hex[:8]
+                stage = f"{root}/_maintain_stage_{token}"
+                trash = f"{root}/_maintain_trash_{token}"
+                live_aff = postings.where(F.col("cell").isin(affected))
+                before_aff = live_aff.count()
+                live_aff.join(doomed, key, "left_anti").repartition(
+                    "cell"
+                ).write.partitionBy("cell").parquet(stage)
+                # every affected cell emptied -> no cell= dirs to read
+                # (a blanket except here would hide genuine read faults)
+                staged = _cells(spark, stage)
+                after_aff = spark.read.parquet(stage).count() if staged else 0
+                n_removed = before_aff - after_aff
+                # swap: old partitions OUT to trash (recoverable until the
+                # anchor commits), staged replacements IN; a cell whose
+                # every row was removed simply has no staged dir — probes
+                # already tolerate missing cell partitions
+                fs.mkdirs(path(trash))
+                moves = [
+                    (f"{post_root}/cell={c}", f"{trash}/cell={c}")
+                    for c in affected
+                    if fs.exists(path(f"{post_root}/cell={c}"))
+                ] + [
+                    (f"{stage}/cell={c}", f"{post_root}/cell={c}")
+                    for c in sorted(staged or ())
+                ]
+                for src, dst in moves:
+                    if not fs.rename(path(src), path(dst)):
+                        raise IOError(
+                            f"{self.kind} maintain: rename {src} -> {dst} "
+                            "failed"
+                        )
+                fs.delete(path(stage), True)
+                cells_rewritten = len(affected)
+
+        if added_data:
+            self.append(spark, table_path, emb_col, id_col, added_data, meta)
+        # the ONLY legitimate unreadable-postings state is "every cell
+        # emptied"; a genuine read failure must propagate rather than
+        # commit an n_vectors=0 anchor over a correct index
+        final = (
+            spark.read.parquet(post_root).count()
+            if _cells(spark, post_root)
+            else 0
+        )
+        _write_small_file(
+            spark,
+            f"{root}/meta.json",
+            json.dumps(
+                {
+                    # the kind's own anchor keys pass through untouched
+                    **meta,
+                    # anchor = exactly what the index now covers (built ∪
+                    # added), never a re-listing: commits landing during
+                    # THIS maintain keep the gate tripping until the next
+                    "files": sorted(set(meta["files"]) | set(added)),
+                    "n_vectors": int(final),
+                },
+                indent=0,
+            ).encode(),
+        )
+        if trash is not None:
+            fs.delete(path(trash), True)
+        return {
+            "appended": int(final - (have - n_removed)),
+            "removed": int(n_removed),
+            "cells_rewritten": int(cells_rewritten),
+        }
+
+    def search(
+        self,
+        spark,
+        table_path,
+        score,
+        *,
+        n_queries,
+        n_probes,
+        id_col,
+        emb_col,
+        allow_stale,
+        cols,
+        exact=True,
+        books=None,
+        meta=None,
+    ) -> DataFrame:
+        """The query side: gate, rank each query's ``n_probes`` nearest
+        cells with the persisted coarse quantizer, list the ``cell=``
+        partitions, and hand ``score`` a :class:`_Probe` whose candidate
+        read lists ONLY the probed cells' directories (stronger than a
+        partition filter, which still lists every partition at planning
+        time).  Under :data:`PROBE_COLLECT_MAX_ROWS` one narrow job
+        computes every query's cells AND exact norm and they come back as
+        VALUES relations, so the scoring job's broadcast sides carry
+        literal rows instead of re-running the query scan and literal
+        scoring; the round trip is bit-identical (repr discipline).
+        ``books``/``meta``: codebooks and anchor the caller already read."""
+        from ..functions import values_df
+        from .mor import read_mor
+
+        if n_probes < 1:
+            raise ValueError("n_probes must be >= 1")
+        root = self.root(table_path, emb_col)
+        if books is None:
+            books = self.codebooks(spark, table_path, emb_col)
+        # a table that gained/retired files — or tombstoned rows via a
+        # deletion-vector batch — since the anchor has vectors the postings
+        # don't know (or shouldn't serve): a probe would silently LOSE or
+        # RESURRECT results
+        if not allow_stale:
+            _, added, removed = self.drift(spark, table_path, emb_col, meta)
+            if added or removed:
+                raise ValueError(
+                    f"{self.label} index under {root} is STALE: the "
+                    "table's file set (data + deletion-vector batches) "
+                    f"changed since the last build or maintain "
+                    f"({len(added)} added, {len(removed)} removed) — "
+                    f"maintain_{self.kind}_index folds appended files AND "
+                    "deletion-vector batches in incrementally (rebuild "
+                    "only for retired files), or pass allow_stale=True to "
+                    "search the indexed subset anyway"
+                )
+        # query vectors are read through the deletion vectors too: a
+        # tombstoned row must neither query nor be served
+        queries = (
+            read_mor(spark, table_path)
+            .select(id_col, emb_col)
+            .where(F.col(id_col) < n_queries)
+        )
+        nsq = F.expr(normsq_expr(emb_col, duck=False, exact=exact))
+        consts = _centroid_consts(spark, books[0])
+        if consts is not None and n_queries * n_probes <= PROBE_COLLECT_MAX_ROWS:
+            rows = queries.select(
+                F.col(id_col).alias("query_id"),
+                _best_cells_col(emb_col, consts, n_probes).alias("cells"),
+                nsq.alias("q_nsq"),
+            ).collect()
+            cell_rows = [(r[0], c, r[2]) for r in rows for c in r[1]]
+            cells = values_df(
+                spark, "query_id bigint, cell int, q_nsq double", cell_rows
+            )
+            norms = values_df(
+                spark,
+                "query_id bigint, q_nsq double",
+                [(r[0], r[2]) for r in rows],
+            )
+            probed = {c for _, c, _ in cell_rows}
+        else:
+            norms = queries.select(
+                F.col(id_col).alias("query_id"), nsq.alias("q_nsq")
+            )
+            cells = (
+                assign_cells_fast(
+                    queries, books[0], id_col, top_p=n_probes, emb_col=emb_col
+                )
+                .withColumnRenamed(id_col, "query_id")
+                .join(norms, "query_id")
+            )
+            probed = {r[0] for r in cells.select("cell").distinct().collect()}
+        post = f"{root}/postings"
+        present = _cells(spark, post)
+        if present is None:
+            raise self._absent(root)
+        # a trained cell can hold ZERO corpus vectors (the empty-cell
+        # carry keeps its centroid alive; a maintain can empty it):
+        # probing it contributes no candidates
+        probed = sorted(probed & present)
+        if not probed:  # no query below the id bound, or only empty cells
+            return spark.createDataFrame(
+                [], "query_id long, neighbor_id long, cos_sim double, rn long"
+            )
+        cand = (
+            spark.read.option("basePath", post)
+            .parquet(*[f"{post}/cell={c}" for c in probed])
+            .withColumn("cell", F.col("cell").cast("int"))
+            # prune the row-identity maintenance columns out of the scan
+            .select(id_col, *cols, "cell")
+        )
+        return score(_Probe(queries, cells, norms, cand))
+
+
+def _ivf_encode(df, books, meta, id_col, emb_col) -> DataFrame:
+    """IVF postings: ``(id, embedding, src_file, row_idx, nsq, cell)`` —
+    full embeddings with the exact norm precomputed, so a probe scores
+    candidates without recomputing it.  Assignment is keyed on the MOR
+    row identity, never ``id_col``: a duplicate id must not cross-join
+    (the "file:idx" key is injective — row_idx is numeric, so the suffix
+    after the last ':' is unambiguous)."""
+    (book,) = books
+    keyed = with_norm(
+        _spread(df.select(id_col, emb_col, "src_file", "row_idx")),
+        emb_col,
+        exact=True,
+    )
+    consts = _centroid_consts(df.sparkSession, book)
+    if consts is not None:
+        # literal assignment: the cell tag is computed inline on the
+        # corpus scan — no join-back, no assignment shuffles
+        return keyed.withColumn(
+            "cell", F.element_at(_best_cells_col(emb_col, consts), 1)
+        ).repartition("cell")
+    keyed = keyed.withColumn(
+        "_rowkey", F.concat_ws(":", F.col("src_file"), F.col("row_idx"))
+    )
+    assign = assign_cells(_comp(keyed, "_rowkey", emb_col), book, "_rowkey")
+    # one shuffle on cell: each output file holds exactly one cell, so
+    # probed-cell reads never touch foreign bytes
+    return keyed.join(assign, "_rowkey").drop("_rowkey").repartition("cell")
+
+
+_IVF = _Sidecar("ivf", ("codebook",), _ivf_encode)
+
+
 def build_ivf_index(
     spark,
     table_path: str,
@@ -1103,300 +1591,26 @@ def build_ivf_index(
     sample_mod: int = IVF_SAMPLE_MOD,
 ) -> int:
     """Persist a trained IVF index as a table sidecar —
-    ``<table>/_index/ivf/<emb_col>/{codebook,postings}`` — the
-    bloom-sidecar convention (underscore dir, invisible to base scans,
-    rebuilt on demand).  Returns the number of live cells.
+    ``<table>/_index/ivf/<emb_col>/{codebook,postings,meta.json}``.
+    Returns the number of trained cells.
 
     The POSTING LISTS are the point of the sidecar (the FAISS / Delta
-    liquid-clustering design): the corpus is assigned once at build
-    time and RECLUSTERED by cell — ``postings/cell=<c>/`` hive
-    partitions holding ``(id, embedding, nsq)`` with the norm
-    precomputed — so a probe's candidate read is partition-pruned to
-    its probed cells' files only.  Without this, every search would
-    re-run the full-corpus assignment scan (the r10 shape): fine for
-    one batch search, wrong for point-query serving at 100 TB.
-
-    Each posting row also carries the corpus row's MOR identity
-    ``(src_file, row_idx)`` — the same ``(table-relative file, parquet
-    row index)`` the deletion-vector store keys on — so
-    :func:`maintain_ivf_index` can fold a later DV batch into the index
-    as a PRECISE anti-join (no assumption that ``id_col`` is unique,
-    no corpus re-read to learn which vectors a tombstone hit).  Cell
-    assignment is keyed on that same identity at build AND append time,
-    so a duplicate id within an indexed batch yields two independent
-    posting rows — never a cross-product.
-
-    :func:`read_ivf_index` / :func:`read_ivf_postings` load the two
-    halves back; :func:`ivf_search_indexed` is the probe path."""
-    from .mor import _live, _read_dv, _with_identity, list_dv_files
-    from .mutate import (
-        _fs,
-        _rel_to_table,
-        is_partitioned,
-    )
-
-    # read through the deletion vectors: indexing tombstoned rows would
-    # serve deleted vectors as neighbors.  The staleness anchor is this
-    # SNAPSHOT's file list (data + DV batches, pinned HERE, before the
-    # training scans) — re-listing after the build scans would fold in
-    # files a concurrent commit added that the index never saw.
-    listing = reader.list_files(spark, table_path, recursive=True)
-    data_files = [f.path for f in listing]
-    dv_files = list_dv_files(spark, table_path)
-    built_from = sorted(
-        _rel_to_table(table_path, f) for f in data_files + dv_files
-    )
-    base_path = table_path if is_partitioned(spark, table_path) else None
-    df = _rename_identity(
-        _live(
-            _with_identity(spark, table_path, listing, base_path),
-            _read_dv(spark, table_path),
-        )
-    )
-    codebook = kmeans_centroids(
-        df, num_cells, iters, sample_mod, id_col, emb_col
-    )
-    root = _ivf_root(table_path, emb_col)
-    # the sidecar writes run under the same INDEX-scoped advisory lock
-    # as refresh/maintain: a rebuild interleaving with a maintain would
-    # otherwise overwrite postings the maintain is mid-swap on (the
-    # training above is read-only and stays outside the lock)
-    from .mutate import _writer_lock
-
-    jvm, fs, root_p = _fs(spark, root)
-    if not fs.exists(root_p):
-        fs.mkdirs(root_p)  # the lock file needs the dir on first build
-    with _writer_lock(spark, root, 30.0):
-        # a crashed maintain_ivf_index leaves _maintain_* stage/trash
-        # dirs as its loud tripwire; a rebuild supersedes them — sweep
-        # so the debris check doesn't refuse forever after the rebuild
-        for st in fs.listStatus(root_p):
-            if st.getPath().getName().startswith("_maintain_"):
-                fs.delete(st.getPath(), True)
-        codebook.coalesce(1).write.mode("overwrite").parquet(
-            f"{root}/codebook"
-        )
-        book = spark.read.parquet(f"{root}/codebook")
-        # assignment is keyed on the MOR row identity, not id_col: a
-        # duplicate id within the indexed batch would otherwise
-        # cross-join posting rows against both duplicates' cell
-        # assignments (mismatched (identity, cell) pairs, inflated
-        # counts).  (src_file, row_idx) is unique by construction, and
-        # the string key "file:idx" is injective because row_idx is
-        # numeric — the suffix after the LAST ':' parses back
-        # unambiguously even if src_file itself contains ':'.
-        keyed = with_norm(
-            _spread(df.select(id_col, emb_col, "src_file", "row_idx")),
-            emb_col,
-            exact=True,
-        )
-        consts = _centroid_consts(spark, book)
-        if consts is not None:
-            # literal assignment: the cell tag is computed inline on the
-            # corpus scan — no _rowkey join-back, no assignment shuffles
-            # (duplicate ids are trivially safe: nothing joins on id)
-            postings = keyed.withColumn(
-                "cell", F.element_at(_best_cells_col(emb_col, consts), 1)
-            ).repartition("cell")
-        else:
-            keyed = keyed.withColumn(
-                "_rowkey",
-                F.concat_ws(":", F.col("src_file"), F.col("row_idx")),
-            )
-            assign = assign_cells(
-                _comp(keyed, "_rowkey", emb_col), book, "_rowkey"
-            )
-            postings = (
-                keyed.join(assign, "_rowkey")
-                .drop("_rowkey")
-                # one shuffle on cell: each output file holds exactly one
-                # cell, so probed-cell reads never touch foreign bytes
-                .repartition("cell")
-            )
-        postings.write.partitionBy("cell").mode("overwrite").parquet(
-            f"{root}/postings"
-        )
-        # staleness anchor: the postings pin the build snapshot's file
-        # list (computed above, BEFORE the training scans); DML that
-        # adds or retires table files — or tombstones rows via a DV
-        # batch — silently desyncs the index, so searches verify it
-        # (the bloom sidecar degrades gracefully via always-candidate
-        # unindexed files; a posting list cannot — a missing vector is
-        # a silently lost search result).  n_vectors lets
-        # refresh/maintain detect a half-applied earlier pass.
-        import json
-
-        from .mutate import _write_small_file
-
-        n_vectors = spark.read.parquet(f"{root}/postings").count()
-        _write_small_file(
-            spark,
-            f"{root}/meta.json",
-            json.dumps(
-                {"files": built_from, "n_vectors": n_vectors}, indent=0
-            ).encode(),
-        )
-    return book.select("cell").distinct().count()
-
-
-def refresh_ivf_index(
-    spark,
-    table_path: str,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    lock_wait_seconds: float = 30.0,
-) -> int:
-    """O(new rows) index maintenance — the bloom-refresh analog: assign
-    ONLY the files added since the last build/refresh with the persisted
-    codebook and append them to their posting lists, then advance the
-    staleness anchor.  No retraining, no re-scan of already-indexed data
-    — the steady-state path for an append-mostly corpus at 100 TB
-    (retrain with :func:`build_ivf_index` when the distribution shifts;
-    the codebook is the recall budget, not the postings).
-
-    Only an APPEND-shaped change qualifies: retired/rewritten files or
-    new deletion-vector batches mean indexed vectors must LEAVE the
-    postings, which is a rebuild (``ValueError`` says so).  A crash
-    between the postings append and the anchor update leaves the gate
-    tripping (safe — searches refuse); the next refresh detects the
-    half-applied append via the anchor's ``n_vectors`` and demands a
-    rebuild instead of appending duplicates.
-
-    Two refreshers racing would both read the same anchor and append the
-    same files twice, so the whole pass runs under an advisory lock
-    scoped to the INDEX directory (never contends with table writers).
-
-    Returns the number of vectors appended (0 = already fresh)."""
-    import json
-
-    from .mutate import _write_small_file, _writer_lock
-
-    root = _ivf_root(table_path, emb_col)
-    codebook = read_ivf_index(spark, table_path, emb_col)
-    if codebook is None or read_ivf_postings(spark, table_path, emb_col) is None:
-        raise ValueError(
-            f"no IVF index under {root} — run build_ivf_index first"
-        )
-    with _writer_lock(spark, root, lock_wait_seconds):
-        meta = _ivf_meta(spark, table_path, emb_col)
-        built = set(meta["files"])
-        now = _table_file_set(spark, table_path)
-        removed = built - now
-        added = sorted(now - built)
-        added_dv = [f for f in added if f.startswith("_dv/")]
-        if removed or added_dv:
-            raise ValueError(
-                f"IVF index under {root} cannot refresh incrementally: "
-                f"{len(removed)} indexed file(s) retired/rewritten and "
-                f"{len(added_dv)} new deletion-vector batch(es) — vectors "
-                "must LEAVE the postings, which is a rebuild "
-                "(build_ivf_index)"
-            )
-        if not added:
-            return 0
-        have = spark.read.parquet(f"{root}/postings").count()  # footers only
-        if "n_vectors" in meta and have != meta["n_vectors"]:
-            raise ValueError(
-                f"postings under {root} hold {have} vectors but the "
-                f"anchor recorded {meta['n_vectors']} — a crashed "
-                "refresh left a partial append; rebuild with "
-                "build_ivf_index (appending again would duplicate "
-                "candidates)"
-            )
-        _require_identity_postings(spark, table_path, emb_col, root)
-        _append_files_to_postings(
-            spark, table_path, root, codebook, added, id_col, emb_col
-        )
-        # footer counts before/after, not a re-execution of the assignment
-        appended = spark.read.parquet(f"{root}/postings").count() - have
-        _write_small_file(
-            spark,
-            f"{root}/meta.json",
-            json.dumps(
-                {
-                    # anchor = exactly what the index now covers (built ∪
-                    # added), never a re-listing — files a concurrent commit
-                    # adds during THIS refresh stay unindexed and keep the
-                    # gate tripping until the next refresh
-                    "files": sorted(built | set(added)),
-                    "n_vectors": int(have + appended),
-                },
-                indent=0,
-            ).encode(),
-        )
-        return int(appended)
-
-
-def _require_identity_postings(
-    spark, table_path: str, emb_col: str, root: str
-) -> None:
-    """Refuse to extend posting lists that predate the row-identity
-    columns: appending identity-bearing rows next to identity-less ones
-    would leave the store's schema footer-dependent, and a later
-    maintain could not target removals precisely."""
-    cols = set(read_ivf_postings(spark, table_path, emb_col).columns)
-    if not {"src_file", "row_idx"} <= cols:
-        raise ValueError(
-            f"IVF postings under {root} predate row-identity postings "
-            "(no src_file/row_idx columns) — rebuild with "
-            "build_ivf_index"
-        )
-
-
-def _append_files_to_postings(
-    spark,
-    table_path: str,
-    root: str,
-    codebook: DataFrame,
-    added_data: list[str],
-    id_col: str,
-    emb_col: str,
-) -> None:
-    """Assign the added files' LIVE rows with the persisted codebook and
-    append them — with their MOR row identity — to the posting lists.
-    The read goes through the deletion vectors so a file whose rows were
-    tombstoned in the same commit that added it (the dv_update shape:
-    copy file + tombstone batch together) never indexes dead rows."""
-    from .mor import _live, _read_dv, _with_identity
-    from .mutate import is_partitioned
-
-    base_path = table_path if is_partitioned(spark, table_path) else None
-    new_df = _rename_identity(
-        _live(
-            _with_identity(
-                spark,
-                table_path,
-                reader.stat_files(spark, table_path, list(added_data)),
-                base_path,
-            ),
-            _read_dv(spark, table_path),
-        )
-    )
-    new_df = new_df.select(id_col, emb_col, "src_file", "row_idx")
-    keyed = with_norm(_spread(new_df), emb_col, exact=True)
-    consts = _centroid_consts(spark, codebook)
-    if consts is not None:
-        # inline literal assignment (same as build): no join keyed on
-        # anything, so duplicate ids cannot cross-join by construction
-        postings_new = keyed.withColumn(
-            "cell", F.element_at(_best_cells_col(emb_col, consts), 1)
-        ).repartition("cell")
-    else:
-        # identity-keyed assignment, same reason as build_ivf_index: a
-        # duplicate id within one appended batch must not cross-join (the
-        # "file:idx" string key is injective — row_idx is numeric, so the
-        # suffix after the last ':' is unambiguous)
-        keyed = keyed.withColumn(
-            "_rowkey", F.concat_ws(":", F.col("src_file"), F.col("row_idx"))
-        )
-        assign = assign_cells(
-            _comp(keyed, "_rowkey", emb_col), codebook, "_rowkey"
-        )
-        postings_new = (
-            keyed.join(assign, "_rowkey").drop("_rowkey").repartition("cell")
-        )
-    postings_new.write.partitionBy("cell").mode("append").parquet(
-        f"{root}/postings"
+    liquid-clustering design): the corpus is assigned once at build time
+    and reclustered by cell — ``postings/cell=<c>/`` partitions holding
+    ``(id, embedding, nsq)`` plus the row identity — so a probe's
+    candidate read is partition-pruned to its probed cells' files
+    (:func:`ivf_search_indexed`).  The identity lets
+    :func:`maintain_ivf_index` fold a later deletion-vector batch in as a
+    precise anti-join, with no assumption that ``id_col`` is unique.
+    :func:`read_ivf_index` / :func:`read_ivf_postings` load the halves."""
+    return _IVF.build(
+        spark,
+        table_path,
+        emb_col,
+        id_col,
+        lambda df: [
+            kmeans_centroids(df, num_cells, iters, sample_mod, id_col, emb_col)
+        ],
     )
 
 
@@ -1410,327 +1624,43 @@ def maintain_ivf_index(
     """Fold BOTH change shapes a live table accumulates into the
     persisted IVF index without retraining or re-scanning the corpus:
 
-    - **added data files** append their live rows to the posting lists
-      with the persisted codebook (exactly :func:`refresh_ivf_index`);
-    - **added deletion-vector batches** REMOVE their tombstoned rows —
-      the gap refresh refuses.  Because every posting row carries its
-      MOR identity ``(src_file, row_idx)`` (the same key the DV store
-      uses), removal is a precise anti-join: read the new batches
-      (O(new tombstones); broadcast only when their on-disk bytes fit
-      the session's autoBroadcastJoinThreshold — a bulk delete's
-      tombstone set shuffle-joins instead of being forced onto every
-      executor), find the affected cells with
-      one column-pruned postings scan, and rewrite ONLY those cells'
-      hive partitions via stage-then-swap.  A dv_update (tombstone +
-      same-id copy in one commit) therefore maintains cleanly: the old
-      row's identity leaves, the copy file's live rows enter — row
-      identity, not id equality, decides, so an id re-used by the copy
-      is never over-removed.
+    - **added data files** append their live rows to the posting lists,
+      assigned with the persisted codebook (the codebook is the recall
+      budget; retrain with :func:`build_ivf_index` when the distribution
+      shifts);
+    - **added deletion-vector batches** REMOVE their tombstoned rows by
+      row identity: read the new batches (broadcast only when their
+      on-disk bytes fit the session's autoBroadcastJoinThreshold), find
+      the affected cells with one column-pruned postings scan, and
+      rewrite ONLY those cells' partitions via stage-then-swap.  A
+      dv_update (tombstone + same-id copy in one commit) maintains
+      cleanly: identity, not id equality, decides.
 
-    At 100 TB this is the steady-state index maintenance story: deletes
-    are a constant trickle and a full rebuild per DV batch (training +
-    corpus assignment) would dwarf the delete itself; this path costs
-    O(new tombstones + affected-cell bytes + new-file bytes).
-
+    Cost: O(new tombstones + affected-cell bytes + new-file bytes).
     Still a rebuild: retired/rewritten data files (compaction,
-    materialize_deletes) — the postings reference files that no longer
-    exist.  Crash discipline: the staleness anchor advances LAST, so a
-    crash anywhere leaves the gate tripping (searches refuse);
-    ``_maintain_*`` stage/trash debris next to DRIFT and the anchor's
-    ``n_vectors`` both make the next maintain demand a rebuild instead
-    of guessing (``build_ivf_index`` sweeps the debris; debris next to
-    a FRESH anchor is a committed maintain's failed final cleanup and
-    is swept in place).  Old cell partitions are
-    renamed into a trash dir, never deleted, until the anchor commits —
-    the duplicates-never-loss ordering.
-
-    Two maintainers racing would both read the same anchor and fold the
-    same changes twice, so the whole pass runs under an advisory lock
-    scoped to the INDEX directory — it never contends with the table's
-    own writer lock, only with other refresh/maintain passes.
+    materialize).  Crash discipline: the anchor advances LAST, so a crash
+    anywhere leaves the gate tripping; ``_maintain_*`` stage/trash debris
+    next to drift, or a postings count that disagrees with the anchor,
+    makes the next maintain demand a rebuild (debris next to a FRESH
+    anchor is a committed maintain's failed cleanup and is swept).  Old
+    cell partitions move to a trash dir, never deleted, until the anchor
+    commits — duplicates, never loss.  The pass runs under the
+    index-scoped advisory lock.
 
     Returns ``{"appended": n, "removed": n, "cells_rewritten": n}``."""
-    from .mutate import _writer_lock
-
-    root = _ivf_root(table_path, emb_col)
-    codebook = read_ivf_index(spark, table_path, emb_col)
-    postings = read_ivf_postings(spark, table_path, emb_col)
-    if codebook is None or postings is None:
-        raise ValueError(
-            f"no IVF index under {root} — run build_ivf_index first"
-        )
-    with _writer_lock(spark, root, lock_wait_seconds):
-        return _maintain_locked(spark, table_path, emb_col, id_col, root)
-
-
-def _maintain_locked(
-    spark,
-    table_path,
-    emb_col,
-    id_col,
-    root,
-    *,
-    kind: str = "IVF",
-    rebuild_with: str = "build_ivf_index",
-    read_postings=None,
-    meta_reader=None,
-    append_files=None,
-) -> dict:
-    """The maintenance fold shared by the IVF and IVFPQ sidecars (the
-    caller holds the index lock).  The fold itself is postings-schema-
-    agnostic — tombstone removal anti-joins whole rows on the MOR
-    identity and the stage-then-swap moves hive partitions — so the two
-    indexes differ only in the hooks: how postings/meta are read and how
-    an added file's live rows are encoded for append.  Defaults are the
-    IVF sidecar's; :func:`..pq.maintain_ivfpq_index` passes its own."""
-    import json
-    import uuid as _uuid
-
-    from .mutate import _fs, _write_small_file
-
-    if read_postings is None:
-        read_postings = lambda: read_ivf_postings(  # noqa: E731
-            spark, table_path, emb_col
-        )
-    if meta_reader is None:
-        meta_reader = lambda: _ivf_meta(spark, table_path, emb_col)  # noqa: E731
-    if append_files is None:
-
-        def append_files(added_data):
-            # re-read the codebook INSIDE the lock — a rebuild that just
-            # committed could have swapped it since the wrapper's check
-            _append_files_to_postings(
-                spark,
-                table_path,
-                root,
-                read_ivf_index(spark, table_path, emb_col),
-                added_data,
-                id_col,
-                emb_col,
-            )
-
-    # re-read the postings INSIDE the lock: the wrapper's DataFrames
-    # pinned their file listings before the lock was held, and a
-    # maintainer (or rebuild) that just committed could have swapped
-    # cell partitions since
-    postings = read_postings()
-    jvm, fs, root_p = _fs(spark, root)
-    debris = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(root_p)
-        if st.getPath().getName().startswith("_maintain_")
-    )
-    meta = meta_reader()
-    built = set(meta["files"])
-    now = _table_file_set(spark, table_path)
-    removed_files = built - now
-    added = sorted(now - built)
-    if not added and not removed_files:
-        # the anchor is the commit point: debris next to a FRESH anchor
-        # is a completed maintain whose final cleanup didn't run —
-        # disposable, not a correctness signal
-        for nm in debris:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{nm}"), True)
-        return {"appended": 0, "removed": 0, "cells_rewritten": 0}
-    if debris:
-        # drift + debris = a maintain crashed MID-flight (before its
-        # anchor committed); the postings may be part-swapped — rebuild
-        raise ValueError(
-            f"{kind} index under {root} has crashed-maintenance debris "
-            f"({', '.join(debris)}) — rebuild with {rebuild_with}"
-        )
-    if removed_files:
-        raise ValueError(
-            f"{kind} index under {root} cannot be maintained "
-            f"incrementally: {len(removed_files)} indexed file(s) "
-            "retired/rewritten (compaction or materialize) — rebuild "
-            f"with {rebuild_with}"
-        )
-    post_root = f"{root}/postings"
-    have = spark.read.parquet(post_root).count()  # footers only
-    if "n_vectors" in meta and have != meta["n_vectors"]:
-        raise ValueError(
-            f"postings under {root} hold {have} vectors but the "
-            f"anchor recorded {meta['n_vectors']} — a crashed "
-            "refresh/maintain left partial state; rebuild with "
-            f"{rebuild_with}"
-        )
-    if not {"src_file", "row_idx"} <= set(postings.columns):
-        raise ValueError(
-            f"{kind} postings under {root} predate row-identity "
-            "postings (no src_file/row_idx columns) — rebuild with "
-            f"{rebuild_with}"
-        )
-    added_dv = [f for f in added if f.startswith("_dv/")]
-    added_data = [f for f in added if not f.startswith("_dv/")]
-
-    n_removed = 0
-    cells_rewritten = 0
-    trash = None
-    if added_dv:
-        doomed = (
-            spark.read.parquet(
-                *[f"{table_path.rstrip('/')}/{f}" for f in added_dv]
-            )
-            .select("src_file", "row_idx")
-            .distinct()
-        )
-        # The doomed side is the NEW batches only — small when deletes
-        # are the steady-state trickle, but nothing enforces that:
-        # dv_delete_where can tombstone any fraction of the table in one
-        # batch, and an unconditional F.broadcast hint would force that
-        # set onto the driver and every executor regardless of size (an
-        # OOM at scale where AQE left alone picks a shuffle join).  So
-        # size-gate the hint on the batches' on-disk bytes — one
-        # getContentSummary per batch file, metadata-scale, and the same
-        # file-size statistic Catalyst itself estimates broadcastability
-        # from — and above the session's own threshold drop the hint
-        # entirely (plain shuffle join; AQE may still choose to
-        # broadcast if runtime stats allow).
-        dv_bytes = sum(
-            fs.getContentSummary(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{table_path.rstrip('/')}/{f}"
-                )
-            ).getLength()
-            for f in added_dv
-        )
-        threshold = _broadcast_threshold_bytes(spark)
-        doomed_hinted = (
-            F.broadcast(doomed) if 0 <= dv_bytes <= threshold else doomed
-        )
-        # one column-pruned postings scan against the (maybe-hinted)
-        # tombstone set
-        affected = sorted(
-            r["cell"]
-            for r in postings.join(
-                doomed_hinted, ["src_file", "row_idx"], "left_semi"
-            )
-            .select("cell")
-            .distinct()
-            .collect()
-        )
-        if affected:
-            token = _uuid.uuid4().hex[:8]
-            stage = f"{root}/_maintain_stage_{token}"
-            trash = f"{root}/_maintain_trash_{token}"
-            live_aff = postings.where(F.col("cell").isin(affected))
-            before_aff = live_aff.count()
-            live_aff.join(
-                doomed_hinted, ["src_file", "row_idx"], "left_anti"
-            ).repartition("cell").write.partitionBy("cell").parquet(stage)
-            # every affected cell fully emptied -> the staged write has
-            # no cell= subdirectories and a parquet read would fail on
-            # schema inference.  Detect THAT case by listing, and let
-            # any genuine read failure (transient I/O, corrupt stage
-            # write) propagate — a blanket except here silently
-            # inflated the reported `removed` count.
-            stage_p = jvm.org.apache.hadoop.fs.Path(stage)
-            staged_cells = [
-                st.getPath().getName()
-                for st in fs.listStatus(stage_p)
-                if st.isDirectory()
-                and st.getPath().getName().startswith("cell=")
-            ]
-            after_aff = (
-                spark.read.parquet(stage).count() if staged_cells else 0
-            )
-            n_removed = before_aff - after_aff
-            # swap: old partitions OUT to trash (recoverable until the
-            # anchor commits), staged replacements IN; a cell whose
-            # every row was removed simply has no staged dir — probes
-            # already tolerate missing cell partitions
-            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(trash))
-            for c in affected:
-                src_p = jvm.org.apache.hadoop.fs.Path(
-                    f"{post_root}/cell={c}"
-                )
-                if fs.exists(src_p) and not fs.rename(
-                    src_p,
-                    jvm.org.apache.hadoop.fs.Path(f"{trash}/cell={c}"),
-                ):
-                    raise IOError(
-                        f"ivf maintain: rename {src_p} -> trash failed"
-                    )
-            for st in fs.listStatus(stage_p):
-                nm = st.getPath().getName()
-                if st.isDirectory() and nm.startswith("cell="):
-                    if not fs.rename(
-                        st.getPath(),
-                        jvm.org.apache.hadoop.fs.Path(
-                            f"{post_root}/{nm}"
-                        ),
-                    ):
-                        raise IOError(
-                            f"ivf maintain: rename {nm} in failed"
-                        )
-            fs.delete(stage_p, True)
-            cells_rewritten = len(affected)
-
-    if added_data:
-        append_files(added_data)
-    # same discipline as the stage-dir count above: the ONLY legitimate
-    # unreadable-postings state is "every cell emptied" (no cell= dirs
-    # left), detected by listing; a genuine read failure must propagate —
-    # defaulting final to 0 here would commit an n_vectors=0 anchor over
-    # a correct index and force a needless full rebuild at the next
-    # maintain (plus a nonsense negative `appended` in the stats)
-    post_p = jvm.org.apache.hadoop.fs.Path(post_root)
-    final_cells = fs.exists(post_p) and any(
-        st.isDirectory() and st.getPath().getName().startswith("cell=")
-        for st in fs.listStatus(post_p)
-    )
-    final = spark.read.parquet(post_root).count() if final_cells else 0
-    appended = final - (have - n_removed)
-    _write_small_file(
-        spark,
-        f"{root}/meta.json",
-        json.dumps(
-            {
-                # non-fold anchor keys (e.g. the IVFPQ geometry) pass
-                # through untouched — a maintain must never strip what a
-                # build recorded
-                **meta,
-                # anchor = exactly what the index now covers (built ∪
-                # added), never a re-listing — concurrent commits
-                # during THIS maintain stay un-anchored and keep the
-                # gate tripping until the next maintain
-                "files": sorted(built | set(added)),
-                "n_vectors": int(final),
-            },
-            indent=0,
-        ).encode(),
-    )
-    if trash is not None:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(trash), True)
-    return {
-        "appended": int(appended),
-        "removed": int(n_removed),
-        "cells_rewritten": int(cells_rewritten),
-    }
+    return _IVF.maintain(spark, table_path, emb_col, id_col, lock_wait_seconds)
 
 
 def read_ivf_index(spark, table_path: str, emb_col: str = "embedding"):
-    """Load a codebook persisted by :func:`build_ivf_index` (None if the
-    sidecar does not exist)."""
-    root = _ivf_root(table_path, emb_col)
-    for dest in (f"{root}/codebook", root):  # root = pre-r11 flat layout
-        try:
-            return spark.read.parquet(dest)
-        except Exception:
-            continue
-    return None
+    """The codebook persisted by :func:`build_ivf_index` (None if absent;
+    any other read fault raises)."""
+    return _read_or_none(spark, f"{_IVF.root(table_path, emb_col)}/codebook")
 
 
 def read_ivf_postings(spark, table_path: str, emb_col: str = "embedding"):
-    """Load the reclustered posting lists persisted by
-    :func:`build_ivf_index` (None if absent): one hive partition per
-    cell, ``cell`` read back as INT so probe filters prune partitions."""
-    try:
-        df = spark.read.parquet(f"{_ivf_root(table_path, emb_col)}/postings")
-        return df.withColumn("cell", F.col("cell").cast("int"))
-    except Exception:
-        return None
+    """The reclustered posting lists persisted by :func:`build_ivf_index`
+    (None if absent): one partition per cell, ``cell`` read as INT."""
+    return _IVF.postings(spark, table_path, emb_col)
 
 
 def ivf_search_indexed(
@@ -1744,127 +1674,53 @@ def ivf_search_indexed(
     exact: bool = True,
     allow_stale: bool = False,
 ) -> DataFrame:
-    """IVF probe over a PERSISTED index (:func:`build_ivf_index`):
-    assign the query vectors to their ``n_probes`` nearest cells
-    (codebook is cells x dim — broadcast), then score only against the
-    probed cells' posting lists.  Because the postings are hive-
-    partitioned by cell, the candidate read is PARTITION-PRUNED — the
-    scan provably touches only ``probed/num_cells`` of the corpus
-    bytes (asserted via inputFiles in tests/test_operators.py), where
-    the unindexed path re-scans and re-assigns the whole corpus per
-    search.  Results are identical to :func:`ivf_topk_trained` with
-    the same codebook and ``n_probes``.
-
-    The probed-cell set is collected to the driver and the candidate
-    read lists ONLY those cells' directories (the bloom "read only the
-    admitted files" pattern — stronger than a partition filter, which
-    still lists every partition at planning time).  Bounded by
-    ``n_queries * n_probes <= num_cells`` distinct values (metadata
-    scale).
+    """IVF probe over a PERSISTED index (:func:`build_ivf_index`): rank
+    each query vector's ``n_probes`` nearest cells, then score exactly
+    against only those cells' posting lists — the scan touches only
+    ``probed/num_cells`` of the corpus bytes (asserted via inputFiles in
+    tests/test_operators.py).  Results are identical to
+    :func:`ivf_topk_trained` with the same codebook and ``n_probes``.
+    Refuses a stale index unless ``allow_stale``.
 
     Output: (query_id, neighbor_id, cos_sim, rn)."""
-    if n_probes < 1:
-        raise ValueError("n_probes must be >= 1")
-    codebook = read_ivf_index(spark, table_path, emb_col)
-    root = _ivf_root(table_path, emb_col)
-    if codebook is None or read_ivf_postings(spark, table_path, emb_col) is None:
-        raise ValueError(
-            f"no IVF index under {root} — run build_ivf_index first"
-        )
-    # staleness gate: a table that gained/retired files — or tombstoned
-    # rows via a deletion-vector batch — since build has vectors the
-    # postings don't know (or shouldn't serve): a probe would silently
-    # LOSE or RESURRECT results (unlike bloom skipping, which degrades
-    # to always-probe).  One file listing (metadata scale); opt out via
-    # allow_stale.
-    if not allow_stale:
-        built_from = set(_ivf_meta(spark, table_path, emb_col)["files"])
-        now = _table_file_set(spark, table_path)
-        if now != built_from:
-            raise ValueError(
-                f"IVF index under {root} is STALE: the table's file "
-                f"set (data + deletion-vector batches) changed since "
-                f"build_ivf_index ({len(now - built_from)} added, "
-                f"{len(built_from - now)} removed) — maintain_ivf_index "
-                "folds appended files AND deletion-vector batches in "
-                "incrementally (rebuild only for retired files), or "
-                "pass allow_stale=True to search the indexed subset "
-                "anyway"
-            )
-    from .mor import read_mor
 
-    # query vectors read through the deletion vectors too: a tombstoned
-    # row must neither query nor be served
-    qbase = (
-        read_mor(spark, table_path)
-        .select(id_col, emb_col)
-        .where(F.col(id_col) < n_queries)
-    )
-    consts = _centroid_consts(spark, codebook)
-    if consts is not None:
-        # literal probe-cell ranking: ONE narrow job over the n_queries
-        # rows (was: explode + codebook join + two shuffles + window,
-        # then a join-back)
-        qtag = with_norm(qbase, emb_col, exact=exact).withColumn(
-            "cell", F.explode(_best_cells_col(emb_col, consts, n_probes))
+    def score(p: _Probe) -> DataFrame:
+        q = p.queries.select(
+            F.col(id_col).alias("query_id"), F.col(emb_col).alias("q_emb")
+        ).join(p.cells, "query_id")
+        pairs = (
+            _spread(p.cand)
+            .join(F.broadcast(q), "cell")
+            .where(F.col(id_col) != F.col("query_id"))
+            .withColumn(
+                "dot",
+                F.expr(dot_expr("q_emb", emb_col, duck=False, exact=exact)),
+            )
+            .withColumn(
+                "cos_sim",
+                F.round(F.col("dot") / (F.sqrt("q_nsq") * F.sqrt("nsq")), 6),
+            )
         )
-    else:
-        q_cells = assign_cells(
-            _comp(qbase, id_col, emb_col), codebook, id_col, top_p=n_probes
+        w = W.partitionBy("query_id").orderBy(
+            F.col("cos_sim").desc(), F.col(id_col)
         )
-        qtag = with_norm(qbase, emb_col, exact=exact).join(q_cells, id_col)
-    probed = sorted(
-        r["cell"] for r in qtag.select("cell").distinct().collect()
-    )
-    # a trained cell can hold ZERO corpus vectors (the empty-cell carry
-    # keeps its centroid alive, and a sample-trained centroid can win no
-    # full-corpus vector): probing it must contribute zero candidates —
-    # same as ivf_topk_trained — not crash on the missing partition dir.
-    # One fs listing of the postings root (metadata scale).
-    post_root = f"{root}/postings"
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(post_root)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    existing = {
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(jpath)
-        if st.isDirectory() and st.getPath().getName().startswith("cell=")
-    }
-    probed = [c for c in probed if c in existing]
-    if not probed:  # no query vectors below the id bound / empty cells
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rn long"
+        return (
+            pairs.withColumn("rn", F.row_number().over(w).cast("long"))
+            .filter(F.col("rn") <= k)
+            .select(
+                "query_id", F.col(id_col).alias("neighbor_id"), "cos_sim", "rn"
+            )
         )
-    q = qtag.select(
-        F.col(id_col).alias("query_id"),
-        F.col(emb_col).alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("cell").alias("q_list"),
-    )
-    cand = _spread(
-        spark.read.option("basePath", f"{root}/postings")
-        .parquet(*[f"{root}/postings/cell={c}" for c in probed])
-        .withColumn("cell", F.col("cell").cast("int"))
-        # prune the row-identity maintenance columns out of the scan —
-        # the probe needs only (id, embedding, norm, cell)
-        .select(id_col, emb_col, "nsq", "cell")
-    )
-    pairs = (
-        cand.join(
-            F.broadcast(q),
-            (F.col("cell") == F.col("q_list"))
-            & (F.col(id_col) != F.col("query_id")),
-        )
-        .withColumn(
-            "dot", F.expr(dot_expr("q_emb", emb_col, duck=False, exact=exact))
-        )
-        .withColumn(
-            "cos_sim",
-            F.round(F.col("dot") / (F.sqrt("q_nsq") * F.sqrt("nsq")), 6),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cos_sim", "rn")
+
+    return _IVF.search(
+        spark,
+        table_path,
+        score,
+        n_queries=n_queries,
+        n_probes=n_probes,
+        id_col=id_col,
+        emb_col=emb_col,
+        allow_stale=allow_stale,
+        cols=(emb_col, "nsq"),
+        exact=exact,
     )

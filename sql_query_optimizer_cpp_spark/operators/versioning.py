@@ -287,12 +287,6 @@ def _manifest_state(
     return _VersionLog(spark, path).state(name)
 
 
-def _manifest_rel_files(spark: SparkSession, path: str, name: str) -> list[str]:
-    """Table-relative DATA file list a manifest pins (see
-    :func:`_manifest_state`)."""
-    return _manifest_state(spark, path, name)[0]
-
-
 def _resolve_pinned_files(
     spark: SparkSession, path: str, rels: list[str], what: str
 ) -> list[Listed]:
@@ -626,11 +620,6 @@ def _autoversion(spark: SparkSession, path: str) -> None:
         data,
         overwrite=False,
     )
-
-
-def current_version(spark: SparkSession, path: str) -> int | None:
-    vs = table_versions(spark, path)
-    return vs[-1] if vs else None
 
 
 def _read_log_version(log: _VersionLog, version: int | None) -> DataFrame:

@@ -97,21 +97,15 @@ _HELP = """commands:
                         per-file bloom index: build (auto-sized), index
                         just the files DML rewrote, probe-and-read a
                         point lookup, show sidecar stats, drop, or list
-  IVF <name> BUILD [<col>] | REFRESH [<col>] | MAINTAIN [<col>]
+  IVF|IVFPQ <name> BUILD [<col>] | MAINTAIN [<col>]
             | SEARCH <k> [probes] [<col>] | STATS [<col>]
-                        trained-quantizer ANN index: k-means codebook +
-                        cell-partitioned posting lists; REFRESH appends
-                        only new files' vectors; MAINTAIN also folds
-                        deletion-vector batches in (removes tombstoned
-                        vectors by row identity); SEARCH probes only the
-                        query's nearest cells (col defaults: embedding)
-  IVFPQ <name> BUILD [<col>] | MAINTAIN [<col>] | SEARCH <k> [probes] [<col>]
-               | STATS [<col>]
-                        quantized ANN index (FAISS IVFPQ shape): coarse
-                        cells + product-quantization codebooks; postings
-                        hold 16x-compressed CODES only, SEARCH reads just
-                        the probed cells' codes and ADC-scores them (v1:
-                        table drift demands a rebuild)
+                        ANN serving index (col defaults: embedding): IVF =
+                        k-means codebook + cell-partitioned posting lists;
+                        IVFPQ = coarse cells + product-quantization
+                        codebooks, postings hold 16x-compressed CODES only.
+                        MAINTAIN (alias REFRESH) appends new files' vectors
+                        and removes tombstoned ones by row identity; SEARCH
+                        reads only the query's nearest cells
   CHANGES <name> <from> [<to>]  CDC: net row changes between two versions
   CONSTRAINT <name> ADD <cname> <expr> | DROP <cname> | LIST
                         CHECK constraints enforced by UPDATE/MERGE staging
@@ -389,127 +383,30 @@ def handle(
                 read_point_lookup(engine.spark, path, col, parsed),
                 max_rows,
             )
-        if verb == "IVF":
-            from .operators.similarity import (
-                _ivf_meta,
-                _table_file_set,
-                build_ivf_index,
-                ivf_search_indexed,
-                maintain_ivf_index,
-                read_ivf_index,
-                read_ivf_postings,
-                refresh_ivf_index,
-            )
+        if verb in ("IVF", "IVFPQ"):
+            from .operators import pq, similarity
 
+            side, build, search, maintain, built = (
+                (
+                    similarity._IVF,
+                    similarity.build_ivf_index,
+                    similarity.ivf_search_indexed,
+                    similarity.maintain_ivf_index,
+                    "trained codebook ({} trained cell(s)) + posting lists",
+                )
+                if verb == "IVF"
+                else (
+                    pq._IVFPQ,
+                    pq.build_ivfpq_index,
+                    pq.ivfpq_search_indexed,
+                    pq.maintain_ivfpq_index,
+                    "coarse codebook ({} trained cell(s)) + PQ codebooks + "
+                    "codes-only posting lists",
+                )
+            )
             parts = rest.split()
             usage = (
-                "usage: IVF <attached table> BUILD [<col>] | "
-                "REFRESH [<col>] | MAINTAIN [<col>] | "
-                "SEARCH <k> [probes] [<col>] | STATS [<col>]"
-            )
-            if len(parts) < 2 or parts[0] not in dml_tables:
-                return usage
-            name, action = parts[0], parts[1].upper()
-            path, args = dml_tables[name], parts[2:]
-            if action == "BUILD":
-                col = args[0] if args else "embedding"
-                n = build_ivf_index(engine.spark, path, emb_col=col)
-                return (
-                    f"ivf index on {name}.{col}: trained codebook "
-                    f"({n} trained cell(s)) + posting lists"
-                )
-            if action == "REFRESH":
-                col = args[0] if args else "embedding"
-                n = refresh_ivf_index(engine.spark, path, emb_col=col)
-                return (
-                    f"appended {n} new vector(s) to {name}.{col} "
-                    "posting lists"
-                    if n
-                    else f"ivf index on {name}.{col} already covers "
-                    "every live file"
-                )
-            if action == "MAINTAIN":
-                col = args[0] if args else "embedding"
-                st = maintain_ivf_index(engine.spark, path, emb_col=col)
-                if not any(st.values()):
-                    return (
-                        f"ivf index on {name}.{col} already covers "
-                        "every live file and tombstone"
-                    )
-                return (
-                    f"ivf index on {name}.{col}: appended "
-                    f"{st['appended']}, removed {st['removed']} "
-                    f"vector(s) ({st['cells_rewritten']} cell "
-                    "partition(s) rewritten)"
-                )
-            if action == "SEARCH":
-                if not args or not args[0].isdigit():
-                    return usage
-                k = int(args[0])
-                probes = (
-                    int(args[1])
-                    if len(args) > 1 and args[1].isdigit()
-                    else 1
-                )
-                col = (
-                    args[-1]
-                    if args and not args[-1].isdigit()
-                    else "embedding"
-                )
-                return _fmt_rows(
-                    ivf_search_indexed(
-                        engine.spark, path, k=k, n_probes=probes,
-                        emb_col=col,
-                    ),
-                    max_rows,
-                )
-            if action == "STATS":
-                col = args[0] if args else "embedding"
-                book = read_ivf_index(engine.spark, path, col)
-                postings = read_ivf_postings(engine.spark, path, col)
-                if book is None or postings is None:
-                    return (
-                        f"no ivf index on {name}.{col}; "
-                        f"IVF {name} BUILD {col} first"
-                    )
-                cells = book.select("cell").distinct().count()
-                n_vec = postings.count()  # parquet footers only
-                stale = ""
-                try:
-                    meta = _ivf_meta(engine.spark, path, col)
-                except ValueError:
-                    # crash debris (failed anchor write): say so — a
-                    # silent "looks fine" here hides real staleness
-                    stale = (
-                        "  [NO staleness anchor — crashed "
-                        f"build/refresh? IVF {name} BUILD {col}]"
-                    )
-                else:
-                    if set(meta["files"]) != _table_file_set(
-                        engine.spark, path
-                    ):
-                        stale = (
-                            "  [STALE — the table changed since build; "
-                            f"IVF {name} MAINTAIN {col} (or BUILD)]"
-                        )
-                return (
-                    f"ivf index on {name}.{col}: {cells} trained "
-                    f"cell(s), {n_vec} indexed vector(s){stale}"
-                )
-            return usage
-        if verb == "IVFPQ":
-            from .operators.pq import (
-                _ivfpq_meta,
-                _ivfpq_root,
-                build_ivfpq_index,
-                ivfpq_search_indexed,
-                maintain_ivfpq_index,
-            )
-            from .operators.similarity import _table_file_set
-
-            parts = rest.split()
-            usage = (
-                "usage: IVFPQ <attached table> BUILD [<col>] | "
+                f"usage: {verb} <attached table> BUILD [<col>] | "
                 "MAINTAIN [<col>] | SEARCH <k> [probes] [<col>] | "
                 "STATS [<col>]"
             )
@@ -517,84 +414,62 @@ def handle(
                 return usage
             name, action = parts[0], parts[1].upper()
             path, args = dml_tables[name], parts[2:]
-            if action == "BUILD":
-                col = args[0] if args else "embedding"
-                n = build_ivfpq_index(engine.spark, path, emb_col=col)
-                return (
-                    f"ivfpq index on {name}.{col}: coarse codebook "
-                    f"({n} trained cell(s)) + PQ codebooks + codes-only "
-                    "posting lists"
-                )
-            if action == "MAINTAIN":
-                col = args[0] if args else "embedding"
-                st = maintain_ivfpq_index(engine.spark, path, emb_col=col)
-                if not any(st.values()):
-                    return (
-                        f"ivfpq index on {name}.{col} already covers "
-                        "every live file and tombstone"
-                    )
-                return (
-                    f"ivfpq index on {name}.{col}: appended "
-                    f"{st['appended']}, removed {st['removed']} "
-                    f"vector(s) ({st['cells_rewritten']} cell "
-                    "partition(s) rewritten; codebooks untouched)"
-                )
             if action == "SEARCH":
                 if not args or not args[0].isdigit():
                     return usage
-                k = int(args[0])
-                probes = (
-                    int(args[1])
-                    if len(args) > 1 and args[1].isdigit()
-                    else 2
-                )
-                col = (
-                    args[-1]
-                    if args and not args[-1].isdigit()
-                    else "embedding"
-                )
-                return _fmt_rows(
-                    ivfpq_search_indexed(
-                        engine.spark, path, k=k, n_probes=probes,
-                        emb_col=col,
-                    ),
-                    max_rows,
-                )
-            if action == "STATS":
-                col = args[0] if args else "embedding"
-                root = _ivfpq_root(path, col)
-                try:
-                    book = engine.spark.read.parquet(f"{root}/codebook")
-                    postings = engine.spark.read.parquet(f"{root}/postings")
-                except Exception:  # noqa: BLE001 — absent index
+                kw = {"k": int(args[0])}
+                if len(args) > 1 and args[1].isdigit():
+                    kw["n_probes"] = int(args[1])
+                if not args[-1].isdigit():
+                    kw["emb_col"] = args[-1]
+                return _fmt_rows(search(engine.spark, path, **kw), max_rows)
+            col = args[0] if args else "embedding"
+            what = f"{side.kind} index on {name}.{col}"
+            if action == "BUILD":
+                n = build(engine.spark, path, emb_col=col)
+                return f"{what}: {built.format(n)}"
+            # REFRESH is the older name of MAINTAIN
+            if action in ("MAINTAIN", "REFRESH"):
+                st = maintain(engine.spark, path, emb_col=col)
+                if not any(st.values()):
                     return (
-                        f"no ivfpq index on {name}.{col}; "
-                        f"IVFPQ {name} BUILD {col} first"
+                        f"{what} already covers every live file and "
+                        "tombstone"
                     )
-                n_books = book.select("sub", "code").distinct().count()
-                n_vec = postings.count()  # parquet footers only
-                stale = ""
-                try:
-                    meta = _ivfpq_meta(engine.spark, path, col)
-                except ValueError:
-                    stale = (
-                        "  [NO staleness anchor — crashed build? "
-                        f"IVFPQ {name} BUILD {col}]"
-                    )
-                else:
-                    if set(meta["files"]) != _table_file_set(
-                        engine.spark, path
-                    ):
-                        stale = (
-                            "  [STALE — the table changed since build; "
-                            f"IVFPQ {name} MAINTAIN {col} (or BUILD)]"
-                        )
                 return (
-                    f"ivfpq index on {name}.{col}: {n_books} (sub, code) "
-                    f"codebook entr(ies), {n_vec} indexed vector(s), "
-                    f"codes-only postings{stale}"
+                    f"{what}: appended {st['appended']}, removed "
+                    f"{st['removed']} vector(s) ({st['cells_rewritten']} "
+                    "cell partition(s) rewritten; codebooks untouched)"
                 )
-            return usage
+            if action != "STATS":
+                return usage
+            postings = side.postings(engine.spark, path, col)
+            if postings is None:
+                return (
+                    f"no {side.kind} index on {name}.{col}; "
+                    f"{verb} {name} BUILD {col} first"
+                )
+            book = side.codebooks(engine.spark, path, col)[0]
+            try:
+                _, added, removed = side.drift(engine.spark, path, col)
+            except ValueError:
+                # crash debris (failed anchor write): say so — a silent
+                # "looks fine" here hides real staleness
+                stale = (
+                    "  [NO staleness anchor — crashed build? "
+                    f"{verb} {name} BUILD {col}]"
+                )
+            else:
+                stale = (
+                    "  [STALE — the table changed since build; "
+                    f"{verb} {name} MAINTAIN {col} (or BUILD)]"
+                    if added or removed
+                    else ""
+                )
+            return (
+                f"{what}: {book.select('cell').distinct().count()} trained "
+                f"cell(s), {postings.count()} indexed vector(s){stale}"
+            )
         if verb == "COMPACT":
             from .operators.mutate import compact
 

@@ -2,8 +2,9 @@
 
 The batch side (``operators/similarity.py``) persists a trained IVF
 index as a table sidecar — codebook + cell-partitioned posting lists —
-and ``refresh_ivf_index`` advances it by exactly the files appended
-since the last build/refresh.  This module is the streaming form: a
+and ``maintain_ivf_index`` advances it by exactly the files appended
+(and deletion-vector batches committed) since the last build or
+maintain.  This module is the streaming form: a
 ``foreachBatch`` sink that lands each micro-batch of vectors in the
 table AND keeps the posting lists fresh, so the serving path
 (``ivf_search_indexed``) never trips the staleness gate on an
@@ -30,20 +31,19 @@ extended to cover the index):
   ``_SUCCESS``, which is still honored when present) and skips the data
   write, so rows are never duplicated;
 - a replay of a CRASHED epoch overwrites the partial directory.  The
-  partial files were never indexed — the refresh runs strictly after
+  partial files were never indexed — the maintain runs strictly after
   the data write commits — so no posting references them, and the
   staleness anchor never listed them (``removed = built - now`` stays
   empty: retiring never-indexed debris is invisible to the gate);
-- a crash AFTER the refresh but before the checkpoint commit replays
-  into a skip-write + zero-row refresh: the anchor already covers the
-  epoch's files, ``refresh_ivf_index`` sees nothing added and returns
-  0.  The index never double-counts.
+- a crash AFTER the maintain but before the checkpoint commit replays
+  into a skip-write + no-op maintain: the anchor already covers the
+  epoch's files, ``maintain_ivf_index`` sees nothing added and returns
+  zeros.  The index never double-counts.
 
-The per-epoch index call is ``maintain_ivf_index``, not the
-append-only refresh: a micro-batch is append-shaped by construction,
-but OTHER writers may land deletion-vector batches between epochs, and
-maintenance folds those in too (identity-precise removal) instead of
-wedging the index behind a rebuild.  Only file-RETIRING interference
+A micro-batch is append-shaped by construction, but OTHER writers may
+land deletion-vector batches between epochs; maintenance folds those in
+too (identity-precise removal) instead of wedging the index behind a
+rebuild.  Only file-RETIRING interference
 (compaction, materialize) still demands a rebuild; the sink downgrades
 that error to a ``warnings.warn`` and KEEPS INGESTING — losing the
 ingest stream because a maintenance job compacted the table is the
@@ -78,10 +78,10 @@ def ingest_vectors_maintaining_ivf(
     The index is OPTIONAL at start: epochs that land before
     ``build_ivf_index`` has run are simply unindexed (the staleness
     gate keeps searches honest); once an index exists, every subsequent
-    epoch refreshes it in the same ``foreachBatch`` call, after the
+    epoch maintains it in the same ``foreachBatch`` call, after the
     epoch's data write commits.  Build the index over a quiet table or
-    accept that the first post-build epoch refreshes the gap — both
-    orders converge because refresh is anchored on file sets, not time.
+    accept that the first post-build epoch maintains the gap — both
+    orders converge because maintain is anchored on file sets, not time.
     """
 
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
@@ -124,7 +124,7 @@ def ingest_vectors_maintaining_ivf(
         committer_marker = jvm.org.apache.hadoop.fs.Path(f"{dest}/_SUCCESS")
         if fs.exists(own_marker) or fs.exists(committer_marker):
             # at-least-once replay of a committed epoch: the vectors are
-            # already live; fall through to the refresh, which is a
+            # already live; fall through to the maintain, which is a
             # no-op if its crash window didn't hit.  Backfill the sink's
             # own sentinel when only _SUCCESS vouches for the epoch
             # (pre-sentinel table, or a crash between the data write and
@@ -142,7 +142,7 @@ def ingest_vectors_maintaining_ivf(
             )
             # sentinel AFTER the data write: a crash in between replays
             # into the overwrite path, which is safe — the un-sentineled
-            # files were never indexed (refresh runs strictly later)
+            # files were never indexed (maintain runs strictly later)
             fs.create(own_marker, True).close()
         if read_ivf_index(spark, table_path, emb_col) is None:
             return  # pre-build epochs stay unindexed (gate protects reads)
@@ -152,7 +152,7 @@ def ingest_vectors_maintaining_ivf(
             )
         except (ValueError, _WriterLockHeld) as e:
             # file-retiring interference (compaction/materialize), crash
-            # debris, OR a concurrent refresh/maintain/build holding the
+            # debris, OR a concurrent maintain/build holding the
             # index lock past the wait: the index may need a rebuild or
             # just a later retry, but the INGEST must not die for it —
             # searches are gate-protected either way.  Loud,

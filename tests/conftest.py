@@ -92,20 +92,22 @@ _SLOW_NODEIDS = frozenset({
     "tests/test_operators.py::test_ivf_index_staleness_gate",
     "tests/test_operators.py::test_ivf_indexed_probe_prunes_to_probed_cells",
     "tests/test_operators.py::test_ivf_pq_refine_topk_exact_rerank",
-    "tests/test_operators.py::test_ivf_staleness_gate_sees_deletion_vectors",
+    "tests/test_operators.py::test_ivf_staleness_gate_sees_deletion_vectors[ivf]",
+    "tests/test_operators.py::test_ivf_staleness_gate_sees_deletion_vectors[ivfpq]",
     "tests/test_operators.py::test_ivfpq_geometry_comes_from_the_index",
     "tests/test_operators.py::test_ivfpq_persisted_index_roundtrip",
     "tests/test_operators.py::test_ivfpq_prunes_and_scores_like_adc",
     "tests/test_operators.py::test_maintain_ivf_index_concurrent_maintainers",
     "tests/test_operators.py::test_maintain_ivf_index_empties_whole_cell",
+    "tests/test_operators.py::test_maintain_ivf_index_append_only_drift",
     "tests/test_operators.py::test_maintain_ivf_index_folds_deletes_and_appends",
-    "tests/test_operators.py::test_maintain_ivf_index_guards",
+    "tests/test_operators.py::test_maintain_ivf_index_guards[ivf]",
+    "tests/test_operators.py::test_maintain_ivf_index_guards[ivfpq]",
     "tests/test_operators.py::test_maintain_ivf_index_size_gates_tombstone_broadcast",
     "tests/test_operators.py::test_maintain_ivf_index_update_same_id",
     "tests/test_operators.py::test_maintain_ivfpq_index_concurrent_maintainers",
     "tests/test_operators.py::test_maintain_ivfpq_index_folds_appends_and_deletes",
     "tests/test_operators.py::test_pq_encode_shapes_and_adc_recall",
-    "tests/test_operators.py::test_refresh_ivf_index_incremental",
     "tests/test_operators.py::test_trained_ivf_beats_label_centroids",
     "tests/test_plans.py::test_no_accidental_cartesian[curation_pipeline_neardup]",
     "tests/test_plans.py::test_no_accidental_cartesian[mutate_occ_dv_upsert]",

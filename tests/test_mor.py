@@ -16,7 +16,6 @@ from sql_query_optimizer_cpp_spark.operators import mutate as m
 from sql_query_optimizer_cpp_spark.operators.mor import (
     dv_count,
     dv_delete_where,
-    dv_file_stats,
     dv_update_where,
     has_deletion_vectors,
     materialize_deletes,
@@ -279,16 +278,6 @@ def test_dv_update_constraint_rollback(spark, tmp_path):
     assert dv_update_where(
         spark, path, {"v": "v + 1"}, "k < 5"
     ).rows_matched == 5
-
-
-def test_dv_file_stats(spark, tmp_path):
-    path = _flat(spark, tmp_path)
-    dv_delete_where(spark, path, "k < 30")
-    st = dv_file_stats(spark, path)
-    rows = st.collect()
-    assert sum(r.dead_rows for r in rows) == 30
-    # range-clustered on k: the delete concentrates in the low-k files
-    assert len(rows) < 4
 
 
 def test_dv_writer_lock_excludes_cow(spark, tmp_path):

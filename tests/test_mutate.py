@@ -639,7 +639,6 @@ def test_version_log_mvcc_for_readers(spark, cow_table):
     the writer lock; readers pinned to any version see its exact bytes
     across later DML (snapshot isolation for readers)."""
     from sql_query_optimizer_cpp_spark.operators.versioning import (
-        current_version,
         drop_versions_before,
         enable_versioning,
         read_version,
@@ -647,7 +646,7 @@ def test_version_log_mvcc_for_readers(spark, cow_table):
         vacuum,
     )
 
-    assert current_version(spark, cow_table) is None
+    assert table_versions(spark, cow_table) == []
     assert enable_versioning(spark, cow_table) == 1
     assert enable_versioning(spark, cow_table) == 1  # idempotent
     delete_where(spark, cow_table, "k >= 300")          # -> v2
@@ -1428,7 +1427,7 @@ def test_version_log_delta_manifests_o_touched(spark, tmp_path):
     from sql_query_optimizer_cpp_spark.operators.versioning import (
         CHECKPOINT_INTERVAL,
         _autoversion,
-        _manifest_rel_files,
+        _manifest_state,
         enable_versioning,
         read_version,
         table_versions,
@@ -1472,7 +1471,7 @@ def test_version_log_delta_manifests_o_touched(spark, tmp_path):
     assert vs == list(range(1, 32))
     # every version reconstructs to exactly the file set at its commit
     for v, want in expected.items():
-        got = set(_manifest_rel_files(spark, path, f"v{v:08d}"))
+        got = set(_manifest_state(spark, path, f"v{v:08d}")[0])
         assert got == want, f"version {v} reconstructed wrong"
     # manifest byte accounting: deltas are tiny and size-independent of
     # the table; the interval checkpoint is full
@@ -1501,7 +1500,7 @@ def test_version_log_delta_manifests_o_touched(spark, tmp_path):
         "files"
     ), "oldest survivor must be a full checkpoint after retention"
     for v in kept:
-        assert set(_manifest_rel_files(spark, path, f"v{v:08d}")) == expected[v]
+        assert set(_manifest_state(spark, path, f"v{v:08d}")[0]) == expected[v]
     assert read_version(spark, path, 31).count() == 5000
     vacuum(spark, path)
     assert read_version(spark, path, 29).count() == 5000

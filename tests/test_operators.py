@@ -910,22 +910,43 @@ def test_ivf_indexed_probe_prunes_to_probed_cells(spark, tmp_path):
         S.ivf_search_indexed(spark, str(tmp_path / "absent"))
 
 
-def test_ivf_indexed_probe_survives_empty_cell(spark, tmp_path):
+def _sidecar(kind):
+    """``(sidecar, build, search, maintain)`` of one ANN index kind."""
+    from sql_query_optimizer_cpp_spark.operators import pq as PQ
+    from sql_query_optimizer_cpp_spark.operators import similarity as S
+
+    if kind == "ivf":
+        return S._IVF, S.build_ivf_index, S.ivf_search_indexed, S.maintain_ivf_index
+    return (
+        PQ._IVFPQ,
+        PQ.build_ivfpq_index,
+        PQ.ivfpq_search_indexed,
+        PQ.maintain_ivfpq_index,
+    )
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_ivf_indexed_probe_survives_empty_cell(
+    spark, tmp_path, monkeypatch, kind
+):
     """(review r11) A probed cell with no postings partition (a trained
     centroid that won zero corpus vectors, or an empty-cell carry) must
-    contribute ZERO candidates — exactly ivf_topk_trained's semantics —
-    not crash on the missing directory."""
+    contribute ZERO candidates — exactly the in-memory search's
+    semantics — not crash on the missing directory.  A query side over
+    the collect bound (probed cells kept distributed) serves the same
+    rows."""
     import shutil
 
     from pyspark.sql import functions as F
 
     from sql_query_optimizer_cpp_spark.operators import similarity as S
 
+    side, build, search, _ = _sidecar(kind)
     emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
     tdir = str(tmp_path / "emb_ivf_empty")
     emb.write.parquet(tdir)
-    S.build_ivf_index(spark, tdir, id_col="vec_id")
-    postings = S.read_ivf_postings(spark, tdir)
+    build(spark, tdir, id_col="vec_id")
+    postings = side.postings(spark, tdir, "embedding")
     counts = {
         r["cell"]: r["count"]
         for r in postings.groupBy("cell").count().collect()
@@ -935,13 +956,14 @@ def test_ivf_indexed_probe_survives_empty_cell(spark, tmp_path):
         r["vec_id"]
         for r in postings.where(F.col("cell") == victim).collect()
     }
-    shutil.rmtree(f"{tdir}/_index/ivf/embedding/postings/cell={victim}")
+    shutil.rmtree(f"{side.root(tdir, 'embedding')}/postings/cell={victim}")
     # probe EVERY cell so the victim is guaranteed probed
-    out = S.ivf_search_indexed(
-        spark, tdir, n_queries=10, k=5, n_probes=S.IVF_CELLS
-    ).collect()
+    out = search(spark, tdir, n_queries=10, k=5, n_probes=S.IVF_CELLS).collect()
     assert out  # no crash, results produced
     assert not {r["neighbor_id"] for r in out} & victim_ids
+    monkeypatch.setattr(S, "PROBE_COLLECT_MAX_ROWS", 1)
+    bounded = search(spark, tdir, n_queries=10, k=5, n_probes=S.IVF_CELLS)
+    assert sorted(map(tuple, bounded.collect())) == sorted(map(tuple, out))
 
 
 def test_ivf_index_staleness_gate(spark, tmp_path):
@@ -974,7 +996,7 @@ def test_ivf_index_staleness_gate(spark, tmp_path):
     S.build_ivf_index(spark, tdir, id_col="vec_id")
     assert S.ivf_search_indexed(spark, tdir, n_queries=5, k=3).count() > 0
     # a usable index with NO anchor is crash debris (e.g. a failed
-    # anchor overwrite): searches and refreshes refuse LOUDLY instead
+    # anchor overwrite): searches and maintains refuse LOUDLY instead
     # of running ungated forever (review r11, third pass)
     import os
 
@@ -982,7 +1004,7 @@ def test_ivf_index_staleness_gate(spark, tmp_path):
     with _pytest.raises(ValueError, match="no staleness anchor"):
         S.ivf_search_indexed(spark, tdir, n_queries=5, k=3)
     with _pytest.raises(ValueError, match="no staleness anchor"):
-        S.refresh_ivf_index(spark, tdir, id_col="vec_id")
+        S.maintain_ivf_index(spark, tdir, id_col="vec_id")
     # allow_stale still reaches the indexed data explicitly
     assert (
         S.ivf_search_indexed(
@@ -1023,61 +1045,62 @@ def test_trained_ivf_multi_probe_recall_monotone(spark):
         S.ivf_topk_trained(emb, n_probes=0)
 
 
-def test_ivf_staleness_gate_sees_deletion_vectors(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_ivf_staleness_gate_sees_deletion_vectors(spark, tmp_path, kind):
     """(review r11 #2) A dv_delete touches NO data file, so a file-only
     anchor would pass the gate and the index would resurrect the
     deleted vector; the anchor must cover DV batches, and a rebuild
     must index through read_mor."""
-    import pytest as _pytest
-
     from sql_query_optimizer_cpp_spark.operators import similarity as S
     from sql_query_optimizer_cpp_spark.operators.mor import dv_delete_where
 
+    side, build, search, _ = _sidecar(kind)
     emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
     tdir = str(tmp_path / "emb_ivf_dv")
     emb.write.parquet(tdir)
-    S.build_ivf_index(spark, tdir, id_col="vec_id")
+    build(spark, tdir, id_col="vec_id")
     # pick a guaranteed neighbor at n_probes=all: some returned id
-    hit = S.ivf_search_indexed(
+    hit = search(
         spark, tdir, n_queries=5, k=3, n_probes=S.IVF_CELLS
     ).first()["neighbor_id"]
     assert dv_delete_where(spark, tdir, f"vec_id = {hit}").rows_matched == 1
-    with _pytest.raises(ValueError, match="STALE"):
-        S.ivf_search_indexed(spark, tdir, n_queries=5, k=3)
+    with pytest.raises(ValueError, match="STALE"):
+        search(spark, tdir, n_queries=5, k=3)
     # rebuild reads through the tombstones: the deleted vector is
     # neither indexed nor served
-    S.build_ivf_index(spark, tdir, id_col="vec_id")
-    out = S.ivf_search_indexed(
-        spark, tdir, n_queries=5, k=3, n_probes=S.IVF_CELLS
-    ).collect()
+    build(spark, tdir, id_col="vec_id")
+    out = search(spark, tdir, n_queries=5, k=3, n_probes=S.IVF_CELLS).collect()
     assert out and hit not in {r["neighbor_id"] for r in out}
-    postings = S.read_ivf_postings(spark, tdir)
+    postings = side.postings(spark, tdir, "embedding")
     assert postings.where(f"vec_id = {hit}").count() == 0
 
 
-def test_refresh_ivf_index_incremental(spark, tmp_path):
-    """(r11) refresh_ivf_index appends ONLY the new files' vectors using
-    the persisted codebook (no retraining), advances the anchor, refuses
-    non-append drift, and detects a half-applied earlier refresh."""
+def test_maintain_ivf_index_append_only_drift(spark, tmp_path):
+    """On append-only drift maintain_ivf_index appends ONLY the new
+    files' vectors using the persisted codebook (no retraining), advances
+    the anchor, detects a half-applied earlier pass, and refuses a
+    retired data file."""
     import os
 
     import pytest as _pytest
 
     from sql_query_optimizer_cpp_spark.operators import similarity as S
-    from sql_query_optimizer_cpp_spark.operators.mor import dv_delete_where
 
+    zero = {"appended": 0, "removed": 0, "cells_rewritten": 0}
     emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
     tdir = str(tmp_path / "emb_ivf_refresh")
     emb.write.parquet(tdir)
     S.build_ivf_index(spark, tdir, id_col="vec_id")
     base_n = S.read_ivf_postings(spark, tdir).count()
-    # corpus appends 7 vectors in new files: gate trips, refresh mends
+    # corpus appends 7 vectors in new files: gate trips, maintain mends
     emb.limit(7).selectExpr(
         "vec_id + 1000000 AS vec_id", "embedding", "label"
     ).write.mode("append").parquet(tdir)
     with _pytest.raises(ValueError, match="STALE"):
         S.ivf_search_indexed(spark, tdir, n_queries=5, k=3)
-    assert S.refresh_ivf_index(spark, tdir, id_col="vec_id") == 7
+    assert S.maintain_ivf_index(spark, tdir, id_col="vec_id") == dict(
+        zero, appended=7
+    )
     postings = S.read_ivf_postings(spark, tdir)
     assert postings.count() == base_n + 7
     assert postings.where("vec_id >= 1000000").count() == 7
@@ -1085,23 +1108,18 @@ def test_refresh_ivf_index_incremental(spark, tmp_path):
         spark, tdir, n_queries=5, k=3, n_probes=S.IVF_CELLS
     )
     assert out.count() > 0  # gate passes again
-    assert S.refresh_ivf_index(spark, tdir, id_col="vec_id") == 0
+    assert S.maintain_ivf_index(spark, tdir, id_col="vec_id") == zero
     # half-applied sim: postings grew without the anchor moving
-    extra = postings.where("vec_id = 0").select("vec_id", "embedding", "nsq")
+    extra = postings.where("vec_id = 0").drop("cell")
     extra.write.mode("append").parquet(
         f"{tdir}/_index/ivf/embedding/postings/cell=0"
     )
     emb.limit(2).selectExpr(
         "vec_id + 2000000 AS vec_id", "embedding", "label"
     ).write.mode("append").parquet(tdir)
-    with _pytest.raises(ValueError, match="partial append"):
-        S.refresh_ivf_index(spark, tdir, id_col="vec_id")
-    # rebuild converges; then a deletion-vector batch demands rebuild
-    S.build_ivf_index(spark, tdir, id_col="vec_id")
-    dv_delete_where(spark, tdir, "vec_id = 5")
-    with _pytest.raises(ValueError, match="rebuild"):
-        S.refresh_ivf_index(spark, tdir, id_col="vec_id")
-    # retired data file demands rebuild too
+    with _pytest.raises(ValueError, match="partial"):
+        S.maintain_ivf_index(spark, tdir, id_col="vec_id")
+    # rebuild converges; a retired data file demands a rebuild
     S.build_ivf_index(spark, tdir, id_col="vec_id")
     data_files = [
         f for f in os.listdir(tdir)
@@ -1109,7 +1127,7 @@ def test_refresh_ivf_index_incremental(spark, tmp_path):
     ]
     os.remove(os.path.join(tdir, data_files[0]))
     with _pytest.raises(ValueError, match="rebuild"):
-        S.refresh_ivf_index(spark, tdir, id_col="vec_id")
+        S.maintain_ivf_index(spark, tdir, id_col="vec_id")
 
 
 def test_maintain_ivf_index_folds_deletes_and_appends(spark, tmp_path):
@@ -1235,67 +1253,80 @@ def test_maintain_ivf_index_update_same_id(spark, tmp_path):
     assert got == want and got
 
 
-def test_maintain_ivf_index_guards(spark, tmp_path):
-    """(r11) maintain refuses: missing index, crashed-maintenance
-    debris (which build sweeps), retired data files, and pre-identity
-    posting formats."""
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_maintain_ivf_index_guards(spark, tmp_path, kind):
+    """maintain refuses: a missing index, crashed-maintenance
+    debris (which build sweeps), a postings count the anchor does not
+    record, a missing anchor, pre-identity posting formats, and retired
+    data files."""
     import os
 
-    import pytest as _pytest
-
-    from sql_query_optimizer_cpp_spark.operators import similarity as S
-
+    side, build, _, maintain = _sidecar(kind)
     emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
     tdir = str(tmp_path / "emb_ivf_guards")
     emb.write.parquet(tdir)
-    with _pytest.raises(ValueError, match="build_ivf_index first"):
-        S.maintain_ivf_index(spark, tdir, id_col="vec_id")
-    S.build_ivf_index(spark, tdir, id_col="vec_id")
-    root = S._ivf_root(tdir, "embedding")
+    extra = iter(range(900000, 1000000, 10))
+
+    def drift():
+        emb.where("vec_id < 2").selectExpr(
+            f"vec_id + {next(extra)} AS vec_id", "embedding", "label"
+        ).write.mode("append").parquet(tdir)
+
+    with pytest.raises(ValueError, match=f"build_{kind}_index first"):
+        maintain(spark, tdir, id_col="vec_id")
+    build(spark, tdir, id_col="vec_id")
+    root = side.root(tdir, "embedding")
     # debris next to a FRESH anchor (a committed maintain whose final
     # cleanup failed) is disposable: maintain sweeps it and no-ops
     os.makedirs(f"{root}/_maintain_trash_deadbeef")
-    assert S.maintain_ivf_index(spark, tdir, id_col="vec_id")["removed"] == 0
+    assert maintain(spark, tdir, id_col="vec_id")["removed"] == 0
     assert not os.path.exists(f"{root}/_maintain_trash_deadbeef")
     # debris + DRIFT = a maintain crashed mid-flight: refuse; a rebuild
     # sweeps the debris
     os.makedirs(f"{root}/_maintain_stage_deadbeef")
-    emb.where("vec_id < 2").selectExpr(
-        "vec_id + 900000 AS vec_id", "embedding", "label"
-    ).write.mode("append").parquet(tdir)
-    with _pytest.raises(ValueError, match="debris"):
-        S.maintain_ivf_index(spark, tdir, id_col="vec_id")
-    S.build_ivf_index(spark, tdir, id_col="vec_id")
+    drift()
+    with pytest.raises(ValueError, match="debris"):
+        maintain(spark, tdir, id_col="vec_id")
+    build(spark, tdir, id_col="vec_id")
     assert not os.path.exists(f"{root}/_maintain_stage_deadbeef")
-    assert S.maintain_ivf_index(spark, tdir, id_col="vec_id")["removed"] == 0
-    # pre-identity postings (the pre-r11 layout) demand a rebuild from
-    # refresh AND maintain
-    legacy = (
-        S.read_ivf_postings(spark, tdir)
-        .select("vec_id", "embedding", "nsq", "cell")
+    assert maintain(spark, tdir, id_col="vec_id")["removed"] == 0
+    # postings that grew without the anchor moving: a half-applied pass
+    postings = side.postings(spark, tdir, "embedding")
+    cell = postings.first()["cell"]
+    postings.where(f"cell = {cell}").limit(1).drop("cell").write.mode(
+        "append"
+    ).parquet(f"{root}/postings/cell={cell}")
+    drift()
+    with pytest.raises(ValueError, match="partial"):
+        maintain(spark, tdir, id_col="vec_id")
+    # no anchor at all is crash debris too
+    build(spark, tdir, id_col="vec_id")
+    os.remove(f"{root}/meta.json")
+    with pytest.raises(ValueError, match="no staleness anchor"):
+        maintain(spark, tdir, id_col="vec_id")
+    # postings without the row-identity columns demand a rebuild
+    build(spark, tdir, id_col="vec_id")
+    legacy = side.postings(spark, tdir, "embedding").drop(
+        "src_file", "row_idx"
     ).cache()
     legacy.count()
     legacy.repartition("cell").write.partitionBy("cell").mode(
         "overwrite"
     ).parquet(f"{root}/postings")
     legacy.unpersist()
-    emb.limit(2).selectExpr(
-        "vec_id + 500000 AS vec_id", "embedding", "label"
-    ).write.mode("append").parquet(tdir)
-    with _pytest.raises(ValueError, match="row-identity"):
-        S.maintain_ivf_index(spark, tdir, id_col="vec_id")
-    with _pytest.raises(ValueError, match="row-identity"):
-        S.refresh_ivf_index(spark, tdir, id_col="vec_id")
+    drift()
+    with pytest.raises(ValueError, match="row-identity"):
+        maintain(spark, tdir, id_col="vec_id")
     # retired file still demands rebuild
-    S.build_ivf_index(spark, tdir, id_col="vec_id")
+    build(spark, tdir, id_col="vec_id")
     data = [
         f
         for f in os.listdir(tdir)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     ]
     os.remove(os.path.join(tdir, data[0]))
-    with _pytest.raises(ValueError, match="rebuild"):
-        S.maintain_ivf_index(spark, tdir, id_col="vec_id")
+    with pytest.raises(ValueError, match="rebuild"):
+        maintain(spark, tdir, id_col="vec_id")
 
 
 def test_maintain_ivf_index_empties_whole_cell(spark, tmp_path):
@@ -1320,7 +1351,7 @@ def test_maintain_ivf_index_empties_whole_cell(spark, tmp_path):
     assert st["removed"] == n
     import os
 
-    root = S._ivf_root(tdir, "embedding")
+    root = S._IVF.root(tdir, "embedding")
     assert not os.path.exists(f"{root}/postings/cell={cell}")
     out = S.ivf_search_indexed(
         spark, tdir, n_queries=5, k=3, n_probes=S.IVF_CELLS
@@ -1441,15 +1472,16 @@ def test_maintain_ivf_index_size_gates_tombstone_broadcast(
     assert out.count() > 0
 
 
-def test_ivf_index_tolerates_duplicate_ids(spark, tmp_path):
-    """(r13, VERDICT r12 task 7) build_ivf_index makes NO id_col
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_ivf_index_tolerates_duplicate_ids(spark, tmp_path, kind):
+    """A sidecar build makes NO id_col
     uniqueness assumption: cell assignment is keyed on the MOR row
     identity (src_file, row_idx), so a duplicated id — within the built
     batch AND within a later appended batch — yields exactly one posting
     row per physical row, never a cross-product."""
-    from sql_query_optimizer_cpp_spark.operators import similarity as S
     from sql_query_optimizer_cpp_spark.operators.mor import read_mor
 
+    side, build, _, maintain = _sidecar(kind)
     emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
     tdir = str(tmp_path / "emb_ivf_dup")
     # duplicate every id < 20 once (same id, different vector) in the
@@ -1459,22 +1491,53 @@ def test_ivf_index_tolerates_duplicate_ids(spark, tmp_path):
     )
     emb.unionByName(dupes).coalesce(2).write.parquet(tdir)
     base_rows = emb.count() + 20
-    S.build_ivf_index(spark, tdir, id_col="vec_id")
-    postings = S.read_ivf_postings(spark, tdir)
+    build(spark, tdir, id_col="vec_id")
+    postings = side.postings(spark, tdir, "embedding")
     assert postings.count() == base_rows  # no cross-product at build
     assert postings.where("vec_id < 20").count() == 40
     # append a batch that AGAIN duplicates ids (both vs the existing
     # table and within itself), then fold it in
     dupes.unionByName(dupes).write.mode("append").parquet(tdir)
-    st = S.maintain_ivf_index(spark, tdir, id_col="vec_id")
+    st = maintain(spark, tdir, id_col="vec_id")
     assert st["appended"] == 40 and st["removed"] == 0
-    postings = S.read_ivf_postings(spark, tdir)
+    postings = side.postings(spark, tdir, "embedding")
     assert postings.count() == read_mor(spark, tdir).count() == base_rows + 40
     # identities stay unique even though ids are not
     assert (
         postings.select("src_file", "row_idx").distinct().count()
         == base_rows + 40
     )
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_sidecar_corrupt_codebook_raises_real_cause(spark, tmp_path, kind):
+    """A corrupt codebook file is a read fault, not a missing index: the
+    codebook read and the search raise its real cause (naming the file)
+    instead of reporting "no index" or falling back to another layout."""
+    import glob
+    import os
+
+    from sql_query_optimizer_cpp_spark.operators import similarity as S
+
+    side, build, search, _ = _sidecar(kind)
+    emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
+    tdir = str(tmp_path / "emb_corrupt")
+    emb.where("vec_id < 300").write.parquet(tdir)
+    build(spark, tdir, id_col="vec_id")
+    book_dir = f"{side.root(tdir, 'embedding')}/codebook"
+    (part,) = glob.glob(f"{book_dir}/part-*.parquet")
+    with open(part, "wb") as f:
+        f.write(b"this is not a parquet file")
+    for crc in glob.glob(f"{book_dir}/.*.crc"):
+        os.remove(crc)
+    name = os.path.basename(part)
+    readers = [lambda: search(spark, tdir, n_queries=5, k=3).collect()]
+    if kind == "ivf":
+        readers.append(lambda: S.read_ivf_index(spark, tdir))
+    for read in readers:
+        with pytest.raises(Exception, match=name) as err:
+            read()
+        assert "no IVF" not in str(err.value)
 
 
 def test_pq_encode_shapes_and_adc_recall(spark):
@@ -1595,7 +1658,7 @@ def test_ivfpq_persisted_index_roundtrip(spark, tmp_path):
     emb.write.parquet(tdir)
     n_cells = PQ.build_ivfpq_index(spark, tdir, id_col="vec_id")
     assert n_cells > 0
-    root = PQ._ivfpq_root(tdir, "embedding")
+    root = PQ._IVFPQ.root(tdir, "embedding")
     postings = spark.read.parquet(f"{root}/postings")
     assert postings.count() == emb.count()
     assert "embedding" not in postings.columns  # codes only: the 16x story
@@ -1663,7 +1726,7 @@ def test_ivfpq_geometry_comes_from_the_index(spark, tmp_path):
     emb.where("vec_id < 400").write.parquet(tdir)
     # non-default geometry: 8 sub-quantizers (dsub=8), 8 codes
     PQ.build_ivfpq_index(spark, tdir, id_col="vec_id", n_subs=8, n_codes=8)
-    root = PQ._ivfpq_root(tdir, "embedding")
+    root = PQ._IVFPQ.root(tdir, "embedding")
     meta = json.loads(_read_small_file(spark, f"{root}/meta.json"))
     assert (meta["n_subs"], meta["n_codes"], meta["dim"]) == (8, 8, PQ.DIM)
     got = PQ.ivfpq_search_indexed(spark, tdir, n_queries=4, k=3)
@@ -1720,7 +1783,7 @@ def test_maintain_ivfpq_index_folds_appends_and_deletes(spark, tmp_path):
     tdir = str(tmp_path / "emb_ivfpq_maintain")
     emb.write.parquet(tdir)
     PQ.build_ivfpq_index(spark, tdir, id_col="vec_id")
-    root = PQ._ivfpq_root(tdir, "embedding")
+    root = PQ._IVFPQ.root(tdir, "embedding")
     base_n = spark.read.parquet(f"{root}/postings").count()
     book_before = sorted(
         map(tuple, spark.read.parquet(f"{root}/codebook").collect())
@@ -1821,7 +1884,7 @@ def test_maintain_ivfpq_index_concurrent_maintainers(spark, tmp_path):
         results = [f.result() for f in futs]
     assert sum(r["removed"] for r in results) == n_del
     assert sum(r["appended"] for r in results) == 0
-    root = PQ._ivfpq_root(tdir, "embedding")
+    root = PQ._IVFPQ.root(tdir, "embedding")
     postings = spark.read.parquet(f"{root}/postings")
     assert postings.count() == read_mor(spark, tdir).count()
     assert postings.where("vec_id % 11 = 4").count() == 0
@@ -2048,12 +2111,14 @@ def test_fallback_pq_encode_equals_literal(spark):
     assert fb == lit, "fallback PQ encoding diverged from literal path"
 
 
-def test_fallback_ivfpq_probe_equals_literal(spark, tmp_path):
+def test_fallback_ivfpq_probe_equals_literal(spark, tmp_path, monkeypatch):
     """Build the sidecar under the FALLBACK (distributed training,
     assignment and encode), then probe it under both paths: the persisted
     index and the serving read must be bit-identical to the
-    literal-path build + probe."""
+    literal-path build + probe.  So must a probe whose query side is over
+    the collect bound (probed cells kept distributed)."""
     from sql_query_optimizer_cpp_spark.operators import pq as PQ
+    from sql_query_optimizer_cpp_spark.operators import similarity as S
 
     emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
     lit_dir = str(tmp_path / "lit")
@@ -2088,3 +2153,13 @@ def test_fallback_ivfpq_probe_equals_literal(spark, tmp_path):
         )
     )
     assert cross == lit
+    monkeypatch.setattr(S, "PROBE_COLLECT_MAX_ROWS", 1)
+    bounded = sorted(
+        map(
+            tuple,
+            PQ.ivfpq_search_indexed(
+                spark, lit_dir, n_queries=10, k=5, n_probes=2
+            ).collect(),
+        )
+    )
+    assert bounded == lit, "over-bound query side diverged from the collect"

@@ -682,8 +682,9 @@ def test_repl_multi_table_transaction(engine, tmp_path):
 
 
 def test_repl_ivf_verbs(engine, tmp_path):
-    """IVF BUILD/SEARCH/STATS/REFRESH drive the trained-quantizer ANN
-    index from the prompt, including the staleness lifecycle."""
+    """IVF BUILD/SEARCH/STATS/MAINTAIN drive the trained-quantizer ANN
+    index from the prompt, including the staleness lifecycle; REFRESH is
+    MAINTAIN under its older name."""
     from sql_query_optimizer_cpp_spark.catalog import load_tables
 
     from .conftest import SF_DIR
@@ -711,14 +712,13 @@ def test_repl_ivf_verbs(engine, tmp_path):
     assert "appended 4" in handle(engine, "IVF e REFRESH", tables)
     assert "STALE" not in handle(engine, "IVF e STATS", tables)
     assert "query_id" in handle(engine, "IVF e SEARCH 3", tables)
-    # deletion vectors: REFRESH refuses (vectors must leave), MAINTAIN
-    # folds the tombstones in by row identity
+    # deletion vectors: REFRESH (= MAINTAIN) folds the tombstones in by
+    # row identity
     from sql_query_optimizer_cpp_spark.operators.mor import dv_delete_where
 
     n_del = dv_delete_where(engine.spark, path, "vec_id % 9 = 2").rows_matched
     assert n_del > 0
-    assert "error:" in handle(engine, "IVF e REFRESH", tables)
-    out = handle(engine, "IVF e MAINTAIN", tables)
+    out = handle(engine, "IVF e REFRESH", tables)
     assert f"removed {n_del}" in out and "appended 0" in out
     assert "already covers" in handle(engine, "IVF e MAINTAIN", tables)
     assert "STALE" not in handle(engine, "IVF e STATS", tables)

@@ -68,10 +68,11 @@ def main(n_seeds: int = 10) -> None:
     for seed in range(n_seeds):
         rng = random.Random(seed)
         # even seeds sweep the IVF sidecar, odd seeds the IVFPQ codes
-        # sidecar (r14): both run the SAME shared maintenance fold
-        # (similarity._maintain_locked) with different read/append hooks,
+        # sidecar: both run the SAME maintenance fold of the one
+        # sidecar record (similarity._Sidecar) with their own encodings,
         # so alternating keeps the sweep wall flat while covering both
         kind = "ivf" if seed % 2 == 0 else "ivfpq"
+        side = S._IVF if kind == "ivf" else PQ._IVFPQ
         order = ids[:]
         rng.shuffle(order)
         base_n = rng.randint(n // 4, n // 2)
@@ -160,12 +161,7 @@ def main(n_seeds: int = 10) -> None:
                     )
                 table = read_mor(spark, tdir)
                 n_tab = table.count()
-                if kind == "ivf":
-                    post = S.read_ivf_postings(spark, tdir)
-                else:
-                    post = PQ._read_ivfpq_postings(
-                        spark, PQ._ivfpq_root(tdir, "embedding")
-                    )
+                post = side.postings(spark, tdir, "embedding")
                 n_post = post.count() if post is not None else 0
                 assert n_post == n_tab, (
                     f"seed {seed} step {step}: postings {n_post} != "
@@ -186,12 +182,14 @@ def main(n_seeds: int = 10) -> None:
                             table.select("vec_id", "embedding"),
                             n_queries=8,
                             k=k,
-                            codebook=S.read_ivf_index(spark, tdir),
+                            codebook=side.codebooks(
+                                spark, tdir, "embedding"
+                            )[0],
                             n_probes=probes,
                         ).collect()
                     )
                 else:
-                    pq_root = PQ._ivfpq_root(tdir, "embedding")
+                    coarse, book = side.codebooks(spark, tdir, "embedding")
                     got = sorted(
                         tuple(r)
                         for r in PQ.ivfpq_search_indexed(
@@ -205,10 +203,8 @@ def main(n_seeds: int = 10) -> None:
                             n_queries=8,
                             k=k,
                             n_probes=probes,
-                            coarse=spark.read.parquet(f"{pq_root}/coarse"),
-                            codebook=spark.read.parquet(
-                                f"{pq_root}/codebook"
-                            ),
+                            coarse=coarse,
+                            codebook=book,
                         ).collect()
                     )
                 assert got == want, (
