@@ -697,7 +697,7 @@ def sim_ivf_maintain_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ivf_ingest_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from ..operators.mutate import _fs
+    from ..operators.storage import _delete_files
     from ..streaming.ann import ingest_vectors_maintaining_ivf
     from .mutate import _mut_dir
 
@@ -707,8 +707,7 @@ def sim_ivf_ingest_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # streaming checkpoint cannot be mode=overwrite'n like the other
     # scratch tables, and raw local-path deletion would silently break
     # on any non-local sf_dir filesystem
-    _jvm, fs, base_p = _fs(spark, base)
-    fs.delete(base_p, True)
+    _delete_files(spark, [base], recursive=True)
     path = f"{base}/table"
     checkpoint = f"{base}/checkpoint"
     staging = f"{base}/staging"

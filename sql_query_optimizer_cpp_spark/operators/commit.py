@@ -55,36 +55,55 @@ transaction's commit; that deferral is checked there, once.  Hooks run
 only when the statement changed something.
 
 Staging dirs are registered in ``created`` BEFORE they are written, so
-any failure up to the publish reclaims exactly this attempt's debris.  A
-failure DURING the publish leaves the staging in place: some parts may
-already have moved in, and :func:`~.mutate.repair_table` is the tool for
-that window (the same crash contract as before: duplicates, never loss).
+any failure up to the publish reclaims exactly this attempt's debris.
+A publish makes its renames as one :func:`~.storage.move`, which is
+all-or-nothing: a rename that fails renames back the files already
+moved before the error propagates, so the table reads as before the
+statement and the staging stays in place for
+:func:`~.mutate.repair_table` to reclaim.  Only a publish stopped
+after renames it could not undo — a process that dies mid-move, or a
+failed delete of the replaced files on a table that does not retain
+them — leaves duplicate rows (old and new files side by side, never
+loss); nothing recovers from that automatically yet.
 """
 
 from __future__ import annotations
 
+import contextlib
+import warnings
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import SparkSession
 
+from ..catalog import mark_table_files_changed, mark_table_mutated
 from . import constraints as _constraints
-from . import versioning as _versioning
-from .mutate import (
-    MutationStats,
-    _WriterLockHeld,
-    _default_retain,
-    _fs,
-    _mark_files_changed,
-    _mark_mutated,
+from .reader import _fs, _is_missing_file_error
+from .storage import (
     _reclaim,
-    _refresh_indexes,
     _refuse_in_txn,
     _txn_state,
     _writer_lock,
+    _WriterLockHeld,
 )
-from .mor import refresh_cached
-from .reader import _is_missing_file_error
+
+
+@dataclass(frozen=True)
+class MutationStats:
+    """What a DML verb did — the executed analog of the reference's
+    parse-only acknowledgement."""
+
+    files_total: int
+    files_rewritten: int
+    rows_matched: int
+    rows_inserted: int = 0
+
+    def render(self) -> str:
+        return (
+            f"rewrote {self.files_rewritten}/{self.files_total} files, "
+            f"{self.rows_matched} rows matched, "
+            f"{self.rows_inserted} rows inserted"
+        )
 
 
 class ConcurrentWriteConflict(RuntimeError):
@@ -175,15 +194,77 @@ def committed(
     but no row value changed, so only the file-listing epoch advances.
     Inside an open transaction the manifest and the index refresh wait
     for its commit, which writes one version for the whole batch."""
+    from . import mor, versioning  # both commit through this module
+
     st = _txn_state(path)
     if st is not None:
         st.dirty = True
     else:
         if version:
-            _versioning._autoversion(spark, path)
+            versioning._autoversion(spark, path)
         _refresh_indexes(spark, path)
-    (_mark_mutated if rows else _mark_files_changed)(spark, path)
-    refresh_cached(spark, path)
+    # the catalog's stats epoch (rows changed) or only its file-listing
+    # epoch (compact): registered ANALYZE stats surface as stale instead
+    # of being served silently
+    with contextlib.suppress(Exception):
+        (mark_table_mutated if rows else mark_table_files_changed)(
+            spark, path
+        )
+    mor.refresh_cached(spark, path)
+
+
+def _refresh_indexes(spark: SparkSession, path: str) -> None:
+    """Post-commit bloom-index maintenance: re-index the files this DML
+    just created, O(new files) per indexed column and one cheap dir
+    listing when the table has no indexes.  Runs inside the writer lock
+    (sidecar appends must not race another writer).  A failure degrades
+    to always-candidate files — correctness never depends on this hook,
+    so it warns instead of failing the already-committed mutation."""
+    from . import fileindex, mutate
+
+    if str(
+        spark.conf.get(mutate.AUTO_REFRESH_INDEX_CONF, "true")
+    ).lower() != "true":
+        return
+    try:
+        fileindex.refresh_all_bloom_indexes(spark, path)
+    except Exception as e:  # pragma: no cover - defensive
+        warnings.warn(
+            f"bloom index auto-refresh on {path} failed ({e}); point "
+            "lookups stay correct (unindexed files are always "
+            "candidates) — run refresh_bloom_index manually",
+            stacklevel=2,
+        )
+
+
+def _default_retain(
+    spark: SparkSession, path: str, retain: bool | None
+) -> bool:
+    """``retain=None`` (the verbs' default) auto-retains when the table has
+    snapshot manifests: deleting superseded files out from under a pinned
+    manifest would break time travel later and misdirect the blame at
+    ``vacuum``.  Explicit ``False`` still deletes — the caller owns the
+    consequences.
+
+    Doubles as the mutual-exclusion choke point with the merge-on-read
+    layer: every file-rewriting verb (classic + optimistic + compact)
+    resolves its retain policy here, so this is the one place that can
+    refuse rewriting a table carrying live deletion vectors — a COW
+    rewrite reads the BASE files (underscore dirs invisible) and would
+    resurrect MOR-deleted rows into the rewritten output while their
+    tombstones still point at the replaced file names."""
+    from . import mor, versioning
+
+    if mor.has_deletion_vectors(spark, path):
+        raise ValueError(
+            f"copy-on-write DML refused: {path} carries live deletion "
+            "vectors (merge-on-read layer); a rewrite would resurrect "
+            "MOR-deleted rows. Run operators.mor.materialize_deletes "
+            "first, then retry."
+        )
+    if retain is not None:
+        return retain
+    return bool(versioning.list_snapshots(spark, path))
 
 
 def _publish(spark, path, st: Staged, retain, created) -> None:
@@ -256,6 +337,8 @@ def run(
             if not _is_missing_file_error(e) or not fs.exists(jpath):
                 raise
             last_conflict, last_exc = "<file vanished during read/stage>", e
+            from .mor import refresh_cached
+
             refresh_cached(spark, path)
             continue
         if not st.changed:

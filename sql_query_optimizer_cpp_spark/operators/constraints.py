@@ -9,16 +9,8 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from . import reader
-from .mutate import (
-    _fs,
-    _partition_cols,
-    _read_small_file,
-    _write_small_file,
-    _writer_lock,
-    is_partitioned,
-    list_data_files,
-    read_table,
-)
+from .reader import _fs
+from .storage import _read_small_file, _write_small_file, _writer_lock
 
 # -- table constraints (CHECK enforcement on COW DML) --------------------------
 #
@@ -52,8 +44,6 @@ def _constraints_doc(spark: SparkSession, path: str) -> dict:
     time) — the snapshot lets enforcement NULL-backfill a column the
     staged files happen to lack (pre-evolution rewrites) without an
     O(table) schema merge per mutation."""
-    import json
-
     _, fs, jpath = _fs(spark, f"{path.rstrip('/')}/{CONSTRAINTS_FILE}")
     if not fs.exists(jpath):
         return {"constraints": {}, "columns": {}}
@@ -70,8 +60,6 @@ def table_constraints(spark: SparkSession, path: str) -> dict[str, str]:
 
 
 def _write_constraints(spark: SparkSession, path: str, doc: dict) -> None:
-    import json
-
     _write_small_file(
         spark,
         f"{path.rstrip('/')}/{CONSTRAINTS_FILE}",
@@ -114,12 +102,12 @@ def add_constraint(
                 f"constraint {name!r} already exists: {cons[name]!r} "
                 "(drop_constraint first)"
             )
-        full = read_table(spark, path)
-        if is_partitioned(spark, path):
-            files = list_data_files(spark, path, recursive=True)
-            probe = full.drop(*_partition_cols(path, files[0]))
-        else:
-            probe = full
+        # partition columns (key=value dirs between the root and a file)
+        # are not data columns
+        files = reader.list_files(spark, path, recursive=True)
+        probe = reader.read(spark, path, files).drop(
+            *(reader.partition_keys(path, files[0].path) if files else [])
+        )
         try:
             probe.select(_violation(expr))
         except Exception as e:

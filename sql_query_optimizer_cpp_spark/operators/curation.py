@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import hash64, hash64_sql
+from .dedup import _persist_tracked, doc_shingles, shingles_sql
 from .text import (
     lang_id,
     lang_id_sql,
@@ -332,8 +333,6 @@ def decontaminate(
 
     Output: (doc_id, n_shared_shingles, n_probe_docs).
     """
-    from .dedup import _persist_tracked, doc_shingles
-
     # both join sides derive from the same explode + distinct — persist
     # it once or Catalyst recomputes the corpus-wide shuffle per consumer
     # (the same fix the dedup pipelines already carry)
@@ -362,8 +361,6 @@ def decontaminate_sql(
     n: int = 3,
 ) -> str:
     """DuckDB twin of :func:`decontaminate`."""
-    from .dedup import shingles_sql
-
     return f"""
 WITH ex AS (SELECT DISTINCT {id_expr}, s FROM
   (SELECT {id_expr}, unnest({shingles_sql(text_expr, n)}) AS s FROM {table})),

@@ -44,15 +44,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..functions import values_df
 from . import reader
-from .mutate import (
-    _fs,
+from .mor import _live, _read_dv, _with_identity
+from .mutate import is_partitioned, list_data_files
+from .reader import Listed, _fs
+from .storage import (
+    _delete_files,
     _read_small_file,
     _rel_to_table,
     _write_small_file,
-    list_data_files,
 )
-from .reader import Listed
 
 INDEX_DIR = "_index"
 
@@ -182,8 +184,6 @@ def _index_rows(
     # a file whose column is entirely NULL produces no position group;
     # it still needs an (all-zero) index row, else refresh counts it as
     # "new" forever and the probe treats it as an always-candidate
-    from ..functions import values_df
-
     all_rels = values_df(
         spark,
         "src_file string",
@@ -241,7 +241,7 @@ def refresh_bloom_index(spark: SparkSession, path: str, col: str) -> int:
 
 def refresh_all_bloom_indexes(spark: SparkSession, path: str) -> dict[str, int]:
     """Refresh every bloom sidecar under ``<table>/_index/`` — the
-    post-DML maintenance hook (operators/mutate._refresh_indexes calls
+    post-DML maintenance hook (operators/commit._refresh_indexes calls
     this after each committed mutation unless
     ``spark.sqlopt.autoRefreshIndexes`` is false).  Returns
     ``{column: files newly indexed}``; O(new files) per index, a single
@@ -256,10 +256,10 @@ def drop_bloom_index(spark: SparkSession, path: str, col: str) -> bool:
     """Remove ``col``'s bloom sidecar; returns whether one existed.  Pure
     metadata — the index is derived state, always rebuildable."""
     jvm, fs, _ = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(_index_root(path, col))
-    if not fs.exists(p):
+    root = _index_root(path, col)
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(root)):
         return False
-    fs.delete(p, True)
+    _delete_files(spark, [root], recursive=True)
     return True
 
 
@@ -312,8 +312,6 @@ def _probe(
     files = list_data_files(spark, path, recursive=True)
     by_rel = {_rel_to_table(path, f): f for f in files}
     # the literals' positions via the SAME JVM hash expression as build
-    from ..functions import values_df
-
     try:
         lits = values_df(spark, f"v {meta['col_type']}", [(v,) for v in vals])
     except TypeError:  # col types outside the VALUES subset keep the
@@ -371,9 +369,6 @@ def _read_candidates(
     live deletion vectors when the table carries them, so the index read
     path composes with merge-on-read DML instead of resurrecting
     MOR-deleted rows (same contract as read_mor)."""
-    from .mor import _live, _read_dv, _with_identity
-    from .mutate import is_partitioned
-
     listing = reader.list_files(spark, path, recursive=True)
     if not candidates:
         return reader.read(spark, path, listing).where(F.lit(False))

@@ -17,8 +17,9 @@ Design (all distributed, nothing per-row on the driver):
   surrogate-key materialization).
 - The vector store is plain parquet under ``<table>/_dv/`` with schema
   ``(src_file string, row_idx long)``; each commit stages one batch
-  beside the table and renames it in all-or-nothing.  Underscore-
-  prefixed, so base reads and ``list_data_files`` never see it.
+  beside the table and renames it in, all-or-nothing, in the same move
+  as the statement's data files.  Underscore-prefixed, so base reads
+  and ``list_data_files`` never see it.
 - :func:`read_mor` = base scan LEFT ANTI JOIN the vector set on that
   identity.  The DV side is tiny relative to the table by design (it only
   grows until the next materialize), so AQE plans it as a broadcast anti
@@ -58,7 +59,7 @@ frames by path (:func:`refresh_cached`, from the one post-commit
 sequence ``commit.committed``), never session-wide.
 
 The one remaining guard is COW-side: the file-REWRITING
-verbs still refuse a table with live vectors (``mutate._default_retain``)
+verbs still refuse a table with live vectors (``commit._default_retain``)
 — a base-scan rewrite would resurrect MOR-deleted rows — so the path from
 MOR back to COW is :func:`materialize_deletes` (itself a commit).  Same
 advisory writer lock as COW, so a MOR writer and a COW writer can never
@@ -67,31 +68,26 @@ interleave.
 
 from __future__ import annotations
 
-import contextlib
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import reader
+from .commit import MutationStats, Staged, run
 from .mutate import (
-    MutationStats,
     _check_merge_source,
     _cond,
-    _delete_files,
-    _fs,
     _group_by_dir,
-    _hpath,
-    _move_in,
     _partition_cols,
-    _reclaim,
-    _rel_to_table,
-    _retire_files,
     _stage,
     _staged_rows,
+    _swap_staged,
     is_partitioned,
     list_data_files,
 )
+from .reader import _fs, _hpath
+from .storage import _delete_files, _reclaim, _rel_to_table
 
 #: sidecar dir holding the vector parquet; underscore ⇒ invisible to
 #: base parquet scans and to list_data_files
@@ -270,31 +266,6 @@ def _dv_snapshot_conflict(
     return None
 
 
-def _move_dv_parts(spark: SparkSession, path: str, staging: str) -> None:
-    """Move a staged tombstone batch's parts into the live ``_dv/``
-    store, then drop the staging dir.  All-or-nothing: a rename failure
-    mid-loop must not leave a PARTIAL batch visible to read_mor while the
-    verb reports failure — retract the parts already moved in before
-    re-raising."""
-    _, fs, _ = _fs(spark, path)
-    dv_root = _dv_path(path)
-    fs.mkdirs(_hpath(spark, dv_root))
-    moved: list = []
-    for part in list_data_files(spark, staging):
-        src_p = _hpath(spark, part)
-        dest = _hpath(spark, dv_root, src_p.getName())
-        if not fs.rename(src_p, dest):
-            for d in moved:
-                with contextlib.suppress(Exception):
-                    fs.delete(d, False)
-            raise IOError(
-                f"dv commit: rename {part} -> {dest} failed "
-                "(batch retracted, nothing committed)"
-            )
-        moved.append(dest)
-    fs.delete(_hpath(spark, staging), True)
-
-
 def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
     """The merge-on-read writer, as a :func:`~.commit.run` stage.
 
@@ -315,7 +286,6 @@ def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
     THIS writer's files re-derives (:func:`_dv_snapshot_conflict`)."""
 
     def stage(created: list[str], optimistic: bool):
-        from .commit import Staged
 
         listing = reader.list_files(spark, path, recursive=True)
         files0 = [f.path for f in listing]
@@ -374,16 +344,14 @@ def _dv_stage(spark: SparkSession, path: str, legs, cond: Column | None):
         if not n_dead:
             _reclaim(spark, [dv_staging])
 
-        def publish(retain: bool) -> None:
-            for d in (copy_dir, ins_dir):
-                if d:
-                    _move_in(spark, path, d)
-            if n_dead:
-                _move_dv_parts(spark, path, dv_staging)
-
+        # one move: copies and inserts first, the tombstones that hide
+        # the old rows last
+        entries = [(path, [], copy_dir), (path, [], ins_dir)]
+        if n_dead:
+            entries.append((_dv_path(path), [], dv_staging))
         return Staged(
             MutationStats(len(files0), 0, n_dead, n_ins),
-            publish=publish,
+            publish=lambda _: _swap_staged(spark, path, entries, False),
             validate=lambda: _dv_snapshot_conflict(
                 spark, path, touched, set(dv0)
             ),
@@ -427,7 +395,6 @@ def dv_delete_where(
     re-derives the matched set (and the already-tombstoned exclusion that
     keeps the count exact) and retries.  The commit keywords pass to
     :func:`~.commit.run`."""
-    from .commit import run
 
     def legs(sub, live, data_cols, part_cols):
         return live, None, None
@@ -464,7 +431,6 @@ def dv_update_where(
     keywords are :func:`dv_delete_where`'s; ``optimistic=True`` stages
     both writes lock-free and re-checks constraints inside the commit
     lock if the registered set changed meanwhile."""
-    from .commit import run
 
     def legs(sub, live, data_cols, part_cols):
         unknown = set(set_map) - set(data_cols)
@@ -665,7 +631,6 @@ def dv_merge_into(
     WriteSerializable anomaly that ``mutate.merge_into`` documents — so
     a pure-insert merge commits first-attempt under any non-overlapping
     churn."""
-    from .commit import run
 
     _check_merge_source(source, on, check_unique)
 
@@ -724,22 +689,21 @@ def materialize_deletes(
     Crash discipline, stated honestly (the COW-wide "duplicates, never
     loss" contract, not more): every rewrite stages FIRST (all
     directories complete before any original file moves), so no crash
-    point loses rows.  A crash before a directory's swap leaves its old
-    files + vectors intact — :func:`read_mor` stays exact and a rerun
-    converges (stale staging dirs are crash debris for repair_table).  A
-    crash inside a directory's move-in→delete window leaves that
-    directory's live rows duplicated until repair — the same window every
-    COW swap has.  The vector STORE itself is never unprotected: a
-    partial materialize moves the pruned store in beside the old batch
-    files before deleting them, so tombstones for still-live files exist
-    on disk at every instant (worst case duplicated, which the anti join
-    doesn't care about).
+    point loses rows.  A crash before the swap leaves the old files +
+    vectors intact — :func:`read_mor` stays exact and a rerun converges
+    (stale staging dirs are crash debris for repair_table) — and so does
+    a rename that fails during it (the swap is one all-or-nothing move).
+    A process that dies inside the swap can leave live rows duplicated
+    until repair — the same window every COW swap has.  The vector STORE
+    itself is never unprotected: a partial materialize moves the pruned
+    store in beside the old batch files before they go, so tombstones
+    for still-live files exist on disk at every instant (worst case
+    duplicated, which the anti join doesn't care about).
 
     ``files_rewritten`` counts the tombstoned files whose vectors the call
     folds; a rerun after a crash mid-swap also counts the files the
     crashed run already rewrote, whose stale vectors it drops.  The call
     commits through the locked DML commit loop (:func:`~.commit.run`)."""
-    from .commit import Staged, run
     from .versioning import list_snapshots
 
     def stage(created: list[str], optimistic: bool) -> Staged:
@@ -806,41 +770,19 @@ def materialize_deletes(
         retain = bool(list_snapshots(spark, path))
 
         def publish(_) -> None:
-            for dir_, fl, staging in staged:
-                _move_in(spark, dir_, staging)
-                if retain:
-                    _retire_files(spark, path, fl)
-                else:
-                    _delete_files(spark, fl)
-            _, fs, _ = _fs(spark, path)
-            dv_root = _hpath(spark, _dv_path(path))
-            old_dv_files = [
-                st.getPath().toString()
-                for st in fs.listStatus(dv_root)
-                if st.isFile()
-            ]
-            old_dv_parquet = list_dv_files(spark, path)
-            if pruned:
-                # never leave the store empty or missing: the pruned copy
-                # moves in beside the old batches, only then do they
-                # retire/delete.  Any crash point leaves at-least-once
-                # tombstones, which the anti join reads identically.
-                _move_in(spark, _dv_path(path), pruned)
-                if retain:
-                    _retire_files(spark, path, old_dv_parquet)
-                    _delete_files(
-                        spark,
-                        [f for f in old_dv_files if f not in old_dv_parquet],
-                    )
-                else:
-                    _delete_files(spark, old_dv_files)
-            else:
-                # full materialize on a versioned table: the old batches
-                # stay reachable for time travel; only marker files die
-                # with the dir
-                if retain:
-                    _retire_files(spark, path, old_dv_parquet)
-                fs.delete(dv_root, True)
+            # ONE move: the rewrites and the pruned store land beside the
+            # old files and batches, which retire in the same move — the
+            # store is never empty or missing (at-least-once tombstones at
+            # every crash point, which the anti join reads identically).
+            # A full materialize then drops the store dir; on a versioned
+            # table its batches have retired, reachable for time travel
+            dv_root = _dv_path(path)
+            old_dv = list_dv_files(spark, path) if retain or pruned else []
+            _swap_staged(
+                spark, path, staged + [(dv_root, old_dv, pruned)], retain
+            )
+            if not pruned:
+                _delete_files(spark, [dv_root], recursive=True)
 
         return Staged(
             MutationStats(len(files), len(dead_rel), 0), publish=publish

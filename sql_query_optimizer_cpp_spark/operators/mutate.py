@@ -24,8 +24,11 @@ How it scales (the design constraint):
    any original byte is removed; a crash mid-swap can leave BOTH copies
    (detectable, re-runnable), never neither.
 
-All filesystem operations go through the Hadoop FileSystem API (HDFS / S3A /
-local alike), not Python's ``os`` module.
+This module owns the copy-on-write half of the table protocol: the
+prune, the staging writes, the part-file names a publish gives staged
+files, and crash inventory (:func:`repair_table`).  Every directory
+mutation — the publish's one all-or-nothing move, deletes, the writer
+lock, small files — goes through operators/storage.py.
 
 Retention & time travel: every verb takes ``retain=True`` to move superseded
 files into an underscore-prefixed ``_retired/`` area (invisible to normal
@@ -53,35 +56,32 @@ lost update.
 
 from __future__ import annotations
 
-import contextlib
-import threading
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.writers import zorder_key
 from . import reader
-from .reader import Listed, _fs, _hpath, _jclass, _uri_path
+from .commit import MutationStats, Staged, _default_retain, run
+from .reader import Listed, _fs, _hpath, _uri_path
+from .storage import (
+    LOCK_FILE,
+    RETIRED_DIR,
+    _delete_files,
+    _reclaim,
+    _rel_to_table,
+    move,
+)
 
 
-@dataclass(frozen=True)
-class MutationStats:
-    """What a DML verb did — the executed analog of the reference's
-    parse-only acknowledgement."""
-
-    files_total: int
-    files_rewritten: int
-    rows_matched: int
-    rows_inserted: int = 0
-
-    def render(self) -> str:
-        return (
-            f"rewrote {self.files_rewritten}/{self.files_total} files, "
-            f"{self.rows_matched} rows matched, "
-            f"{self.rows_inserted} rows inserted"
-        )
+#: set to "false" to opt out of post-DML bloom-index maintenance (the
+#: indexes stay CORRECT either way — unindexed files are always probe
+#: candidates — they just stop earning skips until a manual refresh)
+AUTO_REFRESH_INDEX_CONF = "spark.sqlopt.autoRefreshIndexes"
 
 
 def _cond(condition: str | Column) -> Column:
@@ -165,53 +165,6 @@ def _staged_rows(spark: SparkSession, staging: str) -> int:
     )
 
 
-def _reclaim(spark: SparkSession, dirs) -> None:
-    """Best-effort recursive delete of staging dirs (pure debris: nothing
-    in them was ever moved into a table)."""
-    dirs = [d for d in dirs if d]
-    if not dirs:
-        return
-    _, fs, _ = _fs(spark, dirs[0])
-    for d in dirs:
-        with contextlib.suppress(Exception):
-            fs.delete(_hpath(spark, d), True)
-
-
-def _move_in(spark: SparkSession, path: str, staging: str) -> int:
-    """Move staged part files into the table dir under fresh unique COW
-    names, then drop the staging dir; returns how many files moved.  A
-    hive-partitioned staging's ``key=value`` subdirectories land in the
-    matching table directories (created as needed): the partition value
-    lives in the directory name, so preserving each staged file's
-    relative path IS the data move.  A rename keeps a file's bytes, so
-    the reader's footer memo follows each file to its new name."""
-    _, fs, table_path = _fs(spark, path)
-    tag = uuid.uuid4().hex[:12]
-    moved: list[tuple[Listed, str]] = []
-
-    def walk(src_dir: str, dest_dir: str) -> None:
-        for f, is_dir in reader.statuses(
-            spark, fs.listStatus(_hpath(spark, src_dir))
-        ):
-            name = f.path.rsplit("/", 1)[-1]
-            if name.startswith(("_", ".")):
-                continue
-            if is_dir:
-                sub = f"{dest_dir}/{name}"
-                fs.mkdirs(_hpath(spark, sub))
-                walk(f.path, sub)
-                continue
-            dest = f"{dest_dir}/part-cow-{tag}-{len(moved):05d}.snappy.parquet"
-            if not fs.rename(_hpath(spark, f.path), _hpath(spark, dest)):
-                raise IOError(f"COW swap: rename {f.path} -> {dest} failed")
-            moved.append((f, dest))
-
-    walk(staging, fs.makeQualified(table_path).toString())
-    fs.delete(_hpath(spark, staging), True)
-    reader.renamed(spark, moved)
-    return len(moved)
-
-
 def _group_by_dir(files: list) -> dict[str, list]:
     """Group file URIs (or :class:`~.reader.Listed` entries) by their
     containing directory — the per-partition unit every partitioned verb
@@ -232,332 +185,88 @@ def _partition_cols(path: str, sample_file: str) -> list[str]:
     return reader.partition_keys(path, sample_file)
 
 
-def _delete_files(spark: SparkSession, files: list[str]) -> None:
-    if not files:
-        return
-    _, fs, _ = _fs(spark, files[0])
-    for f in files:
-        fs.delete(_hpath(spark, f), False)
-
-
-#: Underscore prefix ⇒ invisible to Spark's file discovery (same convention
-#: as _SUCCESS/_metadata), so retired files and manifests never leak into a
-#: normal table read.
-RETIRED_DIR = "_retired"
-SNAPSHOT_DIR = "_snapshots"
-LOCK_FILE = "_cow.lock"
-
-
-class _WriterLockHeld(RuntimeError):
-    """The advisory writer lock is held by someone else (subclass of the
-    historical RuntimeError so existing callers' handling keeps working).
-    The optimistic verbs catch this to convert refuse into retry."""
-
-
-def _is_already_exists(e: Exception) -> bool:
-    """Did a py4j-wrapped Hadoop create(overwrite=False) fail because the
-    file exists?  Match the Java exception CLASS — free-text matching
-    breaks across FileSystem implementations; keep a message fallback only
-    for wrappers that drop the class."""
-    cls = ""
-    je = getattr(e, "java_exception", None)
-    if je is not None:
-        with contextlib.suppress(Exception):
-            cls = je.getClass().getName()
-    return cls.endswith("FileAlreadyExistsException") or (
-        not cls and "already exists" in str(e).lower()
-    )
-
-
-#: Per-path in-process mutexes serializing the create-if-absent attempt:
-#: Hadoop's LOCAL FileSystem implements create(overwrite=false) as an
-#: exists() check followed by the create (TOCTOU), so two threads of ONE
-#: process hitting the lock at the same instant could BOTH "acquire" it —
-#: observed as two OCC writers sharing a commit window and the second
-#: manifest overwriting the first.  The mutex guards only the one create
-#: call (never held across the verb); cross-PROCESS atomicity is the
-#: filesystem's contract (HDFS create-if-absent is atomic; local
-#: multi-process writers remain S3-class "bring a real lock service").
-_LOCK_ATTEMPT_MUTEXES: dict[str, threading.Lock] = {}
-_LOCK_ATTEMPT_GUARD = threading.Lock()
-
-
-def _lock_attempt_mutex(path: str) -> threading.Lock:
-    key = _txn_key(path)
-    with _LOCK_ATTEMPT_GUARD:
-        return _LOCK_ATTEMPT_MUTEXES.setdefault(key, threading.Lock())
-
-
-def _acquire_writer_lock(
-    spark: SparkSession, path: str, wait_seconds: float = 0.0
-) -> None:
-    """Atomically create ``_cow.lock`` (fails if present); see
-    :func:`_writer_lock` for the semantics."""
-    _, fs, table_path = _fs(spark, path)
-    lock = _hpath(spark, table_path, LOCK_FILE)
-    mutex = _lock_attempt_mutex(path)
-    deadline = time.monotonic() + wait_seconds
-    while True:
-        try:
-            with mutex:  # same-process threads: check+create is atomic
-                out = fs.create(lock, False)
-            break
-        except Exception as e:  # py4j wraps the Java exception
-            if not _is_already_exists(e):
-                raise
-            if time.monotonic() < deadline:
-                time.sleep(0.1)
-                continue
-            raise _WriterLockHeld(
-                f"another writer holds {lock}: concurrent COW DML is "
-                "refused (single-writer). If the previous writer crashed, "
-                "remove the lock file after confirming nothing is running."
-            ) from None
-    try:
-        # a failure after the create must not leak the lock — a leaked
-        # lock wedges every future DML on the table until manual removal
-        out.write(bytearray(uuid.uuid4().hex.encode()))
-        out.close()
-    except Exception:
-        with contextlib.suppress(Exception):
-            fs.delete(lock, False)
-        raise
-
-
-def _release_writer_lock(spark: SparkSession, path: str) -> None:
-    _, fs, table_path = _fs(spark, path)
-    fs.delete(_hpath(spark, table_path, LOCK_FILE), False)
-
-
-#: Active transactions (operators/txn.py): normalized table path ->
-#: state.  Consulted by _writer_lock (the owning thread re-enters: the
-#: transaction already holds the physical lock for its whole span) and
-#: by the one post-commit sequence, commit.committed, which defers the
-#: version manifest and the index refresh to the transaction's commit
-#: (one manifest for the whole batch).
-_ACTIVE_TXNS: dict[str, "_TxnState"] = {}
-
-
-@dataclass
-class _TxnState:
-    path: str
-    owner: int  # threading.get_ident() of the beginning thread
-    dirty: bool = False  # did any verb change anything?
-    verbs: int = 0
-
-
-def _txn_key(path: str) -> str:
-    from ..catalog import _norm_path
-
-    return _norm_path(path)
-
-
-def _txn_state(path: str) -> "_TxnState | None":
-    return _ACTIVE_TXNS.get(_txn_key(path))
-
-
-def _refuse_in_txn(path: str, what: str) -> None:
-    """Maintenance verbs that reclaim or re-commit state are refused while
-    a transaction is open on the table: vacuum would delete the txn's own
-    uncommitted (manifest-less) files, restore/drop would move the commit
-    anchor the rollback plan targets."""
-    st = _txn_state(path)
-    if st is not None:
-        raise RuntimeError(
-            f"{what} refused: a multi-statement transaction is open on "
-            f"{path} — commit() or rollback() it first"
-        )
-
-
-@contextlib.contextmanager
-def _writer_lock(
-    spark: SparkSession, path: str, wait_seconds: float = 0.0
-):
-    """Advisory single-writer lock: atomically create ``_cow.lock`` (fails
-    if present), release on exit.
-
-    ``wait_seconds=0`` (the classic verbs) DETECTS a concurrent writer and
-    refuses immediately; the optimistic verbs pass a short bound and poll —
-    their lock hold time is the metadata swap only, so waiting beats
-    refusing.  Create-if-absent is atomic on HDFS and local filesystems
-    (S3 needs a real catalog/log for that guarantee; stated, not papered
-    over).  A crashed writer leaves a stale lock; the error says exactly
-    which file to remove after confirming no writer is alive.
-
-    Re-entrant for the thread that opened a multi-statement transaction
-    on the table (operators/txn.py): the Transaction holds the physical
-    lock for its whole span, so its verbs pass straight through while
-    every other thread/process still hits the lock file and refuses.
-    """
-    st = _txn_state(path)
-    if st is not None and st.owner == threading.get_ident():
-        st.verbs += 1
-        yield
-        return
-    _acquire_writer_lock(spark, path, wait_seconds)
-    try:
-        yield
-    finally:
-        _release_writer_lock(spark, path)
-
-
-def _mark_mutated(spark: SparkSession, path: str) -> None:
-    """Bump the catalog's per-path mutation epoch so registered ANALYZE
-    stats for this table are surfaced as stale instead of silently served
-    (catalog.stats_stale / plans.genetic.graph_for_advice).  Also bumps
-    the file-listing epoch (every row mutation rewrites files)."""
-    from ..catalog import mark_table_mutated
-
-    with contextlib.suppress(Exception):
-        mark_table_mutated(spark, path)
-
-
-def _mark_files_changed(spark: SparkSession, path: str) -> None:
-    """Bump ONLY the catalog's file-listing epoch — the layout-only-verb
-    half of :func:`_mark_mutated`: compact() moves every byte into new
-    files (the load_tables definition memo must invalidate) without
-    changing a row value (ANALYZE stats stay exact)."""
-    from ..catalog import mark_table_files_changed
-
-    with contextlib.suppress(Exception):
-        mark_table_files_changed(spark, path)
-
-
-#: set to "false" to opt out of post-DML bloom-index maintenance (the
-#: indexes stay CORRECT either way — unindexed files are always probe
-#: candidates — they just stop earning skips until a manual refresh)
-AUTO_REFRESH_INDEX_CONF = "spark.sqlopt.autoRefreshIndexes"
-
-
-def _refresh_indexes(spark: SparkSession, path: str) -> None:
-    """Post-commit bloom-index maintenance: re-index the files this DML
-    just created, O(new files) per indexed column and one cheap dir
-    listing when the table has no indexes.  Runs inside the writer lock
-    (sidecar appends must not race another writer).  A failure degrades
-    to always-candidate files — correctness never depends on this hook,
-    so it warns instead of failing the already-committed mutation."""
-    import warnings
-
-    if str(
-        spark.conf.get(AUTO_REFRESH_INDEX_CONF, "true")
-    ).lower() != "true":
-        return
-    try:
-        from .fileindex import refresh_all_bloom_indexes
-
-        refresh_all_bloom_indexes(spark, path)
-    except Exception as e:  # pragma: no cover - defensive
-        warnings.warn(
-            f"bloom index auto-refresh on {path} failed ({e}); point "
-            "lookups stay correct (unindexed files are always "
-            "candidates) — run refresh_bloom_index manually",
-            stacklevel=2,
-        )
-
-
-def _default_retain(spark: SparkSession, path: str, retain: bool | None) -> bool:
-    """``retain=None`` (the verbs' default) auto-retains when the table has
-    snapshot manifests: deleting superseded files out from under a pinned
-    manifest would break time travel later and misdirect the blame at
-    ``vacuum``.  Explicit ``False`` still deletes — the caller owns the
-    consequences.
-
-    Doubles as the mutual-exclusion choke point with the merge-on-read
-    layer: every file-rewriting verb (classic + optimistic + compact)
-    resolves its retain policy here, so this is the one place that can
-    refuse rewriting a table carrying live deletion vectors — a COW
-    rewrite reads the BASE files (underscore dirs invisible) and would
-    resurrect MOR-deleted rows into the rewritten output while their
-    tombstones still point at the replaced file names."""
-    from .mor import has_deletion_vectors
-
-    if has_deletion_vectors(spark, path):
-        raise ValueError(
-            f"copy-on-write DML refused: {path} carries live deletion "
-            "vectors (merge-on-read layer); a rewrite would resurrect "
-            "MOR-deleted rows. Run operators.mor.materialize_deletes "
-            "first, then retry."
-        )
-    if retain is not None:
-        return retain
-    from .versioning import list_snapshots
-
-    return bool(list_snapshots(spark, path))
-
-
-def _retire_files(spark: SparkSession, path: str, files: list[str]) -> None:
-    """Move superseded files into ``_retired/<batch>/`` instead of deleting
-    them — the raw material time travel and snapshot reads are made of.
+def _retired(path: str, files: list[str]) -> list[tuple[str, str]]:
+    """``(file, new home)`` pairs retiring ``files`` into one fresh
+    ``_retired/<batch>/`` dir instead of deleting them — the raw material
+    time travel and snapshot reads are made of.
 
     The TABLE-RELATIVE path is preserved under the batch dir (not just the
     basename): partitioned writes reuse part numbers across partition
     dirs, so ``lang=en/part-00000-x.parquet`` and
     ``lang=de/part-00000-x.parquet`` must retire to distinct locations.
     """
-    if not files:
-        return
-    _, fs, table_path = _fs(spark, path)
-    batch = f"{RETIRED_DIR}/{uuid.uuid4().hex[:12]}"
-    for f in files:
-        src = _hpath(spark, f)
-        rel = _rel_to_table(path, f)
-        dest = _hpath(spark, table_path, f"{batch}/{rel}")
-        fs.mkdirs(dest.getParent())
-        if not fs.rename(src, dest):
-            raise IOError(f"retire: rename {f} -> {dest} failed")
-
-
-#: Driver-side fs metadata concurrency for the per-partition swap phase.
-#: Renames/deletes are independent per partition dir; a serial loop is
-#: O(partitions) round-trips of driver latency — minutes at 10⁴ partitions.
-SWAP_THREADS = 16
+    batch = f"{path.rstrip('/')}/{RETIRED_DIR}/{uuid.uuid4().hex[:12]}"
+    return [(f, f"{batch}/{_rel_to_table(path, f)}") for f in files]
 
 
 def _swap_staged(
     spark: SparkSession,
     path: str,
-    staged: list[tuple[str, list[str], str]],
+    staged: list[tuple[str, list[str], str | None]],
     retain: bool,
 ) -> None:
-    """Phase 2 of every partitioned COW verb: move each ``(part_dir,
-    old_files, staging)`` entry's staged parts in and delete/retire the
-    originals, thread-pooled (independent per partition — pure driver-side
-    fs metadata calls, no Spark jobs).
+    """Phase 2 of every writer that stages files: publish each ``(dir,
+    old_files, staging)`` entry.  Its staged part files move into ``dir``
+    under fresh unique COW names (no staging: nothing moves in) and, when
+    ``retain``, its originals retire — all in ONE all-or-nothing
+    :func:`~.storage.move`, new files first; without ``retain`` the
+    originals are deleted after it.  Then the staging dirs go.  A
+    hive-partitioned staging's ``key=value`` subdirectories land in the
+    matching directories (created as needed): the partition value lives
+    in the directory name, so preserving each staged file's relative
+    path IS the data move.  A rename keeps a file's bytes, so the
+    reader's footer memo follows each file to its new name.
 
     MUST only run after ALL partitions are staged: phase 1 may re-evaluate
     a plan that reads the table itself (a MERGE source derived from the
     target), so no original file may disappear while any staging write is
     still pending.  Crash semantics: death in phase 1 leaves only orphan
-    staging dirs (table untouched, ``repair_table`` reclaims); death in
-    phase 2 can leave some partitions swapped and others not — the same
-    window the flat-table verbs already have, now minimized.
+    staging dirs (table untouched, ``repair_table`` reclaims); a failed
+    rename in phase 2 renames back what already moved (the table reads
+    as before the statement); only death during the move, or a failed
+    delete of the originals after it, can leave new parts beside their
+    originals (duplicates, never loss).
     """
-    from concurrent.futures import ThreadPoolExecutor
+    parts: list[tuple[Listed, str]] = []
 
-    def one(entry: tuple[str, list[str], str]) -> None:
-        part_dir, pfiles, staging = entry
-        _move_in(spark, part_dir, staging)
-        if retain:
-            _retire_files(spark, path, pfiles)
-        else:
-            _delete_files(spark, pfiles)
+    def walk(fs, src_dir: str, dest_dir: str, tag: str) -> None:
+        for f, is_dir in reader.statuses(
+            spark, fs.listStatus(_hpath(spark, src_dir))
+        ):
+            name = f.path.rsplit("/", 1)[-1]
+            if name.startswith(("_", ".")):
+                continue
+            if is_dir:
+                walk(fs, f.path, f"{dest_dir}/{name}", tag)
+            else:
+                parts.append((
+                    f,
+                    f"{dest_dir}/part-cow-{tag}-{len(parts):05d}.snappy.parquet",
+                ))
 
-    if not staged:
-        return
-    if len(staged) == 1:
-        one(staged[0])
-        return
-    # py4j is thread-safe (one gateway connection per thread); each task
-    # touches a disjoint partition dir, retire batches are uuid-unique
-    with ThreadPoolExecutor(max_workers=min(SWAP_THREADS, len(staged))) as ex:
-        for _ in ex.map(one, staged):
-            pass
+    for dest_dir, _, staging in staged:
+        if staging:
+            _, fs, jpath = _fs(spark, dest_dir)
+            walk(
+                fs, staging, fs.makeQualified(jpath).toString(),
+                uuid.uuid4().hex[:12],
+            )
+    old = [f for _, fl, _ in staged for f in fl]
+    move(
+        spark,
+        [(f.path, dest) for f, dest in parts]
+        + (_retired(path, old) if retain else []),
+    )
+    _delete_files(spark, [s for _, _, s in staged if s], recursive=True)
+    reader.renamed(spark, parts)
+    if not retain:
+        _delete_files(spark, old)
 
 
 #: Concurrent Spark jobs for the per-partition STAGING phase.  Partition
 #: rewrites are independent jobs; a serial loop leaves the cluster idle
-#: between job tails.  Kept below SWAP_THREADS — each staging job already
-#: fans out across executor cores, so a few in flight saturate.
+#: between job tails.  Each staging job already fans out across executor
+#: cores, so a few in flight saturate.
 STAGE_JOBS = 8
 
 
@@ -580,8 +289,6 @@ def _run_partition_stages(
     writer's staging, which stages lock-free by design.  No original has
     been touched in phase 1.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     items = list(items)
     if created is None:
         created = []  # list.append is atomic under the GIL
@@ -663,7 +370,6 @@ def _rewrite_stage(
     O(files in touched partitions), never O(table)."""
 
     def stage(created: list[str], optimistic: bool):
-        from .commit import Staged
 
         partitioned = is_partitioned(spark, path)
         listing = reader.list_files(spark, path, recursive=partitioned)
@@ -725,7 +431,6 @@ def delete_where(
     disjoint files — on a partitioned table, disjoint partitions — both
     commit.  ``lock_wait_seconds`` and ``_after_stage`` pass to
     :func:`~.commit.run`, which documents the protocol."""
-    from .commit import run
 
     cond = _cond(condition)
 
@@ -782,7 +487,6 @@ def update_where(
     between directories, which is a delete+insert, not an update.
     ``optimistic`` and the commit keywords are :func:`delete_where`'s.
     """
-    from .commit import run
 
     cond = _cond(condition)
 
@@ -902,7 +606,6 @@ def _merge_stage(
     metadata-only widening would poison reads).  Any other type mismatch
     is refused loudly rather than silently cast.
     """
-    from .commit import Staged
 
     # the merged footer schema: a previously-evolved table's newest
     # columns live only in its newest files
@@ -1117,14 +820,11 @@ def _merge_stage(
         clash = sorted((before - current) & {_uri_path(f) for f in hit})
         return f"rewritten files replaced: {clash[:3]}" if clash else None
 
-    def publish(retain: bool) -> None:
-        _swap_staged(spark, path, staged, retain)
-        if rows_inserted:
-            _move_in(spark, path, ins_staging)
-
+    # the inserts move in with the rewrites, in the same one move
+    entries = staged + ([(path, [], ins_staging)] if rows_inserted else [])
     return Staged(
         MutationStats(len(files), len(hit), rows_matched, rows_inserted),
-        publish=publish,
+        publish=lambda retain: _swap_staged(spark, path, entries, retain),
         validate=validate,
         check=[s for _, _, s in staged]
         + ([ins_staging] if rows_inserted else []),
@@ -1209,7 +909,6 @@ def merge_into(
     when key ranges can overlap.  A locked merge is single-writer, so
     any other level than the default is refused there.
     """
-    from .commit import run
 
     if isolation not in ("serializable", "write_serializable"):
         raise ValueError(
@@ -1279,7 +978,6 @@ def compact(
     as a layout-only change: the file-listing epoch advances, the
     ANALYZE-stats epoch does not.
     """
-    from .commit import Staged, run
 
     if target_bytes <= 0 or not (0 < small_ratio <= 1):
         raise ValueError("target_bytes must be > 0 and 0 < small_ratio <= 1")
@@ -1288,8 +986,6 @@ def compact(
     recluster = list(zorder or sort_by or [])
 
     def _recluster_df(df: DataFrame, n_out: int) -> DataFrame:
-        from ..sources.writers import zorder_key
-
         bad = [c for c in recluster if c not in df.columns]
         if bad:
             raise ValueError(
@@ -1383,56 +1079,6 @@ def compact(
     return run(spark, path, stage, what="compact")
 
 
-def _read_small_file(spark: SparkSession, path: str) -> bytes:
-    _, fs, jpath = _fs(spark, path)
-    stream = fs.open(jpath)
-    try:
-        return bytes(
-            _jclass(spark, "org.apache.commons.io.IOUtils").toByteArray(stream)
-        )
-    finally:
-        stream.close()
-
-
-def _write_small_file(
-    spark: SparkSession, path: str, data: bytes, overwrite: bool = True
-) -> None:
-    jvm, fs, jpath = _fs(spark, path)
-    stream = fs.create(jpath, overwrite)
-    try:
-        try:
-            stream.write(bytearray(data))
-        finally:
-            stream.close()
-    except BaseException:
-        # a partial manifest would WEDGE the version log: every later
-        # _autoversion back-walk json-decodes it, and the exclusive
-        # create would misread the leftover as a concurrent commit.
-        # The create succeeded, so the failed write's debris is ours to
-        # remove — the caller's retry then starts clean.
-        with contextlib.suppress(Exception):
-            fs.delete(jpath, False)
-        raise
-
-
-def _rel_to_table(path: str, file_uri: str) -> str:
-    """Manifest entries are table-relative so the table stays movable.
-
-    Compare the PATH COMPONENTS of both URIs (scheme/authority stripped),
-    not a basename marker: a marker search breaks the moment the table's
-    directory name repeats earlier in the path (``/data/sales/sales``),
-    and ``file:///x`` vs ``file:/x`` vs bare ``/x`` must all agree.
-    """
-    from urllib.parse import urlparse
-
-    table_p = urlparse(path).path.rstrip("/")
-    file_p = urlparse(file_uri).path
-    if not file_p.startswith(table_p + "/"):
-        raise ValueError(f"{file_uri} is not under table {path}")
-    return file_p[len(table_p) + 1:]
-
-
-
 # -- crash recovery -----------------------------------------------------------
 
 
@@ -1468,14 +1114,17 @@ def repair_table(
     """Post-crash inventory of COW debris: sibling ``<table>__cow_*``
     staging directories and the advisory ``_cow.lock``.
 
-    What the debris means depends on WHERE the writer died, and this tool
-    cannot tell: a death before the swap began leaves a staging dir whose
-    data was never moved (the table is consistent; removing the dir just
-    reclaims space), but a death MID-swap — after some renames of
-    ``_move_in``, before the originals were
-    deleted — can leave duplicate rows (old + new files coexisting) or a
-    partially-applied insert, and removing the staging remnant then
-    makes the partial state permanent.  Before ``remove=True``, verify
+    What the debris means depends on HOW the writer stopped, and this
+    tool cannot tell.  A failure before the publish, or a rename that
+    failed during it (the publish's one move renames back whatever it
+    already moved before raising), leaves a staging dir whose data is
+    not in the table: the table reads as before the statement, and
+    removing the dir just reclaims space.  Only a publish stopped
+    partway — a process that DIED after some of the move's renames, or
+    a failed delete of the replaced files after the move — can leave
+    duplicate rows (old + new files coexisting) or a partially-applied
+    insert, and removing the staging remnant then makes the partial
+    state permanent.  Before ``remove=True``, verify
     the table (row counts vs expectation, or ``read_version`` against
     the last committed manifest on a version-enabled table, which pins
     the pre-crash file list exactly) and re-run or repair the mutation
@@ -1509,8 +1158,5 @@ def repair_table(
     lock = _hpath(spark, jpath, LOCK_FILE)
     stale = lock.toString() if fs.exists(lock) else None
     if remove:
-        for s in staging:
-            fs.delete(_hpath(spark, s), True)
-        if stale:
-            fs.delete(lock, False)
+        _delete_files(spark, staging + [stale], recursive=True)
     return RepairReport(tuple(sorted(staging)), stale, remove)

@@ -50,7 +50,29 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from .dedup import _spread
-from .similarity import DIM, _Sidecar, normsq_expr
+from .similarity import (
+    DIM,
+    IVF_CELLS,
+    IVF_SAMPLE_MOD,
+    _DOT_OVER_CB,
+    _Sidecar,
+    _best_cells_col,
+    _caller_sample,
+    _cb_array_sql,
+    _centroid_consts,
+    _comp,
+    _const_normsq,
+    _lit_assign_budget,
+    _scores_sql,
+    _values_df,
+    assign_cells,
+    assign_cells_fast,
+    dot_expr,
+    kmeans_centroids,
+    normsq_expr,
+    training_sample,
+    with_norm,
+)
 
 PQ_SUBS = 16
 PQ_CODES = 16
@@ -138,8 +160,6 @@ def _pq_consts(
     training loop's ``{(sub, code, pos): c}`` dict.  ``pos`` is GLOBAL,
     so each subvec lists its components in global-position order —
     exactly the rows the distributed path joins on."""
-    from .similarity import _const_normsq, _lit_assign_budget
-
     if isinstance(codebook, dict):
         items = codebook.items()
     else:
@@ -172,8 +192,6 @@ def _codes_col(emb_col: str, consts, dsub: int):
     code), one transform-argmax per sub-block over the slice of the
     embedding that sub-quantizer covers (same O(codes + dim) plan-size
     discipline as similarity._scores_sql)."""
-    from .similarity import _scores_sql
-
     per_sub = []
     for s, codes in enumerate(consts):
         sl = f"slice({emb_col}, {s * dsub + 1}, {dsub})"
@@ -185,8 +203,6 @@ def _pq_cnorm_df(spark, consts) -> DataFrame:
     """(sub, code, c_nsq) DataFrame from driver constants — values are
     the Spark-evaluated exact norms, so broadcast-join consumers see the
     same bits the distributed cnorm aggregation produces."""
-    from .similarity import _values_df
-
     return _values_df(
         spark,
         ["sub", "code", "c_nsq"],
@@ -229,8 +245,6 @@ def train_pq(
     ``sample``: a caller-owned, persisted :func:`.similarity.training_sample`
     frame (see :func:`.similarity.kmeans_centroids`); raises ``ValueError``
     unless it was drawn with this call's ``sample_mod``."""
-    from .similarity import _caller_sample, training_sample
-
     spark = df.sparkSession
     dsub = dim // n_subs
     # sample reused by the seed collect + one scan per iteration (same
@@ -279,8 +293,6 @@ def train_pq(
                     .agg((_dsum("xd") / F.count("*")).alias("c"))
                 )
             else:
-                from .similarity import _values_df
-
                 scomp = _comp_sub(sdf, id_col, emb_col, n_subs, dim)
                 cdf = _values_df(
                     spark,
@@ -310,8 +322,6 @@ def train_pq(
     finally:
         if not caller_owned:
             sdf.unpersist()
-    from .similarity import _values_df
-
     if not rows:
         return spark.createDataFrame(
             [], "sub int, code int, pos int, c double"
@@ -361,8 +371,6 @@ def _adc_tables(
     (query_id, sub, code, qdot) — partial dot of the exact query
     sub-vector against every centroid; ``cnorm`` (sub, code, c_nsq) —
     centroid norms; ``qn`` (query_id, q_nsq) — exact query norms."""
-    from .similarity import _DOT_OVER_CB, _cb_array_sql
-
     qmask = F.col(id_col) < n_queries
     consts = _pq_consts(df.sparkSession, codebook)
     if consts is not None:
@@ -500,8 +508,6 @@ def ivf_pq_topk(
     neighbor lives outside the probed cells — the recall/probe-cost
     trade the coarse quantizer always makes.
     Output: ``(query_id, neighbor_id, cos_sim, rn)``."""
-    from .similarity import assign_cells_fast, kmeans_centroids
-
     if coarse is None:
         coarse = kmeans_centroids(df, id_col=id_col, emb_col=emb_col)
     if codebook is None:
@@ -563,8 +569,6 @@ def _encode_postings(
     unambiguous), never on ``id_col``: duplicate ids must not
     cross-join.  Output: ``(id, src_file, row_idx, codes, cell)``,
     repartitioned by cell for the hive-partitioned write."""
-    from .similarity import _best_cells_col, _centroid_consts, _comp, assign_cells
-
     spark = df.sparkSession
     keyed = _spread(df.select(id_col, emb_col, "src_file", "row_idx"))
     cc = _centroid_consts(spark, coarse)
@@ -662,8 +666,6 @@ def build_ivfpq_index(
 
     Returns the number of trained cells."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from .similarity import IVF_CELLS, IVF_SAMPLE_MOD, kmeans_centroids, training_sample
 
     def train(df: DataFrame) -> list[DataFrame]:
         # The two trainings are INDEPENDENT (coarse cells partition the
@@ -827,8 +829,6 @@ def ivf_pq_refine_topk(
     and ``refine >= corpus``, the result IS the exact brute-force
     top-k).  Output: ``(query_id, neighbor_id, cos_sim, rn)`` with
     EXACT cosines."""
-    from .similarity import dot_expr, with_norm
-
     if refine < k:
         raise ValueError(f"refine ({refine}) must be >= k ({k})")
     approx = ivf_pq_topk(

@@ -33,14 +33,27 @@ from __future__ import annotations
 
 import hashlib
 import json
+import uuid
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..functions import values_df
 from . import reader
 from .dedup import _spread
+from .mor import _live, _read_dv, _with_identity, list_dv_files, read_mor
+from .mutate import is_partitioned, list_data_files
+from .storage import (
+    _delete_files,
+    _read_small_file,
+    _rel_to_table,
+    _write_small_file,
+    _writer_lock,
+    move,
+)
 
 DIM = 64
 NUM_PLANES = 4
@@ -1060,9 +1073,6 @@ def _identity_frame(spark, table_path: str, listing) -> DataFrame:
     tombstone batch, the dv_update shape, included) — with their MOR
     identity as ``src_file``/``row_idx``.  A table whose OWN schema uses
     those names would silently duplicate columns — refuse."""
-    from .mor import _live, _read_dv, _with_identity
-    from .mutate import is_partitioned
-
     base_path = table_path if is_partitioned(spark, table_path) else None
     df = _live(
         _with_identity(spark, table_path, listing, base_path),
@@ -1095,9 +1105,6 @@ def _table_file_set(spark, table_path: str) -> set[str]:
     deletion-vector batch files (table-relative).  A dv_delete adds a
     batch without touching any data file — excluding DV files would let
     a desynced index pass the gate and resurrect deleted rows."""
-    from .mor import list_dv_files
-    from .mutate import _rel_to_table, list_data_files
-
     return {
         _rel_to_table(table_path, f)
         for f in list_data_files(spark, table_path, recursive=True)
@@ -1148,14 +1155,23 @@ class _Sidecar:
             f"no {self.label} index under {root} — run {self.builder} first"
         )
 
+    @staticmethod
+    def _debris(spark, root: str) -> list[str]:
+        """The ``_maintain_*`` stage/trash dirs a maintain leaves until it
+        finishes, sorted."""
+        _, fs, root_p = reader._fs(spark, root)
+        return sorted(
+            f.path
+            for f, _ in reader.statuses(spark, fs.listStatus(root_p))
+            if f.path.rsplit("/", 1)[-1].startswith("_maintain_")
+        )
+
     def meta(self, spark, table_path: str, emb_col: str) -> dict:
         """The staleness anchor.  Every postings-writing pass also writes
         it, so a usable index without one is CRASH DEBRIS (e.g. a failed
         anchor overwrite) — raise and demand a rebuild rather than
         searching ungated; corrupt JSON and transient read faults are
         loud for the same reason."""
-        from .mutate import _read_small_file
-
         root = self.root(table_path, emb_col)
         try:
             return json.loads(_read_small_file(spark, f"{root}/meta.json"))
@@ -1201,11 +1217,6 @@ class _Sidecar:
         """Train ``train(df) -> [codebook, ...]`` on the table's live rows,
         persist the codebooks, the postings and the anchor (plus the
         kind's ``anchor`` keys).  Returns the number of trained cells."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .mor import list_dv_files
-        from .mutate import _fs, _rel_to_table, _write_small_file, _writer_lock
-
         # the anchor is THIS snapshot's file list (data + DV batches),
         # pinned before the training scans: re-listing afterwards would
         # fold in files a concurrent commit added that the index never saw
@@ -1217,17 +1228,13 @@ class _Sidecar:
         df = _identity_frame(spark, table_path, listing)
         books = train(df)
         root = self.root(table_path, emb_col)
-        _, fs, root_p = _fs(spark, root)
-        if not fs.exists(root_p):
-            fs.mkdirs(root_p)  # the lock file needs the dir on first build
         # the sidecar writes run under the index lock a maintain holds
-        # (training is read-only and stays outside it)
+        # (training is read-only and stays outside it); creating the lock
+        # file creates the index dir on a first build
         with _writer_lock(spark, root, 30.0):
             # a crashed maintain leaves _maintain_* stage/trash dirs as
             # its tripwire; a rebuild supersedes them
-            for st in fs.listStatus(root_p):
-                if st.getPath().getName().startswith("_maintain_"):
-                    fs.delete(st.getPath(), True)
+            _delete_files(spark, self._debris(spark, root), recursive=True)
             # the codebook writes are independent single-file jobs:
             # overlapped, each back-fills the other's scheduling floor
             with ThreadPoolExecutor(max_workers=len(books)) as pool:
@@ -1268,8 +1275,6 @@ class _Sidecar:
     def maintain(
         self, spark, table_path, emb_col, id_col, lock_wait_seconds
     ) -> dict:
-        from .mutate import _writer_lock
-
         root = self.root(table_path, emb_col)
         if self.postings(spark, table_path, emb_col) is None:
             raise self._absent(root)
@@ -1284,28 +1289,19 @@ class _Sidecar:
         postings-schema-agnostic: tombstone removal anti-joins whole rows
         on the MOR identity and the stage-then-swap moves hive
         partitions; only the append step encodes."""
-        import uuid
-
-        from .mutate import _fs, _write_small_file
-
         root = self.root(table_path, emb_col)
         # re-read the postings INSIDE the lock: a maintainer (or rebuild)
         # that just committed could have swapped cell partitions
         postings = self.postings(spark, table_path, emb_col)
-        jvm, fs, root_p = _fs(spark, root)
+        jvm, fs, _ = reader._fs(spark, root)
         path = jvm.org.apache.hadoop.fs.Path
-        debris = sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(root_p)
-            if st.getPath().getName().startswith("_maintain_")
-        )
+        debris = self._debris(spark, root)
         meta, added, removed_files = self.drift(spark, table_path, emb_col)
         if not added and not removed_files:
             # the anchor is the commit point: debris next to a FRESH
             # anchor is a completed maintain whose final cleanup didn't
             # run — disposable, not a correctness signal
-            for nm in debris:
-                fs.delete(path(f"{root}/{nm}"), True)
+            _delete_files(spark, debris, recursive=True)
             return {"appended": 0, "removed": 0, "cells_rewritten": 0}
         rebuild = f"rebuild with {self.builder}"
         if debris:
@@ -1313,7 +1309,8 @@ class _Sidecar:
             # anchor committed); the postings may be part-swapped
             raise ValueError(
                 f"{self.label} index under {root} has crashed-maintenance "
-                f"debris ({', '.join(debris)}) — {rebuild}"
+                f"debris ({', '.join(d.rsplit('/', 1)[-1] for d in debris)})"
+                f" — {rebuild}"
             )
         if removed_files:
             raise ValueError(
@@ -1386,22 +1383,15 @@ class _Sidecar:
                 # anchor commits), staged replacements IN; a cell whose
                 # every row was removed simply has no staged dir — probes
                 # already tolerate missing cell partitions
-                fs.mkdirs(path(trash))
-                moves = [
+                move(spark, [
                     (f"{post_root}/cell={c}", f"{trash}/cell={c}")
                     for c in affected
                     if fs.exists(path(f"{post_root}/cell={c}"))
                 ] + [
                     (f"{stage}/cell={c}", f"{post_root}/cell={c}")
                     for c in sorted(staged or ())
-                ]
-                for src, dst in moves:
-                    if not fs.rename(path(src), path(dst)):
-                        raise IOError(
-                            f"{self.kind} maintain: rename {src} -> {dst} "
-                            "failed"
-                        )
-                fs.delete(path(stage), True)
+                ])
+                _delete_files(spark, [stage], recursive=True)
                 cells_rewritten = len(affected)
 
         if added_data:
@@ -1430,8 +1420,7 @@ class _Sidecar:
                 indent=0,
             ).encode(),
         )
-        if trash is not None:
-            fs.delete(path(trash), True)
+        _delete_files(spark, [trash], recursive=True)
         return {
             "appended": int(final - (have - n_removed)),
             "removed": int(n_removed),
@@ -1465,9 +1454,6 @@ class _Sidecar:
         literal rows instead of re-running the query scan and literal
         scoring; the round trip is bit-identical (repr discipline).
         ``books``/``meta``: codebooks and anchor the caller already read."""
-        from ..functions import values_df
-        from .mor import read_mor
-
         if n_probes < 1:
             raise ValueError("n_probes must be >= 1")
         root = self.root(table_path, emb_col)

@@ -13,7 +13,7 @@ metadata, no new data paths):
 
 1. ``begin(spark, path)`` / ``begin_multi(spark, paths)`` take every
    member table's physical writer lock (canonical path order) and
-   register the transaction (``mutate._ACTIVE_TXNS``).  From here each
+   register the transaction (``storage._ACTIVE_TXNS``).  From here each
    lock is RE-ENTRANT for this thread only: every existing verb —
    ``update_where``, ``delete_where``, ``merge_into``, ``compact``,
    ``materialize_deletes``, the ``dv_*`` merge-on-read verbs,
@@ -69,19 +69,20 @@ import threading
 from pyspark.sql import SparkSession
 
 from .commit import committed
-from .mutate import (
+from .reader import _fs, _hpath
+from .storage import (
+    _ACTIVE_TXNS,
     LOCK_FILE,
     SNAPSHOT_DIR,
-    _ACTIVE_TXNS,
-    _TxnState,
     _acquire_writer_lock,
     _delete_files,
-    _fs,
-    _hpath,
     _read_small_file,
+    _reclaim,
     _release_writer_lock,
     _txn_key,
+    _TxnState,
     _write_small_file,
+    move,
 )
 from .versioning import (
     _VersionLog,
@@ -177,30 +178,24 @@ def _finish_multi_commit(spark: SparkSession, marker_abs: str) -> int:
     done = 0
     for entry in info["tables"]:
         t_path, version = entry["path"], entry["version"]
+        prep = _prep_path(t_path, version)
+        final = _final_path(t_path, version)
         # per-table fs handle: members may live on different stores
-        _, fs, _ = _fs(spark, t_path)
-        prep = _hpath(spark, _prep_path(t_path, version))
-        final = _hpath(spark, _final_path(t_path, version))
-        if fs.exists(final):
+        _, fs, final_p = _fs(spark, final)
+        if fs.exists(final_p):
             # this member already committed; stale prep (rename raced a
             # crash) is debris
-            with contextlib.suppress(Exception):
-                fs.delete(prep, False)
+            _reclaim(spark, [prep])
             continue
-        if not fs.exists(prep):
+        if not fs.exists(_hpath(spark, prep)):
             raise IOError(
                 f"multi-table commit marker names v{version} of {t_path} "
                 "but neither the prepared nor the final manifest exists "
                 "— corrupt commit state, refusing to guess"
             )
-        if not fs.rename(prep, final):
-            raise IOError(
-                f"multi-table commit: rename {prep} -> {final} failed"
-            )
+        move(spark, [(prep, final)])
         done += 1
-    _, m_fs, m_jpath = _fs(spark, marker_abs)
-    with contextlib.suppress(Exception):
-        m_fs.delete(m_jpath, False)
+    _reclaim(spark, [marker_abs])
     return done
 
 
@@ -372,10 +367,8 @@ class MultiTableTransaction:
                 overwrite=False,
             )
         except BaseException:
-            for p, v in prepared:
-                _, fs, _ = _fs(self.spark, p)  # per-table store
-                with contextlib.suppress(Exception):
-                    fs.delete(_hpath(self.spark, _prep_path(p, v)), False)
+            for p, v in prepared:  # one call per table: per-table store
+                _reclaim(self.spark, [_prep_path(p, v)])
             self._reopen_all(sts)
             raise
         # phase 3 — FINISH: renames + marker delete; from here the
@@ -534,14 +527,10 @@ def recover_tables(
             "process — commit() or rollback() it instead"
         )
 
-    def _lock(p: str):
-        _, fs, jpath = _fs(spark, p)  # per-table store
-        return fs, _hpath(spark, jpath, LOCK_FILE)
-
     locks_held = []
     for p in plist:
-        fs, lock = _lock(p)
-        if fs.exists(lock):
+        _, fs, jpath = _fs(spark, p)  # per-table store
+        if fs.exists(_hpath(spark, jpath, LOCK_FILE)):
             locks_held.append(p)
     if locks_held and not force:
         raise RecoveryNeedsForce(
@@ -583,15 +572,13 @@ def recover_tables(
             )
         if table_versions(spark, p):
             changed += _rollback_to_committed(spark, p)
-        _, fs, _ = _fs(spark, p)
         for prep in debris:
             with contextlib.suppress(Exception):
-                fs.delete(_hpath(spark, prep), False)
+                _delete_files(spark, [prep])
                 changed += 1
     for p in locks_held:
-        fs, lock = _lock(p)
         with contextlib.suppress(Exception):
-            fs.delete(lock, False)
+            _release_writer_lock(spark, p)
     return changed
 
 
@@ -642,5 +629,5 @@ def recover_table(
     changed = _rollback_to_committed(spark, path)
     if lock_held:
         with contextlib.suppress(Exception):
-            fs.delete(lock, False)
+            _release_writer_lock(spark, path)
     return changed

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from . import reader
+from .commit import MutationStats, committed
 from .mor import (
     _live,
     _qualified_root,
@@ -23,21 +24,19 @@ from .mor import (
     attach_identity,
     list_dv_files,
 )
-from .mutate import (
-    MutationStats,
+from .mutate import _retired, list_data_files
+from .reader import Listed, _fs, _hpath, _jclass
+from .storage import (
     RETIRED_DIR,
     SNAPSHOT_DIR,
-    _fs,
-    _hpath,
+    _delete_files,
     _read_small_file,
     _refuse_in_txn,
     _rel_to_table,
-    _retire_files,
     _write_small_file,
     _writer_lock,
-    list_data_files,
+    move,
 )
-from .reader import Listed, _jclass
 
 # -- snapshots, time travel, vacuum ------------------------------------------
 #
@@ -346,12 +345,10 @@ def _restore_files(
     extras = [f for f in current if _rel_to_table(path, f) not in pinned]
     if missing:
         resolved = _resolve_pinned_files(spark, path, missing, what)
-        _, fs, _ = _fs(spark, path)
-        for rel, now_at in zip(missing, resolved):
-            dest = _hpath(spark, f"{root}/{rel}")
-            fs.mkdirs(dest.getParent())
-            if not fs.rename(_hpath(spark, now_at.path), dest):
-                raise IOError(f"{what}: rename {now_at.path} -> {dest} failed")
+        move(spark, [
+            (now_at.path, f"{root}/{rel}")
+            for rel, now_at in zip(missing, resolved)
+        ])
     return len(missing), extras, live_rel
 
 
@@ -484,27 +481,24 @@ def vacuum(spark: SparkSession, path: str) -> int:
 
     reclaimed = 0
     for batch in fs.listStatus(retired_root):
-        survivors = 0
         batch_prefix = batch.getPath().toString()
-        for p in list(_walk(batch.getPath())):
-            # table-relative path of the retired file = its path under the
-            # batch dir (retirement preserves it)
-            rel = p.toString()[len(batch_prefix) + 1:]
-            if rel in referenced:
-                survivors += 1
-            else:
-                fs.delete(p, False)
-                reclaimed += 1
-        if survivors == 0:
-            fs.delete(batch.getPath(), True)
+        # table-relative path of the retired file = its path under the
+        # batch dir (retirement preserves it)
+        files = [p.toString() for p in _walk(batch.getPath())]
+        doomed = [
+            f for f in files if f[len(batch_prefix) + 1:] not in referenced
+        ]
+        if len(doomed) == len(files):  # nothing references the batch
+            _delete_files(spark, [batch_prefix], recursive=True)
+        else:
+            _delete_files(spark, doomed)
+        reclaimed += len(doomed)
     return reclaimed
 
 
 def drop_snapshot(spark: SparkSession, path: str, name: str) -> None:
-    _, fs, _ = _fs(spark, path)
-    fs.delete(
-        _hpath(spark, f"{path.rstrip('/')}/{SNAPSHOT_DIR}/{name}.json"),
-        False,
+    _delete_files(
+        spark, [f"{path.rstrip('/')}/{SNAPSHOT_DIR}/{name}.json"]
     )
 
 
@@ -718,8 +712,6 @@ def restore_version(
     ``files_rewritten`` in the returned stats counts files that changed
     liveness (restored + retired); ``rows_matched`` is 0 (no row work).
     """
-    from .commit import committed
-
     # the last committed manifest is an open transaction's rollback
     # anchor — moving it mid-batch would corrupt the rollback plan
     _refuse_in_txn(path, "restore_version")
@@ -745,7 +737,7 @@ def restore_version(
         # the post-``version`` files retire AFTER the restore renames
         # (older manifests may still pin some of them — retire, never
         # delete)
-        _retire_files(spark, path, extras)
+        move(spark, _retired(path, extras))
         committed(spark, path)
         return MutationStats(
             sum(map(len, states[version])), restored + len(extras), 0

@@ -218,7 +218,7 @@ def table_storage_report(spark, path: str, top_n: int = 5) -> TableStorageReport
 
     from ..operators import reader
     from ..operators.mor import _read_dv_files, list_dv_files
-    from ..operators.mutate import _rel_to_table
+    from ..operators.storage import _rel_to_table
     from ..operators.versioning import table_versions
 
     listing = reader.list_files(spark, path, recursive=True)

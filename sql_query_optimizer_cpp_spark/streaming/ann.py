@@ -58,8 +58,9 @@ import warnings
 
 from pyspark.sql import DataFrame
 
-from ..operators.mutate import _WriterLockHeld
+from ..operators.reader import _fs
 from ..operators.similarity import maintain_ivf_index, read_ivf_index
+from ..operators.storage import _write_small_file, _WriterLockHeld
 
 
 def ingest_vectors_maintaining_ivf(
@@ -86,8 +87,6 @@ def ingest_vectors_maintaining_ivf(
 
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
-        from ..operators.mutate import _fs
-
         # this sink OWNS the table layout (one hive partition dir per
         # epoch).  A table that already holds FLAT parquet files would
         # become a mixed flat/partitioned layout Spark cannot list —
@@ -120,9 +119,9 @@ def ingest_vectors_maintaining_ivf(
         # (gate-protected, but a needless full rebuild).  _SUCCESS is
         # still honored when present (tables written before the
         # sentinel existed must not be overwritten on replay either).
-        own_marker = jvm.org.apache.hadoop.fs.Path(f"{dest}/_EPOCH_COMMITTED")
-        committer_marker = jvm.org.apache.hadoop.fs.Path(f"{dest}/_SUCCESS")
-        if fs.exists(own_marker) or fs.exists(committer_marker):
+        own_marker = f"{dest}/_EPOCH_COMMITTED"
+        own = fs.exists(jvm.org.apache.hadoop.fs.Path(own_marker))
+        if own or fs.exists(jvm.org.apache.hadoop.fs.Path(f"{dest}/_SUCCESS")):
             # at-least-once replay of a committed epoch: the vectors are
             # already live; fall through to the maintain, which is a
             # no-op if its crash window didn't hit.  Backfill the sink's
@@ -131,8 +130,8 @@ def ingest_vectors_maintaining_ivf(
             # the sentinel write): otherwise the epoch stays permanently
             # dependent on the committer marker object-store lifecycle
             # rules may strip — the exact trust this sentinel removes.
-            if not fs.exists(own_marker):
-                fs.create(own_marker, True).close()
+            if not own:
+                _write_small_file(spark, own_marker, b"")
         else:
             # overwrite, not append: a crashed attempt's partial files
             # must be retired, not joined, or the replay double-lands
@@ -143,7 +142,7 @@ def ingest_vectors_maintaining_ivf(
             # sentinel AFTER the data write: a crash in between replays
             # into the overwrite path, which is safe — the un-sentineled
             # files were never indexed (maintain runs strictly later)
-            fs.create(own_marker, True).close()
+            _write_small_file(spark, own_marker, b"")
         if read_ivf_index(spark, table_path, emb_col) is None:
             return  # pre-build epochs stay unindexed (gate protects reads)
         try:

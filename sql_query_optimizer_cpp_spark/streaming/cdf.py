@@ -58,8 +58,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-SNAPSHOT_DIR = "_snapshots"  # mirrors operators/mutate.py:262
-RETIRED_DIR = "_retired"
+from ..operators.storage import RETIRED_DIR, SNAPSHOT_DIR
+
 _VERSION_RE = re.compile(r"^v(\d{8})\.json$")
 #: metadata columns appended after the table's own schema
 CHANGE_COLS = "_change_type string, _commit_version bigint"

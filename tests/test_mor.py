@@ -12,7 +12,7 @@ from sql_query_optimizer_cpp_spark.operators import (
     dml_sql,
     versioning,
 )
-from sql_query_optimizer_cpp_spark.operators import mutate as m
+from sql_query_optimizer_cpp_spark.operators import mutate as m, storage
 from sql_query_optimizer_cpp_spark.operators.mor import (
     dv_count,
     dv_delete_where,
@@ -70,7 +70,7 @@ def test_dv_src_file_is_table_relative(spark, tmp_path):
     path = _flat(spark, tmp_path)
     dv_delete_where(spark, path, "k < 5")
     rows = spark.read.parquet(path + "/_dv").collect()
-    rels = {m._rel_to_table(path, f) for f in m.list_data_files(spark, path)}
+    rels = {storage._rel_to_table(path, f) for f in m.list_data_files(spark, path)}
     for r in rows:
         assert not r.src_file.startswith(("file:", "/")), r.src_file
         assert r.src_file in rels
@@ -283,8 +283,8 @@ def test_dv_update_constraint_rollback(spark, tmp_path):
 def test_dv_writer_lock_excludes_cow(spark, tmp_path):
     path = _flat(spark, tmp_path)
     # a held writer lock blocks the MOR verbs exactly like the COW verbs
-    with m._writer_lock(spark, path):
-        with pytest.raises(m._WriterLockHeld):
+    with storage._writer_lock(spark, path):
+        with pytest.raises(storage._WriterLockHeld):
             dv_delete_where(spark, path, "k = 1")
 
 
@@ -396,7 +396,7 @@ def test_partial_materialize_never_leaves_store_unprotected(spark, tmp_path):
     """The pruned store is moved in BESIDE the old batch files before they
     are deleted — at no point is _dv absent while live tombstones exist.
     Verified by the end state (pruned entries correct) plus the ordering
-    contract: the staged prune lands under _dv via _move_in, so the store
+    contract: the staged prune lands under _dv via _swap_staged, so the store
     dir itself is never deleted on the partial path."""
     path = _flat(spark, tmp_path, n=100, files=4)
     dv_delete_where(spark, path, "k < 25 OR k = 99")  # file0 fully dead

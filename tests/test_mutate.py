@@ -1434,10 +1434,8 @@ def test_version_log_delta_manifests_o_touched(spark, tmp_path):
         vacuum,
         drop_versions_before,
     )
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
-        _writer_lock,
-        list_data_files,
-    )
+    from sql_query_optimizer_cpp_spark.operators.mutate import list_data_files
+    from sql_query_optimizer_cpp_spark.operators.storage import _writer_lock
 
     path = str(tmp_path / "wide")
     spark.range(5000).selectExpr("id AS k", "id * 1.0 AS v").repartition(

@@ -1716,7 +1716,7 @@ def test_ivfpq_geometry_comes_from_the_index(spark, tmp_path):
 
     from sql_query_optimizer_cpp_spark.operators import pq as PQ
     from sql_query_optimizer_cpp_spark.operators.mor import read_mor
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.storage import (
         _read_small_file,
         _write_small_file,
     )
@@ -1775,7 +1775,7 @@ def test_maintain_ivfpq_index_folds_appends_and_deletes(spark, tmp_path):
         dv_delete_where,
         read_mor,
     )
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.storage import (
         _read_small_file,
     )
 

@@ -662,7 +662,7 @@ def test_repl_multi_table_transaction(engine, tmp_path):
     out = handle(engine, "RECOVER ta, tb", tables, settings=settings)
     assert "recovered ta,tb" in out
     # crash-before-decision debris needs the explicit UNDECIDED token
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.storage import (
         _write_small_file,
     )
     from sql_query_optimizer_cpp_spark.operators.txn import _prep_path
@@ -763,7 +763,7 @@ def test_repl_commit_failure_keeps_handle(engine, tmp_path):
 def test_repl_recover_verb(engine, tmp_path):
     """RECOVER rolls a crashed transaction (stale lock + uncommitted live
     state, no in-process handle) back to the last committed manifest."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import _ACTIVE_TXNS
+    from sql_query_optimizer_cpp_spark.operators.storage import _ACTIVE_TXNS
     from sql_query_optimizer_cpp_spark.operators.versioning import (
         table_versions,
     )

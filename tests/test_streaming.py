@@ -705,7 +705,7 @@ def test_stream_ann_ingest_survives_held_index_lock(
     import sql_query_optimizer_cpp_spark.streaming.ann as ann_mod
     from sql_query_optimizer_cpp_spark.operators import similarity as S
     from sql_query_optimizer_cpp_spark.operators.mor import read_mor
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.storage import (
         _WriterLockHeld,
     )
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from sql_query_optimizer_cpp_spark.operators import mutate as m, versioning
+from sql_query_optimizer_cpp_spark.operators import mutate as m, storage, versioning
 from sql_query_optimizer_cpp_spark.operators.mor import (
     dv_count,
     dv_delete_where,
@@ -164,7 +164,7 @@ def test_txn_guards(spark, tmp_path):
         t = threading.Thread(target=other)
         t.start()
         t.join()
-        assert err and isinstance(err[0], m._WriterLockHeld)
+        assert err and isinstance(err[0], storage._WriterLockHeld)
         txn.rollback()
 
 
@@ -200,7 +200,7 @@ def test_recover_table_after_crash(spark, tmp_path):
     m.update_where(spark, path, {"v": "-1.0"}, "k < 20")
     # simulate the process dying: the registry entry evaporates with the
     # process; the lock file and the uncommitted live state remain
-    from sql_query_optimizer_cpp_spark.operators.mutate import _ACTIVE_TXNS
+    from sql_query_optimizer_cpp_spark.operators.storage import _ACTIVE_TXNS
 
     _ACTIVE_TXNS.clear()
     txn._states = None  # the handle is gone with the process
@@ -261,7 +261,7 @@ def test_txn_refuses_create_snapshot_and_commit_failure_keeps_handle(
 
         t = threading.Thread(target=other)
         t.start(); t.join()
-        assert err and isinstance(err[0], m._WriterLockHeld)
+        assert err and isinstance(err[0], storage._WriterLockHeld)
         monkeypatch.undo()
         txn.rollback()  # still possible: full undo
     assert _rows(spark.read.parquet(path)) == before
@@ -357,7 +357,7 @@ def test_multi_txn_guards(spark, tmp_path):
 
 
 def test_multi_txn_crash_before_marker_rolls_back(spark, tmp_path):
-    from sql_query_optimizer_cpp_spark.operators.mutate import _ACTIVE_TXNS
+    from sql_query_optimizer_cpp_spark.operators.storage import _ACTIVE_TXNS
     from sql_query_optimizer_cpp_spark.operators.txn import (
         begin_multi,
         recover_tables,
@@ -493,7 +493,7 @@ def test_recover_tables_pre_decision_preps_need_assume_undecided(
 ):
     """(review r11) Prep debris with NO marker anywhere: rolling back is
     right only if the caller confirms the set is complete."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import (
+    from sql_query_optimizer_cpp_spark.operators.storage import (
         _write_small_file,
     )
     from sql_query_optimizer_cpp_spark.operators import txn as txn_mod

@@ -11,7 +11,7 @@ from collections import Counter
 
 import pytest
 
-from sql_query_optimizer_cpp_spark.operators import mutate as m, versioning
+from sql_query_optimizer_cpp_spark.operators import mutate as m, storage, versioning
 from sql_query_optimizer_cpp_spark.operators.mor import (
     dv_delete_where,
     materialize_deletes,
@@ -113,7 +113,7 @@ def test_read_version_across_retired_batches_builds_in_one_job(
     v1 = _rows(spark.read.parquet(path))
     m.update_where(spark, path, {"v": "-1.0"}, "k < 3")              # v2
     m.update_where(spark, path, {"v": "-2.0"}, "k BETWEEN 30 AND 31")  # v3
-    retired = tmp_path / "t" / m.RETIRED_DIR
+    retired = tmp_path / "t" / storage.RETIRED_DIR
     assert len(list(retired.iterdir())) == 2
     df, jobs = _build_jobs(
         spark, lambda: versioning.read_version(spark, path, 1)
@@ -139,7 +139,7 @@ def test_partitioned_dv_reads_keep_partition_columns(spark, tmp_path):
     m.update_where(spark, path, {"v": "v + 1"}, "p = 0 AND k < 9")   # v2
     dv_delete_where(spark, path, "k IN (1, 2, 4)")                   # v3
     v3 = _rows(read_mor(spark, path), cols)
-    assert (tmp_path / "part" / m.RETIRED_DIR).exists()
+    assert (tmp_path / "part" / storage.RETIRED_DIR).exists()
     old = versioning.read_version(spark, path, 1)
     assert "p" in old.columns
     assert _rows(old, cols) == v1
@@ -223,7 +223,7 @@ def test_materialize_and_restore_refresh_frames_over_the_table(
 def _crash_in_txn(spark, path, verb):
     """Run ``verb`` inside a transaction whose process then dies: the
     registry entry is gone, the lock and the uncommitted state remain."""
-    from sql_query_optimizer_cpp_spark.operators.mutate import _ACTIVE_TXNS
+    from sql_query_optimizer_cpp_spark.operators.storage import _ACTIVE_TXNS
     from sql_query_optimizer_cpp_spark.operators.txn import begin
 
     txn = begin(spark, path)
@@ -381,7 +381,7 @@ def test_warm_version_and_change_reads_build_without_a_job(spark, tmp_path):
     v1 = _rows(spark.read.parquet(path))
     m.update_where(spark, path, {"v": "-1.0"}, "k < 3")              # v2
     m.update_where(spark, path, {"v": "-2.0"}, "k BETWEEN 30 AND 31")  # v3
-    assert len(list((tmp_path / "t" / m.RETIRED_DIR).iterdir())) == 2
+    assert len(list((tmp_path / "t" / storage.RETIRED_DIR).iterdir())) == 2
     v3 = _rows(spark.read.parquet(path))
     _rows(versioning.read_version(spark, path, 1))
     _rows(versioning.read_changes(spark, path, 1, 3))
