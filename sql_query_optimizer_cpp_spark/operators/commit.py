@@ -56,10 +56,11 @@ only when the statement changed something.
 
 Staging dirs are registered in ``created`` BEFORE they are written, so
 any failure up to the publish reclaims exactly this attempt's debris.
-A publish makes its renames as one :func:`~.storage.move`, which is
-all-or-nothing: a rename that fails renames back the files already
+A publish makes its renames as one pooled :func:`~.storage.move`, which
+is all-or-nothing: a rename that fails renames back the files already
 moved before the error propagates, so the table reads as before the
-statement and the staging stays in place for
+statement (unless an undo rename fails too — the error then names the
+files that stayed moved) and the staging stays in place for
 :func:`~.mutate.repair_table` to reclaim.  Only a publish stopped
 after renames it could not undo — a process that dies mid-move, or a
 failed delete of the replaced files on a table that does not retain

@@ -209,13 +209,15 @@ def _swap_staged(
     old_files, staging)`` entry.  Its staged part files move into ``dir``
     under fresh unique COW names (no staging: nothing moves in) and, when
     ``retain``, its originals retire — all in ONE all-or-nothing
-    :func:`~.storage.move`, new files first; without ``retain`` the
-    originals are deleted after it.  Then the staging dirs go.  A
-    hive-partitioned staging's ``key=value`` subdirectories land in the
-    matching directories (created as needed): the partition value lives
-    in the directory name, so preserving each staged file's relative
-    path IS the data move.  A rename keeps a file's bytes, so the
-    reader's footer memo follows each file to its new name.
+    :func:`~.storage.move` (pooled across files and partitions); without
+    ``retain`` the originals are deleted after it.  Then the emptied
+    staging dirs are reclaimed, best effort.  A hive-partitioned
+    staging's ``key=value`` subdirectories land in the matching
+    directories (created as needed; the table root and every dir holding
+    an old file are known to exist): the partition value lives in the
+    directory name, so preserving each staged file's relative path IS
+    the data move.  A rename keeps a file's bytes, so the reader's
+    footer memo follows each file to its new name.
 
     MUST only run after ALL partitions are staged: phase 1 may re-evaluate
     a plan that reads the table itself (a MERGE source derived from the
@@ -223,11 +225,13 @@ def _swap_staged(
     still pending.  Crash semantics: death in phase 1 leaves only orphan
     staging dirs (table untouched, ``repair_table`` reclaims); a failed
     rename in phase 2 renames back what already moved (the table reads
-    as before the statement); only death during the move, or a failed
+    as before the statement, unless an undo rename fails too — the error
+    names what stayed moved); only death during the move, or a failed
     delete of the originals after it, can leave new parts beside their
     originals (duplicates, never loss).
     """
     parts: list[tuple[Listed, str]] = []
+    existing: set[str] = set()
 
     def walk(fs, src_dir: str, dest_dir: str, tag: str) -> None:
         for f, is_dir in reader.statuses(
@@ -244,23 +248,24 @@ def _swap_staged(
                     f"{dest_dir}/part-cow-{tag}-{len(parts):05d}.snappy.parquet",
                 ))
 
-    for dest_dir, _, staging in staged:
+    for dest_dir, old_files, staging in staged:
         if staging:
             _, fs, jpath = _fs(spark, dest_dir)
-            walk(
-                fs, staging, fs.makeQualified(jpath).toString(),
-                uuid.uuid4().hex[:12],
-            )
+            qualified = fs.makeQualified(jpath).toString()
+            if old_files or dest_dir == path:
+                existing.add(qualified)
+            walk(fs, staging, qualified, uuid.uuid4().hex[:12])
     old = [f for _, fl, _ in staged for f in fl]
     move(
         spark,
         [(f.path, dest) for f, dest in parts]
         + (_retired(path, old) if retain else []),
+        existing,
     )
-    _delete_files(spark, [s for _, _, s in staged if s], recursive=True)
     reader.renamed(spark, parts)
     if not retain:
         _delete_files(spark, old)
+    _reclaim(spark, [s for _, _, s in staged if s])
 
 
 #: Concurrent Spark jobs for the per-partition STAGING phase.  Partition
@@ -586,8 +591,8 @@ def _merge_stage(
 ):
     """The copy-on-write MERGE writer, as a :func:`~.commit.run` stage:
     prune, and STAGE everything — matched rewrites and insert files —
-    without touching a single original file.  Publish swaps the
-    rewrites in (thread-pooled) and moves the inserts in.
+    without touching a single original file.  Publish moves the
+    rewrites and the inserts in as one pooled move.
 
     Validation (optimistic mode) follows ``isolation``: ``serializable``
     requires the table's file list to be exactly what the read saw (a
@@ -1062,8 +1067,8 @@ def compact(
                 todo.append((part_dir, small_p))
         if not todo:
             return Staged(MutationStats(len(all_files), 0, 0))
-        # same stage-all-then-swap discipline as the DML verbs (and the
-        # same pooled staging-jobs + fs-metadata phases)
+        # same stage-all-then-swap discipline as the DML verbs: pooled
+        # staging jobs, then one pooled move
         results = _run_partition_stages(spark, path, todo, stage_one, created)
         staged = [(d, p, s) for d, p, s, _ in results]
         return Staged(
@@ -1119,7 +1124,8 @@ def repair_table(
     failed during it (the publish's one move renames back whatever it
     already moved before raising), leaves a staging dir whose data is
     not in the table: the table reads as before the statement, and
-    removing the dir just reclaims space.  Only a publish stopped
+    removing the dir just reclaims space — unless an undo rename failed
+    too, which the raised error reports by name.  Only a publish stopped
     partway — a process that DIED after some of the move's renames, or
     a failed delete of the replaced files after the move — can leave
     duplicate rows (old + new files coexisting) or a partially-applied

@@ -5,21 +5,14 @@ The reference never touches storage — its executor hands regenerated SQL
 to MySQL (``engine/src/plan_executor.cpp:17-21``).  This engine owns its
 table directories, so how one changes is a single decision, made here:
 this is the only module that calls a Hadoop ``FileSystem`` ``rename``,
-``delete``, ``mkdirs`` or ``create`` (HDFS / S3A / local alike, never
-Python's ``os``).  Every other module reads through :mod:`.reader` and
-mutates through:
-
-- :func:`move` — rename ``(src, dest)`` pairs all-or-nothing;
-- :func:`_delete_files` and :func:`_reclaim` — strict and best-effort
-  deletes;
-- :func:`_writer_lock` — the advisory single-writer ``_cow.lock``, and
-  the registry of open transactions that makes it re-entrant;
-- :func:`_write_small_file` / :func:`_read_small_file` — manifests,
-  markers, anchors and the lock file itself.
-
-Every handle these functions mutate through comes from this module's
-``_fs``, so a fault test substitutes a failing filesystem by patching
-that one name.
+``delete``, ``mkdirs`` or ``create`` (HDFS / S3A / local alike).  Other
+modules read through :mod:`.reader` and mutate through :func:`move`
+(all-or-nothing renames), :func:`_delete_files` / :func:`_reclaim`
+(strict and best-effort deletes), :func:`_writer_lock` (the advisory
+single-writer ``_cow.lock``, re-entrant inside an open transaction) and
+:func:`_write_small_file` (manifests, markers, anchors, the lock file).
+Every handle they mutate through comes from this module's ``_fs``, so a
+fault test substitutes a failing filesystem by patching that one name.
 """
 
 from __future__ import annotations
@@ -28,6 +21,7 @@ import contextlib
 import threading
 import time
 import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from urllib.parse import urlparse
 
@@ -36,43 +30,76 @@ from pyspark.sql import SparkSession
 from ..catalog import _norm_path
 from .reader import _fs, _hpath, _jclass
 
-#: Underscore prefix ⇒ invisible to Spark's file discovery (same convention
-#: as _SUCCESS/_metadata), so retired files and manifests never leak into a
-#: normal table read.
+#: Underscore prefix ⇒ invisible to Spark's file discovery (like _SUCCESS),
+#: so retired files and manifests never leak into a normal table read.
 RETIRED_DIR = "_retired"
 SNAPSHOT_DIR = "_snapshots"
 LOCK_FILE = "_cow.lock"
 
+#: Driver-side concurrency of one move or delete: renames and deletes of
+#: distinct paths are independent, and serial ones cost a round trip each
+#: — minutes at 10⁴ partitions on S3/HDFS.  The pool lives with the process
+#: (a new thread opens its own py4j connection: a fresh pool per call cost
+#: more than a flat publish's renames on local disk); tasks never submit.
+FS_THREADS = 16
+_POOL = ThreadPoolExecutor(FS_THREADS, thread_name_prefix="storage")
 
-def move(spark: SparkSession, pairs) -> None:
-    """Rename every ``(src, dest)`` URI pair, creating each distinct
-    destination directory once.  All-or-nothing: when a rename fails (or
-    raises), the pairs already moved are renamed back, newest first,
-    before the error propagates — no caller ever publishes part of a
-    move.  The undo list is Python-side, so a move that succeeds makes
-    no extra round trip for it.  One FileSystem serves the whole call
-    (the first destination's)."""
+
+def _each(call, items) -> None:
+    """``call(item)`` for every item, up to :data:`FS_THREADS` at a time;
+    a failure cancels the calls not yet started and raises."""
+    items = list(items)
+    if len(items) < 2:
+        for it in items:
+            call(it)
+        return
+    futs = [_POOL.submit(call, it) for it in items]
+    wait(futs, return_when=FIRST_EXCEPTION)
+    for f in futs:
+        f.cancel()
+    wait(futs)
+    for f in futs:
+        if not f.cancelled() and f.exception() is not None:
+            raise f.exception()
+
+
+def move(spark: SparkSession, pairs, existing=()) -> None:
+    """Rename every ``(src, dest)`` URI pair, pooled.  Each distinct
+    destination directory is created once first, unless a source is in
+    it or it is in ``existing`` (the caller's listing shows it is there).
+    All-or-nothing unless an undo itself fails: when a rename fails (or
+    raises), every pair already moved is renamed back before the error
+    propagates, and pairs whose undo failed are named in a note on it.
+    One FileSystem (the first destination's) serves the call."""
     pairs = list(pairs)
     if not pairs:
         return
     _, fs, _ = _fs(spark, pairs[0][1])
-    made: set[str] = set()
-    done: list[tuple] = []
-    for src, dest in pairs:
-        parent = dest.rsplit("/", 1)[0]
-        try:
-            s, d = _hpath(spark, src), _hpath(spark, dest)
-            if parent not in made:
-                fs.mkdirs(_hpath(spark, parent))
-                made.add(parent)
-            if not fs.rename(s, d):
-                raise IOError(f"rename {src} -> {dest} failed")
-        except BaseException:
-            for s0, d0 in reversed(done):
-                with contextlib.suppress(Exception):
-                    fs.rename(d0, s0)
-            raise
-        done.append((s, d))
+    new_dirs = {d.rsplit("/", 1)[0] for _, d in pairs} - set(existing)
+    new_dirs -= {s.rsplit("/", 1)[0] for s, _ in pairs}
+    _each(lambda d: fs.mkdirs(_hpath(spark, d)), sorted(new_dirs))
+    done, stuck, guard = [], [], threading.Lock()
+
+    def one(pair) -> None:
+        if not fs.rename(_hpath(spark, pair[0]), _hpath(spark, pair[1])):
+            raise IOError(f"rename {pair[0]} -> {pair[1]} failed")
+        with guard:
+            done.append(pair)
+
+    def undo(pair) -> None:
+        with contextlib.suppress(Exception):
+            if fs.rename(_hpath(spark, pair[1]), _hpath(spark, pair[0])):
+                return
+        with guard:
+            stuck.append(pair)
+
+    try:
+        _each(one, pairs)
+    except BaseException as e:
+        _each(undo, done)
+        if stuck:
+            e.add_note(f"undo failed, still moved: {sorted(stuck)}")
+        raise
 
 
 def _delete(spark: SparkSession, paths, recursive: bool, strict: bool):
@@ -80,18 +107,20 @@ def _delete(spark: SparkSession, paths, recursive: bool, strict: bool):
     if not paths:
         return
     _, fs, _ = _fs(spark, paths[0])
-    for p in paths:
+
+    def one(p: str) -> None:
         try:
             fs.delete(_hpath(spark, p), recursive)
         except Exception:
             if strict:
                 raise
 
+    _each(one, paths)
+
 
 def _delete_files(spark: SparkSession, paths, recursive=False) -> None:
-    """Delete each path (a directory with its contents when
-    ``recursive``); the first failure raises.  An absent path is not a
-    failure."""
+    """Delete each path (with its contents when ``recursive``), pooled; a
+    failure raises, an absent path is none."""
     _delete(spark, paths, recursive, strict=True)
 
 
@@ -101,16 +130,12 @@ def _reclaim(spark: SparkSession, paths) -> None:
     _delete(spark, paths, True, strict=False)
 
 
-# -- small files ---------------------------------------------------------------
-
-
 def _read_small_file(spark: SparkSession, path: str) -> bytes:
     _, fs, jpath = _fs(spark, path)
     stream = fs.open(jpath)
     try:
-        return bytes(
-            _jclass(spark, "org.apache.commons.io.IOUtils").toByteArray(stream)
-        )
+        ioutils = _jclass(spark, "org.apache.commons.io.IOUtils")
+        return bytes(ioutils.toByteArray(stream))
     finally:
         stream.close()
 
@@ -129,23 +154,17 @@ def _write_small_file(
         finally:
             stream.close()
     except BaseException:
-        # a partial manifest would WEDGE the version log: every later
-        # _autoversion back-walk json-decodes it, and the exclusive
-        # create would misread the leftover as a concurrent commit.
-        # The create succeeded, so the failed write's debris is ours to
-        # remove — the caller's retry then starts clean.
+        # a partial manifest would wedge the version log (every later
+        # back-walk json-decodes it; an exclusive create would misread it
+        # as a concurrent commit); the create succeeded, so it is ours
         _reclaim(spark, [path])
         raise
 
 
 def _rel_to_table(path: str, file_uri: str) -> str:
     """Manifest entries are table-relative so the table stays movable.
-
-    Compare the PATH COMPONENTS of both URIs (scheme/authority stripped),
-    not a basename marker: a marker search breaks the moment the table's
-    directory name repeats earlier in the path (``/data/sales/sales``),
-    and ``file:///x`` vs ``file:/x`` vs bare ``/x`` must all agree.
-    """
+    Compares the URIs' path components (scheme/authority stripped), so
+    ``/data/sales/sales`` and ``file:///x`` / ``file:/x`` / ``/x`` agree."""
     table_p = urlparse(path).path.rstrip("/")
     file_p = urlparse(file_uri).path
     if not file_p.startswith(table_p + "/"):
@@ -157,16 +176,13 @@ def _rel_to_table(path: str, file_uri: str) -> str:
 
 
 class _WriterLockHeld(RuntimeError):
-    """The advisory writer lock is held by someone else (subclass of the
-    historical RuntimeError so existing callers' handling keeps working).
-    The optimistic verbs catch this to convert refuse into retry."""
+    """Another writer holds the lock; the optimistic verbs retry on it."""
 
 
 def _is_already_exists(e: Exception) -> bool:
-    """Did a py4j-wrapped Hadoop create(overwrite=False) fail because the
-    file exists?  Match the Java exception CLASS — free-text matching
-    breaks across FileSystem implementations; keep a message fallback only
-    for wrappers that drop the class."""
+    """Did a py4j-wrapped create(overwrite=False) fail because the file
+    exists?  Matches the Java exception class; the message only when a
+    wrapper dropped it."""
     cls = ""
     je = getattr(e, "java_exception", None)
     if je is not None:
@@ -177,15 +193,11 @@ def _is_already_exists(e: Exception) -> bool:
     )
 
 
-#: Per-path in-process mutexes serializing the create-if-absent attempt:
-#: Hadoop's LOCAL FileSystem implements create(overwrite=false) as an
-#: exists() check followed by the create (TOCTOU), so two threads of ONE
-#: process hitting the lock at the same instant could BOTH "acquire" it —
-#: observed as two OCC writers sharing a commit window and the second
-#: manifest overwriting the first.  The mutex guards only the one lock
-#: write (never held across the verb); cross-PROCESS atomicity is the
-#: filesystem's contract (HDFS create-if-absent is atomic; local
-#: multi-process writers remain S3-class "bring a real lock service").
+#: Per-path in-process mutexes around the lock's create-if-absent: the
+#: LOCAL FileSystem's create(overwrite=false) is exists()-then-create, so
+#: two threads could both "acquire" it (seen as two OCC writers sharing a
+#: commit window).  Held for the one lock write only; cross-process
+#: atomicity is the filesystem's contract (HDFS: atomic).
 _LOCK_ATTEMPT_MUTEXES: dict[str, threading.Lock] = {}
 _LOCK_ATTEMPT_GUARD = threading.Lock()
 
@@ -199,10 +211,8 @@ def _lock_attempt_mutex(path: str) -> threading.Lock:
 def _acquire_writer_lock(
     spark: SparkSession, path: str, wait_seconds: float = 0.0
 ) -> None:
-    """Atomically create ``_cow.lock`` (fails if present); see
-    :func:`_writer_lock` for the semantics.  A failed write after the
-    create removes the lock again — a leaked lock wedges every future
-    DML on the table until manual removal."""
+    """Atomically create ``_cow.lock`` (see :func:`_writer_lock`); a
+    failed write after the create removes it again."""
     lock = f"{path.rstrip('/')}/{LOCK_FILE}"
     mutex = _lock_attempt_mutex(path)
     deadline = time.monotonic() + wait_seconds
@@ -230,12 +240,9 @@ def _release_writer_lock(spark: SparkSession, path: str) -> None:
     _delete_files(spark, [f"{path.rstrip('/')}/{LOCK_FILE}"])
 
 
-#: Active transactions (operators/txn.py): normalized table path ->
-#: state.  Consulted by _writer_lock (the owning thread re-enters: the
-#: transaction already holds the physical lock for its whole span) and
-#: by the one post-commit sequence, commit.committed, which defers the
-#: version manifest and the index refresh to the transaction's commit
-#: (one manifest for the whole batch).
+#: Open transactions (operators/txn.py) by normalized table path: the
+#: owning thread re-enters _writer_lock, and commit.committed defers the
+#: version manifest and index refresh to the transaction's commit.
 _ACTIVE_TXNS: dict[str, "_TxnState"] = {}
 
 
@@ -256,10 +263,9 @@ def _txn_state(path: str) -> "_TxnState | None":
 
 
 def _refuse_in_txn(path: str, what: str) -> None:
-    """Maintenance verbs that reclaim or re-commit state are refused while
-    a transaction is open on the table: vacuum would delete the txn's own
-    uncommitted (manifest-less) files, restore/drop would move the commit
-    anchor the rollback plan targets."""
+    """Refuse a maintenance verb while a transaction is open on the table
+    (vacuum would delete its uncommitted files, restore/drop would move
+    the anchor its rollback targets)."""
     if _txn_state(path) is not None:
         raise RuntimeError(
             f"{what} refused: a multi-statement transaction is open on "
@@ -274,18 +280,13 @@ def _writer_lock(
     """Advisory single-writer lock: atomically create ``_cow.lock`` (fails
     if present), release on exit.
 
-    ``wait_seconds=0`` (the classic verbs) DETECTS a concurrent writer and
-    refuses immediately; the optimistic verbs pass a short bound and poll —
-    their lock hold time is the metadata swap only, so waiting beats
-    refusing.  Create-if-absent is atomic on HDFS and local filesystems
-    (S3 needs a real catalog/log for that guarantee; stated, not papered
-    over).  A crashed writer leaves a stale lock; the error says exactly
-    which file to remove after confirming no writer is alive.
-
-    Re-entrant for the thread that opened a multi-statement transaction
-    on the table (operators/txn.py): the Transaction holds the physical
-    lock for its whole span, so its verbs pass straight through while
-    every other thread/process still hits the lock file and refuses.
+    ``wait_seconds=0`` refuses a concurrent writer at once; the
+    optimistic verbs poll for a short bound (they hold the lock for the
+    metadata swap only).  Create-if-absent is atomic on HDFS and local
+    filesystems, not on S3.  A crashed writer leaves a stale lock; the
+    error names the file to remove once no writer is alive.  Re-entrant
+    for the thread that opened a transaction on the table (it holds the
+    physical lock for its whole span).
     """
     st = _txn_state(path)
     if st is not None and st.owner == threading.get_ident():

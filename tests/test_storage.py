@@ -6,6 +6,8 @@ did before the statement."""
 from __future__ import annotations
 
 import ast
+import threading
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -69,24 +71,33 @@ def test_only_storage_mutates_table_directories():
 
 
 class _FailingRename:
-    """A FileSystem whose ``k``-th rename reports failure; every other
-    call goes to the real one."""
+    """A FileSystem whose ``k``-th rename reports failure (with
+    ``after``, so does every later one); every other call goes to the
+    real one.  Renames run from a pool, so the count is locked, and
+    each rename that succeeded is logged as ``(src, dst)``."""
 
     def __init__(self, fs, calls: dict):
         self._fs, self._calls = fs, calls
 
     def rename(self, src, dst):
-        self._calls["n"] += 1
-        if self._calls["n"] == self._calls["k"]:
+        with self._calls["lock"]:
+            self._calls["n"] += 1
+            n = self._calls["n"]
+        k = self._calls["k"]
+        if n == k or (self._calls["after"] and n > k):
             return False
-        return self._fs.rename(src, dst)
+        ok = self._fs.rename(src, dst)
+        with self._calls["lock"]:
+            self._calls["log"].append((src.toString(), dst.toString()))
+        return ok
 
     def __getattr__(self, name):
         return getattr(self._fs, name)
 
 
-def _fail_rename(monkeypatch, k: int) -> dict:
-    calls = {"n": 0, "k": k}
+def _fail_rename(monkeypatch, k: int, after: bool = False) -> dict:
+    calls = {"n": 0, "k": k, "after": after, "log": [],
+             "lock": threading.Lock()}
     real = storage._fs
 
     def faulty(spark, path):
@@ -95,6 +106,11 @@ def _fail_rename(monkeypatch, k: int) -> dict:
 
     monkeypatch.setattr(storage, "_fs", faulty)
     return calls
+
+
+def _all_undone(log: list) -> bool:
+    """Every logged rename has its exact reverse logged too."""
+    return bool(log) and Counter(log) == Counter((d, s) for s, d in log)
 
 
 def _table(spark, tmp_path, files=4):
@@ -121,8 +137,10 @@ def test_failed_cow_move_in_retracts(spark, tmp_path, monkeypatch, k):
     with pytest.raises(IOError, match="rename"):
         delete_where(spark, path, "k % 3 = 0")
     monkeypatch.undo()
-    # k-1 moves, the failed one, and the k-1 renames back
-    assert calls["n"] == 2 * k - 1
+    # at least the k-1 renames before the failed one moved, and every
+    # rename that moved was renamed back
+    assert len(calls["log"]) >= 2 * (k - 1)
+    assert _all_undone(calls["log"])
     assert _rows(spark.read.parquet(path)) == before
     report = repair_table(spark, path, remove=True)
     assert len(report.staging_dirs) == 1 and report.stale_lock is None
@@ -142,9 +160,26 @@ def test_failed_dv_batch_move_retracts(spark, tmp_path, monkeypatch):
     with pytest.raises(IOError, match="rename"):
         dv_delete_where(spark, path, "k % 3 = 0")
     monkeypatch.undo()
-    assert calls["n"] == 3
+    assert _all_undone(calls["log"])
     assert not has_deletion_vectors(spark, path)
     assert _rows(read_mor(spark, path)) == before
     repair_table(spark, path, remove=True)
     assert dv_delete_where(spark, path, "k % 3 = 0").rows_matched == 14
     assert _rows(read_mor(spark, path)) == [r for r in before if r[0] % 3]
+
+
+def test_failed_undo_is_named_in_the_error(spark, tmp_path, monkeypatch):
+    """When renaming back fails too, the move is not all-or-nothing: the
+    error names every pair that stayed moved."""
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    src.mkdir()
+    for i in range(4):
+        (src / f"f{i}").write_text("x")
+    pairs = [(str(src / f"f{i}"), str(dst / f"f{i}")) for i in range(4)]
+    _fail_rename(monkeypatch, 2, after=True)
+    with pytest.raises(IOError, match="rename") as err:
+        storage.move(spark, pairs)
+    stayed = [(s, d) for s, d in pairs if Path(d).exists()]
+    note = " ".join(getattr(err.value, "__notes__", []))
+    assert stayed and "undo failed" in note
+    assert all(repr((s, d)) in note for s, d in stayed)
